@@ -7,14 +7,30 @@ one union plan.
 
 Two execution modes:
 
-- ``bulk`` (the scale path): ONE multi-path ``spark.read.json`` over
-  all discovered files — distributed listing, distributed parse,
-  native schema union, corrupt records quarantined via PERMISSIVE
-  ``_corrupt_record``. This is what you run on 100 TB.
-- ``parity`` (the reference-contract path): per-file reads so that
-  per-file error isolation and the reference's run report (files
-  processed / failed / error list, A24/A22) are byte-for-byte
-  reproducible. File-level parallelism only; used by the golden tests.
+- ``bulk`` (the scale path): ONE multi-path ``spark.read.json`` per
+  format over all discovered files — distributed listing, distributed
+  parse, native schema union, malformed documents dropped inline
+  (DROPMALFORMED). This is what you run on 100 TB.
+- ``parity`` (the reference contract, and the CLI, webapp and pipeline
+  default): per-file error isolation and the reference's run report
+  (files processed / failed / records / dropped non-dicts, A24/A22),
+  with each file's records exactly as a separate read of that file
+  gives them. It runs as ONE distributed pass over the directory's
+  JSON files, a fixed number of Spark jobs however many files there
+  are: a ``binaryFile`` scan decodes each file with its sniffed
+  charset; JVM expressions classify it (one object, an all-object
+  array, an array mixing objects and scalars, line-delimited objects,
+  or valid-but-empty) and one job collects the per-file report; one
+  schema-inference job over rows ``{"<path>": [records]}`` gives every
+  file its own element schema; files whose schemas merge without
+  widening a type share one ``from_json`` + ``inline`` projection,
+  where a key absent from a whole file stays NULL. A file the pass
+  cannot place takes the per-file reader (``read_any_file``): one that
+  is not strictly valid JSON, empty, gzipped, over 1 MiB, a type
+  widening, or not JSON at all. The pass parses each file about twice
+  as often as a file's own read does, so it pays only where per-file
+  jobs cost more than the bytes: on a 4-core host it won below about
+  1 MB per file and lost from about 4 MB (``tools/bench_parity_sizes.py``).
 
 Encoding fallback (A6) mirrors `file_handler.py:147-170`: utf-8-sig
 first, then utf-8 / latin-1 / cp1252 / ascii, retried on parse failure.
@@ -23,13 +39,17 @@ first, then utf-8 / latin-1 / cp1252 / ascii, retried on parse failure.
 from __future__ import annotations
 
 import json
+import os
+import re
 import time
+import warnings
 from dataclasses import dataclass, field
 from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from generic_data_ingestor_framework_spark.normalize import (
     drop_corrupt_records,
@@ -45,6 +65,7 @@ FALLBACK_ENCODINGS = ["UTF-8", "ISO-8859-1", "windows-1252", "US-ASCII"]
 XML_ROW_TAG = "record"
 
 _SNIFF_BYTES = 64 * 1024
+_BOM = b"\xef\xbb\xbf"
 
 
 def _logical_path(p: str) -> str:
@@ -52,6 +73,15 @@ def _logical_path(p: str) -> str:
     decompress by codec extension, so every FORMAT decision (layout,
     separator, multiline) must look at the inner extension."""
     return p[:-3] if p.lower().endswith(".gz") else p
+
+
+def _line_delimited(p: str) -> bool:
+    return _logical_path(p).endswith((".jsonl", ".ndjson"))
+
+
+def _is_obj(j: Column) -> Column:
+    """A JSON element (as raw text) that is an object."""
+    return j.isNotNull() & F.ltrim(j).startswith("{")
 
 
 def detect_encoding(path: str | Path) -> str:
@@ -72,8 +102,8 @@ def detect_encoding(path: str | Path) -> str:
     else:
         with open(path, "rb") as f:
             head = f.read(_SNIFF_BYTES)
-    if head.startswith(b"\xef\xbb\xbf"):
-        return "UTF-8"  # BOM: Spark strips it in multiLine mode
+    if head.startswith(_BOM):
+        return "UTF-8"  # BOM: read_json_file lets Spark's reader strip it
     for enc in FALLBACK_ENCODINGS:
         try:
             head.decode(enc)
@@ -123,14 +153,23 @@ def read_json_file(
     if multiline is None:
         multiline = not _logical_path(p).endswith((".jsonl", ".ndjson"))
     enc = detect_encoding(p)
-    df = (
+    reader = (
         spark.read.option("multiLine", str(multiline).lower())
         .option("allowSingleQuotes", "false")  # Python json.load parity
-        .option("encoding", enc)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(p)
     )
+    # a whole-file read strips a UTF-8 BOM only when Spark detects the
+    # charset itself; with an explicit encoding the BOM breaks the parse
+    if multiline and enc == "UTF-8":
+        import gzip
+
+        with (gzip.open if p.lower().endswith(".gz") else open)(p, "rb") as f:
+            if f.read(len(_BOM)) == _BOM:
+                enc = None
+    if enc:
+        reader = reader.option("encoding", enc)
+    df = reader.json(p)
     df.schema  # force analysis so parse failures surface here
     return df
 
@@ -175,7 +214,7 @@ def salvage_json_elements(
     # accepts every byte sequence, so later fallbacks are unreachable) —
     # both are charsets F.decode supports
     raw = spark.read.format("binaryFile").load(str(path)).select(
-        F.decode(F.col("content"), enc).alias("value")
+        F.regexp_replace(F.decode(F.col("content"), enc), "^\ufeff", "").alias("value")
     )
     # from_json has its OWN parser options — without the explicit
     # allowSingleQuotes=false it would accept (and silently rewrite)
@@ -186,13 +225,12 @@ def salvage_json_elements(
             "value", "array<string>", {"allowSingleQuotes": "false"}
         ).alias("arr"),
     )
-    is_obj = lambda j: j.isNotNull() & F.ltrim(j).startswith("{")
     stats = arr_df.select(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("n_chars") > 0, 1).otherwise(0)).alias("n_nonempty"),
         F.sum(F.when(F.col("arr").isNotNull(), 1).otherwise(0)).alias("n_arrays"),
         F.sum(F.coalesce(F.size("arr"), F.lit(0))).alias("n_elems"),
-        F.sum(F.coalesce(F.size(F.filter("arr", is_obj)), F.lit(0))).alias("n_objs"),
+        F.sum(F.coalesce(F.size(F.filter("arr", _is_obj)), F.lit(0))).alias("n_objs"),
     ).collect()[0]
     if stats["n_rows"] == 0 or not stats["n_nonempty"]:
         raise ValueError(f"empty file: {path}")
@@ -203,7 +241,7 @@ def salvage_json_elements(
     dropped = int(stats["n_elems"]) - int(stats["n_objs"])
     if not stats["n_objs"]:
         return None, dropped  # valid array, zero dict records (not an error)
-    obj_df = arr_df.select(F.explode(F.filter("arr", is_obj)).alias("elem"))
+    obj_df = arr_df.select(F.explode(F.filter("arr", _is_obj)).alias("elem"))
     sample = [r.elem for r in obj_df.limit(SALVAGE_SCHEMA_SAMPLE).collect()]
     schema = (
         spark.read.option("allowSingleQuotes", "false")
@@ -228,8 +266,6 @@ def read_json_records(
         salvaged, dropped = salvage_json_elements(spark, path)
         if salvaged is None:
             # valid array with zero dict records → empty, not an error
-            from pyspark.sql import types as T
-
             return spark.createDataFrame([], T.StructType([])), dropped
         if _is_unparseable(salvaged):
             raise ValueError(f"no parseable JSON records in {path}")
@@ -437,46 +473,446 @@ def ingest_directory(
         report.elapsed_sec = time.time() - t0
         return df, report
 
-    frames: list[DataFrame] = []
-    first_path: str | None = None
+    return _ingest_parity(spark, directory, typed_paths, text_parity, schema_mode, report, t0)
+
+
+# ------------------------------------------------------------ parity mode
+#
+# One distributed pass over the directory's JSON files (see the module
+# docstring): one Spark job classifies the files, one infers every
+# file's element schema, and the caller's write runs the projection.
+# Files the pass cannot place take the per-file reader.
+
+_PASS_GLOB = "*.{json,jsonl,ndjson}"
+# larger files take the per-file reader, which is faster once the bytes
+# outweigh a file's jobs (see the module docstring)
+_PASS_MAX_BYTES = 1024 * 1024
+_KEYS_COL = "_ingest_keys"
+_STRICT_JSON = {"allowSingleQuotes": "false"}  # Python json.load parity
+# text that may hold a field Spark's schema inference drops (an empty
+# object or an empty key): such a file's records can carry a nested
+# field its own schema lacks, so the merge must not add nested fields
+# to its columns
+_LOSSY_TEXT = r'\{\s*\}|""\s*:'
+
+
+def _path_key(p: str) -> str:
+    """The ``path`` value Spark's file listing gives a local file."""
+    return "file:" + os.path.abspath(p)
+
+
+def _first_char(text: Column) -> Column:
+    return F.regexp_extract(text, r"^\s*(\S)", 1)
+
+
+def _one_json_value(text: Column) -> Column:
+    """Strict check: ``text`` is exactly one JSON value, with no
+    trailing text and no duplicate keys."""
+    w = F.try_parse_json(F.concat(F.lit("["), text, F.lit("]")))
+    return w.isNotNull() & F.variant_get(w, "$[1]", "variant").isNull()
+
+
+def _by_path(values: dict[str, str]) -> Column:
+    """The value ``values`` (path → string) holds for the row's file,
+    NULL for any other file: one map literal looked up by ``path``."""
+    lookup = json.dumps({_path_key(p): v for p, v in values.items()})
+    return F.from_json(F.lit(lookup), "map<string,string>")[F.col("path")]
+
+
+def _list_json(spark: SparkSession, directory: str | Path) -> DataFrame:
+    """The directory's JSON files as one ``binaryFile`` relation, listed
+    once and scanned by each job of the pass."""
+    return (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", _PASS_GLOB)
+        # escaped: Spark expands glob characters in a load path
+        .load(re.sub(r"([{}\[\]*?\\])", r"\\\1", os.path.abspath(directory)))
+        .where(F.col("length") <= _PASS_MAX_BYTES)  # pushed down: larger files are not read
+    )
+
+
+def _scan_json(files: DataFrame, tags: dict[str, str], encodings: dict[str, str]) -> DataFrame:
+    """``files`` kept to those in ``tags`` (path → tag): ``(path, tag,
+    text, _source_file)``. ``text`` is the file decoded with its sniffed
+    charset (from ``encodings``), BOM stripped; NULL when bytes sniffed
+    as UTF-8 are not valid UTF-8 (the sniff reads only the head).
+    ``_source_file`` is the lineage ``with_lineage`` gives."""
+    text = F.when(F.is_valid_utf8("content"), F.decode("content", "UTF-8"))
+    other = {p: encodings[p] for p in tags if encodings[p] != "UTF-8"}
+    if other:
+        enc = _by_path(other)
+        for e in sorted(set(other.values())):
+            text = F.when(enc == e, F.decode("content", e)).otherwise(text)
+    return with_lineage(
+        files.withColumn("tag", _by_path(tags)).where(F.col("tag").isNotNull())
+    ).select("path", "tag", F.regexp_replace(text, "^\ufeff", "").alias("text"), SOURCE_COL)
+
+
+def _per_kind(kind: Column, obj: Column, arr: Column, mixed: Column, lines: Column) -> Column:
+    return (
+        F.when(kind == "object", obj).when(kind == "array", arr)
+        .when(kind == "mixed", mixed).when(kind == "lines", lines)
+    )
+
+
+class _Parts:
+    """The salvage expressions over a file's ``text``, generalized to
+    every layout. A file's kind is ``object`` (one top-level object),
+    ``array`` (every element an object, possibly none), ``mixed``
+    (objects and scalars: the scalars are dropped, as salvage drops
+    them), ``lines`` (line-delimited objects), or NULL for a file the
+    pass cannot place."""
+
+    def __init__(self) -> None:
+        self.text = F.col("text")
+        self.arr = F.from_json(self.text, "array<string>", _STRICT_JSON)
+        self.objs = F.filter(self.arr, _is_obj)
+        self.sample = F.slice(self.objs, 1, SALVAGE_SCHEMA_SAMPLE)
+        self.lines = F.filter(F.split(self.text, r"\r\n|\r|\n"), lambda ln: ln.rlike(r"\S"))
+
+    def kind(self, line_delimited: Column) -> Column:
+        t = self.text
+        good_line = lambda ln: (_first_char(ln) == "{") & _one_json_value(ln)  # noqa: E731
+        # Spark's reader salvages an array only when a scalar element
+        # makes the whole document corrupt; with objects, nulls and
+        # nested arrays alone it returns neither: not placed
+        scalar = F.exists(
+            self.arr, lambda e: e.isNotNull() & ~_is_obj(e) & ~F.ltrim(e).startswith("[")
+        )
+        return (
+            F.when(t.isNull(), None)
+            .when(
+                line_delimited,
+                F.when((F.size(self.lines) > 0) & F.forall(self.lines, good_line), "lines"),
+            )
+            .when(~_one_json_value(t), None)
+            .when(_first_char(t) == "{", "object")
+            .when((_first_char(t) == "[") & (F.size(self.objs) == F.size(self.arr)), "array")
+            .when((_first_char(t) == "[") & scalar, "mixed")
+        )
+
+    def records(self, kind: Column) -> Column:
+        return _per_kind(kind, F.lit(1), F.size(self.arr), F.size(self.objs), F.size(self.lines))
+
+    def dropped(self, kind: Column) -> Column:
+        return F.when(kind == "mixed", F.size(self.arr) - F.size(self.objs)).otherwise(0)
+
+    def keys(self, kind: Column) -> Column:
+        """Top-level keys of the records the file's schema is inferred
+        from — the file's presence mask, as a data column."""
+        of = lambda xs: F.array_distinct(F.flatten(F.transform(xs, F.json_object_keys)))  # noqa: E731
+        return _per_kind(
+            kind, F.json_object_keys(self.text), of(self.arr), of(self.sample), of(self.lines)
+        )
+
+    def sample_text(self, kind: Column) -> Column:
+        """The records schema inference sees, as one JSON array; a
+        mixed array gives its first ``SALVAGE_SCHEMA_SAMPLE`` objects,
+        as salvage does."""
+        t = self.text
+        join = lambda xs: F.concat(F.lit("["), F.array_join(xs, ","), F.lit("]"))  # noqa: E731
+        return _per_kind(
+            kind, F.concat(F.lit("["), t, F.lit("]")), t, join(self.sample), join(self.lines)
+        )
+
+    def parsed(self, kind: Column, schema: T.StructType) -> Column:
+        parse = lambda x: F.from_json(x, schema, _STRICT_JSON)  # noqa: E731
+        return _per_kind(
+            kind,
+            F.array(parse(self.text)),
+            F.from_json(self.text, T.ArrayType(schema), _STRICT_JSON),
+            F.transform(self.objs, parse),
+            F.transform(self.lines, parse),
+        )
+
+
+def _merge_types(a: T.DataType, b: T.DataType) -> T.DataType | None:
+    """``a`` and ``b`` merged when the merge only adds struct fields;
+    None when it would widen a type. Struct fields keep the order
+    Spark's inference gives them (by UTF-16 code unit)."""
+    if a == b:
+        return a
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        fa, fb = {f.name: f for f in a.fields}, {f.name: f for f in b.fields}
+        fields = []
+        for name in sorted(fa.keys() | fb.keys(), key=lambda n: n.encode("utf-16-be")):
+            if name in fa and name in fb:
+                t = _merge_types(fa[name].dataType, fb[name].dataType)
+                if t is None:
+                    return None
+                fields.append(T.StructField(name, t, True))
+            else:
+                fields.append(fa.get(name) or fb[name])
+        return T.StructType(fields)
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        t = _merge_types(a.elementType, b.elementType)
+        return None if t is None else T.ArrayType(t, a.containsNull or b.containsNull)
+    return None
+
+
+def _infer_element_types(spark: SparkSession, wrapped: DataFrame) -> dict[str, T.DataType]:
+    """One JSON schema-inference job over rows ``{"<path>": [records]}``:
+    a file's field holds the array of the element schema a separate
+    read of that file infers."""
+    jds = getattr(wrapped._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    jschema = spark._jsparkSession.read().option("allowSingleQuotes", "false").json(jds).schema()
+    return {f.name: f.dataType for f in T.StructType.fromJson(json.loads(jschema.json())).fields}
+
+
+@dataclass
+class _Placed:
+    """What the pass owns: per file (by path) its record and dropped
+    counts, and for a file with records its kind and key set; the
+    group's merged element schema."""
+
+    kind: dict[str, str] = field(default_factory=dict)
+    records: dict[str, int] = field(default_factory=dict)
+    dropped: dict[str, int] = field(default_factory=dict)
+    keys: dict[str, set[str]] = field(default_factory=dict)
+    schema: T.StructType = field(default_factory=T.StructType)
+    encodings: dict[str, str] = field(default_factory=dict)
+    files: DataFrame | None = None  # the listed JSON files
+
+
+def _place(
+    spark: SparkSession, directory: str | Path, candidates: list[str], text_parity: bool
+) -> _Placed:
+    """Classify ``candidates`` and infer their schemas (two jobs), then
+    form the group of files whose schemas merge without widening any
+    type, in discovery order. Files left out fall back."""
+    out = _Placed(
+        encodings={p: detect_encoding(p) for p in candidates},
+        files=_list_json(spark, directory),
+    )
+    parts = _Parts()
+    layout = {p: "lines" if _line_delimited(p) else "whole" for p in candidates}
+    rows = (
+        _scan_json(out.files, layout, out.encodings)
+        .withColumn("kind", parts.kind(F.col("tag") == "lines"))
+        .select(
+            "path", "kind",
+            parts.records(F.col("kind")).alias("n"),
+            parts.dropped(F.col("kind")).alias("dropped"),
+            parts.keys(F.col("kind")).alias("keys"),
+            F.col("text").rlike(_LOSSY_TEXT).alias("lossy"),
+        )
+        .collect()
+    )
+    by_key = {r["path"]: r for r in rows if r["kind"] is not None}
+    found = {p: by_key[_path_key(p)] for p in candidates if _path_key(p) in by_key}
+    nonempty = {p: r["kind"] for p, r in found.items() if r["n"] > 0}
+    elem: dict[str, T.DataType] = {}
+    if nonempty:
+        name = F.regexp_extract(F.to_json(F.array("path")), r"^\[(.*)\]$", 1)
+        wrapped = (
+            _scan_json(out.files, nonempty, out.encodings)
+            .select(F.concat(
+                F.lit("{"), name, F.lit(":"), parts.sample_text(F.col("tag")), F.lit("}")
+            ))
+        )
+        elem = _infer_element_types(spark, wrapped)
+
+    # nested fields may be added to a column only when it is written as
+    # JSON text that leaves the added (null) fields out
+    nested_ok = text_parity and spark.conf.get(
+        "spark.sql.jsonGenerator.ignoreNullFields", "true"
+    ) == "true"
+    merged: dict[str, T.DataType] = {}
+    names: dict[str, str] = {}  # lower-cased → name: Spark resolves names case-insensitively
+    pinned: set[str] = set()  # keys a strict file holds: their type must not change
+    reserved = {CORRUPT_COL, SOURCE_COL, _KEYS_COL}
+    for p, r in found.items():
+        if r["n"] == 0:  # valid but no records: counted, nothing to merge
+            out.records[p], out.dropped[p] = 0, r["dropped"]
+            continue
+        t = elem.get(_path_key(p))
+        if not (isinstance(t, T.ArrayType) and isinstance(t.elementType, T.StructType)):
+            continue
+        fields = {f.name: f.dataType for f in t.elementType.fields}
+        if (
+            not fields
+            or set(fields) != set(r["keys"] or ())
+            or len({n.lower() for n in fields}) < len(fields)
+            or any(n in reserved or "." in n or "`" in n for n in fields)
+            or any(names.get(n.lower(), n) != n for n in fields)
+        ):
+            continue
+        # a strict file's columns must keep exactly its own types: all
+        # of them without the text projection (a union keeps native
+        # nested types), a lossy file's, and a mixed array's beyond the
+        # schema sample (its later records may hold unsampled fields)
+        strict = (
+            not nested_ok or r["lossy"]
+            or (r["kind"] == "mixed" and r["n"] > SALVAGE_SCHEMA_SAMPLE)
+        )
+        types = {}
+        for n, ft in fields.items():
+            m = _merge_types(merged[n], ft) if n in merged else ft
+            if m is None or (strict and m != ft) or (n in pinned and m != merged[n]):
+                break
+            types[n] = m
+        else:
+            merged.update(types)
+            names.update({n.lower(): n for n in fields})
+            if strict:
+                pinned.update(fields)
+            out.kind[p], out.records[p], out.dropped[p] = r["kind"], r["n"], r["dropped"]
+            out.keys[p] = set(fields)
+    out.schema = T.StructType([T.StructField(n, t, True) for n, t in merged.items()])
+    return out
+
+
+def _project(placed: _Placed, files: list[str], text_parity: bool) -> DataFrame:
+    """The shared ``from_json`` + ``inline`` projection of ``files``,
+    all-TEXT when ``text_parity``. A key absent from a whole file stays
+    NULL for its rows (a present null becomes ``""``); lineage last."""
+    schema = placed.schema
+    masked = [n for n in schema.fieldNames() if not all(n in placed.keys[p] for p in files)]
+    parts = _Parts()
+    kind = F.col("tag")
+    # a mixed array keeps the lineage salvage pins: the file's name as
+    # listed, where input_file_name() gives it URL-encoded
+    source = F.when(kind == "mixed", F.element_at(F.split("path", "/"), -1))
+    cols = [
+        F.inline(parts.parsed(kind, schema)),
+        source.otherwise(F.col(SOURCE_COL)).alias(SOURCE_COL),
+    ]
+    if masked:
+        cols.append(F.to_json(parts.keys(kind)).alias(_KEYS_COL))
+    df = _scan_json(placed.files, {p: placed.kind[p] for p in files}, placed.encodings)
+    df = df.select(*cols)
+    if text_parity:
+        df = normalize_text_parity(df)
+    if not masked:
+        return df
+    has = F.from_json(_KEYS_COL, "array<string>")
+    return df.select(
+        *[
+            F.when(F.array_contains(has, n), F.col(n)).alias(n) if n in masked else F.col(n)
+            for n in schema.fieldNames()
+        ],
+        SOURCE_COL,
+    )
+
+
+def _count_rows(frames: list[tuple[DataFrame, bool]]) -> list[int | Exception]:
+    """Row count of each ``(frame, is_json)``, in one job. If the shared
+    job fails, each frame is counted alone, so a bad file fails only
+    itself."""
+
+    def tag(i: int, f: DataFrame, is_json: bool) -> DataFrame:
+        # a JSON frame's count reads one data column: with only the
+        # corrupt-record column left to scan Spark refuses the count.
+        # to_json takes any type and, unlike isNull, is not folded away
+        data = [F.col("`" + c.replace("`", "``") + "`") for c in f.columns if c != SOURCE_COL]
+        h = F.length(F.to_json(F.struct(data[0]))) if is_json and data else F.lit(0)
+        return f.select(F.lit(i).alias("i"), h.alias("h"))
+
+    count = [F.count(F.lit(1)), F.max("h")]
+    if not frames:
+        return []
+    try:
+        tagged = reduce(DataFrame.union, [tag(i, *f) for i, f in enumerate(frames)])
+        got = {r[0]: r[1] for r in tagged.groupBy("i").agg(*count).collect()}
+        return [got.get(i, 0) for i in range(len(frames))]
+    except Exception:  # noqa: BLE001 — degrade to per-frame counts
+        out: list[int | Exception] = []
+        for f in frames:
+            try:
+                out.append(tag(0, *f).agg(*count).first()[0])
+            except Exception as ex:  # noqa: BLE001
+                out.append(ex)
+        return out
+
+
+def _ingest_parity(
+    spark: SparkSession,
+    directory: str | Path,
+    typed_paths: list[tuple[str, str]],
+    text_parity: bool,
+    schema_mode: str,
+    report: IngestReport,
+    t0: float,
+) -> tuple[DataFrame | None, IngestReport]:
+    """Parity mode: the one-pass read, then the per-file reader for the
+    files it did not place, unioned in discovery order."""
+    rank = {p: i for i, (p, _) in enumerate(typed_paths)}
+    candidates = [
+        p for p, ftype in typed_paths
+        if ftype == "json" and not p.lower().endswith(".gz")
+        and 0 < os.path.getsize(p) <= _PASS_MAX_BYTES
+    ]
+    placed = _Placed()
+    try:
+        if candidates:
+            placed = _place(spark, directory, candidates, text_parity)
+    except Exception as ex:  # noqa: BLE001 — the per-file reader still isolates each file
+        warnings.warn(f"one-pass JSON read failed, reading each file alone: {ex!r:.400}")
+    counts = dict(placed.records)
+    report.records_dropped_non_dict += sum(placed.dropped.values())
+
+    # the per-file reader for every file the pass did not place
+    errors: list[tuple[str, Exception]] = []
+    loaded: list[tuple[str, DataFrame, bool]] = []
     for path, ftype in typed_paths:
+        if path in placed.records:
+            continue
         try:
             clean, dropped = read_any_file(spark, path, ftype)
             report.records_dropped_non_dict += dropped
-            n = clean.count()
-            if n == 0:
-                continue  # valid-but-empty ([]): not processed, not an error
             if text_parity:
                 clean = normalize_text_parity(clean)
             clean = with_lineage(clean)
             if dropped:
                 # salvage re-parse loses input_file_name(); pin lineage
                 clean = clean.withColumn(SOURCE_COL, F.lit(Path(path).name))
-            frames.append(clean)
-            if first_path is None:
-                # record-0 key-order source (web path): ONLY the first
-                # processed file overall qualifies, and only when it is
-                # JSON — if a CSV/parquet frame leads, df.limit(1)'s
-                # record 0 comes from THAT frame and imposing a later
-                # JSON file's key order would mix two files' contracts
-                # (CSV frames already carry their header order natively)
-                first_path = path if ftype == "json" else ""
-            report.files_processed += 1
-            report.total_records += n
+            loaded.append((path, clean, ftype == "json"))
         except Exception as ex:  # noqa: BLE001 — A24 continue-on-error
-            report.files_failed += 1
-            report.errors.append(
-                {"file": Path(path).name, "error": f"{type(ex).__name__}: {str(ex)[:400]}"}
-            )
+            errors.append((path, ex))
+    frames: list[tuple[int, DataFrame]] = []
+    for (path, clean, _), n in zip(loaded, _count_rows([(f, j) for _, f, j in loaded])):
+        if isinstance(n, Exception):
+            errors.append((path, n))
+            continue
+        counts[path] = n
+        if n:  # valid-but-empty ([]): not processed, not an error
+            frames.append((rank[path], clean))
+    for path, ex in sorted(errors, key=lambda e: rank[e[0]]):
+        report.files_failed += 1
+        report.errors.append(
+            {"file": Path(path).name, "error": f"{type(ex).__name__}: {str(ex)[:400]}"}
+        )
 
-    df = (
-        reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
-        if frames
-        else None
-    )
-    if df is not None:
+    processed = sorted((p for p, n in counts.items() if n), key=rank.get)
+    report.files_processed = len(processed)
+    report.total_records = sum(counts.values())
+    owned = [p for p in processed if p in placed.keys]
+    if owned:
+        groups = [owned]
+        if schema_mode == "first_record" and owned[0] == processed[0]:
+            # record 0 must come from the first processed file: it gets
+            # its own frame at the head of the union
+            groups = [owned[:1], owned[1:]]
+        frames += [
+            (rank[g[0]], _project(placed, g, text_parity)) for g in groups if g
+        ]
+    frames.sort(key=lambda rf: rf[0])
+
+    df = None
+    if frames:
+        df = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), [f for _, f in frames]
+        )
+        # record-0 key-order source (web path): ONLY the first processed
+        # file overall qualifies, and only when it is JSON — if a CSV or
+        # parquet frame leads, record 0 comes from THAT frame (CSV frames
+        # already carry their header order natively)
+        first = processed[0]
         df = (
-            unify_schema_first_record(df, first_file=first_path or None)
+            unify_schema_first_record(
+                df, first_file=first if dict(typed_paths)[first] == "json" else None
+            )
             if schema_mode == "first_record"
             else unify_schema_sorted(df)
         )

@@ -145,12 +145,15 @@ def _query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (shortest repr → correctly-rounded parse, the _nearest_cells
     # literal trick), so values are bit-identical to the corpus rows.
     def build() -> DataFrame:
+        rows = _query_vec_rows(spark, sf_dir)
+        if not rows:  # empty corpus: VALUES needs at least one row
+            return spark.createDataFrame([], schema="vec_id bigint, v array<double>")
         vals = ", ".join(
             "(CAST({} AS BIGINT), array({}))".format(
                 int(r["vec_id"]),
                 ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in r["v"]),
             )
-            for r in _query_vec_rows(spark, sf_dir)
+            for r in rows
         )
         return spark.sql(f"SELECT vec_id, v FROM (VALUES {vals}) AS t(vec_id, v)")
 

@@ -5,8 +5,11 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 from generic_data_ingestor_framework_spark.ingest import ingest_directory
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 
 def test_csv_and_parquet_ingest(spark, tmp_path):
@@ -45,7 +48,7 @@ def test_cli_end_to_end(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -60,7 +63,7 @@ def test_cli_missing_dir_exit_code(tmp_path):
         [sys.executable, "-m", "generic_data_ingestor_framework_spark", str(tmp_path / "nope")],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=120,
     )
     assert out.returncode == 2

@@ -3,6 +3,8 @@ DuckDB oracle gate, tools/check_oracles.py)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2642,9 +2644,10 @@ def test_ann_index_fresh_process_serves_without_retrain(spark, tmp_path):
         return {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)}
 
     before = _meta_mtimes()
+    repo = str(Path(__file__).resolve().parents[1])
     script = f"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.ui.enabled", "false")
@@ -3040,3 +3043,16 @@ def test_supersede_band_marker_token_rule(spark, tmp_path):
     )
     adm = dedup_against_band_index_versioned(spark, probe, base_tbl, delta_tbl)
     assert sorted(r["doc_id"] for r in adm.collect()) == [10]
+
+
+def test_query_vecs_empty_corpus_is_an_empty_relation(spark, tmp_path):
+    """An embeddings table with no query vectors gives an empty
+    (vec_id, v) relation of the usual types, not a SQL ``VALUES``
+    clause with no rows (a parse error)."""
+    empty = str(tmp_path / "empty_sf")
+    spark.createDataFrame(
+        [], "vec_id bigint, embedding array<float>, label int"
+    ).write.parquet(f"{empty}/embeddings.parquet")
+    got = similarity._query_vecs(spark, empty)
+    assert got.collect() == []
+    assert got.dtypes == similarity._query_vecs(spark, SF).dtypes

@@ -3,6 +3,8 @@ plan AND the physical plan has the promised structure."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from generic_data_ingestor_framework_spark.scale import (
@@ -13,6 +15,7 @@ from generic_data_ingestor_framework_spark.scale import (
 )
 
 SF = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -275,7 +278,7 @@ def test_superlinear_alarm_drift_normalized():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "bench_scale", "/root/repo/tools/bench_scale.py"
+        "bench_scale", str(REPO / "tools" / "bench_scale.py")
     )
     bs = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bs)
@@ -439,12 +442,9 @@ def test_bench_memo_evict_contract():
     into a dict-lookup time (r14 verdict #3)."""
     import bench
 
-    src_sim = open(
-        "/root/repo/generic_data_ingestor_framework_spark/llm/similarity.py"
-    ).read()
-    src_rel = open(
-        "/root/repo/generic_data_ingestor_framework_spark/relational.py"
-    ).read()
+    pkg = REPO / "generic_data_ingestor_framework_spark"
+    src_sim = (pkg / "llm" / "similarity.py").read_text()
+    src_rel = (pkg / "relational.py").read_text()
     assert set(bench.MEMO_EVICT) <= set(bench.HEADLINE)
     for member, prefix in bench.MEMO_EVICT.items():
         assert isinstance(prefix, tuple) and prefix
