@@ -30,6 +30,7 @@ from generic_data_ingestor_framework_spark.llm.dedup import (
     tokens_col,
 )
 from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.session import local_relation
 
 DECON_GRAM_K = 13      # n-gram size for benchmark-overlap decontamination
 BENCH_MOD = 50         # hash(doc_id) % 50 == 0 → ~2% "benchmark" set
@@ -334,21 +335,9 @@ def banded_budget_select(
             offs.append((band, tok_off, rank_off))
         tok_off += toks
         rank_off += docs
-    # JVM LocalRelation via SQL VALUES (integer literals — exact):
-    # createDataFrame produced a pickled-RDD-backed frame whose
-    # broadcast ran a Python task round on every execution (r15)
-    if offs:
-        vals = ", ".join(f"({b}, {t}, {r})" for b, t, r in offs)
-        offs_df = banded.sparkSession.sql(
-            f"SELECT CAST(band AS BIGINT) AS band, "
-            f"CAST(tok_off AS BIGINT) AS tok_off, "
-            f"CAST(rank_off AS BIGINT) AS rank_off "
-            f"FROM (VALUES {vals}) AS t(band, tok_off, rank_off)"
-        )
-    else:  # empty corpus / zero budget — no band ever starts in budget
-        offs_df = banded.sparkSession.createDataFrame(
-            [], schema="band bigint, tok_off bigint, rank_off bigint"
-        )
+    offs_df = local_relation(
+        banded.sparkSession, offs, "band bigint, tok_off bigint, rank_off bigint"
+    )
     wc = (
         W.partitionBy("band")
         .orderBy(id_col)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.session import local_relation
 
 N_QUERY = 5   # vec_id < 5 are the query vectors
 TOP_K = 3
@@ -130,32 +131,18 @@ def _query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``N_QUERY`` query vectors as a LOCAL relation (vec_id, v):
     collected once per session — a driver-held handful, the same
     bounded class as the k-means centroids — then rebuilt with
-    ``createDataFrame``. Every probe-side derivation (wave transforms,
+    ``session.local_relation``. Every probe-side derivation (wave transforms,
     norms, probed cells) was re-scanning the corpus parquet inside its
     broadcast build for these 5 rows (r14 opt: 3–6 such scans per
     recall/retrain call). Values are the exact binary64 rows of the
     corpus scan, so every downstream expression is bit-identical."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
 
-    # Materialized as a JVM-side SQL VALUES LocalRelation, memoized per
-    # session: createDataFrame(rows) produces a pickled-RDD-backed frame
-    # (Scan ExistingRDD) whose every broadcast/collect pays a Python
-    # task round, and rebuilding it per call cost ~0.1-0.2 s of py4j.
-    # CAST('<repr>' AS DOUBLE) round-trips each binary64 exactly
-    # (shortest repr → correctly-rounded parse, the _nearest_cells
-    # literal trick), so values are bit-identical to the corpus rows.
+    # memoized per session: rebuilding it per call cost ~0.1-0.2 s of py4j
     def build() -> DataFrame:
-        rows = _query_vec_rows(spark, sf_dir)
-        if not rows:  # empty corpus: VALUES needs at least one row
-            return spark.createDataFrame([], schema="vec_id bigint, v array<double>")
-        vals = ", ".join(
-            "(CAST({} AS BIGINT), array({}))".format(
-                int(r["vec_id"]),
-                ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in r["v"]),
-            )
-            for r in rows
+        return local_relation(
+            spark, _query_vec_rows(spark, sf_dir), "vec_id bigint, v array<double>"
         )
-        return spark.sql(f"SELECT vec_id, v FROM (VALUES {vals}) AS t(vec_id, v)")
 
     return shared_value(spark, ("ann_query_vec_df", sf_dir), build)
 

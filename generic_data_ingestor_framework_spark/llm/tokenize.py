@@ -87,6 +87,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from generic_data_ingestor_framework_spark.llm.dedup import tokens_col
+from generic_data_ingestor_framework_spark.session import local_relation
 
 BPE_MERGES = 10   # merges learned by the gate queries (parameterizable)
 VOCAB_TOPK = 20   # rows reported by bpe_vocab_topk
@@ -304,7 +305,7 @@ def bpe_train_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
             _word_freqs(spark, sf_dir), BATCH_MERGES, batch_m=BATCH_M
         ),
     )
-    return spark.createDataFrame(rows, _MERGES_SCHEMA).orderBy("rank")
+    return local_relation(spark, rows, _MERGES_SCHEMA).orderBy("rank")
 
 
 def train_merges(
@@ -334,7 +335,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table: rank, pair, merged symbol, weighted
     occurrence count at selection time."""
     rows = train_merges(spark, sf_dir)
-    return spark.createDataFrame(rows, _MERGES_SCHEMA).orderBy("rank")
+    return local_relation(spark, rows, _MERGES_SCHEMA).orderBy("rank")
 
 
 def bpe_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

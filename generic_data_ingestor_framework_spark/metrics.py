@@ -5,7 +5,8 @@ The reference computes per-run counters and throughput in the driver
 Spark-native replacements: ``df.observe`` named metrics (collected by a
 listener at action time, no extra pass) and accumulators for imperative
 paths. The IngestReport in ``ingest.py`` carries the per-run numbers;
-this module adds the observation plumbing for pipeline stages.
+this module adds the observation plumbing for pipeline stages, and
+``codegen_stats`` reads the JVM's generated-code compiler counters.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -49,3 +50,14 @@ class Timer:
 def throughput_rps(records: int, seconds: float) -> float:
     """A22: the reference's reported metric (`application.py:136`)."""
     return records / seconds if seconds > 0 else 0.0
+
+
+def codegen_stats(spark: SparkSession) -> dict[str, float]:
+    """Classes Spark's codegen has compiled in this JVM, and the total
+    compile time in ms (both cumulative since the JVM started). A hit in
+    the generated-code cache compiles nothing, so the difference between
+    two readings counts the cache's misses in between."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return {"compilations": compiles.getCount(), "compile_ms": generator.compileTime() / 1e6}

@@ -4,7 +4,8 @@ The reference's sink is a SQLite table created with all-TEXT DDL and
 filled by batched ``executemany`` with rollback-on-error
 (`src/connectors/sqlite_connector.py:131-222`). Spark equivalents:
 
-- DDL + insert → ``saveAsTable`` (create semantics via mode);
+- DDL → a catalog ``createTable`` (metadata only); insert →
+  ``saveAsTable`` in append mode;
   batching IS partitioning — each task commits its own split, and the
   commit protocol discards failed task output (the rollback analogue).
 - atomic JSON/text writes (`file_handler.py:181-266`) → Spark's
@@ -30,10 +31,13 @@ from pyspark.sql import types as T
 def create_table(
     spark: SparkSession, df: DataFrame, table: str, if_not_exists: bool = True
 ) -> bool:
-    """A12: CREATE TABLE [IF NOT EXISTS] with the DataFrame's schema.
+    """A12: CREATE TABLE [IF NOT EXISTS] with the DataFrame's schema,
+    in the session's default format. Metadata only: no job runs and no
+    file is written (columns are nullable, as ``saveAsTable`` makes
+    them). ``if_not_exists=False`` raises on an existing table.
     Returns True if the table exists after the call."""
-    mode = "ignore" if if_not_exists else "errorifexists"
-    df.limit(0).write.mode(mode).saveAsTable(table)
+    if not (if_not_exists and spark.catalog.tableExists(table)):
+        spark.catalog.createTable(table, schema=df.schema)
     return spark.catalog.tableExists(table)
 
 

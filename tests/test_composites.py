@@ -11,7 +11,8 @@ import pytest
 from generic_data_ingestor_framework_spark import composite
 from generic_data_ingestor_framework_spark._composite_manifest import MANIFEST
 
-SF_DIR = "/root/testdata/sf0.001"
+from conftest import SF_SMALL as SF_DIR
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

@@ -5,7 +5,7 @@ from __future__ import annotations
 from generic_data_ingestor_framework_spark.fileops import FileOps
 from generic_data_ingestor_framework_spark.functions import register_all
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF_SMALL as SF
 
 
 def test_udf_registry_sql_path(spark):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from generic_data_ingestor_framework_spark.llm import dedup, similarity, textstats
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF_SMALL as SF
 
 
 def test_minhash_contains_jaccard_pairs(spark):
@@ -227,7 +227,7 @@ def test_shingle_storage_level_parameterized(spark):
     # earlier dedup tests may have cached the identical plan at the
     # default level; Spark keeps the first level for a cached plan
     spark.catalog.clearCache()
-    df = _exploded_shingles(spark, "/root/testdata/sf0.001", storage=StorageLevel.DISK_ONLY)
+    df = _exploded_shingles(spark, SF, storage=StorageLevel.DISK_ONLY)
     try:
         assert df.storageLevel == StorageLevel.DISK_ONLY
         assert df.count() > 0
@@ -240,7 +240,7 @@ def test_chunk_overlap_covers_all_tokens(spark):
     consecutive chunks overlap by CHUNK_TOKENS - CHUNK_STRIDE."""
     from generic_data_ingestor_framework_spark.llm import curate
 
-    rows = curate.chunk_documents_overlap(spark, "/root/testdata/sf0.001").collect()
+    rows = curate.chunk_documents_overlap(spark, SF).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append((r["chunk_idx"], r["n_chunk_tokens"]))
@@ -264,7 +264,7 @@ def test_pack_windows_conserve_tokens(spark):
     from generic_data_ingestor_framework_spark.llm import curate
     from generic_data_ingestor_framework_spark.relational import load_table
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     packed = (
         curate.pack_context_windows(spark, sf)
         .groupBy("lang").agg(F.sum("n_tokens").alias("t"))
@@ -282,7 +282,7 @@ def test_pack_windows_conserve_tokens(spark):
 def test_decontaminate_excludes_benchmark_docs(spark):
     from generic_data_ingestor_framework_spark.llm import curate
 
-    out = curate.decontaminate_against_benchmark(spark, "/root/testdata/sf0.001")
+    out = curate.decontaminate_against_benchmark(spark, SF)
     rows = out.collect()
     assert len(rows) > 0
     flagged = [r for r in rows if r["is_contaminated"]]
@@ -304,7 +304,7 @@ def test_paragraph_dedup_invariants(spark):
     from generic_data_ingestor_framework_spark.llm.dedup import tokens_col
     from generic_data_ingestor_framework_spark.relational import load_table
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     out = paragraph_dedup_corpus(spark, sf)
     rows = out.collect()
     assert all(0 <= r["n_kept"] <= r["n_segments"] for r in rows)
@@ -337,7 +337,7 @@ def test_pack_context_windows_invariants(spark):
     from generic_data_ingestor_framework_spark.llm.dedup import tokens_col
     from generic_data_ingestor_framework_spark.relational import load_table
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     rows = pack_context_windows(spark, sf).collect()
     got_tokens = {}
     seqs_by_lang = {}
@@ -506,7 +506,7 @@ def test_multimodal_real_codecs_roundtrip(spark):
     assert dur_us == n * 1_000_000 // rate
 
     # production read path: binaryFile scan → decode
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     bmp = {r["doc_id"]: r for r in mm.multimodal_bmp_decode(spark, sf).collect()}
     assert len(bmp) == 20 and all(
         r["width"] == 16 + d % 16 and r["height"] == 8 + d % 8
@@ -816,7 +816,7 @@ def test_jpeg_decode_production_path(spark):
     formula."""
     from generic_data_ingestor_framework_spark.llm import multimodal as mm
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     rows = {r["doc_id"]: r for r in mm.multimodal_jpeg_decode(spark, sf).collect()}
     assert len(rows) == 20
     assert all(
@@ -839,7 +839,7 @@ def test_randomized_response_debias_identities(spark):
         randomized_response_lang,
     )
 
-    rows = randomized_response_lang(spark, "/root/testdata/sf0.001").collect()
+    rows = randomized_response_lang(spark, SF).collect()
     assert rows, "empty RR output"
     k = rows[0]["k_categories"]
     assert k == len(rows)  # one row per alphabet lang
@@ -852,7 +852,7 @@ def test_randomized_response_debias_identities(spark):
     for r in rows:
         assert abs(r["est_count"] - r["true_cnt"]) < 6 * (n ** 0.5) * 1.34 + 5, r
     # determinism: a second run is bit-identical (hash-derived draws)
-    again = randomized_response_lang(spark, "/root/testdata/sf0.001").collect()
+    again = randomized_response_lang(spark, SF).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
 
 
@@ -1020,7 +1020,7 @@ def test_bpe_batched_batch1_identical_and_job_reduction(spark, tmp_path):
     # real corpus at the gate operating point: 8 merges in 2 rounds
     stats4: dict = {}
     got = tokenize.train_from_words_batched(
-        tokenize._word_freqs(spark, "/root/testdata/sf0.001"),
+        tokenize._word_freqs(spark, SF),
         tokenize.BATCH_MERGES,
         batch_m=tokenize.BATCH_M,
         stats=stats4,
@@ -2066,7 +2066,7 @@ def test_band_index_cross_run_dedup(spark, tmp_path):
     from generic_data_ingestor_framework_spark.relational import load_table
     from generic_data_ingestor_framework_spark.scale import count_exchanges
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     d = load_table(spark, sf, "documents")
     bucket = portable_hash32(F.col("doc_id").cast("string")) % 2
     corpus = d.filter(bucket == 0)
@@ -2118,7 +2118,7 @@ def test_band_index_versioned_supersede_delete(spark, tmp_path):
     from generic_data_ingestor_framework_spark.relational import load_table
     from generic_data_ingestor_framework_spark.scale import count_exchanges
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     d = load_table(spark, sf, "documents")
     h = portable_hash32(F.col("doc_id").cast("string"))
     corpus = d.filter(h % 3 == 0)
@@ -2237,7 +2237,7 @@ def test_band_index_pressure_policy_and_guard(spark):
     from generic_data_ingestor_framework_spark.llm import dedup as dd
     from generic_data_ingestor_framework_spark.relational import load_table
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     d = load_table(spark, sf, "documents")
     h = dd.portable_hash32(F.col("doc_id").cast("string"))
     corpus = d.filter(h % 3 == 0)
@@ -2746,7 +2746,7 @@ def test_compact_band_index_dedups_and_preserves_probes(spark):
     from generic_data_ingestor_framework_spark.relational import load_table
     from generic_data_ingestor_framework_spark.scale import count_exchanges
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     d = load_table(spark, sf, "documents")
     bucket = portable_hash32(F.col("doc_id").cast("string")) % 2
     corpus = d.filter(bucket == 0)

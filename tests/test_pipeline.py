@@ -7,6 +7,8 @@ import sqlite3
 
 from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
+from conftest import SF_SMALL
+
 
 def test_pipeline_directory_to_sqlite(spark, tmp_path):
     d = tmp_path / "src"
@@ -116,7 +118,7 @@ def test_pipeline_curation_steps(spark):
     against a benchmark parquet -> chunk with overlap; one lazy plan."""
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     spec = {
         "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
         "steps": [
@@ -339,7 +341,7 @@ def test_pipeline_repetition_and_weighted_sample_steps(spark):
     )
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     # synthetic frame: one looping doc, one natural doc, one short doc
     df = spark.createDataFrame(
         [
@@ -380,7 +382,7 @@ def test_pipeline_repetition_filter_rejects_reserved_and_bad_cap(spark):
 
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     base = {"source": {"type": "parquet", "path": f"{sf}/documents.parquet"}}
     with pytest.raises(ValueError, match="collides"):
         run_pipeline(spark, {**base, "steps": [
@@ -404,7 +406,7 @@ def test_pipeline_dedup_near_index_crawl_loop(spark):
     )
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     table = "pipe_band_idx"
     for t in (table, f"{table}_admitted"):
         _reset_managed_table(spark, t)
@@ -463,7 +465,7 @@ def test_pipeline_ann_append_step(spark, tmp_path):
     from generic_data_ingestor_framework_spark.llm import similarity
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     root = str(tmp_path / "ann_idx_pipe")
     similarity.save_ann_index(spark, sf, root)
     n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
@@ -504,7 +506,7 @@ def test_pipeline_ann_supersede_delete_steps(spark, tmp_path):
     from generic_data_ingestor_framework_spark.llm import similarity
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     root = str(tmp_path / "ann_idx_pipe_sup")
     similarity.save_ann_index(spark, sf, root)
     n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
@@ -563,7 +565,7 @@ def test_pipeline_band_supersede_delete_steps(spark, tmp_path):
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
     from generic_data_ingestor_framework_spark.relational import load_table
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     base_tbl, delta_tbl = "band_pipe_base", "band_pipe_delta"
     d = load_table(spark, sf, "documents")
     h = portable_hash32(F.col("doc_id").cast("string"))
@@ -632,7 +634,7 @@ def test_pipeline_scd2_apply_step(spark):
 
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     tbl = "dim_scd2_step_test"
     seed = {
         "source": {"type": "parquet", "path": f"{sf}/customer.parquet"},
@@ -717,7 +719,7 @@ def test_pipeline_auto_compact_steps(spark, tmp_path):
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
     from generic_data_ingestor_framework_spark.relational import load_table
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMALL
     # --- ANN side: supersede ~9% of ids, policy at 20% -> no-op;
     # policy at 5% -> compacts
     root = str(tmp_path / "ann_idx_autoc")

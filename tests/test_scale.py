@@ -14,7 +14,8 @@ from generic_data_ingestor_framework_spark.scale import (
     write_bucketed_table,
 )
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF_SMALL as SF
+
 REPO = Path(__file__).resolve().parents[1]
 
 
@@ -168,7 +169,7 @@ def test_packing_cumsum_partitions_by_lang_and_bucket(spark):
     single executor at 100 TB."""
     from generic_data_ingestor_framework_spark.llm.curate import pack_context_windows
 
-    plan = pack_context_windows(spark, "/root/testdata/sf0.001")._jdf.queryExecution().toString()
+    plan = pack_context_windows(spark, SF)._jdf.queryExecution().toString()
     import re
 
     # Window node format: `Window [sum(x) windowspecdefinition(...)],
@@ -406,7 +407,7 @@ def test_versioned_probes_respect_broadcast_optout(spark, tmp_path):
     from generic_data_ingestor_framework_spark.relational import load_table
     from generic_data_ingestor_framework_spark.scale import explain_string
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     docs = load_table(spark, sf, "documents").limit(60).cache()
     base_tbl, delta_tbl = "band_optout_base", "band_optout_delta"
     key = "spark.sql.autoBroadcastJoinThreshold"

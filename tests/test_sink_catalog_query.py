@@ -25,6 +25,29 @@ def test_create_table_if_not_exists_and_insert(spark, small_df):
     assert spark.table(t).count() == 6  # append semantics
 
 
+def test_create_table_is_metadata_only(spark):
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    # non-nullable at every level: the table must hold them nullable,
+    # as saveAsTable does
+    df = spark.range(3).select(
+        "id", F.struct(F.col("id").alias("x")).alias("s"), F.array("id").alias("a")
+    )
+    df.limit(0).write.saveAsTable("t_meta_ref")
+    spark.sparkContext.setJobGroup("create_table_meta", "create_table")
+    try:
+        assert sink.create_table(spark, df, "t_meta_only")
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup("create_table_meta") == []
+    assert spark.table("t_meta_only").schema == spark.table("t_meta_ref").schema
+    assert spark.table("t_meta_only").inputFiles() == []
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_ALREADY_EXISTS"):
+        sink.create_table(spark, df, "t_meta_only", if_not_exists=False)
+    assert sink.insert_data(spark, df, "t_meta_only") == 3
+
+
 def test_catalog_introspection(spark, small_df):
     t = "t_catalog_probe"
     sink.create_table(spark, small_df, t)

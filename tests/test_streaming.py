@@ -13,7 +13,7 @@ from generic_data_ingestor_framework_spark.streaming import (
     window_tumbling_hourly,
 )
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF_SMALL as SF
 
 
 def test_stream_ingest_json_drains_directory(spark, tmp_path):
@@ -668,7 +668,7 @@ def test_stream_ann_index_append_exactly_once(spark, tmp_path):
         stream_ann_index_append,
     )
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     root = str(tmp_path / "ann_idx_stream")
     similarity.save_ann_index(spark, sf, root)
     n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
@@ -748,7 +748,7 @@ def test_stream_ann_index_upsert_delete(spark, tmp_path):
         stream_ann_index_upsert,
     )
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF
     root = str(tmp_path / "ann_idx_stream_up")
     similarity.save_ann_index(spark, sf, root)
     n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
