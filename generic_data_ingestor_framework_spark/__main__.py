@@ -29,7 +29,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--table", default="processed_data", help="output table name")
     ap.add_argument("--warehouse", default=None, help="spark.sql.warehouse.dir")
     ap.add_argument("--preview", type=int, default=0, help="show N rows after ingest")
-    ap.add_argument("--mode", choices=["parity", "bulk"], default="parity")
+    ap.add_argument(
+        "--mode", choices=["parity", "bulk"], default="parity",
+        help="how files are grouped into reads: parity = one pass over the JSON "
+        "files, per-file reads for the rest; bulk = one read per format, "
+        "malformed JSON documents dropped instead of failing their file",
+    )
     ap.add_argument("--lossless", action="store_true", help="keep native types (no all-TEXT projection)")
     ap.add_argument("--types", default=None, help="comma list of formats (json,csv,parquet,orc,xml)")
     ap.add_argument(

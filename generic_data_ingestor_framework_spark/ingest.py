@@ -3,41 +3,40 @@
 The reference's lifecycle — discover → parse JSON → normalize → add
 lineage → concatenate → infer unified schema → save
 (`src/core/application.py:36-153`) — re-expressed as Spark reads and
-one union plan.
+one union plan. ``ingest_directory`` runs it as one pipeline; its
+``mode`` picks only how files are grouped into reads:
 
-Two execution modes:
+- ``parity`` (the CLI, webapp and pipeline default) reads the
+  directory's JSON files in ONE distributed pass, a fixed number of
+  Spark jobs however many files there are, each file's records exactly
+  as its own read gives them (``_place``). A file the pass cannot place
+  — not strictly valid JSON, empty, gzipped, over 1 MiB, a type
+  widening, or not JSON — takes the per-file reader. The pass parses
+  each file about twice as often as the file's own read does: on a
+  4-core host it won below about 1 MB per file and lost from about
+  4 MB (``tools/bench_parity_sizes.py``).
+- ``bulk`` (the scale path) makes one multi-path read per format and
+  layout (``read_paths``), whose schema inference reads every byte: it
+  wins on few large files and loses on many small ones. JSON is read
+  with DROPMALFORMED, so a malformed document is dropped rather than
+  failing its file, and a format's files are counted together. A
+  format whose read fails (e.g. unmergeable parquet schemas) is left to
+  the per-file reader.
 
-- ``bulk`` (the scale path): ONE multi-path ``spark.read.json`` per
-  format over all discovered files — distributed listing, distributed
-  parse, native schema union, malformed documents dropped inline
-  (DROPMALFORMED). This is what you run on 100 TB.
-- ``parity`` (the reference contract, and the CLI, webapp and pipeline
-  default): per-file error isolation and the reference's run report
-  (files processed / failed / records / dropped non-dicts, A24/A22),
-  with each file's records exactly as a separate read of that file
-  gives them. It runs as ONE distributed pass over the directory's
-  JSON files, a fixed number of Spark jobs however many files there
-  are: a ``binaryFile`` scan decodes each file with its sniffed
-  charset; JVM expressions classify it (one object, an all-object
-  array, an array mixing objects and scalars, line-delimited objects,
-  or valid-but-empty) and one job collects the per-file report; one
-  schema-inference job over rows ``{"<path>": [records]}`` gives every
-  file its own element schema; files whose schemas merge without
-  widening a type share one ``from_json`` + ``inline`` projection,
-  where a key absent from a whole file stays NULL. A file the pass
-  cannot place takes the per-file reader (``read_any_file``): one that
-  is not strictly valid JSON, empty, gzipped, over 1 MiB, a type
-  widening, or not JSON at all. The pass parses each file about twice
-  as often as a file's own read does, so it pays only where per-file
-  jobs cost more than the bytes: on a 4-core host it won below about
-  1 MB per file and lost from about 4 MB (``tools/bench_parity_sizes.py``).
+The rest is shared: the per-file reader (``read_any_file``) for what
+the read left, each bad file failing only itself (A24); one job
+counting every frame for the run report (A22); the A7 all-TEXT
+projection (``text_parity``); in lossless mode, text for a column
+whose types a union cannot widen (``_as_text``); the schema unify
+(``schema_mode``, A11).
 
-Encoding fallback (A6) mirrors `file_handler.py:147-170`: utf-8-sig
-first, then utf-8 / latin-1 / cp1252 / ascii, retried on parse failure.
+Encoding (A6, `file_handler.py:147-170`): strict UTF-8 if the head
+bytes decode, else latin-1, which decodes any bytes.
 """
 
 from __future__ import annotations
 
+import gzip
 import json
 import os
 import re
@@ -45,6 +44,7 @@ import time
 import warnings
 from dataclasses import dataclass, field
 from functools import reduce
+from itertools import combinations
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -57,7 +57,8 @@ from generic_data_ingestor_framework_spark.normalize import (
 )
 from generic_data_ingestor_framework_spark.scanner import FileScanner
 
-FALLBACK_ENCODINGS = ["UTF-8", "ISO-8859-1", "windows-1252", "US-ASCII"]
+# latin-1 decodes any bytes, so the sniff never gets past it
+FALLBACK_ENCODINGS = ["UTF-8", "ISO-8859-1"]
 
 # row element name for the XML source (Spark 4 built-in data source);
 # files written by sink-side Spark use the same tag, so round-trips are
@@ -73,6 +74,11 @@ def _logical_path(p: str) -> str:
     decompress by codec extension, so every FORMAT decision (layout,
     separator, multiline) must look at the inner extension."""
     return p[:-3] if p.lower().endswith(".gz") else p
+
+
+def _open(path: str | Path, mode: str = "rb", **kw):
+    """``open``, decompressing a ``.gz`` file as Spark's codec does."""
+    return (gzip.open if str(path).lower().endswith(".gz") else open)(path, mode, **kw)
 
 
 def _line_delimited(p: str) -> bool:
@@ -94,23 +100,16 @@ def detect_encoding(path: str | Path) -> str:
     head bytes with strict decoding and return the first encoding that
     round-trips. Gzip members are sniffed on DECOMPRESSED bytes (the
     encoding option applies after Spark's codec decompression)."""
-    if str(path).lower().endswith(".gz"):
-        import gzip
-
-        with gzip.open(path, "rb") as f:
-            head = f.read(_SNIFF_BYTES)
-    else:
-        with open(path, "rb") as f:
-            head = f.read(_SNIFF_BYTES)
+    with _open(path) as f:
+        head = f.read(_SNIFF_BYTES)
     if head.startswith(_BOM):
         return "UTF-8"  # BOM: read_json_file lets Spark's reader strip it
     for enc in FALLBACK_ENCODINGS:
         try:
             head.decode(enc)
             return enc
-        except (UnicodeDecodeError, LookupError):
+        except UnicodeDecodeError:
             continue
-    return "ISO-8859-1"  # total fallback: latin-1 accepts any bytes
 
 CORRUPT_COL = "_corrupt_record"
 SOURCE_COL = "_source_file"
@@ -162,9 +161,7 @@ def read_json_file(
     # a whole-file read strips a UTF-8 BOM only when Spark detects the
     # charset itself; with an explicit encoding the BOM breaks the parse
     if multiline and enc == "UTF-8":
-        import gzip
-
-        with (gzip.open if p.lower().endswith(".gz") else open)(p, "rb") as f:
+        with _open(p) as f:
             if f.read(len(_BOM)) == _BOM:
                 enc = None
     if enc:
@@ -210,9 +207,8 @@ def salvage_json_elements(
     Returns (parsed_df | None, n_dropped_non_dict).
     """
     enc = detect_encoding(path)
-    # detect_encoding only ever returns UTF-8 or ISO-8859-1 (latin-1
-    # accepts every byte sequence, so later fallbacks are unreachable) —
-    # both are charsets F.decode supports
+    # detect_encoding returns UTF-8 or ISO-8859-1, both charsets
+    # F.decode supports
     raw = spark.read.format("binaryFile").load(str(path)).select(
         F.regexp_replace(F.decode(F.col("content"), enc), "^\ufeff", "").alias("value")
     )
@@ -282,8 +278,8 @@ def read_csv_file(
     """CSV/TSV/PSV read (declared in the reference scanner,
     `file_scanner.py:22-29`, but never implemented there). All columns
     read as string — the reference's all-TEXT data model natively.
-    Accepts a path list for the bulk mode's one-scan-per-format read
-    (separator taken from the first path's extension)."""
+    Accepts a path list for one scan of several files (separator taken
+    from the first path's extension)."""
     paths = [str(x) for x in path] if isinstance(path, list) else [str(path)]
     sep = _CSV_SEPARATORS.get(Path(_logical_path(paths[0])).suffix.lower(), ",")
     return (
@@ -296,7 +292,7 @@ def read_csv_file(
 
 
 def read_csv_paths_bulk(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Bulk CSV read, grouped by (separator, header signature).
+    """CSV read of several files, grouped by (separator, header signature).
 
     Spark unions the files of one csv() scan POSITIONALLY: a file whose
     header reorders (or renames) columns lands its values in the wrong
@@ -310,41 +306,69 @@ def read_csv_paths_bulk(spark: SparkSession, paths: list[str]) -> DataFrame:
     groups: dict[tuple[str, str], list[str]] = {}
     for p in paths:
         sep = _CSV_SEPARATORS.get(Path(_logical_path(p)).suffix.lower(), ",")
-        if p.lower().endswith(".gz"):
-            import gzip
-
-            with gzip.open(p, "rt", encoding="utf-8", errors="replace") as fh:
-                header = fh.readline().rstrip("\r\n")
-        else:
-            with open(p, encoding="utf-8", errors="replace") as fh:
-                header = fh.readline().rstrip("\r\n")
+        with _open(p, "rt", encoding="utf-8", errors="replace") as fh:
+            header = fh.readline().rstrip("\r\n")
         groups.setdefault((sep, header), []).append(p)
     frames = [read_csv_file(spark, ps) for ps in groups.values()]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+    return drop_corrupt_records(out)
+
+
+def read_json_paths_bulk(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """The scale path: one distributed multi-path read per JSON layout;
+    Spark unions schemas natively and drops malformed documents inline.
+
+    Line-delimited files (``.jsonl``/``.ndjson``) MUST be read with
+    ``multiLine=false`` — under ``multiLine=true`` Spark parses each
+    file as one document and silently keeps only the first object
+    (records 2..N lost). Whole-file JSON needs the opposite. So the
+    bulk read is one scan per layout, unioned with missing columns
+    allowed.
+
+    DROPMALFORMED (not PERMISSIVE): the corrupt-record column of a raw
+    scan can't be counted/aggregated on its own (Spark restriction), and
+    at scale you route bad records to a quarantine prefix via
+    ``badRecordsPath`` rather than carrying them in-plan."""
+    frames = []
+    for multiline in (True, False):
+        group = [p for p in paths if _line_delimited(p) != multiline]
+        if group:
+            frames.append(
+                spark.read.option("multiLine", str(multiline).lower())
+                .option("allowSingleQuotes", "false")
+                .option("mode", "DROPMALFORMED")
+                .json(group)
+            )
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
+def read_paths(spark: SparkSession, paths: list[str], ftype: str) -> DataFrame:
+    """Format dispatch (A2 classification → reader): ONE read of
+    ``paths``, all of type ``ftype``, schemas merged by column name.
+    JSON takes the bulk reader; one JSON file's own read, with the
+    parity salvage, is ``read_json_records``."""
+    if ftype == "json":
+        return read_json_paths_bulk(spark, paths)
+    if ftype == "csv":
+        return read_csv_paths_bulk(spark, paths)
+    if ftype in ("parquet", "orc"):
+        return spark.read.option("mergeSchema", "true").format(ftype).load(paths)
+    if ftype == "xml":
+        return spark.read.format("xml").option("rowTag", XML_ROW_TAG).load(paths)
+    raise ValueError(f"unsupported file type: {ftype}")
 
 
 def read_any_file(
     spark: SparkSession, path: str | Path, ftype: str
 ) -> tuple[DataFrame, int]:
-    """Format dispatch (A2 classification → reader). Returns
-    (clean_df, n_dropped_non_record)."""
+    """One file's read. Returns (clean_df, n_dropped_non_record)."""
     if ftype == "json":
         return read_json_records(spark, path)
-    if ftype == "csv":
-        return drop_corrupt_records(read_csv_file(spark, path)), 0
-    if ftype == "parquet":
-        return spark.read.parquet(str(path)), 0
-    if ftype == "orc":
-        return spark.read.orc(str(path)), 0
-    if ftype == "xml":
-        return (
-            spark.read.format("xml").option("rowTag", XML_ROW_TAG).load(str(path)),
-            0,
-        )
-    raise ValueError(f"unsupported file type: {ftype}")
+    return read_paths(spark, [str(path)], ftype), 0
+
+
+def _error(name: str, ex: Exception, note: str = "") -> dict:
+    return {"file": name, "error": f"{type(ex).__name__}: {str(ex)[:400]}{note}"}
 
 
 def ingest_directory(
@@ -359,6 +383,8 @@ def ingest_directory(
 ) -> tuple[DataFrame | None, IngestReport]:
     """The reference pipeline end-to-end. Returns (DataFrame, report).
 
+    ``mode`` picks how files are grouped into reads (see the module
+    docstring): ``"parity"`` or ``"bulk"``.
     ``text_parity=True`` applies the A7 all-TEXT projection; False
     keeps lossless native types (the analytics-friendly default for
     new pipelines). ``file_types`` defaults to every supported format
@@ -385,95 +411,94 @@ def ingest_directory(
     typed_paths = [
         (str(p), ftype) for ftype, ps in sorted(discovered.items()) for p in ps
     ]
-    if not typed_paths:
-        report.elapsed_sec = time.time() - t0
-        return None, report
+    rank = {p: i for i, (p, _) in enumerate(typed_paths)}
 
+    # the read step, the only part ``mode`` decides. Bulk reads each
+    # format's files at once (``groups``, counted below); a format
+    # whose read fails is left to the per-file reader, so one bad file
+    # costs itself. Parity reads the JSON files in one pass (``placed``,
+    # counted). Every file neither covers takes the per-file reader.
+    placed, groups = _Placed(), []
     if mode == "bulk":
-        # one distributed multi-path read PER FORMAT, then a schema-
-        # merging union — the whole directory becomes ~3 scans no
-        # matter how many files it holds. If a format's group scan
-        # fails (e.g. unmergeable parquet schemas), it DEGRADES to
-        # per-file reads so one bad file costs itself, not the format
-        # group (A24 continue-on-error at file granularity either way).
-        # Bad JSON documents are dropped inline (DROPMALFORMED).
-        frames = []
-        for ftype, reader in (
-            ("json", lambda ps: read_json_paths_bulk(spark, ps)),
-            ("csv", lambda ps: with_lineage(read_csv_paths_bulk(spark, ps))),
-            ("parquet", lambda ps: with_lineage(
-                spark.read.option("mergeSchema", "true").parquet(*ps)
-            )),
-            ("orc", lambda ps: with_lineage(
-                spark.read.option("mergeSchema", "true").orc(*ps)
-            )),
-            ("xml", lambda ps: with_lineage(
-                spark.read.format("xml").option("rowTag", XML_ROW_TAG).load(ps)
-            )),
-        ):
-            paths = [p for p, t in typed_paths if t == ftype]
-            if not paths:
-                continue
+        for ftype, ps in sorted(discovered.items()):
+            paths = [str(p) for p in ps]
             try:
-                frames.append(reader(paths))
-                report.files_processed += len(paths)
+                groups.append((paths, ftype, read_paths(spark, paths, ftype)))
             except Exception as ex:  # noqa: BLE001 — A24 continue-on-error
                 report.errors.append(
-                    {
-                        "file": f"<bulk:{ftype}>",
-                        "error": f"{type(ex).__name__}: {str(ex)[:400]}"
-                        + " (degrading to per-file reads)",
-                    }
+                    _error(f"<bulk:{ftype}>", ex, " (degrading to per-file reads)")
                 )
-                for p in paths:
-                    try:
-                        fdf, _ = read_any_file(spark, p, ftype)
-                        # literal lineage: input_file_name() is empty
-                        # for salvaged (driver-parsed) frames, and the
-                        # per-file path knows its file exactly
-                        frames.append(
-                            fdf.withColumn(SOURCE_COL, F.lit(Path(p).name))
-                        )
-                        report.files_processed += 1
-                    except Exception as fex:  # noqa: BLE001
-                        report.files_failed += 1
-                        report.errors.append(
-                            {
-                                "file": Path(p).name,
-                                "error": f"{type(fex).__name__}: {str(fex)[:400]}",
-                            }
-                        )
-        if not frames:
-            report.elapsed_sec = time.time() - t0
-            return None, report
-        frames = [
-            f.drop(CORRUPT_COL) if CORRUPT_COL in f.columns else f for f in frames
-        ]
-        # harmonize type-conflicted columns to string BEFORE the union:
-        # ANSI union coercion picks the numeric side for string+double
-        # and then fails (or corrupts) at runtime on non-numeric rows —
-        # the all-TEXT widening is the reference's own data model
-        seen: dict[str, set[str]] = {}
-        for f in frames:
-            for c, t in f.dtypes:
-                seen.setdefault(c, set()).add(t)
-        conflicted = {c for c, ts in seen.items() if len(ts) > 1}
-        if conflicted:
-            frames = [
-                f.select(
-                    *[
-                        f[c].cast("string").alias(c) if c in conflicted else f[c]
-                        for c in f.columns
-                    ]
-                )
-                for f in frames
-            ]
-        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
-        report.total_records = df.count()
-        report.elapsed_sec = time.time() - t0
-        return df, report
+    else:
+        try:
+            placed = _place(spark, directory, typed_paths, text_parity)
+        except Exception as ex:  # noqa: BLE001 — the per-file reader still isolates each file
+            warnings.warn(f"one-pass JSON read failed, reading each file alone: {ex!r:.400}")
+    report.records_dropped_non_dict += sum(placed.dropped.values())
+    covered = set(placed.records).union(*(ps for ps, _, _ in groups))
+    todo = groups + [([p], t, None) for p, t in typed_paths if p not in covered]
 
-    return _ingest_parity(spark, directory, typed_paths, text_parity, schema_mode, report, t0)
+    errors: list[tuple[str, Exception]] = []
+    loaded: list[tuple[list[str], DataFrame, bool]] = []
+    for paths, ftype, df in todo:
+        try:
+            dropped = 0
+            if df is None:
+                df, dropped = read_any_file(spark, paths[0], ftype)
+                report.records_dropped_non_dict += dropped
+            if text_parity:
+                df = normalize_text_parity(df)
+            df = with_lineage(df)
+            if dropped:
+                # salvage re-parse loses input_file_name(); pin lineage
+                df = df.withColumn(SOURCE_COL, F.lit(Path(paths[0]).name))
+            loaded.append((paths, df, ftype == "json"))
+        except Exception as ex:  # noqa: BLE001 — A24 continue-on-error
+            errors += [(p, ex) for p in paths]
+    counted = [([p], n) for p, n in placed.records.items()]
+    frames: list[tuple[int, DataFrame]] = []
+    for (paths, df, _), n in zip(loaded, _count_rows([(f, j) for _, f, j in loaded])):
+        if isinstance(n, Exception):
+            errors += [(p, n) for p in paths]
+            continue
+        counted.append((paths, n))
+        if n:  # valid-but-empty ([]): not processed, not an error
+            frames.append((rank[paths[0]], df))
+    for path, ex in sorted(errors, key=lambda e: rank[e[0]]):
+        report.files_failed += 1
+        report.errors.append(_error(Path(path).name, ex))
+
+    processed = sorted((p for ps, n in counted if n for p in ps), key=rank.get)
+    report.files_processed = len(processed)
+    report.total_records = sum(n for _, n in counted)
+    owned = [p for p in processed if p in placed.keys]
+    # record 0 must come from the first processed file: with
+    # first_record, it gets its own frame at the head of the union
+    cut = 1 if schema_mode == "first_record" and owned[:1] == processed[:1] else 0
+    frames += [
+        (rank[g[0]], _project(placed, g, text_parity)) for g in (owned[:cut], owned[cut:]) if g
+    ]
+    frames.sort(key=lambda rf: rf[0])
+
+    df = None
+    if frames:
+        dfs = [f for _, f in frames]
+        if not text_parity:
+            dfs = _as_text(dfs)
+        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
+        # record-0 key-order source (web path): ONLY the first processed
+        # file overall qualifies, and only when it is JSON — if a CSV or
+        # parquet frame leads, record 0 comes from THAT frame (CSV frames
+        # already carry their header order natively)
+        first = processed[0]
+        df = (
+            unify_schema_first_record(
+                df, first_file=first if dict(typed_paths)[first] == "json" else None
+            )
+            if schema_mode == "first_record"
+            else unify_schema_sorted(df)
+        )
+    report.elapsed_sec = time.time() - t0
+    return df, report
 
 
 # ------------------------------------------------------------ parity mode
@@ -676,11 +701,21 @@ class _Placed:
 
 
 def _place(
-    spark: SparkSession, directory: str | Path, candidates: list[str], text_parity: bool
+    spark: SparkSession,
+    directory: str | Path,
+    typed_paths: list[tuple[str, str]],
+    text_parity: bool,
 ) -> _Placed:
-    """Classify ``candidates`` and infer their schemas (two jobs), then
-    form the group of files whose schemas merge without widening any
-    type, in discovery order. Files left out fall back."""
+    """Classify the pass's candidate files and infer their schemas (two
+    jobs), then form the group of files whose schemas merge without
+    widening any type, in discovery order. Files left out fall back."""
+    candidates = [
+        p for p, ftype in typed_paths
+        if ftype == "json" and not p.lower().endswith(".gz")
+        and 0 < os.path.getsize(p) <= _PASS_MAX_BYTES
+    ]
+    if not candidates:
+        return _Placed()
     out = _Placed(
         encodings={p: detect_encoding(p) for p in candidates},
         files=_list_json(spark, directory),
@@ -826,130 +861,52 @@ def _count_rows(frames: list[tuple[DataFrame, bool]]) -> list[int | Exception]:
         return out
 
 
-def _ingest_parity(
-    spark: SparkSession,
-    directory: str | Path,
-    typed_paths: list[tuple[str, str]],
-    text_parity: bool,
-    schema_mode: str,
-    report: IngestReport,
-    t0: float,
-) -> tuple[DataFrame | None, IngestReport]:
-    """Parity mode: the one-pass read, then the per-file reader for the
-    files it did not place, unioned in discovery order."""
-    rank = {p: i for i, (p, _) in enumerate(typed_paths)}
-    candidates = [
-        p for p, ftype in typed_paths
-        if ftype == "json" and not p.lower().endswith(".gz")
-        and 0 < os.path.getsize(p) <= _PASS_MAX_BYTES
+def _widens(a: T.DataType, b: T.DataType) -> bool:
+    """Whether ``unionByName`` gives ``a`` and ``b`` one type: equal
+    types, two numbers, or structs or arrays whose shared parts do (a
+    struct field on one side only is added). Not a string and a
+    non-string, a complex and a scalar type, a struct and an array, or
+    two unequal maps."""
+    if a == b or (isinstance(a, T.NumericType) and isinstance(b, T.NumericType)):
+        return True
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        fb = {f.name.lower(): f.dataType for f in b.fields}
+        return all(
+            _widens(f.dataType, fb[f.name.lower()]) for f in a.fields if f.name.lower() in fb
+        )
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return _widens(a.elementType, b.elementType)
+    return False
+
+
+def _as_text(frames: list[DataFrame]) -> list[DataFrame]:
+    """Lossless mode's type reconciliation before the union: a column
+    whose types ``_widens`` refuses becomes text in every frame, a
+    complex value as its JSON (``to_json``, the A7 rule), a scalar
+    cast. Left alone, the union refuses such a pair
+    (``INCOMPATIBLE_COLUMN_TYPE``) or picks the numeric side of a
+    string and a number and fails on the first non-numeric row
+    (``CAST_INVALID_INPUT``)."""
+    schemas = [f.schema for f in frames]
+    types: dict[str, set[T.DataType]] = {}
+    for schema in schemas:
+        for fl in schema.fields:
+            types.setdefault(fl.name.lower(), set()).add(fl.dataType)
+    text = {c for c, ts in types.items() if not all(_widens(a, b) for a, b in combinations(ts, 2))}
+    if not text:
+        return frames
+    complex_types = (T.StructType, T.ArrayType, T.MapType)
+    return [
+        f.select(*[
+            (
+                F.to_json(f[fl.name]) if isinstance(fl.dataType, complex_types)
+                else f[fl.name].cast("string")
+            ).alias(fl.name)
+            if fl.name.lower() in text else f[fl.name]
+            for fl in schema.fields
+        ])
+        for f, schema in zip(frames, schemas)
     ]
-    placed = _Placed()
-    try:
-        if candidates:
-            placed = _place(spark, directory, candidates, text_parity)
-    except Exception as ex:  # noqa: BLE001 — the per-file reader still isolates each file
-        warnings.warn(f"one-pass JSON read failed, reading each file alone: {ex!r:.400}")
-    counts = dict(placed.records)
-    report.records_dropped_non_dict += sum(placed.dropped.values())
-
-    # the per-file reader for every file the pass did not place
-    errors: list[tuple[str, Exception]] = []
-    loaded: list[tuple[str, DataFrame, bool]] = []
-    for path, ftype in typed_paths:
-        if path in placed.records:
-            continue
-        try:
-            clean, dropped = read_any_file(spark, path, ftype)
-            report.records_dropped_non_dict += dropped
-            if text_parity:
-                clean = normalize_text_parity(clean)
-            clean = with_lineage(clean)
-            if dropped:
-                # salvage re-parse loses input_file_name(); pin lineage
-                clean = clean.withColumn(SOURCE_COL, F.lit(Path(path).name))
-            loaded.append((path, clean, ftype == "json"))
-        except Exception as ex:  # noqa: BLE001 — A24 continue-on-error
-            errors.append((path, ex))
-    frames: list[tuple[int, DataFrame]] = []
-    for (path, clean, _), n in zip(loaded, _count_rows([(f, j) for _, f, j in loaded])):
-        if isinstance(n, Exception):
-            errors.append((path, n))
-            continue
-        counts[path] = n
-        if n:  # valid-but-empty ([]): not processed, not an error
-            frames.append((rank[path], clean))
-    for path, ex in sorted(errors, key=lambda e: rank[e[0]]):
-        report.files_failed += 1
-        report.errors.append(
-            {"file": Path(path).name, "error": f"{type(ex).__name__}: {str(ex)[:400]}"}
-        )
-
-    processed = sorted((p for p, n in counts.items() if n), key=rank.get)
-    report.files_processed = len(processed)
-    report.total_records = sum(counts.values())
-    owned = [p for p in processed if p in placed.keys]
-    if owned:
-        groups = [owned]
-        if schema_mode == "first_record" and owned[0] == processed[0]:
-            # record 0 must come from the first processed file: it gets
-            # its own frame at the head of the union
-            groups = [owned[:1], owned[1:]]
-        frames += [
-            (rank[g[0]], _project(placed, g, text_parity)) for g in groups if g
-        ]
-    frames.sort(key=lambda rf: rf[0])
-
-    df = None
-    if frames:
-        df = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), [f for _, f in frames]
-        )
-        # record-0 key-order source (web path): ONLY the first processed
-        # file overall qualifies, and only when it is JSON — if a CSV or
-        # parquet frame leads, record 0 comes from THAT frame (CSV frames
-        # already carry their header order natively)
-        first = processed[0]
-        df = (
-            unify_schema_first_record(
-                df, first_file=first if dict(typed_paths)[first] == "json" else None
-            )
-            if schema_mode == "first_record"
-            else unify_schema_sorted(df)
-        )
-    report.elapsed_sec = time.time() - t0
-    return df, report
-
-
-def read_json_paths_bulk(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """The scale path: one distributed multi-path read per JSON layout;
-    Spark unions schemas natively and drops malformed documents inline.
-
-    Line-delimited files (``.jsonl``/``.ndjson``) MUST be read with
-    ``multiLine=false`` — under ``multiLine=true`` Spark parses each
-    file as one document and silently keeps only the first object
-    (records 2..N lost). Whole-file JSON needs the opposite. So the
-    bulk read is one scan per layout, unioned with missing columns
-    allowed.
-
-    DROPMALFORMED (not PERMISSIVE): the corrupt-record column of a raw
-    scan can't be counted/aggregated on its own (Spark restriction), and
-    at scale you route bad records to a quarantine prefix via
-    ``badRecordsPath`` rather than carrying them in-plan."""
-    line_delim = [p for p in paths if _logical_path(p).endswith((".jsonl", ".ndjson"))]
-    whole_file = [p for p in paths if not _logical_path(p).endswith((".jsonl", ".ndjson"))]
-    frames = []
-    for group, multiline in ((whole_file, "true"), (line_delim, "false")):
-        if group:
-            frames.append(
-                spark.read.option("multiLine", multiline)
-                .option("allowSingleQuotes", "false")
-                .option("mode", "DROPMALFORMED")
-                .json(group)
-            )
-    df = frames[0]
-    for f in frames[1:]:
-        df = df.unionByName(f, allowMissingColumns=True)
-    return with_lineage(df)
 
 
 def unify_schema_first_record(df: DataFrame, first_file: str | Path | None = None) -> DataFrame:
@@ -977,17 +934,7 @@ def unify_schema_first_record(df: DataFrame, first_file: str | Path | None = Non
     ]
     if first_file is not None:
         try:
-            if str(first_file).lower().endswith(".gz"):
-                import gzip
-
-                opener = lambda: gzip.open(  # noqa: E731
-                    first_file, "rt", encoding=detect_encoding(first_file)
-                )
-            else:
-                opener = lambda: open(  # noqa: E731
-                    first_file, encoding=detect_encoding(first_file)
-                )
-            with opener() as fh:
+            with _open(first_file, "rt", encoding=detect_encoding(first_file)) as fh:
                 data = json.load(fh)
             rec0 = (
                 next((x for x in data if isinstance(x, dict)), None)

@@ -16,6 +16,12 @@ A pipeline is a plain dict (JSON/YAML-friendly):
       "sink": {"type": "parquet", "path": "out/"},
     }
 
+A ``directory`` source takes ``ingest_directory``'s options. Its
+``mode`` only groups files into reads: ``"parity"`` (the default) or
+``"bulk"`` (one read per format, where a malformed JSON document is
+dropped instead of failing its file); ``text_parity`` (default true)
+and ``schema_mode`` apply in both.
+
 Everything stays lazy until the sink: the whole pipeline is ONE Spark
 plan, so Catalyst pushes filters into the source scan and prunes
 columns across step boundaries — steps are logical, not materialized

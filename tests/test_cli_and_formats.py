@@ -119,12 +119,8 @@ def test_orc_and_xml_ingest_roundtrip(spark, tmp_path):
         rows = df.select("id", "name", "v", "_source_file").collect()
         assert len(rows) == 4  # 2 rows from each format
         assert {r["_source_file"] for r in rows} == {"data_orc.orc", "data_xml.xml"}
-        # the all-TEXT projection is the parity-mode contract; the
-        # bulk scale path keeps native types
-        if mode == "parity":
-            assert {r["id"] for r in rows} == {"1", "2"}
-        else:
-            assert {r["id"] for r in rows} == {1, 2}
+        # the all-TEXT projection is the default in both modes
+        assert {r["id"] for r in rows} == {"1", "2"}
 
 
 def test_gzip_text_formats_ingest(spark, tmp_path):
@@ -149,8 +145,6 @@ def test_gzip_text_formats_ingest(spark, tmp_path):
     for mode in ("parity", "bulk"):
         df, report = ingest_directory(spark, d, mode=mode)
         assert report.files_processed == 3, (mode, report.errors)
-        rows = {r["id"] if mode == "bulk" else int(r["id"]): r["name"]
-                for r in df.select("id", "name").collect()}
-        # bulk json keeps native ints; parity is all-TEXT; tsv ids are text
-        rows = {int(k): v for k, v in rows.items()}
-        assert rows == {1: "a", 2: "b", 3: "c", 4: "d", 5: "e"}, (mode, rows)
+        rows = {r["id"]: r["name"] for r in df.select("id", "name").collect()}
+        # all-TEXT in both modes
+        assert rows == {"1": "a", "2": "b", "3": "c", "4": "d", "5": "e"}, (mode, rows)

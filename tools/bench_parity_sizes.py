@@ -1,6 +1,7 @@
-"""Time the CLI default path (parity ingest, then create and fill a
+"""Time the CLI (by default the parity ingest, then create and fill a
 table) on directories of large nested JSON arrays, one shape after the
-other in one Spark session (``local[2]``).
+other in one Spark session (``local[2]``). Arguments after ``--`` are
+passed to the CLI, e.g. ``-- --mode bulk --lossless``.
 
 Each shape is ``<files>x<records>``; a record is about 215 bytes, so
 ``4x20000`` is four files of 4.3 MB. Per shape the script writes the
@@ -13,6 +14,7 @@ To compare two commits, run the script once per checkout with
 which runs first:
 
     python3 tools/bench_parity_sizes.py --checkout <dir> --seed 1 8x2500 4x20000
+    python3 tools/bench_parity_sizes.py --checkout <dir> 16x4000 -- --mode bulk --lossless
 """
 
 from __future__ import annotations
@@ -61,7 +63,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--checkout", default=str(Path(__file__).resolve().parents[1]))
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--passes", type=int, default=3)
-    args = ap.parse_args(argv)
+    argv = sys.argv[1:] if argv is None else argv
+    split = argv.index("--") if "--" in argv else len(argv)
+    args, cli_args = ap.parse_args(argv[:split]), argv[split + 1:]
 
     sys.path.insert(0, args.checkout)
     os.environ["SPARK_GRAFT_CPUS"] = "2"
@@ -82,7 +86,7 @@ def main(argv: list[str] | None = None) -> int:
                 table = f"t_{shape}_{k}"
                 t0 = time.perf_counter()
                 with redirect_stdout(io.StringIO()):
-                    rc = cli.main([str(inputs), "--table", table])
+                    rc = cli.main([str(inputs), "--table", table, *cli_args])
                 dt = time.perf_counter() - t0
                 n = spark.sql(f"SELECT count(*) FROM {table}").first()[0]
                 if rc != 0 or n != files * records:
@@ -91,7 +95,8 @@ def main(argv: list[str] | None = None) -> int:
                 if k:
                     times.append(dt)
             print(json.dumps({
-                "checkout": args.checkout, "shape": shape, "file_mb": round(mb / files, 2),
+                "checkout": args.checkout, "cli_args": cli_args, "shape": shape,
+                "file_mb": round(mb / files, 2),
                 "seed": args.seed, "median_s": round(statistics.median(times), 3),
                 "runs": [round(t, 3) for t in times],
             }), flush=True)
