@@ -108,7 +108,11 @@ def main(argv: list[str] | None = None) -> int:
         print("No valid data found; nothing written.")
         return 1
 
-    sink.create_table(spark, df, args.table)
+    try:
+        sink.create_table(spark, df, args.table)
+    except ValueError as ex:  # an earlier run's table with other columns
+        print(f"error: {ex}", file=sys.stderr)
+        return 1
     n = sink.insert_data(spark, df, args.table)
     print(f"Wrote {n} rows to table '{args.table}'.")
     if args.sqlite:

@@ -11,10 +11,16 @@ one union plan. ``ingest_directory`` runs it as one pipeline; its
   Spark jobs however many files there are, each file's records exactly
   as its own read gives them (``_place``). A file the pass cannot place
   — not strictly valid JSON, empty, gzipped, over 1 MiB, a type
-  widening, or not JSON — takes the per-file reader. The pass parses
-  each file about twice as often as the file's own read does: on a
-  4-core host it won below about 1 MB per file and lost from about
-  4 MB (``tools/bench_parity_sizes.py``).
+  widening, or not JSON — takes the per-file reader. The pass parses a
+  file's text once per job: to an ``array<string>`` beside one strict
+  gate to classify it, to infer its schema (whose fields are its key
+  set), and to write it; its own read parses it twice, in a few jobs
+  of its own. Per-file reads cost jobs, the pass bytes: on a 4-core
+  host (``local[2]``, ``tools/bench_parity_sizes.py``, medians of 2-3
+  seeds, CLI ingest and write) the pass took 2.28 s at 8x5000 (1.1 MB
+  a file) against 3.40 s per file, 2.00 s at 4x10000 (2.1 MB) against
+  1.90 s, 2.76 s at 4x20000 (4.3 MB) against 2.38 s and 4.63 s at
+  2x80000 (17 MB) against 2.65 s.
 - ``bulk`` (the scale path) makes one multi-path read per format and
   layout (``read_paths``), whose schema inference reads every byte: it
   wins on few large files and loses on many small ones. JSON is read
@@ -52,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from generic_data_ingestor_framework_spark.normalize import (
+    column,
     drop_corrupt_records,
     normalize_text_parity,
 )
@@ -512,7 +519,7 @@ _PASS_GLOB = "*.{json,jsonl,ndjson}"
 # larger files take the per-file reader, which is faster once the bytes
 # outweigh a file's jobs (see the module docstring)
 _PASS_MAX_BYTES = 1024 * 1024
-_KEYS_COL = "_ingest_keys"
+_PATH_COL = "_ingest_path"  # a row's file, kept past the text projection for the mask
 _STRICT_JSON = {"allowSingleQuotes": "false"}  # Python json.load parity
 # text that may hold a field Spark's schema inference drops (an empty
 # object or an empty key): such a file's records can carry a nested
@@ -532,16 +539,19 @@ def _first_char(text: Column) -> Column:
 
 def _one_json_value(text: Column) -> Column:
     """Strict check: ``text`` is exactly one JSON value, with no
-    trailing text and no duplicate keys."""
+    trailing text and no duplicate keys. The lambda binds the one parse
+    both tests read."""
     w = F.try_parse_json(F.concat(F.lit("["), text, F.lit("]")))
-    return w.isNotNull() & F.variant_get(w, "$[1]", "variant").isNull()
+    one = lambda v: v.isNotNull() & F.variant_get(v, "$[1]", "variant").isNull()  # noqa: E731
+    return F.exists(F.array(w), one)
 
 
-def _by_path(values: dict[str, str]) -> Column:
-    """The value ``values`` (path → string) holds for the row's file,
-    NULL for any other file: one map literal looked up by ``path``."""
+def _by_path(values: dict, value_type: str = "string", path: str = "path") -> Column:
+    """The value ``values`` (path → ``value_type``) holds for the row's
+    file, NULL for any other file: one map literal looked up by the
+    row's ``path`` column."""
     lookup = json.dumps({_path_key(p): v for p, v in values.items()})
-    return F.from_json(F.lit(lookup), "map<string,string>")[F.col("path")]
+    return F.from_json(F.lit(lookup), f"map<string,{value_type}>")[F.col(path)]
 
 
 def _list_json(spark: SparkSession, directory: str | Path) -> DataFrame:
@@ -559,19 +569,32 @@ def _list_json(spark: SparkSession, directory: str | Path) -> DataFrame:
 
 def _scan_json(files: DataFrame, tags: dict[str, str], encodings: dict[str, str]) -> DataFrame:
     """``files`` kept to those in ``tags`` (path → tag): ``(path, tag,
-    text, _source_file)``. ``text`` is the file decoded with its sniffed
-    charset (from ``encodings``), BOM stripped; NULL when bytes sniffed
-    as UTF-8 are not valid UTF-8 (the sniff reads only the head).
-    ``_source_file`` is the lineage ``with_lineage`` gives."""
+    text, _source_file, arr, lines, one)``. ``text`` is the file decoded
+    with its sniffed charset (from ``encodings``), BOM stripped; NULL
+    when bytes sniffed as UTF-8 are not valid UTF-8 (the sniff reads
+    only the head). ``_source_file`` is the lineage ``with_lineage``
+    gives. The parses are columns, so each runs once per file, and only
+    for the tags that read it: ``arr``, the top-level array's elements
+    as raw JSON text (``whole``, ``mixed``); ``lines``, the non-blank
+    lines (``lines``); ``one``, the strict gate (``whole``)."""
     text = F.when(F.is_valid_utf8("content"), F.decode("content", "UTF-8"))
     other = {p: encodings[p] for p in tags if encodings[p] != "UTF-8"}
     if other:
         enc = _by_path(other)
         for e in sorted(set(other.values())):
             text = F.when(enc == e, F.decode("content", e)).otherwise(text)
+    tag, t = F.col("tag"), F.col("text")
     return with_lineage(
-        files.withColumn("tag", _by_path(tags)).where(F.col("tag").isNotNull())
-    ).select("path", "tag", F.regexp_replace(text, "^\ufeff", "").alias("text"), SOURCE_COL)
+        files.withColumn("tag", _by_path(tags)).where(tag.isNotNull())
+    ).select(
+        "path", "tag", F.regexp_replace(text, "^\ufeff", "").alias("text"), SOURCE_COL
+    ).withColumns({
+        "arr": F.when(tag.isin("whole", "mixed"), F.from_json(t, "array<string>", _STRICT_JSON)),
+        "lines": F.when(
+            tag == "lines", F.filter(F.split(t, r"\r\n|\r|\n"), lambda ln: ln.rlike(r"\S"))
+        ),
+        "one": F.when(tag == "whole", _one_json_value(t)),
+    })
 
 
 def _per_kind(kind: Column, obj: Column, arr: Column, mixed: Column, lines: Column) -> Column:
@@ -581,75 +604,69 @@ def _per_kind(kind: Column, obj: Column, arr: Column, mixed: Column, lines: Colu
     )
 
 
-class _Parts:
-    """The salvage expressions over a file's ``text``, generalized to
-    every layout. A file's kind is ``object`` (one top-level object),
-    ``array`` (every element an object, possibly none), ``mixed``
-    (objects and scalars: the scalars are dropped, as salvage drops
-    them), ``lines`` (line-delimited objects), or NULL for a file the
-    pass cannot place."""
+def _objs() -> Column:
+    """A scanned file's object elements."""
+    return F.filter(F.col("arr"), _is_obj)
 
-    def __init__(self) -> None:
-        self.text = F.col("text")
-        self.arr = F.from_json(self.text, "array<string>", _STRICT_JSON)
-        self.objs = F.filter(self.arr, _is_obj)
-        self.sample = F.slice(self.objs, 1, SALVAGE_SCHEMA_SAMPLE)
-        self.lines = F.filter(F.split(self.text, r"\r\n|\r|\n"), lambda ln: ln.rlike(r"\S"))
 
-    def kind(self, line_delimited: Column) -> Column:
-        t = self.text
-        good_line = lambda ln: (_first_char(ln) == "{") & _one_json_value(ln)  # noqa: E731
-        # Spark's reader salvages an array only when a scalar element
-        # makes the whole document corrupt; with objects, nulls and
-        # nested arrays alone it returns neither: not placed
-        scalar = F.exists(
-            self.arr, lambda e: e.isNotNull() & ~_is_obj(e) & ~F.ltrim(e).startswith("[")
-        )
-        return (
+def _classify(files: DataFrame, layout: dict[str, str], encodings: dict[str, str]) -> DataFrame:
+    """The pass's first job, the salvage generalized to every layout:
+    per file in ``layout`` (path → ``whole`` or ``lines``) its kind,
+    record and dropped counts, and whether its text may hold a field
+    schema inference drops. A file's kind is ``object`` (one top-level
+    object), ``array`` (every element an object, possibly none),
+    ``mixed`` (objects and scalars: the scalars are dropped, as salvage
+    drops them), ``lines`` (line-delimited objects), or NULL for a file
+    the pass cannot place."""
+    t, arr, lines, kind = F.col("text"), F.col("arr"), F.col("lines"), F.col("kind")
+    good_line = lambda ln: (_first_char(ln) == "{") & _one_json_value(ln)  # noqa: E731
+    # Spark's reader salvages an array only when a scalar element makes
+    # the whole document corrupt; with objects, nulls and nested arrays
+    # alone it returns neither: not placed
+    scalar = F.exists(arr, lambda e: e.isNotNull() & ~_is_obj(e) & ~F.ltrim(e).startswith("["))
+    return (
+        _scan_json(files, layout, encodings)
+        .withColumn("kind", (
             F.when(t.isNull(), None)
             .when(
-                line_delimited,
-                F.when((F.size(self.lines) > 0) & F.forall(self.lines, good_line), "lines"),
+                F.col("tag") == "lines",
+                F.when((F.size(lines) > 0) & F.forall(lines, good_line), "lines"),
             )
-            .when(~_one_json_value(t), None)
+            .when(~F.col("one"), None)
             .when(_first_char(t) == "{", "object")
-            .when((_first_char(t) == "[") & (F.size(self.objs) == F.size(self.arr)), "array")
+            .when((_first_char(t) == "[") & (F.size(_objs()) == F.size(arr)), "array")
             .when((_first_char(t) == "[") & scalar, "mixed")
+        ))
+        .select(
+            "path", "kind",
+            _per_kind(kind, F.lit(1), F.size(arr), F.size(_objs()), F.size(lines)).alias("n"),
+            F.when(kind == "mixed", F.size(arr) - F.size(_objs())).otherwise(0).alias("dropped"),
+            t.rlike(_LOSSY_TEXT).alias("lossy"),
         )
+    )
 
-    def records(self, kind: Column) -> Column:
-        return _per_kind(kind, F.lit(1), F.size(self.arr), F.size(self.objs), F.size(self.lines))
 
-    def dropped(self, kind: Column) -> Column:
-        return F.when(kind == "mixed", F.size(self.arr) - F.size(self.objs)).otherwise(0)
+def _sample_text() -> Column:
+    """Of a file scanned with its kind as tag: the records schema
+    inference sees, as one JSON array; a mixed array gives its first
+    ``SALVAGE_SCHEMA_SAMPLE`` objects, as salvage does."""
+    t = F.col("text")
+    join = lambda xs: F.concat(F.lit("["), F.array_join(xs, ","), F.lit("]"))  # noqa: E731
+    return _per_kind(
+        F.col("tag"), F.concat(F.lit("["), t, F.lit("]")), t,
+        join(F.slice(_objs(), 1, SALVAGE_SCHEMA_SAMPLE)), join(F.col("lines")),
+    )
 
-    def keys(self, kind: Column) -> Column:
-        """Top-level keys of the records the file's schema is inferred
-        from — the file's presence mask, as a data column."""
-        of = lambda xs: F.array_distinct(F.flatten(F.transform(xs, F.json_object_keys)))  # noqa: E731
-        return _per_kind(
-            kind, F.json_object_keys(self.text), of(self.arr), of(self.sample), of(self.lines)
-        )
 
-    def sample_text(self, kind: Column) -> Column:
-        """The records schema inference sees, as one JSON array; a
-        mixed array gives its first ``SALVAGE_SCHEMA_SAMPLE`` objects,
-        as salvage does."""
-        t = self.text
-        join = lambda xs: F.concat(F.lit("["), F.array_join(xs, ","), F.lit("]"))  # noqa: E731
-        return _per_kind(
-            kind, F.concat(F.lit("["), t, F.lit("]")), t, join(self.sample), join(self.lines)
-        )
-
-    def parsed(self, kind: Column, schema: T.StructType) -> Column:
-        parse = lambda x: F.from_json(x, schema, _STRICT_JSON)  # noqa: E731
-        return _per_kind(
-            kind,
-            F.array(parse(self.text)),
-            F.from_json(self.text, T.ArrayType(schema), _STRICT_JSON),
-            F.transform(self.objs, parse),
-            F.transform(self.lines, parse),
-        )
+def _parsed(schema: T.StructType) -> Column:
+    """Of a file scanned with its kind as tag: its records, parsed with
+    ``schema``."""
+    t = F.col("text")
+    parse = lambda x: F.from_json(x, schema, _STRICT_JSON)  # noqa: E731
+    return _per_kind(
+        F.col("tag"), F.array(parse(t)), F.from_json(t, T.ArrayType(schema), _STRICT_JSON),
+        F.transform(_objs(), parse), F.transform(F.col("lines"), parse),
+    )
 
 
 def _merge_types(a: T.DataType, b: T.DataType) -> T.DataType | None:
@@ -688,8 +705,9 @@ def _infer_element_types(spark: SparkSession, wrapped: DataFrame) -> dict[str, T
 @dataclass
 class _Placed:
     """What the pass owns: per file (by path) its record and dropped
-    counts, and for a file with records its kind and key set; the
-    group's merged element schema."""
+    counts, and for a file with records its kind and key set (the
+    fields of its inferred element schema: the columns its own read
+    gives); the group's merged element schema."""
 
     kind: dict[str, str] = field(default_factory=dict)
     records: dict[str, int] = field(default_factory=dict)
@@ -720,31 +738,16 @@ def _place(
         encodings={p: detect_encoding(p) for p in candidates},
         files=_list_json(spark, directory),
     )
-    parts = _Parts()
     layout = {p: "lines" if _line_delimited(p) else "whole" for p in candidates}
-    rows = (
-        _scan_json(out.files, layout, out.encodings)
-        .withColumn("kind", parts.kind(F.col("tag") == "lines"))
-        .select(
-            "path", "kind",
-            parts.records(F.col("kind")).alias("n"),
-            parts.dropped(F.col("kind")).alias("dropped"),
-            parts.keys(F.col("kind")).alias("keys"),
-            F.col("text").rlike(_LOSSY_TEXT).alias("lossy"),
-        )
-        .collect()
-    )
+    rows = _classify(out.files, layout, out.encodings).collect()
     by_key = {r["path"]: r for r in rows if r["kind"] is not None}
     found = {p: by_key[_path_key(p)] for p in candidates if _path_key(p) in by_key}
     nonempty = {p: r["kind"] for p, r in found.items() if r["n"] > 0}
     elem: dict[str, T.DataType] = {}
     if nonempty:
         name = F.regexp_extract(F.to_json(F.array("path")), r"^\[(.*)\]$", 1)
-        wrapped = (
-            _scan_json(out.files, nonempty, out.encodings)
-            .select(F.concat(
-                F.lit("{"), name, F.lit(":"), parts.sample_text(F.col("tag")), F.lit("}")
-            ))
+        wrapped = _scan_json(out.files, nonempty, out.encodings).select(
+            F.concat(F.lit("{"), name, F.lit(":"), _sample_text(), F.lit("}"))
         )
         elem = _infer_element_types(spark, wrapped)
 
@@ -756,7 +759,7 @@ def _place(
     merged: dict[str, T.DataType] = {}
     names: dict[str, str] = {}  # lower-cased → name: Spark resolves names case-insensitively
     pinned: set[str] = set()  # keys a strict file holds: their type must not change
-    reserved = {CORRUPT_COL, SOURCE_COL, _KEYS_COL}
+    reserved = {CORRUPT_COL, SOURCE_COL, _PATH_COL}
     for p, r in found.items():
         if r["n"] == 0:  # valid but no records: counted, nothing to merge
             out.records[p], out.dropped[p] = 0, r["dropped"]
@@ -767,9 +770,8 @@ def _place(
         fields = {f.name: f.dataType for f in t.elementType.fields}
         if (
             not fields
-            or set(fields) != set(r["keys"] or ())
             or len({n.lower() for n in fields}) < len(fields)
-            or any(n in reserved or "." in n or "`" in n for n in fields)
+            or not reserved.isdisjoint(fields)
             or any(names.get(n.lower(), n) != n for n in fields)
         ):
             continue
@@ -800,31 +802,25 @@ def _place(
 
 def _project(placed: _Placed, files: list[str], text_parity: bool) -> DataFrame:
     """The shared ``from_json`` + ``inline`` projection of ``files``,
-    all-TEXT when ``text_parity``. A key absent from a whole file stays
-    NULL for its rows (a present null becomes ``""``); lineage last."""
+    all-TEXT when ``text_parity``. A column outside a file's key set
+    stays NULL for its rows (a present null becomes ``""``); lineage
+    last."""
     schema = placed.schema
-    masked = [n for n in schema.fieldNames() if not all(n in placed.keys[p] for p in files)]
-    parts = _Parts()
-    kind = F.col("tag")
+    masked = {n for n in schema.fieldNames() if not all(n in placed.keys[p] for p in files)}
     # a mixed array keeps the lineage salvage pins: the file's name as
     # listed, where input_file_name() gives it URL-encoded
-    source = F.when(kind == "mixed", F.element_at(F.split("path", "/"), -1))
-    cols = [
-        F.inline(parts.parsed(kind, schema)),
+    source = F.when(F.col("tag") == "mixed", F.element_at(F.split("path", "/"), -1))
+    df = _scan_json(placed.files, {p: placed.kind[p] for p in files}, placed.encodings).select(
+        F.inline(_parsed(schema)),
         source.otherwise(F.col(SOURCE_COL)).alias(SOURCE_COL),
-    ]
-    if masked:
-        cols.append(F.to_json(parts.keys(kind)).alias(_KEYS_COL))
-    df = _scan_json(placed.files, {p: placed.kind[p] for p in files}, placed.encodings)
-    df = df.select(*cols)
+        F.col("path").alias(_PATH_COL),
+    )
     if text_parity:
         df = normalize_text_parity(df)
-    if not masked:
-        return df
-    has = F.from_json(_KEYS_COL, "array<string>")
+    has = _by_path({p: sorted(placed.keys[p]) for p in files}, "array<string>", _PATH_COL)
     return df.select(
         *[
-            F.when(F.array_contains(has, n), F.col(n)).alias(n) if n in masked else F.col(n)
+            F.when(F.array_contains(has, n), column(n)).alias(n) if n in masked else column(n)
             for n in schema.fieldNames()
         ],
         SOURCE_COL,
@@ -840,7 +836,7 @@ def _count_rows(frames: list[tuple[DataFrame, bool]]) -> list[int | Exception]:
         # a JSON frame's count reads one data column: with only the
         # corrupt-record column left to scan Spark refuses the count.
         # to_json takes any type and, unlike isNull, is not folded away
-        data = [F.col("`" + c.replace("`", "``") + "`") for c in f.columns if c != SOURCE_COL]
+        data = [column(c) for c in f.columns if c != SOURCE_COL]
         h = F.length(F.to_json(F.struct(data[0]))) if is_json and data else F.lit(0)
         return f.select(F.lit(i).alias("i"), h.alias("h"))
 
@@ -899,10 +895,10 @@ def _as_text(frames: list[DataFrame]) -> list[DataFrame]:
     return [
         f.select(*[
             (
-                F.to_json(f[fl.name]) if isinstance(fl.dataType, complex_types)
-                else f[fl.name].cast("string")
+                F.to_json(column(fl.name)) if isinstance(fl.dataType, complex_types)
+                else column(fl.name).cast("string")
             ).alias(fl.name)
-            if fl.name.lower() in text else f[fl.name]
+            if fl.name.lower() in text else column(fl.name)
             for fl in schema.fields
         ])
         for f, schema in zip(frames, schemas)
@@ -927,7 +923,7 @@ def unify_schema_first_record(df: DataFrame, first_file: str | Path | None = Non
     is indistinguishable from an absent key — all are dropped."""
     first = df.limit(1).collect()  # one row by contract, like the reference
     if not first:
-        return df.select([c for c in df.columns if c != SOURCE_COL])
+        return df.select([column(c) for c in df.columns if c != SOURCE_COL])
     row = first[0].asDict()
     cols = [
         c for c in df.columns if c != SOURCE_COL and row.get(c) not in (None, "")
@@ -946,7 +942,7 @@ def unify_schema_first_record(df: DataFrame, first_file: str | Path | None = Non
                 cols.sort(key=lambda c: order.get(c, len(order)))
         except Exception:  # noqa: BLE001 — unreadable head file: keep inference order
             pass
-    return df.select(*cols)
+    return df.select(*map(column, cols))
 
 
 def unify_schema_sorted(df: DataFrame) -> DataFrame:
@@ -956,7 +952,7 @@ def unify_schema_sorted(df: DataFrame) -> DataFrame:
     cols = sorted(c for c in df.columns if c != SOURCE_COL)
     if SOURCE_COL in df.columns:
         cols.append(SOURCE_COL)
-    return df.select(*cols)
+    return df.select(*map(column, cols))
 
 
 def infer_schema_sample(df: DataFrame, sample: int = 10) -> list[dict]:

@@ -29,6 +29,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def column(name: str) -> Column:
+    """The column named ``name``, read literally: a dot or backtick in
+    a JSON key is part of the name, not a struct path."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def _normalize_column(col: Column, dtype: T.DataType) -> Column:
     """Reference normalization for one column, as a pure expression."""
     if isinstance(dtype, (T.StructType, T.ArrayType, T.MapType)):
@@ -47,7 +53,7 @@ def normalize_text_parity(df: DataFrame, keep_columns: list[str] | None = None) 
     """A7: the all-TEXT parity projection (single codegen'd select)."""
     cols = keep_columns or df.columns
     return df.select(
-        *[_normalize_column(F.col(c), df.schema[c].dataType).alias(c) for c in cols]
+        *[_normalize_column(column(c), df.schema[c].dataType).alias(c) for c in cols]
     )
 
 

@@ -28,6 +28,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def attach_table(spark: SparkSession, table: str) -> bool:
+    """Register ``table`` if an earlier process left it under its
+    database's directory in the warehouse: the session catalog is
+    in-memory, so a new process starts without the tables earlier ones
+    wrote. Metadata only, over the files as they are; the schema is read
+    from them. The table is then external: dropping it keeps its files.
+    Returns whether such a table was found."""
+    db, _, name = table.rpartition(".")
+    location = spark.catalog.getDatabase(db or spark.catalog.currentDatabase()).locationUri
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(location.rstrip("/") + "/" + name.lower())
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return False
+    spark.catalog.createTable(table, path=jpath.toString())
+    return True
+
+
 def create_table(
     spark: SparkSession, df: DataFrame, table: str, if_not_exists: bool = True
 ) -> bool:
@@ -35,8 +51,16 @@ def create_table(
     in the session's default format. Metadata only: no job runs and no
     file is written (columns are nullable, as ``saveAsTable`` makes
     them). ``if_not_exists=False`` raises on an existing table.
+    With ``if_not_exists``, a table an earlier process wrote is attached
+    instead (``attach_table``, which reads its schema from its files),
+    so a re-run appends to it, as the reference's SQLite file does; a
+    table whose columns are not ``df``'s raises ``ValueError``.
     Returns True if the table exists after the call."""
-    if not (if_not_exists and spark.catalog.tableExists(table)):
+    if if_not_exists and (spark.catalog.tableExists(table) or attach_table(spark, table)):
+        have = spark.table(table).columns
+        if sorted(c.lower() for c in have) != sorted(c.lower() for c in df.columns):
+            raise ValueError(f"table {table} has columns {have}; this data has {df.columns}")
+    else:
         spark.catalog.createTable(table, schema=df.schema)
     return spark.catalog.tableExists(table)
 

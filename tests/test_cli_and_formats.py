@@ -58,6 +58,59 @@ def test_cli_end_to_end(tmp_path):
     assert "cli_out" in out.stdout
 
 
+def test_cli_rerun_appends_to_the_table_an_earlier_process_wrote(tmp_path):
+    """Each process starts with an empty session catalog; the table an
+    earlier run left under the warehouse is attached and appended to,
+    by the CLI and by the pipeline's table sink, and read by a later
+    process. The data holds a dot-named key, in both modes."""
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "dot.json").write_text(json.dumps({"a.b": 1, "c": "x"}))
+    (data / "plain.json").write_text(json.dumps({"c": "z"}))
+    wh = str(tmp_path / "wh")
+
+    def run(*args):
+        return subprocess.run(
+            [sys.executable, *args], capture_output=True, text=True, cwd=REPO, timeout=300
+        )
+
+    def cli(directory, *args):
+        return run(
+            "-m", "generic_data_ingestor_framework_spark", str(directory),
+            "--warehouse", wh, "--table", "t", *args,
+        )
+
+    for mode in ("parity", "bulk"):
+        out = cli(data, "--mode", mode)
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert "Files processed:  2" in out.stdout and "Wrote 2 rows" in out.stdout
+        assert "Traceback" not in out.stderr and "DataFrameQueryContextLogger" not in out.stderr
+    out = run("-c", f"""
+import json
+from generic_data_ingestor_framework_spark.pipeline import run_pipeline
+from generic_data_ingestor_framework_spark.session import get_spark
+spark = get_spark(extra_conf={{"spark.sql.warehouse.dir": {wh!r}}})
+run_pipeline(spark, {{"source": {{"type": "directory", "path": {str(data)!r}}},
+                      "sink": {{"type": "table", "name": "t"}}}})
+print(json.dumps(sorted(map(list, spark.table("t").select("c", "`a.b`").collect()), key=str)))
+""")
+    assert out.returncode == 0, out.stderr[-2000:]
+    # bulk gives the absent key "" (one read of both files), parity NULL
+    assert json.loads(out.stdout.splitlines()[-1]) == [
+        ["x", "1"], ["x", "1"], ["x", "1"], ["z", ""], ["z", None], ["z", None]
+    ]
+    # another key set: the reference's insert fails on the new column
+    other = tmp_path / "other"
+    other.mkdir()
+    (other / "d.json").write_text(json.dumps({"c": "y", "d": 1}))
+    out = cli(other)
+    assert out.returncode == 1 and "Traceback" not in out.stderr
+    assert [ln for ln in out.stderr.splitlines() if "error" in ln.lower()] == [
+        "error: table t has columns ['a.b', 'c', '_source_file']; "
+        "this data has ['c', 'd', '_source_file']"
+    ]
+
+
 def test_cli_missing_dir_exit_code(tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "generic_data_ingestor_framework_spark", str(tmp_path / "nope")],

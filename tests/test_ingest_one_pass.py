@@ -117,8 +117,11 @@ def hostile_dir(tmp_path_factory):
     # nested fields that differ between files
     _write(d / "sub" / "nest_a.json", json.dumps([{"id": "na", "addr": {"street": "s"}}]))
     _write(d / "sub" / "nest_b.json", json.dumps([{"id": "nb", "addr": {"street": "t", "zip": 5}}]))
-    # empty objects, which schema inference drops
+    # empty objects, which schema inference drops: "e" and "addr" are
+    # not columns of this file's own read, so its rows hold NULL there
+    # though other files give both columns
     _write(d / "lossy.json", json.dumps([{"id": "lo", "e": {}, "addr": {"x": {}}}]))
+    _write(d / "e_obj.json", json.dumps([{"id": "eo", "e": {"k": 1}}]))
     _write(d / "bom.json", "\ufeff" + json.dumps([{"id": "bo", "v": 7}]))
     # names that input_file_name() gives URL-encoded
     _write(d / "a b.json", json.dumps([{"id": "sp", "v": 8}]))
@@ -150,10 +153,10 @@ def hostile_dir(tmp_path_factory):
 
 # not strictly valid JSON, empty, gzipped, too large, or a type the
 # group cannot take: "v" widened to a double, "o" a string after an
-# object, and a file whose empty objects the inference drops
+# object
 _FALLBACK = [
     "broken.json", "trailing.json", "lines.jsonl", "zero.json", "gz.json.gz", "large.json",
-    "w_float.json", "o_str.json", "lossy.json",
+    "w_float.json", "o_str.json",
 ]
 
 
@@ -164,6 +167,8 @@ def test_one_pass_matches_per_file_pipeline(spark, hostile_dir, monkeypatch):
     assert rows["nn"]["z"] == "" and rows["wi"]["z"] is None
     assert rows["la"]["city"] == "Besançon"
     assert rows["b115"]["late"] is None and rows["lt"]["late"] == "kept"
+    assert rows["lo"]["e"] is None and rows["lo"]["addr"] is None
+    assert json.loads(rows["eo"]["e"]) == {"k": 1}
     assert {"bo", "l1", "l2", "m1", "m2", "gz", "tr"} <= set(rows)
     names = {rows[i]["_source_file"] for i in ("sp", "pc", "dm")}
     assert names == {"a%20b.json", "pct%2541.json", "données mixtes.json"}
@@ -190,6 +195,21 @@ def test_one_pass_lossless_matches_per_file_pipeline(spark, hostile_dir, tmp_pat
     fallback = [n for n in _FALLBACK if not n.startswith("o_")] + ["nest_b.json", "maps.parquet"]
     df = _assert_same(spark, tmp_path, monkeypatch, fallback, text_parity=False)
     assert df.where("m IS NOT NULL").count() == 3
+
+
+def test_classify_parses_each_file_once(spark, tmp_path):
+    # every column of the classify job reads one parse of the file's
+    # text, and one strict gate: of a whole file, or of each line
+    _write(tmp_path / "mixed.json", json.dumps([{"id": 1}, 2, {"k": 3}]))
+    _write(tmp_path / "lines.jsonl", '{"id": 4}\n{"k": 5}\n')
+    layout = {str(tmp_path / "mixed.json"): "whole", str(tmp_path / "lines.jsonl"): "lines"}
+    q = ingest._classify(ingest._list_json(spark, tmp_path), layout, {p: "UTF-8" for p in layout})
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 1
+    assert plan.count("parseJson(") == 2
+    assert sorted((r["kind"], r["n"], r["dropped"]) for r in q.collect()) == [
+        ("lines", 2, 0), ("mixed", 2, 1)
+    ]
 
 
 def test_one_pass_first_record_comes_from_first_file(spark, tmp_path, monkeypatch):

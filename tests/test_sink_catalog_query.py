@@ -48,6 +48,22 @@ def test_create_table_is_metadata_only(spark):
     assert sink.insert_data(spark, df, "t_meta_only") == 3
 
 
+def test_attach_table_an_earlier_process_left(spark, small_df):
+    # files under the warehouse that this session's catalog does not
+    # know, as a new process finds an earlier one's table
+    location = spark.catalog.getDatabase("default").locationUri + "/t_left_behind"
+    small_df.write.parquet(location)
+    assert not spark.catalog.tableExists("t_left_behind")
+    assert sink.attach_table(spark, "t_left_behind")
+    assert query.count_rows(spark, "t_left_behind") == 3
+    assert sink.create_table(spark, small_df, "t_left_behind")
+    assert sink.insert_data(spark, small_df, "t_left_behind") == 3
+    assert query.count_rows(spark, "t_left_behind") == 6
+    with pytest.raises(ValueError, match="has columns"):
+        sink.create_table(spark, small_df.select("id"), "t_left_behind")
+    assert not sink.attach_table(spark, "t_never_written")
+
+
 def test_catalog_introspection(spark, small_df):
     t = "t_catalog_probe"
     sink.create_table(spark, small_df, t)

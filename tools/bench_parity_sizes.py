@@ -7,7 +7,9 @@ Each shape is ``<files>x<records>``; a record is about 215 bytes, so
 ``4x20000`` is four files of 4.3 MB. Per shape the script writes the
 files from ``--seed``, runs the CLI once untimed and ``--passes`` times
 timed (each into a fresh table, checked for its row count, then
-dropped) and prints one JSON line with the median and every run.
+dropped) and prints one JSON line with the median, every run's time
+and, beside it, the Spark jobs that run started (one job group per
+run): a sweep over file counts shows where jobs grow with files.
 
 To compare two commits, run the script once per checkout with
 ``--checkout`` naming the tree whose package is imported, alternating
@@ -75,30 +77,34 @@ def main(argv: list[str] | None = None) -> int:
 
     work = Path(tempfile.mkdtemp(prefix="parity_sizes_"))
     spark = get_spark("parity-sizes", extra_conf={"spark.sql.warehouse.dir": str(work / "wh")})
+    sc = spark.sparkContext
     try:
         for shape in args.shapes:
             files, records = map(int, shape.split("x"))
             inputs = work / f"in_{shape}"
             _write_shape(inputs, files, records, random.Random(args.seed))
             mb = sum(p.stat().st_size for p in inputs.iterdir()) / 2**20
-            times = []
+            times, jobs = [], []
             for k in range(args.passes + 1):
                 table = f"t_{shape}_{k}"
+                sc.setJobGroup(table, f"bench_parity_sizes {shape} run {k}")
                 t0 = time.perf_counter()
                 with redirect_stdout(io.StringIO()):
                     rc = cli.main([str(inputs), "--table", table, *cli_args])
                 dt = time.perf_counter() - t0
+                sc.setLocalProperty("spark.jobGroup.id", None)
                 n = spark.sql(f"SELECT count(*) FROM {table}").first()[0]
                 if rc != 0 or n != files * records:
                     raise SystemExit(f"{shape}: rc={rc} rows={n}, expected {files * records}")
                 spark.sql(f"DROP TABLE {table}")
                 if k:
                     times.append(dt)
+                    jobs.append(len(sc.statusTracker().getJobIdsForGroup(table)))
             print(json.dumps({
                 "checkout": args.checkout, "cli_args": cli_args, "shape": shape,
                 "file_mb": round(mb / files, 2),
                 "seed": args.seed, "median_s": round(statistics.median(times), 3),
-                "runs": [round(t, 3) for t in times],
+                "runs": [round(t, 3) for t in times], "jobs": jobs,
             }), flush=True)
     finally:
         spark.stop()
