@@ -40,7 +40,9 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from generic_data_ingestor_framework_spark.llm import indexstore
 from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.session import local_relation
 
 MOD = 1_000_000_007
 N_PERM = 8
@@ -674,327 +676,47 @@ def bands_per_row(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     return sig.select(id_col, F.explode(band_keys).alias("band_key"))
 
 
-def save_band_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a corpus's near-dup history as a hash-BUCKETED table of
-    DISTINCT band keys — the cross-RUN completion of
-    ``dedup_incremental_near`` (whose history lives for one session).
-    The index stores only band keys (≤4 short strings per document,
-    deduplicated), so a trillion-document history stays a compact
-    relation; bucketing on ``band_key`` makes every future
-    ``dedup_against_band_index`` probe shuffle-free on the history
-    side — only the (small) new batch moves. ``mode="append"`` adds a
-    run's admitted documents to the history (see
-    ``update_band_index``)."""
-    bands = bands_per_row(docs, id_col, text_col).select("band_key").distinct()
-    writer = bands.write.mode(mode).bucketBy(n_buckets, "band_key")
-    writer.saveAsTable(table)
+# ---------------------------------------------------------------------------
+# Cross-run band index: the near-dup payload of ``indexstore``
+# ---------------------------------------------------------------------------
+#
+# The corpus's near-dup history persists as per-document band keys
+# ``(doc_id, band_key)`` in the index store at a root: seeded at
+# generation 0, grown by generation-0 batches of each crawl's admitted
+# documents, and maintained by supersedes (a re-crawled CHANGED doc's
+# new bands at a later generation) and tombstones (a GONE doc). Probes
+# read the store's effective view (latest generation wins); compaction
+# physically drops superseded and tombstoned rows. At 100 TB only the
+# root changes (an object-store path instead of a local one).
+
+BAND_INDEX = indexstore.Family(
+    name="band",
+    id_col="doc_id",
+    deltas=("bands",),
+    # NULL-band marker rows (see _band_rows) retire old bands; they
+    # never match a probe and are dropped at compaction, as are the
+    # duplicate rows a generation-0 append re-run after a compaction
+    # (or replayed by a crash mid-compaction) adds
+    live=lambda v: v.filter("band_key IS NOT NULL").dropDuplicates(),
+)
 
 
-def update_band_index(
-    spark: SparkSession,
-    admitted: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 32,
-    skip_existing: bool = False,
-) -> None:
-    """Append a run's ADMITTED documents' band keys to the history
-    index (same bucketing — appended files land in matching buckets,
-    so the probe join stays shuffle-free on the history side).
-
-    ``skip_existing`` anti-joins the admitted bands against the current
-    index before appending, so a caller that cannot know whether a
-    previous attempt already appended (the pipeline's completed-run
-    re-execution path) converges instead of accumulating duplicate band
-    rows on every re-run. Duplicates are semantically harmless to the
-    semi-join probe but grow the index and its probe cost unboundedly.
-    The anti-join reads the bucketed index in place (no shuffle on the
-    history side) and only the batch-sized admitted bands move."""
-    if skip_existing:
-        bands = (
-            bands_per_row(admitted, id_col, text_col)
-            .select("band_key")
-            .distinct()
-            .join(spark.table(table), "band_key", "anti")
-        )
-        bands.write.mode("append").bucketBy(n_buckets, "band_key").saveAsTable(table)
-        return
-    save_band_index(
-        spark, admitted, table, id_col, text_col, n_buckets, mode="append"
-    )
-
-
-def compact_band_index(
-    spark: SparkSession, table: str, n_buckets: int = 32
-) -> int:
-    """Rewrite the band-index table as DISTINCT band keys in fresh
-    bucketed files — the band-side analogue of ``compact_ann_index``.
-    Every crawl's append lands one small file per bucket, so after many
-    crawls the probe side opens crawl-count × bucket-count files; and
-    appends may carry duplicate band keys (pre-``skip_existing``
-    retries, keys shared by multiple admitted docs across runs), which
-    cost probe work while adding nothing — the index's semantic is a
-    SET. Compaction materializes the distinct keys (localCheckpoint,
-    so the overwrite does not read the table it is replacing), then
-    rewrites the table with the SAME bucketing — probes stay
-    shuffle-free on the history side and results are identical.
-    Returns the compacted row count. Single-writer contract (see
-    ``_reset_managed_table``)."""
-    bands = spark.table(table).select("band_key").distinct().localCheckpoint(
-        eager=True
-    )
-    bands.write.mode("overwrite").bucketBy(n_buckets, "band_key").saveAsTable(table)
-    return spark.table(table).count()
-
-
-def dedup_against_band_index(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+def _band_rows(
+    docs: DataFrame, gen: int, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Cross-RUN near-duplicate dedup: the admitted subset of
-    ``new_docs`` against a SAVED band index (``save_band_index``) —
-    the every-crawl loop: load yesterday's index, drop near-dups of
-    history AND of earlier (min-id) batch docs, append the survivors'
-    bands back (``update_band_index``), repeat tomorrow.
-
-    Same contract as ``dedup_incremental_near``: rejected when any
-    band key exists in the history (semi join — the bucketed index
-    side reads in place, no shuffle) or was claimed by a smaller-id
-    batch doc (window over the batch's own band rows — batch-sized);
-    docs with no shingles carry no signature and are not admitted."""
-    from pyspark.sql import Window as W
-
-    idx = spark.table(table)
-    # Eager checkpoint (r14 opt, guide §2.4): nb is referenced by hit,
-    # loser AND signed — three copies of the tokenize→minhash pipeline
-    # in one plan (Catalyst does not share common subtrees across
-    # joins). Materializing it once turns the probe into three block
-    # reads of a batch-sized relation.
-    nb = bands_per_row(
-        new_docs.select(id_col, text_col), id_col, text_col
-    ).localCheckpoint(eager=True)
-    hit = nb.join(idx, "band_key", "semi").select(id_col).distinct()
-    w = W.partitionBy("band_key").orderBy(id_col)
-    loser = (
-        nb.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") > 1)
-        .select(id_col)
-        .distinct()
-    )
-    signed = nb.select(id_col).distinct()
-    return (
-        new_docs.join(signed, id_col, "semi")
-        .join(hit, id_col, "anti")
-        .join(loser, id_col, "anti")
-    )
-
-
-def _clear_stale_location(spark: SparkSession, table: str) -> None:
-    """Cheap pre-write guard for a table the caller is ABOUT TO
-    OVERWRITE: when the table is already registered, do nothing (the
-    overwrite owns the swap — dropping it first just doubles the
-    metastore round-trips); when a previous PROCESS left its warehouse
-    directory behind without a metastore entry, delete the directory so
-    ``saveAsTable`` does not refuse with LOCATION_ALREADY_EXISTS.
-    NOT a substitute for ``_reset_managed_table`` where the caller
-    needs the table GONE (e.g. the pipeline's admitted-table existence
-    check uses presence as a completed-run marker)."""
-    from generic_data_ingestor_framework_spark.fileops import hadoop_delete
-
-    # location inference below assumes an UNQUALIFIED default-database
-    # name (<warehouse>/<lowercased name>); a qualified db.table would
-    # compute a wrong path — at best a no-op, at worst deleting an
-    # unrelated directory named like the qualified string (r14 ADVICE)
-    if "." in table:
-        raise ValueError(
-            f"_clear_stale_location expects an unqualified default-db "
-            f"table name, got {table!r}"
-        )
-    if spark.catalog.tableExists(table):
-        return
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    hadoop_delete(spark, f"{wh}/{table.lower()}")
-
-
-def _ensure_empty_delta(spark: SparkSession, delta_table: str) -> None:
-    """Reset a versioned-index DELTA table to empty: TRUNCATE when a
-    schema-compatible table already exists (one catalog op, no Spark
-    job — the common warm path), else create it fresh (clearing any
-    stale location first). Compatibility compares field TYPES as well
-    as names (r14 ADVICE: a name-only check would TRUNCATE-and-reuse a
-    foreign table whose matching names carry different types, and later
-    generation-tagged appends would fail or silently coerce)."""
-    expected = [
-        (c.split()[0], c.split(" ", 1)[1].replace(" ", ""))
-        for c in _BAND_DELTA_SCHEMA.split(", ")
-    ]
-    if (
-        spark.catalog.tableExists(delta_table)
-        and [
-            (f.name, f.dataType.simpleString())
-            for f in spark.table(delta_table).schema.fields
-        ]
-        == expected
-    ):
-        spark.sql(f"TRUNCATE TABLE {delta_table}")
-        return
-    _reset_managed_table(spark, delta_table)
-    spark.createDataFrame([], _BAND_DELTA_SCHEMA).write.mode("overwrite").saveAsTable(
-        delta_table
-    )
-
-
-def _reset_managed_table(spark: SparkSession, table: str) -> None:
-    """Drop a managed table AND its warehouse location. A previous
-    PROCESS can leave the directory behind while the current session's
-    metastore has no such table — ``saveAsTable`` then refuses even
-    overwrite mode (LOCATION_ALREADY_EXISTS). Storage-agnostic via the
-    Hadoop FileSystem API (local path in tests, object store at
-    scale).
-
-    SINGLE-WRITER contract: callers that reset-and-rebuild fixed table
-    names (``band_index_crawl``'s per-sf crawl tables) assume one
-    writer per warehouse at a time — two sessions sharing a warehouse
-    and running the same member concurrently would corrupt each
-    other's tables mid-read. Production crawl loops own their index
-    table names per pipeline (``pipeline.dedup_near_index``), where
-    the admitted-table existence check already serializes re-runs; the
-    gate member keeps fixed names so its oracle stays reproducible."""
-    from generic_data_ingestor_framework_spark.fileops import hadoop_delete
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    hadoop_delete(spark, f"{wh}/{table.lower()}")
-
-
-def band_index_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cross-run crawl loop driven END-TO-END through the
-    PERSISTED band index — the gate member for ``save_band_index`` /
-    ``dedup_against_band_index`` / ``update_band_index``
-    (batch-equality pytests prove each step; this member drives the
-    full save → probe → append → probe cycle through the bucketed
-    TABLE, so a regression in the persisted path — bucket layout,
-    append mode, semi-join claim order — flips the driver gate, not
-    just a unit test).
-
-    The corpus splits into three hash runs: run 0 seeds the index
-    (``save_band_index``, overwrite → idempotent re-runs), run 1
-    probes it and its admitted docs are WRITTEN to a table and
-    appended to the index (reading the admitted set back from its
-    table is the production shape — each crawl's output is durable —
-    and pins the probe result against the index append that follows
-    it in the same plan), run 2 probes the grown index. Output: the
-    admitted (doc_id, lang) of both runs, tagged ``run`` 1/2.
-
-    Scale shape: the index side of every probe is the bucketed
-    band-key table (never shuffles); only batch-sized relations move.
-    At 100 TB the only change is the table location (a real
-    warehouse path instead of the local metastore)."""
-    d = load_table(spark, sf_dir, "documents")
-    run = portable_hash32(F.col("doc_id").cast("string")) % 3
-    from generic_data_ingestor_framework_spark.fileops import sf_tag
-
-    tag = sf_tag(sf_dir)
-    idx_tbl = f"band_crawl_idx_{tag}"
-    adm_tbl = f"band_crawl_adm1_{tag}"
-    run0 = d.filter(run == 0).select("doc_id", "text")
-    run1 = d.filter(run == 1).select("doc_id", "lang", "text")
-    run2 = d.filter(run == 2).select("doc_id", "lang", "text")
-    # both tables are rewritten in OVERWRITE mode below; only a
-    # stale dir-without-table from a foreign process needs clearing
-    _clear_stale_location(spark, idx_tbl)
-    _clear_stale_location(spark, adm_tbl)
-    save_band_index(spark, run0, idx_tbl)
-    adm1 = dedup_against_band_index(spark, run1, idx_tbl)
-    adm1.write.mode("overwrite").saveAsTable(adm_tbl)
-    adm1_saved = spark.table(adm_tbl)
-    update_band_index(spark, adm1_saved, idx_tbl)
-    adm2 = dedup_against_band_index(spark, run2, idx_tbl)
-    return adm1_saved.select("doc_id", "lang", F.lit(1).alias("run")).unionAll(
-        adm2.select("doc_id", "lang", F.lit(2).alias("run"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Versioned band index: DELETE/SUPERSEDE for re-crawled documents
-# ---------------------------------------------------------------------------
-#
-# The plain band index (`save_band_index`) is a SET of distinct band
-# keys — compact, but a crawl loop that RE-visits a changed document
-# can only add its new bands; the stale ones stay forever, accumulating
-# false-near-dup hits and probe cost. The versioned index is the LSM
-# answer: a bucketed BASE table `(doc_id, band_key, gen)` carrying doc
-# attribution, plus a small DELTA table `(doc_id, band_key, gen,
-# tombstone)` receiving generation-tagged supersedes and deletes.
-# Probes take latest-generation-wins; compaction folds the delta into
-# the base and PHYSICALLY DROPS superseded/tombstoned rows.
-#
-# Scale shape: the base never shuffles at probe time — the semi join on
-# band_key reads the bucketed table in place, and masking superseded
-# docs is a broadcast anti join against the delta's doc set
-# (batch-sized: only docs touched since the last compaction). The delta
-# itself is broadcast into its own semi join. Compaction is the one
-# full-index rewrite (that is what major compaction means) and restores
-# the zero-delta probe path.
-
-_BAND_DELTA_SCHEMA = "doc_id bigint, band_key string, gen int, tombstone boolean"
-
-
-def save_band_index_versioned(
-    spark: SparkSession,
-    docs: DataFrame,
-    base_table: str,
-    delta_table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 32,
-) -> None:
-    """Seed a VERSIONED band index: base rows at generation 0 (per-doc
-    band attribution, bucketed by band_key so probes stay shuffle-free
-    on the history side) plus an empty delta table."""
-    rows = bands_per_row(docs, id_col, text_col).select(
-        F.col(id_col).alias("doc_id"), "band_key", F.lit(0).alias("gen")
-    )
-    rows.write.mode("overwrite").bucketBy(n_buckets, "band_key").saveAsTable(
-        base_table
-    )
-    _ensure_empty_delta(spark, delta_table)
-
-
-def supersede_band_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    delta_table: str,
-    gen: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Register re-crawled CHANGED content: the docs' NEW bands land in
-    the delta at generation ``gen``; latest-generation-wins probes stop
-    seeing their old bands immediately, compaction drops them
-    physically. A doc whose new content carries no shingle signature
+    """``(doc_id, band_key)`` rows of ``docs``. In a supersede
+    (``gen > 0``) a doc whose new content carries no shingle signature
     still gets a NULL-band marker row, so its old bands die too (the
     band set of unshingleable content is empty, not "unchanged")."""
     bands = bands_per_row(docs, id_col, text_col).select(
         F.col(id_col).alias("doc_id"), "band_key"
     )
+    if not gen:
+        return bands
     # a doc has no bands IFF its token count is < SHINGLE_K (the
     # bands_per_row admission rule: >= k tokens produce >= 1 shingle) —
     # deriving the markers from that filter avoids re-running the whole
     # tokenize→minhash pipeline a second time just to anti-join it
-    # (r14 opt; same rows as the previous anti join by construction)
     marker = (
         docs.select(
             F.col(id_col).alias("doc_id"),
@@ -1003,87 +725,89 @@ def supersede_band_index(
         .filter(F.col("__ntok") < SHINGLE_K)
         .select("doc_id", F.lit(None).cast("string").alias("band_key"))
     )
-    rows = (
-        bands.unionByName(marker)
-        .withColumn("gen", F.lit(gen))
-        .withColumn("tombstone", F.lit(False))
+    return bands.unionByName(marker)
+
+
+def save_band_index_versioned(
+    spark: SparkSession,
+    docs: DataFrame,
+    root: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> None:
+    """Seed the band index at ``root`` with ``docs``' band keys at
+    generation 0, replacing any earlier index there."""
+    BAND_INDEX.save(spark, root, {"bands": _band_rows(docs, 0, id_col, text_col)})
+
+
+def supersede_band_index(
+    spark: SparkSession,
+    docs: DataFrame,
+    root: str,
+    batch_tag: str,
+    gen: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> None:
+    """Write ``docs``' band keys as the batch ``batch_tag``. At
+    generation 0 it appends NEW documents (a crawl's admitted docs);
+    at ``gen > 0`` it registers re-crawled CHANGED content: the docs'
+    old bands stop matching immediately and compaction drops them.
+    ``gen`` must exceed every generation written for these docs. A
+    retry under the same tag replaces its own batch."""
+    BAND_INDEX.write_batch(
+        spark, root, batch_tag, {"bands": _band_rows(docs, gen, id_col, text_col)}, gen
     )
-    rows.write.mode("append").saveAsTable(delta_table)
 
 
 def delete_band_index_docs(
-    spark: SparkSession, ids: DataFrame, delta_table: str, gen: int,
+    spark: SparkSession, ids: DataFrame, root: str, batch_tag: str, gen: int,
     id_col: str = "doc_id",
 ) -> None:
     """Tombstone documents out of the index at generation ``gen`` (the
-    crawl loop's 'page gone' signal). Pure markers — compaction removes
-    every band row the doc ever contributed."""
-    rows = ids.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit(None).cast("string").alias("band_key"),
-        F.lit(gen).alias("gen"),
-        F.lit(True).alias("tombstone"),
-    )
-    rows.write.mode("append").saveAsTable(delta_table)
-
-
-def _band_delta_live(delta: DataFrame) -> DataFrame:
-    """Latest-generation-wins over the delta: per doc, only the highest
-    generation's rows survive; tombstones and NULL-band markers carry
-    no live bands. A delete and a supersede at the SAME generation
-    resolve to the delete — ``max(struct(gen, tombstone))`` puts the
-    tombstone on top of the tie (false < true), matching the ANN
-    family's documented tie rule (``_load_index_relation`` orders by
-    desc gen, desc tombstone), so a caller following that rule never
-    silently resurrects a deleted doc's bands here. Window over the
-    BATCH-SIZED delta only."""
-    from pyspark.sql import Window as W
-
-    top = F.max(F.struct("gen", "tombstone")).over(W.partitionBy("doc_id"))
-    return (
-        delta.withColumn("__top", top)
-        .filter((F.col("gen") == F.col("__top.gen")) & ~F.col("__top.tombstone"))
-        .filter(~F.col("tombstone") & F.col("band_key").isNotNull())
-        .select("doc_id", "band_key", "gen")
-    )
+    crawl loop's 'page gone' signal): probes stop matching every band
+    the doc ever contributed, compaction removes them."""
+    BAND_INDEX.write_tombstones(spark, root, batch_tag, ids.select(id_col), gen)
 
 
 def dedup_against_band_index_versioned(
     spark: SparkSession,
     new_docs: DataFrame,
-    base_table: str,
-    delta_table: str | None = None,
+    root: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     bands: DataFrame | None = None,
+    raw: bool = False,
 ) -> DataFrame:
-    """``dedup_against_band_index`` against the EFFECTIVE view of a
-    versioned index: live history = base rows of docs untouched by the
-    delta (broadcast anti join on the delta's doc set — batch-sized)
-    plus the delta's latest-generation live bands (broadcast semi).
-    ``delta_table=None`` probes the raw base alone — correct only
-    post-compaction, which is exactly what the recrawl gate member uses
-    it to PROVE (stale rows physically surviving compaction make the
-    raw probe diverge from the oracle).
+    """Cross-RUN near-duplicate dedup: the admitted subset of
+    ``new_docs`` against the band index at ``root`` — the every-crawl
+    loop: probe the index, drop near-dups of history AND of earlier
+    (min-id) batch docs, append the survivors' bands back
+    (``supersede_band_index`` at generation 0), repeat tomorrow.
 
-    GUARD: the masking anti join BROADCASTS the delta's doc set, which
-    is only safe while the delta stays batch-sized. Rather than let a
-    compaction-starved index walk into a silent driver-side blowup,
-    the probe refuses loudly once the delta's DISTINCT doc count — the
-    exact set the mask broadcasts, and the same quantity
-    ``band_index_pressure_stats`` / ``maybe_compact_band_index`` police
-    — estimates past the session's broadcast budget, so the compaction
-    policy's trigger always dominates this guard.
+    Same contract as ``dedup_incremental_near``: rejected when any
+    band key is live in the index or was claimed by a smaller-id batch
+    doc (window over the batch's own band rows — batch-sized); docs
+    with no shingles carry no signature and are not admitted.
+
+    Scale shape: the index's effective view is scanned in place and the
+    batch's band keys are BROADCAST into a semi join (as the ANN probes
+    broadcast their probed cells), so the index never shuffles and a
+    key many index docs share yields one row per index row; the
+    view masks superseded docs with the store's guarded broadcast of
+    the batch-sized marks. ``raw`` probes the base relation alone —
+    correct only post-compaction, which is exactly what the recrawl
+    gate member uses it to PROVE.
 
     ``bands``: optionally the PRE-COMPUTED ``bands_per_row`` of
     ``new_docs`` (a caller probing the same batch against several index
-    states — the recrawl gate member's two phases — computes it once);
-    when absent it is computed and checkpointed here, since the plan
-    references it four times (two semi joins + loser window + signed)
-    and Catalyst does not share common subtrees across joins."""
+    states computes it once); when absent it is computed and
+    checkpointed here, since the plan references it three times and
+    Catalyst does not share common subtrees across joins."""
     from pyspark.sql import Window as W
 
-    base = spark.table(base_table)
+    from generic_data_ingestor_framework_spark.scale import broadcast_threshold_bytes
+
     nb = (
         bands
         if bands is not None
@@ -1091,38 +815,21 @@ def dedup_against_band_index_versioned(
             new_docs.select(id_col, text_col), id_col, text_col
         ).localCheckpoint(eager=True)
     )
-    if delta_table is None:
-        hit = nb.join(base, "band_key", "semi").select(id_col).distinct()
-    else:
-        from generic_data_ingestor_framework_spark.scale import (
-            broadcast_threshold_bytes,
-        )
-
-        delta = spark.table(delta_table)
-        budget = broadcast_threshold_bytes(spark)
-        touched = delta.select("doc_id").distinct()
-        est = touched.count() * BCAST_BYTES_PER_ID
-        if 0 < budget < est:
-            raise RuntimeError(
-                f"versioned band index delta too large to broadcast-mask "
-                f"(~{est} bytes estimated vs {budget} budget): run "
-                f"compact_band_index_versioned('{base_table}', "
-                f"'{delta_table}') or the band_auto_compact pipeline step "
-                f"before probing"
-            )
-        # budget <= 0 = operator disabled broadcasting: honor it by
-        # dropping the forced hints too (AQE decides the join side).
-        hint = F.broadcast if budget > 0 else (lambda d: d)
-        live_base = base.join(hint(touched), "doc_id", "anti")
-        live_delta = _band_delta_live(delta)
-        hit = (
-            nb.join(live_base, "band_key", "semi")
-            .select(id_col)
-            .unionByName(
-                nb.join(hint(live_delta), "band_key", "semi").select(id_col)
-            )
-            .distinct()
-        )
+    idx = (
+        spark.read.parquet(f"{root}/bands") if raw else BAND_INDEX.view(spark, root, "bands")
+    )
+    # budget <= 0 = operator disabled broadcasting: no forced hint
+    hint = F.broadcast if broadcast_threshold_bytes(spark) > 0 else (lambda d: d)
+    # each live key the batch holds, once, however many index docs hold
+    # it (a semi join emits at most one row per index row; the partial
+    # aggregate collapses them before anything moves), then its batch
+    # docs from the batch-sized band rows
+    hit_keys = (
+        idx.select("band_key")
+        .join(hint(nb.select("band_key").distinct()), "band_key", "semi")
+        .distinct()
+    )
+    hit = hit_keys.join(nb, "band_key").select(id_col).distinct()
     w = W.partitionBy("band_key").orderBy(id_col)
     loser = (
         nb.withColumn("__rn", F.row_number().over(w))
@@ -1138,186 +845,90 @@ def dedup_against_band_index_versioned(
     )
 
 
-# Broadcast-size estimate for one masked doc id: an 8-byte key plus
-# hash-relation overhead (Spark's LongHashedRelation is ~2-4x the raw
-# key bytes). Deliberately conservative — the pressure policy should
-# compact well before the driver is at risk.
-BCAST_BYTES_PER_ID = 32
+def _band_member_root(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    from generic_data_ingestor_framework_spark.fileops import sf_tag
+
+    return indexstore.member_root(spark, f"band_{kind}_idx_{sf_tag(sf_dir)}")
 
 
-def band_index_pressure_stats(
-    spark: SparkSession, base_table: str, delta_table: str
-) -> dict:
-    """Delta/base PRESSURE of a versioned band index — the band twin of
-    ``ann_index_pressure_stats``. The probe path masks the bucketed
-    base with a BROADCAST anti join on the delta's doc set
-    (``dedup_against_band_index_versioned``); that is safe only while
-    the delta stays batch-sized, and nothing about the LSM discipline
-    enforces it — a crawl loop that defers compaction long enough
-    silently turns the broadcast into a driver OOM. This measures the
-    contract: doc-grain ratio (``pressure_bp``) and the estimated
-    broadcast bytes vs the session's broadcast budget. Counts are
-    metadata/aggregate-sized jobs over the (batch-sized) delta plus one
-    distinct-count over the base's doc column."""
-    from generic_data_ingestor_framework_spark.scale import broadcast_threshold_bytes
+def band_index_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cross-run crawl loop driven END-TO-END through the
+    PERSISTED band index at generation 0 — the gate member for
+    ``save_band_index_versioned`` / ``dedup_against_band_index_versioned``
+    / generation-0 ``supersede_band_index`` appends (batch-equality
+    pytests prove each step; this member drives the full save → probe
+    → append → probe cycle through the on-disk store, so a regression
+    in the persisted path — layout, append batches, semi-join claim
+    order — flips the driver gate, not just a unit test).
 
-    base_docs = spark.table(base_table).select("doc_id").distinct().count()
-    delta = spark.table(delta_table)
-    # one aggregate job for both delta gauges (r14 opt; was two jobs —
-    # doc_id is never NULL in the delta, so count_distinct ≡ the
-    # previous distinct().count())
-    drow = delta.agg(
-        F.count(F.lit(1)).alias("r"), F.count_distinct("doc_id").alias("d")
-    ).collect()[0]
-    delta_rows, delta_docs = drow["r"], drow["d"]
-    threshold = broadcast_threshold_bytes(spark)
-    est_bytes = delta_docs * BCAST_BYTES_PER_ID
-    return {
-        "base_docs": base_docs,
-        "delta_rows": delta_rows,
-        "delta_docs": delta_docs,
-        "pressure_bp": (delta_docs * 10000) // base_docs if base_docs else 10000,
-        "est_broadcast_bytes": est_bytes,
-        "broadcast_threshold_bytes": threshold,
-        "over_broadcast_budget": 0 < threshold < est_bytes,
-    }
+    The corpus splits into three hash runs: run 0 seeds the index
+    (overwrite → idempotent re-runs), run 1 probes it and its admitted
+    docs are WRITTEN durably and appended to the index (reading the
+    admitted set back from its files is the production shape — each
+    crawl's output is durable — and pins the probe result against the
+    index append that follows it), run 2 probes the grown index.
+    Output: the admitted (doc_id, lang) of both runs, tagged ``run``
+    1/2.
 
-
-def maybe_compact_band_index(
-    spark: SparkSession,
-    base_table: str,
-    delta_table: str,
-    max_delta_ratio: float = 0.10,
-    n_buckets: int = 32,
-    stats: dict | None = None,
-) -> dict:
-    """AUTO-COMPACT policy for a versioned band index: compact when the
-    delta's doc set exceeds ``max_delta_ratio`` of the base's docs OR
-    its estimated broadcast size exceeds the session's broadcast
-    budget — the enforcement arm of the batch-sized-delta contract
-    (``band_index_pressure_stats``). A crawl pipeline runs this after
-    its supersede/delete steps (pipeline op ``band_auto_compact``) so
-    deferred compaction can never silently accumulate into a
-    driver-sized broadcast. Returns the pressure stats plus the
-    decision (``compacted``, ``reason``). ``stats``: optionally the
-    CURRENT ``band_index_pressure_stats`` result, when the caller just
-    measured it (the pressure gate member) — passing it skips an
-    identical back-to-back recomputation; it must reflect the tables'
-    present state."""
-    if stats is None:
-        stats = band_index_pressure_stats(spark, base_table, delta_table)
-    over_ratio = stats["delta_docs"] > max_delta_ratio * stats["base_docs"]
-    reason = (
-        "delta_ratio" if over_ratio
-        else "broadcast_budget" if stats["over_broadcast_budget"]
-        else ""
+    Scale shape: the index side of every probe is scanned in place
+    (never shuffles); only batch-sized relations move."""
+    d = load_table(spark, sf_dir, "documents")
+    run = portable_hash32(F.col("doc_id").cast("string")) % 3
+    root = _band_member_root(spark, sf_dir, "crawl")
+    run0 = d.filter(run == 0).select("doc_id", "text")
+    run1 = d.filter(run == 1).select("doc_id", "lang", "text")
+    run2 = d.filter(run == 2).select("doc_id", "lang", "text")
+    save_band_index_versioned(spark, run0, root)
+    adm1 = dedup_against_band_index_versioned(spark, run1, root)
+    adm1.write.mode("overwrite").parquet(f"{root}_adm1")
+    adm1_saved = spark.read.parquet(f"{root}_adm1")
+    supersede_band_index(spark, adm1_saved, root, "adm1", gen=0)
+    adm2 = dedup_against_band_index_versioned(spark, run2, root)
+    return adm1_saved.select("doc_id", "lang", F.lit(1).alias("run")).unionAll(
+        adm2.select("doc_id", "lang", F.lit(2).alias("run"))
     )
-    if reason and stats["delta_rows"] > 0:
-        compact_band_index_versioned(spark, base_table, delta_table, n_buckets)
-        return {**stats, "compacted": True, "reason": reason}
-    return {**stats, "compacted": False, "reason": reason}
 
 
 def band_index_pressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate member for the COMPACTION-PRESSURE policy (r12 verdict #1):
     drive the recrawl cohorts (seed hash%3==0, supersede hash%5==0 at
-    gen 1, tombstone hash%7==0 at gen 2) into a versioned band index,
-    measure the delta/base pressure, run ``maybe_compact_band_index``
-    at the default 10% policy — the ~31% touched cohort exceeds it at
-    every SF, so the policy MUST fire — and measure again. Stage 1 pins
-    the observed pressure (delta docs = the touched cohort, base docs =
+    gen 1, tombstone hash%7==0 at gen 2) into a band index, measure the
+    delta/base pressure, run the store's ``maybe_compact`` at the
+    default 10% policy — the ~31% touched cohort exceeds it at every
+    SF, so the policy MUST fire — and measure again. Stage 1 pins the
+    observed pressure (delta docs = the touched cohort, base docs =
     seed docs with >=1 band); stage 2 pins the enforcement (delta
     drained, pressure 0, ``compacted`` true). The DuckDB oracle
     recomputes both stages from the hash cohorts and the >=3-token
     bandability rule.
 
-    Scale shape: the pressure probe is aggregate-sized (two distinct
-    counts + a metadata count); compaction is the one full rewrite the
-    policy exists to schedule."""
+    Scale shape: the pressure probe is one aggregate job; compaction
+    is the one full rewrite the policy exists to schedule."""
     d = load_table(spark, sf_dir, "documents")
     h = portable_hash32(F.col("doc_id").cast("string"))
-    from generic_data_ingestor_framework_spark.fileops import sf_tag
-
-    tag = sf_tag(sf_dir)
-    base_tbl = f"band_pressure_idx_{tag}"
-    delta_tbl = f"band_pressure_delta_{tag}"
+    root = _band_member_root(spark, sf_dir, "pressure")
     modified = F.concat_ws(" ", F.reverse(F.split(F.col("text"), r"\s+")))
     run0 = d.filter(h % 3 == 0)
     changed = run0.filter(h % 5 == 0).select("doc_id", modified.alias("text"))
     deleted = run0.filter(h % 7 == 0).select("doc_id")
-    # base is rewritten in OVERWRITE mode by save_band_index_versioned,
-    # which also drains the delta (TRUNCATE when it already exists)
-    _clear_stale_location(spark, base_tbl)
-    save_band_index_versioned(spark, run0.select("doc_id", "text"), base_tbl, delta_tbl)
-    supersede_band_index(spark, changed, delta_tbl, gen=1)
-    delete_band_index_docs(spark, deleted, delta_tbl, gen=2)
-    p1 = band_index_pressure_stats(spark, base_tbl, delta_tbl)
+    save_band_index_versioned(spark, run0.select("doc_id", "text"), root)
+    supersede_band_index(spark, changed, root, "b1", gen=1)
+    delete_band_index_docs(spark, deleted, root, "b2", gen=2)
+    p1 = BAND_INDEX.pressure_stats(spark, root)
     # p1 measured the exact state maybe_compact would re-measure —
     # pass it through (r14 opt: one stats pass instead of two)
-    dec = maybe_compact_band_index(spark, base_tbl, delta_tbl, stats=p1)
-    p2 = band_index_pressure_stats(spark, base_tbl, delta_tbl)
+    dec = BAND_INDEX.maybe_compact(spark, root, stats=p1)
+    p2 = BAND_INDEX.pressure_stats(spark, root)
     rows = [
-        (1, p1["base_docs"], p1["delta_docs"], p1["pressure_bp"], False),
-        (2, p2["base_docs"], p2["delta_docs"], p2["pressure_bp"], dec["compacted"]),
+        (1, p1["base_ids"], p1["delta_ids"], p1["pressure_bp"], False),
+        (2, p2["base_ids"], p2["delta_ids"], p2["pressure_bp"], dec["compacted"]),
     ]
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "stage int, base_docs bigint, delta_docs bigint, pressure_bp bigint, "
         "compacted boolean",
     )
-
-
-def compact_band_index_versioned(
-    spark: SparkSession, base_table: str, delta_table: str, n_buckets: int = 32
-) -> int:
-    """MAJOR COMPACTION of a versioned band index: materialize the
-    effective view (untouched base rows + the delta's latest-generation
-    live bands) into a fresh bucketed base and truncate the delta —
-    superseded and tombstoned rows are PHYSICALLY dropped, restoring
-    the zero-delta probe path. Returns the compacted row count.
-    Single-writer contract (see ``_reset_managed_table``).
-
-    The effective view is STAGED into a temporary table and swapped in
-    by catalog rename (r15, guide §5/§6 — the ``compact_ann_index``
-    protocol): the old shape eagerly ``localCheckpoint``-ed the entire
-    effective view so the overwrite would not read the table it
-    replaces — INDEX-SIZED executor storage at the 100 TB design point.
-    Staging writes the one full copy compaction inherently owes straight
-    to disk instead. Crash windows are no worse than the overwrite
-    path: a crash during staging leaves base+delta untouched (the stale
-    staging table is reaped on the next compaction); a crash inside the
-    drop→rename swap leaves the base absent — exactly the overwrite
-    path's mid-rewrite window — and the crawl loop's save step rebuilds
-    it."""
-    base = spark.table(base_table)
-    delta = spark.table(delta_table)
-    # NO forced-broadcast hint here (unlike the probe path): compaction
-    # must be able to drain exactly the oversized delta the probe guard
-    # refuses — AQE still broadcasts a batch-sized touched set at
-    # runtime, and an oversized one merges as a shuffle join.
-    touched = delta.select("doc_id").distinct()
-    # dropDuplicates: a retried supersede step re-appends identical
-    # (doc_id, band_key, gen) rows — inert at probe time (band sets),
-    # dropped here so the base never grows from retries
-    live = (
-        base.join(touched, "doc_id", "anti")
-        .unionByName(_band_delta_live(delta))
-        .dropDuplicates(["doc_id", "band_key", "gen"])
-    )
-    staging = f"{base_table}__compact"
-    _reset_managed_table(spark, staging)  # reap a dead run's leftover
-    live.write.mode("overwrite").bucketBy(n_buckets, "band_key").saveAsTable(
-        staging
-    )
-    # count the staged parquet (metadata-count job) BEFORE the swap so
-    # the returned number provably describes what was written
-    n_live = spark.table(staging).count()
-    _reset_managed_table(spark, base_table)
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {base_table}")
-    # the delta table provably exists (read above): TRUNCATE drains it
-    # in one catalog op instead of an empty-relation overwrite job
-    spark.sql(f"TRUNCATE TABLE {delta_table}")
-    return n_live
 
 
 # re-crawled old-content copies are re-keyed past max(doc_id) — the
@@ -1333,10 +944,10 @@ def _recrawl_off(d: DataFrame):
 
 def band_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DELETE/SUPERSEDE crawl loop driven END-TO-END through the
-    VERSIONED band index — the gate member for
-    ``save_band_index_versioned`` / ``supersede_band_index`` /
-    ``delete_band_index_docs`` / ``compact_band_index_versioned``
-    (mirrors ``band_index_crawl``, which pins the append-only loop).
+    band index — the gate member for ``supersede_band_index`` /
+    ``delete_band_index_docs`` / the store's effective view and
+    compaction (mirrors ``band_index_crawl``, which pins the
+    append-only loop).
 
     Shape: run-0 docs (hash%3==0) seed the base at gen 0. The crawl
     then RE-visits a subset (hash%5==0) whose content CHANGED — words
@@ -1353,16 +964,12 @@ def band_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip phase 2. The DuckDB oracle recomputes the surviving band set
     from scratch.
 
-    Scale shape: probes never shuffle the base (bucketed semi join +
-    broadcast anti on the batch-sized touched set); compaction is the
-    one full rewrite. At 100 TB only the table location changes."""
+    Scale shape: probes never shuffle the index (scanned in place,
+    batch broadcast; broadcast anti on the batch-sized marks);
+    compaction is the one full rewrite."""
     d = load_table(spark, sf_dir, "documents")
     h = portable_hash32(F.col("doc_id").cast("string"))
-    from generic_data_ingestor_framework_spark.fileops import sf_tag
-
-    tag = sf_tag(sf_dir)
-    base_tbl = f"band_recrawl_idx_{tag}"
-    delta_tbl = f"band_recrawl_delta_{tag}"
+    root = _band_member_root(spark, sf_dir, "recrawl")
     modified = F.concat_ws(" ", F.reverse(F.split(F.col("text"), r"\s+")))
     run0 = d.filter(h % 3 == 0)
     changed = run0.filter(h % 5 == 0).select("doc_id", modified.alias("text"))
@@ -1371,31 +978,22 @@ def band_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + F.col("__off")).alias("doc_id"), "lang", "text"
     )
     batch = d.filter(h % 3 == 1).select("doc_id", "lang", "text").unionByName(copies)
-    # base is rewritten in OVERWRITE mode by save_band_index_versioned,
-    # which also drains the delta (TRUNCATE when it already exists)
-    _clear_stale_location(spark, base_tbl)
-    save_band_index_versioned(
-        spark, run0.select("doc_id", "text"), base_tbl, delta_tbl
-    )
-    supersede_band_index(spark, changed, delta_tbl, gen=1)
-    delete_band_index_docs(spark, deleted, delta_tbl, gen=2)
+    save_band_index_versioned(spark, run0.select("doc_id", "text"), root)
+    supersede_band_index(spark, changed, root, "b1", gen=1)
+    delete_band_index_docs(spark, deleted, root, "b2", gen=2)
     # both probe phases sign the SAME batch — compute its bands once
     # (r14 opt; each probe otherwise re-ran the tokenize→minhash
-    # pipeline, and referenced it 3-4x inside its own plan)
+    # pipeline, and referenced it 3x inside its own plan)
     nb = bands_per_row(
         batch.select("doc_id", "text"), "doc_id", "text"
     ).localCheckpoint(eager=True)
-    adm1 = dedup_against_band_index_versioned(
-        spark, batch, base_tbl, delta_tbl, bands=nb
-    )
-    # materialize phase 1 BEFORE compaction rewrites the tables it reads
+    adm1 = dedup_against_band_index_versioned(spark, batch, root, bands=nb)
+    # materialize phase 1 BEFORE compaction rewrites the relation it reads
     out1 = adm1.select(
         F.lit(1).alias("phase"), "doc_id", "lang"
     ).localCheckpoint(eager=True)
-    compact_band_index_versioned(spark, base_tbl, delta_tbl)
-    adm2 = dedup_against_band_index_versioned(
-        spark, batch, base_tbl, None, bands=nb
-    )
+    BAND_INDEX.compact(spark, root)
+    adm2 = dedup_against_band_index_versioned(spark, batch, root, bands=nb, raw=True)
     return out1.unionAll(adm2.select(F.lit(2).alias("phase"), "doc_id", "lang"))
 
 

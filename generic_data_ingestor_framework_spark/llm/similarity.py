@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from generic_data_ingestor_framework_spark.llm import indexstore
 from generic_data_ingestor_framework_spark.relational import load_table
 from generic_data_ingestor_framework_spark.session import local_relation
 
@@ -268,15 +269,13 @@ def label_centroid_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMEANS_CACHE: dict[tuple[str, int], list[tuple[int, list[float]]]] = {}
-
-
 def _kmeans_centroids(
     spark: SparkSession, sf_dir: str, k: int = N_CENTROIDS
 ) -> list[tuple[int, list[float]]]:
     """Train the IVF coarse quantizer: ``N_KMEANS_ITERS`` Lloyd
     iterations over the candidate vectors (everything except the query
-    slice), cosine assignment, mean update.
+    slice), cosine assignment, mean update. Memoized per session
+    (``clear_caches()`` forces a retrain).
 
     Centroids live on the driver between iterations — they are
     N_CENTROIDS × dim floats (KBs), which is exactly how Spark MLlib's
@@ -286,20 +285,21 @@ def _kmeans_centroids(
     are rounded to 6 dp before the argmax (ties broken on centroid_id)
     and centroid coordinates to 3 dp after each mean, so the DuckDB
     oracle reproduces the identical trajectory with chained CTEs."""
-    if (sf_dir, k) in _KMEANS_CACHE:
-        return _KMEANS_CACHE[(sf_dir, k)]
-    cand = (
-        _vectors(spark, sf_dir)
-        .filter(F.col("vec_id") >= N_QUERY)
-        .select(
-            F.col("vec_id").alias("point_id"),
-            F.col("v").alias("pv"),
-            _norm(F.col("v")).alias("pn"),
+    from generic_data_ingestor_framework_spark.cachemgr import shared_value
+
+    def build() -> list[tuple[int, list[float]]]:
+        cand = (
+            _vectors(spark, sf_dir)
+            .filter(F.col("vec_id") >= N_QUERY)
+            .select(
+                F.col("vec_id").alias("point_id"),
+                F.col("v").alias("pv"),
+                _norm(F.col("v")).alias("pn"),
+            )
         )
-    )
-    out = _kmeans_over(spark, cand, k)
-    _KMEANS_CACHE[(sf_dir, k)] = out
-    return out
+        return _kmeans_over(spark, cand, k)
+
+    return shared_value(spark, ("kmeans_centroids", sf_dir, k), build)
 
 
 def _kmeans_over(
@@ -353,8 +353,8 @@ def _kmeans_over(
 def _centroid_df(
     spark: SparkSession, sf_dir: str, k: int = N_CENTROIDS
 ) -> DataFrame:
-    return spark.createDataFrame(
-        _kmeans_centroids(spark, sf_dir, k), schema="centroid_id int, cv array<double>"
+    return local_relation(
+        spark, _kmeans_centroids(spark, sf_dir, k), "centroid_id int, cv array<double>"
     ).withColumn("cvn", _norm(F.col("cv")))
 
 
@@ -548,18 +548,29 @@ def _append_batches(spark: SparkSession, sf_dir: str, off_v: int) -> list[DataFr
     return [cand0, b1, b2]
 
 
+def _cents_fp(cents: list[tuple[int, list[float], float]]) -> tuple:
+    """The centroid set a memo scores against, as a key part: the ids
+    plus a hash of the coordinates (``repr`` of a float is exact)."""
+    import hashlib
+
+    coords = repr([cv for _, cv, _ in cents]).encode()
+    return tuple(c[0] for c in cents), hashlib.sha1(coords).hexdigest()
+
+
 def _append_assigns(
     spark: SparkSession,
     sf_dir: str,
     crows_fr: list[tuple[int, list[float], float]],
 ) -> list[DataFrame]:
-    """The three per-batch FROZEN-quantizer assignments, eagerly
-    checkpointed once per session (encode-only: batch b is never
-    re-scored when later waves arrive). Batch lineage is constructed
-    INSIDE the memo builder, so warm calls pay a dict lookup instead of
-    re-deriving the corpus transforms through py4j (r15)."""
+    """The three per-batch assignments against ``crows_fr``, eagerly
+    checkpointed once per session and centroid set (encode-only: batch
+    b is never re-scored when later waves arrive). Batch lineage is
+    constructed INSIDE the memo builder, so warm calls pay a dict
+    lookup instead of re-deriving the corpus transforms through py4j
+    (r15)."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
 
+    fp = _cents_fp(crows_fr)
     out = []
     for b in range(3):
         def build(b: int = b) -> DataFrame:
@@ -570,7 +581,7 @@ def _append_assigns(
             ).localCheckpoint(eager=True)
 
         out.append(
-            shared_value(spark, ("recall_append_assign", sf_dir, b), build)
+            shared_value(spark, ("recall_append_assign", sf_dir, b, fp), build)
         )
     return out
 
@@ -608,10 +619,10 @@ def _wave_probed(
 ) -> DataFrame:
     """Wave-tagged query→probed-cell relation against ``cents``
     (≤ 3·N_QUERY·N_PROBES rows), eagerly checkpointed and memoized
-    under ``key``. Construction — 3 ArrowEvalPython rounds of
-    Python-worker latency plus their py4j plan building — runs only on
-    the first call per session (r15: previously rebuilt per call and
-    discarded on memo hit)."""
+    under ``key`` and the centroid set. Construction — 3
+    ArrowEvalPython rounds of Python-worker latency plus their py4j
+    plan building — runs only on the first call per session (r15:
+    previously rebuilt per call and discarded on memo hit)."""
     from functools import reduce
 
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
@@ -630,7 +641,7 @@ def _wave_probed(
         ]
         return reduce(DataFrame.unionByName, parts).localCheckpoint(eager=True)
 
-    return shared_value(spark, key, build)
+    return shared_value(spark, (*key, _cents_fp(cents)), build)
 
 
 def _ivf_assigned(
@@ -1122,9 +1133,6 @@ PQ_K = 32       # sub-centroids per subspace (code = M × 5 bits here)
 PQ_ITERS = 2    # Lloyd iterations per sub-codebook
 PQ_RERANK = 8   # phase-1 ADC shortlist per final exact result
 
-_PQ_CACHE: dict[str, list[tuple[int, int, list[float]]]] = {}
-
-
 def _l2sq(a, b):
     """Squared L2 distance as a sequential fold (bit-deterministic in
     both engines, like ``_dot``)."""
@@ -1233,9 +1241,16 @@ def _pq_codebooks(
     before the argmin, ties on sub-centroid id ascending, means rounded
     3 dp) so the DuckDB oracle replays the identical trajectory.
     Seeds: sub-centroid (m, j) is candidate vector ``N_QUERY + j``'s
-    m-th slice, reusing the IVF seeding contract."""
-    if sf_dir in _PQ_CACHE:
-        return _PQ_CACHE[sf_dir]
+    m-th slice, reusing the IVF seeding contract. Memoized per
+    session, like ``_kmeans_centroids``."""
+    from generic_data_ingestor_framework_spark.cachemgr import shared_value
+
+    return shared_value(
+        spark, ("pq_codebooks", sf_dir), lambda: _pq_train(spark, sf_dir)
+    )
+
+
+def _pq_train(spark: SparkSession, sf_dir: str) -> list[tuple[int, int, list[float]]]:
     cand = (
         _vectors(spark, sf_dir)
         .filter(F.col("vec_id") >= N_QUERY)
@@ -1293,14 +1308,12 @@ def _pq_codebooks(
         for key, dims in by_cell.items():  # empty cells keep old centroid
             cents[key] = [dims[p] for p in range(len(dims))]
     cand.unpersist()
-    out = [(m, j, cv) for (m, j), cv in sorted(cents.items())]
-    _PQ_CACHE[sf_dir] = out
-    return out
+    return [(m, j, cv) for (m, j), cv in sorted(cents.items())]
 
 
 def _pq_codebook_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.createDataFrame(
-        _pq_codebooks(spark, sf_dir), schema="m int, j int, cv array<double>"
+    return local_relation(
+        spark, _pq_codebooks(spark, sf_dir), "m int, j int, cv array<double>"
     )
 
 
@@ -1574,10 +1587,22 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cross-run persistent ANN index (the band-index pattern for vectors)
+# Cross-run persistent ANN index: the vector payload of ``indexstore``
 # ---------------------------------------------------------------------------
 
-ANN_INDEX_VERSION = 2  # v2: assignment partitioned by cell (pruned probes)
+ANN_INDEX_VERSION = 3  # v3: the index-store layout (batches/<tag>/<rel>, meta)
+
+# The assignment is PARTITIONED BY CELL: the on-disk layout IS the
+# inverted list, so a probe filtered to its probed cells prunes the
+# scan to n_probes/k of the index (at 100 TB, the difference between
+# reading ~1% of the corpus and all of it).
+ANN_INDEX = indexstore.Family(
+    name="ann",
+    id_col="point_id",
+    deltas=("ivf_assigned", "pq_codes"),
+    partition={"ivf_assigned": "cell"},
+    meta=(ANN_INDEX_VERSION, "n_candidates"),
+)
 
 
 def _ann_index_root(spark: SparkSession, sf_dir: str) -> str:
@@ -1587,127 +1612,16 @@ def _ann_index_root(spark: SparkSession, sf_dir: str) -> str:
     return f"{wh}/ann_index_{sf_tag(sf_dir)}"
 
 
-def _load_index_relation(
-    spark: SparkSession, root: str, name: str, allow_large_delta: bool = False
-) -> DataFrame:
-    """EFFECTIVE view of an index relation: base plus every appended
-    batch directory (see ``append_ann_index`` — each batch lives in its
-    own subdirectory so a retried append overwrites itself instead of
-    duplicating rows), with latest-generation-wins applied when any
-    SUPERSEDE batch (gen-tagged, ids may overlap the indexed set — see
-    ``supersede_ann_index``) or tombstone batch
-    (``delete_ann_index_ids``) exists.
-
-    Scale shape: the no-delta path (plain appends only) is exactly the
-    historical union — no extra work. With deltas, the merge is the
-    LSM discipline: winners are resolved on the BATCH-SIZED mark
-    relation (delta ids × gens + tombstones — only docs touched since
-    the last compaction), then masked out of the raw union by a
-    BROADCAST anti join; the full index never shuffles. Compaction
-    folds the deltas away and restores the fast path."""
-    from generic_data_ingestor_framework_spark.fileops import hadoop_list_dirs
-
-    df = spark.read.parquet(f"{root}/{name}")
-    deltas = []
-    for sub in hadoop_list_dirs(spark, f"{root}/{name}_batches"):
-        b = spark.read.parquet(sub)
-        if "gen" in b.columns:
-            deltas.append(b)
-        else:
-            df = df.unionByName(b)
-    tombs = [
-        spark.read.parquet(sub)
-        for sub in hadoop_list_dirs(spark, f"{root}/tombstones")
-    ]
-    if not deltas and not tombs:
-        return df
-    from functools import reduce
-    from pyspark.sql import Window as W
-
-    from generic_data_ingestor_framework_spark.llm.dedup import BCAST_BYTES_PER_ID
-    from generic_data_ingestor_framework_spark.scale import broadcast_threshold_bytes
-
-    # GUARD (r12 verdict #1): the mark set is broadcast below, which is
-    # safe only while the delta stays batch-sized. Refuse loudly — with
-    # the fix named — before a compaction-starved index walks into a
-    # silent driver-side blowup. Row counts are parquet-metadata reads;
-    # pq_codes carries PQ_M rows per id, so divide for the id bound.
-    # ``allow_large_delta`` is the compaction/maintenance path: no
-    # guard and NO forced-broadcast hints (AQE still broadcasts a
-    # small side at runtime; an oversized one merges as a shuffle
-    # join) — compaction must be able to drain exactly the delta the
-    # guard refuses to probe. budget <= 0 means the operator disabled
-    # broadcasting session-wide: honor that by dropping the forced
-    # hint too (AQE decides), which also removes the blowup the guard
-    # exists to prevent.
-    budget = broadcast_threshold_bytes(spark)
-    if budget > 0 and not allow_large_delta:
-        rows_per_id = PQ_M if name == "pq_codes" else 1
-        n_ids_upper = sum(d.count() for d in deltas) // rows_per_id + sum(
-            t.count() for t in tombs
-        )
-        if n_ids_upper * BCAST_BYTES_PER_ID > budget:
-            raise RuntimeError(
-                f"ANN index delta too large to broadcast-mask "
-                f"(~{n_ids_upper * BCAST_BYTES_PER_ID} bytes estimated vs "
-                f"{budget} budget): run compact_ann_index('{root}') or the "
-                f"ann_auto_compact pipeline step before probing"
-            )
-
-    delta = reduce(DataFrame.unionByName, deltas) if deltas else None
-    marks = [t.select("point_id", "gen", F.lit(True).alias("tomb")) for t in tombs]
-    if delta is not None:
-        marks.append(
-            delta.select("point_id", "gen").distinct()
-            .withColumn("tomb", F.lit(False))
-        )
-    mark = reduce(DataFrame.unionByName, marks)
-    w = W.partitionBy("point_id").orderBy(F.desc("gen"), F.desc("tomb"))
-    win = (
-        mark.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("point_id", "gen", "tomb")
-    )
-    hint = (lambda d: d) if (allow_large_delta or budget <= 0) else F.broadcast
-    out = df.join(hint(win.select("point_id")), "point_id", "anti")
-    if delta is not None:
-        live = win.filter(~F.col("tomb")).select("point_id", "gen")
-        out = out.unionByName(
-            delta.join(hint(live), ["point_id", "gen"]).drop("gen")
-        )
-    return out
-
-
-def _write_index_meta(spark: SparkSession, root: str, n_candidates: int) -> None:
-    spark.createDataFrame(
-        [(ANN_INDEX_VERSION, n_candidates)], "version int, n_candidates bigint"
-    ).write.mode("overwrite").parquet(f"{root}/index_meta")
-
-
 def save_ann_index(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
     """Persist the trained ANN index — IVF centroids + cell assignment
-    and PQ codebooks + codes — as PATH-ADDRESSED parquet relations, so
-    a new process (or a 100 TB query job that must never retrain)
-    loads them without any metastore: the probe-side joins all
-    broadcast the small side (probed cells / ADC LUT), so unlike the
-    band index there is no bucketed shuffle to preserve, and plain
-    parquet is the most portable cross-run vehicle. ``index_meta``
-    records the format version and candidate count; ``load_ann_index``
-    rebuilds on a stale, inconsistent, or foreign index instead of
-    silently probing it. Writes are overwrite-mode (idempotent), any
-    previous append batches are cleared, and completion is marked by
-    writing ``index_meta`` LAST."""
-    from generic_data_ingestor_framework_spark.fileops import hadoop_delete
-
-    from concurrent.futures import ThreadPoolExecutor
-
+    and PQ codebooks + codes — into the index store at ``root``, so a
+    new process (or a 100 TB query job that must never retrain) loads
+    it without any metastore. Meta records the format version and the
+    candidate count; ``load_ann_index`` rebuilds on a stale,
+    inconsistent, or foreign index instead of silently probing it."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
 
     root = root or _ann_index_root(spark, sf_dir)
-    hadoop_delete(spark, f"{root}/index_meta")  # invalidate before mutating
-    hadoop_delete(spark, f"{root}/ivf_assigned_batches")
-    hadoop_delete(spark, f"{root}/pq_codes_batches")
-    hadoop_delete(spark, f"{root}/tombstones")
     # the corpus candidate count is deterministic per corpus — memoized
     # next to the other corpus scalars (r14 opt: a lifecycle member that
     # saves per run re-counted the corpus per save)
@@ -1716,98 +1630,36 @@ def save_ann_index(spark: SparkSession, sf_dir: str, root: str | None = None) ->
         ("ann_n_cand", sf_dir),
         lambda: _vectors(spark, sf_dir).filter(F.col("vec_id") >= N_QUERY).count(),
     )
-
-    # Construct the four relations SEQUENTIALLY on this thread — the
-    # constructors run the session-memoized training collects (k-means /
-    # PQ codebooks), and the cachemgr memos are not thread-safe — then
-    # overlap the four independent WRITE jobs so the tail tasks of one
-    # back-fill the cores the others leave idle (guide §2.6); meta
-    # still commits strictly LAST, preserving crash-consistency.
-    # The assignment is PARTITIONED BY CELL — the on-disk layout IS
-    # the inverted list: a probe filtered to its probed cells prunes
-    # the scan to n_probes/k of the index (at 100 TB, the difference
-    # between reading ~1% of the corpus and all of it).
-    writes = [
-        (_centroid_df(spark, sf_dir), f"{root}/ivf_centroids", None),
-        (_ivf_assigned(spark, sf_dir), f"{root}/ivf_assigned", "cell"),
-        (_pq_codebook_df(spark, sf_dir), f"{root}/pq_codebook", None),
-        (_pq_codes_df(spark, sf_dir), f"{root}/pq_codes", None),
-    ]
-
-    def _w(df: DataFrame, path: str, part: str | None) -> None:
-        w = df.write.mode("overwrite")
-        (w.partitionBy(part) if part else w).parquet(path)
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [pool.submit(_w, *args) for args in writes]
-        for f in futs:
-            f.result()
-    _write_index_meta(spark, root, n_cand)
-    _bump_ann_epoch(root)
-    return root
-
-
-# Per-root mutation counter: every writer (save/append/supersede/
-# delete/compact) bumps it, so the session-memoized load_ann_index
-# result can never serve a stale view of an index THIS process
-# mutated. Out-of-process mutation is caught by the meta fingerprint
-# below: every contract-following writer finishes by rewriting
-# ``index_meta``, so its file listing (names, mtimes, sizes — one FS
-# metadata call, no Spark job) changes on any mutation.
-_ANN_INDEX_EPOCH: dict[str, int] = {}
-
-
-def _bump_ann_epoch(root: str) -> None:
-    _ANN_INDEX_EPOCH[root] = _ANN_INDEX_EPOCH.get(root, 0) + 1
-
-
-def _ann_meta_fingerprint(spark: SparkSession, root: str) -> tuple:
-    """(name, mtime, size) of every file under ``{root}/index_meta`` —
-    a pure FS-metadata probe that changes whenever any writer commits
-    (all of them rewrite the meta relation last)."""
-    from generic_data_ingestor_framework_spark.fileops import hadoop_fs_path
-
-    fs, p = hadoop_fs_path(spark, f"{root}/index_meta")
-    if not fs.exists(p):
-        return ()
-    return tuple(
-        sorted(
-            (st.getPath().getName(), st.getModificationTime(), st.getLen())
-            for st in fs.listStatus(p)
-        )
+    # relations are constructed here, sequentially: the constructors
+    # run the session-memoized training collects, and the cachemgr
+    # memos are not thread-safe (the store overlaps only the writes)
+    ANN_INDEX.save(
+        spark,
+        root,
+        {
+            "ivf_centroids": _centroid_df(spark, sf_dir),
+            "ivf_assigned": _ivf_assigned(spark, sf_dir),
+            "pq_codebook": _pq_codebook_df(spark, sf_dir),
+            "pq_codes": _pq_codes_df(spark, sf_dir),
+        },
+        count=n_cand,
     )
+    return root
 
 
 def load_ann_index(
     spark: SparkSession, sf_dir: str, root: str | None = None
 ) -> dict[str, DataFrame]:
     """Session-memoized ``_load_ann_index_fresh`` (r14 opt): the
-    staleness probes — meta collect, corpus count, batch-dir listings,
-    two effective-relation counts — cost ~6 driver actions (~1 s) per
-    call, re-verifying an index nothing touched. The memo key carries
-    the per-root mutation epoch (any in-process writer invalidates it)
-    AND the meta-directory fingerprint (any out-of-process writer that
-    follows the write protocol — meta committed last — invalidates
-    it), so the staleness contract of the fresh loader is preserved at
-    the cost of one FS metadata call instead of ~6 driver actions."""
-    from generic_data_ingestor_framework_spark.cachemgr import (
-        evict_prefix,
-        has_value,
-        shared_value,
-    )
-
+    staleness probes — meta collect, corpus count, batch listings, two
+    effective-relation counts — cost ~6 driver actions (~1 s) per call,
+    re-verifying an index nothing touched. The store's staleness memo
+    (mutation epoch + meta fingerprint) keeps the fresh loader's
+    contract at the cost of one FS metadata call."""
     root = root or _ann_index_root(spark, sf_dir)
-    epoch = _ANN_INDEX_EPOCH.get(root, 0)
-    fp = _ann_meta_fingerprint(spark, root)
-    key = ("ann_index_loaded", sf_dir, root, epoch, fp)
-    if not has_value(spark, key):
-        # new (epoch, fingerprint): superseded versions of THIS root can
-        # never be served again — drop their memo entries before adding
-        # the fresh one (mutation-heavy members would otherwise
-        # accumulate one stale entry per write for the whole session)
-        evict_prefix(spark, ("ann_index_loaded", sf_dir, root))
-    return shared_value(
-        spark, key, lambda: _load_ann_index_fresh(spark, sf_dir, root)
+    return indexstore.memo(
+        spark, root, ("ann_index_loaded", sf_dir),
+        lambda: _load_ann_index_fresh(spark, sf_dir, root),
     )
 
 
@@ -1816,59 +1668,56 @@ def _load_ann_index_fresh(
 ) -> dict[str, DataFrame]:
     """Load the persisted ANN index, (re)building it first when absent,
     version-mismatched, trained on a different candidate count, or
-    INTERNALLY INCONSISTENT (a crash between an append's two relation
-    writes leaves assigned/codes rows disagreeing with the meta count —
-    the row-count probes are parquet-metadata reads, not scans) — the
-    every-job entry point: train once, probe forever. NOTE the
-    staleness contract: the index serves the corpus at ``sf_dir``;
-    appended batches must mirror corpus growth (the crawl workflow), or
-    the next load sees a count mismatch and retrains from the current
-    corpus, discarding appends."""
+    INTERNALLY INCONSISTENT (a crash between a batch's two relation
+    writes leaves assigned/codes disagreeing) — the every-job entry
+    point: train once, probe forever. NOTE the staleness contract: the
+    index serves the corpus at ``sf_dir``; appended batches must mirror
+    corpus growth (the crawl workflow), or the next load sees a count
+    mismatch and retrains from the current corpus, discarding appends."""
     from generic_data_ingestor_framework_spark.fileops import (
         hadoop_exists,
         hadoop_list_dirs,
     )
 
+    def _tags(rel: str) -> set[str]:
+        return {p.rstrip("/").rsplit("/", 2)[-2] for p in ANN_INDEX.batch_paths(spark, root, rel)}
+
+    def _views() -> dict[str, DataFrame]:
+        return {rel: ANN_INDEX.view(spark, root, rel) for rel in ANN_INDEX.deltas}
+
     stale = True
-    if hadoop_exists(spark, f"{root}/index_meta"):
-        meta = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    if hadoop_exists(spark, f"{root}/meta"):
+        meta = spark.read.parquet(f"{root}/meta").collect()[0]
         n_cand = _vectors(spark, sf_dir).filter(F.col("vec_id") >= N_QUERY).count()
-
-        def _tags(name: str) -> set[str]:
-            return {
-                p.rstrip("/").rsplit("/", 1)[-1]
-                for p in hadoop_list_dirs(spark, f"{root}/{name}_batches")
-            }
-
         stale = (
             meta["version"] != ANN_INDEX_VERSION
             or meta["n_candidates"] != n_cand
             # batch-tag SYMMETRY: every append/supersede writes the same
-            # tag under both relations' batch dirs, so an asymmetric set
-            # is a mid-write crash. Counts alone cannot catch a
-            # half-written SUPERSEDE (it replaces rows — both effective
-            # counts still match the corpus), so this listing check is
-            # that path's crash probe; for appends it is a cheap
-            # pre-filter before the count probes below.
+            # tag for both relations, so an asymmetric set is a
+            # mid-write crash. Counts alone cannot catch a half-written
+            # SUPERSEDE (it replaces rows — both effective counts still
+            # match the corpus), so this listing is that path's probe
             or _tags("ivf_assigned") != _tags("pq_codes")
-            or _load_index_relation(spark, root, "ivf_assigned").count() != n_cand
-            or _load_index_relation(spark, root, "pq_codes").count() != n_cand * PQ_M
         )
+        if not stale:
+            views = _views()
+            stale = (
+                views["ivf_assigned"].count() != n_cand
+                or views["pq_codes"].count() != n_cand * PQ_M
+            )
     if stale:
-        # a retrain DISCARDS any appended batches — that is the staleness
+        # a retrain DISCARDS any batches — that is the staleness
         # contract (appends must mirror corpus growth), but losing them
         # must be observable, not silent
-        batches = (
-            hadoop_list_dirs(spark, f"{root}/ivf_assigned_batches")
-            + hadoop_list_dirs(spark, f"{root}/pq_codes_batches")
-            + hadoop_list_dirs(spark, f"{root}/tombstones")
+        batches = hadoop_list_dirs(spark, f"{root}/batches") + hadoop_list_dirs(
+            spark, f"{root}/tombstones"
         )
         if batches:
             import warnings
 
             warnings.warn(
                 f"load_ann_index: retraining {root} discards "
-                f"{len(batches)} appended batch director"
+                f"{len(batches)} batch director"
                 f"{'y' if len(batches) == 1 else 'ies'} (index does not "
                 f"match the corpus at {sf_dir} — appends not mirrored by "
                 f"corpus growth, or a crash left the index inconsistent)",
@@ -1876,12 +1725,49 @@ def _load_ann_index_fresh(
                 stacklevel=2,
             )
         save_ann_index(spark, sf_dir, root)
+        views = _views()
     return {
         "ivf_centroids": spark.read.parquet(f"{root}/ivf_centroids"),
-        "ivf_assigned": _load_index_relation(spark, root, "ivf_assigned"),
         "pq_codebook": spark.read.parquet(f"{root}/pq_codebook"),
-        "pq_codes": _load_index_relation(spark, root, "pq_codes"),
+        **views,
     }
+
+
+def _encode_batch(
+    spark: SparkSession,
+    new_vectors: DataFrame,
+    root: str,
+    batch_tag: str,
+    gen: int,
+    write_meta: bool,
+) -> int:
+    """Encode (vec_id, v) rows against the SAVED quantizers — nearest
+    saved IVF centroid, saved PQ codebooks (standard IVF/PQ append: the
+    quantizers are trained once, the inverted lists grow) — and write
+    them as one store batch at ``gen``. Encoding is deterministic
+    (rounded sims/distances, id tie-breaks), so re-encoding an
+    identical vector reproduces its cell and codes exactly. Returns the
+    batch's row count."""
+    cdf = spark.read.parquet(f"{root}/ivf_centroids")
+    codebook = spark.read.parquet(f"{root}/pq_codebook")
+    new_vectors = new_vectors.persist()  # 2 writes + 1 count, 1 lineage pay
+    try:
+        ANN_INDEX.write_batch(
+            spark,
+            root,
+            batch_tag,
+            {
+                "ivf_assigned": _nearest_cells(
+                    cdf, _pts_of(new_vectors), "pv", "pn", "point_id", 1
+                ),
+                "pq_codes": _encode_pq(new_vectors, codebook),
+            },
+            gen,
+            write_meta,
+        )
+        return new_vectors.count()
+    finally:
+        new_vectors.unpersist()
 
 
 def append_ann_index(
@@ -1892,86 +1778,16 @@ def append_ann_index(
     write_meta: bool = True,
 ) -> int:
     """Add a NEW batch of candidate vectors to a saved ANN index
-    WITHOUT retraining — the every-crawl loop for vectors, the
-    ``update_band_index`` analogue: new points are assigned to their
-    nearest SAVED IVF centroid and encoded against the SAVED PQ
-    codebooks (standard IVF/PQ append semantics — the quantizers are
-    trained once, the inverted lists grow). ``new_vectors``:
+    WITHOUT retraining — the every-crawl loop for vectors: a generation-0
+    store batch encoded against the saved quantizers. ``new_vectors``:
     (vec_id, v array<double>) with ids disjoint from the indexed set;
-    ``batch_tag`` names the crawl batch — each batch writes its own
-    subdirectory in OVERWRITE mode, so a retried or crashed-and-rerun
-    append replaces itself instead of duplicating rows, and
-    ``index_meta``'s candidate count is RECOMPUTED from the stored
-    assignment (never incremented blind, so a retry cannot
-    double-count). Returns the appended row count. Encoding is
-    deterministic (rounded sims/distances, id tie-breaks), so
-    re-encoding an identical vector reproduces its cell and codes
-    exactly.
-
-    ``write_meta=False`` leaves the index UNCOMMITTED (meta deleted,
-    batch dirs written) for a caller issuing several mutations
-    back-to-back — only the LAST one recounts and commits meta. The
-    intermediate state equals the mid-writer crash state the meta-last
-    protocol already handles, so crash-consistency is unchanged."""
-    from generic_data_ingestor_framework_spark.fileops import (
-        hadoop_delete,
-        sf_tag,
-    )
-
-    tag = sf_tag(batch_tag)
-    hadoop_delete(spark, f"{root}/index_meta")  # invalidate before mutating
-    cdf = spark.read.parquet(f"{root}/ivf_centroids")
-    codebook = spark.read.parquet(f"{root}/pq_codebook")
-    new_vectors = new_vectors.persist()  # 2 writes + 1 count, 1 lineage pay
-    try:
-        pts = new_vectors.select(
-            F.col("vec_id").alias("point_id"),
-            F.col("v").alias("pv"),
-            _norm(F.col("v")).alias("pn"),
-        )
-        _write_batch_pair(
-            spark,
-            _nearest_cells(cdf, pts, "pv", "pn", "point_id", 1),
-            f"{root}/ivf_assigned_batches/{tag}",
-            _encode_pq(new_vectors, codebook),
-            f"{root}/pq_codes_batches/{tag}",
-        )
-        n_new = new_vectors.count()
-    finally:
-        new_vectors.unpersist()
-    if write_meta:
-        n_total = _load_index_relation(
-            spark, root, "ivf_assigned", allow_large_delta=True
-        ).count()
-        _write_index_meta(spark, root, n_total)
-    _bump_ann_epoch(root)
-    return n_new
-
-
-def _write_batch_pair(
-    spark: SparkSession,
-    assigned: DataFrame,
-    assigned_path: str,
-    codes: DataFrame,
-    codes_path: str,
-) -> None:
-    """Write a mutation batch's two relations CONCURRENTLY (guide
-    §2.6): they are independent jobs over the same persisted batch, so
-    one job's straggler tail back-fills with the other's tasks. Both
-    inputs must already be fully constructed (no cachemgr builds happen
-    on the pool threads)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _wa():
-        assigned.write.partitionBy("cell").mode("overwrite").parquet(assigned_path)
-
-    def _wc():
-        codes.write.mode("overwrite").parquet(codes_path)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(w) for w in (_wa, _wc)]
-        for f in futs:
-            f.result()
+    ``batch_tag`` names the crawl batch, so a retried append replaces
+    itself, and meta's candidate count is RECOMPUTED from the stored
+    view (a retry cannot double-count). Returns the appended row count.
+    ``write_meta=False`` defers the meta commit to the last mutation of
+    a back-to-back sequence (the uncommitted state equals the mid-write
+    crash state the meta-last protocol already handles)."""
+    return _encode_batch(spark, new_vectors, root, batch_tag, 0, write_meta)
 
 
 def supersede_ann_index(
@@ -1982,54 +1798,13 @@ def supersede_ann_index(
     gen: int,
     write_meta: bool = True,
 ) -> int:
-    """Register RE-CRAWLED CHANGED vectors: same saved-quantizer encode
-    as ``append_ann_index`` (assign to nearest SAVED centroid, encode
-    against SAVED codebooks — quantizers train once), but ids MAY
-    overlap the indexed set and every written row carries generation
-    ``gen``: probes take latest-generation-wins
-    (``_load_index_relation``), so the ids' previous vectors stop
-    serving immediately, and ``compact_ann_index`` physically drops
-    them. Per-tag overwrite keeps retries idempotent; meta is
-    recomputed from the EFFECTIVE assignment (never incremented
-    blind). ``gen`` must exceed every generation previously written
-    for these ids (the crawl loop's monotonic batch counter).
-    ``write_meta=False``: see ``append_ann_index`` — defer the meta
-    commit to the last mutation of a back-to-back sequence."""
-    from generic_data_ingestor_framework_spark.fileops import (
-        hadoop_delete,
-        sf_tag,
-    )
-
-    tag = sf_tag(batch_tag)
-    hadoop_delete(spark, f"{root}/index_meta")  # invalidate before mutating
-    cdf = spark.read.parquet(f"{root}/ivf_centroids")
-    codebook = spark.read.parquet(f"{root}/pq_codebook")
-    new_vectors = new_vectors.persist()
-    try:
-        pts = new_vectors.select(
-            F.col("vec_id").alias("point_id"),
-            F.col("v").alias("pv"),
-            _norm(F.col("v")).alias("pn"),
-        )
-        _write_batch_pair(
-            spark,
-            _nearest_cells(cdf, pts, "pv", "pn", "point_id", 1).withColumn(
-                "gen", F.lit(gen)
-            ),
-            f"{root}/ivf_assigned_batches/{tag}",
-            _encode_pq(new_vectors, codebook).withColumn("gen", F.lit(gen)),
-            f"{root}/pq_codes_batches/{tag}",
-        )
-        n_new = new_vectors.count()
-    finally:
-        new_vectors.unpersist()
-    if write_meta:
-        n_total = _load_index_relation(
-            spark, root, "ivf_assigned", allow_large_delta=True
-        ).count()
-        _write_index_meta(spark, root, n_total)
-    _bump_ann_epoch(root)
-    return n_new
+    """Register RE-CRAWLED CHANGED vectors: the ``append_ann_index``
+    encode, but ids MAY overlap the indexed set and rows carry
+    generation ``gen`` (> every generation previously written for these
+    ids — the crawl loop's monotonic batch counter): the effective view
+    stops serving the ids' previous vectors immediately and compaction
+    drops them physically."""
+    return _encode_batch(spark, new_vectors, root, batch_tag, gen, write_meta)
 
 
 def delete_ann_index_ids(
@@ -2040,32 +1815,13 @@ def delete_ann_index_ids(
     gen: int,
     write_meta: bool = True,
 ) -> int:
-    """Tombstone vectors out of a saved ANN index at generation ``gen``
-    (the crawl loop's 'document gone' signal). ``ids``: a (vec_id)
-    frame. Pure markers in their own per-tag subdirectory (idempotent
-    retries); probes stop serving the ids immediately
-    (latest-generation-wins, tombstone wins a gen tie), compaction
-    drops their rows physically. Returns the effective candidate count
-    after the delete (or -1 with ``write_meta=False``, which defers the
-    recount + meta commit to the last mutation of a back-to-back
-    sequence — see ``append_ann_index``)."""
-    from generic_data_ingestor_framework_spark.fileops import (
-        hadoop_delete,
-        sf_tag,
+    """Tombstone vectors (a ``vec_id`` frame) out of a saved ANN index
+    at generation ``gen`` (the crawl loop's 'document gone' signal).
+    Returns the effective candidate count after the delete (-1 with
+    ``write_meta=False``)."""
+    return ANN_INDEX.write_tombstones(
+        spark, root, batch_tag, ids.select("vec_id"), gen, write_meta
     )
-
-    tag = sf_tag(batch_tag)
-    hadoop_delete(spark, f"{root}/index_meta")  # invalidate before mutating
-    ids.select(
-        F.col("vec_id").alias("point_id"), F.lit(gen).alias("gen")
-    ).write.mode("overwrite").parquet(f"{root}/tombstones/{tag}")
-    if not write_meta:
-        _bump_ann_epoch(root)
-        return -1
-    n_total = _load_index_relation(spark, root, "ivf_assigned", allow_large_delta=True).count()
-    _write_index_meta(spark, root, n_total)
-    _bump_ann_epoch(root)
-    return n_total
 
 
 def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2188,7 +1944,7 @@ def ann_retrain_decision(
     ``min_recall_bp``. Driver-side arithmetic over two aggregate-sized
     gauge outputs (collected rows or (cell, share)/(batch, recall)
     tuples) — the train-once/append-forever contract's other
-    enforcement arm, next to ``maybe_compact_ann_index`` (which keeps
+    enforcement arm, next to the store's ``maybe_compact`` (which keeps
     probes cheap; this keeps them CORRECT and BALANCED)."""
     def _get(row, key, idx):
         try:
@@ -2211,137 +1967,6 @@ def ann_retrain_decision(
     }
 
 
-def compact_ann_index(spark: SparkSession, root: str) -> int:
-    """MAJOR COMPACTION for a persisted ANN index: fold every appended
-    batch subdirectory into the base relations and clear the batch
-    directories. A crawl loop appends one subdirectory per batch per
-    relation; after many crawls the probe-side union grows into a
-    small-files problem (each probe lists and opens every batch dir —
-    at 100 TB, thousands of tiny parquet footers per query job), and
-    appended rows are NOT cell-partitioned, so the partition-pruned
-    probe path degrades toward scanning every batch file. Compaction
-    rewrites ``ivf_assigned`` partitioned by cell (appended rows join
-    their inverted lists on disk) and ``pq_codes`` as one relation,
-    then removes the batch dirs — results are IDENTICAL before and
-    after (pure layout change; ``ann_index_crawl`` phase 3 pins this
-    invariance through the gate).
-
-    Crash-consistency: same meta-last protocol as save/append — meta
-    is invalidated first, the compacted relations are staged and
-    swapped, batch dirs cleared, meta rewritten LAST from the stored
-    assignment count. A crash mid-compaction leaves meta absent or
-    counts disagreeing, and ``load_ann_index`` retrains. Returns the
-    compacted index's candidate count."""
-    from generic_data_ingestor_framework_spark.fileops import (
-        hadoop_delete,
-        hadoop_fs_path,
-    )
-
-    hadoop_delete(spark, f"{root}/index_meta")  # invalidate before mutating
-    # stage the folded relations (a direct overwrite would read and
-    # clobber the same directory in one job). _load_index_relation is
-    # the EFFECTIVE view, so superseded generations and tombstoned ids
-    # are PHYSICALLY dropped here — the delete/supersede debt a crawl
-    # loop accumulates is paid at compaction, and the tombstone dirs
-    # themselves are cleared below.
-    assigned = _load_index_relation(spark, root, "ivf_assigned", allow_large_delta=True)
-    codes = _load_index_relation(spark, root, "pq_codes", allow_large_delta=True)
-    # the two folded rewrites are independent — overlap them (guide
-    # §2.6); both views were constructed above, so the pool threads
-    # only run write jobs
-    _write_batch_pair(
-        spark,
-        assigned,
-        f"{root}/ivf_assigned_compact",
-        codes,
-        f"{root}/pq_codes_compact",
-    )
-    for name in ("ivf_assigned", "pq_codes"):
-        hadoop_delete(spark, f"{root}/{name}")
-        hadoop_delete(spark, f"{root}/{name}_batches")
-        fs, src = hadoop_fs_path(spark, f"{root}/{name}_compact")
-        _, dst = hadoop_fs_path(spark, f"{root}/{name}")
-        fs.rename(src, dst)
-    hadoop_delete(spark, f"{root}/tombstones")
-    n_total = spark.read.parquet(f"{root}/ivf_assigned").count()
-    _write_index_meta(spark, root, n_total)
-    _bump_ann_epoch(root)
-    return n_total
-
-
-def ann_index_pressure_stats(spark: SparkSession, root: str) -> dict:
-    """Delta/base PRESSURE of a persisted ANN index — the vector twin
-    of ``dedup.band_index_pressure_stats``: the effective view masks
-    the base with a BROADCAST anti join on the delta's mark set
-    (gen-tagged supersede ids + tombstones — see
-    ``_load_index_relation``), safe only while that set stays
-    batch-sized. Plain append batches are unioned, never broadcast, so
-    they count toward the base, not the delta. Counts are parquet-
-    metadata reads plus one distinct over the (batch-sized) marks."""
-    from generic_data_ingestor_framework_spark.fileops import hadoop_list_dirs
-    from generic_data_ingestor_framework_spark.llm.dedup import BCAST_BYTES_PER_ID
-    from generic_data_ingestor_framework_spark.scale import broadcast_threshold_bytes
-
-    base_ids = spark.read.parquet(f"{root}/ivf_assigned").count()
-    marks = []
-    for sub in hadoop_list_dirs(spark, f"{root}/ivf_assigned_batches"):
-        b = spark.read.parquet(sub)
-        if "gen" in b.columns:
-            marks.append(b.select("point_id"))
-        else:
-            base_ids += b.count()
-    for sub in hadoop_list_dirs(spark, f"{root}/tombstones"):
-        marks.append(spark.read.parquet(sub).select("point_id"))
-    if marks:
-        from functools import reduce
-
-        delta_ids = reduce(DataFrame.unionByName, marks).distinct().count()
-    else:
-        delta_ids = 0
-    threshold = broadcast_threshold_bytes(spark)
-    est_bytes = delta_ids * BCAST_BYTES_PER_ID
-    return {
-        "base_ids": base_ids,
-        "delta_ids": delta_ids,
-        "pressure_bp": (delta_ids * 10000) // base_ids if base_ids else 10000,
-        "est_broadcast_bytes": est_bytes,
-        "broadcast_threshold_bytes": threshold,
-        "over_broadcast_budget": 0 < threshold < est_bytes,
-    }
-
-
-def maybe_compact_ann_index(
-    spark: SparkSession,
-    root: str,
-    max_delta_ratio: float = 0.10,
-    stats: dict | None = None,
-) -> dict:
-    """AUTO-COMPACT policy for a persisted ANN index: compact when the
-    delta's mark set exceeds ``max_delta_ratio`` of the base ids OR its
-    estimated broadcast size exceeds the session's broadcast budget —
-    the enforcement arm of the batch-sized-delta contract. A crawl
-    pipeline runs this after its supersede/delete steps (pipeline op
-    ``ann_auto_compact``); between runs, ``_load_index_relation``'s
-    guard refuses oversized broadcasts loudly. Returns the pressure
-    stats plus the decision. ``stats``: optionally the CURRENT
-    ``ann_index_pressure_stats`` result, when the caller just measured
-    it (the pressure gate member) — passing it skips an identical
-    back-to-back recomputation; it must reflect the index's present
-    state."""
-    if stats is None:
-        stats = ann_index_pressure_stats(spark, root)
-    over_ratio = stats["delta_ids"] > max_delta_ratio * stats["base_ids"]
-    reason = (
-        "delta_ratio" if over_ratio
-        else "broadcast_budget" if stats["over_broadcast_budget"]
-        else ""
-    )
-    if reason and stats["delta_ids"] > 0:
-        compact_ann_index(spark, root)
-        return {**stats, "compacted": True, "reason": reason}
-    return {**stats, "compacted": False, "reason": reason}
-
-
 # Crawl/append batches are re-keyed past max(vec_id) — offsets are
 # DERIVED (broadcast 1-row aggregate / scalar subquery), not fixed
 # constants, so the disjoint-id-space assumption holds at every SF
@@ -2357,7 +1982,7 @@ def _crawl_off(vecs: DataFrame):
 def ann_index_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cross-run ANN crawl loop driven END-TO-END through the
     PERSISTED index — the gate member for ``save_ann_index`` /
-    ``append_ann_index`` / ``_load_index_relation``, mirroring
+    ``append_ann_index`` / the store's effective view, mirroring
     ``band_index_crawl`` for the vector side: a unit test proves each
     step in isolation, but this member drives the full save → append →
     re-probe cycle through the on-disk parquet relations, so a
@@ -2376,35 +2001,18 @@ def ann_index_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed in the probed cell), phase 2 is the PQ ADC top-k over the
     grown code relation (``approx_sim`` pins the appended codes' ADC
     integers exactly). Phases 3-4 re-serve both paths after a MAJOR
-    COMPACTION (``compact_ann_index``: batch subdirs folded into the
+    COMPACTION (``ANN_INDEX.compact``: batch subdirs folded into the
     cell-partitioned base, meta-last) — identical values with a new
     phase tag, so the gate pins layout-invariance of the compaction.
     Single-writer contract: the crawl root is namespaced per session
-    (like the band-crawl tables), so concurrent sessions sharing a
+    (``_member_root``), so concurrent sessions sharing a
     warehouse cannot corrupt each other mid-read.
 
     Scale shape: identical to ``ann_ivf_persisted``/``ann_pq_persisted``
     — the probe side reads only the probed cell partitions plus the
     (batch-sized) appended subdirectories; quantizers stay trained
     once, inverted lists grow per crawl."""
-    from generic_data_ingestor_framework_spark.fileops import (
-        hadoop_delete,
-        hadoop_list_dirs,
-    )
-
-    base = _ann_index_root(spark, sf_dir)
-    root = base + "_crawl_" + _session_tag(spark)
-    # reap ALL foreign crawl roots (any session tag) so repeated sweeps
-    # don't accumulate index copies — safe ONLY under the single-writer-
-    # per-warehouse contract (see dedup._reset_managed_table): a warehouse
-    # is owned by one session at a time, so any other tag is a dead
-    # session's leftover, never a live concurrent crawl
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    prefix = base + "_crawl_"
-    for sub in hadoop_list_dirs(spark, wh):
-        if sub.rstrip("/").split("/")[-1].startswith(prefix.rstrip("/").split("/")[-1]):
-            hadoop_delete(spark, sub)
-    hadoop_delete(spark, root)  # idempotent re-runs
+    root = _member_root(spark, sf_dir, "crawl")
     save_ann_index(spark, sf_dir, root)
     vecs = _vectors(spark, sf_dir)
     # the crawl batch is the 5 query vectors re-keyed past max(vec_id):
@@ -2418,9 +2026,9 @@ def ann_index_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_ann_index(spark, batch, root, "crawl_b1")
 
     cdf = spark.read.parquet(f"{root}/ivf_centroids")
-    assigned = _load_index_relation(spark, root, "ivf_assigned")
+    assigned = ANN_INDEX.view(spark, root, "ivf_assigned")
     codebook = spark.read.parquet(f"{root}/pq_codebook")
-    codes = _load_index_relation(spark, root, "pq_codes")
+    codes = ANN_INDEX.view(spark, root, "pq_codes")
 
     qs = _query_side(spark, sf_dir)
     probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES)
@@ -2476,7 +2084,7 @@ def ann_index_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relations (appended rows join their cell partitions on disk) and
     # both probe paths re-serve — results must be IDENTICAL to phases
     # 1-2 (a pure layout change), which the shared oracle pins
-    compact_ann_index(spark, root)
+    ANN_INDEX.compact(spark, root)
     assigned_c = spark.read.parquet(f"{root}/ivf_assigned")
     codes_c = spark.read.parquet(f"{root}/pq_codes")
     ivf3 = _ivf_topk(
@@ -2656,8 +2264,8 @@ RECRAWL_DELETED_RES = 3
 def ann_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DELETE/SUPERSEDE crawl loop driven END-TO-END through the
     PERSISTED ANN index — the gate member for ``supersede_ann_index`` /
-    ``delete_ann_index_ids`` / the effective view in
-    ``_load_index_relation`` / tombstone-dropping ``compact_ann_index``
+    ``delete_ann_index_ids`` / the store's effective view /
+    tombstone-dropping ``ANN_INDEX.compact``
     (mirrors ``ann_index_crawl``, which pins the append-only loop, and
     ``band_index_recrawl`` on the band side).
 
@@ -2679,21 +2287,7 @@ def ann_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     effective-view merge touches only the batch-sized delta marks
     (broadcast anti join; the index never shuffles), and compaction
     restores the delta-free path."""
-    from generic_data_ingestor_framework_spark.fileops import (
-        hadoop_delete,
-        hadoop_list_dirs,
-    )
-
-    base = _ann_index_root(spark, sf_dir)
-    root = base + "_recrawl_" + _session_tag(spark)
-    # reap ALL foreign recrawl roots — safe under the single-writer-
-    # per-warehouse contract (see ann_index_crawl)
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    prefix = (base + "_recrawl_").rstrip("/").split("/")[-1]
-    for sub in hadoop_list_dirs(spark, wh):
-        if sub.rstrip("/").split("/")[-1].startswith(prefix):
-            hadoop_delete(spark, sub)
-    hadoop_delete(spark, root)  # idempotent re-runs
+    root = _member_root(spark, sf_dir, "recrawl")
     save_ann_index(spark, sf_dir, root)
     vecs = _vectors(spark, sf_dir)
     cand = F.col("vec_id") >= N_QUERY
@@ -2710,8 +2304,8 @@ def ann_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cdf = spark.read.parquet(f"{root}/ivf_centroids")
     codebook = spark.read.parquet(f"{root}/pq_codebook")
-    assigned = _load_index_relation(spark, root, "ivf_assigned")
-    codes = _load_index_relation(spark, root, "pq_codes")
+    assigned = ANN_INDEX.view(spark, root, "ivf_assigned")
+    codes = ANN_INDEX.view(spark, root, "pq_codes")
 
     qs = _query_side(spark, sf_dir)  # local memoized rows - no corpus scan (r15)
     probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES)
@@ -2766,7 +2360,7 @@ def ann_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compaction deletes the delta/tombstone paths
     out12 = _tag(ivf, 1).unionAll(_tag(pq, 2)).localCheckpoint(eager=True)
 
-    compact_ann_index(spark, root)
+    ANN_INDEX.compact(spark, root)
     assigned_c = spark.read.parquet(f"{root}/ivf_assigned")
     codes_c = spark.read.parquet(f"{root}/pq_codes")
     ivf3 = _ivf_topk(
@@ -2786,13 +2380,10 @@ def ann_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out12.unionAll(_tag(ivf3, 3)).unionAll(_tag(pq4, 4))
 
 
-def _session_tag(spark: SparkSession) -> str:
-    """A filesystem-safe per-session suffix (the Spark application id)
-    — namespaces crawl-owned index roots so two sessions sharing a
-    warehouse never mutate the same directory."""
-    import re
+def _member_root(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    from generic_data_ingestor_framework_spark.fileops import sf_tag
 
-    return re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
+    return indexstore.member_root(spark, f"ann_index_{sf_tag(sf_dir)}_{kind}")
 
 
 def ann_retrain_decision_member(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2986,7 +2577,7 @@ def ann_index_pressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     index (supersede vec_id%5==0 at gen 1 with reversed vectors,
     tombstone vec_id%7==3 at gen 2 — the ~31% touched cohort exceeds
     the default 10% policy at every SF), measure the delta/base
-    pressure, run ``maybe_compact_ann_index`` — it MUST fire — and
+    pressure, run ``ANN_INDEX.maybe_compact`` — it MUST fire — and
     measure again. Stage 1 pins the observed pressure (delta ids = the
     touched cohort, base ids = all candidates); stage 2 pins the
     enforcement (delta drained, pressure 0, base = the effective
@@ -2997,21 +2588,7 @@ def ann_index_pressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the pressure probe is parquet-metadata counts plus
     one distinct over the batch-sized marks; compaction is the one
     full rewrite the policy exists to schedule."""
-    from generic_data_ingestor_framework_spark.fileops import (
-        hadoop_delete,
-        hadoop_list_dirs,
-    )
-
-    base = _ann_index_root(spark, sf_dir)
-    root = base + "_pressure_" + _session_tag(spark)
-    # reap ALL foreign pressure roots — safe under the single-writer-
-    # per-warehouse contract (see ann_index_crawl)
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    prefix = (base + "_pressure_").rstrip("/").split("/")[-1]
-    for sub in hadoop_list_dirs(spark, wh):
-        if sub.rstrip("/").split("/")[-1].startswith(prefix):
-            hadoop_delete(spark, sub)
-    hadoop_delete(spark, root)  # idempotent re-runs
+    root = _member_root(spark, sf_dir, "pressure")
     save_ann_index(spark, sf_dir, root)
     vecs = _vectors(spark, sf_dir)
     cand = F.col("vec_id") >= N_QUERY
@@ -3025,16 +2602,17 @@ def ann_index_pressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # effective-view recount instead of two — r14 opt)
     supersede_ann_index(spark, changed, root, "pressure_b1", gen=1, write_meta=False)
     delete_ann_index_ids(spark, deleted, root, "pressure_b2", gen=2)
-    p1 = ann_index_pressure_stats(spark, root)
+    p1 = ANN_INDEX.pressure_stats(spark, root)
     # p1 measured the exact state maybe_compact would re-measure —
     # pass it through (r14 opt: one stats pass instead of two)
-    dec = maybe_compact_ann_index(spark, root, stats=p1)
-    p2 = ann_index_pressure_stats(spark, root)
+    dec = ANN_INDEX.maybe_compact(spark, root, stats=p1)
+    p2 = ANN_INDEX.pressure_stats(spark, root)
     rows = [
         (1, p1["base_ids"], p1["delta_ids"], p1["pressure_bp"], False),
         (2, p2["base_ids"], p2["delta_ids"], p2["pressure_bp"], dec["compacted"]),
     ]
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "stage int, base_ids bigint, delta_ids bigint, pressure_bp bigint, "
         "compacted boolean",
@@ -3068,19 +2646,7 @@ def stream_ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from generic_data_ingestor_framework_spark.fileops import (
-        hadoop_delete,
-        hadoop_list_dirs,
-    )
-
-    base = _ann_index_root(spark, sf_dir)
-    root = base + "_streamidx_" + _session_tag(spark)
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    prefix = (base + "_streamidx_").rstrip("/").split("/")[-1]
-    for sub in hadoop_list_dirs(spark, wh):
-        if sub.rstrip("/").split("/")[-1].startswith(prefix):
-            hadoop_delete(spark, sub)
-    hadoop_delete(spark, root)  # idempotent re-runs
+    root = _member_root(spark, sf_dir, "streamidx")
     save_ann_index(spark, sf_dir, root)
 
     vecs = _vectors(spark, sf_dir)
@@ -3129,7 +2695,7 @@ def stream_ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(ckpt, ignore_errors=True)
 
     cdf = spark.read.parquet(f"{root}/ivf_centroids")
-    assigned = _load_index_relation(spark, root, "ivf_assigned")
+    assigned = ANN_INDEX.view(spark, root, "ivf_assigned")
     qs = _query_side(spark, sf_dir)  # local memoized rows - no corpus scan (r15)
     probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES)
     cells = [r["cell"] for r in probed.select("cell").distinct().collect()]

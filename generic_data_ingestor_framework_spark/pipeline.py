@@ -506,7 +506,7 @@ def _step_dedup_near_index(df: DataFrame, p: dict) -> DataFrame:
     """Cross-run NEAR-duplicate dedup against a PERSISTED band index —
     the crawl loop as a pipeline step::
 
-        {"op": "dedup_near_index", "table": "corpus_band_index",
+        {"op": "dedup_near_index", "root": "/idx/corpus_band_index",
          "id": "doc_id", "text": "text", "update": true,
          "admitted_table": "run42_admitted"}
 
@@ -515,52 +515,56 @@ def _step_dedup_near_index(df: DataFrame, p: dict) -> DataFrame:
     are not admitted. With ``update`` the admitted rows are first
     WRITTEN to ``admitted_table`` (each crawl's durable output — and
     it pins the probe result against the index append that follows),
-    then their bands append to the index so tomorrow's run sees them.
-    The index table must exist (``save_band_index`` seeds it).
+    then their bands append to the index at generation 0 under the
+    batch tag ``admitted_table``, so tomorrow's run sees them. The
+    index must exist (``save_band_index_versioned`` seeds it).
 
     Retry contract: ``admitted_table`` names THIS crawl run. If it
-    already exists, the run is treated as (at least partially)
-    complete — recomputing the probe would reject every doc the first
-    attempt admitted (their bands are in the index) and overwrite the
-    durable output with an empty frame — so the step re-appends ONLY
-    the recorded admissions' bands that are not already in the index
-    (``skip_existing`` anti-join): a retry after a crash in EITHER
-    half converges on the same result, and a routine re-execution of
-    an already-completed spec is a pure read — the index does not
-    accumulate duplicate band rows across re-runs. See
+    already exists — in this session's catalog or left under the
+    warehouse by an earlier process (``sink.attach_table``) — the run
+    is treated as (at least partially) complete: recomputing the probe
+    would reject every doc the first attempt admitted (their bands are
+    in the index) and overwrite the durable output with an empty
+    frame. The step re-writes the recorded admissions' batch instead,
+    which replaces itself under the same tag: a retry after a crash in
+    EITHER half converges, and a re-execution of an already-completed
+    spec leaves the index's effective rows unchanged. Once a compaction
+    has folded that batch into the base, a re-execution re-appends rows
+    the base holds: probes ignore them (they match distinct keys) and
+    the next compaction drops them. See
     ``llm/dedup.py`` ``band_index_crawl`` — the driver-gated member
     exercising this cycle."""
-    from generic_data_ingestor_framework_spark.fileops import hadoop_exists
+    from generic_data_ingestor_framework_spark.fileops import sf_tag
     from generic_data_ingestor_framework_spark.llm.dedup import (
-        dedup_against_band_index,
-        update_band_index,
+        dedup_against_band_index_versioned,
+        supersede_band_index,
     )
 
     spark = df.sparkSession
+    root = p["root"]
     id_col = p.get("id", "doc_id")
     text_col = p.get("text", "text")
-    if p.get("update"):
-        out_tbl = p.get("admitted_table", f"{p['table']}_admitted")
-        if spark.catalog.tableExists(out_tbl):
-            admitted = spark.table(out_tbl)
-            update_band_index(
-                spark, admitted, p["table"], id_col, text_col, skip_existing=True
-            )
-            return admitted
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        if hadoop_exists(spark, f"{wh}/{out_tbl.lower()}"):
-            raise RuntimeError(
-                f"admitted table {out_tbl!r} has data at its warehouse "
-                f"location but is not in this session's catalog (fresh "
-                f"metastore?) — re-register it or remove the location; "
-                f"refusing to overwrite a prior crawl's durable output"
-            )
-        admitted = dedup_against_band_index(spark, df, p["table"], id_col, text_col)
-        admitted.write.saveAsTable(out_tbl)
-        admitted = spark.table(out_tbl)
-        update_band_index(spark, admitted, p["table"], id_col, text_col)
-        return admitted
-    return dedup_against_band_index(spark, df, p["table"], id_col, text_col)
+    if not p.get("update"):
+        return dedup_against_band_index_versioned(spark, df, root, id_col, text_col)
+    out_tbl = p.get("admitted_table") or f"{sf_tag(root.rsplit('/', 1)[-1])}_admitted"
+    if not (spark.catalog.tableExists(out_tbl) or sink_mod.attach_table(spark, out_tbl)):
+        dedup_against_band_index_versioned(
+            spark, df, root, id_col, text_col
+        ).write.saveAsTable(out_tbl)
+    admitted = spark.table(out_tbl)
+    supersede_band_index(spark, admitted, root, out_tbl, 0, id_col, text_col)
+    return admitted
+
+
+def _ann_vectors(df: DataFrame, p: dict) -> DataFrame:
+    """The step's (vec_id, v array<double>) rows from its ``id`` and
+    ``vec`` columns."""
+    from generic_data_ingestor_framework_spark.llm.similarity import _as_double
+
+    return df.select(
+        F.col(p.get("id", "vec_id")).alias("vec_id"),
+        _as_double(F.col(p.get("vec", "embedding"))).alias("v"),
+    )
 
 
 def _step_ann_append(df: DataFrame, p: dict) -> DataFrame:
@@ -578,24 +582,14 @@ def _step_ann_append(df: DataFrame, p: dict) -> DataFrame:
     admitted rows).
 
     Retry contract: ``batch_tag`` names THIS crawl run — the append
-    writes per-tag overwrite-mode subdirectories and recomputes the
-    meta count from stored data, so a crashed-and-rerun spec replaces
-    its own batch instead of duplicating rows. Run
-    ``compact_ann_index`` periodically to fold accumulated batches
-    into the cell-partitioned base."""
-    from generic_data_ingestor_framework_spark.llm.similarity import (
-        _as_double,
-        append_ann_index,
-    )
+    writes a per-tag overwrite-mode batch and recomputes the meta count
+    from stored data, so a crashed-and-rerun spec replaces its own
+    batch instead of duplicating rows. Compact periodically
+    (``ann_auto_compact``) to fold accumulated batches into the
+    cell-partitioned base."""
+    from generic_data_ingestor_framework_spark.llm.similarity import append_ann_index
 
-    from pyspark.sql import functions as F
-
-    id_col = p.get("id", "vec_id")
-    vec_col = p.get("vec", "embedding")
-    vecs = df.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    append_ann_index(df.sparkSession, vecs, p["root"], p["batch_tag"])
+    append_ann_index(df.sparkSession, _ann_vectors(df, p), p["root"], p["batch_tag"])
     return df
 
 
@@ -613,22 +607,13 @@ def _step_ann_supersede(df: DataFrame, p: dict) -> DataFrame:
     old vectors immediately (latest-generation-wins). ``gen`` must
     exceed every generation previously written for these ids — the
     crawl loop's monotonic batch counter. Pass-through frame; same
-    per-tag overwrite retry contract as ``ann_append``; run
-    ``compact_ann_index`` periodically to drop superseded rows
-    physically."""
-    from generic_data_ingestor_framework_spark.llm.similarity import (
-        _as_double,
-        supersede_ann_index,
-    )
+    per-tag overwrite retry contract as ``ann_append``; compaction
+    drops superseded rows physically."""
+    from generic_data_ingestor_framework_spark.llm.similarity import supersede_ann_index
 
-    from pyspark.sql import functions as F
-
-    id_col = p.get("id", "vec_id")
-    vec_col = p.get("vec", "embedding")
-    vecs = df.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
+    supersede_ann_index(
+        df.sparkSession, _ann_vectors(df, p), p["root"], p["batch_tag"], int(p["gen"])
     )
-    supersede_ann_index(df.sparkSession, vecs, p["root"], p["batch_tag"], int(p["gen"]))
     return df
 
 
@@ -645,8 +630,6 @@ def _step_ann_delete(df: DataFrame, p: dict) -> DataFrame:
         delete_ann_index_ids,
     )
 
-    from pyspark.sql import functions as F
-
     ids = df.select(F.col(p.get("id", "vec_id")).alias("vec_id"))
     delete_ann_index_ids(df.sparkSession, ids, p["root"], p["batch_tag"], int(p["gen"]))
     return df
@@ -654,20 +637,20 @@ def _step_ann_delete(df: DataFrame, p: dict) -> DataFrame:
 
 def _step_band_supersede(df: DataFrame, p: dict) -> DataFrame:
     """Register this frame's documents as RE-CRAWLED CHANGED content in
-    a VERSIONED band index (``supersede_band_index``)::
+    a band index (``supersede_band_index``)::
 
-        {"op": "band_supersede", "delta_table": "corpus_bands_delta",
-         "gen": 2, "id": "doc_id", "text": "text"}
+        {"op": "band_supersede", "root": "/idx/corpus_band_index",
+         "batch_tag": "recrawl43", "gen": 2, "id": "doc_id",
+         "text": "text"}
 
-    The docs' new bands land in the delta at generation ``gen``; their
-    old bands stop matching immediately and are physically dropped by
-    ``compact_band_index_versioned``. A re-run re-appends the same
-    rows — duplicates are inert at probe time (band sets) and dropped
-    at compaction. Pass-through frame."""
+    The docs' new bands land at generation ``gen``; their old bands
+    stop matching immediately and are physically dropped at
+    compaction. A re-run replaces its own batch (per-tag overwrite).
+    Pass-through frame."""
     from generic_data_ingestor_framework_spark.llm.dedup import supersede_band_index
 
     supersede_band_index(
-        df.sparkSession, df, p["delta_table"], int(p["gen"]),
+        df.sparkSession, df, p["root"], p["batch_tag"], int(p["gen"]),
         p.get("id", "doc_id"), p.get("text", "text"),
     )
     return df
@@ -726,63 +709,50 @@ def _step_scd2_apply(df: DataFrame, p: dict) -> DataFrame:
     return df
 
 
-def _step_ann_auto_compact(df: DataFrame, p: dict) -> DataFrame:
-    """Enforce the batch-sized-delta contract on a persisted ANN index
-    (``maybe_compact_ann_index``) — run after supersede/delete steps::
+def _auto_compact(df: DataFrame, p: dict, family) -> DataFrame:
+    """Enforce the batch-sized-delta contract on an index (the store's
+    ``maybe_compact``) — run after supersede/delete steps::
 
         {"op": "ann_auto_compact", "root": "/idx/ann_corpus",
          "max_delta_ratio": 0.1}
 
-    Compacts when the delta's mark set exceeds ``max_delta_ratio`` of
-    the base ids or the session's broadcast budget; otherwise a cheap
-    metadata probe. Without this policy a crawl spec that defers
-    compaction accumulates delta until the probe-side broadcast guard
-    refuses loudly. Pass-through frame."""
-    from generic_data_ingestor_framework_spark.llm.similarity import (
-        maybe_compact_ann_index,
-    )
-
-    maybe_compact_ann_index(
+    (``band_auto_compact`` alike, for a band index.) Compacts when the
+    marked ids exceed ``max_delta_ratio`` of the base ids or the
+    session's broadcast budget; otherwise one aggregate probe. Without
+    this policy a crawl spec that defers compaction accumulates delta
+    until the probe-side broadcast guard refuses loudly. Pass-through
+    frame."""
+    family.maybe_compact(
         df.sparkSession, p["root"], float(p.get("max_delta_ratio", 0.10))
     )
     return df
 
 
+def _step_ann_auto_compact(df: DataFrame, p: dict) -> DataFrame:
+    from generic_data_ingestor_framework_spark.llm.similarity import ANN_INDEX
+
+    return _auto_compact(df, p, ANN_INDEX)
+
+
 def _step_band_auto_compact(df: DataFrame, p: dict) -> DataFrame:
-    """Enforce the batch-sized-delta contract on a versioned band index
-    (``maybe_compact_band_index``) — the band twin of
-    ``ann_auto_compact``::
+    from generic_data_ingestor_framework_spark.llm.dedup import BAND_INDEX
 
-        {"op": "band_auto_compact", "base_table": "corpus_bands",
-         "delta_table": "corpus_bands_delta", "max_delta_ratio": 0.1}
-
-    Pass-through frame."""
-    from generic_data_ingestor_framework_spark.llm.dedup import (
-        maybe_compact_band_index,
-    )
-
-    maybe_compact_band_index(
-        df.sparkSession,
-        p["base_table"],
-        p["delta_table"],
-        float(p.get("max_delta_ratio", 0.10)),
-        int(p.get("n_buckets", 32)),
-    )
-    return df
+    return _auto_compact(df, p, BAND_INDEX)
 
 
 def _step_band_delete(df: DataFrame, p: dict) -> DataFrame:
-    """Tombstone this frame's doc ids out of a versioned band index::
+    """Tombstone this frame's doc ids out of a band index::
 
-        {"op": "band_delete", "delta_table": "corpus_bands_delta",
-         "gen": 3, "id": "doc_id"}
+        {"op": "band_delete", "root": "/idx/corpus_band_index",
+         "batch_tag": "recrawl43_gone", "gen": 3, "id": "doc_id"}
 
     Pass-through frame; same retry/compaction contract as
     ``band_supersede``."""
     from generic_data_ingestor_framework_spark.llm.dedup import delete_band_index_docs
 
     delete_band_index_docs(
-        df.sparkSession, df, p["delta_table"], int(p["gen"]), p.get("id", "doc_id")
+        df.sparkSession, df, p["root"], p["batch_tag"], int(p["gen"]),
+        p.get("id", "doc_id"),
     )
     return df
 

@@ -1368,8 +1368,8 @@ def stream_ann_index_append(
     AvailableNow drains the directory and stops; dropping the trigger
     makes it a continuous indexer. At 100 TB the per-batch work is
     batch × k centroid scoring + batch × M×K code assignment — no
-    corpus-sized job anywhere; run ``compact_ann_index`` periodically
-    to fold the accumulated batch directories."""
+    corpus-sized job anywhere; compact periodically
+    (``ANN_INDEX.compact``) to fold the accumulated batch directories."""
     from generic_data_ingestor_framework_spark.llm.similarity import (
         _as_double,
         append_ann_index,
@@ -1382,7 +1382,9 @@ def stream_ann_index_append(
             F.col(id_col).alias("vec_id"),
             _as_double(F.col(vec_col)).alias("v"),
         )
-        append_ann_index(batch_df.sparkSession, vecs, index_root, f"stream_b{batch_id}")
+        # the caller's session, not the batch's clone: the index store
+        # keeps its mutation epoch in this session's cachemgr registry
+        append_ann_index(spark, vecs, index_root, f"stream_b{batch_id}")
 
     q = (
         spark.readStream.schema(schema)
@@ -1428,9 +1430,9 @@ def stream_ann_index_upsert(
 
     AvailableNow drains and stops; dropping the trigger makes it a
     continuous maintainer. Per-batch work is batch-sized (centroid
-    scoring + PQ encode + two metadata-count jobs); run
-    ``compact_ann_index`` periodically to physically drop superseded
-    generations and tombstones."""
+    scoring + PQ encode + the meta recount); compact periodically
+    (``ANN_INDEX.compact``) to physically drop superseded generations
+    and tombstones."""
     from generic_data_ingestor_framework_spark.llm.similarity import (
         _as_double,
         delete_ann_index_ids,
@@ -1447,7 +1449,7 @@ def stream_ann_index_upsert(
             _as_double(F.col(vec_col)).alias("v"),
         )
         dels = batch_df.filter(is_del).select(F.col(id_col).alias("vec_id"))
-        sess = batch_df.sparkSession
+        sess = spark  # the caller's session (see stream_ann_index_append)
         has_ups, has_dels = not ups.isEmpty(), not dels.isEmpty()
         if has_ups:
             # when a delete follows in the SAME micro-batch, defer the

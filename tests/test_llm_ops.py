@@ -467,6 +467,7 @@ def test_load_ann_index_memo_evicts_superseded_epochs(spark):
     (epoch, fingerprint) is gone — only the current version's entry
     stays registered for the root."""
     from generic_data_ingestor_framework_spark import cachemgr
+    from generic_data_ingestor_framework_spark.llm import indexstore
     from generic_data_ingestor_framework_spark.llm import similarity as S
 
     root = S._ann_index_root(spark, SF)
@@ -476,7 +477,7 @@ def test_load_ann_index_memo_evicts_superseded_epochs(spark):
         for (_, k) in cachemgr._VALUES
         if isinstance(k, tuple) and k[:3] == ("ann_index_loaded", SF, root)
     )
-    S._bump_ann_epoch(root)  # what every writer does after committing
+    indexstore.bump(spark, root)  # what every writer does after committing
     S.load_ann_index(spark, SF)
     n_after = sum(
         1
@@ -1314,7 +1315,6 @@ def test_semantic_clusters_adaptive_k_oracle_parity(spark, tmp_path):
                  con.execute(similarity.ORACLES["dedup_semantic_clusters"]).fetchall())
     assert got == ora
     # engine-side hygiene for other tests sharing the session registry
-    similarity._KMEANS_CACHE.clear()
     cachemgr.clear_caches()
 
 
@@ -1338,7 +1338,6 @@ def test_kmeans_seeding_rejects_vec_id_gaps(spark, tmp_path):
     ).write.parquet(str(d / "embeddings.parquet"))
     with pytest.raises(ValueError, match="contiguous"):
         similarity._kmeans_centroids(spark, str(d), k=8)
-    similarity._KMEANS_CACHE.clear()
     cachemgr.clear_caches()
 
 
@@ -2051,64 +2050,53 @@ def test_lsh_scurve_audit_shape(spark):
 
 
 def test_band_index_cross_run_dedup(spark, tmp_path):
-    """The SAVED band index (cross-run near-dup history) must make
-    dedup_against_band_index reproduce dedup_incremental_near exactly;
-    the bucketed history side must read WITHOUT a shuffle; and after
-    update_band_index with the admitted docs, re-running the same
-    batch admits nothing (idempotent re-crawl)."""
+    """The SAVED band index (cross-run near-dup history, generation 0)
+    must make dedup_against_band_index_versioned reproduce
+    dedup_incremental_near exactly; and after a generation-0 append of
+    the admitted docs, re-running the same batch admits nothing
+    (idempotent re-crawl). The probe's index side reading without a
+    shuffle is pinned in test_indexstore."""
     from generic_data_ingestor_framework_spark.llm.dedup import (
-        dedup_against_band_index,
+        dedup_against_band_index_versioned,
         dedup_incremental_near,
         portable_hash32,
-        save_band_index,
-        update_band_index,
+        save_band_index_versioned,
+        supersede_band_index,
     )
     from generic_data_ingestor_framework_spark.relational import load_table
-    from generic_data_ingestor_framework_spark.scale import count_exchanges
 
     sf = SF
     d = load_table(spark, sf, "documents")
     bucket = portable_hash32(F.col("doc_id").cast("string")) % 2
     corpus = d.filter(bucket == 0)
     batch = d.filter(bucket == 1)
-    table = "band_index_t1"
-    try:
-        save_band_index(spark, corpus, table)
-        admitted = dedup_against_band_index(spark, batch, table)
-        got = {(r["doc_id"], r["lang"]) for r in admitted.select("doc_id", "lang").collect()}
-        want = {
-            (r["doc_id"], r["lang"])
-            for r in dedup_incremental_near(spark, sf).collect()
-        }
-        assert got == want and len(got) > 0
+    root = str(tmp_path / "band_idx_t1")
+    save_band_index_versioned(spark, corpus, root)
+    admitted = dedup_against_band_index_versioned(spark, batch, root)
+    got = {(r["doc_id"], r["lang"]) for r in admitted.select("doc_id", "lang").collect()}
+    want = {
+        (r["doc_id"], r["lang"])
+        for r in dedup_incremental_near(spark, sf).collect()
+    }
+    assert got == want and len(got) > 0
 
-        # history side of the semi probe is bucketed: exactly ONE
-        # exchange in the probe plan (the batch side), never two
-        from generic_data_ingestor_framework_spark.llm.dedup import bands_per_row
-
-        probe = bands_per_row(batch.select("doc_id", "text")).join(
-            spark.table(table), "band_key", "semi"
-        )
-        assert count_exchanges(probe) <= 1
-
-        # crawl loop: append admitted docs' bands, re-run same batch
-        update_band_index(spark, admitted.select("doc_id", "text"), table)
-        again = dedup_against_band_index(spark, batch, table)
-        assert again.count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    # crawl loop: append admitted docs' bands, re-run same batch
+    supersede_band_index(spark, admitted.select("doc_id", "text"), root, "adm", 0)
+    again = dedup_against_band_index_versioned(spark, batch, root)
+    assert again.count() == 0
 
 
 def test_band_index_versioned_supersede_delete(spark, tmp_path):
-    """The VERSIONED band index's delete/supersede lifecycle: an
-    old-content near-dup is rejected before a supersede and admitted
-    after it; deleted docs stop claiming bands; the effective view
+    """The band index's delete/supersede lifecycle: an old-content
+    near-dup is rejected before a supersede and admitted after it;
+    deleted docs stop claiming bands; the effective view
     pre-compaction equals the raw base post-compaction; compaction
-    PHYSICALLY drops every superseded/tombstoned row and preserves the
-    bucketed (shuffle-free) probe layout."""
+    PHYSICALLY drops every superseded/tombstoned row and clears every
+    batch."""
+    from generic_data_ingestor_framework_spark.fileops import hadoop_list_dirs
     from generic_data_ingestor_framework_spark.llm.dedup import (
+        BAND_INDEX,
         bands_per_row,
-        compact_band_index_versioned,
         dedup_against_band_index_versioned,
         delete_band_index_docs,
         portable_hash32,
@@ -2116,7 +2104,6 @@ def test_band_index_versioned_supersede_delete(spark, tmp_path):
         supersede_band_index,
     )
     from generic_data_ingestor_framework_spark.relational import load_table
-    from generic_data_ingestor_framework_spark.scale import count_exchanges
 
     sf = SF
     d = load_table(spark, sf, "documents")
@@ -2128,75 +2115,63 @@ def test_band_index_versioned_supersede_delete(spark, tmp_path):
     copies = changed.select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "lang", "text"
     )
-    base_tbl, delta_tbl = "band_vtest_base", "band_vtest_delta"
-    try:
-        save_band_index_versioned(
-            spark, corpus.select("doc_id", "text"), base_tbl, delta_tbl
-        )
-        n_changed = changed.count()
-        assert n_changed > 0 and deleted_ids.count() > 0
+    root = str(tmp_path / "band_vtest")
+    save_band_index_versioned(spark, corpus.select("doc_id", "text"), root)
+    n_changed = changed.count()
+    assert n_changed > 0 and deleted_ids.count() > 0
 
-        # before any supersede, old-content copies are near-dups of the
-        # index and every signed copy is rejected
-        pre = dedup_against_band_index_versioned(spark, copies, base_tbl, delta_tbl)
-        assert pre.count() == 0
+    # before any supersede, old-content copies are near-dups of the
+    # index and every signed copy is rejected
+    pre = dedup_against_band_index_versioned(spark, copies, root)
+    assert pre.count() == 0
 
-        supersede_band_index(
-            spark, changed.select("doc_id", modified.alias("text")), delta_tbl, gen=1
-        )
-        delete_band_index_docs(spark, deleted_ids, delta_tbl, gen=2)
+    new_text = changed.select("doc_id", modified.alias("text"))
+    supersede_band_index(spark, new_text, root, "b1", gen=1)
+    delete_band_index_docs(spark, deleted_ids, root, "b2", gen=2)
 
-        # now the changed docs' OLD bands are dead: copies admit unless
-        # their bands collide with some other live doc or an earlier
-        # copy (min-id rule) — at this SF a nonzero admitted set
-        post = dedup_against_band_index_versioned(spark, copies, base_tbl, delta_tbl)
-        adm_effective = {r["doc_id"] for r in post.select("doc_id").collect()}
-        assert len(adm_effective) > 0
+    # now the changed docs' OLD bands are dead: copies admit unless
+    # their bands collide with some other live doc or an earlier
+    # copy (min-id rule) — at this SF a nonzero admitted set
+    post = dedup_against_band_index_versioned(spark, copies, root)
+    adm_effective = {r["doc_id"] for r in post.select("doc_id").collect()}
+    assert len(adm_effective) > 0
 
-        compact_band_index_versioned(spark, base_tbl, delta_tbl)
+    BAND_INDEX.compact(spark, root)
 
-        # raw base post-compaction == effective view pre-compaction
-        raw = dedup_against_band_index_versioned(spark, copies, base_tbl, None)
-        assert {r["doc_id"] for r in raw.select("doc_id").collect()} == adm_effective
+    # raw base post-compaction == effective view pre-compaction
+    raw = dedup_against_band_index_versioned(spark, copies, root, raw=True)
+    assert {r["doc_id"] for r in raw.select("doc_id").collect()} == adm_effective
 
-        # physical drop: no deleted doc survives; changed docs carry
-        # ONLY gen-1 rows; their old (gen-0) bands are gone unless some
-        # UNREMOVED doc also owns that band key
-        base_rows = spark.table(base_tbl)
-        assert base_rows.join(deleted_ids, "doc_id", "semi").count() == 0
-        changed_rows = base_rows.join(changed.select("doc_id"), "doc_id", "semi")
-        assert changed_rows.filter(F.col("gen") != 1).count() == 0
-        old_bands = bands_per_row(changed.select("doc_id", "text")).select("band_key")
-        survivors = base_rows.join(
-            old_bands.distinct(), "band_key", "semi"
-        ).join(changed.select("doc_id"), "doc_id", "semi")
-        assert survivors.count() == 0
+    # physical drop: no deleted doc survives; changed docs carry
+    # ONLY their new (gen-1) bands; their old (gen-0) bands are gone
+    # unless some UNREMOVED doc also owns that band key
+    base_rows = spark.read.parquet(f"{root}/bands")
+    assert base_rows.join(deleted_ids, "doc_id", "semi").count() == 0
+    changed_rows = base_rows.join(changed.select("doc_id"), "doc_id", "semi")
+    new_bands = bands_per_row(new_text).join(deleted_ids, "doc_id", "anti")
+    assert sorted(map(tuple, changed_rows.select("doc_id", "band_key").collect())) == sorted(
+        map(tuple, new_bands.select("doc_id", "band_key").collect())
+    )
+    old_bands = bands_per_row(changed.select("doc_id", "text")).select("band_key")
+    survivors = base_rows.join(
+        old_bands.distinct(), "band_key", "semi"
+    ).join(changed.select("doc_id"), "doc_id", "semi")
+    assert survivors.join(new_bands, ["doc_id", "band_key"], "anti").count() == 0
 
-        # compaction preserved bucketing: raw probe plan has at most
-        # one exchange (the batch side)
-        probe = bands_per_row(copies.select("doc_id", "text")).join(
-            base_rows, "band_key", "semi"
-        )
-        assert count_exchanges(probe) <= 1
-
-        # delta is truncated (schema intact, zero rows)
-        assert spark.table(delta_tbl).count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {base_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {delta_tbl}")
+    # every batch and tombstone is folded away
+    assert not hadoop_list_dirs(spark, f"{root}/batches")
+    assert not hadoop_list_dirs(spark, f"{root}/tombstones")
 
 
-def test_band_delta_gen_tie_tombstone_wins(spark):
+def test_band_delta_gen_tie_tombstone_wins(spark, tmp_path):
     """A delete and a supersede at the SAME generation must resolve to
-    the delete on the band side (r12 ADVICE): the ANN family documents
-    tombstone-wins-a-gen-tie (`_load_index_relation` orders by desc
-    gen, desc tombstone), so `_band_delta_live` resolving the same tie
-    to the supersede would silently resurrect a deleted doc's bands for
-    a caller following the documented rule. Checked at both probe time
-    (effective view) and compaction (physical rows)."""
+    the delete (r12 ADVICE): the store's tie rule (tombstone wins a
+    generation tie) holds for the band family as for the ANN family,
+    so a caller following it never silently resurrects a deleted doc's
+    bands. Checked at both probe time (effective view) and compaction
+    (physical rows)."""
     from generic_data_ingestor_framework_spark.llm.dedup import (
-        _band_delta_live,
-        compact_band_index_versioned,
+        BAND_INDEX,
         delete_band_index_docs,
         save_band_index_versioned,
         supersede_band_index,
@@ -2206,32 +2181,29 @@ def test_band_delta_gen_tie_tombstone_wins(spark):
         [(1, "alpha beta gamma delta epsilon zeta eta theta")],
         "doc_id bigint, text string",
     )
-    base_tbl, delta_tbl = "band_tie_base", "band_tie_delta"
-    try:
-        save_band_index_versioned(spark, docs, base_tbl, delta_tbl, n_buckets=2)
-        changed = docs.select(
-            "doc_id",
-            F.concat_ws(" ", F.reverse(F.split(F.col("text"), r"\s+"))).alias("text"),
-        )
-        # SAME generation: supersede then delete
-        supersede_band_index(spark, changed, delta_tbl, gen=1)
-        delete_band_index_docs(spark, docs.select("doc_id"), delta_tbl, gen=1)
+    root = str(tmp_path / "band_tie")
+    save_band_index_versioned(spark, docs, root)
+    changed = docs.select(
+        "doc_id",
+        F.concat_ws(" ", F.reverse(F.split(F.col("text"), r"\s+"))).alias("text"),
+    )
+    # SAME generation: supersede then delete
+    supersede_band_index(spark, changed, root, "b1", gen=1)
+    delete_band_index_docs(spark, docs.select("doc_id"), root, "b2", gen=1)
 
-        # effective view: the doc carries NO live bands
-        assert _band_delta_live(spark.table(delta_tbl)).count() == 0
-        # compaction: the doc's rows are physically gone
-        compact_band_index_versioned(spark, base_tbl, delta_tbl, n_buckets=2)
-        assert spark.table(base_tbl).filter(F.col("doc_id") == 1).count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {base_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {delta_tbl}")
+    # effective view: the doc carries NO live bands
+    live = BAND_INDEX.view(spark, root, "bands").filter(F.col("band_key").isNotNull())
+    assert live.count() == 0
+    # compaction: the doc's rows are physically gone
+    BAND_INDEX.compact(spark, root)
+    assert spark.read.parquet(f"{root}/bands").filter(F.col("doc_id") == 1).count() == 0
 
 
-def test_band_index_pressure_policy_and_guard(spark):
+def test_band_index_pressure_policy_and_guard(spark, tmp_path):
     """The batch-sized-delta contract, ENFORCED (r12 verdict #1): with
     the broadcast budget shrunk below the delta's estimated size, the
     probe refuses LOUDLY (RuntimeError naming the compaction fix)
-    instead of silently broadcasting; ``maybe_compact_band_index``
+    instead of silently broadcasting; the store's ``maybe_compact``
     fires on the broadcast-budget trigger (ratio not exceeded), drains
     the delta, and the probe serves again."""
     from generic_data_ingestor_framework_spark.llm import dedup as dd
@@ -2246,53 +2218,41 @@ def test_band_index_pressure_policy_and_guard(spark):
         F.concat_ws(" ", F.reverse(F.split(F.col("text"), r"\s+"))).alias("text"),
     )
     batch = d.filter(h % 3 == 1).select("doc_id", "lang", "text")
-    base_tbl, delta_tbl = "band_ptest_base", "band_ptest_delta"
+    root = str(tmp_path / "band_ptest")
+    idx = dd.BAND_INDEX
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        dd.save_band_index_versioned(
-            spark, corpus.select("doc_id", "text"), base_tbl, delta_tbl
-        )
-        dd.supersede_band_index(spark, changed, delta_tbl, gen=1)
+        dd.save_band_index_versioned(spark, corpus.select("doc_id", "text"), root)
+        dd.supersede_band_index(spark, changed, root, "p1", gen=1)
         n_changed = changed.count()
         assert n_changed > 0
         # shrink the budget below the delta's estimate -> loud refusal
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16b")
-        with pytest.raises(RuntimeError, match="compact_band_index_versioned"):
-            dd.dedup_against_band_index_versioned(
-                spark, batch, base_tbl, delta_tbl
-            ).count()
+        with pytest.raises(RuntimeError, match="band_auto_compact"):
+            dd.dedup_against_band_index_versioned(spark, batch, root).count()
         # the policy's broadcast trigger fires at a ratio that would NOT
         # (h%50 cohort is ~2% of the base, under the 10% default)
-        stats = dd.band_index_pressure_stats(spark, base_tbl, delta_tbl)
+        stats = idx.pressure_stats(spark, root)
         assert stats["over_broadcast_budget"] and stats["pressure_bp"] < 1000
-        dec = dd.maybe_compact_band_index(spark, base_tbl, delta_tbl)
+        dec = idx.maybe_compact(spark, root)
         assert dec["compacted"] and dec["reason"] == "broadcast_budget"
         # drained: pressure zero, probe serves under the tiny budget
-        after = dd.band_index_pressure_stats(spark, base_tbl, delta_tbl)
-        assert after["delta_docs"] == 0 and after["pressure_bp"] == 0
-        assert (
-            dd.dedup_against_band_index_versioned(
-                spark, batch, base_tbl, delta_tbl
-            ).count()
-            >= 0
-        )
+        after = idx.pressure_stats(spark, root)
+        assert after["delta_ids"] == 0 and after["pressure_bp"] == 0
+        assert dd.dedup_against_band_index_versioned(spark, batch, root).count() >= 0
         # and an under-budget, under-ratio delta does NOT compact
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        dd.supersede_band_index(spark, changed, delta_tbl, gen=2)
-        dec2 = dd.maybe_compact_band_index(spark, base_tbl, delta_tbl)
+        dd.supersede_band_index(spark, changed, root, "p2", gen=2)
+        dec2 = idx.maybe_compact(spark, root)
         assert not dec2["compacted"] and dec2["reason"] == ""
-        assert dd.band_index_pressure_stats(spark, base_tbl, delta_tbl)[
-            "delta_docs"
-        ] == n_changed
+        assert idx.pressure_stats(spark, root)["delta_ids"] == n_changed
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql(f"DROP TABLE IF EXISTS {base_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {delta_tbl}")
 
 
 def test_ann_index_pressure_policy_and_guard(spark, tmp_path):
     """ANN twin of the band pressure test: an oversized delta makes the
-    effective view refuse loudly; ``maybe_compact_ann_index`` drains it
+    effective view refuse loudly; ``ANN_INDEX.maybe_compact`` drains it
     (compaction itself runs guard-free with AQE-decided joins); plain
     appends never count as delta pressure."""
     root = str(tmp_path / "ann_pidx")
@@ -2307,17 +2267,17 @@ def test_ann_index_pressure_policy_and_guard(spark, tmp_path):
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16b")
-        with pytest.raises(RuntimeError, match="compact_ann_index"):
-            similarity._load_index_relation(spark, root, "ivf_assigned").count()
-        stats = similarity.ann_index_pressure_stats(spark, root)
+        with pytest.raises(RuntimeError, match="ann_auto_compact"):
+            similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count()
+        stats = similarity.ANN_INDEX.pressure_stats(spark, root)
         assert stats["delta_ids"] == n_changed and stats["over_broadcast_budget"]
-        dec = similarity.maybe_compact_ann_index(spark, root)
+        dec = similarity.ANN_INDEX.maybe_compact(spark, root)
         assert dec["compacted"] and dec["reason"] == "broadcast_budget"
-        after = similarity.ann_index_pressure_stats(spark, root)
+        after = similarity.ANN_INDEX.pressure_stats(spark, root)
         assert after["delta_ids"] == 0 and after["pressure_bp"] == 0
         # effective view serves again under the tiny budget (no delta)
         assert (
-            similarity._load_index_relation(spark, root, "ivf_assigned").count()
+            similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count()
             == stats["base_ids"]
         )
         # plain appends are unioned, not broadcast-masked: no pressure
@@ -2325,7 +2285,7 @@ def test_ann_index_pressure_policy_and_guard(spark, tmp_path):
             similarity._crawl_off(vecs)
         ).select((F.col("vec_id") + F.col("__off")).alias("vec_id"), "v")
         similarity.append_ann_index(spark, app, root, "p2")
-        st2 = similarity.ann_index_pressure_stats(spark, root)
+        st2 = similarity.ANN_INDEX.pressure_stats(spark, root)
         assert st2["delta_ids"] == 0 and not st2["over_broadcast_budget"]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
@@ -2389,9 +2349,9 @@ def test_ann_index_persist_load_equals_session(spark, tmp_path):
     # stale meta (foreign candidate count) -> load_ann_index rebuilds
     spark.createDataFrame(
         [(similarity.ANN_INDEX_VERSION, 1)], "version int, n_candidates bigint"
-    ).write.mode("overwrite").parquet(f"{root}/index_meta")
+    ).write.mode("overwrite").parquet(f"{root}/meta")
     idx2 = similarity.load_ann_index(spark, SF, root)
-    meta = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta["n_candidates"] != 1  # rebuilt, not trusted
     got2 = sorted(
         map(tuple, similarity._ivf_topk(
@@ -2410,7 +2370,7 @@ def test_ann_index_append_encodes_with_saved_quantizers(spark, tmp_path):
     root = str(tmp_path / "ann_idx_append")
     similarity.save_ann_index(spark, SF, root)
     before_assigned = spark.read.parquet(f"{root}/ivf_assigned").count()
-    meta0 = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta0 = spark.read.parquet(f"{root}/meta").collect()[0]
 
     # "new crawl batch": every 5th indexed candidate, re-crawled with a
     # shifted id but byte-identical vector
@@ -2428,7 +2388,7 @@ def test_ann_index_append_encodes_with_saved_quantizers(spark, tmp_path):
     n_again = similarity.append_ann_index(spark, batch, root, "crawl_b1")
     assert n_again == n_new
 
-    assigned = similarity._load_index_relation(spark, root, "ivf_assigned")
+    assigned = similarity.ANN_INDEX.view(spark, root, "ivf_assigned")
     assert assigned.count() == before_assigned + n_new
     # identical vector -> identical cell, regardless of which write it
     # came from (deterministic encoding against the SAVED centroids)
@@ -2441,7 +2401,7 @@ def test_ann_index_append_encodes_with_saved_quantizers(spark, tmp_path):
     )
     assert mism == 0
 
-    codes = similarity._load_index_relation(spark, root, "pq_codes")
+    codes = similarity.ANN_INDEX.view(spark, root, "pq_codes")
     cmism = (
         codes.filter(F.col("point_id") >= SHIFT)
         .select((F.col("point_id") - SHIFT).alias("point_id"), "m", F.col("code").alias("new_code"))
@@ -2451,7 +2411,7 @@ def test_ann_index_append_encodes_with_saved_quantizers(spark, tmp_path):
     )
     assert cmism == 0
 
-    meta1 = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta1 = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta1["n_candidates"] == meta0["n_candidates"] + n_new
 
 
@@ -2482,7 +2442,7 @@ def test_ann_index_supersede_delete_compact(spark, tmp_path):
     n_eff = similarity.delete_ann_index_ids(spark, deleted, root, "re_b2", gen=2)
     assert n_eff == n0 - n_deleted
 
-    assigned = similarity._load_index_relation(spark, root, "ivf_assigned")
+    assigned = similarity.ANN_INDEX.view(spark, root, "ivf_assigned")
     # effective view: no deleted id serves; every surviving changed id
     # has exactly ONE row and it is the reversed vector's row
     assert assigned.join(deleted, assigned["point_id"] == deleted["vec_id"], "semi").count() == 0
@@ -2500,11 +2460,11 @@ def test_ann_index_supersede_delete_compact(spark, tmp_path):
     assert one == 0
 
     eff_rows = assigned.count()
-    eff_codes = similarity._load_index_relation(spark, root, "pq_codes").count()
+    eff_codes = similarity.ANN_INDEX.view(spark, root, "pq_codes").count()
     assert eff_rows == n0 - n_deleted
     assert eff_codes == eff_rows * similarity.PQ_M
 
-    n_comp = similarity.compact_ann_index(spark, root)
+    n_comp = similarity.ANN_INDEX.compact(spark, root)
     assert n_comp == eff_rows
     raw = spark.read.parquet(f"{root}/ivf_assigned")
     raw_codes = spark.read.parquet(f"{root}/pq_codes")
@@ -2516,7 +2476,7 @@ def test_ann_index_supersede_delete_compact(spark, tmp_path):
     from generic_data_ingestor_framework_spark.fileops import hadoop_exists
 
     assert not hadoop_exists(spark, f"{root}/tombstones")
-    meta = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta["n_candidates"] == eff_rows
 
 
@@ -2535,7 +2495,7 @@ def test_ann_index_supersede_crash_triggers_retrain(spark, tmp_path):
 
     root = str(tmp_path / "ann_idx_sup_crash")
     similarity.save_ann_index(spark, SF, root)
-    n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
+    n0 = spark.read.parquet(f"{root}/meta").collect()[0]["n_candidates"]
 
     changed = (
         similarity._vectors(spark, SF)
@@ -2545,14 +2505,14 @@ def test_ann_index_supersede_crash_triggers_retrain(spark, tmp_path):
     similarity.supersede_ann_index(spark, changed, root, "sup_crash", gen=1)
     # simulate the crash: the codes half never landed, and a foreign
     # actor recreated a COUNT-CONSISTENT meta (worst case for probes)
-    hadoop_delete(spark, f"{root}/pq_codes_batches")
+    hadoop_delete(spark, f"{root}/batches/sup_crash/pq_codes")
     spark.createDataFrame(
         [(similarity.ANN_INDEX_VERSION, int(n0))], "version int, n_candidates bigint"
-    ).write.mode("overwrite").parquet(f"{root}/index_meta")
+    ).write.mode("overwrite").parquet(f"{root}/meta")
     # sanity: both effective counts WOULD pass — only tag symmetry fails
-    assert similarity._load_index_relation(spark, root, "ivf_assigned").count() == n0
+    assert similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count() == n0
     assert (
-        similarity._load_index_relation(spark, root, "pq_codes").count()
+        similarity.ANN_INDEX.view(spark, root, "pq_codes").count()
         == n0 * similarity.PQ_M
     )
 
@@ -2560,7 +2520,7 @@ def test_ann_index_supersede_crash_triggers_retrain(spark, tmp_path):
         warnings.simplefilter("always")
         idx = similarity.load_ann_index(spark, SF, root)
     assert any("discards" in str(w.message) for w in wrec)
-    assert not hadoop_list_dirs(spark, f"{root}/ivf_assigned_batches")
+    assert not hadoop_list_dirs(spark, f"{root}/batches")
     assert idx["ivf_assigned"].count() == n0
     assert idx["pq_codes"].count() == n0 * similarity.PQ_M
 
@@ -2579,7 +2539,7 @@ def test_ann_index_append_crash_triggers_retrain(spark, tmp_path):
 
     root = str(tmp_path / "ann_idx_crash")
     similarity.save_ann_index(spark, SF, root)
-    n_base = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
+    n_base = spark.read.parquet(f"{root}/meta").collect()[0]["n_candidates"]
 
     SHIFT = 1_000_000
     batch = (
@@ -2593,12 +2553,12 @@ def test_ann_index_append_crash_triggers_retrain(spark, tmp_path):
     # the meta claims the base count (the append had invalidated it;
     # a concurrent reader recreated... any meta/relations disagreement
     # must be treated as foreign) — assigned count n+k vs meta n
-    hadoop_delete(spark, f"{root}/pq_codes_batches")
+    hadoop_delete(spark, f"{root}/batches/crash_b1/pq_codes")
     spark.createDataFrame(
         [(similarity.ANN_INDEX_VERSION, int(n_base))],
         "version int, n_candidates bigint",
-    ).write.mode("overwrite").parquet(f"{root}/index_meta")
-    assert hadoop_list_dirs(spark, f"{root}/ivf_assigned_batches")  # batch present
+    ).write.mode("overwrite").parquet(f"{root}/meta")
+    assert hadoop_list_dirs(spark, f"{root}/batches")  # batch present
 
     with warnings.catch_warnings(record=True) as wrec:
         warnings.simplefilter("always")
@@ -2606,29 +2566,29 @@ def test_ann_index_append_crash_triggers_retrain(spark, tmp_path):
     assert any("discards" in str(w.message) for w in wrec)  # loud, not silent
     # retrained: batch dirs cleared, meta back to the corpus count,
     # relations internally consistent again
-    assert not hadoop_list_dirs(spark, f"{root}/ivf_assigned_batches")
-    meta = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    assert not hadoop_list_dirs(spark, f"{root}/batches")
+    meta = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta["n_candidates"] == n_base
     assert idx["ivf_assigned"].count() == n_base
     assert idx["pq_codes"].count() == n_base * similarity.PQ_M
 
     # and the true mid-append shape (meta deleted first) also retrains
     similarity.append_ann_index(spark, batch, root, "crash_b2")
-    hadoop_delete(spark, f"{root}/index_meta")
-    hadoop_delete(spark, f"{root}/pq_codes_batches")
+    hadoop_delete(spark, f"{root}/meta")
+    hadoop_delete(spark, f"{root}/batches/crash_b2/pq_codes")
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", RuntimeWarning)
         similarity.load_ann_index(spark, SF, root)
-    meta2 = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta2 = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta2["n_candidates"] == n_base
-    assert not hadoop_list_dirs(spark, f"{root}/ivf_assigned_batches")
+    assert not hadoop_list_dirs(spark, f"{root}/batches")
 
 
 def test_ann_index_fresh_process_serves_without_retrain(spark, tmp_path):
     """The 'train once, probe forever' contract CROSS-PROCESS: a brand
     new Python/JVM process loads the saved index and serves IVF + PQ
     results identical to the session-trained ones WITHOUT retraining
-    (pinned by the index_meta file mtimes — a retrain rewrites them)."""
+    (pinned by the meta file mtimes — a retrain rewrites them)."""
     import json as _json
     import os
     import subprocess
@@ -2640,7 +2600,7 @@ def test_ann_index_fresh_process_serves_without_retrain(spark, tmp_path):
     want_pq = sorted(map(list, similarity.ann_pq_topk(spark, SF).collect()))
 
     def _meta_mtimes() -> dict:
-        d = f"{root}/index_meta"
+        d = f"{root}/meta"
         return {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)}
 
     before = _meta_mtimes()
@@ -2679,8 +2639,111 @@ print("RESULT::" + json.dumps({{
     assert _meta_mtimes() == before  # no retrain: meta untouched
 
 
+def test_band_index_fresh_process_serves(spark, tmp_path):
+    """The band index outlives its process: a brand new Python/JVM
+    process (its own in-memory catalog, another warehouse) probes the
+    store this process seeded and admits exactly the same documents —
+    the root path is all it needs."""
+    import json as _json
+    import subprocess
+    import sys
+
+    from generic_data_ingestor_framework_spark.llm.dedup import (
+        dedup_against_band_index_versioned,
+        portable_hash32,
+        save_band_index_versioned,
+        supersede_band_index,
+    )
+    from generic_data_ingestor_framework_spark.relational import load_table
+
+    d = load_table(spark, SF, "documents")
+    h = portable_hash32(F.col("doc_id").cast("string"))
+    root = str(tmp_path / "band_idx_fresh")
+    save_band_index_versioned(spark, d.filter(h % 3 == 0), root)
+    supersede_band_index(spark, d.filter(h % 3 == 2), root, "run2", gen=0)
+    want = sorted(
+        r["doc_id"]
+        for r in dedup_against_band_index_versioned(spark, d.filter(h % 3 == 1), root).collect()
+    )
+    assert want
+
+    repo = str(Path(__file__).resolve().parents[1])
+    script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession, functions as F
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.sql.warehouse.dir", {str(tmp_path / "wh_band")!r})
+         .getOrCreate())
+from generic_data_ingestor_framework_spark.llm.dedup import (
+    dedup_against_band_index_versioned, portable_hash32)
+from generic_data_ingestor_framework_spark.relational import load_table
+d = load_table(spark, {SF!r}, "documents")
+h = portable_hash32(F.col("doc_id").cast("string"))
+adm = dedup_against_band_index_versioned(spark, d.filter(h % 3 == 1), {root!r})
+print("RESULT::" + json.dumps(sorted(r["doc_id"] for r in adm.collect())))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path),
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    payload = [l for l in out.stdout.splitlines() if l.startswith("RESULT::")]
+    assert payload, out.stdout[-2000:]
+    assert _json.loads(payload[0][len("RESULT::"):]) == want
+
+
+def test_clear_caches_forces_kmeans_retrain(spark, monkeypatch):
+    """The k-means and PQ training memos live in ``cachemgr``: a warm
+    call trains nothing, and ``clear_caches()`` forces a retrain."""
+    from generic_data_ingestor_framework_spark import cachemgr
+
+    trained = []
+    real = similarity._kmeans_over
+
+    def counting(spark_, cand, k):
+        trained.append(k)
+        return real(spark_, cand, k)
+
+    monkeypatch.setattr(similarity, "_kmeans_over", counting)
+    cachemgr.clear_caches()
+    first = similarity._kmeans_centroids(spark, SF)
+    assert similarity._kmeans_centroids(spark, SF) == first
+    assert len(trained) == 1
+    cachemgr.clear_caches()
+    assert similarity._kmeans_centroids(spark, SF) == first
+    assert len(trained) == 2
+    cachemgr.clear_caches()
+
+
+def test_centroid_memo_keys_name_their_centroids(spark):
+    """The append-wave assignment and probed-cell memos are keyed by
+    the centroids they score against: two centroid sets in one session
+    give two different assignments, not the first set's memo."""
+    crows = similarity._frozen_cents(spark, SF)
+    flipped = [(cid, [-x for x in cv], cvn) for cid, cv, cvn in crows]
+
+    def cells(parts) -> list[tuple]:
+        return sorted(map(tuple, parts[0].select("point_id", "cell").collect()))
+
+    a = cells(similarity._append_assigns(spark, SF, crows))
+    b = cells(similarity._append_assigns(spark, SF, flipped))
+    assert a != b
+    assert a == cells(similarity._append_assigns(spark, SF, crows))
+
+    def probed(cents) -> list[tuple]:
+        df = similarity._wave_probed(
+            spark, SF, ("probe_key_test", SF), cents, "cell", "in_probe"
+        )
+        return sorted(map(tuple, df.collect()))
+
+    assert probed(crows) != probed(flipped)
+
+
 def test_ann_index_compaction_is_layout_only(spark, tmp_path):
-    """compact_ann_index folds batch subdirs into the base relations:
+    """Compaction folds batch subdirs into the base relations:
     row-identical assigned/codes, batch dirs gone, meta recounted from
     stored data — a pure layout change with the meta-last protocol."""
     from generic_data_ingestor_framework_spark.fileops import (
@@ -2699,18 +2762,18 @@ def test_ann_index_compaction_is_layout_only(spark, tmp_path):
     n_new = similarity.append_ann_index(spark, batch, root, "compact_b1")
     assert n_new > 0
     before_assigned = sorted(
-        map(tuple, similarity._load_index_relation(spark, root, "ivf_assigned")
+        map(tuple, similarity.ANN_INDEX.view(spark, root, "ivf_assigned")
             .select("point_id", "cell").collect())
     )
     before_codes = sorted(
-        map(tuple, similarity._load_index_relation(spark, root, "pq_codes").collect())
+        map(tuple, similarity.ANN_INDEX.view(spark, root, "pq_codes").collect())
     )
-    meta_before = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta_before = spark.read.parquet(f"{root}/meta").collect()[0]
 
-    n_total = similarity.compact_ann_index(spark, root)
+    n_total = similarity.ANN_INDEX.compact(spark, root)
     assert n_total == meta_before["n_candidates"] == len(before_assigned)
-    assert not hadoop_list_dirs(spark, f"{root}/ivf_assigned_batches")
-    assert not hadoop_exists(spark, f"{root}/pq_codes_batches")
+    assert not hadoop_list_dirs(spark, f"{root}/batches")
+    assert not hadoop_exists(spark, f"{root}/batches")
 
     after_assigned = sorted(
         map(tuple, spark.read.parquet(f"{root}/ivf_assigned")
@@ -2721,7 +2784,7 @@ def test_ann_index_compaction_is_layout_only(spark, tmp_path):
     )
     assert after_assigned == before_assigned
     assert after_codes == before_codes
-    meta_after = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta_after = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta_after["n_candidates"] == n_total
     # the compacted assignment keeps the cell-partitioned layout (the
     # probe-pruning contract): cell is a partition column on disk
@@ -2729,65 +2792,66 @@ def test_ann_index_compaction_is_layout_only(spark, tmp_path):
     assert any("cell=" in s for s in subdirs)
 
 
-def test_compact_band_index_dedups_and_preserves_probes(spark):
-    """compact_band_index rewrites the history table as DISTINCT band
-    keys in fresh bucketed files: duplicate band rows (accumulated by
-    pre-skip_existing re-appends) disappear, the probe result is
-    identical, and the history side of the probe stays shuffle-free."""
+def test_compact_band_index_dedups_and_preserves_probes(spark, tmp_path):
+    """A retried generation-0 append replaces its own batch (the store's
+    per-tag overwrite), so it leaves one copy. Duplicates that do reach
+    the index — the same admissions appended under two tags, or a
+    completed append re-run after a compaction folded it — disappear at
+    compaction, which keeps DISTINCT rows; the probe result is the same
+    before and after."""
+    from generic_data_ingestor_framework_spark.fileops import hadoop_list_dirs
     from generic_data_ingestor_framework_spark.llm.dedup import (
-        _reset_managed_table,
-        bands_per_row,
-        compact_band_index,
-        dedup_against_band_index,
+        BAND_INDEX,
+        dedup_against_band_index_versioned,
         portable_hash32,
-        save_band_index,
-        update_band_index,
+        save_band_index_versioned,
+        supersede_band_index,
     )
     from generic_data_ingestor_framework_spark.relational import load_table
-    from generic_data_ingestor_framework_spark.scale import count_exchanges
 
     sf = SF
     d = load_table(spark, sf, "documents")
     bucket = portable_hash32(F.col("doc_id").cast("string")) % 2
     corpus = d.filter(bucket == 0)
     batch = d.filter(bucket == 1)
-    table = "band_index_compact_t"
-    _reset_managed_table(spark, table)
-    try:
-        save_band_index(spark, corpus, table)
-        # materialize the admissions BEFORE appending: the relation is
-        # lazy, and re-evaluating it after the first append would see
-        # its own bands in the index and admit nothing
-        admitted = dedup_against_band_index(spark, batch, table).localCheckpoint(
-            eager=True
-        )
-        # two non-skip appends of the SAME admissions -> duplicate rows
-        update_band_index(spark, admitted.select("doc_id", "text"), table)
-        update_band_index(spark, admitted.select("doc_id", "text"), table)
-        rows_dup = spark.table(table).count()
-        distinct_keys = spark.table(table).select("band_key").distinct().count()
-        assert rows_dup > distinct_keys  # duplicates really accumulated
+    root = str(tmp_path / "band_idx_compact")
+    save_band_index_versioned(spark, corpus, root)
+    # materialize the admissions BEFORE appending: the relation is
+    # lazy, and re-evaluating it after the first append would see its
+    # own bands in the index and admit nothing
+    admitted = dedup_against_band_index_versioned(spark, batch, root).localCheckpoint(
+        eager=True
+    ).select("doc_id", "text")
+    # the SAME admissions appended twice under one tag -> one copy
+    supersede_band_index(spark, admitted, root, "adm", 0)
+    rows_once = sorted(map(tuple, BAND_INDEX.view(spark, root, "bands").collect()))
+    supersede_band_index(spark, admitted, root, "adm", 0)
+    rows = sorted(map(tuple, BAND_INDEX.view(spark, root, "bands").collect()))
+    assert rows == rows_once and len(rows) == len(set(rows))
+    distinct_rows = sorted(set(rows))
 
-        probe_before = {
+    def probe() -> set[int]:
+        return {
             r["doc_id"]
-            for r in dedup_against_band_index(spark, batch, table).collect()
+            for r in dedup_against_band_index_versioned(spark, batch, root).collect()
         }
 
-        n = compact_band_index(spark, table)
-        assert n == distinct_keys
-        assert spark.table(table).count() == distinct_keys
-        probe_after = {
-            r["doc_id"]
-            for r in dedup_against_band_index(spark, batch, table).collect()
-        }
-        assert probe_after == probe_before  # layout/dedup change only
+    # ... under a second tag -> duplicate rows really accumulate
+    supersede_band_index(spark, admitted, root, "adm_again", 0)
+    assert BAND_INDEX.view(spark, root, "bands").count() > len(distinct_rows)
+    probe_before = probe()
+    n = BAND_INDEX.compact(spark, root)
+    assert n == len(distinct_rows)
+    assert not hadoop_list_dirs(spark, f"{root}/batches")
+    assert sorted(map(tuple, spark.read.parquet(f"{root}/bands").collect())) == distinct_rows
+    assert probe() == probe_before  # layout change only
 
-        probe = bands_per_row(batch.select("doc_id", "text")).join(
-            spark.table(table), "band_key", "semi"
-        )
-        assert count_exchanges(probe) <= 1  # bucketing survived the rewrite
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    # a completed append re-run after the compaction folded it
+    supersede_band_index(spark, admitted, root, "adm", 0)
+    assert BAND_INDEX.view(spark, root, "bands").count() > len(distinct_rows)
+    assert probe() == probe_before
+    assert BAND_INDEX.compact(spark, root) == len(distinct_rows)
+    assert sorted(map(tuple, spark.read.parquet(f"{root}/bands").collect())) == distinct_rows
 
 
 def test_ann_retrain_execute_ab_invariants(spark):
@@ -2990,7 +3054,7 @@ def test_ann_write_meta_deferred_commit(spark, tmp_path):
     )
     # uncommitted between the two mutations: meta was invalidated and
     # NOT rewritten — a crash here is the already-handled retrain case
-    assert not hadoop_exists(spark, f"{root}/index_meta")
+    assert not hadoop_exists(spark, f"{root}/meta")
     # deferred-commit delete returns -1 (no recount) and stays uncommitted
     assert (
         similarity.delete_ann_index_ids(
@@ -2998,39 +3062,36 @@ def test_ann_write_meta_deferred_commit(spark, tmp_path):
         )
         == -1
     )
-    assert not hadoop_exists(spark, f"{root}/index_meta")
+    assert not hadoop_exists(spark, f"{root}/meta")
     n_eff = similarity.delete_ann_index_ids(spark, deleted, root, "wm_b2", gen=3)
     assert n_eff == n0 - deleted.count()
-    meta = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta["n_candidates"] == n_eff
 
 
 def test_supersede_band_marker_token_rule(spark, tmp_path):
-    """r14 opt: NULL-band markers now derive from the token-count rule
+    """r14 opt: NULL-band markers derive from the token-count rule
     (size(tokens) < 3 ⟺ bands_per_row emits nothing) instead of a
     second minhash pass + anti join — a superseded doc whose new
     content is unshingleable must still kill its old bands."""
     from generic_data_ingestor_framework_spark.llm.dedup import (
-        _reset_managed_table,
         dedup_against_band_index_versioned,
         save_band_index_versioned,
         supersede_band_index,
     )
 
-    base_tbl, delta_tbl = "t_marker_base", "t_marker_delta"
-    for t in (base_tbl, delta_tbl):
-        _reset_managed_table(spark, t)
+    root = str(tmp_path / "band_marker")
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta iota kappa")],
         "doc_id bigint, text string",
     )
-    save_band_index_versioned(spark, docs, base_tbl, delta_tbl)
+    save_band_index_versioned(spark, docs, root)
     # doc 1 re-crawled as a two-token text: no shingle, no bands —
     # ONLY the marker row can retire its old bands
     short = spark.createDataFrame([(1, "too short")], "doc_id bigint, text string")
-    supersede_band_index(spark, short, delta_tbl, gen=1)
-    delta = spark.table(delta_tbl)
-    markers = delta.filter(F.col("band_key").isNull() & ~F.col("tombstone"))
+    supersede_band_index(spark, short, root, "b1", gen=1)
+    delta = spark.read.parquet(f"{root}/batches/b1/bands")
+    markers = delta.filter(F.col("band_key").isNull())
     assert [r["doc_id"] for r in markers.collect()] == [1]
     # probing doc 1's ORIGINAL text is now admitted (its old bands are
     # dead); a near-dup of the untouched doc 2 is still rejected
@@ -3041,7 +3102,7 @@ def test_supersede_band_marker_token_rule(spark, tmp_path):
         ],
         "doc_id bigint, text string",
     )
-    adm = dedup_against_band_index_versioned(spark, probe, base_tbl, delta_tbl)
+    adm = dedup_against_band_index_versioned(spark, probe, root)
     assert sorted(r["doc_id"] for r in adm.collect()) == [10]
 
 

@@ -393,7 +393,7 @@ def test_pipeline_repetition_filter_rejects_reserved_and_bad_cap(spark):
              "max_top_bigram_frac": 0.0}]})
 
 
-def test_pipeline_dedup_near_index_crawl_loop(spark):
+def test_pipeline_dedup_near_index_crawl_loop(spark, tmp_path):
     """The crawl loop as a pipeline step: run 1 admits against the
     seeded index and appends its bands; run 2 (same spec, same data,
     disjoint ids) must then reject every near-dup of run 1's
@@ -401,24 +401,24 @@ def test_pipeline_dedup_near_index_crawl_loop(spark):
     from pyspark.sql import functions as F
 
     from generic_data_ingestor_framework_spark.llm.dedup import (
-        _reset_managed_table,
-        save_band_index,
+        BAND_INDEX,
+        save_band_index_versioned,
     )
     from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
     sf = SF_SMALL
-    table = "pipe_band_idx"
-    for t in (table, f"{table}_admitted"):
-        _reset_managed_table(spark, t)
+    root = str(tmp_path / "pipe_band_idx")
+    admitted_table = f"pipe_band_idx_admitted_{tmp_path.name}"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     seed = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-    save_band_index(spark, seed, table)
+    save_band_index_versioned(spark, seed, root)
 
     spec = {
         "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
         "steps": [
             {"op": "filter", "where": "doc_id % 3 = 1"},
-            {"op": "dedup_near_index", "table": table, "update": True},
+            {"op": "dedup_near_index", "root": root, "update": True,
+             "admitted_table": admitted_table},
         ],
     }
     df1, _ = run_pipeline(spark, spec)
@@ -428,12 +428,12 @@ def test_pipeline_dedup_near_index_crawl_loop(spark):
     # retry contract: re-running the same update-mode spec must return
     # the recorded admissions, NOT recompute (which would reject every
     # previously-admitted doc and wipe the durable output) — and must
-    # NOT grow the index: the re-append anti-joins bands already in the
-    # index, so a routine re-execution is a pure read
-    idx_rows = spark.table(table).count()
+    # NOT grow the index: the re-append replaces its own batch (tag =
+    # the admitted table), so the effective rows stay the same
+    idx_rows = BAND_INDEX.view(spark, root, "bands").count()
     df1b, _ = run_pipeline(spark, spec)
     assert {r["doc_id"] for r in df1b.select("doc_id").collect()} == got1
-    assert spark.table(table).count() == idx_rows
+    assert BAND_INDEX.view(spark, root, "bands").count() == idx_rows
 
     # run 2: re-crawl run-1's docs under shifted ids — every signed doc
     # is a near-dup of an admitted run-1 doc (bands appended), so the
@@ -443,7 +443,7 @@ def test_pipeline_dedup_near_index_crawl_loop(spark):
         "steps": [
             {"op": "filter", "where": "doc_id % 3 = 1"},
             {"op": "with_column", "name": "doc_id", "expr": "doc_id + 1000000"},
-            {"op": "dedup_near_index", "table": table},
+            {"op": "dedup_near_index", "root": root},
         ],
     }
     df2, _ = run_pipeline(spark, spec2)
@@ -453,6 +453,131 @@ def test_pipeline_dedup_near_index_crawl_loop(spark):
     # run-1 signed doc's bands are claimed (by history or the run-1
     # winner), so the re-crawl admits nothing
     assert got2 == set()
+
+
+def test_pipeline_dedup_near_index_rerun_after_compaction(spark, tmp_path):
+    """A completed crawl step re-run after ``band_auto_compact`` has
+    folded its batch into the base: the re-run returns the recorded
+    admissions and re-appends rows the base already holds. Probes are
+    unchanged by those duplicates, and the next compaction drops them,
+    so the compacted index does not grow."""
+    from pyspark.sql import functions as F
+
+    from generic_data_ingestor_framework_spark.llm.dedup import (
+        BAND_INDEX,
+        dedup_against_band_index_versioned,
+        save_band_index_versioned,
+    )
+    from generic_data_ingestor_framework_spark.pipeline import run_pipeline
+
+    sf = SF_SMALL
+    root = str(tmp_path / "band_idx_rerun")
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    save_band_index_versioned(
+        spark, docs.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text"), root
+    )
+    source = {"type": "parquet", "path": f"{sf}/documents.parquet"}
+    crawl = {
+        "source": source,
+        "steps": [
+            {"op": "filter", "where": "doc_id % 3 = 1"},
+            {"op": "dedup_near_index", "root": root, "update": True,
+             "admitted_table": f"rerun_admitted_{tmp_path.name}"},
+        ],
+    }
+    # pages gone since the seed: the tombstones give the auto-compact
+    # policy its pressure, and the compaction folds the crawl's batch
+    gone = {
+        "source": source,
+        "steps": [
+            {"op": "filter", "where": "doc_id % 3 = 0 AND doc_id % 7 = 0"},
+            {"op": "band_delete", "root": root, "batch_tag": "gone1", "gen": 1},
+            {"op": "band_auto_compact", "root": root, "max_delta_ratio": 0.0},
+        ],
+    }
+    first = sorted(r["doc_id"] for r in run_pipeline(spark, crawl)[0].collect())
+    assert first
+    run_pipeline(spark, gone)[0].count()
+    assert not BAND_INDEX.batch_paths(spark, root, "bands")
+    compacted = spark.read.parquet(f"{root}/bands").count()
+    probe = docs.filter(F.col("doc_id") % 3 == 2)
+
+    def admitted() -> set[int]:
+        return {
+            r["doc_id"]
+            for r in dedup_against_band_index_versioned(spark, probe, root).collect()
+        }
+
+    before = admitted()
+    assert sorted(r["doc_id"] for r in run_pipeline(spark, crawl)[0].collect()) == first
+    assert BAND_INDEX.view(spark, root, "bands").count() > compacted  # re-appended
+    assert admitted() == before
+    assert BAND_INDEX.compact(spark, root) == compacted
+    assert admitted() == before
+
+
+def test_pipeline_dedup_near_index_reruns_in_fresh_processes(spark, tmp_path):
+    """The crawl step of ``examples/pipeline_crawl_dedup.json`` run in
+    two fresh processes sharing a warehouse: the second process finds
+    the first one's admitted table (``sink.attach_table``; its catalog
+    starts empty), returns the same admitted rows, and the re-written
+    batch (tag = the admitted table) leaves the index's effective rows
+    unchanged."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    from generic_data_ingestor_framework_spark.llm.dedup import (
+        BAND_INDEX,
+        save_band_index_versioned,
+    )
+
+    sf = SF_SMALL
+    root = str(tmp_path / "corpus_band_index")
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    save_band_index_versioned(
+        spark, docs.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text"), root
+    )
+    spec = {
+        "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
+        "steps": [
+            {"op": "filter", "where": "doc_id % 3 = 1"},
+            {"op": "dedup_near_index", "root": root, "update": True,
+             "admitted_table": "crawl_admitted"},
+        ],
+    }
+    repo = str(Path(__file__).resolve().parents[1])
+    script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.sql.warehouse.dir", {str(tmp_path / "wh")!r})
+         .getOrCreate())
+from generic_data_ingestor_framework_spark.pipeline import run_pipeline
+df, _ = run_pipeline(spark, json.loads({json.dumps(spec)!r}))
+print("RESULT::" + json.dumps(sorted(r["doc_id"] for r in df.collect())))
+"""
+
+    def run() -> list[int]:
+        out = subprocess.run(
+            [sys.executable, "-c", script],
+            capture_output=True, text=True, timeout=300, cwd=str(tmp_path),
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        payload = [l for l in out.stdout.splitlines() if l.startswith("RESULT::")]
+        assert payload, out.stdout[-2000:]
+        return json.loads(payload[0][len("RESULT::"):])
+
+    first = run()
+    assert first
+    rows = BAND_INDEX.view(spark, root, "bands").count()
+    assert run() == first
+    assert BAND_INDEX.view(spark, root, "bands").count() == rows
 
 
 def test_pipeline_ann_append_step(spark, tmp_path):
@@ -468,7 +593,7 @@ def test_pipeline_ann_append_step(spark, tmp_path):
     sf = SF_SMALL
     root = str(tmp_path / "ann_idx_pipe")
     similarity.save_ann_index(spark, sf, root)
-    n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
+    n0 = spark.read.parquet(f"{root}/meta").collect()[0]["n_candidates"]
 
     spec = {
         "source": {"type": "parquet", "path": f"{sf}/embeddings.parquet"},
@@ -482,16 +607,16 @@ def test_pipeline_ann_append_step(spark, tmp_path):
     n_new = df.count()
     assert n_new > 0
     assert (
-        similarity._load_index_relation(spark, root, "ivf_assigned").count()
+        similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count()
         == n0 + n_new
     )
     # same spec, same batch_tag: the rerun REPLACES its batch (no dups)
     run_pipeline(spark, spec)
     assert (
-        similarity._load_index_relation(spark, root, "ivf_assigned").count()
+        similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count()
         == n0 + n_new
     )
-    meta = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta["n_candidates"] == n0 + n_new
 
 
@@ -509,7 +634,7 @@ def test_pipeline_ann_supersede_delete_steps(spark, tmp_path):
     sf = SF_SMALL
     root = str(tmp_path / "ann_idx_pipe_sup")
     similarity.save_ann_index(spark, sf, root)
-    n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
+    n0 = spark.read.parquet(f"{root}/meta").collect()[0]["n_candidates"]
 
     nq = similarity.N_QUERY
     spec = {
@@ -525,10 +650,10 @@ def test_pipeline_ann_supersede_delete_steps(spark, tmp_path):
     n_changed = df.count()
     assert n_changed > 0
     # supersede replaces, never grows: effective count unchanged
-    eff = similarity._load_index_relation(spark, root, "ivf_assigned")
+    eff = similarity.ANN_INDEX.view(spark, root, "ivf_assigned")
     assert eff.count() == n0
     run_pipeline(spark, spec)  # retry: per-tag overwrite, still n0
-    assert similarity._load_index_relation(spark, root, "ivf_assigned").count() == n0
+    assert similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count() == n0
 
     gone_spec = {
         "source": {"type": "parquet", "path": f"{sf}/embeddings.parquet"},
@@ -540,24 +665,24 @@ def test_pipeline_ann_supersede_delete_steps(spark, tmp_path):
     gone_df, _ = run_pipeline(spark, gone_spec)
     n_gone = gone_df.count()
     assert n_gone > 0
-    eff2 = similarity._load_index_relation(spark, root, "ivf_assigned")
+    eff2 = similarity.ANN_INDEX.view(spark, root, "ivf_assigned")
     assert eff2.count() == n0 - n_gone
 
-    similarity.compact_ann_index(spark, root)
+    similarity.ANN_INDEX.compact(spark, root)
     raw = spark.read.parquet(f"{root}/ivf_assigned")
     assert raw.count() == n0 - n_gone
     assert raw.groupBy("point_id").count().filter(F.col("count") > 1).count() == 0
 
 
 def test_pipeline_band_supersede_delete_steps(spark, tmp_path):
-    """The band_supersede / band_delete pipeline steps against a
-    versioned band index: changed docs' old bands die, gone docs stop
-    claiming bands, and compaction (with a retried supersede in the
-    delta) leaves exactly one copy of each live band row."""
+    """The band_supersede / band_delete pipeline steps against a band
+    index: changed docs' old bands die, gone docs stop claiming bands,
+    and compaction (after a retried supersede) leaves exactly one copy
+    of each live band row."""
     from pyspark.sql import functions as F
 
     from generic_data_ingestor_framework_spark.llm.dedup import (
-        compact_band_index_versioned,
+        BAND_INDEX,
         dedup_against_band_index_versioned,
         portable_hash32,
         save_band_index_versioned,
@@ -566,62 +691,56 @@ def test_pipeline_band_supersede_delete_steps(spark, tmp_path):
     from generic_data_ingestor_framework_spark.relational import load_table
 
     sf = SF_SMALL
-    base_tbl, delta_tbl = "band_pipe_base", "band_pipe_delta"
+    root = str(tmp_path / "band_pipe")
     d = load_table(spark, sf, "documents")
     h = portable_hash32(F.col("doc_id").cast("string"))
     corpus = d.filter(h % 2 == 0)
-    try:
-        save_band_index_versioned(
-            spark, corpus.select("doc_id", "text"), base_tbl, delta_tbl
-        )
-        spec = {
-            "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
-            "steps": [
-                {"op": "sql", "query": (
-                    "SELECT doc_id, concat_ws(' ', reverse(split(text, '\\\\s+')))"
-                    " AS text FROM __df__ WHERE"
-                    " CAST(conv(substring(md5(CAST(doc_id AS STRING)),1,8),16,10)"
-                    " AS BIGINT) % 2 = 0 AND doc_id % 3 = 0"
-                )},
-                {"op": "band_supersede", "delta_table": delta_tbl, "gen": 1},
-            ],
-        }
-        changed, _ = run_pipeline(spark, spec)
-        n_changed = changed.count()
-        assert n_changed > 0
-        run_pipeline(spark, spec)  # retry: duplicate delta rows, inert
-        gone_spec = {
-            "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
-            "steps": [
-                {"op": "sql", "query": (
-                    "SELECT doc_id FROM __df__ WHERE"
-                    " CAST(conv(substring(md5(CAST(doc_id AS STRING)),1,8),16,10)"
-                    " AS BIGINT) % 2 = 0 AND doc_id % 5 = 1"
-                )},
-                {"op": "band_delete", "delta_table": delta_tbl, "gen": 2},
-            ],
-        }
-        gone, _ = run_pipeline(spark, gone_spec)
-        assert gone.count() > 0
-        # old-content copies of the changed docs now admit against the
-        # effective view (their stale bands are dead)
-        copies = corpus.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 500_000).alias("doc_id"), "text"
-        )
-        adm = dedup_against_band_index_versioned(spark, copies, base_tbl, delta_tbl)
-        assert adm.count() > 0
-        compact_band_index_versioned(spark, base_tbl, delta_tbl)
-        base_rows = spark.table(base_tbl)
-        # retried supersede left no duplicate rows after compaction
-        dup = (
-            base_rows.groupBy("doc_id", "band_key", "gen").count()
-            .filter(F.col("count") > 1)
-        )
-        assert dup.count() == 0
-        assert base_rows.join(gone, "doc_id", "semi").count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {base_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {delta_tbl}")
+    save_band_index_versioned(spark, corpus.select("doc_id", "text"), root)
+    spec = {
+        "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
+        "steps": [
+            {"op": "sql", "query": (
+                "SELECT doc_id, concat_ws(' ', reverse(split(text, '\\\\s+')))"
+                " AS text FROM __df__ WHERE"
+                " CAST(conv(substring(md5(CAST(doc_id AS STRING)),1,8),16,10)"
+                " AS BIGINT) % 2 = 0 AND doc_id % 3 = 0"
+            )},
+            {"op": "band_supersede", "root": root, "batch_tag": "re_b1", "gen": 1},
+        ],
+    }
+    changed, _ = run_pipeline(spark, spec)
+    n_changed = changed.count()
+    assert n_changed > 0
+    run_pipeline(spark, spec)  # retry: replaces its own batch
+    gone_spec = {
+        "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
+        "steps": [
+            {"op": "sql", "query": (
+                "SELECT doc_id FROM __df__ WHERE"
+                " CAST(conv(substring(md5(CAST(doc_id AS STRING)),1,8),16,10)"
+                " AS BIGINT) % 2 = 0 AND doc_id % 5 = 1"
+            )},
+            {"op": "band_delete", "root": root, "batch_tag": "re_b2", "gen": 2},
+        ],
+    }
+    gone, _ = run_pipeline(spark, gone_spec)
+    assert gone.count() > 0
+    # old-content copies of the changed docs now admit against the
+    # effective view (their stale bands are dead)
+    copies = corpus.filter(F.col("doc_id") % 3 == 0).select(
+        (F.col("doc_id") + 500_000).alias("doc_id"), "text"
+    )
+    adm = dedup_against_band_index_versioned(spark, copies, root)
+    assert adm.count() > 0
+    BAND_INDEX.compact(spark, root)
+    base_rows = spark.read.parquet(f"{root}/bands")
+    # retried supersede left no duplicate rows after compaction
+    dup = (
+        base_rows.groupBy("doc_id", "band_key").count()
+        .filter(F.col("count") > 1)
+    )
+    assert dup.count() == 0
+    assert base_rows.join(gone, "doc_id", "semi").count() == 0
 
 
 def test_pipeline_scd2_apply_step(spark):
@@ -712,7 +831,7 @@ def test_pipeline_auto_compact_steps(spark, tmp_path):
 
     from generic_data_ingestor_framework_spark.llm import similarity
     from generic_data_ingestor_framework_spark.llm.dedup import (
-        band_index_pressure_stats,
+        BAND_INDEX,
         portable_hash32,
         save_band_index_versioned,
     )
@@ -735,43 +854,34 @@ def test_pipeline_auto_compact_steps(spark, tmp_path):
         ],
     }
     run_pipeline(spark, spec)
-    st = similarity.ann_index_pressure_stats(spark, root)
+    st = similarity.ANN_INDEX.pressure_stats(spark, root)
     assert st["delta_ids"] > 0, "20% policy must not fire at ~9% pressure"
     spec["steps"][-1]["max_delta_ratio"] = 0.05
     run_pipeline(spark, spec)
-    st2 = similarity.ann_index_pressure_stats(spark, root)
+    st2 = similarity.ANN_INDEX.pressure_stats(spark, root)
     assert st2["delta_ids"] == 0, "5% policy must drain the ~9% delta"
 
     # --- band side: same shape through band_auto_compact
-    base_tbl, delta_tbl = "band_autoc_base", "band_autoc_delta"
+    broot = str(tmp_path / "band_idx_autoc")
     d = load_table(spark, sf, "documents")
     h = portable_hash32(F.col("doc_id").cast("string"))
     corpus = d.filter(h % 2 == 0)
-    try:
-        save_band_index_versioned(
-            spark, corpus.select("doc_id", "text"), base_tbl, delta_tbl
-        )
-        bspec = {
-            "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
-            "steps": [
-                {"op": "sql", "query": (
-                    "SELECT doc_id, concat_ws(' ', reverse(split(text, '\\\\s+')))"
-                    " AS text FROM __df__ WHERE"
-                    " CAST(conv(substring(md5(CAST(doc_id AS STRING)),1,8),16,10)"
-                    " AS BIGINT) % 2 = 0 AND doc_id % 3 = 0"
-                )},
-                {"op": "band_supersede", "delta_table": delta_tbl, "gen": 1},
-                {"op": "band_auto_compact", "base_table": base_tbl,
-                 "delta_table": delta_tbl, "max_delta_ratio": 0.95},
-            ],
-        }
-        run_pipeline(spark, bspec)
-        assert band_index_pressure_stats(spark, base_tbl, delta_tbl)["delta_docs"] > 0
-        bspec["steps"][-1]["max_delta_ratio"] = 0.01
-        run_pipeline(spark, bspec)
-        assert (
-            band_index_pressure_stats(spark, base_tbl, delta_tbl)["delta_docs"] == 0
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {base_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {delta_tbl}")
+    save_band_index_versioned(spark, corpus.select("doc_id", "text"), broot)
+    bspec = {
+        "source": {"type": "parquet", "path": f"{sf}/documents.parquet"},
+        "steps": [
+            {"op": "sql", "query": (
+                "SELECT doc_id, concat_ws(' ', reverse(split(text, '\\\\s+')))"
+                " AS text FROM __df__ WHERE"
+                " CAST(conv(substring(md5(CAST(doc_id AS STRING)),1,8),16,10)"
+                " AS BIGINT) % 2 = 0 AND doc_id % 3 = 0"
+            )},
+            {"op": "band_supersede", "root": broot, "batch_tag": "ac_b1", "gen": 1},
+            {"op": "band_auto_compact", "root": broot, "max_delta_ratio": 0.95},
+        ],
+    }
+    run_pipeline(spark, bspec)
+    assert BAND_INDEX.pressure_stats(spark, broot)["delta_ids"] > 0
+    bspec["steps"][-1]["max_delta_ratio"] = 0.01
+    run_pipeline(spark, bspec)
+    assert BAND_INDEX.pressure_stats(spark, broot)["delta_ids"] == 0

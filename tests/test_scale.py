@@ -409,30 +409,22 @@ def test_versioned_probes_respect_broadcast_optout(spark, tmp_path):
 
     sf = SF
     docs = load_table(spark, sf, "documents").limit(60).cache()
-    base_tbl, delta_tbl = "band_optout_base", "band_optout_delta"
+    root = str(tmp_path / "band_optout")
     key = "spark.sql.autoBroadcastJoinThreshold"
     orig = spark.conf.get(key)
     try:
-        save_band_index_versioned(spark, docs, base_tbl, delta_tbl)
-        supersede_band_index(
-            spark, docs.limit(5), delta_tbl, 1, "doc_id", "text"
-        )
-        probe = dedup_against_band_index_versioned(
-            spark, docs.limit(20), base_tbl, delta_tbl
-        )
+        save_band_index_versioned(spark, docs, root)
+        supersede_band_index(spark, docs.limit(5), root, "b1", 1, "doc_id", "text")
+        probe = dedup_against_band_index_versioned(spark, docs.limit(20), root)
         expected = sorted(r["doc_id"] for r in probe.collect())
 
         spark.conf.set(key, "-1")
-        probe_off = dedup_against_band_index_versioned(
-            spark, docs.limit(20), base_tbl, delta_tbl
-        )
+        probe_off = dedup_against_band_index_versioned(spark, docs.limit(20), root)
         plan = explain_string(probe_off, "formatted")
         assert "BroadcastExchange" not in plan
         assert sorted(r["doc_id"] for r in probe_off.collect()) == expected
     finally:
         spark.conf.set(key, orig)
-        spark.sql(f"DROP TABLE IF EXISTS {base_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {delta_tbl}")
         docs.unpersist()
 
 

@@ -671,7 +671,7 @@ def test_stream_ann_index_append_exactly_once(spark, tmp_path):
     sf = SF
     root = str(tmp_path / "ann_idx_stream")
     similarity.save_ann_index(spark, sf, root)
-    n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
+    n0 = spark.read.parquet(f"{root}/meta").collect()[0]["n_candidates"]
 
     rows = (
         similarity._vectors(spark, sf)
@@ -700,9 +700,9 @@ def test_stream_ann_index_append_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stream_ann_index_append(spark, str(src), root, ckpt, schema)
 
-    assigned = similarity._load_index_relation(spark, root, "ivf_assigned")
+    assigned = similarity.ANN_INDEX.view(spark, root, "ivf_assigned")
     assert assigned.count() == n0 + len(rows)
-    meta = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta["n_candidates"] == n0 + len(rows)
     # appended copies land in their originals' cells
     app = assigned.filter(F.col("point_id") >= 1_000_000).select(
@@ -718,16 +718,16 @@ def test_stream_ann_index_append_exactly_once(spark, tmp_path):
 
     # exactly-once: a rerun over the same checkpoint appends nothing
     stream_ann_index_append(spark, str(src), root, ckpt, schema)
-    assert similarity._load_index_relation(spark, root, "ivf_assigned").count() == n0 + len(rows)
+    assert similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count() == n0 + len(rows)
 
     # a NEW file appends only itself
     _write("f3.json", rows[:2], 3_000_000)
     stream_ann_index_append(spark, str(src), root, ckpt, schema)
     assert (
-        similarity._load_index_relation(spark, root, "ivf_assigned").count()
+        similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count()
         == n0 + len(rows) + 2
     )
-    meta3 = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta3 = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta3["n_candidates"] == n0 + len(rows) + 2
 
 
@@ -751,7 +751,7 @@ def test_stream_ann_index_upsert_delete(spark, tmp_path):
     sf = SF
     root = str(tmp_path / "ann_idx_stream_up")
     similarity.save_ann_index(spark, sf, root)
-    n0 = spark.read.parquet(f"{root}/index_meta").collect()[0]["n_candidates"]
+    n0 = spark.read.parquet(f"{root}/meta").collect()[0]["n_candidates"]
 
     rows = (
         similarity._vectors(spark, sf)
@@ -780,7 +780,7 @@ def test_stream_ann_index_upsert_delete(spark, tmp_path):
         fh.write(_rec(1_000_000, rows[0]["v"]) + "\n")
     stream_ann_index_upsert(spark, str(src), root, ckpt, schema)
 
-    eff = similarity._load_index_relation(spark, root, "ivf_assigned")
+    eff = similarity.ANN_INDEX.view(spark, root, "ivf_assigned")
     assert eff.count() == n0 + 1  # supersedes replace, the new id adds
     changed_ids = [int(r["vec_id"]) for r in rows]
     served = {
@@ -792,7 +792,7 @@ def test_stream_ann_index_upsert_delete(spark, tmp_path):
 
     # rerun, no new files: exactly-once, nothing moves
     stream_ann_index_upsert(spark, str(src), root, ckpt, schema)
-    assert similarity._load_index_relation(spark, root, "ivf_assigned").count() == n0 + 1
+    assert similarity.ANN_INDEX.view(spark, root, "ivf_assigned").count() == n0 + 1
 
     # run 2 (gen 2): delete one changed id; for another, a delete AND
     # an upsert in the SAME batch — the tombstone wins the gen tie
@@ -801,14 +801,14 @@ def test_stream_ann_index_upsert_delete(spark, tmp_path):
         fh.write(_rec(changed_ids[1], [], "delete") + "\n")
         fh.write(_rec(changed_ids[1], rows[1]["v"]) + "\n")
     stream_ann_index_upsert(spark, str(src), root, ckpt, schema)
-    eff2 = similarity._load_index_relation(spark, root, "ivf_assigned")
+    eff2 = similarity.ANN_INDEX.view(spark, root, "ivf_assigned")
     assert eff2.count() == n0 + 1 - 2
     assert eff2.filter(F.col("point_id").isin(changed_ids[:2])).count() == 0
-    meta = spark.read.parquet(f"{root}/index_meta").collect()[0]
+    meta = spark.read.parquet(f"{root}/meta").collect()[0]
     assert meta["n_candidates"] == n0 - 1
 
     # compaction drops the dead generations physically
-    similarity.compact_ann_index(spark, root)
+    similarity.ANN_INDEX.compact(spark, root)
     raw = spark.read.parquet(f"{root}/ivf_assigned")
     assert raw.count() == n0 - 1
     assert raw.groupBy("point_id").count().filter(F.col("count") > 1).count() == 0
