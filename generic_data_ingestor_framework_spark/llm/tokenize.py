@@ -57,9 +57,10 @@ what sequential BPE would have seen, and the chained application
 commutes. The residual divergence from sequential BPE (shared by
 every batched-BPE implementation) is that a merge can CREATE a pair
 hotter than the round's 2nd pick, which sequential BPE would take
-first — hence ``batch_m=1`` is pinned byte-identical to
-``train_from_words``, and the batched selection rule itself is pinned
-against a pure-python reference in ``tests/test_llm_ops.py``. The
+first — hence ``batch_m=1`` (sequential BPE, one merge per round)
+is pinned to a pure-python sequential reference, and the batched
+selection rule itself is pinned against a pure-python reference in
+``tests/test_llm_ops.py``. The
 ``bpe_train_merges_batched`` gate member verifies two full rounds
 (count → pool → greedy filter → batch application) against a DuckDB
 twin that replays the greedy selection with a recursive CTE.
@@ -71,8 +72,8 @@ expression (Catalyst analysis cost, codegen size-limit fallback).
 ``_apply_merges_chunked`` bounds both: merges apply in chunks of
 ``CHUNK_MERGES`` with a ``localCheckpoint`` between chunks, so the
 executed plan is never more than one chunk deep and total work is
-O(n_merges × CHUNK_MERGES / relation). ``train_from_words`` uses the
-same chunking for its working relation, and ``encode_with_merges``
+O(n_merges × CHUNK_MERGES / relation). ``train_from_words_batched``
+uses the same chunking for its working relation, and ``encode_with_merges``
 switches past ``CHAIN_MAX`` merges to a distinct-word join (encode the
 Heaps-law-sized vocabulary once, join the segmentation back) instead
 of dragging a deep replace chain across the full corpus. A 256-merge
@@ -183,38 +184,6 @@ def _apply_merges_chunked(
     return rel
 
 
-def train_from_words(
-    words: DataFrame, n_merges: int = BPE_MERGES, checkpoint_every: int = CHUNK_MERGES
-) -> list[tuple[int, str, str, int]]:
-    """The merge-learning loop over an arbitrary ``(word, cnt, s)``
-    relation — shared by the corpus trainer and the pipeline step so
-    the two can never diverge. Stops early on a degenerate corpus
-    (every word fully merged before ``n_merges``).
-
-    Every ``checkpoint_every`` merges the working relation is
-    ``localCheckpoint``-truncated, so the pair-count job at iteration k
-    replays at most ``checkpoint_every`` prior replace projections
-    instead of all k-1 (O(n·K) total work, plans never deeper than one
-    chunk — the property that makes a 256-merge run tractable)."""
-    merges: list[tuple[int, str, str, int]] = []
-    cur = words
-    since_ckpt = 0
-    for k in range(1, n_merges + 1):
-        best = (
-            _pair_counts(cur).orderBy(F.desc("c"), F.asc("pair")).limit(1).collect()
-        )
-        if not best:  # degenerate corpus: every word fully merged
-            break
-        pair, c = best[0]["pair"], best[0]["c"]
-        merges.append((k, pair, pair.replace(" ", ""), c))
-        cur = cur.withColumn("s", apply_merge(F.col("s"), pair))
-        since_ckpt += 1
-        if since_ckpt >= checkpoint_every:
-            cur = cur.localCheckpoint(eager=True)
-            since_ckpt = 0
-    return merges
-
-
 BATCH_M = 4        # merges admitted per round by the gate's batched member
 BATCH_MERGES = 8   # total merges learned by the batched gate member (2 rounds)
 
@@ -248,12 +217,20 @@ def train_from_words_batched(
     checkpoint_every: int = CHUNK_MERGES,
     stats: dict | None = None,
 ) -> list[tuple[int, str, str, int]]:
-    """Batched merge learning: ~``n_merges / batch_m`` pair-count jobs
-    instead of ``n_merges`` (see module docstring for the soundness
-    argument). ``batch_m=1`` is byte-identical to ``train_from_words``.
-    ``stats`` (optional) receives ``{"rounds": k}`` — the number of
-    count-collect round-trips actually executed, asserted by the
-    job-reduction test."""
+    """The merge-learning loop over an arbitrary ``(word, cnt, s)``
+    relation — shared by the corpus trainers and the pipeline step so
+    they can never diverge. ~``n_merges / batch_m`` pair-count jobs
+    (see module docstring for the soundness argument); ``batch_m=1`` is
+    sequential BPE, one merge per job. Stops early on a degenerate
+    corpus (every word fully merged before ``n_merges``).
+
+    Every ``checkpoint_every`` merges the working relation is
+    ``localCheckpoint``-truncated, so a pair-count job replays at most
+    ``checkpoint_every`` prior replace projections instead of all of
+    them (plans never deeper than one chunk — the property that makes a
+    256-merge run tractable). ``stats`` (optional) receives
+    ``{"rounds": k}`` — the number of count-collect round-trips
+    actually executed, asserted by the job-reduction test."""
     if batch_m < 1:
         raise ValueError(f"batch_m must be >= 1; got {batch_m}")
     pool = 4 * batch_m  # candidate rows collected per round (driver-sized)
@@ -312,14 +289,14 @@ def train_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns ``[(rank, pair, merged,
-    n_occ), ...]``. One 1-row collect per iteration; memoized per
-    session (repeat calls cost zero jobs)."""
+    n_occ), ...]``. Sequential (``batch_m=1``): one small collect per
+    merge; memoized per session (repeat calls cost zero jobs)."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
 
     return shared_value(
         spark,
         ("bpe_merges", sf_dir, n_merges),
-        lambda: train_from_words(_word_freqs(spark, sf_dir), n_merges),
+        lambda: train_from_words_batched(_word_freqs(spark, sf_dir), n_merges, batch_m=1),
     )
 
 

@@ -383,7 +383,7 @@ def _step_bpe_tokenize(df: DataFrame, p: dict) -> DataFrame:
         BPE_MERGES,
         _init_syms,
         encode_with_merges,
-        train_from_words,
+        train_from_words_batched,
     )
 
     col = p.get("column", "text")
@@ -397,7 +397,8 @@ def _step_bpe_tokenize(df: DataFrame, p: dict) -> DataFrame:
         .withColumn("s", _init_syms(F.col("word")))
         .localCheckpoint()
     )
-    return encode_with_merges(df, train_from_words(words, n_merges), column=col)
+    merges = train_from_words_batched(words, n_merges, batch_m=1)
+    return encode_with_merges(df, merges, column=col)
 
 
 # Internal working-column names per step: an id (or data) column with one
@@ -658,7 +659,8 @@ def _step_band_supersede(df: DataFrame, p: dict) -> DataFrame:
 
 def _step_scd2_apply(df: DataFrame, p: dict) -> DataFrame:
     """Apply this frame as an SCD2 update batch to a DIMENSION HISTORY
-    table — the dimension twin of the index supersede/delete steps::
+    table (``relational.scd2_apply_table``) — the dimension twin of the
+    index supersede/delete steps::
 
         {"op": "scd2_apply", "table": "dim_customer_hist",
          "key": "c_custkey", "attrs": ["c_mktsegment", "c_acctbal"],
@@ -666,46 +668,17 @@ def _step_scd2_apply(df: DataFrame, p: dict) -> DataFrame:
 
     The frame carries the batch's LATEST state per key
     (key, *attrs, delete_col). An absent table is seeded with the
-    batch's non-deleted rows as open rows at ``gen``. ``gen`` is the
-    crawl loop's monotonic batch counter — VALIDATED before merging: a
-    stale gen below the table's newest ``valid_from`` raises instead of
-    silently writing inverted history rows. RETRY-SAFE by merge
-    semantics, not by tags:
-    re-applying the same batch is a no-op — an identical update creates
-    no version, a delete of an already-closed key closes nothing, an
-    insert whose key is now open with identical attrs is a no-op. The
-    overwrite stages through a localCheckpoint so the write never reads
-    the table it replaces. Pass-through frame."""
-    from generic_data_ingestor_framework_spark.relational import scd2_apply
+    batch's non-deleted rows as open rows at ``gen``; a stale ``gen``
+    raises. RETRY-SAFE by merge semantics, not by tags: re-applying the
+    same batch is a no-op — an identical update creates no version, a
+    delete of an already-closed key closes nothing, an insert whose key
+    is now open with identical attrs is a no-op. Pass-through frame."""
+    from generic_data_ingestor_framework_spark.relational import scd2_apply_table
 
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    key, attrs = p["key"], list(p["attrs"])
-    gen = int(p["gen"])
-    delete_col = p.get("delete_col", "is_deleted")
-    batch = df.select(
-        key,
-        *attrs,
-        (F.col(delete_col) if delete_col in df.columns else F.lit(False)).alias(
-            delete_col
-        ),
+    scd2_apply_table(
+        df.sparkSession, p["table"], df, p["key"], list(p["attrs"]), int(p["gen"]),
+        p.get("delete_col", "is_deleted"),
     )
-    table = p["table"]
-    if spark.catalog.tableExists(table):
-        from generic_data_ingestor_framework_spark.relational import scd2_validate_gen
-
-        hist = spark.table(table)
-        scd2_validate_gen(hist, gen)
-        merged = scd2_apply(hist, batch, key, attrs, gen, delete_col)
-    else:
-        merged = batch.filter(~F.col(delete_col)).select(
-            key,
-            *attrs,
-            F.lit(gen).alias("valid_from"),
-            F.lit(None).cast("int").alias("valid_to"),
-        )
-    merged.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(table)
     return df
 
 

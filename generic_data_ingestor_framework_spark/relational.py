@@ -811,16 +811,43 @@ def scd2_apply(
     ).unionByName(merged)
 
 
-def scd2_validate_gen(history: DataFrame, gen: int) -> None:
-    """Refuse a STALE generation before an SCD2 merge. ``gen`` must be
-    the crawl loop's monotonic batch counter; replaying a spec with a
-    generation BELOW the table's newest ``valid_from`` would close open
-    rows at ``valid_to < valid_from`` — inverted history rows that no
-    downstream as-of read can interpret. ``gen == max(valid_from)`` is
-    allowed: that is the idempotent replay of the CURRENT batch, whose
-    merge is a documented no-op. One cheap driver-side aggregate."""
-    row = history.agg(F.max("valid_from").alias("m")).first()
-    newest = row["m"] if row and row["m"] is not None else None
+def scd2_apply_table(
+    spark: SparkSession,
+    table: str,
+    updates: DataFrame,
+    key: str,
+    attrs: list[str],
+    gen: int,
+    delete_col: str = "is_deleted",
+) -> None:
+    """Apply one SCD2 update batch to the history TABLE ``table``
+    (``scd2_apply`` semantics) through ``spark`` — the one mutation
+    behind the pipeline's ``scd2_apply`` step and the
+    ``stream_scd2_apply`` maintainer. ``updates`` carries
+    (key, *attrs[, delete_col]); a missing ``delete_col`` reads false.
+
+    An absent table is created empty first, so the batch's non-deleted
+    rows open at ``gen``. ``gen`` is the crawl loop's monotonic batch
+    counter, VALIDATED before merging: one below the table's newest
+    ``valid_from`` raises, since replaying an old batch would close
+    open rows at ``valid_to < valid_from`` (inverted history rows).
+    ``gen == max(valid_from)`` is the idempotent replay of the current
+    batch, a no-op merge. The overwrite stages through a
+    localCheckpoint so the write never reads the table it replaces."""
+    batch = updates.select(
+        key,
+        *attrs,
+        (F.col(delete_col) if delete_col in updates.columns else F.lit(False)).alias(
+            delete_col
+        ),
+    )
+    if not spark.catalog.tableExists(table):
+        schema = batch.select(
+            key, *attrs, F.lit(0).alias("valid_from"), F.lit(0).alias("valid_to")
+        ).schema
+        spark.catalog.createTable(table, schema=schema)
+    hist = spark.table(table)
+    newest = hist.agg(F.max("valid_from")).first()[0]
     if newest is not None and gen < int(newest):
         raise ValueError(
             f"scd2_apply: stale generation {gen} < table's newest "
@@ -828,6 +855,8 @@ def scd2_validate_gen(history: DataFrame, gen: int) -> None:
             f"inverted history rows (valid_to < valid_from). Use the "
             f"crawl loop's current batch counter."
         )
+    merged = scd2_apply(hist, batch, key, attrs, gen, delete_col)
+    merged.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(table)
 
 
 def _scd2_customer_parts(spark: SparkSession, sf_dir: str):

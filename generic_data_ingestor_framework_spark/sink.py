@@ -38,10 +38,26 @@ def attach_table(spark: SparkSession, table: str) -> bool:
     db, _, name = table.rpartition(".")
     location = spark.catalog.getDatabase(db or spark.catalog.currentDatabase()).locationUri
     jpath = spark._jvm.org.apache.hadoop.fs.Path(location.rstrip("/") + "/" + name.lower())
-    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not (fs.exists(jpath) and _has_data_files(fs, jpath)):
         return False
     spark.catalog.createTable(table, path=jpath.toString())
     return True
+
+
+def _has_data_files(fs, jpath) -> bool:
+    """Whether the directory holds a file Spark would read: one whose
+    path below it has no component starting with ``_`` or ``.``
+    (``_SUCCESS``, ``.crc``, ``_temporary/``). An earlier process that
+    created a table but never inserted leaves only an empty directory,
+    from which no schema can be read."""
+    root = jpath.toUri().getPath().rstrip("/")
+    files = fs.listFiles(jpath, True)
+    while files.hasNext():
+        rel = files.next().getPath().toUri().getPath()[len(root):]
+        if not any(p.startswith(("_", ".")) for p in rel.split("/") if p):
+            return True
+    return False
 
 
 def create_table(
@@ -350,6 +366,7 @@ def merge_into(
     updates: DataFrame,
     key_cols: list[str],
     order_col: str | None = None,
+    partition_cols: list[str] | None = None,
 ) -> dict:
     """Upsert (MERGE INTO analogue) for plain managed tables: rows in
     ``updates`` replace target rows with the same key; unmatched
@@ -361,79 +378,45 @@ def merge_into(
     rewrite-merge: target ⟕anti updates (survivors) ∪ updates, written
     back atomically via the overwrite job commit. The anti join
     broadcasts the update KEYS when small — the common case for CDC
-    batches — so the rewrite is one scan of the target. At real scale
-    you'd bound the rewrite by partition (dynamic partition overwrite)
-    or use a transactional format; this gives the semantics with the
-    engine's own commit protocol. Returns {"updated": n, "inserted": n}.
-    """
-    from pyspark.sql import functions as _F
+    batches — so the rewrite is one scan of the target.
 
+    With ``partition_cols`` (the target's partition columns) only the
+    partitions present in ``updates`` are rewritten (dynamic partition
+    overwrite) and files of untouched partitions stay byte-identical on
+    disk: the rewrite costs O(touched partitions), not O(table). Keys
+    must not move between partitions within one batch (a moved key
+    would survive in its old partition); merge without
+    ``partition_cols`` for that rarer shape.
+    Returns {"updated": n, "inserted": n, "total": n} — ``total``
+    counts the rewritten rows (the touched partitions' rows when
+    partitioned)."""
     updates = _one_row_per_key(updates, key_cols, order_col)
     target = spark.table(target_table)
-    keys = updates.select(*key_cols).distinct()
-    matched = target.join(_F.broadcast(keys), key_cols, "semi").count()
-    survivors = target.join(_F.broadcast(keys), key_cols, "anti")
-    merged = survivors.unionByName(updates.select(*target.columns))
+    cols = target.columns  # table order (partition columns last)
+    if partition_cols:
+        parts = updates.select(*partition_cols).distinct()
+        target = target.join(F.broadcast(parts), partition_cols, "semi")
+    keys = F.broadcast(updates.select(*key_cols).distinct())
+    matched = target.join(keys, key_cols, "semi").count()
+    survivors = target.join(keys, key_cols, "anti")
+    merged = survivors.unionByName(updates.select(*cols)).select(*cols)
     # localCheckpoint cuts the lineage back to the table being
     # overwritten (plain cache() keeps it, and the analyzer rejects
     # overwriting a read target)
     merged = merged.localCheckpoint(eager=True)
     n_total = merged.count()
-    merged.write.mode("overwrite").saveAsTable(target_table)
-    # the overwrite replaced every file under the table; a same-session
+    if partition_cols:
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            merged.write.mode("overwrite").insertInto(target_table)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    else:
+        merged.write.mode("overwrite").saveAsTable(target_table)
+    # the overwrite replaced files under the table; a same-session
     # reader holding the old file listing would hit FILE_NOT_EXIST —
     # invalidate the relation cache so the next spark.table() re-lists
-    spark.catalog.refreshTable(target_table)
-    return {
-        "updated": matched,
-        "inserted": int(updates.count()) - matched,
-        "total": n_total,
-    }
-
-
-def merge_into_partitioned(
-    spark: SparkSession,
-    target_table: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    partition_cols: list[str],
-    order_col: str | None = None,
-) -> dict:
-    """Partition-bounded upsert: only the partitions present in
-    ``updates`` are rewritten (dynamic partition overwrite); files of
-    untouched partitions are left byte-identical on disk. ``order_col``
-    resolves multi-version batches last-wins; without it duplicate
-    keys raise (see ``_one_row_per_key``).
-
-    This is the CDC-batch shape ``merge_into``'s docstring promises at
-    real scale: the rewrite cost is O(touched partitions), not O(table).
-    Keys must not move between partitions within one batch (a moved key
-    would survive in its old partition); use ``merge_into`` for that
-    rarer shape or delete-then-insert across two batches.
-    Returns {"updated": n, "inserted": n, "total": n_in_touched}.
-    """
-    from pyspark.sql import functions as _F
-
-    updates = _one_row_per_key(updates, key_cols, order_col)
-    target = spark.table(target_table)
-    parts = updates.select(*partition_cols).distinct()
-    touched = target.join(_F.broadcast(parts), partition_cols, "semi")
-    keys = updates.select(*key_cols).distinct()
-    matched = touched.join(_F.broadcast(keys), key_cols, "semi").count()
-    survivors = touched.join(_F.broadcast(keys), key_cols, "anti")
-    # column order per table schema (partition cols last) for insertInto
-    merged = survivors.unionByName(updates.select(*target.columns)).select(*target.columns)
-    # cut lineage back to the table being overwritten (see merge_into)
-    merged = merged.localCheckpoint(eager=True)
-    n_total = merged.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").insertInto(target_table)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # same stale-listing hazard as merge_into: the touched partitions'
-    # files were replaced under any cached relation
     spark.catalog.refreshTable(target_table)
     return {
         "updated": matched,

@@ -1,4 +1,5 @@
-"""Structured Streaming ingest + event-time windowing.
+"""Structured Streaming ingest, event-time windowing and stream
+maintainers.
 
 The reference polls a directory and batch-ingests it
 (`src/core/application.py:36-153`); the idiomatic Spark replacement is
@@ -9,11 +10,16 @@ as a continuous stream. This module provides:
 - batch event-time operators (tumbling / sliding / session windows,
   watermark-style dedup) over ``events`` — semantics identical to their
   streaming forms and oracle-checkable;
-- ``stream_tumbling_counts``: a REAL streaming execution (readStream →
-  window agg → memory sink, availableNow) whose final table must match
-  the same DuckDB oracle as the batch form — proving batch/stream
-  equivalence;
-- reusable ``stream_ingest_json`` used by the ingestion tests.
+- ``stream_*`` members: REAL streaming executions whose final table
+  must match the same DuckDB oracle as the batch form, proving
+  batch/stream equivalence. Each runs through ``_run_memory_sink``
+  (unique memory sink, bounded state partitions, row/byte guards);
+- maintainers (``stream_upsert``, ``stream_ann_index_*``,
+  ``stream_scd2_apply``) that drain a directory of change files
+  through ``_run_foreach_batch`` and apply each micro-batch with the
+  same table or index call the pipeline step uses;
+- ``stream_ingest_json``, a directory ingest to a parquet file sink
+  whose log gives exactly-once output.
 
 Scale notes (100 TB): file-source streaming scales by listing
 incrementally (maxFilesPerTrigger) instead of materializing the full
@@ -68,59 +74,111 @@ def _run_to_completion(q, what: str) -> None:
         raise RuntimeError(f"{what} failed: {q.exception()}")
 
 
-MEMORY_SINK_MAX_ROWS = 1_000_000  # parity-harness bound; see _drain_memory_sink
+MEMORY_SINK_MAX_ROWS = 1_000_000  # parity-harness bound; see _run_memory_sink
 MEMORY_SINK_MAX_BYTES = 256 * 1024 * 1024  # est. driver-heap bound (rows × sampled row size)
 _SINK_SIZE_SAMPLE = 100  # rows sampled to estimate bytes/row
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
-def _drain_memory_sink(spark: SparkSession, q, sink: str, what: str) -> DataFrame:
-    """Wait for the availableNow query, copy the memory sink into a
-    session-independent local DataFrame, and DROP the sink's temp view:
-    memory sinks hold their full result in driver memory, so leaving
-    one view behind per invocation accumulates result copies for the
-    life of the session (the same leak class cachemgr fixed for batch
-    persists). Sink results here are aggregate-sized, so the local copy
-    is driver-safe by construction — and that construction is ENFORCED:
-    past ``MEMORY_SINK_MAX_ROWS`` this raises instead of silently
-    ballooning the driver. The memory sink is the batch-parity harness
-    path only; corpus-scale streaming goes through the
-    ``foreachBatch``/file-sink route (``stream_upsert``), which never
+def _run_memory_sink(spark: SparkSession, frame: DataFrame, output_mode: str, what: str):
+    """Run the streaming ``frame`` to completion (availableNow) into a
+    uniquely named memory sink; return ``(rows, query)``: ``rows`` a
+    copy of the sink's final table that outlives the sink, ``query``
+    the finished query, for its progress.
+
+    Streaming state partitioning is fixed by shuffle.partitions at the
+    first checkpoint and AQE never coalesces it, so the query starts
+    with it bounded to ``defaultParallelism`` (a driver-default session
+    would otherwise run 200 state tasks for a handful of keys); the
+    caller's value is restored afterwards.
+
+    The sink's temp view is always dropped: memory sinks hold their full
+    result in driver memory, so leaving one view behind per invocation
+    accumulates result copies for the life of the session. Results here
+    are aggregate-sized, and that is ENFORCED: past
+    ``MEMORY_SINK_MAX_ROWS`` rows, or ``MEMORY_SINK_MAX_BYTES`` estimated
+    bytes, this raises instead of ballooning the driver. The memory sink
+    is the batch-parity harness only; corpus-scale streams go through
+    the ``foreachBatch`` route (``_run_foreach_batch``), which never
     routes results through the driver."""
-    _run_to_completion(q, what)
-    t = spark.table(sink)
-    n = t.count()
-    if n > MEMORY_SINK_MAX_ROWS:
-        spark.catalog.dropTempView(sink)
-        raise RuntimeError(
-            f"{what}: memory sink holds {n} rows "
-            f"(> MEMORY_SINK_MAX_ROWS={MEMORY_SINK_MAX_ROWS}); this path is "
-            f"the parity harness for aggregate-sized results — use the "
-            f"foreachBatch/file-sink route (see stream_upsert) for "
-            f"corpus-scale streams"
-        )
-    if n > 0:
-        # row-count alone under-guards WIDE rows (1M rows of long text
-        # ≈ GBs of driver heap): bound by estimated bytes too — mean
-        # serialized size of a bounded sample × row count
-        import json as _json
+    import json
 
-        sample = t.limit(_SINK_SIZE_SAMPLE).collect()
-        per_row = sum(
-            len(_json.dumps(r.asDict(recursive=True), default=str)) for r in sample
-        ) / len(sample)
-        est_bytes = int(per_row * n)
-        if est_bytes > MEMORY_SINK_MAX_BYTES:
-            spark.catalog.dropTempView(sink)
+    sink = _unique_sink(f"{what}_sink")
+    prev = spark.conf.get(_SHUFFLE_PARTITIONS)
+    spark.conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+    try:
+        q = (
+            frame.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        _run_to_completion(q, what)
+        t = spark.table(sink)
+        n = t.count()
+        if n > MEMORY_SINK_MAX_ROWS:
             raise RuntimeError(
-                f"{what}: memory sink estimated at {est_bytes} bytes "
-                f"({n} rows × ~{per_row:.0f} B sampled) "
-                f"> MEMORY_SINK_MAX_BYTES={MEMORY_SINK_MAX_BYTES}; use the "
-                f"foreachBatch/file-sink route (see stream_upsert) for "
-                f"corpus-scale streams"
+                f"{what}: memory sink holds {n} rows "
+                f"(> MEMORY_SINK_MAX_ROWS={MEMORY_SINK_MAX_ROWS}); this path is "
+                f"the parity harness for aggregate-sized results — use the "
+                f"foreachBatch route (see stream_upsert) for corpus-scale streams"
             )
-    local = spark.createDataFrame(t.collect(), t.schema)
-    spark.catalog.dropTempView(sink)
-    return local
+        if n > 0:
+            # row-count alone under-guards WIDE rows (1M rows of long text
+            # ≈ GBs of driver heap): bound by estimated bytes too — mean
+            # serialized size of a bounded sample × row count
+            sample = t.limit(_SINK_SIZE_SAMPLE).collect()
+            per_row = sum(
+                len(json.dumps(r.asDict(recursive=True), default=str)) for r in sample
+            ) / len(sample)
+            est_bytes = int(per_row * n)
+            if est_bytes > MEMORY_SINK_MAX_BYTES:
+                raise RuntimeError(
+                    f"{what}: memory sink estimated at {est_bytes} bytes "
+                    f"({n} rows × ~{per_row:.0f} B sampled) "
+                    f"> MEMORY_SINK_MAX_BYTES={MEMORY_SINK_MAX_BYTES}; use the "
+                    f"foreachBatch route (see stream_upsert) for corpus-scale streams"
+                )
+        # a JVM-side copy that outlives the view (no driver round-trip)
+        return t.localCheckpoint(eager=True), q
+    finally:
+        spark.catalog.dropTempView(sink)
+        spark.conf.set(_SHUFFLE_PARTITIONS, prev)
+
+
+def _run_foreach_batch(
+    spark: SparkSession,
+    src_dir: str,
+    schema: T.StructType,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    apply,
+    what: str,
+) -> None:
+    """Drain the JSON files under ``src_dir`` (availableNow, at most
+    ``max_files_per_trigger`` files per micro-batch) through
+    ``apply(batch_df, batch_id)``, skipping empty batches. The
+    checkpoint makes each file apply exactly once across runs, and a
+    failed batch replays under the same ``batch_id``. ``foreachBatch``
+    hands ``apply`` a frame of a CLONED session: ``apply`` mutates
+    tables and indexes through the caller's ``spark``, so the caller's
+    catalog and memos see the change without a refresh."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            apply(batch_df, int(batch_id))
+
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .json(src_dir)
+        .writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _run_to_completion(q, what)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,15 +782,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
     ).select("user_id", "click_id", "purchase_id")
-    sink = _unique_sink("stream_interval_join_sink")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain_memory_sink(spark, q, sink, "stream_interval_join")
+    return _run_memory_sink(spark, joined, "append", "stream_interval_join")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -788,27 +838,7 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = events.dropDuplicates(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    sink = _unique_sink("stream_dedup_keys_sink")
-    # streaming state partitioning is fixed by shuffle.partitions at the
-    # first checkpoint and AQE never coalesces it — bound it (restored in
-    # finally) so a driver-default session (200) doesn't run 200 state
-    # tasks for a handful of keys; same pattern as
-    # stream_stateful_user_counts
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        return _drain_memory_sink(spark, q, sink, "stream_dedup_keys")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_memory_sink(spark, dedup, "append", "stream_dedup_keys")[0]
 
 
 def stream_interval_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -846,22 +876,7 @@ def stream_interval_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         F.round("value", 2).alias("purchase_value"),
     )
-    sink = _unique_sink("stream_interval_exact_sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        return _drain_memory_sink(spark, q, sink, "stream_interval_join_exact")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _run_memory_sink(spark, joined, "append", "stream_interval_join_exact")[0]
 
 
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -874,17 +889,8 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    sink = _unique_sink("stream_tumbling_counts_sink")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain_memory_sink(spark, q, sink, "stream_tumbling_counts").select(
-        F.col("w.start").alias("window_start"), "n"
-    )
+    t, _ = _run_memory_sink(spark, agg, "complete", "stream_tumbling_counts")
+    return t.select(F.col("w.start").alias("window_start"), "n")
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -909,22 +915,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy("user_id", F.session_window("ts", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    sink = _unique_sink("stream_session_windows_sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        t = _drain_memory_sink(spark, q, sink, "stream_session_windows")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    t, _ = _run_memory_sink(spark, agg, "complete", "stream_session_windows")
     return t.select(
         "user_id",
         F.col("w.start").alias("session_start"),
@@ -1003,26 +994,10 @@ def stream_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    sink = _unique_sink("stream_rolling_zscore_sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    scored = events.groupBy("user_id").applyInPandasWithState(
+        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    try:
-        q = (
-            events.groupBy("user_id")
-            .applyInPandasWithState(
-                update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        t = _drain_memory_sink(spark, q, sink, "stream_rolling_zscore")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    t, _ = _run_memory_sink(spark, scored, "update", "stream_rolling_zscore")
     # update mode emits one row per state update; keep the final row per
     # user (max n_scored) and only users that ever scored an event
     from pyspark.sql import Window as W
@@ -1144,42 +1119,23 @@ def stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    sink = _unique_sink("stream_dedup_near_sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    verdicts, q = _run_memory_sink(
+        spark, dedup_near_verdict_stream(spark, stream_docs, corpus), "update",
+        "stream_dedup_near",
     )
-    try:
-        q = (
-            dedup_near_verdict_stream(spark, stream_docs, corpus)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    # Parity pin: the exact min-doc_id oracle equality REQUIRES the
+    # whole table in ONE micro-batch (within-band winners follow
+    # arrival order across triggers). availableNow over a parquet table
+    # lists all files in one trigger ONLY while no
+    # maxFilesPerTrigger-style option reaches the shared reader —
+    # assert it rather than silently diverge if that ever changes.
+    fed = [p for p in q.recentProgress if p.numInputRows]
+    if len(fed) > 1:
+        raise AssertionError(
+            f"stream_dedup_near parity contract violated: input arrived "
+            f"in {len(fed)} micro-batches (expected 1) — a file-batching "
+            f"option on the reader breaks min-doc_id oracle equality"
         )
-        verdicts = _drain_memory_sink(spark, q, sink, "stream_dedup_near")
-        # Parity pin: the exact min-doc_id oracle equality REQUIRES the
-        # whole table in ONE micro-batch (within-band winners follow
-        # arrival order across triggers). availableNow over a parquet
-        # table lists all files in one trigger ONLY while no
-        # maxFilesPerTrigger-style option reaches the shared reader —
-        # assert it rather than silently diverge if that ever changes.
-        # recentProgress entries are StreamingQueryProgress objects on
-        # PySpark 3.5+/4.x but plain dicts on <=3.4 — access defensively
-        # so the parity assertion degrades to a pass/fail, not a crash
-        def _in_rows(p):
-            return (p["numInputRows"] if isinstance(p, dict) else p.numInputRows) or 0
-
-        fed = [p for p in q.recentProgress if _in_rows(p) > 0]
-        if len(fed) > 1:
-            raise AssertionError(
-                f"stream_dedup_near parity contract violated: input arrived "
-                f"in {len(fed)} micro-batches (expected 1) — a file-batching "
-                f"option on the reader breaks min-doc_id oracle equality"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     admitted = (
         verdicts.groupBy("doc_id")
         .agg(F.max(F.col("rejected").cast("int")).alias("any_rej"))
@@ -1231,30 +1187,10 @@ def stream_stateful_user_counts(
             {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
         )
 
-    sink = _unique_sink("stream_stateful_user_counts_sink")
-    # streaming state partitioning is fixed by shuffle.partitions at the
-    # first checkpoint and AQE never coalesces it — bound it explicitly
-    # so a driver-default session (200) doesn't run 200 state tasks for
-    # a handful of keys
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    counts = events.groupBy("user_id").applyInPandasWithState(
+        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    try:
-        q = (
-            events.groupBy("user_id")
-            .applyInPandasWithState(
-                update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        t = _drain_memory_sink(spark, q, sink, "stream_stateful_user_counts")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    t, _ = _run_memory_sink(spark, counts, "update", "stream_stateful_user_counts")
     # with `update` mode the sink holds one row per state update; the
     # LAST row per user is the final counter
     from pyspark.sql import Window as W
@@ -1305,10 +1241,9 @@ def stream_upsert(
     max_files_per_trigger: int = 1,
 ) -> None:
     """CDC streaming sink: each microbatch upserts into ``target_table``
-    via foreachBatch + ``sink.merge_into`` (or the partition-bounded
-    ``merge_into_partitioned`` when ``partition_cols`` is given) — later
-    batches overwrite earlier rows with the same key, exactly once per
-    batch via the checkpoint.
+    via ``sink.merge_into`` (partition-bounded when ``partition_cols``
+    is given) — later batches overwrite earlier rows with the same key,
+    exactly once per batch via the checkpoint.
 
     AvailableNow drains the directory and stops; dropping the trigger
     makes it a continuous CDC applier. At scale, pass ``partition_cols``
@@ -1317,30 +1252,14 @@ def stream_upsert(
     from generic_data_ingestor_framework_spark import sink as _sink
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            sess = batch_df.sparkSession
-            if partition_cols:
-                _sink.merge_into_partitioned(
-                    sess, target_table, batch_df, key_cols, partition_cols
-                )
-            else:
-                _sink.merge_into(sess, target_table, batch_df, key_cols)
+        _sink.merge_into(
+            spark, target_table, batch_df, key_cols, partition_cols=partition_cols
+        )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(src_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        spark, src_dir, schema, checkpoint_dir, max_files_per_trigger, _apply,
+        "stream_upsert",
     )
-    _run_to_completion(q, "stream_upsert")
-    # foreachBatch runs in a CLONED session — merge_into's refresh
-    # invalidates the clone's relation cache, not this session's. A
-    # reader here would otherwise hit FILE_NOT_EXIST on the rewritten
-    # table files after the stream drains.
-    spark.catalog.refreshTable(target_table)
 
 
 def stream_ann_index_append(
@@ -1359,43 +1278,28 @@ def stream_ann_index_append(
     exactly-once BY CONSTRUCTION: Structured Streaming replays a
     failed batch under the SAME batch_id, and the append path's
     per-tag overwrite-mode subdirectory plus recomputed (never
-    incremented) meta count make the replay a no-op rewrite. The
-    third surface of the crawl loop, after the batch gate member
-    (``ann_index_crawl``) and the declarative pipeline step
-    (``ann_append``): a crawler drops embedding files in a directory
-    and the inverted lists grow, quantizers untouched.
+    incremented) meta count make the replay a no-op rewrite. The same
+    ``append_ann_index`` call over the same ``(vec_id, v)`` projection
+    as the pipeline's ``ann_append`` step: a crawler drops embedding
+    files in a directory and the inverted lists grow, quantizers
+    untouched.
 
     AvailableNow drains the directory and stops; dropping the trigger
     makes it a continuous indexer. At 100 TB the per-batch work is
     batch × k centroid scoring + batch × M×K code assignment — no
     corpus-sized job anywhere; compact periodically
     (``ANN_INDEX.compact``) to fold the accumulated batch directories."""
-    from generic_data_ingestor_framework_spark.llm.similarity import (
-        _as_double,
-        append_ann_index,
-    )
+    from generic_data_ingestor_framework_spark.llm.similarity import append_ann_index
+    from generic_data_ingestor_framework_spark.pipeline import _ann_vectors
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        vecs = batch_df.select(
-            F.col(id_col).alias("vec_id"),
-            _as_double(F.col(vec_col)).alias("v"),
-        )
-        # the caller's session, not the batch's clone: the index store
-        # keeps its mutation epoch in this session's cachemgr registry
+        vecs = _ann_vectors(batch_df, {"id": id_col, "vec": vec_col})
         append_ann_index(spark, vecs, index_root, f"stream_b{batch_id}")
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(src_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        spark, src_dir, schema, checkpoint_dir, max_files_per_trigger, _apply,
+        "stream_ann_index_append",
     )
-    _run_to_completion(q, "stream_ann_index_append")
 
 
 def stream_ann_index_upsert(
@@ -1410,9 +1314,8 @@ def stream_ann_index_upsert(
     max_files_per_trigger: int = 1,
 ) -> None:
     """CONTINUOUS delete/supersede maintenance of the persisted ANN
-    index — the streaming (third) surface of the r12 lifecycle, next
-    to the batch gate member (``ann_index_recrawl``) and the pipeline
-    steps (``ann_supersede`` / ``ann_delete``): a crawler drops change
+    index, through the same index calls as the pipeline's
+    ``ann_supersede`` / ``ann_delete`` steps: a crawler drops change
     files in a directory where each record is the LATEST state of its
     id — ``op='delete'`` tombstones it, anything else upserts its
     vector (brand-new ids insert; existing ids supersede, re-encoded
@@ -1434,44 +1337,35 @@ def stream_ann_index_upsert(
     (``ANN_INDEX.compact``) to physically drop superseded generations
     and tombstones."""
     from generic_data_ingestor_framework_spark.llm.similarity import (
-        _as_double,
         delete_ann_index_ids,
         supersede_ann_index,
     )
+    from generic_data_ingestor_framework_spark.pipeline import _ann_vectors
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        gen = int(batch_id) + 1
+        gen = batch_id + 1
         is_del = F.col(op_col) == F.lit("delete")
-        ups = batch_df.filter(~is_del | F.col(op_col).isNull()).select(
-            F.col(id_col).alias("vec_id"),
-            _as_double(F.col(vec_col)).alias("v"),
+        ups = _ann_vectors(
+            batch_df.filter(~is_del | F.col(op_col).isNull()),
+            {"id": id_col, "vec": vec_col},
         )
         dels = batch_df.filter(is_del).select(F.col(id_col).alias("vec_id"))
-        sess = spark  # the caller's session (see stream_ann_index_append)
         has_ups, has_dels = not ups.isEmpty(), not dels.isEmpty()
         if has_ups:
             # when a delete follows in the SAME micro-batch, defer the
             # meta commit to it — one effective-view recount per batch
-            # instead of two (r14 opt; the batch is the commit unit)
+            # instead of two (the batch is the commit unit)
             supersede_ann_index(
-                sess, ups, index_root, f"stream_s{batch_id}", gen,
+                spark, ups, index_root, f"stream_s{batch_id}", gen,
                 write_meta=not has_dels,
             )
         if has_dels:
-            delete_ann_index_ids(sess, dels, index_root, f"stream_d{batch_id}", gen)
+            delete_ann_index_ids(spark, dels, index_root, f"stream_d{batch_id}", gen)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(src_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        spark, src_dir, schema, checkpoint_dir, max_files_per_trigger, _apply,
+        "stream_ann_index_upsert",
     )
-    _run_to_completion(q, "stream_ann_index_upsert")
 
 
 def stream_scd2_apply(
@@ -1485,11 +1379,10 @@ def stream_scd2_apply(
     delete_col: str = "is_deleted",
     max_files_per_trigger: int = 1,
 ) -> None:
-    """CONTINUOUS SCD2 maintenance of a dimension history table — the
-    streaming (third) surface of the dimension lifecycle, next to the
-    batch gate members (``scd2_customer_multigen`` / ``scd2_asof_lookup``)
-    and the pipeline step (``scd2_apply``): a CDC feed drops change
-    files where each record is the LATEST state of its key —
+    """CONTINUOUS SCD2 maintenance of a dimension history table, through
+    the same ``relational.scd2_apply_table`` as the pipeline's
+    ``scd2_apply`` step: a CDC feed drops change files where each
+    record is the LATEST state of its key —
     ``delete_col`` true closes the key without successor, a differing
     record closes-and-opens, an identical record is a no-op, a new key
     inserts, a re-inserted key resurrects.
@@ -1506,58 +1399,21 @@ def stream_scd2_apply(
     a stream-created table simply has no gen-0 era. A stale generation
     (below the table's newest ``valid_from``, possible only if an
     external writer advanced the table past the stream's checkpoint)
-    fails the batch loudly via ``scd2_validate_gen``.
+    fails the batch loudly.
 
     AvailableNow drains and stops; dropping the trigger makes it a
     continuous applier. Per-batch work is one full-outer merge on the
     key against only the OPEN slice (at 100 TB: bucket the history by
     the key; the batch side broadcasts)."""
-    from generic_data_ingestor_framework_spark.relational import scd2_apply
+    from generic_data_ingestor_framework_spark.relational import scd2_apply_table
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        gen = int(batch_id) + 1
-        sess = batch_df.sparkSession
-        batch = batch_df.select(
-            key,
-            *attrs,
-            (
-                F.col(delete_col)
-                if delete_col in batch_df.columns
-                else F.lit(False)
-            ).alias(delete_col),
-        )
-        if sess.catalog.tableExists(table):
-            from generic_data_ingestor_framework_spark.relational import (
-                scd2_validate_gen,
-            )
+        scd2_apply_table(spark, table, batch_df, key, attrs, batch_id + 1, delete_col)
 
-            hist = sess.table(table)
-            scd2_validate_gen(hist, gen)
-            merged = scd2_apply(hist, batch, key, attrs, gen, delete_col)
-        else:
-            merged = batch.filter(~F.col(delete_col)).select(
-                key,
-                *attrs,
-                F.lit(gen).alias("valid_from"),
-                F.lit(None).cast("int").alias("valid_to"),
-            )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(table)
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(src_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        spark, src_dir, schema, checkpoint_dir, max_files_per_trigger, _apply,
+        "stream_scd2_apply",
     )
-    _run_to_completion(q, "stream_scd2_apply")
-    # foreachBatch runs in a CLONED session; surface the rewritten table
-    # to the caller's catalog (see stream_upsert's refresh contract)
-    spark.catalog.refreshTable(table)
 
 
 QUERIES = {

@@ -111,6 +111,39 @@ print(json.dumps(sorted(map(list, spark.table("t").select("c", "`a.b`").collect(
     ]
 
 
+def test_cli_rerun_after_a_run_that_only_created_the_table(tmp_path):
+    """A process that created the table but never inserted leaves an
+    empty directory under the warehouse. That is no table to attach:
+    the next CLI run creates the table there, writes its rows and
+    exits 0."""
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "a.json").write_text(json.dumps([{"x": 1}, {"x": 2}]))
+    wh = tmp_path / "wh"
+
+    def run(*args):
+        return subprocess.run(
+            [sys.executable, *args], capture_output=True, text=True, cwd=REPO, timeout=300
+        )
+
+    first = run("-c", f"""
+from generic_data_ingestor_framework_spark import sink
+from generic_data_ingestor_framework_spark.session import get_spark
+spark = get_spark(extra_conf={{"spark.sql.warehouse.dir": {str(wh)!r}}})
+df = spark.createDataFrame([("1", "a.json")], "x string, _source_file string")
+sink.create_table(spark, df, "t")
+""")
+    assert first.returncode == 0, first.stderr[-2000:]
+    assert (wh / "t").is_dir() and not any((wh / "t").iterdir())
+    out = run(
+        "-m", "generic_data_ingestor_framework_spark", str(data),
+        "--warehouse", str(wh), "--table", "t", "--preview", "5",
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "Wrote 2 rows" in out.stdout
+    assert "Traceback" not in out.stderr
+
+
 def test_cli_missing_dir_exit_code(tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "generic_data_ingestor_framework_spark", str(tmp_path / "nope")],

@@ -1006,17 +1006,15 @@ def test_bpe_batched_batch1_identical_and_job_reduction(spark, tmp_path):
         str(d / "documents.parquet")
     )
     words = tokenize._word_freqs(spark, str(d))
-    seq = tokenize.train_from_words(words, tokenize.BPE_MERGES)
     stats1: dict = {}
     b1 = tokenize.train_from_words_batched(
         words, tokenize.BPE_MERGES, batch_m=1, stats=stats1
     )
-    assert b1 == seq
-    assert stats1["rounds"] == len(seq)
-    # python-reference check of the batch_m=1 path too
+    # batch_m=1 is sequential BPE: the python reference, one round per merge
     word_counts = Counter(w for t in texts.values() for w in t.lower().split())
     ref_merges, _ = _py_bpe(dict(word_counts), tokenize.BPE_MERGES)
     assert b1 == ref_merges
+    assert stats1["rounds"] == len(ref_merges)
 
     # real corpus at the gate operating point: 8 merges in 2 rounds
     stats4: dict = {}

@@ -196,7 +196,7 @@ def test_merge_into_partitioned_rewrites_only_touched(spark, tmp_path):
         [(2, "b2", 21, "p1"), (4, "d", 40, "p1")],
         "id bigint, name string, v bigint, pt string",
     )
-    stats = sink.merge_into_partitioned(spark, t, updates, ["id"], ["pt"])
+    stats = sink.merge_into(spark, t, updates, ["id"], partition_cols=["pt"])
     assert stats == {"updated": 1, "inserted": 1, "total": 3}
 
     rows = {r["id"]: (r["name"], r["v"], r["pt"]) for r in spark.table(t).collect()}

@@ -204,10 +204,10 @@ def test_asof_join_tolerance(spark):
 
 
 def test_memory_sink_guard_rejects_oversized_results(spark, monkeypatch):
-    """_drain_memory_sink is the parity-harness path for aggregate-sized
-    results; past MEMORY_SINK_MAX_ROWS it must raise (pointing at the
-    foreachBatch/file-sink route) and still drop the sink view rather
-    than leak a driver-resident copy."""
+    """The memory-sink runner is the parity-harness path for
+    aggregate-sized results; past MEMORY_SINK_MAX_ROWS it must raise
+    (pointing at the foreachBatch route) and still drop the sink view
+    rather than leak a driver-resident copy."""
     import pytest
 
     from generic_data_ingestor_framework_spark import streaming
@@ -216,6 +216,35 @@ def test_memory_sink_guard_rejects_oversized_results(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="stream_tumbling_counts.*foreachBatch"):
         streaming.stream_tumbling_counts(spark, SF)
     leftover = [t.name for t in spark.catalog.listTables() if "tumbling" in t.name]
+    assert leftover == [], f"sink view leaked: {leftover}"
+
+
+def test_memory_sink_runner_bounds_and_restores_shuffle_partitions(spark, monkeypatch):
+    """In a session at 200 shuffle partitions, a stateful aggregate run
+    through the memory-sink runner keeps its state in
+    ``defaultParallelism`` partitions; afterwards the session reads 200
+    again and no sink view is left — also when the row guard raises."""
+    import pytest
+
+    from generic_data_ingestor_framework_spark import streaming
+
+    agg = streaming.read_events_stream(spark, SF).groupBy("event_type").count()
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        rows, q = streaming._run_memory_sink(spark, agg, "complete", "runner_probe")
+        assert rows.count() > 0
+        parts = {op.numShufflePartitions for op in q.lastProgress.stateOperators}
+        assert parts == {spark.sparkContext.defaultParallelism}
+        assert spark.conf.get(key) == "200"
+        monkeypatch.setattr(streaming, "MEMORY_SINK_MAX_ROWS", 1)
+        with pytest.raises(RuntimeError, match="MEMORY_SINK_MAX_ROWS"):
+            streaming._run_memory_sink(spark, agg, "complete", "runner_probe")
+        assert spark.conf.get(key) == "200"
+    finally:
+        spark.conf.set(key, prev)
+    leftover = [t.name for t in spark.catalog.listTables() if "runner_probe" in t.name]
     assert leftover == [], f"sink view leaked: {leftover}"
 
 
