@@ -21,6 +21,16 @@ one union plan. ``ingest_directory`` runs it as one pipeline; its
   a file) against 3.40 s per file, 2.00 s at 4x10000 (2.1 MB) against
   1.90 s, 2.76 s at 4x20000 (4.3 MB) against 2.38 s and 4.63 s at
   2x80000 (17 MB) against 2.65 s.
+
+  Each of the pass's three plans (classify, schema sample, and the
+  write's projection with its mask) is one SQL text over a temp view
+  of the file listing, parsed and analyzed once in the JVM; the
+  per-file values are bound as named parameters. On a 4-core host
+  (``local[2]``, warm, the ``cli_small_files`` inputs of perfbench)
+  building them took 20, 16 and 53 py4j commands and 0.07-0.10 s,
+  0.06-0.07 s and 0.14-0.22 s; assembled Column by Column, the same
+  plans took 1,340, about 650 and 1,522 commands and 0.28-0.48 s,
+  0.13-0.29 s and 0.32-0.62 s. What is left is Spark's analysis.
 - ``bulk`` (the scale path) makes one multi-path read per format and
   layout (``read_paths``), whose schema inference reads every byte: it
   wins on few large files and loses on many small ones. JSON is read
@@ -45,15 +55,15 @@ from __future__ import annotations
 import gzip
 import json
 import os
-import re
 import time
+import uuid
 import warnings
 from dataclasses import dataclass, field
 from functools import reduce
 from itertools import combinations
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -61,6 +71,7 @@ from generic_data_ingestor_framework_spark.normalize import (
     column,
     drop_corrupt_records,
     normalize_text_parity,
+    quote,
 )
 from generic_data_ingestor_framework_spark.scanner import FileScanner
 
@@ -90,11 +101,6 @@ def _open(path: str | Path, mode: str = "rb", **kw):
 
 def _line_delimited(p: str) -> bool:
     return _logical_path(p).endswith((".jsonl", ".ndjson"))
-
-
-def _is_obj(j: Column) -> Column:
-    """A JSON element (as raw text) that is an object."""
-    return j.isNotNull() & F.ltrim(j).startswith("{")
 
 
 def detect_encoding(path: str | Path) -> str:
@@ -197,7 +203,8 @@ def salvage_json_elements(
     binary read → ``decode`` with the sniffed encoding (the text
     source has no encoding option and would U+FFFD-mangle latin-1) →
     ``from_json(..., 'array<string>')`` (object elements come back as
-    raw JSON text) → keep ``{``-prefixed elements → ``from_json``
+    raw JSON text) → keep the objects (``_objs``, as the one-pass
+    classify does) → ``from_json``
     them against an element schema inferred from a bounded sample →
     ``select("s.*")``.  The whole bulk path is JVM-side Catalyst
     expressions: no RDD scan, no Python runner stage (a multi-GB
@@ -233,7 +240,7 @@ def salvage_json_elements(
         F.sum(F.when(F.col("n_chars") > 0, 1).otherwise(0)).alias("n_nonempty"),
         F.sum(F.when(F.col("arr").isNotNull(), 1).otherwise(0)).alias("n_arrays"),
         F.sum(F.coalesce(F.size("arr"), F.lit(0))).alias("n_elems"),
-        F.sum(F.coalesce(F.size(F.filter("arr", _is_obj)), F.lit(0))).alias("n_objs"),
+        F.sum(F.coalesce(F.size(F.expr(_objs("arr"))), F.lit(0))).alias("n_objs"),
     ).collect()[0]
     if stats["n_rows"] == 0 or not stats["n_nonempty"]:
         raise ValueError(f"empty file: {path}")
@@ -244,7 +251,7 @@ def salvage_json_elements(
     dropped = int(stats["n_elems"]) - int(stats["n_objs"])
     if not stats["n_objs"]:
         return None, dropped  # valid array, zero dict records (not an error)
-    obj_df = arr_df.select(F.explode(F.filter("arr", _is_obj)).alias("elem"))
+    obj_df = arr_df.select(F.explode(F.expr(_objs("arr"))).alias("elem"))
     sample = [r.elem for r in obj_df.limit(SALVAGE_SCHEMA_SAMPLE).collect()]
     schema = (
         spark.read.option("allowSingleQuotes", "false")
@@ -513,14 +520,17 @@ def ingest_directory(
 # One distributed pass over the directory's JSON files (see the module
 # docstring): one Spark job classifies the files, one infers every
 # file's element schema, and the caller's write runs the projection.
-# Files the pass cannot place take the per-file reader.
+# Files the pass cannot place take the per-file reader. Each of the
+# three plans is one SQL text over the file listing, parsed and
+# analyzed once in the JVM; the per-file values (tags, encodings, key
+# sets) are bound as named parameters, never spliced into the text.
 
 _PASS_GLOB = "*.{json,jsonl,ndjson}"
 # larger files take the per-file reader, which is faster once the bytes
 # outweigh a file's jobs (see the module docstring)
 _PASS_MAX_BYTES = 1024 * 1024
 _PATH_COL = "_ingest_path"  # a row's file, kept past the text projection for the mask
-_STRICT_JSON = {"allowSingleQuotes": "false"}  # Python json.load parity
+_STRICT_JSON = "map('allowSingleQuotes', 'false')"  # Python json.load parity
 # text that may hold a field Spark's schema inference drops (an empty
 # object or an empty key): such a file's records can carry a nested
 # field its own schema lacks, so the merge must not add nested fields
@@ -533,25 +543,149 @@ def _path_key(p: str) -> str:
     return "file:" + os.path.abspath(p)
 
 
-def _first_char(text: Column) -> Column:
-    return F.regexp_extract(text, r"^\s*(\S)", 1)
+def _by_path(values: dict) -> str:
+    """``values`` (path → value) as the JSON object a SQL text reads as
+    a map and looks up by a row's ``path``."""
+    return json.dumps({_path_key(p): v for p, v in values.items()})
 
 
-def _one_json_value(text: Column) -> Column:
+def _sql(frame: DataFrame, text: str, **args) -> DataFrame:
+    """``text``, which reads ``frame`` as ``IDENTIFIER(:frame)``, as one
+    plan parsed and analyzed in the JVM, with ``args`` bound as named
+    parameters. ``frame`` is a temp view under a unique name for the
+    analysis only."""
+    view = f"_ingest_{uuid.uuid4().hex}"
+    frame.createTempView(view)
+    try:
+        return frame.sparkSession.sql(text, args={"frame": view, **args})
+    finally:
+        frame.sparkSession.catalog.dropTempView(view)
+
+
+# SQL fragments, each a function of SQL expressions
+
+def _is_obj(e: str) -> str:
+    """A JSON element ``e`` (as raw text) that is an object."""
+    return f"({e} IS NOT NULL AND startswith(ltrim({e}), '{{'))"
+
+
+def _objs(arr: str) -> str:
+    """The object elements of ``arr``, an ``array<string>`` of JSON
+    elements."""
+    return f"filter({arr}, e -> {_is_obj('e')})"
+
+
+def _first_char(text: str) -> str:
+    return rf"regexp_extract({text}, r'^\s*(\S)', 1)"
+
+
+def _one_json_value(text: str) -> str:
     """Strict check: ``text`` is exactly one JSON value, with no
     trailing text and no duplicate keys. The lambda binds the one parse
     both tests read."""
-    w = F.try_parse_json(F.concat(F.lit("["), text, F.lit("]")))
-    one = lambda v: v.isNotNull() & F.variant_get(v, "$[1]", "variant").isNull()  # noqa: E731
-    return F.exists(F.array(w), one)
+    return (
+        f"exists(array(try_parse_json(concat('[', {text}, ']'))), "
+        "v -> v IS NOT NULL AND variant_get(v, '$[1]', 'variant') IS NULL)"
+    )
 
 
-def _by_path(values: dict, value_type: str = "string", path: str = "path") -> Column:
-    """The value ``values`` (path → ``value_type``) holds for the row's
-    file, NULL for any other file: one map literal looked up by the
-    row's ``path`` column."""
-    lookup = json.dumps({_path_key(p): v for p, v in values.items()})
-    return F.from_json(F.lit(lookup), f"map<string,{value_type}>")[F.col(path)]
+def _per_kind(kind: str, obj: str, arr: str, mixed: str, lines: str) -> str:
+    return (
+        f"CASE {kind} WHEN 'object' THEN {obj} WHEN 'array' THEN {arr} "
+        f"WHEN 'mixed' THEN {mixed} WHEN 'lines' THEN {lines} END"
+    )
+
+
+# The listing's files kept to those in ``:tags`` (path → tag): ``(path,
+# tag, text, _source_file, arr, lines, one)``. ``text`` is the file
+# decoded with its sniffed charset (``:encodings``), BOM stripped; NULL
+# when bytes sniffed as UTF-8 are not valid UTF-8 (the sniff reads only
+# the head). ``_source_file`` is the lineage ``with_lineage`` gives. The
+# parses are columns, read by name, so each runs once per file, and
+# only for the tags that read it: ``arr``, the top-level array's
+# elements as raw JSON text (``whole``, ``mixed``); ``lines``, the
+# non-blank lines (``lines``); ``one``, the strict gate (``whole``).
+_SCAN = rf"""(
+  SELECT *,
+    CASE WHEN tag IN ('whole', 'mixed')
+      THEN from_json(text, 'array<string>', {_STRICT_JSON}) END AS arr,
+    CASE WHEN tag = 'lines'
+      THEN filter(split(text, r'\r\n|\r|\n'), ln -> ln RLIKE r'\S') END AS lines,
+    CASE WHEN tag = 'whole' THEN {_one_json_value('text')} END AS one
+  FROM (
+    SELECT path, tag,
+      regexp_replace(
+        CASE WHEN enc <> 'UTF-8' OR is_valid_utf8(content) THEN decode(content, enc) END,
+        r'^\uFEFF', '') AS text,
+      element_at(split(input_file_name(), '/'), -1) AS {SOURCE_COL}
+    FROM (
+      SELECT *, from_json(:tags, 'map<string,string>')[path] AS tag,
+        from_json(:encodings, 'map<string,string>')[path] AS enc
+      FROM IDENTIFIER(:frame)
+    )
+    WHERE tag IS NOT NULL
+  )
+)"""
+
+_OBJS = _objs("arr")  # a scanned file's object elements
+
+# The salvage generalized to every layout, per file: its kind, record
+# and dropped counts, and whether its text may hold a field schema
+# inference drops (``:lossy``). Spark's reader salvages an array only
+# when a scalar element makes the whole document corrupt; with objects,
+# nulls and nested arrays alone it returns neither: not placed.
+_CLASSIFY = f"""
+SELECT path, kind,
+  {_per_kind('kind', '1', 'size(arr)', f'size({_OBJS})', 'size(lines)')} AS n,
+  CASE WHEN kind = 'mixed' THEN size(arr) - size({_OBJS}) ELSE 0 END AS dropped,
+  text RLIKE :lossy AS lossy
+FROM (
+  SELECT *, CASE
+    WHEN text IS NULL THEN NULL
+    WHEN tag = 'lines' THEN CASE
+      WHEN size(lines) > 0
+        AND forall(lines, ln -> {_first_char('ln')} = '{{' AND {_one_json_value('ln')})
+      THEN 'lines' END
+    WHEN NOT one THEN NULL
+    WHEN {_first_char('text')} = '{{' THEN 'object'
+    WHEN {_first_char('text')} = '[' AND size({_OBJS}) = size(arr) THEN 'array'
+    WHEN {_first_char('text')} = '['
+      AND exists(arr, e -> e IS NOT NULL AND NOT {_is_obj('e')} AND NOT startswith(ltrim(e), '['))
+      THEN 'mixed'
+  END AS kind
+  FROM {_SCAN}
+)"""
+
+# Of each file scanned with its kind as tag, one row ``{"<path>":
+# [records]}`` holding the records schema inference sees; a mixed array
+# gives its first ``SALVAGE_SCHEMA_SAMPLE`` objects, as salvage does.
+_SAMPLE_TEXT = _per_kind(
+    "tag", "concat('[', text, ']')", "text",
+    f"concat('[', array_join(slice({_OBJS}, 1, {SALVAGE_SCHEMA_SAMPLE}), ','), ']')",
+    "concat('[', array_join(lines, ','), ']')",
+)
+_SAMPLE = rf"""
+SELECT concat(
+  '{{', regexp_extract(to_json(array(path)), r'^\[(.*)\]$', 1), ':', {_SAMPLE_TEXT}, '}}'
+) AS value
+FROM {_SCAN}"""
+
+# Of each file scanned with its kind as tag, its records parsed with the
+# element schema ``:record`` (``:records``, its array), one row each.
+# A mixed array keeps the lineage salvage pins: the file's name as
+# listed, where input_file_name() gives it URL-encoded.
+_PARSED = _per_kind(
+    "tag", f"array(from_json(text, :record, {_STRICT_JSON}))",
+    f"from_json(text, :records, {_STRICT_JSON})",
+    f"transform({_OBJS}, o -> from_json(o, :record, {_STRICT_JSON}))",
+    f"transform(lines, ln -> from_json(ln, :record, {_STRICT_JSON}))",
+)
+_PARSE = f"""
+SELECT inline({_PARSED}),
+  CASE WHEN tag = 'mixed' THEN element_at(split(path, '/'), -1) ELSE {SOURCE_COL} END
+    AS {SOURCE_COL},
+  path AS {_PATH_COL}
+FROM {_SCAN}"""
 
 
 def _list_json(spark: SparkSession, directory: str | Path) -> DataFrame:
@@ -561,52 +695,13 @@ def _list_json(spark: SparkSession, directory: str | Path) -> DataFrame:
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", _PASS_GLOB)
-        # escaped: Spark expands glob characters in a load path
-        .load(re.sub(r"([{}\[\]*?\\])", r"\\\1", os.path.abspath(directory)))
+        # the directory is a path, not a pattern: no glob expansion, which
+        # would also read a ':' in a name as a URI scheme (the internal
+        # option Spark's file stream source sets)
+        .option("__globPaths__", "false")
+        .load(os.path.abspath(directory))
         .where(F.col("length") <= _PASS_MAX_BYTES)  # pushed down: larger files are not read
     )
-
-
-def _scan_json(files: DataFrame, tags: dict[str, str], encodings: dict[str, str]) -> DataFrame:
-    """``files`` kept to those in ``tags`` (path → tag): ``(path, tag,
-    text, _source_file, arr, lines, one)``. ``text`` is the file decoded
-    with its sniffed charset (from ``encodings``), BOM stripped; NULL
-    when bytes sniffed as UTF-8 are not valid UTF-8 (the sniff reads
-    only the head). ``_source_file`` is the lineage ``with_lineage``
-    gives. The parses are columns, so each runs once per file, and only
-    for the tags that read it: ``arr``, the top-level array's elements
-    as raw JSON text (``whole``, ``mixed``); ``lines``, the non-blank
-    lines (``lines``); ``one``, the strict gate (``whole``)."""
-    text = F.when(F.is_valid_utf8("content"), F.decode("content", "UTF-8"))
-    other = {p: encodings[p] for p in tags if encodings[p] != "UTF-8"}
-    if other:
-        enc = _by_path(other)
-        for e in sorted(set(other.values())):
-            text = F.when(enc == e, F.decode("content", e)).otherwise(text)
-    tag, t = F.col("tag"), F.col("text")
-    return with_lineage(
-        files.withColumn("tag", _by_path(tags)).where(tag.isNotNull())
-    ).select(
-        "path", "tag", F.regexp_replace(text, "^\ufeff", "").alias("text"), SOURCE_COL
-    ).withColumns({
-        "arr": F.when(tag.isin("whole", "mixed"), F.from_json(t, "array<string>", _STRICT_JSON)),
-        "lines": F.when(
-            tag == "lines", F.filter(F.split(t, r"\r\n|\r|\n"), lambda ln: ln.rlike(r"\S"))
-        ),
-        "one": F.when(tag == "whole", _one_json_value(t)),
-    })
-
-
-def _per_kind(kind: Column, obj: Column, arr: Column, mixed: Column, lines: Column) -> Column:
-    return (
-        F.when(kind == "object", obj).when(kind == "array", arr)
-        .when(kind == "mixed", mixed).when(kind == "lines", lines)
-    )
-
-
-def _objs() -> Column:
-    """A scanned file's object elements."""
-    return F.filter(F.col("arr"), _is_obj)
 
 
 def _classify(files: DataFrame, layout: dict[str, str], encodings: dict[str, str]) -> DataFrame:
@@ -618,54 +713,8 @@ def _classify(files: DataFrame, layout: dict[str, str], encodings: dict[str, str
     ``mixed`` (objects and scalars: the scalars are dropped, as salvage
     drops them), ``lines`` (line-delimited objects), or NULL for a file
     the pass cannot place."""
-    t, arr, lines, kind = F.col("text"), F.col("arr"), F.col("lines"), F.col("kind")
-    good_line = lambda ln: (_first_char(ln) == "{") & _one_json_value(ln)  # noqa: E731
-    # Spark's reader salvages an array only when a scalar element makes
-    # the whole document corrupt; with objects, nulls and nested arrays
-    # alone it returns neither: not placed
-    scalar = F.exists(arr, lambda e: e.isNotNull() & ~_is_obj(e) & ~F.ltrim(e).startswith("["))
-    return (
-        _scan_json(files, layout, encodings)
-        .withColumn("kind", (
-            F.when(t.isNull(), None)
-            .when(
-                F.col("tag") == "lines",
-                F.when((F.size(lines) > 0) & F.forall(lines, good_line), "lines"),
-            )
-            .when(~F.col("one"), None)
-            .when(_first_char(t) == "{", "object")
-            .when((_first_char(t) == "[") & (F.size(_objs()) == F.size(arr)), "array")
-            .when((_first_char(t) == "[") & scalar, "mixed")
-        ))
-        .select(
-            "path", "kind",
-            _per_kind(kind, F.lit(1), F.size(arr), F.size(_objs()), F.size(lines)).alias("n"),
-            F.when(kind == "mixed", F.size(arr) - F.size(_objs())).otherwise(0).alias("dropped"),
-            t.rlike(_LOSSY_TEXT).alias("lossy"),
-        )
-    )
-
-
-def _sample_text() -> Column:
-    """Of a file scanned with its kind as tag: the records schema
-    inference sees, as one JSON array; a mixed array gives its first
-    ``SALVAGE_SCHEMA_SAMPLE`` objects, as salvage does."""
-    t = F.col("text")
-    join = lambda xs: F.concat(F.lit("["), F.array_join(xs, ","), F.lit("]"))  # noqa: E731
-    return _per_kind(
-        F.col("tag"), F.concat(F.lit("["), t, F.lit("]")), t,
-        join(F.slice(_objs(), 1, SALVAGE_SCHEMA_SAMPLE)), join(F.col("lines")),
-    )
-
-
-def _parsed(schema: T.StructType) -> Column:
-    """Of a file scanned with its kind as tag: its records, parsed with
-    ``schema``."""
-    t = F.col("text")
-    parse = lambda x: F.from_json(x, schema, _STRICT_JSON)  # noqa: E731
-    return _per_kind(
-        F.col("tag"), F.array(parse(t)), F.from_json(t, T.ArrayType(schema), _STRICT_JSON),
-        F.transform(_objs(), parse), F.transform(F.col("lines"), parse),
+    return _sql(
+        files, _CLASSIFY, tags=_by_path(layout), encodings=_by_path(encodings), lossy=_LOSSY_TEXT
     )
 
 
@@ -745,11 +794,9 @@ def _place(
     nonempty = {p: r["kind"] for p, r in found.items() if r["n"] > 0}
     elem: dict[str, T.DataType] = {}
     if nonempty:
-        name = F.regexp_extract(F.to_json(F.array("path")), r"^\[(.*)\]$", 1)
-        wrapped = _scan_json(out.files, nonempty, out.encodings).select(
-            F.concat(F.lit("{"), name, F.lit(":"), _sample_text(), F.lit("}"))
-        )
-        elem = _infer_element_types(spark, wrapped)
+        elem = _infer_element_types(spark, _sql(
+            out.files, _SAMPLE, tags=_by_path(nonempty), encodings=_by_path(out.encodings)
+        ))
 
     # nested fields may be added to a column only when it is written as
     # JSON text that leaves the added (null) fields out
@@ -806,25 +853,24 @@ def _project(placed: _Placed, files: list[str], text_parity: bool) -> DataFrame:
     stays NULL for its rows (a present null becomes ``""``); lineage
     last."""
     schema = placed.schema
-    masked = {n for n in schema.fieldNames() if not all(n in placed.keys[p] for p in files)}
-    # a mixed array keeps the lineage salvage pins: the file's name as
-    # listed, where input_file_name() gives it URL-encoded
-    source = F.when(F.col("tag") == "mixed", F.element_at(F.split("path", "/"), -1))
-    df = _scan_json(placed.files, {p: placed.kind[p] for p in files}, placed.encodings).select(
-        F.inline(_parsed(schema)),
-        source.otherwise(F.col(SOURCE_COL)).alias(SOURCE_COL),
-        F.col("path").alias(_PATH_COL),
+    df = _sql(
+        placed.files, _PARSE, tags=_by_path({p: placed.kind[p] for p in files}),
+        encodings=_by_path(placed.encodings),
+        record=schema.json(), records=T.ArrayType(schema).json(),
     )
     if text_parity:
         df = normalize_text_parity(df)
-    has = _by_path({p: sorted(placed.keys[p]) for p in files}, "array<string>", _PATH_COL)
-    return df.select(
-        *[
-            F.when(F.array_contains(has, n), column(n)).alias(n) if n in masked else column(n)
-            for n in schema.fieldNames()
-        ],
-        SOURCE_COL,
-    )
+    # ``:has`` gives each file whether it holds each masked column
+    masked = [n for n in schema.fieldNames() if not all(n in placed.keys[p] for p in files)]
+    has = {p: [n in placed.keys[p] for n in masked] for p in files}
+    at = {n: i for i, n in enumerate(masked)}
+    cols = [
+        f"CASE WHEN from_json(:has, 'map<string,array<boolean>>')[{_PATH_COL}][{at[n]}] "
+        f"THEN {quote(n)} END AS {quote(n)}" if n in at else quote(n)
+        for n in schema.fieldNames()
+    ]
+    mask = f"SELECT {', '.join(cols)}, {SOURCE_COL} FROM IDENTIFIER(:frame)"
+    return _sql(df, mask, has=_by_path(has))
 
 
 def _count_rows(frames: list[tuple[DataFrame, bool]]) -> list[int | Exception]:
@@ -923,7 +969,7 @@ def unify_schema_first_record(df: DataFrame, first_file: str | Path | None = Non
     is indistinguishable from an absent key — all are dropped."""
     first = df.limit(1).collect()  # one row by contract, like the reference
     if not first:
-        return df.select([column(c) for c in df.columns if c != SOURCE_COL])
+        return df.selectExpr(*[quote(c) for c in df.columns if c != SOURCE_COL])
     row = first[0].asDict()
     cols = [
         c for c in df.columns if c != SOURCE_COL and row.get(c) not in (None, "")
@@ -942,7 +988,7 @@ def unify_schema_first_record(df: DataFrame, first_file: str | Path | None = Non
                 cols.sort(key=lambda c: order.get(c, len(order)))
         except Exception:  # noqa: BLE001 — unreadable head file: keep inference order
             pass
-    return df.select(*map(column, cols))
+    return df.selectExpr(*map(quote, cols))
 
 
 def unify_schema_sorted(df: DataFrame) -> DataFrame:
@@ -952,7 +998,7 @@ def unify_schema_sorted(df: DataFrame) -> DataFrame:
     cols = sorted(c for c in df.columns if c != SOURCE_COL)
     if SOURCE_COL in df.columns:
         cols.append(SOURCE_COL)
-    return df.select(*map(column, cols))
+    return df.selectExpr(*map(quote, cols))
 
 
 def infer_schema_sample(df: DataFrame, sample: int = 10) -> list[dict]:

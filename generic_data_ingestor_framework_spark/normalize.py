@@ -29,31 +29,39 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def quote(name: str) -> str:
+    """``name`` as a SQL identifier: backquoted, backticks doubled, so
+    a dot in a JSON key is part of the name, not a struct path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def column(name: str) -> Column:
     """The column named ``name``, read literally: a dot or backtick in
     a JSON key is part of the name, not a struct path."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    return F.col(quote(name))
 
 
-def _normalize_column(col: Column, dtype: T.DataType) -> Column:
-    """Reference normalization for one column, as a pure expression."""
+def _normalize_sql(name: str, dtype: T.DataType) -> str:
+    """Reference normalization for one column, as a SQL expression."""
+    q = quote(name)
     if isinstance(dtype, (T.StructType, T.ArrayType, T.MapType)):
-        txt = F.to_json(col)
         # falsy collapse: {} / [] / null → ""
-        return F.when(
-            col.isNull() | txt.isin("{}", "[]"), F.lit("")
-        ).otherwise(txt)
+        return (
+            f"CASE WHEN {q} IS NULL OR to_json({q}) IN ('{{}}', '[]') THEN '' "
+            f"ELSE to_json({q}) END"
+        )
     if isinstance(dtype, T.StringType):
-        return F.coalesce(col, F.lit(""))
+        return f"coalesce({q}, '')"
     # primitives (and exotica) → string, null → ""
-    return F.coalesce(col.cast("string"), F.lit(""))
+    return f"coalesce(CAST({q} AS STRING), '')"
 
 
 def normalize_text_parity(df: DataFrame, keep_columns: list[str] | None = None) -> DataFrame:
-    """A7: the all-TEXT parity projection (single codegen'd select)."""
+    """A7: the all-TEXT parity projection (single codegen'd select),
+    one ``selectExpr`` of SQL expressions, parsed in the JVM."""
     cols = keep_columns or df.columns
-    return df.select(
-        *[_normalize_column(column(c), df.schema[c].dataType).alias(c) for c in cols]
+    return df.selectExpr(
+        *[f"{_normalize_sql(c, df.schema[c].dataType)} AS {quote(c)}" for c in cols]
     )
 
 
@@ -79,7 +87,7 @@ def flatten_dot_paths(df: DataFrame, sep: str = ".") -> DataFrame:
     every later select-by-name ambiguous)."""
 
     def quoted(parts: list[str]) -> str:
-        return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+        return ".".join(map(quote, parts))
 
     def expand(parts: list[str], dtype: T.DataType) -> list[tuple[Column, str]]:
         if isinstance(dtype, T.StructType):

@@ -826,14 +826,20 @@ def scd2_apply_table(
     ``stream_scd2_apply`` maintainer. ``updates`` carries
     (key, *attrs[, delete_col]); a missing ``delete_col`` reads false.
 
-    An absent table is created empty first, so the batch's non-deleted
-    rows open at ``gen``. ``gen`` is the crawl loop's monotonic batch
-    counter, VALIDATED before merging: one below the table's newest
-    ``valid_from`` raises, since replaying an old batch would close
-    open rows at ``valid_to < valid_from`` (inverted history rows).
+    A table an earlier process left under the warehouse is attached
+    first (``sink.attach_table``); an absent one is created empty, so
+    the batch's non-deleted rows open at ``gen``. ``gen`` is the crawl
+    loop's monotonic batch counter, VALIDATED before merging: one
+    below the table's newest ``valid_from`` raises, since replaying an
+    old batch would close open rows at ``valid_to < valid_from``
+    (inverted history rows).
     ``gen == max(valid_from)`` is the idempotent replay of the current
-    batch, a no-op merge. The overwrite stages through a
-    localCheckpoint so the write never reads the table it replaces."""
+    batch, a no-op merge. The table is overwritten in place (an
+    attached table is external: ``saveAsTable`` would re-create it as
+    managed over its own files), staged through a localCheckpoint so
+    the write never reads the table it replaces."""
+    from generic_data_ingestor_framework_spark.sink import attach_table
+
     batch = updates.select(
         key,
         *attrs,
@@ -841,7 +847,7 @@ def scd2_apply_table(
             delete_col
         ),
     )
-    if not spark.catalog.tableExists(table):
+    if not (spark.catalog.tableExists(table) or attach_table(spark, table)):
         schema = batch.select(
             key, *attrs, F.lit(0).alias("valid_from"), F.lit(0).alias("valid_to")
         ).schema
@@ -855,8 +861,8 @@ def scd2_apply_table(
             f"inverted history rows (valid_to < valid_from). Use the "
             f"crawl loop's current batch counter."
         )
-    merged = scd2_apply(hist, batch, key, attrs, gen, delete_col)
-    merged.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(table)
+    merged = scd2_apply(hist, batch, key, attrs, gen, delete_col).select(*hist.columns)
+    merged.localCheckpoint(eager=True).write.insertInto(table, overwrite=True)
 
 
 def _scd2_customer_parts(spark: SparkSession, sf_dir: str):

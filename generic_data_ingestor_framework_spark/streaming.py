@@ -1146,17 +1146,17 @@ def stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", "lang").join(admitted, "doc_id", "semi")
 
 
-def stream_stateful_user_counts(
-    spark: SparkSession, sf_dir: str, timeout_ms: int = 0
-):
+def stream_stateful_user_counts(spark: SparkSession, sf_dir: str):
     """Custom stateful streaming operator via ``applyInPandasWithState``:
     a per-user running event counter with explicit state management —
     the extension point for operators Spark's built-ins can't express
     (custom sessionization, CEP-ish patterns, online aggregates).
 
     State is partitioned by user_id and lives in the state store, so
-    memory scales with #keys per executor, not stream length. Returns
-    the started query's final memory-sink table (availableNow).
+    memory scales with #keys per executor, not stream length. The state
+    has no timeout (``GroupStateTimeout.NoTimeout``): a user's count is
+    kept for the life of the query. Returns the started query's final
+    memory-sink table (availableNow).
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout

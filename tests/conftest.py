@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import shutil
 import tempfile
+import threading
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -27,6 +29,33 @@ def spark():
     yield s
     s.stop()
     shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.fixture
+def jvm_commands(monkeypatch):
+    """``with jvm_commands() as sent:`` counts in ``sent[0]`` the py4j
+    commands the block's thread sends the JVM. py4j releases JVM
+    references from a worker thread of its own, whenever Python frees
+    them: those commands are not counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+
+    @contextmanager
+    def counting():
+        sent, me = [0], threading.get_ident()
+
+        def counted(self, command, *args, **kwargs):
+            sent[0] += threading.get_ident() == me
+            return send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+        try:
+            yield sent
+        finally:
+            monkeypatch.setattr(ClientServerConnection, "send_command", send)
+
+    return counting
 
 
 @pytest.fixture(scope="session")

@@ -58,6 +58,39 @@ def test_cli_end_to_end(tmp_path):
     assert "cli_out" in out.stdout
 
 
+def test_scd2_apply_merges_into_the_history_an_earlier_process_wrote(tmp_path):
+    """Each process starts with an empty session catalog; a second
+    process's ``scd2_apply`` step attaches the history table the first
+    left under the warehouse and merges its batch into it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wh = str(tmp_path / "wh")
+
+    def apply(batch: dict, gen: int):
+        path = str(tmp_path / f"batch{gen}.parquet")
+        pq.write_table(pa.table(batch), path)
+        return subprocess.run([sys.executable, "-c", f"""
+import json
+from generic_data_ingestor_framework_spark.pipeline import run_pipeline
+from generic_data_ingestor_framework_spark.session import get_spark
+spark = get_spark(extra_conf={{"spark.sql.warehouse.dir": {wh!r}}})
+run_pipeline(spark, {{"source": {{"type": "parquet", "path": {path!r}}}, "steps": [
+    {{"op": "scd2_apply", "table": "hist", "key": "k", "attrs": ["seg"], "gen": {gen}}}]}})
+print(json.dumps(sorted(map(list, spark.table("hist").collect()), key=str)))
+"""], capture_output=True, text=True, cwd=REPO, timeout=300)
+
+    out = apply({"k": [1, 2], "seg": ["a", "b"], "is_deleted": [False, False]}, 0)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.splitlines()[-1]) == [[1, "a", 0, None], [2, "b", 0, None]]
+    # key 1 changes, key 2 is deleted, key 3 is new
+    out = apply({"k": [1, 2, 3], "seg": ["a2", "b", "c"], "is_deleted": [False, True, False]}, 1)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.splitlines()[-1]) == [
+        [1, "a", 0, 1], [1, "a2", 1, None], [2, "b", 0, 1], [3, "c", 1, None]
+    ]
+
+
 def test_cli_rerun_appends_to_the_table_an_earlier_process_wrote(tmp_path):
     """Each process starts with an empty session catalog; the table an
     earlier run left under the warehouse is attached and appended to,

@@ -13,11 +13,13 @@ import json
 from collections import Counter
 from functools import reduce
 from pathlib import Path
+from urllib.parse import unquote
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from generic_data_ingestor_framework_spark import ingest
 
@@ -257,3 +259,94 @@ def test_failed_pass_falls_back_to_per_file_reads(spark, hostile_dir, monkeypatc
     every_file = [f.name for f in hostile_dir.rglob("*") if f.is_file()]
     with pytest.warns(UserWarning, match="scan failed"):
         _assert_same(spark, hostile_dir, monkeypatch, every_file)
+
+
+def test_hostile_path_characters_go_through_the_pass(spark, tmp_path, monkeypatch):
+    # the pass binds paths as SQL parameters, never as SQL text, and
+    # lists its directory as a path, not a glob pattern. Hadoop's
+    # per-file reader cannot open these names (it globs them, and reads
+    # a ':' as a URI scheme), so the reference reads the same files
+    # under plain names. Hadoop's local file system cannot open a file
+    # whose own name holds a ':' (its checksum path is parsed as a URI):
+    # the ':' is in the directory name only.
+    chars = "'\"\\{}$%"
+    payloads = {
+        ".json": json.dumps([{"id": "ar", "v": 1}, {"id": "ar2", "w": {"k": 2}}]),
+        "_obj.json": json.dumps({"id": "ob", "v": 3}),
+        ".jsonl": '{"id": "l1", "v": 4}\n{"id": "l2", "z": null}\n',
+        "_mixed.json": json.dumps([{"id": "mx"}, 5, "x"]),
+        "_bom.json": "\ufeff" + json.dumps([{"id": "bo"}]),
+    }
+    hostile, plain = tmp_path / f"in {chars}:", tmp_path / "plain"
+    names = {}
+    for i, (suffix, payload) in enumerate(payloads.items()):
+        names[f"f{i}{suffix}"] = f"f{i}{chars}{suffix}"
+        _write(plain / f"f{i}{suffix}", payload)
+        _write(hostile / names[f"f{i}{suffix}"], payload)
+    latin = json.dumps([{"id": "la", "city": "Besançon"}], ensure_ascii=False)
+    _write(plain / "latin.json", latin, encoding="iso-8859-1")
+    _write(hostile / f"latin{chars}.json", (plain / "latin.json").read_bytes())
+    names["latin.json"] = f"latin{chars}.json"
+    want_df, want = _reference(spark, plain)
+
+    monkeypatch.setattr(ingest, "read_any_file", lambda _, p, t: pytest.fail(f"per-file read {p}"))
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    got_df, got = ingest_directory(spark, hostile)
+    # the pass's plans read the listing through temp views dropped once analyzed
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == views
+    assert (
+        got.files_processed, got.files_failed, got.total_records, got.records_dropped_non_dict
+    ) == (want["processed"], want["failed"], want["records"], want["dropped"])
+    assert want["processed"] == len(names)
+    # lineage names the hostile file: as input_file_name() gives it
+    # (URL-encoded), or as listed for a mixed array
+    plain_name = {v: k for k, v in names.items()}
+    rows = [r.asDict() for r in got_df.collect()]
+    for r in rows:
+        r["_source_file"] = plain_name[unquote(r["_source_file"])]
+    assert (got_df.columns, got_df.dtypes) == (want_df.columns, want_df.dtypes)
+    assert Counter(json.dumps(r, sort_keys=True) for r in rows) == Counter(
+        json.dumps(r.asDict(), sort_keys=True) for r in want_df.collect()
+    )
+
+
+def test_pass_plans_cost_a_fixed_number_of_jvm_commands(spark, tmp_path, jvm_commands):
+    # each plan is one SQL text, parsed and analyzed in the JVM, with
+    # the per-file values bound as parameters: building it costs the
+    # same few py4j commands for 10 or 40 files and 5 or 50 keys
+    def build(n_files, n_keys):
+        d = tmp_path / f"d{n_files}_{n_keys}"
+        keys = [f"k.{j}" for j in range(n_keys)]  # dot-named, as JSON keys may be
+        held = {}
+        for i in range(n_files):
+            path = d / f"part_{i:03d}.json"
+            held[str(path)] = keys[: n_keys // (1 + i % 2)]
+            _write(path, json.dumps([dict.fromkeys(held[str(path)], i)]))
+        placed = ingest._Placed(
+            kind=dict.fromkeys(held, "array"),
+            keys={p: set(ks) for p, ks in held.items()},  # odd files lack half the keys
+            schema=T.StructType([T.StructField(k, T.LongType()) for k in keys]),
+            encodings=dict.fromkeys(held, "UTF-8"),
+            files=ingest._list_json(spark, d),
+        )
+        sent = []
+        for plan in (
+            lambda: ingest._classify(placed.files, dict.fromkeys(held, "whole"), placed.encodings),
+            lambda: ingest._project(placed, list(held), text_parity=False),
+            lambda: ingest._project(placed, list(held), text_parity=True),
+        ):
+            with jvm_commands() as n:
+                plan()
+            sent.append(n[0])
+        return sent
+
+    build(3, 2)  # first use of each JVM entry point
+    sent = {(f, k): build(f, k) for f in (10, 40) for k in (5, 50)}
+    classify, lossless, text = sent[10, 5]
+    assert {(c, l) for c, l, _ in sent.values()} == {(classify, lossless)}
+    assert classify <= 60 and lossless <= 60
+    # the all-TEXT projection adds normalize_text_parity's selectExpr,
+    # whose list of SQL expressions py4j sends one element at a time
+    assert {fk: t - text for fk, (_, _, t) in sent.items()} == {
+        (10, 5): 0, (40, 5): 0, (10, 50): 45, (40, 50): 45
+    }
