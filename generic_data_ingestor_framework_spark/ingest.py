@@ -7,30 +7,33 @@ one union plan. ``ingest_directory`` runs it as one pipeline; its
 ``mode`` picks only how files are grouped into reads:
 
 - ``parity`` (the CLI, webapp and pipeline default) reads the
-  directory's JSON files in ONE distributed pass, a fixed number of
-  Spark jobs however many files there are, each file's records exactly
+  directory's JSON files in ONE distributed pass, one Spark job before
+  the write however many files there are, each file's records exactly
   as its own read gives them (``_place``). A file the pass cannot place
   — not strictly valid JSON, empty, gzipped, over 1 MiB, a type
-  widening, or not JSON — takes the per-file reader. The pass parses a
-  file's text once per job: to an ``array<string>`` beside one strict
-  gate to classify it, to infer its schema (whose fields are its key
-  set), and to write it; its own read parses it twice, in a few jobs
-  of its own. Per-file reads cost jobs, the pass bytes: on a 4-core
-  host (``local[2]``, ``tools/bench_parity_sizes.py``, medians of 2-3
-  seeds, CLI ingest and write) the pass took 2.28 s at 8x5000 (1.1 MB
-  a file) against 3.40 s per file, 2.00 s at 4x10000 (2.1 MB) against
-  1.90 s, 2.76 s at 4x20000 (4.3 MB) against 2.38 s and 4.63 s at
-  2x80000 (17 MB) against 2.65 s.
+  widening, or not JSON — takes the per-file reader, but a ``[``-led
+  text that is no JSON array fails from its classify row. The classify
+  job parses a file's text twice: to an ``array<string>``, and strictly
+  to a VARIANT, which gives the gate and, through ``schema_of_variant``,
+  the file's element type (whose fields are its key set). The write
+  parses it once more; its own read parses it twice, in a few jobs of
+  its own. Per-file reads cost jobs, the pass bytes: on a 4-core host
+  (``local[2]``, ``tools/bench_parity_sizes.py``, seed 1, the medians
+  of two rounds of 3 runs, CLI ingest and write) the pass took
+  1.86-2.10 s at 8x5000 (1.1 MB a file) against 2.65-3.11 s per file,
+  1.55-1.66 s at 4x10000 (2.1 MB) against 1.64-1.73 s, 1.93-2.24 s at
+  4x20000 (4.3 MB) against 1.93-2.23 s and 3.46-3.71 s at 2x80000
+  (17 MB) against 2.27-2.63 s. From 2 to 4 MB the two tie, so the
+  cutoff stays at 1 MiB.
 
-  Each of the pass's three plans (classify, schema sample, and the
-  write's projection with its mask) is one SQL text over a temp view
-  of the file listing, parsed and analyzed once in the JVM; the
-  per-file values are bound as named parameters. On a 4-core host
-  (``local[2]``, warm, the ``cli_small_files`` inputs of perfbench)
-  building them took 20, 16 and 53 py4j commands and 0.07-0.10 s,
-  0.06-0.07 s and 0.14-0.22 s; assembled Column by Column, the same
-  plans took 1,340, about 650 and 1,522 commands and 0.28-0.48 s,
-  0.13-0.29 s and 0.32-0.62 s. What is left is Spark's analysis.
+  Each of the pass's two plans (classify, and the write's projection
+  with its mask) is one SQL text over a temp view of the file listing,
+  parsed and analyzed once in the JVM; the per-file values are bound as
+  named parameters. On a 4-core host (``local[2]``, warm, the
+  ``cli_small_files`` inputs of perfbench) building them took 23 and 53
+  py4j commands and 0.12-0.16 s and 0.14-0.22 s; assembled Column by
+  Column, the same plans took 1,340 and 1,522 commands and 0.28-0.48 s
+  and 0.32-0.62 s. What is left is Spark's analysis.
 - ``bulk`` (the scale path) makes one multi-path read per format and
   layout (``read_paths``), whose schema inference reads every byte: it
   wins on few large files and loses on many small ones. JSON is read
@@ -55,6 +58,7 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import re
 import time
 import uuid
 import warnings
@@ -167,6 +171,7 @@ def read_json_file(
     enc = detect_encoding(p)
     reader = (
         spark.read.option("multiLine", str(multiline).lower())
+        .option("__globPaths__", "false")  # a path, not a pattern (see _list_json)
         .option("allowSingleQuotes", "false")  # Python json.load parity
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
@@ -223,8 +228,9 @@ def salvage_json_elements(
     enc = detect_encoding(path)
     # detect_encoding returns UTF-8 or ISO-8859-1, both charsets
     # F.decode supports
-    raw = spark.read.format("binaryFile").load(str(path)).select(
-        F.regexp_replace(F.decode(F.col("content"), enc), "^\ufeff", "").alias("value")
+    raw = (
+        spark.read.format("binaryFile").option("__globPaths__", "false").load(str(path))
+        .select(F.regexp_replace(F.decode(F.col("content"), enc), "^\ufeff", "").alias("value"))
     )
     # from_json has its OWN parser options — without the explicit
     # allowSingleQuotes=false it would accept (and silently rewrite)
@@ -345,7 +351,13 @@ def read_json_paths_bulk(spark: SparkSession, paths: list[str]) -> DataFrame:
     ``badRecordsPath`` rather than carrying them in-plan."""
     frames = []
     for multiline in (True, False):
-        group = [p for p in paths if _line_delimited(p) != multiline]
+        # each path escaped as a glob pattern matching only itself: with
+        # globbing off (``__globPaths__``), Spark reads a path holding a
+        # glob character as every path of the call, so files repeat
+        group = [
+            re.sub(r"([\\{}\[\]*?])", r"\\\1", p)
+            for p in paths if _line_delimited(p) != multiline
+        ]
         if group:
             frames.append(
                 spark.read.option("multiLine", str(multiline).lower())
@@ -431,7 +443,8 @@ def ingest_directory(
     # format's files at once (``groups``, counted below); a format
     # whose read fails is left to the per-file reader, so one bad file
     # costs itself. Parity reads the JSON files in one pass (``placed``,
-    # counted). Every file neither covers takes the per-file reader.
+    # counted, or failed from its classify row). Every file neither
+    # covers takes the per-file reader.
     placed, groups = _Placed(), []
     if mode == "bulk":
         for ftype, ps in sorted(discovered.items()):
@@ -448,10 +461,10 @@ def ingest_directory(
         except Exception as ex:  # noqa: BLE001 — the per-file reader still isolates each file
             warnings.warn(f"one-pass JSON read failed, reading each file alone: {ex!r:.400}")
     report.records_dropped_non_dict += sum(placed.dropped.values())
-    covered = set(placed.records).union(*(ps for ps, _, _ in groups))
+    covered = set(placed.records).union(placed.failed, *(ps for ps, _, _ in groups))
     todo = groups + [([p], t, None) for p, t in typed_paths if p not in covered]
 
-    errors: list[tuple[str, Exception]] = []
+    errors: list[tuple[str, Exception]] = list(placed.failed.items())
     loaded: list[tuple[list[str], DataFrame, bool]] = []
     for paths, ftype, df in todo:
         try:
@@ -518,12 +531,12 @@ def ingest_directory(
 # ------------------------------------------------------------ parity mode
 #
 # One distributed pass over the directory's JSON files (see the module
-# docstring): one Spark job classifies the files, one infers every
-# file's element schema, and the caller's write runs the projection.
-# Files the pass cannot place take the per-file reader. Each of the
-# three plans is one SQL text over the file listing, parsed and
-# analyzed once in the JVM; the per-file values (tags, encodings, key
-# sets) are bound as named parameters, never spliced into the text.
+# docstring): one Spark job classifies and types the files, and the
+# caller's write runs the projection. Files the pass cannot place take
+# the per-file reader. Each of the two plans is one SQL text over the
+# file listing, parsed and analyzed once in the JVM; the per-file
+# values (tags, encodings, key sets) are bound as named parameters,
+# never spliced into the text.
 
 _PASS_GLOB = "*.{json,jsonl,ndjson}"
 # larger files take the per-file reader, which is faster once the bytes
@@ -531,11 +544,6 @@ _PASS_GLOB = "*.{json,jsonl,ndjson}"
 _PASS_MAX_BYTES = 1024 * 1024
 _PATH_COL = "_ingest_path"  # a row's file, kept past the text projection for the mask
 _STRICT_JSON = "map('allowSingleQuotes', 'false')"  # Python json.load parity
-# text that may hold a field Spark's schema inference drops (an empty
-# object or an empty key): such a file's records can carry a nested
-# field its own schema lacks, so the merge must not add nested fields
-# to its columns
-_LOSSY_TEXT = r'\{\s*\}|""\s*:'
 
 
 def _path_key(p: str) -> str:
@@ -579,14 +587,16 @@ def _first_char(text: str) -> str:
     return rf"regexp_extract({text}, r'^\s*(\S)', 1)"
 
 
-def _one_json_value(text: str) -> str:
-    """Strict check: ``text`` is exactly one JSON value, with no
-    trailing text and no duplicate keys. The lambda binds the one parse
-    both tests read."""
-    return (
-        f"exists(array(try_parse_json(concat('[', {text}, ']'))), "
-        "v -> v IS NOT NULL AND variant_get(v, '$[1]', 'variant') IS NULL)"
-    )
+def _json_doc(text: str) -> str:
+    """``text`` parsed strictly, as the one element of a JSON array
+    (VARIANT): NULL when it is not JSON or repeats a key, and a second
+    element when a value follows the first."""
+    return f"try_parse_json(concat('[', {text}, ']'))"
+
+
+def _one_value(doc: str) -> str:
+    """A ``_json_doc`` that holds exactly one JSON value."""
+    return f"({doc} IS NOT NULL AND variant_get({doc}, '$[1]', 'variant') IS NULL)"
 
 
 def _per_kind(kind: str, obj: str, arr: str, mixed: str, lines: str) -> str:
@@ -597,21 +607,20 @@ def _per_kind(kind: str, obj: str, arr: str, mixed: str, lines: str) -> str:
 
 
 # The listing's files kept to those in ``:tags`` (path → tag): ``(path,
-# tag, text, _source_file, arr, lines, one)``. ``text`` is the file
+# tag, text, _source_file, arr, lines)``. ``text`` is the file
 # decoded with its sniffed charset (``:encodings``), BOM stripped; NULL
 # when bytes sniffed as UTF-8 are not valid UTF-8 (the sniff reads only
 # the head). ``_source_file`` is the lineage ``with_lineage`` gives. The
 # parses are columns, read by name, so each runs once per file, and
 # only for the tags that read it: ``arr``, the top-level array's
 # elements as raw JSON text (``whole``, ``mixed``); ``lines``, the
-# non-blank lines (``lines``); ``one``, the strict gate (``whole``).
+# non-blank lines (``lines``).
 _SCAN = rf"""(
   SELECT *,
     CASE WHEN tag IN ('whole', 'mixed')
       THEN from_json(text, 'array<string>', {_STRICT_JSON}) END AS arr,
     CASE WHEN tag = 'lines'
-      THEN filter(split(text, r'\r\n|\r|\n'), ln -> ln RLIKE r'\S') END AS lines,
-    CASE WHEN tag = 'whole' THEN {_one_json_value('text')} END AS one
+      THEN filter(split(text, r'\r\n|\r|\n'), ln -> ln RLIKE r'\S') END AS lines
   FROM (
     SELECT path, tag,
       regexp_replace(
@@ -630,45 +639,44 @@ _SCAN = rf"""(
 _OBJS = _objs("arr")  # a scanned file's object elements
 
 # The salvage generalized to every layout, per file: its kind, record
-# and dropped counts, and whether its text may hold a field schema
-# inference drops (``:lossy``). Spark's reader salvages an array only
-# when a scalar element makes the whole document corrupt; with objects,
-# nulls and nested arrays alone it returns neither: not placed.
+# and dropped counts, and the ``schema_of_variant`` of its records (of
+# a mixed array, the first ``SALVAGE_SCHEMA_SAMPLE`` objects salvage
+# infers its schema from), all read from the scan's parse and one strict
+# parse of the file (``doc``) or of each line (``docs``). Spark's reader
+# salvages an array only when a scalar element makes the whole document
+# corrupt; with objects, nulls and nested arrays alone it returns
+# neither: not placed.
 _CLASSIFY = f"""
 SELECT path, kind,
   {_per_kind('kind', '1', 'size(arr)', f'size({_OBJS})', 'size(lines)')} AS n,
   CASE WHEN kind = 'mixed' THEN size(arr) - size({_OBJS}) ELSE 0 END AS dropped,
-  text RLIKE :lossy AS lossy
+  schema_of_variant({_per_kind(
+    'kind', 'doc', "variant_get(doc, '$[0]')",
+    "CAST(slice(filter(variant_get(doc, '$[0]', 'array<variant>'), (e, i) -> "
+    f"{_is_obj('arr[i]')}), 1, {SALVAGE_SCHEMA_SAMPLE}) AS variant)",
+    "CAST(transform(docs, d -> variant_get(d, '$[0]')) AS variant)",
+  )}) AS schema
 FROM (
   SELECT *, CASE
     WHEN text IS NULL THEN NULL
     WHEN tag = 'lines' THEN CASE
-      WHEN size(lines) > 0
-        AND forall(lines, ln -> {_first_char('ln')} = '{{' AND {_one_json_value('ln')})
+      WHEN size(lines) > 0 AND forall(lines, ln -> {_first_char('ln')} = '{{')
+        AND forall(docs, d -> {_one_value('d')})
       THEN 'lines' END
-    WHEN NOT one THEN NULL
+    WHEN {_first_char('text')} = '[' AND arr IS NULL THEN 'broken'
+    WHEN NOT {_one_value('doc')} THEN NULL
     WHEN {_first_char('text')} = '{{' THEN 'object'
     WHEN {_first_char('text')} = '[' AND size({_OBJS}) = size(arr) THEN 'array'
     WHEN {_first_char('text')} = '['
       AND exists(arr, e -> e IS NOT NULL AND NOT {_is_obj('e')} AND NOT startswith(ltrim(e), '['))
       THEN 'mixed'
   END AS kind
-  FROM {_SCAN}
+  FROM (
+    SELECT *, CASE WHEN tag = 'whole' THEN {_json_doc('text')} END AS doc,
+      transform(lines, ln -> {_json_doc('ln')}) AS docs
+    FROM {_SCAN}
+  )
 )"""
-
-# Of each file scanned with its kind as tag, one row ``{"<path>":
-# [records]}`` holding the records schema inference sees; a mixed array
-# gives its first ``SALVAGE_SCHEMA_SAMPLE`` objects, as salvage does.
-_SAMPLE_TEXT = _per_kind(
-    "tag", "concat('[', text, ']')", "text",
-    f"concat('[', array_join(slice({_OBJS}, 1, {SALVAGE_SCHEMA_SAMPLE}), ','), ']')",
-    "concat('[', array_join(lines, ','), ']')",
-)
-_SAMPLE = rf"""
-SELECT concat(
-  '{{', regexp_extract(to_json(array(path)), r'^\[(.*)\]$', 1), ':', {_SAMPLE_TEXT}, '}}'
-) AS value
-FROM {_SCAN}"""
 
 # Of each file scanned with its kind as tag, its records parsed with the
 # element schema ``:record`` (``:records``, its array), one row each.
@@ -690,7 +698,10 @@ FROM {_SCAN}"""
 
 def _list_json(spark: SparkSession, directory: str | Path) -> DataFrame:
     """The directory's JSON files as one ``binaryFile`` relation, listed
-    once and scanned by each job of the pass."""
+    once and scanned by each job of the pass. A file Hadoop cannot open
+    (a ':' in its own name) is skipped, so it takes the per-file reader
+    and fails alone; a placed file deleted before the write fails the
+    write, as Spark never skips a missing file."""
     return (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
@@ -699,23 +710,69 @@ def _list_json(spark: SparkSession, directory: str | Path) -> DataFrame:
         # would also read a ':' in a name as a URI scheme (the internal
         # option Spark's file stream source sets)
         .option("__globPaths__", "false")
+        .option("ignoreCorruptFiles", "true")
         .load(os.path.abspath(directory))
         .where(F.col("length") <= _PASS_MAX_BYTES)  # pushed down: larger files are not read
     )
 
 
 def _classify(files: DataFrame, layout: dict[str, str], encodings: dict[str, str]) -> DataFrame:
-    """The pass's first job, the salvage generalized to every layout:
-    per file in ``layout`` (path → ``whole`` or ``lines``) its kind,
-    record and dropped counts, and whether its text may hold a field
-    schema inference drops. A file's kind is ``object`` (one top-level
-    object), ``array`` (every element an object, possibly none),
-    ``mixed`` (objects and scalars: the scalars are dropped, as salvage
-    drops them), ``lines`` (line-delimited objects), or NULL for a file
-    the pass cannot place."""
-    return _sql(
-        files, _CLASSIFY, tags=_by_path(layout), encodings=_by_path(encodings), lossy=_LOSSY_TEXT
-    )
+    """The pass's one job before the write: per file in ``layout`` (path
+    → ``whole`` or ``lines``) its kind, record and dropped counts, and
+    its records' ``schema_of_variant``. A file's kind is ``object``,
+    ``array`` (every element an object, possibly none), ``mixed``
+    (objects and scalars: the scalars are dropped, as salvage drops
+    them), ``lines`` (line-delimited objects), ``broken`` (a ``[``-led
+    text that is no JSON array: its own read fails), or NULL for another
+    file the pass cannot place."""
+    return _sql(files, _CLASSIFY, tags=_by_path(layout), encodings=_by_path(encodings))
+
+
+# a backquoted name, or a type name or a bare field name, or the end of a type
+_VARIANT_TOKEN = re.compile(r"`((?:[^`]|``)*)`|(\w+(?:\(\d+,\d+\))?|>)")
+# schema_of_variant's scalar types of parsed JSON as JSON inference types
+# the same values: only nulls, or values of no one type, as a string
+_JSON_SCALAR = {
+    "BIGINT": T.LongType(), "DOUBLE": T.DoubleType(), "BOOLEAN": T.BooleanType(),
+    "STRING": T.StringType(), "VOID": T.StringType(), "VARIANT": T.StringType(),
+}
+
+
+def _json_type(variant_type: str) -> tuple[T.DataType | None, bool]:
+    """The type ``spark.read.json`` infers for values whose
+    ``schema_of_variant`` is ``variant_type``, and whether inference
+    drops part of them: a field with an empty name, or an empty object
+    with the field or array holding it (None when that is all of it).
+    A decimal is a double, but one with no fraction and past the
+    ``bigint`` digits raises ValueError: the variant keeps no trailing
+    fractional zeros, so ``2.0`` beside ``1`` gives DECIMAL(20,0) as
+    ``2**64`` does, where inference gives ``double`` and ``decimal(20,0)``."""
+    tokens = [t or q.replace("``", "`") for q, t in _VARIANT_TOKEN.findall(variant_type)][::-1]
+    dropped = False
+
+    def parse() -> T.DataType | None:
+        nonlocal dropped
+        tok = tokens.pop()
+        if tok == "ARRAY":
+            elem, _ = parse(), tokens.pop()
+            return None if elem is None else T.ArrayType(elem, True)
+        if tok == "OBJECT":
+            fields = []
+            while tokens[-1] != ">":
+                name, t = tokens.pop(), parse()
+                if name and t is not None:
+                    fields.append(T.StructField(name, t, True))
+                dropped |= not name or t is None
+            tokens.pop()
+            dropped |= not fields
+            return T.StructType(fields) if fields else None
+        if not tok.startswith("DECIMAL"):
+            return _JSON_SCALAR[tok]
+        if tok.endswith(",0)") and int(tok[8:-3]) > 18:
+            raise ValueError(f"{tok} may be a double or a decimal")
+        return T.DoubleType()
+
+    return parse(), dropped
 
 
 def _merge_types(a: T.DataType, b: T.DataType) -> T.DataType | None:
@@ -742,21 +799,12 @@ def _merge_types(a: T.DataType, b: T.DataType) -> T.DataType | None:
     return None
 
 
-def _infer_element_types(spark: SparkSession, wrapped: DataFrame) -> dict[str, T.DataType]:
-    """One JSON schema-inference job over rows ``{"<path>": [records]}``:
-    a file's field holds the array of the element schema a separate
-    read of that file infers."""
-    jds = getattr(wrapped._jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
-    jschema = spark._jsparkSession.read().option("allowSingleQuotes", "false").json(jds).schema()
-    return {f.name: f.dataType for f in T.StructType.fromJson(json.loads(jschema.json())).fields}
-
-
 @dataclass
 class _Placed:
     """What the pass owns: per file (by path) its record and dropped
     counts, and for a file with records its kind and key set (the
-    fields of its inferred element schema: the columns its own read
-    gives); the group's merged element schema."""
+    fields of its element schema: the columns its own read gives); the
+    group's merged element schema; the broken files' errors."""
 
     kind: dict[str, str] = field(default_factory=dict)
     records: dict[str, int] = field(default_factory=dict)
@@ -765,6 +813,7 @@ class _Placed:
     schema: T.StructType = field(default_factory=T.StructType)
     encodings: dict[str, str] = field(default_factory=dict)
     files: DataFrame | None = None  # the listed JSON files
+    failed: dict[str, Exception] = field(default_factory=dict)
 
 
 def _place(
@@ -773,9 +822,9 @@ def _place(
     typed_paths: list[tuple[str, str]],
     text_parity: bool,
 ) -> _Placed:
-    """Classify the pass's candidate files and infer their schemas (two
-    jobs), then form the group of files whose schemas merge without
-    widening any type, in discovery order. Files left out fall back."""
+    """Classify and type the pass's candidate files (one job), then form
+    the group of files whose schemas merge without widening any type,
+    in discovery order. Files left out fall back, unless broken."""
     candidates = [
         p for p, ftype in typed_paths
         if ftype == "json" and not p.lower().endswith(".gz")
@@ -788,15 +837,7 @@ def _place(
         files=_list_json(spark, directory),
     )
     layout = {p: "lines" if _line_delimited(p) else "whole" for p in candidates}
-    rows = _classify(out.files, layout, out.encodings).collect()
-    by_key = {r["path"]: r for r in rows if r["kind"] is not None}
-    found = {p: by_key[_path_key(p)] for p in candidates if _path_key(p) in by_key}
-    nonempty = {p: r["kind"] for p, r in found.items() if r["n"] > 0}
-    elem: dict[str, T.DataType] = {}
-    if nonempty:
-        elem = _infer_element_types(spark, _sql(
-            out.files, _SAMPLE, tags=_by_path(nonempty), encodings=_by_path(out.encodings)
-        ))
+    rows = {r["path"]: r for r in _classify(out.files, layout, out.encodings).collect()}
 
     # nested fields may be added to a column only when it is written as
     # JSON text that leaves the added (null) fields out
@@ -807,27 +848,36 @@ def _place(
     names: dict[str, str] = {}  # lower-cased → name: Spark resolves names case-insensitively
     pinned: set[str] = set()  # keys a strict file holds: their type must not change
     reserved = {CORRUPT_COL, SOURCE_COL, _PATH_COL}
-    for p, r in found.items():
+    for p in candidates:
+        r = rows.get(_path_key(p))
+        if r is None or r["kind"] is None:
+            continue
+        if r["kind"] == "broken":  # the error its own read raises
+            out.failed[p] = ValueError(f"no parseable JSON records in {p}")
+            continue
         if r["n"] == 0:  # valid but no records: counted, nothing to merge
             out.records[p], out.dropped[p] = 0, r["dropped"]
             continue
-        t = elem.get(_path_key(p))
+        try:
+            t, lossy = _json_type(r["schema"])
+        except ValueError:  # a type the variant does not tell
+            continue
         if not (isinstance(t, T.ArrayType) and isinstance(t.elementType, T.StructType)):
             continue
         fields = {f.name: f.dataType for f in t.elementType.fields}
         if (
-            not fields
-            or len({n.lower() for n in fields}) < len(fields)
+            len({n.lower() for n in fields}) < len(fields)
             or not reserved.isdisjoint(fields)
             or any(names.get(n.lower(), n) != n for n in fields)
         ):
             continue
         # a strict file's columns must keep exactly its own types: all
         # of them without the text projection (a union keeps native
-        # nested types), a lossy file's, and a mixed array's beyond the
+        # nested types), a lossy file's (its records can hold a nested
+        # field its own schema drops), and a mixed array's beyond the
         # schema sample (its later records may hold unsampled fields)
         strict = (
-            not nested_ok or r["lossy"]
+            not nested_ok or lossy
             or (r["kind"] == "mixed" and r["n"] > SALVAGE_SCHEMA_SAMPLE)
         )
         types = {}
