@@ -799,6 +799,20 @@ def _merge_types(a: T.DataType, b: T.DataType) -> T.DataType | None:
     return None
 
 
+def _case_dups(t: T.DataType) -> bool:
+    """Whether a struct in ``t``, at any depth (arrays and map values
+    included), holds two field names equal but for case: Spark resolves
+    names case-insensitively, so a read of such a schema fails."""
+    if isinstance(t, T.StructType):
+        names = {f.name.lower() for f in t.fields}
+        return len(names) < len(t.fields) or any(_case_dups(f.dataType) for f in t.fields)
+    if isinstance(t, T.ArrayType):
+        return _case_dups(t.elementType)
+    if isinstance(t, T.MapType):
+        return _case_dups(t.valueType)
+    return False
+
+
 @dataclass
 class _Placed:
     """What the pass owns: per file (by path) its record and dropped
@@ -866,7 +880,7 @@ def _place(
             continue
         fields = {f.name: f.dataType for f in t.elementType.fields}
         if (
-            len({n.lower() for n in fields}) < len(fields)
+            _case_dups(t)
             or not reserved.isdisjoint(fields)
             or any(names.get(n.lower(), n) != n for n in fields)
         ):
@@ -883,7 +897,10 @@ def _place(
         types = {}
         for n, ft in fields.items():
             m = _merge_types(merged[n], ft) if n in merged else ft
-            if m is None or (strict and m != ft) or (n in pinned and m != merged[n]):
+            if (
+                m is None or _case_dups(m) or (strict and m != ft)
+                or (n in pinned and m != merged[n])
+            ):
                 break
             types[n] = m
         else:

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32
 from generic_data_ingestor_framework_spark.llm.textstats import STOPWORDS
 from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.session import local_relation
 
 _HASH_SQL = "CAST(concat('0x', substr(md5(CAST({c} AS VARCHAR)), 1, 8)) AS BIGINT)"
 
@@ -312,7 +313,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     # ^ aggregate-sized; referenced by the totals AND the threshold
     # fold — one corpus scan instead of two (r14 opt)
-    ks = spark.createDataFrame([(k,) for k in K_ANON_THRESHOLDS], "k int")
+    ks = local_relation(spark, [(k,) for k in K_ANON_THRESHOLDS], "k int")
     tot = groups.agg(
         F.sum("gsz").alias("n_rows"), F.count(F.lit(1)).alias("n_groups")
     )
@@ -371,7 +372,7 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     # ^ aggregate-sized; referenced by the totals AND the threshold
     # fold — one corpus scan instead of two (r14 opt)
-    ls = spark.createDataFrame([(l,) for l in L_DIVERSITY_THRESHOLDS], "l int")
+    ls = local_relation(spark, [(l,) for l in L_DIVERSITY_THRESHOLDS], "l int")
     tot = groups.agg(
         F.sum("gsz").alias("n_rows"), F.count(F.lit(1)).alias("n_groups")
     )
@@ -531,9 +532,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the per-threshold aggregation (r14 opt)
         .localCheckpoint(eager=True)
     )
-    ts = spark.createDataFrame(
-        [(t,) for t in T_CLOSENESS_THRESHOLDS_BP], "t_bp int"
-    )
+    ts = local_relation(spark, [(t,) for t in T_CLOSENESS_THRESHOLDS_BP], "t_bp int")
     tot2 = tvd.agg(
         F.sum("n_g").alias("n_rows"),
         F.count(F.lit(1)).alias("n_groups"),

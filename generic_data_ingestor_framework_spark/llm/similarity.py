@@ -2434,7 +2434,8 @@ def ann_retrain_decision_member(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec["hottest_cell_share_bp"], dec["worst_wave_recall_bp"],
             dec["retrain"], ",".join(dec["reasons"]),
         ))
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "scenario int, max_cell_share_bp bigint, min_recall_bp bigint, "
         "hottest_cell_share_bp bigint, worst_wave_recall_bp bigint, "

@@ -4,21 +4,31 @@ The reference framework's advertised query capability is a raw-SQL
 pass-through to SQLite (``src/connectors/sqlite_connector.py:80-115``),
 so its effective surface is "whatever SQLite SQL expresses over the
 ingested table".  This module re-expresses every one of those SQL
-families natively on Spark: declarative DataFrame plans that Catalyst
-optimizes (predicate pushdown, column pruning, join selection,
-whole-stage codegen) — no custom physical work.
+families natively on Spark. A member is one Spark SQL text (``_sql``),
+its tables bound to the memoized parquet readers, which Catalyst plans
+and optimizes (predicate pushdown, column pruning, join selection,
+whole-stage codegen). Members whose purpose is a Spark mechanism keep a
+hand-built plan: the recursive CTEs, the SCD2 merges, the sketch
+tolerance check and the text-parity projection. ``profile_customer`` and
+``percentile_stats`` keep theirs because their text executed slower.
 
 Each query is a callable ``(spark, sf_dir) -> DataFrame`` registered in
 ``QUERIES`` with a matching DuckDB oracle in ``ORACLES`` (same column
-aliases, deterministic ordering/rounding so value hashes match).
+aliases, deterministic ordering/rounding so value hashes match). A
+member's text is its own string, never formatted from its oracle, so an
+oracle edit cannot change a member.
 
 Scale notes (100 TB):
-- Dimension joins (region/nation/customer/supplier/part) are explicitly
-  ``F.broadcast`` — at TPC-H scale those stay far below the broadcast
-  threshold while orders/lineitem shuffle only when keys require it.
-- Aggregations rely on partial (map-side) aggregation — all are
-  expressed via ``groupBy().agg`` so Catalyst plans hash-aggregate with
-  partial combine.
+- Dimension tables (region/nation/customer/supplier/part) stay far below
+  the broadcast threshold at TPC-H scale, so the planner broadcasts
+  them; a text names a join hint (``/*+ BROADCAST(..) */``) only where
+  the planner's post-join size estimate would pick a shuffle join.
+- Where the correlated form would aggregate the whole fact or scan it
+  twice (Q2, Q8, Q17, Q18), the text spells the decorrelated join order
+  itself: a selective dimension semi-joined into the fact before the
+  aggregate, a window for the correlated min/avg, one fact aggregate
+  joined back.
+- Aggregations plan as hash aggregates with partial (map-side) combine.
 - Rounding of floating-point aggregates is part of the *query contract*
   here (deterministic cross-engine results), not a workaround: at 100 TB
   FP sum order is nondeterministic in any engine.
@@ -26,6 +36,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import string
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -58,8 +69,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-def _t(spark: SparkSession, sf_dir: str):
-    return lambda name: load_table(spark, sf_dir, name)
+def _sql(
+    spark: SparkSession, sf_dir: str, text: str, args: dict | None = None
+) -> DataFrame:
+    """``text`` as one ``spark.sql`` plan, with ``args`` bound as named
+    parameters. Each ``{name}`` field of the text reads the test table
+    ``name`` (``load_table``): PySpark's formatter registers it as a
+    temp view under a unique name and drops the view once the plan is
+    analyzed."""
+    names = {f for _, f, _, _ in string.Formatter().parse(text) if f}
+    return spark.sql(text, args, **{n: load_table(spark, sf_dir, n) for n in names})
 
 
 # ---------------------------------------------------------------------------
@@ -87,17 +106,17 @@ def _t(spark: SparkSession, sf_dir: str):
 _UNITS = "sum(cast(floor(({c}) * 10000 + 0.5) as bigint))"
 
 
-def _isum2_expr(c: str):
-    """Spark aggregate Column: round-half 2-dp sum of SQL expression
+def _isum2(c: str) -> str:
+    """Spark SQL aggregate: round-half 2-dp sum of SQL expression
     ``c``. Catalyst dedups the identical inner aggregates."""
     u = _UNITS.format(c=c)
     # `100.0D`: double literal — a bare `100.0` is DECIMAL in Spark SQL
     # and would promote the whole result to decimal
-    return F.expr(f"if({u} >= 0, 1, -1) * ((abs({u}) + 50) div 100) / 100.0D")
+    return f"if({u} >= 0, 1, -1) * ((abs({u}) + 50) div 100) / 100.0D"
 
 
 def _isum2_sql(c: str) -> str:
-    """The DuckDB-spelled oracle twin of ``_isum2_expr`` (`//` for
+    """The DuckDB-spelled oracle twin of ``_isum2`` (`//` for
     integer division, CASE for sign)."""
     u = _UNITS.format(c=c)
     return (
@@ -116,31 +135,29 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mirrors the reference's end state (a full-table aggregation the user
     would run through ``execute_query``); exercises partial aggregation
     and parquet predicate pushdown.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = "l_extendedprice * (1 - l_discount)"
 
-    # BIG-magnitude price sums go through the order-free integer-space
-    # round-half quantization (`_isum2_expr`, see module comment) —
-    # the r11 sf1 sweep caught a raw double sum flipping a .xx5
-    # rounding boundary run-to-run. sum_qty (integral doubles: exact
-    # to 2^53) and the avg_* columns (sum error ÷ count → sub-ulp at
-    # 2-4 dp) are order-safe and stay raw.
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            _isum2_expr("l_extendedprice").alias("sum_base_price"),
-            _isum2_expr(disc_price).alias("sum_disc_price"),
-            _isum2_expr(f"({disc_price}) * (1 + l_tax)").alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 2).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 2).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
+    BIG-magnitude price sums go through the order-free integer-space
+    round-half quantization (``_isum2``, see module comment) — the r11
+    sf1 sweep caught a raw double sum flipping a .xx5 rounding boundary
+    run-to-run. sum_qty (integral doubles: exact to 2^53) and the avg_*
+    columns (sum error ÷ count → sub-ulp at 2-4 dp) are order-safe and
+    stay raw.
+    """
+    return _sql(spark, sf_dir, f"""
+        SELECT l_returnflag, l_linestatus,
+               round(sum(l_quantity), 2) AS sum_qty,
+               {_isum2("l_extendedprice")} AS sum_base_price,
+               {_isum2("l_extendedprice * (1 - l_discount)")} AS sum_disc_price,
+               {_isum2("l_extendedprice * (1 - l_discount) * (1 + l_tax)")} AS sum_charge,
+               round(avg(l_quantity), 2) AS avg_qty,
+               round(avg(l_extendedprice), 2) AS avg_price,
+               round(avg(l_discount), 4) AS avg_disc,
+               count(*) AS count_order
+        FROM {{lineitem}}
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        GROUP BY l_returnflag, l_linestatus
+        ORDER BY l_returnflag, l_linestatus
+    """)
 
 
 _Q1_ORACLE = f"""
@@ -161,19 +178,20 @@ ORDER BY l_returnflag, l_linestatus
 
 
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join (broadcast dim) + aggregate + deterministic top-10."""
-    t = _t(spark, sf_dir)
-    cust = t("customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = t("orders").filter(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    li = t("lineitem").filter(F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp"))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-    )
+    """3-way join + aggregate + deterministic top-10."""
+    return _sql(spark, sf_dir, """
+        SELECT l_orderkey, o_orderdate, o_orderpriority,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        FROM {lineitem}
+        JOIN {orders}   ON l_orderkey = o_orderkey
+        JOIN {customer} ON o_custkey = c_custkey
+        WHERE c_mktsegment = 'BUILDING'
+          AND o_orderdate < TIMESTAMP '1998-01-01'
+          AND l_shipdate  > TIMESTAMP '1998-01-01'
+        GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        ORDER BY revenue DESC, l_orderkey
+        LIMIT 10
+    """)
 
 
 _Q3_ORACLE = """
@@ -192,32 +210,21 @@ LIMIT 10
 
 
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star join: fact lineitem against a broadcast dim chain."""
-    t = _t(spark, sf_dir)
-    dims = (
-        t("customer")
-        .join(F.broadcast(t("nation")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t("region")), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("c_custkey", "r_name")
-    )
-    return (
-        t("lineitem")
-        .join(t("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        # the dim chain is customer-dim-sized, but the planner's
-        # post-join size estimate balloons past the broadcast threshold
-        # and picked a SortMergeJoin of the fact against it (2 Exchange
-        # + 2 Sort); hint it like every other member's dim chain
-        .join(F.broadcast(dims), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("r_name")
-        # per-term quantize to integer 1e-4 units BEFORE summing (the
-        # q7/q9 r9 fix): Spark's partial-agg merge order is scheduling-
-        # dependent, so a raw double sum can land on either side of a
-        # .xx5 rounding boundary run-to-run — r11's sf1 sweep caught q5
-        # flipping 61426755056.34 ↔ .35. `_isum2_expr` sums exactly in
-        # BIGINT 1e-4 units and rounds to the cent in integer space.
-        .agg(_isum2_expr("l_extendedprice * (1 - l_discount)").alias("revenue"))
-        .orderBy("r_name")
-    )
+    """Star join: fact lineitem against a broadcast dim chain. The
+    planner's post-join size estimate of the dim chain balloons past
+    the broadcast threshold, so the hint keeps it broadcast (a
+    SortMergeJoin of the fact against it costs 2 Exchange + 2 Sort)."""
+    return _sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(c, n, r) */ r_name,
+               {_isum2("l_extendedprice * (1 - l_discount)")} AS revenue
+        FROM {{lineitem}}
+        JOIN {{orders}}     ON l_orderkey = o_orderkey
+        JOIN {{customer}} c ON o_custkey  = c_custkey
+        JOIN {{nation}}   n ON c_nationkey = n_nationkey
+        JOIN {{region}}   r ON n_regionkey = r_regionkey
+        GROUP BY r_name
+        ORDER BY r_name
+    """)
 
 
 _Q5_ORACLE = f"""
@@ -239,28 +246,26 @@ ORDER BY r_name
 
 def preview_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A16 preview: `SELECT * FROM t LIMIT n` made deterministic by key."""
-    return load_table(spark, sf_dir, "region").orderBy("r_regionkey").limit(3)
+    return _sql(spark, sf_dir, "SELECT * FROM {region} ORDER BY r_regionkey LIMIT 3")
 
 
 def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WHERE with IN / BETWEEN / LIKE / IS NOT NULL (§2.B filter row)."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .filter(
-            F.col("o_orderstatus").isin("O", "F")
-            & F.col("o_totalprice").between(1000.0, 50000.0)
-            & F.col("o_orderpriority").like("1-%")
-            & F.col("o_custkey").isNotNull()
-        )
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority
+        FROM {orders}
+        WHERE o_orderstatus IN ('O', 'F')
+          AND o_totalprice BETWEEN 1000.0 AND 50000.0
+          AND o_orderpriority LIKE '1-%'
+          AND o_custkey IS NOT NULL
+    """)
 
 
 def param_eq_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A19 parameterized equality predicate (`WHERE id = ?`) via sql args."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    return spark.sql(
-        "SELECT c_custkey, c_name, c_mktsegment FROM customer_v WHERE c_custkey = :ck",
+    return _sql(
+        spark, sf_dir,
+        "SELECT c_custkey, c_name, c_mktsegment FROM {customer} WHERE c_custkey = :ck",
         args={"ck": 42},
     )
 
@@ -270,45 +275,39 @@ def param_eq_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
-    return (
-        t("orders")
-        .join(t("customer"), F.col("o_custkey") == F.col("c_custkey"), "inner")
-        .select("o_orderkey", "c_custkey", "c_name", "o_totalprice")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderkey, c_custkey, c_name, o_totalprice
+        FROM {orders} JOIN {customer} ON o_custkey = c_custkey
+    """)
 
 
 def join_left_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join keeping customers with zero orders."""
-    t = _t(spark, sf_dir)
-    return (
-        t("customer")
-        .join(t("orders"), F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT c_custkey, c_name, count(o_orderkey) AS n_orders
+        FROM {customer} LEFT JOIN {orders} ON c_custkey = o_custkey
+        GROUP BY c_custkey, c_name
+    """)
 
 
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS as a left-semi join (no row multiplication, early-out)."""
-    t = _t(spark, sf_dir)
-    big = t("orders").filter(F.col("o_totalprice") > 40000.0)
-    return (
-        t("customer")
-        .join(big, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-    )
+    """EXISTS, planned as a left-semi join (no row multiplication,
+    early-out)."""
+    return _sql(spark, sf_dir, """
+        SELECT c_custkey, c_name FROM {customer}
+        WHERE EXISTS (SELECT 1 FROM {orders}
+                      WHERE o_custkey = c_custkey AND o_totalprice > 40000.0)
+    """)
 
 
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT EXISTS as a left-anti join (customers with no high-value order)."""
-    t = _t(spark, sf_dir)
-    big = t("orders").filter(F.col("o_totalprice") > 450000.0)
-    return (
-        t("customer")
-        .join(big, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    )
+    """NOT EXISTS, planned as a left-anti join (customers with no
+    high-value order)."""
+    return _sql(spark, sf_dir, """
+        SELECT c_custkey, c_name FROM {customer}
+        WHERE NOT EXISTS (SELECT 1 FROM {orders}
+                          WHERE o_custkey = c_custkey AND o_totalprice > 450000.0)
+    """)
 
 
 # ---------------------------------------------------------------------------
@@ -317,53 +316,49 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def agg_having_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.countDistinct("o_orderstatus").alias("n_statuses"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_spent"),
-            F.round(F.min("o_totalprice"), 2).alias("min_price"),
-            F.round(F.max("o_totalprice"), 2).alias("max_price"),
-        )
-        .filter(F.col("n_orders") > 10)
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_custkey,
+               count(*) AS n_orders,
+               count(DISTINCT o_orderstatus) AS n_statuses,
+               round(sum(o_totalprice), 2) AS total_spent,
+               round(min(o_totalprice), 2) AS min_price,
+               round(max(o_totalprice), 2) AS max_price
+        FROM {orders} GROUP BY o_custkey HAVING count(*) > 10
+    """)
 
 
 def group_concat_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQLite GROUP_CONCAT ≡ sorted collect_list + array_join."""
-    return (
-        load_table(spark, sf_dir, "customer")
-        .groupBy("c_nationkey")
-        .agg(F.array_join(F.array_sort(F.collect_list("c_name")), ",").alias("names"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT c_nationkey, array_join(array_sort(collect_list(c_name)), ',') AS names
+        FROM {customer} GROUP BY c_nationkey
+    """)
 
 
 def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP subtotals (a Spark superset of SQLite's GROUP BY)."""
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"), F.count(F.lit(1)).alias("n"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT l_returnflag, l_linestatus,
+               round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
+        FROM {lineitem} GROUP BY ROLLUP (l_returnflag, l_linestatus)
+    """)
 
 
 def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderstatus, o_orderpriority,
+               count(*) AS n, round(sum(o_totalprice), 2) AS total
+        FROM {orders} GROUP BY CUBE (o_orderstatus, o_orderpriority)
+    """)
 
 
 def distinct_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "part").select("p_brand", "p_type").distinct()
+    return _sql(spark, sf_dir, "SELECT DISTINCT p_brand, p_type FROM {part}")
 
 
 def count_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A17: COUNT(*) over the fact table."""
-    return load_table(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("n"))
+    return _sql(spark, sf_dir, "SELECT count(*) AS n FROM {lineitem}")
 
 
 # ---------------------------------------------------------------------------
@@ -371,51 +366,40 @@ def count_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = W.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            "o_totalprice",
-            F.row_number().over(w).alias("rn"),
-            F.rank().over(w).alias("rnk"),
-            F.dense_rank().over(w).alias("drnk"),
-            F.round(F.lag("o_totalprice", 1).over(w), 2).alias("prev_price"),
-            F.round(F.lead("o_totalprice", 1).over(w), 2).alias("next_price"),
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderkey, o_custkey, o_totalprice,
+               row_number() OVER w AS rn,
+               rank()       OVER w AS rnk,
+               dense_rank() OVER w AS drnk,
+               round(lag(o_totalprice, 1)  OVER w, 2) AS prev_price,
+               round(lead(o_totalprice, 1) OVER w, 2) AS next_price
+        FROM {orders}
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
+    """)
 
 
 def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wr = (
-        W.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.round(F.sum("o_totalprice").over(wr), 2).alias("running_total"),
-            F.expr(
-                "count(*) OVER (PARTITION BY o_custkey ORDER BY o_totalprice "
-                "RANGE BETWEEN 1000.0 PRECEDING AND CURRENT ROW)"
-            ).alias("n_within_1000"),
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderkey, o_custkey,
+               round(sum(o_totalprice) OVER (
+                 PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_total,
+               count(*) OVER (
+                 PARTITION BY o_custkey ORDER BY o_totalprice
+                 RANGE BETWEEN 1000.0 PRECEDING AND CURRENT ROW) AS n_within_1000
+        FROM {orders}
+    """)
 
 
 def top_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 orders per customer — the distributed top-k idiom."""
-    w = W.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
-    return (
-        load_table(spark, sf_dir, "orders")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+          SELECT o_custkey, o_orderkey, o_totalprice,
+                 row_number() OVER (PARTITION BY o_custkey
+                                    ORDER BY o_totalprice DESC, o_orderkey) AS rn
+          FROM {orders}) WHERE rn <= 2
+    """)
 
 
 # ---------------------------------------------------------------------------
@@ -423,73 +407,56 @@ def top_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def sort_limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_table(spark, sf_dir, "orders")
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .offset(10)
-        .limit(20)
-        .select("o_orderkey", "o_totalprice")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderkey, o_totalprice FROM {orders}
+        ORDER BY o_totalprice DESC, o_orderkey LIMIT 20 OFFSET 10
+    """)
 
 
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
-    return (
-        t("customer").select(F.col("c_nationkey").alias("nationkey"))
-        .union(t("supplier").select(F.col("s_nationkey").alias("nationkey")))
-        .distinct()
-    )
+    return _sql(spark, sf_dir, """
+        SELECT c_nationkey AS nationkey FROM {customer}
+        UNION SELECT s_nationkey FROM {supplier}
+    """)
 
 
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
-    return (
-        t("customer").select(F.col("c_nationkey").alias("nationkey"))
-        .intersect(t("supplier").select(F.col("s_nationkey").alias("nationkey")))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT c_nationkey AS nationkey FROM {customer}
+        INTERSECT SELECT s_nationkey FROM {supplier}
+    """)
 
 
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir)
-    return (
-        t("customer").select(F.col("c_nationkey").alias("nationkey"))
-        .exceptAll(t("supplier").select(F.col("s_nationkey").alias("nationkey")))
-        .distinct()
-    )
+    return _sql(spark, sf_dir, """
+        SELECT DISTINCT nationkey FROM (
+          SELECT c_nationkey AS nationkey FROM {customer}
+          EXCEPT ALL SELECT s_nationkey FROM {supplier})
+    """)
 
 
 def subquery_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CTE + scalar subquery + IN subquery, all in Spark SQL."""
-    t = _t(spark, sf_dir)
-    t("orders").createOrReplaceTempView("orders_v")
-    t("customer").createOrReplaceTempView("customer_v")
-    return spark.sql(
-        """
+    """CTE + scalar subquery + IN subquery."""
+    return _sql(spark, sf_dir, """
         WITH building AS (
-          SELECT c_custkey FROM customer_v WHERE c_mktsegment = 'BUILDING'
+          SELECT c_custkey FROM {customer} WHERE c_mktsegment = 'BUILDING'
         )
         SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
-        FROM orders_v
-        WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders_v) * 1.5
+        FROM {orders}
+        WHERE o_totalprice > (SELECT avg(o_totalprice) FROM {orders}) * 1.5
           AND o_custkey IN (SELECT c_custkey FROM building)
-        """
-    )
+    """)
 
 
 def union_all_missing_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10 union across heterogeneous inputs: unionByName with missing
-    columns null-filled (the reference concatenates dict-lists with
+    """A10 union across heterogeneous inputs: a column missing on one
+    side null-filled (the reference concatenates dict-lists with
     differing keys, `src/core/application.py:71-97`)."""
-    t = _t(spark, sf_dir)
-    cust = t("customer").select(
-        F.col("c_name").alias("name"),
-        F.col("c_acctbal").alias("acctbal"),
-        F.col("c_mktsegment").alias("segment"),
-    )
-    supp = t("supplier").select(
-        F.col("s_name").alias("name"), F.col("s_acctbal").alias("acctbal")
-    )
-    return cust.unionByName(supp, allowMissingColumns=True)
+    return _sql(spark, sf_dir, """
+        SELECT c_name AS name, c_acctbal AS acctbal, c_mktsegment AS segment FROM {customer}
+        UNION ALL
+        SELECT s_name, s_acctbal, NULL FROM {supplier}
+    """)
 
 
 # ---------------------------------------------------------------------------
@@ -497,67 +464,59 @@ def union_all_missing_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_table(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.length("p_name").alias("name_len"),
-        F.upper("p_name").alias("name_upper"),
-        F.lower("p_brand").alias("brand_lower"),
-        F.substring("p_name", 1, 5).alias("name_pfx"),
-        F.trim(F.concat(F.lit("  "), F.col("p_type"), F.lit("  "))).alias("type_trim"),
-        F.regexp_replace("p_name", " ", "_").alias("name_snake"),
-        F.instr("p_name", "widget").alias("widget_pos"),
-        F.format_string("%s|%03d", F.col("p_brand"), F.col("p_size")).alias("brand_size"),
-    )
+    return _sql(spark, sf_dir, """
+        SELECT p_partkey,
+               length(p_name)                          AS name_len,
+               upper(p_name)                           AS name_upper,
+               lower(p_brand)                          AS brand_lower,
+               substr(p_name, 1, 5)                    AS name_pfx,
+               trim('  ' || p_type || '  ')            AS type_trim,
+               replace(p_name, ' ', '_')               AS name_snake,
+               instr(p_name, 'widget')                 AS widget_pos,
+               printf('%s|%03d', p_brand, p_size)      AS brand_size
+        FROM {part}
+    """)
 
 
 def math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        F.round(F.abs("c_acctbal"), 2).alias("abs_bal"),
-        F.round("c_acctbal", 0).alias("bal_round"),
-        F.floor("c_acctbal").alias("bal_floor"),
-        F.ceil("c_acctbal").alias("bal_ceil"),
-        (F.col("c_custkey") % 7).alias("key_mod7"),
-        F.least("c_acctbal", F.lit(0.0)).alias("neg_part"),
-        F.greatest("c_acctbal", F.lit(0.0)).alias("pos_part"),
-        F.round(F.sqrt(F.abs("c_acctbal")), 4).alias("sqrt_bal"),
-    )
+    return _sql(spark, sf_dir, """
+        SELECT c_custkey,
+               round(abs(c_acctbal), 2)                AS abs_bal,
+               round(c_acctbal, 0)                     AS bal_round,
+               CAST(floor(c_acctbal) AS BIGINT)        AS bal_floor,
+               CAST(ceil(c_acctbal) AS BIGINT)         AS bal_ceil,
+               c_custkey % 7                           AS key_mod7,
+               least(c_acctbal, 0.0)                   AS neg_part,
+               greatest(c_acctbal, 0.0)                AS pos_part,
+               round(sqrt(abs(c_acctbal)), 4)          AS sqrt_bal
+        FROM {customer}
+    """)
 
 
 def date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("yr"),
-        F.month("o_orderdate").alias("mo"),
-        F.dayofmonth("o_orderdate").alias("dom"),
-        F.quarter("o_orderdate").alias("qtr"),
-        F.date_trunc("month", "o_orderdate").alias("month_start"),
-        F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
-        F.date_add(F.col("o_orderdate").cast("date"), 30).alias("due_date"),
-        F.datediff(F.lit("2002-01-01").cast("date"), F.col("o_orderdate").cast("date")).alias("age_days"),
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderkey,
+               year(o_orderdate)                        AS yr,
+               month(o_orderdate)                       AS mo,
+               dayofmonth(o_orderdate)                  AS dom,
+               quarter(o_orderdate)                     AS qtr,
+               date_trunc('month', o_orderdate)         AS month_start,
+               date_format(o_orderdate, 'yyyy-MM')      AS ym,
+               date_add(CAST(o_orderdate AS DATE), 30)  AS due_date,
+               datediff(DATE '2002-01-01', CAST(o_orderdate AS DATE)) AS age_days
+        FROM {orders}
+    """)
 
 
 def json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQLite json1-equivalent path access over a JSON-string column
     (`json_extract` ≡ `get_json_object`), then aggregate."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum("k").alias("sum_k"),
-            F.count(F.lit(1)).alias("n"),
-            F.max("k").alias("max_k"),
-        )
-        .orderBy("event_type")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT event_type, sum(k) AS sum_k, count(*) AS n, max(k) AS max_k
+        FROM (SELECT event_type, CAST(get_json_object(props, '$.k') AS BIGINT) AS k
+              FROM {events})
+        GROUP BY event_type ORDER BY event_type
+    """)
 
 
 # ---------------------------------------------------------------------------
@@ -585,75 +544,54 @@ def lineage_source_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact, not provenance; re-bucketing must not change lineage).
     Per-FILE lineage for whole-file ingest stays in ``ingest.py`` (A9
     proper), where one input file is one provenance unit."""
-    d = load_table(spark, sf_dir, "documents")
-    parts = F.split(F.input_file_name(), "/")
-    parent = F.element_at(parts, -2)
-    base = F.element_at(parts, -1)
-    return (
-        d.withColumn(
-            "_source_file",
-            F.when(parent.endswith(".parquet"), parent).otherwise(base),
-        )
-        .groupBy("_source_file")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT if(endswith(parent, '.parquet'), parent, base) AS _source_file,
+               count(*) AS n
+        FROM (SELECT element_at(split(input_file_name(), '/'), -2) AS parent,
+                     element_at(split(input_file_name(), '/'), -1) AS base
+              FROM {documents})
+        GROUP BY _source_file
+    """)
 
 
 def md5_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A20 content hashing (`FileHandler._calculate_md5`,
     `src/handlers/file_handler.py:361-371`) as a distributed column op."""
-    return load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.md5(F.col("text")).alias("text_md5")
-    )
+    return _sql(spark, sf_dir, "SELECT doc_id, md5(text) AS text_md5 FROM {documents}")
 
 
 def error_summary_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A21 error-log aggregation: count by type, top-5 by count desc
     (`src/handlers/error_handler.py:47-95`) — deterministic tiebreak."""
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "event_type")
-        .limit(5)
-    )
+    return _sql(spark, sf_dir, """
+        SELECT event_type, count(*) AS n FROM {events}
+        GROUP BY event_type ORDER BY n DESC, event_type LIMIT 5
+    """)
 
 
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: left join → per-customer count → distribution
     of counts (two-level aggregation, the classic double groupBy)."""
-    t = _t(spark, sf_dir)
-    per_cust = (
-        t("customer")
-        .join(
-            t("orders").filter(~F.col("o_orderpriority").like("4-%")),
-            F.col("c_custkey") == F.col("o_custkey"),
-            "left",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT c_count, count(*) AS custdist FROM (
+          SELECT c_custkey, count(o_orderkey) AS c_count
+          FROM {customer} LEFT JOIN {orders}
+            ON c_custkey = o_custkey AND o_orderpriority NOT LIKE '4-%'
+          GROUP BY c_custkey)
+        GROUP BY c_count ORDER BY custdist DESC, c_count DESC
+    """)
 
 
 def correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: orders above their customer's average
     (decorrelated by Catalyst into a join+agg)."""
-    t = _t(spark, sf_dir)
-    t("orders").createOrReplaceTempView("orders_cs")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, """
         SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
-        FROM orders_cs o
+        FROM {orders} o
         WHERE o_totalprice > 1.8 * (
-          SELECT avg(o_totalprice) FROM orders_cs i WHERE i.o_custkey = o.o_custkey
+          SELECT avg(o_totalprice) FROM {orders} i WHERE i.o_custkey = o.o_custkey
         )
-        """
-    )
+    """)
 
 
 def rcte_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1100,30 +1038,24 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure filter+sum — the pushdown showcase (every
     predicate reaches the parquet scan; no shuffle at all beyond the
     single-row final agg)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & F.col("l_discount").between(0.03, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        # single-group big-magnitude sum: order-free integer-space
-        # round-half quantization (see q1/q5 — the r11 boundary-flip class)
-        .agg(_isum2_expr("l_extendedprice * l_discount").alias("revenue"))
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT {_isum2("l_extendedprice * l_discount")} AS revenue
+        FROM {{lineitem}}
+        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+          AND l_shipdate <  TIMESTAMP '1998-01-01'
+          AND l_discount BETWEEN 0.03 AND 0.07
+          AND l_quantity < 24
+    """)
 
 
 def explode_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LATERAL VIEW explode (the json_each/table-function family):
-    split part names into words, count word frequency."""
-    p = load_table(spark, sf_dir, "part")
-    return (
-        p.select(F.explode(F.split("p_name", " ")).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "word")
-    )
+    """explode (the json_each/table-function family): split part names
+    into words, count word frequency."""
+    return _sql(spark, sf_dir, """
+        SELECT word, count(*) AS n
+        FROM (SELECT explode(split(p_name, ' ')) AS word FROM {part})
+        GROUP BY word ORDER BY n DESC, word
+    """)
 
 
 def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1143,13 +1075,10 @@ def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram via integer binning (map-side combinable)."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .select(F.floor(F.col("o_totalprice") / 50000.0).cast("int").alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("bin")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT CAST(floor(o_totalprice / 50000.0) AS INT) AS bin, count(*) AS n
+        FROM {orders} GROUP BY bin ORDER BY bin
+    """)
 
 
 def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1209,64 +1138,48 @@ def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT (Spark superset of SQLite's GROUP BY): order counts per
     status, one column per priority bucket."""
-    return (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_orderstatus")
-        .pivot("o_orderpriority", ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
-        .agg(F.count(F.lit(1)))
-        .withColumnsRenamed(
-            {
-                "1-URGENT": "p1",
-                "2-HIGH": "p2",
-                "3-MEDIUM": "p3",
-                "4-NOT SPECIFIED": "p4",
-                "5-LOW": "p5",
-            }
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT * FROM (SELECT o_orderstatus, o_orderpriority FROM {orders})
+        PIVOT (count(*) FOR o_orderpriority IN (
+          '1-URGENT' AS p1, '2-HIGH' AS p2, '3-MEDIUM' AS p3,
+          '4-NOT SPECIFIED' AS p4, '5-LOW' AS p5))
+    """)
 
 
 def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS with grouping_id disambiguation."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, """
         SELECT o_orderstatus, o_orderpriority,
                CAST(grouping_id(o_orderstatus, o_orderpriority) AS INT) AS gid,
                count(*) AS n
-        FROM orders_gs
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
-    )
+    """)
 
 
 def case_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CASE / coalesce / nullif / ifnull family over customer."""
-    c = load_table(spark, sf_dir, "customer")
-    return c.select(
-        "c_custkey",
-        F.when(F.col("c_acctbal") < 0, "overdrawn")
-        .when(F.col("c_acctbal") < 1000, "low")
-        .otherwise("healthy")
-        .alias("balance_band"),
-        F.coalesce(F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")), F.lit("OTHER")).alias(
-            "segment_masked"
-        ),
-        F.nvl2(F.nullif(F.col("c_nationkey").cast("string"), F.lit("0")), F.lit("has_nation"), F.lit("zero")).alias(
-            "nation_flag"
-        ),
-    )
+    """CASE / coalesce / nullif / nvl2 family over customer."""
+    return _sql(spark, sf_dir, """
+        SELECT c_custkey,
+               CASE WHEN c_acctbal < 0 THEN 'overdrawn'
+                    WHEN c_acctbal < 1000 THEN 'low'
+                    ELSE 'healthy' END AS balance_band,
+               coalesce(nullif(c_mktsegment, 'BUILDING'), 'OTHER') AS segment_masked,
+               nvl2(nullif(CAST(c_nationkey AS STRING), '0'), 'has_nation', 'zero')
+                 AS nation_flag
+        FROM {customer}
+    """)
 
 
 def regexp_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regexp family: match test, extract, replace (RE2-safe patterns)."""
-    p = load_table(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.col("p_name").rlike("^[a-z]+ widget$").alias("is_widget"),
-        F.regexp_extract("p_name", "^([a-z]+) ", 1).alias("first_word"),
-        F.regexp_replace("p_brand", "[0-9]+", "#").alias("brand_masked"),
-    )
+    return _sql(spark, sf_dir, """
+        SELECT p_partkey,
+               p_name RLIKE '^[a-z]+ widget$' AS is_widget,
+               regexp_extract(p_name, '^([a-z]+) ', 1) AS first_word,
+               regexp_replace(p_brand, '[0-9]+', '#') AS brand_masked
+        FROM {part}
+    """)
 
 
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1274,43 +1187,35 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The testdata has no partsupp table, so lineitem is the part↔supplier
     link and unit cost is min(l_extendedprice / l_quantity) per
-    (part, supplier).  Scale choices: the selective part filter is
-    broadcast-semi-joined into lineitem *before* any aggregation (at
-    100 TB this discards ~99% of the fact scan up front), and the
-    correlated "= min per part" is a window min over the already
-    part-partitioned aggregate — one shuffle fewer than a self-join
-    decorrelation.
+    (part, supplier). The text fixes the join order the planner would
+    not find from the correlated form: the selective part filter is
+    semi-joined into lineitem *before* any aggregation (at 100 TB this
+    discards ~99% of the fact scan up front), and the correlated
+    "= min per part" is a window min over the already part-partitioned
+    aggregate — one shuffle fewer than a self-join decorrelation.
+    Unit cost is floor-truncated, not rounded: price/qty regularly lands
+    on exact .xx5 ties where Spark (HALF_UP) and DuckDB disagree.
     """
-    t = _t(spark, sf_dir)
-    part = t("part").filter((F.col("p_type") == "ECONOMY") & (F.col("p_size") <= 10))
-    li = t("lineitem").join(
-        F.broadcast(part.select("p_partkey")),
-        F.col("l_partkey") == F.col("p_partkey"),
-        "semi",
-    )
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost")
-    )
-    best = ps.withColumn("min_cost", F.min("unit_cost").over(W.partitionBy("l_partkey"))).filter(
-        F.col("unit_cost") == F.col("min_cost")
-    )
-    return (
-        best.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(t("supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(t("nation")), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(
-            F.round("s_acctbal", 2).alias("s_acctbal"),
-            "s_name",
-            "n_name",
-            "p_partkey",
-            "p_brand",
-            # floor-truncate, don't round: price/qty regularly lands on
-            # exact .xx5 ties where Spark (HALF_UP) and DuckDB disagree;
-            # floor of an identical double is identical everywhere
-            (F.floor(F.col("unit_cost") * 100) / 100).alias("unit_cost"),
+    return _sql(spark, sf_dir, """
+        WITH p AS (SELECT * FROM {part} WHERE p_type = 'ECONOMY' AND p_size <= 10),
+        ps AS (
+          SELECT l_partkey, l_suppkey, min(l_extendedprice / l_quantity) AS unit_cost
+          FROM {lineitem} LEFT SEMI JOIN p ON l_partkey = p_partkey
+          GROUP BY l_partkey, l_suppkey
+        ),
+        best AS (
+          SELECT * FROM (
+            SELECT *, min(unit_cost) OVER (PARTITION BY l_partkey) AS min_cost FROM ps)
+          WHERE unit_cost = min_cost
         )
-        .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
-    )
+        SELECT /*+ BROADCAST(p, s, n) */ round(s_acctbal, 2) AS s_acctbal, s_name,
+               n_name, p_partkey, p_brand, floor(unit_cost * 100) / 100 AS unit_cost
+        FROM best
+        JOIN p            ON l_partkey = p_partkey
+        JOIN {supplier} s ON l_suppkey = s_suppkey
+        JOIN {nation}   n ON s_nationkey = n_nationkey
+        ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+    """)
 
 
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,21 +1230,16 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     order; the cap comparison cannot flip between the two shapes
     (oracle-verified at sf0.001/0.01/0.1 and the sf1 decade-up).
     """
-    from pyspark.sql import Window as W
-
-    t = _t(spark, sf_dir)
-    part = t("part").filter((F.col("p_brand") == "Brand#4") & (F.col("p_type") == "ECONOMY"))
-    li = t("lineitem").join(
-        F.broadcast(part.select("p_partkey")),
-        F.col("l_partkey") == F.col("p_partkey"),
-        "semi",
-    )
-    qty_cap = (F.avg("l_quantity").over(W.partitionBy("l_partkey")) * 0.5)
-    return (
-        li.withColumn("qty_cap", qty_cap)
-        .filter(F.col("l_quantity") < F.col("qty_cap"))
-        .agg(F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+        FROM (
+          SELECT l_extendedprice, l_quantity,
+                 avg(l_quantity) OVER (PARTITION BY l_partkey) * 0.5 AS qty_cap
+          FROM {lineitem} LEFT SEMI JOIN {part}
+            ON l_partkey = p_partkey AND p_brand = 'Brand#4' AND p_type = 'ECONOMY'
+        )
+        WHERE l_quantity < qty_cap
+    """)
 
 
 Q20_MEAN_MULT = 2  # a (supplier, part) volume is "heavy" at >2x the mean
@@ -1358,129 +1258,96 @@ def q20_supplier_part_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized to BIGINT 1e-2 units so the threshold comparison is
     exact integer arithmetic in both engines.
 
-    Every IN becomes a semi join; the part list and nation list are
-    broadcast, the fact scan is reduced by the part semi join before
-    the HAVING aggregation, and the mean is a 1-row broadcast joined
-    back in-plan.
-    """
-    t = _t(spark, sf_dir)
-    parts = t("part").filter(F.col("p_name").like("small%")).select("p_partkey")
-    li = t("lineitem").join(
-        F.broadcast(parts), F.col("l_partkey") == F.col("p_partkey"), "semi"
-    )
-    pairs = li.groupBy("l_suppkey", "l_partkey").agg(
-        F.sum(F.floor(F.col("l_quantity") * 100 + 0.5).cast("bigint")).alias("qty_i")
-    ).localCheckpoint(eager=True)
-    # ^ referenced by the mean aggregate AND the heavy filter — without
-    # the checkpoint the part-filtered fact scan + aggregate ran twice
-    # (pair-count-bounded: distinct (supplier, part) of the "small%"
-    # part set; r14 opt)
-    mean = pairs.agg(
-        F.sum("qty_i").alias("total_i"), F.count(F.lit(1)).alias("n_pairs")
-    )
-    heavy = (
-        pairs.crossJoin(F.broadcast(mean))
-        # decimal(38) products — same int64-headroom note as q11
-        .filter(
-            F.col("qty_i").cast("decimal(38,0)") * F.col("n_pairs")
-            > F.lit(Q20_MEAN_MULT) * F.col("total_i").cast("decimal(38,0)")
+    Every IN becomes a semi join; the mean is a 1-row aggregate joined
+    back in-plan. The products are decimal(38), as in q11, so a pair
+    count that grows with SF cannot overflow int64."""
+    return _sql(spark, sf_dir, f"""
+        WITH pairs AS (
+          SELECT l_suppkey, l_partkey,
+                 sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS qty_i
+          FROM {{lineitem}}
+          WHERE l_partkey IN (SELECT p_partkey FROM {{part}} WHERE p_name LIKE 'small%')
+          GROUP BY l_suppkey, l_partkey
+        ),
+        mean AS (SELECT CAST(sum(qty_i) AS BIGINT) AS total_i,
+                        CAST(count(*) AS BIGINT) AS n_pairs FROM pairs)
+        SELECT s_name, round(s_acctbal, 2) AS s_acctbal
+        FROM {{supplier}}
+        WHERE s_suppkey IN (
+          SELECT l_suppkey FROM pairs, mean
+          WHERE CAST(qty_i AS DECIMAL(38, 0)) * n_pairs
+                > {Q20_MEAN_MULT} * CAST(total_i AS DECIMAL(38, 0))
         )
-        .select("l_suppkey")
-    )
-    nations = t("nation").filter(F.col("n_name").like("NATION_1%")).select("n_nationkey")
-    return (
-        t("supplier")
-        .join(F.broadcast(nations), F.col("s_nationkey") == F.col("n_nationkey"), "semi")
-        .join(heavy, F.col("s_suppkey") == F.col("l_suppkey"), "semi")
-        .select("s_name", F.round("s_acctbal", 2).alias("s_acctbal"))
-        .orderBy("s_name")
-    )
+        AND s_nationkey IN (SELECT n_nationkey FROM {{nation}} WHERE n_name LIKE 'NATION_1%')
+        ORDER BY s_name
+    """)
 
 
 def window_navigation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window navigation family: lag/lead/ntile/percent_rank/cume_dist
     over per-customer order history — the remaining §2.B window
     functions not covered by rank/frames."""
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.round(F.lag("o_totalprice", 1).over(w), 2).alias("prev_price"),
-            F.round(F.lead("o_totalprice", 1).over(w), 2).alias("next_price"),
-            F.ntile(4).over(w).alias("quartile"),
-            F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-            F.round(F.cume_dist().over(w), 6).alias("cume"),
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderkey, o_custkey,
+               round(lag(o_totalprice, 1) OVER w, 2) AS prev_price,
+               round(lead(o_totalprice, 1) OVER w, 2) AS next_price,
+               CAST(ntile(4) OVER w AS INT) AS quartile,
+               round(percent_rank() OVER w, 6) AS pct_rank,
+               round(cume_dist() OVER w, 6) AS cume
+        FROM {orders}
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+    """)
 
 
 def bool_bit_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean/bitwise aggregate family: every/any plus bit_and/or/xor
     — all order-independent, so no rounding contract is needed."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.every(F.col("l_quantity") > 0).alias("all_positive_qty"),
-            F.some(F.col("l_discount") > 0.09).alias("any_high_discount"),
-            F.bit_and(F.col("l_linenumber")).alias("ln_bit_and"),
-            F.bit_or(F.col("l_linenumber")).alias("ln_bit_or"),
-            F.bit_xor(F.col("l_linenumber")).alias("ln_bit_xor"),
-        )
-        .orderBy("l_returnflag")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT l_returnflag,
+               bool_and(l_quantity > 0) AS all_positive_qty,
+               bool_or(l_discount > 0.09) AS any_high_discount,
+               CAST(bit_and(l_linenumber) AS INT) AS ln_bit_and,
+               CAST(bit_or(l_linenumber) AS INT) AS ln_bit_or,
+               CAST(bit_xor(l_linenumber) AS INT) AS ln_bit_xor
+        FROM {lineitem} GROUP BY l_returnflag ORDER BY l_returnflag
+    """)
 
 
 def array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collection-function family: sort/distinct/contains/slice/
     element_at over token arrays (results flattened to strings so the
     cross-engine hash is representation-independent)."""
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey", F.split(F.col("p_name"), " ").alias("t")
-    )
-    return p.select(
-        "p_partkey",
-        F.array_join(F.array_sort(F.array_distinct(F.col("t"))), ",").alias("sorted_distinct"),
-        F.array_contains(F.col("t"), "widget").alias("has_widget"),
-        F.size(F.col("t")).alias("n_tokens"),
-        F.array_join(F.slice(F.col("t"), 1, 2), ",").alias("first_two"),
-        F.element_at(F.col("t"), -1).alias("last_token"),
-    )
+    return _sql(spark, sf_dir, """
+        SELECT p_partkey,
+               array_join(array_sort(array_distinct(t)), ',') AS sorted_distinct,
+               array_contains(t, 'widget') AS has_widget,
+               size(t) AS n_tokens,
+               array_join(slice(t, 1, 2), ',') AS first_two,
+               element_at(t, -1) AS last_token
+        FROM (SELECT p_partkey, split(p_name, ' ') AS t FROM {part})
+    """)
 
 
 def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bidirectional two-nation trade volume by year —
     supplier nation and customer nation both bound, either direction,
     revenue bucketed by ship year."""
-    t = _t(spark, sf_dir)
-    n1 = t("nation").select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = t("nation").select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2") | (
-        F.col("supp_nation") == "NATION_2"
-    ) & (F.col("cust_nation") == "NATION_1")
-    return (
-        t("lineitem")
-        .join(t("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t("supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(t("customer")), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .filter(pair)
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        # per-term quantize to integer 1e-4 units BEFORE summing: both
-        # engines floor the identical IEEE double, and a BIGINT sum is
-        # order-independent — sf1 exposed last-cent divergence when the
-        # double sums accumulated in different orders (r9 fix; r12
-        # integer-space round-half form, see `_isum2_expr`)
-        .agg(_isum2_expr("l_extendedprice * (1 - l_discount)").alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(s, c, n1, n2) */
+               n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+               year(l_shipdate) AS l_year,
+               {_isum2("l_extendedprice * (1 - l_discount)")} AS revenue
+        FROM {{lineitem}}
+        JOIN {{orders}}     ON l_orderkey = o_orderkey
+        JOIN {{supplier}} s ON l_suppkey = s_suppkey
+        JOIN {{customer}} c ON o_custkey = c_custkey
+        JOIN {{nation}} n1 ON s_nationkey = n1.n_nationkey
+        JOIN {{nation}} n2 ON c_nationkey = n2.n_nationkey
+        WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+           OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
+        GROUP BY supp_nation, cust_nation, l_year
+        ORDER BY supp_nation, cust_nation, l_year
+    """)
 
 
 def profile_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1524,17 +1391,14 @@ def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     and quantity↔price correlation/covariance. Both engines use
     numerically-stable single-pass algorithms whose reduction order
     differs, so results are rounded coarsely as the query contract."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.stddev_samp("l_extendedprice"), 2).alias("sd_price"),
-            F.round(F.var_samp("l_quantity"), 4).alias("var_qty"),
-            F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-            F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias("covar_qty_price"),
-        )
-        .orderBy("l_returnflag")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT l_returnflag,
+               round(stddev_samp(l_extendedprice), 2) AS sd_price,
+               round(var_samp(l_quantity), 4) AS var_qty,
+               round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
+               round(covar_samp(l_quantity, l_extendedprice), 2) AS covar_qty_price
+        FROM {lineitem} GROUP BY l_returnflag ORDER BY l_returnflag
+    """)
 
 
 def fuzzy_customer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1542,211 +1406,162 @@ def fuzzy_customer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation, segment) block, then pay a levenshtein edit-distance
     check — the classic entity-resolution shape (blocking bounds the
     quadratic term to within-block sizes; never an all-pairs join)."""
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
-    )
-    a, b = c.alias("a"), c.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
-        & (F.col("a.c_mktsegment") == F.col("b.c_mktsegment"))
-        & (F.col("a.c_custkey") < F.col("b.c_custkey"))
-        & (F.levenshtein(F.col("a.c_name"), F.col("b.c_name")) <= 2),
-    )
-    return (
-        pairs.groupBy(
-            F.col("a.c_nationkey").alias("nationkey"),
-            F.col("a.c_mktsegment").alias("segment"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_fuzzy_pairs"))
-        .orderBy("nationkey", "segment")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT a.c_nationkey AS nationkey, a.c_mktsegment AS segment,
+               count(*) AS n_fuzzy_pairs
+        FROM {customer} a JOIN {customer} b
+          ON a.c_nationkey = b.c_nationkey
+         AND a.c_mktsegment = b.c_mktsegment
+         AND a.c_custkey < b.c_custkey
+         AND levenshtein(a.c_name, b.c_name) <= 2
+        GROUP BY a.c_nationkey, a.c_mktsegment
+        ORDER BY nationkey, segment
+    """)
 
 
 def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: revenue lost to returns per customer, top 20 —
-    fact-to-fact join shuffles on the order key, dims broadcast."""
-    t = _t(spark, sf_dir)
-    orders = t("orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
-    )
-    li = t("lineitem").filter(F.col("l_returnflag") == "R")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t("customer")), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t("nation")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.round(F.first("c_acctbal"), 2).alias("c_acctbal"),
-        )
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
+    fact-to-fact join shuffles on the order key."""
+    return _sql(spark, sf_dir, """
+        SELECT c_custkey, c_name, n_name,
+               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+               round(any_value(c_acctbal), 2) AS c_acctbal
+        FROM {lineitem}
+        JOIN {orders}   ON l_orderkey = o_orderkey
+        JOIN {customer} ON o_custkey = c_custkey
+        JOIN {nation}   ON c_nationkey = n_nationkey
+        WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+          AND o_orderdate <  TIMESTAMP '1997-07-01'
+          AND l_returnflag = 'R'
+        GROUP BY c_custkey, c_name, n_name
+        ORDER BY revenue DESC, c_custkey LIMIT 20
+    """)
 
 
 def q14_promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional-aggregate ratio (share of revenue
     from one part class) in a single pass."""
-    t = _t(spark, sf_dir)
-    li = t("lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(t("part")), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.round(
-                100.0
-                * F.sum(F.when(F.col("p_type") == "ECONOMY", disc).otherwise(F.lit(0.0)))
-                / F.sum(disc),
-                4,
-            ).alias("economy_pct")
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT round(100.0 * sum(CASE WHEN p_type = 'ECONOMY'
+                                      THEN l_extendedprice * (1 - l_discount)
+                                      ELSE 0.0 END)
+                     / sum(l_extendedprice * (1 - l_discount)), 4) AS economy_pct
+        FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
+        WHERE l_shipdate >= TIMESTAMP '1997-03-01'
+          AND l_shipdate <  TIMESTAMP '1997-04-01'
+    """)
 
 
 def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs across both join sides — the
     predicate-pushdown stress case (each disjunct's part-side terms
-    still prune the broadcast build side)."""
-    t = _t(spark, sf_dir)
-    li = t("lineitem")
-    joined = li.join(F.broadcast(t("part")), F.col("l_partkey") == F.col("p_partkey"))
-    cond = (
-        ((F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 5) & (F.col("l_quantity") <= 10))
-        | ((F.col("p_brand") == "Brand#2") & (F.col("p_size") <= 10) & (F.col("l_quantity") <= 20))
-        | ((F.col("p_brand") == "Brand#3") & (F.col("p_size") <= 15) & (F.col("l_quantity") <= 30))
-    )
-    return joined.filter(cond).agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
+    still prune the build side)."""
+    return _sql(spark, sf_dir, """
+        SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+               count(*) AS n_items
+        FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
+        WHERE (p_brand = 'Brand#1' AND p_size <= 5  AND l_quantity <= 10)
+           OR (p_brand = 'Brand#2' AND p_size <= 10 AND l_quantity <= 20)
+           OR (p_brand = 'Brand#3' AND p_size <= 15 AND l_quantity <= 30)
+    """)
 
 
 def unpivot_part_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT/melt: part's numeric measures to (metric, value) long
-    form via the native ``DataFrame.unpivot`` (stack) operator — the
-    inverse of the pivot family, used to normalize wide tables."""
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.col("p_size").cast("double").alias("size"),
-        F.round("p_retailprice", 2).alias("retailprice"),
-    )
-    return p.unpivot("p_partkey", ["size", "retailprice"], "metric", "value")
+    form — the inverse of the pivot family, used to normalize wide
+    tables."""
+    return _sql(spark, sf_dir, """
+        SELECT p_partkey, metric, value FROM (
+          SELECT p_partkey,
+                 CAST(p_size AS DOUBLE) AS size,
+                 round(p_retailprice, 2) AS retailprice
+          FROM {part}
+        ) UNPIVOT (value FOR metric IN (size, retailprice))
+    """)
 
 
 def q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS decorrelated to a semi join — orders in a
     quarter having at least one returned lineitem, counted by priority."""
-    t = _t(spark, sf_dir)
-    orders = t("orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    returned = t("lineitem").filter(F.col("l_returnflag") == "R").select("l_orderkey")
-    return (
-        orders.join(returned, F.col("o_orderkey") == F.col("l_orderkey"), "semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT o_orderpriority, count(*) AS order_count
+        FROM {orders}
+        WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+          AND o_orderdate <  TIMESTAMP '1997-04-01'
+          AND EXISTS (SELECT 1 FROM {lineitem}
+                      WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+        GROUP BY o_orderpriority ORDER BY o_orderpriority
+    """)
 
 
 def q16_supplier_cnt_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: NOT IN (anti join) + COUNT(DISTINCT) per group.
-
-    The anti-join side (overdrawn suppliers) is broadcast; the distinct
-    count is a two-level hash aggregate — both partial-agg friendly."""
-    t = _t(spark, sf_dir)
-    part = t("part").filter(
-        (F.col("p_brand") != "Brand#4")
-        & (~F.col("p_type").like("ECONOMY%"))
-        & (F.col("p_size").isin(1, 5, 9, 13))
-    )
-    bad_supp = t("supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    li = t("lineitem").select("l_partkey", "l_suppkey")
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(bad_supp), F.col("l_suppkey") == F.col("s_suppkey"), "anti")
-        .groupBy("p_brand", "p_type")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type")
-    )
+    """TPC-H Q16 shape: NOT IN (anti join) + COUNT(DISTINCT) per group
+    (a two-level hash aggregate, partial-agg friendly)."""
+    return _sql(spark, sf_dir, """
+        SELECT p_brand, p_type, count(DISTINCT l_suppkey) AS supplier_cnt
+        FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
+        WHERE p_brand <> 'Brand#4'
+          AND p_type NOT LIKE 'ECONOMY%'
+          AND p_size IN (1, 5, 9, 13)
+          AND l_suppkey NOT IN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
+        GROUP BY p_brand, p_type
+        ORDER BY supplier_cnt DESC, p_brand, p_type
+    """)
 
 
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar subquery (global avg, kept in-plan as a
-    1-row broadcast cross join — no driver round trip) + NOT EXISTS
-    (anti join) — rich customers with no urgent orders, by nation.
-    (The synthetic corpus gives every customer at least one order, so
-    the anti-join predicate is the urgent slice rather than Q22's
-    no-orders-at-all; the plan shape is identical.)"""
-    t = _t(spark, sf_dir)
-    cust = t("customer")
-    avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
-        F.avg("c_acctbal").alias("avg_bal")
-    )
-    urgent = t("orders").filter(F.col("o_orderpriority") == "1-URGENT")
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(urgent, F.col("c_custkey") == F.col("o_custkey"), "anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
-        )
-        .orderBy("c_nationkey")
-    )
+    1-row join — no driver round trip) + NOT EXISTS (anti join) — rich
+    customers with no urgent orders, by nation. (The synthetic corpus
+    gives every customer at least one order, so the anti-join predicate
+    is the urgent slice rather than Q22's no-orders-at-all; the plan
+    shape is identical.)"""
+    return _sql(spark, sf_dir, """
+        SELECT c_nationkey, count(*) AS numcust, round(sum(c_acctbal), 2) AS totacctbal
+        FROM {customer}
+        JOIN (SELECT avg(c_acctbal) AS avg_bal FROM {customer} WHERE c_acctbal > 0)
+          ON c_acctbal > avg_bal
+        LEFT ANTI JOIN {orders} ON c_custkey = o_custkey AND o_orderpriority = '1-URGENT'
+        GROUP BY c_nationkey ORDER BY c_nationkey
+    """)
 
 
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: a nation's share of a region's market by year —
     conditional-sum ratio over a 6-table star join.
 
-    Scale shape: lineitem is pre-pruned by a broadcast part semi join,
-    the customer→nation→region chain collapses to a broadcast custkey
-    set, and supplier/nation are broadcast; the only fact shuffle is
-    lineitem↔orders on the order key. The ratio is a single-pass
-    conditional aggregate (no second scan for the denominator)."""
-    t = _t(spark, sf_dir)
-    asia_cust = (
-        t("customer")
-        .join(F.broadcast(t("nation")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(
-            F.broadcast(t("region").filter(F.col("r_name") == "ASIA")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
+    The text fixes the join order: lineitem is pre-pruned by a part
+    semi join, the customer→nation→region chain collapses to a
+    broadcast custkey set, and supplier/nation are broadcast; the only
+    fact shuffle is lineitem↔orders on the order key. The ratio is a
+    single-pass conditional aggregate (no second scan for the
+    denominator)."""
+    return _sql(spark, sf_dir, """
+        WITH asia_cust AS (
+          SELECT c_custkey FROM {customer}
+          JOIN {nation} ON c_nationkey = n_nationkey
+          JOIN {region} ON n_regionkey = r_regionkey
+          WHERE r_name = 'ASIA'
+        ),
+        supp AS (
+          SELECT s_suppkey, n_name AS supp_nation
+          FROM {supplier} JOIN {nation} ON s_nationkey = n_nationkey
+        ),
+        li AS (
+          SELECT * FROM {lineitem} LEFT SEMI JOIN {part}
+            ON l_partkey = p_partkey AND p_type = 'STANDARD'
         )
-        .select("c_custkey")
-    )
-    supp = (
-        t("supplier")
-        .join(F.broadcast(t("nation")), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    li = t("lineitem").join(
-        F.broadcast(t("part").filter(F.col("p_type") == "STANDARD").select("p_partkey")),
-        F.col("l_partkey") == F.col("p_partkey"),
-        "semi",
-    )
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(t("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(asia_cust), F.col("o_custkey") == F.col("c_custkey"), "semi")
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0)))
-                / F.sum(vol),
-                4,
-            ).alias("mkt_share")
-        )
-        .orderBy("o_year")
-    )
+        SELECT /*+ BROADCAST(a, s) */ year(o_orderdate) AS o_year,
+               round(sum(CASE WHEN supp_nation = 'NATION_3'
+                              THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)
+                     / sum(l_extendedprice * (1 - l_discount)), 4) AS mkt_share
+        FROM li
+        JOIN {orders} ON l_orderkey = o_orderkey
+        LEFT SEMI JOIN asia_cust a ON o_custkey = c_custkey
+        JOIN supp s ON l_suppkey = s_suppkey
+        GROUP BY year(o_orderdate)
+        ORDER BY o_year
+    """)
 
 
 _Q8_ORACLE = """
@@ -1772,35 +1587,21 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier nation × order year over a
     part-name LIKE filter. The testdata has no partsupp, so unit cost
     is proxied as 60% of ``p_retailprice`` (same plan shape: the cost
-    column rides the broadcast part dim into the fact join).
-
-    Scale shape: part's LIKE filter prunes the broadcast build side;
-    lineitem↔orders is the one key shuffle; supplier/nation broadcast.
-    """
-    t = _t(spark, sf_dir)
-    part = t("part").filter(F.col("p_name").like("%bolt%")).select(
-        "p_partkey", "p_retailprice"
-    )
-    supp_nation = (
-        t("supplier")
-        .join(F.broadcast(t("nation")), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("nation"))
-    )
-    # can go NEGATIVE per group (cost exceeds revenue) — `_isum2_expr`'s
-    # sign-aware round-half handles both signs identically cross-engine
-    amount = "l_extendedprice * (1 - l_discount) - p_retailprice * 0.6 * l_quantity"
-    return (
-        t("lineitem")
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(t("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp_nation), F.col("l_suppkey") == F.col("s_suppkey"))
-        .groupBy("nation", F.year("o_orderdate").alias("o_year"))
-        # per-term quantize to integer 1e-4 units, BIGINT sum, cent
-        # round-half in integer space (sf1 exposed last-cent drift in
-        # the double-sum version — r9; r12 `_isum2_expr` form)
-        .agg(_isum2_expr(amount).alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
-    )
+    column rides the broadcast part dim into the fact join). Profit
+    can go NEGATIVE per group; ``_isum2`` rounds both signs alike."""
+    return _sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(p, s, n) */ n_name AS nation, year(o_orderdate) AS o_year,
+               {_isum2("l_extendedprice * (1 - l_discount) - p_retailprice * 0.6 * l_quantity")}
+                 AS sum_profit
+        FROM {{lineitem}}
+        JOIN {{part}}     p ON l_partkey = p_partkey
+        JOIN {{orders}}     ON l_orderkey = o_orderkey
+        JOIN {{supplier}} s ON l_suppkey = s_suppkey
+        JOIN {{nation}}   n ON s_nationkey = n_nationkey
+        WHERE p_name LIKE '%bolt%'
+        GROUP BY n_name, year(o_orderdate)
+        ORDER BY n_name, o_year DESC
+    """)
 
 
 _Q9_ORACLE = f"""
@@ -1834,57 +1635,26 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     units before summing (double sums are order-sensitive and diverge
     cross-engine at sf1+), so the threshold comparison is pure integer
     arithmetic — ``value_i · n_parts > MULT · total_i`` — with no
-    float boundary an engine can land on differently.
-
-    Scale shape: the same pre-aggregated relation feeds BOTH the
-    per-part rows and the global threshold — the total is a 1-row
-    broadcast joined back in-plan (no driver round trip, no second
-    fact scan)."""
-    t = _t(spark, sf_dir)
-    n1_supp = (
-        t("supplier")
-        .join(
-            F.broadcast(t("nation").filter(F.col("n_name") == "NATION_1")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-            "semi",
-        )
-        .select("s_suppkey")
-    )
-    val_i = F.sum(
-        F.floor(F.col("l_extendedprice") * 10000 + 0.5).cast("bigint")
-    ).alias("value_i")
-    per_part = (
-        t("lineitem")
-        .join(F.broadcast(n1_supp), F.col("l_suppkey") == F.col("s_suppkey"), "semi")
-        .groupBy("l_partkey")
-        .agg(val_i)
-        # referenced by BOTH the threshold aggregate and the output rows
-        # — Catalyst duplicates unshared subtrees, so without this the
-        # fact scan + semi join + aggregate ran TWICE (plan audit: 2
-        # lineitem scans). The checkpoint is part-count-bounded at any
-        # corpus size (r14 opt: 1 fact pass instead of 2).
-        .localCheckpoint(eager=True)
-    )
-    total = per_part.agg(
-        F.sum("value_i").alias("total_i"), F.count(F.lit(1)).alias("n_parts")
-    )
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        # decimal(38) products: value_i (~3e10, SF-invariant) times a
-        # part count that grows with SF passes int64 around SF~1500 —
-        # DuckDB's BIGINT sum is already HUGEINT, so widen Spark to
-        # match instead of wrapping silently under non-ANSI arithmetic
-        .filter(
-            F.col("value_i").cast("decimal(38,0)") * F.col("n_parts")
-            > F.lit(Q11_MEAN_MULT) * F.col("total_i").cast("decimal(38,0)")
-        )
-        .select(
-            "l_partkey",
-            # value_i >= 0: integer-space cent round-half (see _isum2_expr)
-            F.expr("((value_i + 50) div 100) / 100.0D").alias("value"),
-        )
-        .orderBy(F.desc("value"), "l_partkey")
-    )
+    float boundary an engine can land on differently. The products
+    are decimal(38): a part count that grows with SF passes int64
+    around SF~1500 (DuckDB's BIGINT sum is already HUGEINT)."""
+    return _sql(spark, sf_dir, f"""
+        WITH pp AS (
+          SELECT l_partkey,
+                 sum(CAST(floor(l_extendedprice * 10000 + 0.5) AS BIGINT)) AS value_i
+          FROM {{lineitem}}
+          WHERE l_suppkey IN (SELECT s_suppkey FROM {{supplier}}
+                              JOIN {{nation}} ON s_nationkey = n_nationkey
+                              WHERE n_name = 'NATION_1')
+          GROUP BY l_partkey
+        ),
+        tot AS (SELECT sum(value_i) AS total_i, count(*) AS n_parts FROM pp)
+        SELECT l_partkey, ((value_i + 50) div 100) / 100.0D AS value
+        FROM pp, tot
+        WHERE CAST(value_i AS DECIMAL(38, 0)) * n_parts
+              > {Q11_MEAN_MULT} * CAST(total_i AS DECIMAL(38, 0))
+        ORDER BY value DESC, l_partkey
+    """)
 
 
 Q11_MEAN_MULT = 2  # a part is "important" at >2x the mean per-part value
@@ -1914,20 +1684,18 @@ def q12_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, so the group is ``l_linestatus`` and "late" is shipped
     more than 90 days after the order date — the plan shape (join +
     CASE-sum split by priority class) is Q12's."""
-    t = _t(spark, sf_dir)
-    li = t("lineitem")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-    return (
-        li.join(t("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .filter(late)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_linestatus")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT l_linestatus,
+               CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                             THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+               CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                             THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        FROM {lineitem}
+        JOIN {orders} ON l_orderkey = o_orderkey
+        WHERE l_shipdate > o_orderdate + INTERVAL 90 DAY
+        GROUP BY l_linestatus
+        ORDER BY l_linestatus
+    """)
 
 
 _Q12_ORACLE = """
@@ -1948,36 +1716,26 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: max over an aggregate view — revenue per
     supplier in a quarter, keep the supplier(s) hitting the maximum.
 
-    Scale shape: the revenue view is computed ONCE and feeds both the
-    max (1-row broadcast, kept in-plan) and the equality filter; the
-    comparison runs on the 2-dp-rounded revenue in BOTH engines so the
-    selection is deterministic under FP sum reordering."""
-    t = _t(spark, sf_dir)
-    rev = (
-        t("lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-        )
-        .groupBy("l_suppkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("total_revenue")
-        )
-        # referenced by the max aggregate AND the equality filter —
-        # checkpointed so the fact scan + aggregate run once, not twice
-        # (supplier-count-bounded at any corpus size; r14 opt)
-        .localCheckpoint(eager=True)
-    )
-    top = rev.agg(F.max("total_revenue").alias("max_revenue"))
-    return (
-        rev.crossJoin(F.broadcast(top))
-        .filter(F.col("total_revenue") == F.col("max_revenue"))
-        .join(F.broadcast(t("supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(F.col("s_suppkey"), F.col("s_name"), F.col("total_revenue"))
-        .orderBy("s_suppkey")
-    )
+    The max is joined back in-plan rather than read through a scalar
+    subquery, so both references of the revenue view plan in one query
+    and share its shuffle. The comparison runs on the 2-dp-rounded
+    revenue in BOTH engines so the selection is deterministic under FP
+    sum reordering."""
+    return _sql(spark, sf_dir, """
+        WITH revenue AS (
+            SELECT l_suppkey,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
+            FROM {lineitem}
+            WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+              AND l_shipdate <  TIMESTAMP '1997-04-01'
+            GROUP BY l_suppkey)
+        SELECT s_suppkey, s_name, total_revenue
+        FROM revenue
+        JOIN (SELECT max(total_revenue) AS max_revenue FROM revenue)
+          ON total_revenue = max_revenue
+        JOIN {supplier} ON l_suppkey = s_suppkey
+        ORDER BY s_suppkey
+    """)
 
 
 _Q15_ORACLE = """
@@ -2001,35 +1759,23 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (r14 opt): ONE fact pass. The per-order quantity
     aggregate both decides qualification AND is the output sum — the
-    previous shape semi-joined the qualifying keys back into a second
-    lineitem scan and re-aggregated the same sum (plan audit: 2
-    lineitem scans, 2 aggregates). Now the filtered aggregate (already
-    order-grained, so the downstream joins and sort see one row per
-    qualifying order) joins orders directly; customer is broadcast.
-    Output values are identical: per qualifying order,
-    sum(l_quantity) over its semi-joined lines IS the aggregate's qty,
-    and o_totalprice/o_orderdate are 1:1 with the order key."""
-    t = _t(spark, sf_dir)
-    li = t("lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > 250)
-    )
-    return (
-        big.join(t("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t("customer")), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            F.round(F.col("o_totalprice"), 2).alias("o_totalprice"),
-            F.round(F.col("qty"), 2).alias("sum_qty"),
-        )
-        .orderBy(F.desc("o_totalprice"), "o_orderdate", "o_orderkey")
-        .limit(100)
-    )
+    IN-subquery form semi-joins the qualifying keys back into a second
+    lineitem scan and re-aggregates the same sum. Here the filtered
+    aggregate (already order-grained, so the downstream joins and sort
+    see one row per qualifying order) joins orders directly. Output
+    values are identical: per qualifying order, sum(l_quantity) over
+    its semi-joined lines IS the aggregate's qty, and
+    o_totalprice/o_orderdate are 1:1 with the order key."""
+    return _sql(spark, sf_dir, """
+        SELECT c_name, c_custkey, o_orderkey, o_orderdate,
+               round(o_totalprice, 2) AS o_totalprice, round(qty, 2) AS sum_qty
+        FROM (SELECT l_orderkey, sum(l_quantity) AS qty FROM {lineitem}
+              GROUP BY l_orderkey HAVING sum(l_quantity) > 250)
+        JOIN {orders}   ON l_orderkey = o_orderkey
+        JOIN {customer} ON o_custkey = c_custkey
+        ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
+        LIMIT 100
+    """)
 
 
 _Q18_ORACLE = """
@@ -2052,64 +1798,30 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact — suppliers in one nation who were the ONLY supplier with a
     returned line on a multi-supplier finished order. "Failed" is
     ``l_returnflag = 'R'`` (no receipt/commit dates in the testdata);
-    the three correlated subqueries decorrelate exactly as in TPC-H:
+    the two correlated subqueries decorrelate exactly as in TPC-H:
     one semi join (another supplier shipped the order) and one anti
     join (no OTHER supplier failed it), both equi on the order key
-    with the supplier inequality as a residual join predicate.
-
-    Scale shape (r14 opt: ONE lineitem pass). The EXISTS/NOT-EXISTS
-    pair decides per ORDER, so a single per-order aggregate replaces
-    both self-joins: a supplier s is waiting on order o iff s is the
-    ONLY supplier with an 'R' line in o (NOT EXISTS ⟺ distinct R
-    suppliers = 1) and o has at least one other supplier (EXISTS ⟺
-    distinct suppliers ≥ 2), and each of s's R lines in o counts once
-    (the decorrelated count(*) is over l1 ROWS) — carried as the
-    order's R-line count. The previous shape shuffled/broadcast
-    lineitem three times (l1 ⋈ l2 semi, ⋈ l3 anti); now lineitem is
-    shuffled ONCE by order key, the qualifying-order semi join reuses
-    that partitioning, and nation/supplier stay broadcast."""
-    t = _t(spark, sf_dir)
-    li = t("lineitem")
-    n2_supp = (
-        t("supplier")
-        .join(
-            F.broadcast(t("nation").filter(F.col("n_name") == "NATION_2")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-            "semi",
-        )
-    )
-    is_r = F.col("l_returnflag") == "R"
-    # two-level aggregate instead of two count_distincts (which plan as
-    # a 3x EXPAND of the fact): per (order, supplier) first — map-side
-    # combinable, one shuffle — then per order over supplier-grain rows
-    per_pair = li.groupBy("l_orderkey", "l_suppkey").agg(
-        F.sum(is_r.cast("long")).alias("r_lines")
-    )
-    has_r = F.col("r_lines") > 0
-    per_order = (
-        per_pair.groupBy("l_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_all_supp"),
-            F.sum(has_r.cast("long")).alias("n_r_supp"),
-            F.max(F.when(has_r, F.col("l_suppkey"))).alias("r_supp"),
-            F.sum("r_lines").alias("n_r_lines"),
-        )
-        .filter((F.col("n_r_supp") == 1) & (F.col("n_all_supp") >= 2))
-        .join(
-            t("orders").filter(F.col("o_orderstatus") == "F").select("o_orderkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-            "semi",
-        )
-    )
-    return (
-        per_order.join(
-            F.broadcast(n2_supp), F.col("r_supp") == F.col("s_suppkey")
-        )
-        .groupBy("s_name")
-        .agg(F.sum("n_r_lines").cast("bigint").alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(20)
-    )
+    with the supplier inequality as a residual join predicate."""
+    return _sql(spark, sf_dir, """
+        SELECT s_name, count(*) AS numwait
+        FROM {lineitem} l1
+        JOIN {orders}   ON l1.l_orderkey = o_orderkey
+        JOIN {supplier} ON l1.l_suppkey = s_suppkey
+        JOIN {nation}   ON s_nationkey = n_nationkey
+        WHERE l1.l_returnflag = 'R'
+          AND o_orderstatus = 'F'
+          AND n_name = 'NATION_2'
+          AND EXISTS (SELECT 1 FROM {lineitem} l2
+                      WHERE l2.l_orderkey = l1.l_orderkey
+                        AND l2.l_suppkey <> l1.l_suppkey)
+          AND NOT EXISTS (SELECT 1 FROM {lineitem} l3
+                          WHERE l3.l_orderkey = l1.l_orderkey
+                            AND l3.l_suppkey <> l1.l_suppkey
+                            AND l3.l_returnflag = 'R')
+        GROUP BY s_name
+        ORDER BY numwait DESC, s_name
+        LIMIT 20
+    """)
 
 
 _Q21_ORACLE = """

@@ -508,3 +508,37 @@ def test_untold_decimal_takes_the_per_file_reader(spark, tmp_path, monkeypatch, 
     _write(tmp_path / "ok.json", json.dumps([{"id": "ok"}]))
     df = _assert_same(spark, tmp_path, monkeypatch, ["n.json"], text_parity=False)
     assert dict(df.dtypes)["n"] == want
+
+
+@pytest.mark.parametrize("text_parity", [True, False])
+@pytest.mark.parametrize("payload", [
+    [{"o": {"k": 1, "K": "x"}}],
+    [{"o": [{"k": 1, "K": "x"}]}],  # a struct inside an array
+    [{"o": {"p": {"k": 1, "K": 2}}}],  # two levels down
+])
+def test_nested_case_duplicate_keys_fail_as_their_own_read(
+    spark, tmp_path, monkeypatch, payload, text_parity
+):
+    # Spark resolves names case-insensitively at every depth, so the
+    # file's own read fails ([COLUMN_ALREADY_EXISTS]): the pass leaves
+    # it to that read
+    _write(tmp_path / "dup.json", json.dumps(payload))
+    _write(tmp_path / "ok.json", json.dumps([{"id": 2}]))
+    _assert_same(spark, tmp_path, monkeypatch, ["dup.json"], text_parity=text_parity)
+
+
+def test_nested_keys_differing_in_case_across_files(spark, tmp_path, monkeypatch):
+    # each file reads alone; merged, `o` would hold `K` and `k`, so the
+    # second file takes its own read
+    _write(tmp_path / "a.json", json.dumps([{"o": {"k": 1}}]))
+    _write(tmp_path / "b.json", json.dumps([{"o": {"K": "x"}}]))
+    df = _assert_same(spark, tmp_path, monkeypatch, ["b.json"])
+    assert sorted(r["o"] for r in df.collect()) == ['{"K":"x"}', '{"k":1}']
+    # lossless, the per-file pipeline builds no table: its union resolves
+    # `K` as `k` and casts "x" to bigint. The pass keeps both files, with
+    # `o` as JSON text
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        _reference(spark, tmp_path, text_parity=False)[0].collect()
+    got_df, got = ingest_directory(spark, tmp_path, text_parity=False)
+    assert (got.files_processed, got.files_failed) == (2, 0)
+    assert sorted(r["o"] for r in got_df.collect()) == ['{"K":"x"}', '{"k":1}']

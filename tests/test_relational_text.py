@@ -1,0 +1,51 @@
+"""Relational members written as one Spark SQL text each: a member's
+plan is parsed and analyzed in the JVM, so building it costs a few py4j
+commands whatever its size, and the temp views that bind its tables do
+not outlive the build."""
+
+from __future__ import annotations
+
+import ast
+import inspect
+
+from conftest import SF_SMALL
+
+from generic_data_ingestor_framework_spark import relational
+
+# one temp view registered and dropped per table read, plus the parse:
+# q8_market_share, with seven tables, sends 19
+BUILD_COMMANDS_MAX = 20
+
+
+def _text_members() -> list[str]:
+    """The registry members whose body returns one ``_sql`` call."""
+    out = []
+    for name, fn in relational.QUERIES.items():
+        body = ast.parse(inspect.getsource(fn)).body[0].body
+        last = body[-1]
+        if (
+            isinstance(last, ast.Return)
+            and isinstance(last.value, ast.Call)
+            and getattr(last.value.func, "id", None) == "_sql"
+        ):
+            out.append(name)
+    return out
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_text_members_build_in_a_few_jvm_commands(spark, jvm_commands):
+    members = _text_members()
+    assert len(members) >= 40, members
+    views = _temp_views(spark)
+    for name in members:  # first use of each table reader and entry point
+        relational.QUERIES[name](spark, SF_SMALL)
+    sent = {}
+    for name in members:
+        with jvm_commands() as n:
+            relational.QUERIES[name](spark, SF_SMALL)
+        sent[name] = n[0]
+    assert max(sent.values()) <= BUILD_COMMANDS_MAX, sent
+    assert _temp_views(spark) == views

@@ -488,6 +488,18 @@ def test_unbounded_stream_watermark_evicts_dedup_state(spark, tmp_path):
         # t0 + 110 min, far past a's expiry → a's state entry evicted
         put("f2.json", [("b", base + 120 * MIN)])
         wait_rows(2)
+        # the eviction runs in a no-data batch on a later trigger than
+        # b's batch: a file that lands before it is checked against the
+        # stale entry
+        end = time.time() + 90.0
+        while not any(
+            op.get("numRowsRemoved", 0)
+            for p in q.recentProgress
+            for op in p.get("stateOperators", [])
+        ):
+            if time.time() > end:
+                raise AssertionError(f"watermark never evicted state; progress={q.lastProgress}")
+            time.sleep(0.05)
         # batch 3: key a again (above the watermark) — with state
         # evicted it MUST re-emit; with an unbounded dedup it would be
         # suppressed forever and this wait times out
