@@ -11,6 +11,11 @@ DuckDB oracle twins. Determinism contracts: ordering is always
 (portable hash, doc_id); ratios are rounded at the edge; integer math
 everywhere else.
 
+The operators (``overlap_chunks``, ``paragraph_segments``,
+``gopher_flags``, ``quality_bands``/``banded_budget_select``, the span
+core) take any frame and token column: the members run them over
+``documents``, the pipeline's curation steps over the flowing frame.
+
 Scale notes (100 TB): decontamination is a broadcast-able semi-join
 when the benchmark is benchmark-sized (thousands of docs → millions of
 grams, comfortably under the broadcast threshold) and degrades to a
@@ -158,29 +163,28 @@ def pack_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def overlap_chunks(
+    df: DataFrame, ts_col: str, chunk: int = CHUNK_TOKENS, stride: int = CHUNK_STRIDE
+):
+    """One row per ``chunk``-token window, every ``stride`` tokens, of
+    the token array ``ts_col`` (final partial chunk kept): returns
+    ``df`` with ``chunk_idx`` appended, and the chunk's tokens as a
+    column over it. Map-only explode — no shuffle. The one chunking of
+    ``chunk_documents_overlap`` and the pipeline's ``chunk_overlap``
+    step."""
+    n = F.size(ts_col)
+    n_chunks = 1 + F.greatest(F.lit(0), F.ceil((n - chunk) / F.lit(float(stride))).cast("int"))
+    rows = df.withColumn("chunk_idx", F.explode(F.sequence(F.lit(0), n_chunks - 1)))
+    return rows, F.slice(ts_col, F.col("chunk_idx") * stride + 1, chunk)
+
+
 def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long-document chunking with overlap (RAG / context-split shape):
-    CHUNK_TOKENS-token windows every CHUNK_STRIDE tokens, final partial
-    chunk kept. Map-only explode — no shuffle; each chunk carries its
-    md5 so content (not just counts) is oracle-checked.
+    """Long-document chunking with overlap (RAG / context-split shape,
+    ``overlap_chunks``); each chunk carries its md5 so content (not
+    just counts) is oracle-checked.
     """
-    toks = _docs_with_tokens(spark, sf_dir)
-    n = F.size("ts")
-    n_chunks = 1 + F.greatest(
-        F.lit(0), F.ceil((n - CHUNK_TOKENS) / F.lit(float(CHUNK_STRIDE))).cast("int")
-    )
-    c = (
-        toks.select(
-            "doc_id",
-            "ts",
-            F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
-        )
-        .select(
-            "doc_id",
-            "chunk_idx",
-            F.slice("ts", F.col("chunk_idx") * CHUNK_STRIDE + 1, CHUNK_TOKENS).alias("chunk"),
-        )
-    )
+    rows, tokens = overlap_chunks(_docs_with_tokens(spark, sf_dir), "ts")
+    c = rows.select("doc_id", "chunk_idx", tokens.alias("chunk"))
     return c.select(
         "doc_id",
         "chunk_idx",
@@ -189,54 +193,61 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def paragraph_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style paragraph-level dedup: each document is cut into
-    consecutive SEG_TOKENS-token segments (positional "paragraphs" —
-    on real data the splitter becomes a newline split, same plan), and
-    a segment occurrence survives only if it is the corpus-wide FIRST
-    occurrence of its content (min (doc_id, pos)). Reports per-doc
-    segment counts and the md5 of the surviving text, so the gate
-    checks reconstructed content, not just counts — the stage that
-    strips boilerplate (headers, license blocks, navigation) repeated
-    across a crawl.
+def paragraph_segments(df: DataFrame, id_col: str, toks, seg: int = SEG_TOKENS) -> DataFrame:
+    """CCNet-style paragraph-level dedup of the token array ``toks``:
+    each row is cut into consecutive ``seg``-token segments
+    (positional "paragraphs" — on real data the splitter becomes a
+    newline split, same plan), and a segment occurrence survives only
+    if it is the corpus-wide FIRST occurrence of its content (min (id,
+    pos)). Returns ``(id, n_segments, n_kept, kept_text)``, the
+    surviving segments joined in order. The one plan behind
+    ``paragraph_dedup_corpus`` and the pipeline's ``paragraph_dedup``
+    step.
 
     Plan: map-only segment explode → ONE shuffle on the segment content
-    (window row_number picks the canonical occurrence) → per-doc hash
-    aggregate (collect_list is bounded by segments-per-doc). No
+    (window row_number picks the canonical occurrence) → per-id hash
+    aggregate (collect_list is bounded by segments-per-row). No
     corpus×corpus join anywhere; boilerplate-heavy hot segments cost
     one window partition each, not a quadratic bucket.
     """
-    toks = _docs_with_tokens(spark, sf_dir)
     # greatest(…, 1): a degenerate null/zero-size token array can never
     # feed sequence() a descending range (identical output for every
     # real row, so the oracle needs no mirror)
-    n_segs = F.greatest(
-        F.ceil(F.size("ts") / F.lit(float(SEG_TOKENS))).cast("int"), F.lit(1)
+    n_segs = F.greatest(F.ceil(F.size("__ts") / F.lit(float(seg))).cast("int"), F.lit(1))
+    segs = (
+        df.select(id_col, toks.alias("__ts"))
+        .select(id_col, "__ts", F.explode(F.sequence(F.lit(0), n_segs - 1)).alias("__pos"))
+        .select(
+            id_col,
+            "__pos",
+            F.array_join(F.slice("__ts", F.col("__pos") * seg + 1, seg), " ").alias("__seg"),
+        )
     )
-    segs = toks.select(
-        "doc_id",
-        "ts",
-        F.explode(F.sequence(F.lit(0), n_segs - 1)).alias("pos"),
-    ).select(
-        "doc_id",
-        "pos",
-        F.array_join(
-            F.slice("ts", F.col("pos") * SEG_TOKENS + 1, SEG_TOKENS), " "
-        ).alias("seg"),
-    )
-    w = W.partitionBy("seg").orderBy("doc_id", "pos")
-    marked = segs.withColumn("keep", F.row_number().over(w) == 1)
+    w = W.partitionBy("__seg").orderBy(id_col, "__pos")
+    marked = segs.withColumn("__keep", F.row_number().over(w) == 1)
     kept_text = F.array_join(
         F.transform(
-            F.array_sort(F.collect_list(F.when(F.col("keep"), F.struct("pos", "seg")))),
-            lambda s: s["seg"],
+            F.array_sort(F.collect_list(F.when(F.col("__keep"), F.struct("__pos", "__seg")))),
+            lambda s: s["__seg"],
         ),
         " ",
     )
-    return marked.groupBy("doc_id").agg(
+    return marked.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_segments"),
-        F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        F.md5(kept_text).alias("kept_md5"),
+        F.sum(F.col("__keep").cast("long")).alias("n_kept"),
+        kept_text.alias("kept_text"),
+    )
+
+
+def paragraph_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style paragraph-level dedup of ``documents``
+    (``paragraph_segments``): reports per-doc segment counts and the
+    md5 of the surviving text, so the gate checks reconstructed
+    content, not just counts — the stage that strips boilerplate
+    (headers, license blocks, navigation) repeated across a crawl."""
+    d = load_table(spark, sf_dir, "documents")
+    return paragraph_segments(d, "doc_id", tokens_col()).select(
+        "doc_id", "n_segments", "n_kept", F.md5("kept_text").alias("kept_md5")
     )
 
 
@@ -318,17 +329,46 @@ def span_duplication_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 BUDGET_NUM, BUDGET_DEN = 2, 5  # select the top-quality 40% of corpus tokens
 
 
+def quality_bands(df: DataFrame, id_col: str, toks) -> DataFrame:
+    """``(id, n_tok, band)``: each row's token count and its heuristic
+    quality (shared ``_quality_expr`` over the token array ``toks``,
+    6-dp rounded) as the exact integer ``band = round(quality·1e6)`` in
+    [0, 1e6]."""
+    from generic_data_ingestor_framework_spark.llm.textstats import _quality_expr
+
+    # materialize the token array BEFORE the quality lambda: Catalyst
+    # re-inlines aliased expressions into HOF lambda bodies, re-running
+    # the regex split per element otherwise (see dedup.py:66-70)
+    return df.select(id_col, toks.alias("__ts")).select(
+        id_col,
+        F.size("__ts").alias("n_tok"),
+        F.round(F.round(_quality_expr(F.col("__ts")), 6) * 1e6).cast("bigint").alias("band"),
+    )
+
+
+def band_totals(banded: DataFrame) -> list[tuple[int, int, int]]:
+    """The driver-sized ``[(band, total_tokens, n_rows)]`` relation of
+    ``quality_bands`` rows: at most 1e6+1 rows at ANY data size."""
+    return [
+        (int(r["band"]), int(r["toks"]), int(r["docs"]))
+        for r in banded.groupBy("band")
+        .agg(F.sum("n_tok").alias("toks"), F.count(F.lit(1)).alias("docs"))
+        .collect()
+    ]
+
+
 def banded_budget_select(
-    banded: DataFrame, id_col: str, band_rows: list, budget: int
+    banded: DataFrame, id_col: str, band_rows: list, num: int, den: int
 ) -> DataFrame:
-    """The two-level banded-cumsum selection core, shared by the corpus
-    member and the pipeline step: ``banded`` has (id, n_tok, band);
-    ``band_rows`` is the driver-sized [(band, total_tokens, n_rows)]
-    relation. Bands that start past the budget are pruned before any
-    row-level work; the row-level windows run PARTITIONED by band with
-    driver-computed offsets added — no global sort at any data size.
-    Returns the selected rows annotated with ``cum_tokens`` and
-    ``sel_rank``."""
+    """The two-level banded-cumsum selection, shared by the corpus
+    member and the pipeline step: keeps the best ``quality_bands``
+    rows (``banded``) until ``num/den`` of all tokens are spent, by
+    ``band_rows`` (``band_totals``). Bands that start past the budget
+    are pruned before any row-level work; the row-level windows run
+    PARTITIONED by band with driver-computed offsets added — no global
+    sort at any data size. Returns the selected rows annotated with
+    ``cum_tokens`` and ``sel_rank``."""
+    budget = sum(t for _, t, _ in band_rows) * num // den
     offs, tok_off, rank_off = [], 0, 0
     for band, toks, docs in sorted(band_rows, reverse=True):
         if tok_off < budget:  # bands starting past the budget can't contribute
@@ -366,38 +406,22 @@ def corpus_select_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: a naive global ORDER BY quality + running-sum window
     is a single-partition sort at 100 TB. This runs the TWO-LEVEL
-    cumsum instead: quality is 6-dp rounded, so ``band = round(q·1e6)``
-    is an exact integer in [0, 1e6]; per-band token totals (≤ 1e6+1
-    rows, a bounded driver-sized relation at ANY corpus size) give
-    each band's prefix offset on the driver, bands that start past the
-    budget are pruned before any row-level work, and the row-level
-    window runs PARTITIONED by band with the offset added — no global
-    sort ever happens. The DuckDB oracle computes the same selection
-    with the naive global window, pinning the decomposition's
-    equivalence."""
+    cumsum instead (``banded_budget_select``): quality is 6-dp rounded,
+    so its band is an exact integer; per-band token totals give each
+    band's prefix offset on the driver, and the row-level window runs
+    PARTITIONED by band with the offset added — no global sort ever
+    happens. The DuckDB oracle computes the same selection with the
+    naive global window, pinning the decomposition's equivalence."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
-    from generic_data_ingestor_framework_spark.llm.textstats import _quality_expr
 
-    banded = _docs_with_tokens(spark, sf_dir).select(
+    d = load_table(spark, sf_dir, "documents")
+    banded = quality_bands(d, "doc_id", tokens_col())
+    band_rows = shared_value(spark, ("qsel_bands", sf_dir), lambda: band_totals(banded))
+    return banded_budget_select(banded, "doc_id", band_rows, BUDGET_NUM, BUDGET_DEN).select(
         "doc_id",
-        F.size("ts").alias("n_tok"),
-        F.round(_quality_expr(F.col("ts")), 6).alias("quality"),
-    ).withColumn("band", F.round(F.col("quality") * 1e6).cast("bigint"))
-    band_rows = shared_value(
-        spark,
-        ("qsel_bands", sf_dir),
-        lambda: [
-            (int(r["band"]), int(r["toks"]), int(r["docs"]))
-            for r in banded.groupBy("band")
-            .agg(F.sum("n_tok").alias("toks"), F.count(F.lit(1)).alias("docs"))
-            .collect()
-        ],
-    )
-    total = sum(t for _, t, _ in band_rows)
-    budget = total * BUDGET_NUM // BUDGET_DEN
-    return banded_budget_select(banded, "doc_id", band_rows, budget).select(
-        "doc_id",
-        "quality",
+        # band/1e6 is round(quality, 6) exactly: the double nearest the
+        # same 6-dp decimal
+        (F.col("band") / 1e6).alias("quality"),
         F.col("n_tok").alias("n_tokens"),
         "cum_tokens",
         "sel_rank",
@@ -558,30 +582,52 @@ def remove_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition/shape quality flags per document: word
-    count band, mean word length band, duplicate-token fraction cap —
-    combined into one keep/drop boolean. All list HOFs, rounded at the
-    edge for the cross-engine contract.
-    """
-    toks = _docs_with_tokens(spark, sf_dir)
-    words = F.filter(F.col("ts"), lambda t: t != "")
+# the Gopher rule's default bounds (``gopher_flags``)
+GOPHER_BOUNDS = {
+    "min_words": 5,
+    "max_words": 100000,
+    "min_mean_word_len": 2.0,
+    "max_mean_word_len": 12.0,
+    "max_dup_token_frac": 0.9,
+}
+
+
+def gopher_flags(toks, **bounds):
+    """Gopher-style repetition/shape flags of the token array ``toks``:
+    ``(n_words, mean_word_len, dup_token_frac, passes)`` columns — word
+    count band, mean word length band, duplicate-token fraction cap,
+    combined into one keep/drop boolean. ``bounds`` override
+    ``GOPHER_BOUNDS``. The fractions are 4-dp floored before they are
+    compared (the cross-engine contract). The one rule of
+    ``gopher_quality_flags`` and the pipeline's ``quality_filter``
+    step."""
+    b = {**GOPHER_BOUNDS, **bounds}
+    words = F.filter(toks, lambda t: t != "")
     n_words = F.size(words)
     sum_len = F.aggregate(words, F.lit(0), lambda acc, t: acc + F.length(t))
-    mean_len = _floor4(sum_len / n_words)
-    dup_frac = _floor4(1 - F.size(F.array_distinct(words)) / n_words)
-    return toks.select(
+    # a row with no words has no mean and no fraction (NULL, not a
+    # division-by-zero failure of the whole query), and fails the gate
+    mean_len = _floor4(F.try_divide(sum_len, n_words))
+    dup_frac = _floor4(1 - F.try_divide(F.size(F.array_distinct(words)), n_words))
+    passes = (
+        (n_words >= b["min_words"])
+        & (n_words <= b["max_words"])
+        & (mean_len >= b["min_mean_word_len"])
+        & (mean_len <= b["max_mean_word_len"])
+        & (dup_frac <= b["max_dup_token_frac"])
+    )
+    return n_words, mean_len, dup_frac, passes
+
+
+def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style quality flags per document (``gopher_flags``)."""
+    n_words, mean_len, dup_frac, passes = gopher_flags(F.col("ts"))
+    return _docs_with_tokens(spark, sf_dir).select(
         "doc_id",
         n_words.alias("n_words"),
         mean_len.alias("mean_word_len"),
         dup_frac.alias("dup_token_frac"),
-        (
-            (n_words >= 5)
-            & (n_words <= 100000)
-            & (mean_len >= 2.0)
-            & (mean_len <= 12.0)
-            & (dup_frac <= 0.9)
-        ).alias("passes_gopher"),
+        passes.alias("passes_gopher"),
     )
 
 

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32
+from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32, tokens_col
 from generic_data_ingestor_framework_spark.llm.textstats import STOPWORDS
 from generic_data_ingestor_framework_spark.relational import load_table
 from generic_data_ingestor_framework_spark.session import local_relation
@@ -106,8 +106,6 @@ def mix_resample_equalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning-independent hash arithmetic, so the resampled corpus
     is auditable and re-joinable like every sample here."""
     d = load_table(spark, sf_dir, "documents")
-    from generic_data_ingestor_framework_spark.llm.dedup import tokens_col
-
     per_lang = (
         d.select("lang", F.size(tokens_col()).alias("n_tok"))
         .groupBy("lang")
@@ -153,7 +151,7 @@ def quality_weight_bp(text_col: str):
     ``⌊min(n,100)·50·(n+n_stop)/n⌋ ∈ [0,10000]`` (algebraically
     ``quality·10⁴``). One definition feeds the sampling member AND the
     pipeline ``weighted_sample`` step, so they cannot drift."""
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
+    toks = tokens_col(text_col)
     n = F.size(toks).cast("long")
     n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))).cast("long")
     return F.floor(F.least(n, F.lit(100)) * 50 * (n + n_stop) / n).cast("long")
@@ -196,23 +194,24 @@ _PHONE_RE = "\\+?[0-9][0-9()\\- ]{7,}[0-9]"
 _SSN_RE = "[0-9]{3}-[0-9]{2}-[0-9]{4}"
 
 
-def redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing pass: emails, phone-like digit runs, and SSN-shaped
-    ids replaced by typed placeholders, with per-doc hit counts so a
-    pipeline can quarantine high-PII documents.
-
-    Pure ``regexp_replace`` projections — codegen'd, no UDFs; RE2-safe
-    patterns shared verbatim with the oracle."""
-    d = load_table(spark, sf_dir, "documents")
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _SSN_RE, "<SSN>"),
-            _EMAIL_RE,
-            "<EMAIL>",
-        ),
+def pii_redacted(text):
+    """``text`` with emails, phone-like digit runs and SSN-shaped ids
+    replaced by typed placeholders: the one redaction run by the member
+    and by the pipeline's ``redact_pii`` step. Pure ``regexp_replace``
+    projections — codegen'd, no UDFs; RE2-safe patterns shared verbatim
+    with the oracle."""
+    return F.regexp_replace(
+        F.regexp_replace(F.regexp_replace(text, _SSN_RE, "<SSN>"), _EMAIL_RE, "<EMAIL>"),
         _PHONE_RE,
         "<PHONE>",
     )
+
+
+def redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII scrubbing pass (``pii_redacted``) with per-doc hit counts so
+    a pipeline can quarantine high-PII documents."""
+    d = load_table(spark, sf_dir, "documents")
+    redacted = pii_redacted(F.col("text"))
     n_hits = (
         F.size(F.split(redacted, "<EMAIL>")) - 1
         + F.size(F.split(redacted, "<PHONE>")) - 1

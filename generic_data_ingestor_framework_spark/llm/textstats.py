@@ -882,51 +882,65 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def doc_topgram_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style top-n-gram mass: the fraction of a document's
-    bigram positions occupied by its single most frequent bigram (ties
-    broken lexicographically). A high mass means the text loops on one
-    phrase — the repetition signal ``dup_token_frac`` (bag level) and
-    the span operators (corpus level) don't isolate. Documents with
-    fewer than 2 tokens have no bigrams and are absent, as in the
-    Gopher rule.
+# working and output columns of ``top_bigrams``; a caller's id column
+# must not take one of these names
+TOPGRAM_COLUMNS = frozenset(
+    {"__ts", "__bg", "__m", "__tot", "__rn", "top_bigram", "top_count", "n_bigrams"}
+)
 
-    Scale shape: explode → one (doc, bigram) hash-aggregate (map-side
-    combinable) → per-doc window (sum + rank share one sort on doc_id);
-    the modal bigram is carried as evidence. Fractions are 4-dp floor
-    (no cross-engine round ties)."""
+
+def top_bigrams(df: DataFrame, id_col: str, toks) -> DataFrame:
+    """``(id, top_bigram, top_count, n_bigrams)``: each row's most
+    frequent bigram of the token array ``toks`` (ties broken
+    lexicographically), its count and the row's bigram positions. Rows
+    with fewer than 2 tokens have no bigrams and are absent. The one
+    plan behind ``doc_topgram_mass`` and the pipeline's
+    ``repetition_filter`` step.
+
+    Scale shape: explode → one (id, bigram) hash-aggregate (map-side
+    combinable) → per-id window (sum + rank share one sort on id)."""
     from pyspark.sql import Window as W
 
-    d = load_table(spark, sf_dir, "documents")
-    n = F.size(F.col("toks"))
+    n = F.size(F.col("__ts"))
     bigrams = F.when(
         n >= 2,
         F.transform(
             F.sequence(F.lit(0), n - 2),
-            lambda i: F.array_join(F.slice(F.col("toks"), i + 1, 2), " "),
+            lambda i: F.array_join(F.slice(F.col("__ts"), i + 1, 2), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
     bg = (
-        d.select("doc_id", tokens_col().alias("toks"))
-        .select("doc_id", F.explode(bigrams).alias("bigram"))
-        .groupBy("doc_id", "bigram")
-        .agg(F.count(F.lit(1)).alias("m"))
+        df.select(id_col, toks.alias("__ts"))
+        .select(id_col, F.explode(bigrams).alias("__bg"))
+        .groupBy(id_col, "__bg")
+        .agg(F.count(F.lit(1)).alias("__m"))
     )
-    w = W.partitionBy("doc_id")
-    wo = w.orderBy(F.desc("m"), "bigram")
+    w = W.partitionBy(id_col)
     return (
-        bg.withColumn("n_bigrams", F.sum("m").over(w))
-        .withColumn("rn", F.row_number().over(wo))
-        .filter(F.col("rn") == 1)
+        bg.withColumn("__tot", F.sum("__m").over(w))
+        .withColumn("__rn", F.row_number().over(w.orderBy(F.desc("__m"), "__bg")))
+        .filter(F.col("__rn") == 1)
         .select(
-            "doc_id",
-            F.col("bigram").alias("top_bigram"),
-            F.col("m").alias("top_count"),
-            "n_bigrams",
-            (F.floor(F.col("m") / F.col("n_bigrams") * 10000) / 10000).alias(
-                "top_frac"
-            ),
+            id_col,
+            F.col("__bg").alias("top_bigram"),
+            F.col("__m").alias("top_count"),
+            F.col("__tot").alias("n_bigrams"),
         )
+    )
+
+
+def doc_topgram_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style top-n-gram mass: the fraction of a document's
+    bigram positions occupied by its single most frequent bigram
+    (``top_bigrams``). A high mass means the text loops on one phrase —
+    the repetition signal ``dup_token_frac`` (bag level) and the span
+    operators (corpus level) don't isolate. Documents with fewer than 2
+    tokens are absent, as in the Gopher rule. The modal bigram is
+    carried as evidence; fractions are 4-dp floor (no cross-engine
+    round ties)."""
+    d = load_table(spark, sf_dir, "documents")
+    return top_bigrams(d, "doc_id", tokens_col()).withColumn(
+        "top_frac", F.floor(F.col("top_count") / F.col("n_bigrams") * 10000) / 10000
     )
 
 

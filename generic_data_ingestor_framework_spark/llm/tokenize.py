@@ -130,23 +130,30 @@ def apply_merge(sym_col, pair: str) -> F.Column:
     return F.trim(s)
 
 
+def word_freqs(df: DataFrame, column: str = "text") -> DataFrame:
+    """The vocab-sized ``(word, cnt, s)`` relation BPE iterates over,
+    from the tokens of ``df``'s ``column`` — the ONLY corpus-scale job
+    in the trainer. Built by the corpus members (``_word_freqs``) and
+    by the pipeline's ``bpe_tokenize`` step."""
+    return (
+        df.select(F.explode(tokens_col(column)).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .withColumn("s", _init_syms(F.col("word")))
+    )
+
+
 def _word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The vocab-sized ``(word, cnt, s)`` relation BPE iterates over —
-    the ONLY corpus-scale job in the trainer; persisted per session."""
+    """``word_freqs`` over ``documents``, persisted per session."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
     from generic_data_ingestor_framework_spark.relational import load_table
 
-    def build() -> DataFrame:
-        d = load_table(spark, sf_dir, "documents")
-        return (
-            d.select(F.explode(tokens_col()).alias("word"))
-            .filter(F.col("word") != "")
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("s", _init_syms(F.col("word")))
-        )
-
-    return shared_persist(spark, ("bpe_words", sf_dir), build)
+    return shared_persist(
+        spark,
+        ("bpe_words", sf_dir),
+        lambda: word_freqs(load_table(spark, sf_dir, "documents")),
+    )
 
 
 # pair extraction: adjacent symbol pairs as "A B" strings, one row per
@@ -384,6 +391,7 @@ def encode_with_merges(
       word, rebuilding each row's subword array by original position.
       Costs two shuffles (distinct + regroup) but total merge work is
       Heaps-law-sized, the 100 TB-safe trade."""
+    words_arr = F.filter(tokens_col(column), lambda w: w != "")
     if len(merges) <= chain_max:
 
         def encode_word(w):
@@ -392,15 +400,10 @@ def encode_with_merges(
                 s = apply_merge(s, pair)
             return F.split(s, " ")
 
-        words = F.split(F.lower(F.col(column)), r"\s+")
-        return df.withColumn(
-            "bpe_tokens",
-            F.flatten(F.transform(F.filter(words, lambda w: w != ""), encode_word)),
-        )
+        return df.withColumn("bpe_tokens", F.flatten(F.transform(words_arr, encode_word)))
 
     rid = "_bpe_rid"
     base = df.withColumn(rid, F.monotonically_increasing_id())
-    words_arr = F.filter(F.split(F.lower(F.col(column)), r"\s+"), lambda w: w != "")
     toks = base.select(rid, F.posexplode(words_arr).alias("_pos", "word"))
     wmap = _apply_merges_chunked(
         toks.select("word").distinct().withColumn("s", _init_syms(F.col("word"))),

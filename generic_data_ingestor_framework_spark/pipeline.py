@@ -22,6 +22,25 @@ A ``directory`` source takes ``ingest_directory``'s options. Its
 dropped instead of failing its file); ``text_parity`` (default true)
 and ``schema_mode`` apply in both.
 
+Each curation step runs the operator its registry member runs, over
+the flowing frame instead of ``documents``, plus the step's parameter
+checks and column rewrite — one definition per operator:
+
+    redact_pii         llm.sampling.pii_redacted        (redact_pii)
+    chunk_overlap      llm.curate.overlap_chunks        (chunk_documents_overlap)
+    quality_filter     llm.curate.gopher_flags          (gopher_quality_flags)
+    repetition_filter  llm.textstats.top_bigrams        (doc_topgram_mass)
+    paragraph_dedup    llm.curate.paragraph_segments    (paragraph_dedup_corpus)
+    remove_dup_spans   llm.curate.span_coverage & co.   (remove_duplicated_spans)
+    select_budget      llm.curate.banded_budget_select  (corpus_select_budget)
+    weighted_sample    llm.sampling.quality_weight_bp   (quality_weighted_sample)
+    bpe_tokenize       llm.tokenize.word_freqs          (the BPE trainers)
+
+``lm_filter`` fits its unigram LM per frame (the member
+``lm_unigram_score`` memoizes one per corpus) and ``decontaminate``
+joins against a benchmark source; both share only the tokenizer
+(``dedup.tokens_col``) and, for the latter, ``shingles_from_tokens``.
+
 Everything stays lazy until the sink: the whole pipeline is ONE Spark
 plan, so Catalyst pushes filters into the source scan and prunes
 columns across step boundaries — steps are logical, not materialized
@@ -40,12 +59,7 @@ from pyspark.sql import functions as F
 
 from generic_data_ingestor_framework_spark import sink as sink_mod
 from generic_data_ingestor_framework_spark.ingest import ingest_directory
-from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32
-from generic_data_ingestor_framework_spark.llm.sampling import (
-    _EMAIL_RE,
-    _PHONE_RE,
-    _SSN_RE,
-)
+from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32, tokens_col
 from generic_data_ingestor_framework_spark.normalize import (
     flatten_dot_paths,
     normalize_text_parity,
@@ -91,15 +105,9 @@ def _step_sample_hash(df: DataFrame, p: dict) -> DataFrame:
 
 
 def _step_redact_pii(df: DataFrame, p: dict) -> DataFrame:
-    col = p["column"]
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col(col), _SSN_RE, "<SSN>"), _EMAIL_RE, "<EMAIL>"
-        ),
-        _PHONE_RE,
-        "<PHONE>",
-    )
-    return df.withColumn(col, red)
+    from generic_data_ingestor_framework_spark.llm.sampling import pii_redacted
+
+    return df.withColumn(p["column"], pii_redacted(F.col(p["column"])))
 
 
 def _step_with_column(df: DataFrame, p: dict) -> DataFrame:
@@ -131,94 +139,73 @@ def _step_union(df: DataFrame, p: dict) -> DataFrame:
     return df.unionByName(other, allowMissingColumns=p.get("allow_missing", True))
 
 
+def _with_blank_rows(
+    df: DataFrame, col: str, step: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """``step`` over the rows whose ``col`` holds a token; rows whose
+    ``col`` is NULL or blank carry nothing to score or deduplicate and
+    pass through UNCHANGED (unioned back, not silently dropped)."""
+    is_blank = F.col(col).isNull() | (F.trim(F.col(col)) == "")
+    return step(df.filter(~is_blank)).unionByName(df.filter(is_blank))
+
+
 def _step_chunk_overlap(df: DataFrame, p: dict) -> DataFrame:
-    """Split ``column`` into strided overlap chunks (map-only explode);
-    the text column is REPLACED by the chunk text and ``chunk_idx`` is
-    appended — downstream steps see chunk-level rows."""
+    """Split ``column`` into strided overlap chunks
+    (``llm.curate.overlap_chunks`` over the case-preserving whitespace
+    split); the text column is REPLACED by the chunk text and
+    ``chunk_idx`` is appended — downstream steps see chunk-level rows."""
     from generic_data_ingestor_framework_spark.llm.curate import (
         CHUNK_STRIDE,
         CHUNK_TOKENS,
+        overlap_chunks,
     )
 
     col = p.get("column", "text")
-    chunk = int(p.get("chunk", CHUNK_TOKENS))
-    stride = int(p.get("stride", CHUNK_STRIDE))
-    ts = F.split(F.col(col), r"\s+")
-    n = F.size(ts)
-    n_chunks = 1 + F.greatest(
-        F.lit(0), F.ceil((n - chunk) / F.lit(float(stride))).cast("int")
+    rows, tokens = overlap_chunks(
+        df.withColumn("__ts", F.split(F.col(col), r"\s+")),
+        "__ts",
+        int(p.get("chunk", CHUNK_TOKENS)),
+        int(p.get("stride", CHUNK_STRIDE)),
     )
-    return (
-        df.withColumn("__ts", ts)
-        .withColumn("chunk_idx", F.explode(F.sequence(F.lit(0), n_chunks - 1)))
-        .withColumn(
-            col,
-            F.array_join(F.slice("__ts", F.col("chunk_idx") * stride + 1, chunk), " "),
-        )
-        .drop("__ts")
-    )
+    return rows.withColumn(col, F.array_join(tokens, " ")).drop("__ts")
 
 
 def _step_quality_filter(df: DataFrame, p: dict) -> DataFrame:
-    """Gopher-style keep/drop gate on ``column`` (word count band, mean
-    word length band, duplicate-token fraction cap)."""
-    col = p.get("column", "text")
-    ws = F.filter(F.split(F.lower(F.col(col)), r"\s+"), lambda t: t != "")
-    n = F.size(ws)
-    mean_len = F.aggregate(ws, F.lit(0), lambda a, t: a + F.length(t)) / n
-    dup = 1 - F.size(F.array_distinct(ws)) / n
-    cond = (
-        (n >= int(p.get("min_words", 5)))
-        & (n <= int(p.get("max_words", 100000)))
-        & (mean_len >= float(p.get("min_mean_word_len", 2.0)))
-        & (mean_len <= float(p.get("max_mean_word_len", 12.0)))
-        & (dup <= float(p.get("max_dup_token_frac", 0.9)))
-    )
-    return df.filter(cond)
+    """Gopher-style keep/drop gate on ``column``
+    (``llm.curate.gopher_flags``: word count band, mean word length
+    band, duplicate-token fraction cap); each bound is a parameter of
+    the same name."""
+    from generic_data_ingestor_framework_spark.llm.curate import GOPHER_BOUNDS, gopher_flags
 
-
-_REPETITION_RESERVED = frozenset({"__ts", "__bg", "__m", "__tot", "__top_frac"})
+    bounds = {k: type(v)(p[k]) for k, v in GOPHER_BOUNDS.items() if k in p}
+    *_, passes = gopher_flags(tokens_col(p.get("column", "text")), **bounds)
+    return df.filter(passes)
 
 
 def _step_repetition_filter(df: DataFrame, p: dict) -> DataFrame:
     """Gopher top-n-gram mass gate: drop rows whose single most frequent
     bigram accounts for more than ``max_top_bigram_frac`` of bigram
     positions (phrase-looping spam the bag-level dup-token cap misses).
-    Rows with fewer than 2 tokens have no bigrams and pass. Same
-    explode → count → per-id window shape as ``doc_topgram_mass``,
-    joined back by ``id`` (LEFT join + null-pass, so short rows are
-    kept without a second pass over the text)."""
-    from pyspark.sql import Window as W
+    Rows with fewer than 2 tokens have no bigrams and pass. The
+    bigrams are ``llm.textstats.top_bigrams``, joined back by ``id``
+    (LEFT join + null-pass, so short rows are kept without a second
+    pass over the text)."""
+    from generic_data_ingestor_framework_spark.llm.textstats import (
+        TOPGRAM_COLUMNS,
+        top_bigrams,
+    )
 
     col = p.get("column", "text")
     idc = p["id"]
-    if idc in _REPETITION_RESERVED or col in _REPETITION_RESERVED:
+    if {idc, col} & (TOPGRAM_COLUMNS | {"__top_frac"}):
         raise ValueError(
             f"column {idc!r}/{col!r} collides with repetition-filter internals"
         )
     cap = float(p.get("max_top_bigram_frac", 0.2))
     if not 0 < cap <= 1:
         raise ValueError(f"max_top_bigram_frac must be in (0, 1]; got {cap}")
-    ts = F.split(F.lower(F.col(col)), r"\s+")
-    n = F.size(F.col("__ts"))
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.array_join(F.slice(F.col("__ts"), i + 1, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bg = (
-        df.select(idc, ts.alias("__ts"))
-        .select(idc, F.explode(bigrams).alias("__bg"))
-        .groupBy(idc, "__bg")
-        .agg(F.count(F.lit(1)).alias("__m"))
-    )
-    w = W.partitionBy(idc)
-    frac = (
-        bg.withColumn("__tot", F.sum("__m").over(w))
-        .groupBy(idc)
-        .agg(F.max(F.col("__m") / F.col("__tot")).alias("__top_frac"))
+    frac = top_bigrams(df, idc, tokens_col(col)).select(
+        idc, (F.col("top_count") / F.col("n_bigrams")).alias("__top_frac")
     )
     return (
         df.join(frac, idc, "left")
@@ -249,38 +236,38 @@ def _step_lm_filter(df: DataFrame, p: dict) -> DataFrame:
     """Unigram-LM quality gate: fit a Laplace-smoothed unigram LM over
     THIS dataset's ``column`` and drop rows whose token cross-entropy
     exceeds ``max_xent`` (rare/garbled token soup scores high; see
-    ``llm.textstats.lm_unigram_score`` for the corpus-level member).
-    The LM is one hash-aggregate over the exploded token relation,
-    broadcast back for scoring — two shuffles total, no driver-side
-    model beyond the two scalar counts."""
+    ``llm.textstats.lm_unigram_score`` for the corpus-level member,
+    which memoizes its LM per corpus). The LM is one hash-aggregate
+    over the exploded token relation, broadcast back for scoring — two
+    shuffles total, no driver-side model beyond the two scalar counts.
+    Rows with no tokens have no cross-entropy and pass through."""
     col = p.get("column", "text")
     idc = p["id"]
     max_xent = float(p.get("max_xent", 12.0))
-    # rows with no tokens have no cross-entropy to evaluate: pass them
-    # through UNCHANGED (same contract as paragraph_dedup's blank rows)
-    is_blank = F.col(col).isNull() | (F.trim(F.col(col)) == "")
-    blank_rows = df.filter(is_blank)
-    df = df.filter(~is_blank)
-    toks = (
-        df.select(idc, F.explode(F.split(F.lower(F.col(col)), r"\s+")).alias("__tok"))
-        .filter(F.col("__tok") != "")
-        .groupBy(idc, "__tok")
-        .agg(F.count(F.lit(1)).alias("__n"))
-    )
-    lm = toks.groupBy("__tok").agg(F.sum("__n").alias("__c"))
-    sc = lm.agg(F.sum("__c").alias("N"), F.count(F.lit(1)).alias("V")).collect()[0]
-    if sc["N"] is None:  # zero tokens anywhere: nothing scoreable
-        return df.unionByName(blank_rows)
-    denom = float(sc["N"] + sc["V"])
-    lp = F.log((F.col("__c") + 1.0) / F.lit(denom))
-    keep = (
-        toks.join(F.broadcast(lm.select("__tok", lp.alias("__lp"))), "__tok")
-        .groupBy(idc)
-        .agg((-F.sum(F.col("__n") * F.col("__lp")) / F.sum("__n")).alias("__xent"))
-        .filter(F.col("__xent") <= max_xent)
-        .select(idc)
-    )
-    return df.join(keep, idc, "semi").unionByName(blank_rows)
+
+    def gate(df: DataFrame) -> DataFrame:
+        toks = (
+            df.select(idc, F.explode(tokens_col(col)).alias("__tok"))
+            .filter(F.col("__tok") != "")
+            .groupBy(idc, "__tok")
+            .agg(F.count(F.lit(1)).alias("__n"))
+        )
+        lm = toks.groupBy("__tok").agg(F.sum("__n").alias("__c"))
+        sc = lm.agg(F.sum("__c").alias("N"), F.count(F.lit(1)).alias("V")).collect()[0]
+        if sc["N"] is None:  # zero tokens anywhere: nothing scoreable
+            return df
+        denom = float(sc["N"] + sc["V"])
+        lp = F.log((F.col("__c") + 1.0) / F.lit(denom))
+        keep = (
+            toks.join(F.broadcast(lm.select("__tok", lp.alias("__lp"))), "__tok")
+            .groupBy(idc)
+            .agg((-F.sum(F.col("__n") * F.col("__lp")) / F.sum("__n")).alias("__xent"))
+            .filter(F.col("__xent") <= max_xent)
+            .select(idc)
+        )
+        return df.join(keep, idc, "semi")
+
+    return _with_blank_rows(df, col, gate)
 
 
 def _step_decontaminate(df: DataFrame, p: dict) -> DataFrame:
@@ -295,12 +282,12 @@ def _step_decontaminate(df: DataFrame, p: dict) -> DataFrame:
     bench = _load_source(df.sparkSession, p["benchmark"])
     bcol = p.get("benchmark_column", col)
     bgrams = (
-        bench.select(F.split(F.lower(F.col(bcol)), r"\s+").alias("__ts"))
+        bench.select(tokens_col(bcol).alias("__ts"))
         .select(F.explode(shingles_from_tokens(F.col("__ts"), k=k)).alias("gram"))
         .distinct()
     )
     hit_ids = (
-        df.select(idc, F.split(F.lower(F.col(col)), r"\s+").alias("__ts"))
+        df.select(idc, tokens_col(col).alias("__ts"))
         .select(idc, F.explode(shingles_from_tokens(F.col("__ts"), k=k)).alias("gram"))
         .join(F.broadcast(bgrams), "gram", "semi")
         .select(idc)
@@ -310,65 +297,28 @@ def _step_decontaminate(df: DataFrame, p: dict) -> DataFrame:
 
 
 def _step_paragraph_dedup(df: DataFrame, p: dict) -> DataFrame:
-    """CCNet-style cross-corpus paragraph dedup over ``column``: cut
-    rows into ``seg``-token segments, keep only the corpus-wide first
-    occurrence of each segment's content (min (id, pos)), and rewrite
-    the column to the surviving text. Rows left with no surviving
-    segments are dropped (fully-boilerplate documents); rows whose text
-    is NULL or blank carry no segments to deduplicate and pass through
-    UNCHANGED (they are unioned back, not silently dropped). Same plan
-    as ``llm.curate.paragraph_dedup_corpus``: one explode, one shuffle
-    on segment content, one per-id aggregate, joined back on the id."""
-    from generic_data_ingestor_framework_spark.llm.curate import SEG_TOKENS
+    """CCNet-style cross-corpus paragraph dedup over ``column``
+    (``llm.curate.paragraph_segments``, the plan of
+    ``paragraph_dedup_corpus``): cut rows into ``seg``-token segments,
+    keep only the corpus-wide first occurrence of each segment's
+    content (min (id, pos)), and rewrite the column to the surviving
+    text. Rows left with no surviving segments are dropped
+    (fully-boilerplate documents); NULL or blank rows pass through
+    unchanged."""
+    from generic_data_ingestor_framework_spark.llm.curate import (
+        SEG_TOKENS,
+        paragraph_segments,
+    )
 
     col = p.get("column", "text")
     idc = p["id"]
     seg_n = int(p.get("seg", SEG_TOKENS))
-    is_blank = F.col(col).isNull() | (F.trim(F.col(col)) == "")
-    blank_rows = df.filter(is_blank)
-    df = df.filter(~is_blank)
-    ts = F.split(F.lower(F.col(col)), r"\s+")
-    # greatest(…, 1): defensive floor so a pathological zero/negative
-    # size can never feed sequence() a descending range of phantom
-    # positions (blank rows are already routed around this path).
-    n_segs = F.greatest(
-        F.ceil(F.size("__ts") / F.lit(float(seg_n))).cast("int"), F.lit(1)
-    )
-    segs = (
-        df.select(idc, ts.alias("__ts"))
-        .withColumn("__pos", F.explode(F.sequence(F.lit(0), n_segs - 1)))
-        .select(
-            idc,
-            "__pos",
-            F.array_join(F.slice("__ts", F.col("__pos") * seg_n + 1, seg_n), " ").alias(
-                "__seg"
-            ),
-        )
-    )
-    w = W.partitionBy("__seg").orderBy(idc, "__pos")
-    kept = (
-        segs.withColumn("__keep", F.row_number().over(w) == 1)
-        .groupBy(idc)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.when(F.col("__keep"), F.struct("__pos", "__seg")))
-                    ),
-                    lambda s: s["__seg"],
-                ),
-                " ",
-            ).alias("__kept")
-        )
-    )
-    deduped = (
-        df.drop(col)
-        .join(kept, idc)
-        .withColumnRenamed("__kept", col)
-        .filter(F.col(col) != "")
-        .select(*df.columns)
-    )
-    return deduped.unionByName(blank_rows.select(*df.columns))
+
+    def dedup(df: DataFrame) -> DataFrame:
+        kept = paragraph_segments(df, idc, tokens_col(col), seg_n)
+        return _rewrite(df, idc, col, kept.select(idc, "kept_text"))
+
+    return _with_blank_rows(df, col, dedup)
 
 
 def _step_bpe_tokenize(df: DataFrame, p: dict) -> DataFrame:
@@ -377,27 +327,20 @@ def _step_bpe_tokenize(df: DataFrame, p: dict) -> DataFrame:
     "directory", ...}``) or from the flowing frame itself. Adds the
     ``bpe_tokens`` subword array column (pure projection — the learned
     merge table is driver-held, ``n_merges`` rows). The scale split is
-    the same as ``llm.tokenize``: merge learning runs over a vocab-
-    sized word-frequency relation, application is map-only."""
+    the same as ``llm.tokenize``: merge learning runs over the members'
+    vocab-sized word-frequency relation (``word_freqs``), application
+    is map-only."""
     from generic_data_ingestor_framework_spark.llm.tokenize import (
         BPE_MERGES,
-        _init_syms,
         encode_with_merges,
         train_from_words_batched,
+        word_freqs,
     )
 
     col = p.get("column", "text")
     n_merges = int(p.get("n_merges", BPE_MERGES))
     src = _load_source(df.sparkSession, p["corpus"]) if "corpus" in p else df
-    words = (
-        src.select(F.explode(F.split(F.lower(F.col(col)), r"\s+")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("s", _init_syms(F.col("word")))
-        .localCheckpoint()
-    )
-    merges = train_from_words_batched(words, n_merges, batch_m=1)
+    merges = train_from_words_batched(word_freqs(src, col).localCheckpoint(), n_merges, batch_m=1)
     return encode_with_merges(df, merges, column=col)
 
 
@@ -407,6 +350,17 @@ def _step_bpe_tokenize(df: DataFrame, p: dict) -> DataFrame:
 # temporaries, not just the span-core outputs).
 _SPAN_RESERVED = frozenset({"pos", "gram", "cov", "__ts", "__clean"})
 _BUDGET_RESERVED = frozenset({"band", "n_tok", "cum_tokens", "sel_rank", "__ts"})
+
+
+def _rewrite(df: DataFrame, idc: str, col: str, new_text: DataFrame) -> DataFrame:
+    """``df`` with ``col`` replaced by the text of ``new_text``'s
+    ``(id, text)`` rows, joined on the id; rows left empty are dropped."""
+    return (
+        df.drop(col)
+        .join(new_text.toDF(idc, col), idc)
+        .filter(F.col(col) != "")
+        .select(*df.columns)
+    )
 
 
 def _step_remove_dup_spans(df: DataFrame, p: dict) -> DataFrame:
@@ -437,70 +391,45 @@ def _step_remove_dup_spans(df: DataFrame, p: dict) -> DataFrame:
         raise ValueError(f"k must be >= 1 (k=0 makes every gram empty-equal); got {k}")
     if min_occ < 2:
         raise ValueError(f"min_occ must be >= 2 (1 would cut every token); got {min_occ}")
-    is_blank = F.col(col).isNull() | (F.trim(F.col(col)) == "")
-    blank_rows = df.filter(is_blank)
-    df = df.filter(~is_blank)
-    base = df.select(idc, F.split(F.lower(F.col(col)), r"\s+").alias("__ts"))
-    covered = span_coverage(pos_grams_from_tokens(base, idc, "__ts", k), idc, k, min_occ)
-    _joined, kept = cut_covered_tokens(base, covered, idc, "__ts")
-    cleaned = _joined.select(idc, F.array_join(kept, " ").alias("__clean"))
-    out = (
-        df.drop(col)
-        .join(cleaned, idc)
-        .withColumnRenamed("__clean", col)
-        .filter(F.col(col) != "")
-        .select(*df.columns)
-    )
-    return out.unionByName(blank_rows.select(*df.columns))
+
+    def cut(df: DataFrame) -> DataFrame:
+        base = df.select(idc, tokens_col(col).alias("__ts"))
+        covered = span_coverage(pos_grams_from_tokens(base, idc, "__ts", k), idc, k, min_occ)
+        joined, kept = cut_covered_tokens(base, covered, idc, "__ts")
+        return _rewrite(df, idc, col, joined.select(idc, F.array_join(kept, " ").alias("__clean")))
+
+    return _with_blank_rows(df, col, cut)
 
 
 def _step_select_budget(df: DataFrame, p: dict) -> DataFrame:
     """Token-budget selection: keep the highest-quality rows (shared
     ``_quality_expr`` heuristic over ``column``) until ``frac`` of the
-    dataset's tokens are spent. The banded-cumsum selection core is the
-    SAME code as ``llm.curate.corpus_select_budget``
-    (``banded_budget_select``) — per-band totals are a bounded
-    driver-sized relation (quality is 6-dp, ≤1e6+1 bands at ANY data
-    size), so no global sort exists; rows keep their original
-    columns."""
-    from generic_data_ingestor_framework_spark.llm.curate import banded_budget_select
-    from generic_data_ingestor_framework_spark.llm.textstats import _quality_expr
+    dataset's tokens are spent, by the plan of
+    ``llm.curate.corpus_select_budget`` (``quality_bands`` /
+    ``band_totals`` / ``banded_budget_select``) — per-band totals are a
+    bounded driver-sized relation, so no global sort exists; rows keep
+    their original columns. NULL/blank rows cannot be quality-scored
+    and pass through unchanged."""
+    from generic_data_ingestor_framework_spark.llm.curate import (
+        band_totals,
+        banded_budget_select,
+        quality_bands,
+    )
 
     col = p.get("column", "text")
     idc = p["id"]
     frac = float(p.get("frac", 0.4))
     if not 0.0 < frac <= 1.0:
         raise ValueError(f"frac must be in (0, 1]; got {frac}")
-    num, den = frac.as_integer_ratio()
-    # NULL/blank rows can't be quality-scored: pass them through
-    # UNCHANGED (the same contract as paragraph_dedup/remove_dup_spans;
-    # size(NULL) would otherwise poison the token total as -1 or NULL)
-    is_blank = F.col(col).isNull() | (F.trim(F.col(col)) == "")
-    blank_rows = df.filter(is_blank)
-    df = df.filter(~is_blank)
-    # materialize the token array BEFORE the quality lambda: Catalyst
-    # re-inlines aliased expressions into HOF lambda bodies, re-running
-    # the regex split per element otherwise (see dedup.py:66-70)
     if idc in _BUDGET_RESERVED:
         raise ValueError(f"id column {idc!r} collides with selection internals")
-    base = df.select(idc, F.split(F.lower(F.col(col)), r"\s+").alias("__ts"))
-    banded = base.select(
-        idc,
-        F.size("__ts").alias("n_tok"),
-        F.round(F.round(_quality_expr(F.col("__ts")), 6) * 1e6)
-        .cast("bigint")
-        .alias("band"),
-    )
-    stats = [
-        (int(r["band"]), int(r["t"]), int(r["c"]))
-        for r in banded.groupBy("band")
-        .agg(F.sum("n_tok").alias("t"), F.count(F.lit(1)).alias("c"))
-        .collect()
-    ]
-    total = sum(t for _, t, _ in stats)
-    budget = total * num // den
-    sel_ids = banded_budget_select(banded, idc, stats, budget).select(idc)
-    return df.join(sel_ids, idc, "semi").unionByName(blank_rows)
+
+    def select(df: DataFrame) -> DataFrame:
+        banded = quality_bands(df, idc, tokens_col(col))
+        sel = banded_budget_select(banded, idc, band_totals(banded), *frac.as_integer_ratio())
+        return df.join(sel.select(idc), idc, "semi")
+
+    return _with_blank_rows(df, col, select)
 
 
 def _step_dedup_near_index(df: DataFrame, p: dict) -> DataFrame:

@@ -527,10 +527,10 @@ def json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def normalize_text_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 TEXT-parity projection: every column cast to string, NULL→''
     (`src/processors/json_processor.py:73-104` semantics)."""
+    from generic_data_ingestor_framework_spark import normalize
+
     d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        [F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c) for c in ["doc_id", "text", "lang", "source"]]
-    )
+    return normalize.normalize_text_parity(d, ["doc_id", "text", "lang", "source"])
 
 
 def lineage_source_file(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,9 +17,7 @@ as a continuous stream. This module provides:
 - maintainers (``stream_upsert``, ``stream_ann_index_*``,
   ``stream_scd2_apply``) that drain a directory of change files
   through ``_run_foreach_batch`` and apply each micro-batch with the
-  same table or index call the pipeline step uses;
-- ``stream_ingest_json``, a directory ingest to a parquet file sink
-  whose log gives exactly-once output.
+  same table or index call the pipeline step uses.
 
 Scale notes (100 TB): file-source streaming scales by listing
 incrementally (maxFilesPerTrigger) instead of materializing the full
@@ -1201,33 +1199,6 @@ def stream_stateful_user_counts(spark: SparkSession, sf_dir: str):
         .filter(F.col("rn") == 1)
         .select("user_id", "n_events", "total_value")
     )
-
-
-def stream_ingest_json(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    checkpoint_dir: str,
-    schema: T.StructType,
-) -> None:
-    """Directory-ingest as a stream: the Spark-native replacement for
-    the reference's scan→parse→insert loop. AvailableNow drains the
-    directory once; leaving the query running makes it continuous."""
-    q = (
-        spark.readStream.schema(schema)
-        .option("multiLine", "false")
-        .json(src_dir)
-        .withColumn(
-            "_source_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
-        .writeStream.format("parquet")
-        .option("path", dst_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_to_completion(q, "stream_ingest_json")
 
 
 def stream_upsert(

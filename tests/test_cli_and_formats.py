@@ -177,6 +177,43 @@ sink.create_table(spark, df, "t")
     assert "Traceback" not in out.stderr
 
 
+def test_cli_reingest_of_a_changed_directory(spark, tmp_path, capsys):
+    """One session runs the CLI over a directory, then again after a
+    file is added, one changes and one is deleted. The second run
+    reports the directory as it now is, and appends its rows to the
+    table the first run wrote: nothing the first run listed or memoized
+    reaches the second."""
+    from generic_data_ingestor_framework_spark.__main__ import main
+
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "a.json").write_text(json.dumps([{"id": "a1", "v": 1}, {"id": "a2", "v": 2}]))
+    (data / "b.json").write_text(json.dumps([{"id": "b1", "v": 3}]))
+    (data / "c.jsonl").write_text('{"id": "c1", "v": 4}\n')
+
+    def cli() -> list[str]:
+        assert main([str(data), "--table", "t_cli_reingest"]) == 0
+        return [ln for ln in capsys.readouterr().out.splitlines() if not ln.startswith("Elapsed")]
+
+    assert cli() == [
+        "Files processed:  3", "Files failed:     0", "Total records:    4",
+        "Dropped non-dict: 0", "Wrote 4 rows to table 't_cli_reingest'.",
+    ]
+    (data / "d.json").write_text(json.dumps({"id": "d1", "v": 5}))
+    (data / "b.json").write_text(json.dumps([{"id": "b1", "v": 30}, {"id": "b2", "v": 31}]))
+    (data / "c.jsonl").unlink()
+    assert cli() == [
+        "Files processed:  3", "Files failed:     0", "Total records:    5",
+        "Dropped non-dict: 0", "Wrote 5 rows to table 't_cli_reingest'.",
+    ]
+    rows = spark.table("t_cli_reingest").select("id", "v", "_source_file").collect()
+    first = [("a1", "1", "a.json"), ("a2", "2", "a.json"), ("b1", "3", "b.json"),
+             ("c1", "4", "c.jsonl")]
+    second = [("a1", "1", "a.json"), ("a2", "2", "a.json"), ("b1", "30", "b.json"),
+              ("b2", "31", "b.json"), ("d1", "5", "d.json")]
+    assert sorted(map(tuple, rows)) == sorted(first + second)
+
+
 def test_cli_missing_dir_exit_code(tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "generic_data_ingestor_framework_spark", str(tmp_path / "nope")],

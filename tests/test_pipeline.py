@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import sqlite3
 
+import pytest
+
 from generic_data_ingestor_framework_spark.pipeline import run_pipeline
 
 from conftest import SF_SMALL
@@ -885,3 +887,74 @@ def test_pipeline_auto_compact_steps(spark, tmp_path):
     bspec["steps"][-1]["max_delta_ratio"] = 0.01
     run_pipeline(spark, bspec)
     assert BAND_INDEX.pressure_stats(spark, broot)["delta_ids"] == 0
+
+
+def test_quality_filter_keeps_what_the_gopher_member_passes(spark, tmp_path):
+    """10,000 distinct 12-character words plus one 13-character word:
+    the mean word length is 12 + 1/10001, which the member floors to
+    12.0 (4 dp) and passes. The step runs the member's rule, so it
+    keeps the row too. A row with no words has no mean: it fails the
+    gate, and fails neither query."""
+    from generic_data_ingestor_framework_spark.llm.curate import gopher_quality_flags
+    from generic_data_ingestor_framework_spark.pipeline import STEP_REGISTRY
+
+    text = " ".join([f"w{i:011d}" for i in range(10000)] + ["x" * 13])
+    df = spark.createDataFrame(
+        [(1, text, "en"), (2, "", "en"), (3, "   ", "en")],
+        "doc_id bigint, text string, lang string",
+    )
+    df.write.parquet(f"{tmp_path}/documents.parquet")
+    member = gopher_quality_flags(spark, str(tmp_path)).orderBy("doc_id").collect()
+    assert [(r["n_words"], r["mean_word_len"], r["passes_gopher"]) for r in member] == [
+        (10001, 12.0, True), (0, None, False), (0, None, False)
+    ]
+    kept = STEP_REGISTRY["quality_filter"](df, {"op": "quality_filter", "column": "text"})
+    assert [r["doc_id"] for r in kept.collect()] == [1]
+
+
+_EMPTY_MD5 = "d41d8cd98f00b204e9800998ecf8427e"
+
+
+def _member_keeps(spark, op: str, doc_ids: set) -> dict:
+    """The rows ``op``'s member says the step keeps over SF_SMALL's
+    ``documents``: doc_id → md5 of the rewritten text, or None for a
+    step that only filters."""
+    from generic_data_ingestor_framework_spark.llm import curate, sampling, textstats
+
+    if op == "paragraph_dedup":
+        rows = curate.paragraph_dedup_corpus(spark, SF_SMALL).collect()
+        return {r["doc_id"]: r["kept_md5"] for r in rows if r["kept_md5"] != _EMPTY_MD5}
+    if op == "redact_pii":
+        return {r["doc_id"]: r["redacted_md5"] for r in sampling.redact_pii(spark, SF_SMALL).collect()}
+    if op == "quality_filter":
+        rows = curate.gopher_quality_flags(spark, SF_SMALL).collect()
+        return {r["doc_id"]: None for r in rows if r["passes_gopher"]}
+    # repetition_filter: rows without bigrams are absent from the member and pass
+    dropped = {
+        r["doc_id"]
+        for r in textstats.doc_topgram_mass(spark, SF_SMALL).collect()
+        if r["top_count"] / r["n_bigrams"] > 0.2
+    }
+    return {i: None for i in doc_ids - dropped}
+
+
+@pytest.mark.parametrize(
+    "op", ["paragraph_dedup", "redact_pii", "quality_filter", "repetition_filter"]
+)
+def test_curation_step_keeps_its_members_rows(spark, op):
+    """Each step runs its member's operator: over the same documents it
+    keeps exactly the rows the member keeps, with the same text."""
+    from pyspark.sql import functions as F
+
+    from generic_data_ingestor_framework_spark.pipeline import STEP_REGISTRY
+    from generic_data_ingestor_framework_spark.relational import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    out = STEP_REGISTRY[op](docs, {"op": op, "id": "doc_id", "column": "text"})
+    rewrites = op in ("paragraph_dedup", "redact_pii")
+    got = {
+        r["doc_id"]: r["m"] if rewrites else None
+        for r in out.select("doc_id", F.md5("text").alias("m")).collect()
+    }
+    want = _member_keeps(spark, op, {r["doc_id"] for r in docs.select("doc_id").collect()})
+    assert got == want and got

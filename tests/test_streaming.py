@@ -9,45 +9,10 @@ from pyspark.sql import types as T
 
 from generic_data_ingestor_framework_spark.streaming import (
     session_window_10m,
-    stream_ingest_json,
     window_tumbling_hourly,
 )
 
 from conftest import SF_SMALL as SF
-
-
-def test_stream_ingest_json_drains_directory(spark, tmp_path):
-    src = tmp_path / "src"
-    dst = tmp_path / "dst"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-    rows = [{"id": i, "name": f"n{i}"} for i in range(25)]
-    (src / "a.jsonl").write_text("\n".join(json.dumps(r) for r in rows[:10]))
-    (src / "b.jsonl").write_text("\n".join(json.dumps(r) for r in rows[10:]))
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
-    )
-    stream_ingest_json(spark, str(src), str(dst), str(ckpt), schema)
-    out = spark.read.parquet(str(dst))
-    assert out.count() == 25
-    assert set(out.columns) == {"id", "name", "_source_file"}
-    srcs = {r["_source_file"] for r in out.select("_source_file").distinct().collect()}
-    assert srcs == {"a.jsonl", "b.jsonl"}
-
-
-def test_stream_ingest_is_incremental(spark, tmp_path):
-    """Second availableNow run must only pick up NEW files (checkpoint)."""
-    src = tmp_path / "src2"
-    dst = tmp_path / "dst2"
-    ckpt = tmp_path / "ckpt2"
-    src.mkdir()
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    (src / "one.jsonl").write_text('{"id": 1}')
-    stream_ingest_json(spark, str(src), str(dst), str(ckpt), schema)
-    (src / "two.jsonl").write_text('{"id": 2}')
-    stream_ingest_json(spark, str(src), str(dst), str(ckpt), schema)
-    out = spark.read.parquet(str(dst))
-    assert sorted(r["id"] for r in out.collect()) == [1, 2]
 
 
 def test_tumbling_windows_cover_all_events(spark):
