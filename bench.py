@@ -194,6 +194,7 @@ INDEX_BUILDS = [
 MEMO_EVICT: dict[str, tuple] = {
     "ann_retrain_decision": ("retrain_gauge_rows",),
     "scd2_customer_multigen": ("scd2_hist2",),
+    "scd2_asof_lookup": ("scd2_upd2_keys",),
 }
 
 REGRESSION_RATIO = 1.3

@@ -342,7 +342,7 @@ def quality_bands(df: DataFrame, id_col: str, toks) -> DataFrame:
     return df.select(id_col, toks.alias("__ts")).select(
         id_col,
         F.size("__ts").alias("n_tok"),
-        F.round(F.round(_quality_expr(F.col("__ts")), 6) * 1e6).cast("bigint").alias("band"),
+        F.round(F.round(_quality_expr("__ts"), 6) * 1e6).cast("bigint").alias("band"),
     )
 
 
@@ -446,7 +446,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ca = dedup_cluster_assign(spark, sf_dir).select("doc_id", "cluster_id")
     q = _docs_with_tokens(spark, sf_dir).select(
-        "doc_id", F.round(_quality_expr(F.col("ts")), 6).alias("quality")
+        "doc_id", F.round(_quality_expr("ts"), 6).alias("quality")
     )
     j = ca.join(q, "doc_id")
     w = W.partitionBy("cluster_id").orderBy(F.desc("quality"), "doc_id")

@@ -78,11 +78,30 @@ def portable_hash32(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
+def hash32_sql(c: str) -> str:
+    """``portable_hash32`` of the Spark SQL expression ``c``, as Spark SQL."""
+    return f"CAST(conv(substring(md5({c}), 1, 8), 16, 10) AS BIGINT)"
+
+
 _HASH_SQL = "CAST(concat('0x', substr(md5({c}), 1, 8)) AS BIGINT)"
 
 
+def tokens_sql(text: str = "text") -> str:
+    """The lowercased whitespace tokens of the Spark SQL expression
+    ``text``: the one spelling of the tokenizer, spliced into member
+    texts and wrapped by ``tokens_col``."""
+    return rf"split(lower({text}), '\\s+')"
+
+
+def ident_sql(name: str) -> str:
+    """The column ``name`` as Spark SQL, resolved as ``F.col(name)``
+    resolves it."""
+    return name if "`" in name else ".".join(f"`{p}`" for p in name.split("."))
+
+
 def tokens_col(text_col="text"):
-    return F.split(F.lower(F.col(text_col)), r"\s+")
+    """``tokens_sql`` over the column ``text_col``."""
+    return F.expr(tokens_sql(ident_sql(text_col)))
 
 
 # Word-shingle width for the MinHash/band pipeline. Three call sites

@@ -14,8 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32, tokens_col
-from generic_data_ingestor_framework_spark.llm.textstats import STOPWORDS
+from generic_data_ingestor_framework_spark.llm.dedup import (
+    ident_sql,
+    portable_hash32,
+    tokens_col,
+    tokens_sql,
+)
+from generic_data_ingestor_framework_spark.llm.textstats import _STOP_IN, n_stop_sql
 from generic_data_ingestor_framework_spark.relational import load_table
 from generic_data_ingestor_framework_spark.session import local_relation
 
@@ -151,10 +156,9 @@ def quality_weight_bp(text_col: str):
     ``⌊min(n,100)·50·(n+n_stop)/n⌋ ∈ [0,10000]`` (algebraically
     ``quality·10⁴``). One definition feeds the sampling member AND the
     pipeline ``weighted_sample`` step, so they cannot drift."""
-    toks = tokens_col(text_col)
-    n = F.size(toks).cast("long")
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))).cast("long")
-    return F.floor(F.least(n, F.lit(100)) * 50 * (n + n_stop) / n).cast("long")
+    toks = tokens_sql(ident_sql(text_col))
+    n, n_stop = f"CAST(size({toks}) AS BIGINT)", f"CAST({n_stop_sql(toks)} AS BIGINT)"
+    return F.expr(f"CAST(floor(least({n}, 100) * 50 * ({n} + {n_stop}) / {n}) AS BIGINT)")
 
 
 def salted_hash(id_col: str, salt: str):
@@ -673,7 +677,6 @@ QUERIES = {
 }
 
 _TOKS_SQL = "string_split_regex(lower(text), '\\s+')"
-_STOP_IN = "','".join(STOPWORDS)
 
 ORACLES = {
     # The RR oracle replays the mechanism end-to-end: same md5-derived

@@ -1,8 +1,18 @@
 """Text analysis operators over the ``documents`` table.
 
 Language-ID (character-class + stopword heuristic), quality scoring,
-token counting, document fingerprinting, corpus n-gram frequency —
-all pure built-in column expressions (JVM-side, codegen'd; no UDFs).
+token counting, document fingerprinting, corpus n-gram frequency,
+retrieval scorers and mixture weights. A member is one Spark SQL text
+(``relational._sql``) over ``documents`` and, where it shares work with
+other members, over memoized relations passed to ``_sql`` as named
+frames; memoized scalars are bound as named parameters. The
+tokenizer (``dedup.tokens_sql``), the stopword count (``n_stop_sql``),
+the quality formula (``quality_sql``) and the bigram list
+(``bigrams_sql``) are each one Spark SQL fragment that the texts splice
+in and the Column helpers wrap with ``F.expr``. Built-in expressions
+only (JVM-side, codegen'd; no UDFs). ``doc_topgram_mass`` keeps the
+hand plan of ``top_bigrams``, the operator it shares with the
+pipeline's ``repetition_filter`` step.
 
 Scale notes (100 TB): every query is a narrow projection or a single
 hash-aggregate; the corpus bigram query is explode → partial-count →
@@ -14,51 +24,72 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from generic_data_ingestor_framework_spark.llm.dedup import tokens_col
-from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.llm.dedup import (
+    hash32_sql,
+    tokens_col,
+    tokens_sql,
+)
+from generic_data_ingestor_framework_spark.relational import _sql, load_table
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in"]
+_STOP_IN = "','".join(STOPWORDS)
+
+
+def n_stop_sql(toks: str) -> str:
+    """Spark SQL: the number of stopwords in the token array ``toks``."""
+    return f"size(filter({toks}, t -> t IN ('{_STOP_IN}')))"
+
+
+def quality_sql(toks: str) -> str:
+    """The shared heuristic-quality formula over the token array
+    ``toks``, as Spark SQL — length saturation × stopword-density
+    prior: min(1, n_tokens/100) * (0.5 + 0.5 * stopword_ratio). One
+    definition so ``quality_score``, ``source_reputation`` and the
+    curation bands can never drift."""
+    n, n_stop = f"size({toks})", n_stop_sql(toks)
+    return f"least(1.0D, {n} / 100.0D) * ({n_stop} / {n} * 0.5D + 0.5D)"
+
+
+def _quality_expr(toks: str):
+    """``quality_sql`` as a Column, over the token array column ``toks``."""
+    return F.expr(quality_sql(toks))
+
+
+def bigrams_sql(toks: str) -> str:
+    """Spark SQL: the bigrams (``'w1 w2'``) of the token array ``toks``,
+    one per position; empty below two tokens."""
+    return (
+        f"CASE WHEN size({toks}) >= 2 THEN transform(sequence(0, size({toks}) - 2),"
+        f" i -> array_join(slice({toks}, i + 1, 2), ' '))"
+        " ELSE CAST(array() AS array<string>) END"
+    )
 
 
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish word-piece count
     (alnum runs) + char length."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col()
-    return d.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.split(F.lower(F.col("text")), r"[^a-z0-9]+")).alias("n_pieces"),
-        F.length("text").alias("n_chars_calc"),
-        F.size(F.array_distinct(toks)).alias("n_unique_tokens"),
-    )
-
-
-def _quality_expr(toks):
-    """The shared heuristic-quality formula — length saturation ×
-    stopword-density prior: min(1, n_tokens/100) * (0.5 + 0.5 *
-    stopword_ratio). One definition so ``quality_score`` and
-    ``source_reputation`` can never drift."""
-    n = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    return F.least(F.lit(1.0), n / F.lit(100.0)) * (0.5 + 0.5 * (n_stop / n))
+    toks = tokens_sql()
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, size({toks}) AS n_tokens,
+               size(split(lower(text), '[^a-z0-9]+')) AS n_pieces,
+               length(text) AS n_chars_calc,
+               size(array_distinct({toks})) AS n_unique_tokens
+        FROM {{documents}}
+    """)
 
 
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality: length saturation × stopword-density prior
-    (``_quality_expr``), computed arithmetically so any engine
+    (``quality_sql``), computed arithmetically so any engine
     reproduces it."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col()
-    n = F.size(toks)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    return d.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        n_stop.alias("n_stopwords"),
-        F.round(n_stop / n, 6).alias("stopword_ratio"),
-        F.round(_quality_expr(toks), 6).alias("quality"),
-    )
+    toks = tokens_sql()
+    n, n_stop = f"size({toks})", n_stop_sql(toks)
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, {n} AS n_tokens, {n_stop} AS n_stopwords,
+               round({n_stop} / {n}, 6) AS stopword_ratio,
+               round({quality_sql(toks)}, 6) AS quality
+        FROM {{documents}}
+    """)
 
 
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,55 +97,42 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Char-class probes (CJK / Cyrillic / Arabic unicode ranges) decide
     script; Latin text falls back to an English-stopword-density test."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens_col()
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))) / F.size(toks)
-    guess = (
-        F.when(F.col("text").rlike("[一-鿿]"), "zh")
-        .when(F.col("text").rlike("[Ѐ-ӿ]"), "ru")
-        .when(F.col("text").rlike("[؀-ۿ]"), "ar")
-        .when(stop_ratio >= 0.05, "en")
-        .otherwise("unknown")
-    )
-    return d.select(
-        "doc_id", "lang", guess.alias("lang_guess"),
-        (guess == F.col("lang")).alias("agrees_with_label"),
-    )
+    toks = tokens_sql()
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, lang, lang_guess, lang_guess = lang AS agrees_with_label
+        FROM (
+          SELECT doc_id, lang,
+                 CASE WHEN text RLIKE '[一-鿿]' THEN 'zh'
+                      WHEN text RLIKE '[Ѐ-ӿ]' THEN 'ru'
+                      WHEN text RLIKE '[؀-ۿ]' THEN 'ar'
+                      WHEN {n_stop_sql(toks)} / size({toks}) >= 0.05D THEN 'en'
+                      ELSE 'unknown' END AS lang_guess
+          FROM {{documents}})
+    """)
 
 
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive content fingerprint: md5 of the sorted distinct
     token set (robust to shuffling words, cf. rolling-hash dedup)."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = F.array_sort(F.array_distinct(tokens_col()))
-    return d.select(
-        "doc_id",
-        F.md5(F.array_join(toks, " ")).alias("fingerprint"),
-        F.size(toks).alias("n_unique_tokens"),
-    )
+    toks = f"array_sort(array_distinct({tokens_sql()}))"
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, md5(array_join({toks}, ' ')) AS fingerprint,
+               size({toks}) AS n_unique_tokens
+        FROM {{documents}}
+    """)
 
 
 def corpus_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level top-20 word bigrams (explode → count → top-k)."""
-    d = load_table(spark, sf_dir, "documents")
-    toks_df = d.select(tokens_col().alias("toks"))
-    # note: bigrams here are NOT de-duplicated per doc in the oracle, so
-    # use the raw gram transform rather than the distinct shingle helper
-    n = F.size(F.col("toks"))
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.array_join(F.slice(F.col("toks"), i + 1, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        toks_df.select(F.explode(bigrams).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "bigram")
-        .limit(20)
-    )
+    """Corpus-level top-20 word bigrams (explode → count → top-k).
+    Bigrams are NOT de-duplicated per doc (the oracle counts every
+    position), so this is the raw gram list, not the distinct shingle
+    helper."""
+    return _sql(spark, sf_dir, f"""
+        SELECT bigram, count(1) AS n
+        FROM (SELECT explode({bigrams_sql("toks")}) AS bigram
+              FROM (SELECT {tokens_sql()} AS toks FROM {{documents}}))
+        GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20
+    """)
 
 
 RK_BASE = 257
@@ -127,18 +145,14 @@ def doc_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash complement to ``doc_fingerprint``'s order-insensitive token
     hash: reordered text changes this one. Pure integer arithmetic in
     a higher-order fold, so both engines produce identical values."""
-    d = load_table(spark, sf_dir, "documents")
-    chars = F.split(F.col("text"), "")
-    rk = F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * RK_BASE + F.ascii(ch)) % RK_MOD,
-    )
-    return d.select(
-        "doc_id",
-        rk.alias("rolling_hash"),
-        F.length("text").alias("n_chars_hashed"),
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id,
+               aggregate(split(text, ''), CAST(0 AS BIGINT),
+                         (acc, ch) -> (acc * {RK_BASE} + ascii(ch)) % {RK_MOD})
+                 AS rolling_hash,
+               length(text) AS n_chars_hashed
+        FROM {{documents}}
+    """)
 
 
 def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,22 +161,30 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     base64 blobs and repeated-char spam fall outside it). Two hash
     aggregates, rounded at the edge (sum order is the only float
     nondeterminism; 4 dp absorbs it)."""
-    d = load_table(spark, sf_dir, "documents")
-    chars = d.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), "")).alias("ch")
-    ).filter(F.col("ch") != "")
-    counts = chars.groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("n"))
-    totals = counts.groupBy("doc_id").agg(F.sum("n").alias("tot"))
-    p = F.col("n") / F.col("tot")
-    return (
-        counts.join(totals, "doc_id")
-        .groupBy("doc_id")
-        .agg(
-            F.round(-F.sum(p * F.log2(p)), 4).alias("char_entropy"),
-            F.count(F.lit(1)).alias("n_distinct_chars"),
-        )
-        .orderBy("doc_id")
-    )
+    return _sql(spark, sf_dir, """
+        WITH counts AS (
+          SELECT doc_id, ch, count(1) AS n
+          FROM (SELECT doc_id, explode(split(lower(text), '')) AS ch FROM {documents})
+          WHERE ch != '' GROUP BY doc_id, ch
+        ),
+        totals AS (SELECT doc_id, sum(n) AS tot FROM counts GROUP BY doc_id)
+        SELECT doc_id, round(-sum(n / tot * log2(n / tot)), 4) AS char_entropy,
+               count(1) AS n_distinct_chars
+        FROM counts JOIN totals USING (doc_id)
+        GROUP BY doc_id ORDER BY doc_id
+    """)
+
+
+# (doc, term, tf) with each term's document frequency, and the corpus
+# size: the CTEs ``tfidf_top_terms`` and the ``tfidf_kept`` index share
+_TF_DF_SQL = f"""
+        tf AS (
+          SELECT doc_id, term, count(1) AS tf
+          FROM (SELECT doc_id, explode({tokens_sql()}) AS term FROM {{documents}})
+          WHERE term != '' GROUP BY doc_id, term
+        ),
+        tf_df AS (SELECT *, count(1) OVER (PARTITION BY term) AS df FROM tf),
+        nd AS (SELECT count(1) AS n_docs FROM {{documents}})"""
 
 
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,26 +201,19 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a re-aggregated self-join: the corpus is exploded and
     aggregated exactly once (the join formulation defeated exchange
     reuse via column pruning and scanned the corpus twice)."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(tokens_col()).alias("term")).filter(
-        F.col("term") != ""
-    )
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    w = W.partitionBy("doc_id").orderBy(F.desc("score"), "term")
-    return (
-        tf.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("term")))
-        .crossJoin(F.broadcast(nd))
-        .withColumn(
-            "score",
-            F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6),
+    return _sql(spark, sf_dir, f"""
+        WITH {_TF_DF_SQL},
+        scored AS (
+          SELECT /*+ BROADCAST(nd) */ doc_id, term, tf,
+                 round(tf * ln(n_docs / df), 6) AS score
+          FROM tf_df CROSS JOIN nd
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("doc_id", "term", "tf", "score", F.col("rn").alias("rank"))
-    )
+        SELECT doc_id, term, tf, score, rank
+        FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
+                                           ORDER BY score DESC, term) AS rank
+              FROM scored)
+        WHERE rank <= 3
+    """)
 
 
 BM25_K1 = 1.2
@@ -227,6 +242,24 @@ def _corpus_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bm25_stats(spark: SparkSession, sf_dir: str) -> dict:
+    """Corpus stats as memoized driver scalars ``{n_docs, tot_dl}``
+    (two ints — the NB/LM scalar pattern); avgdl stays as the exact
+    integer pair so dl/avgdl = dl·n_docs/tot_dl is one deterministic
+    division (a float avg would carry a summation-order ulp)."""
+    from generic_data_ingestor_framework_spark.cachemgr import shared_value
+
+    dl = _corpus_dl(spark, sf_dir)
+    sc = shared_value(
+        spark,
+        ("bm25_stats", sf_dir),
+        lambda: dl.agg(
+            F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_dl")
+        ).collect()[0].asDict(),
+    )
+    return {"n_docs": int(sc["n_docs"] or 0), "tot_dl": int(sc["tot_dl"] or 0) or 1}
+
+
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 retrieval: the first ``BM25_N_QUERIES`` documents act as
     queries (their distinct tokens are the query terms) and every
@@ -249,68 +282,35 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift a float sum across the 4-dp reporting boundary (the module's
     mixture-weight members already use this contract); ties break on
     doc_id."""
-    from pyspark.sql import Window as W
-
-    from generic_data_ingestor_framework_spark.cachemgr import shared_value
     from generic_data_ingestor_framework_spark.llm.classify import _doc_tokens
 
-    toks = _doc_tokens(spark, sf_dir).select("doc_id", "tok", "n")
-    corpus = toks.filter(F.col("doc_id") >= BM25_N_QUERIES)
-    dl = _corpus_dl(spark, sf_dir)
-    # corpus stats as memoized driver scalars (two ints — the NB/LM
-    # scalar pattern); avgdl stays as the exact integer pair (total,
-    # count) so dl/avgdl = dl·n_docs/tot_dl is one deterministic
-    # division (float avg would carry a summation-order ulp)
-    sc = shared_value(
-        spark,
-        ("bm25_stats", sf_dir),
-        lambda: dl.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_dl")
-        ).collect()[0].asDict(),
-    )
-    n_docs, tot_dl = int(sc["n_docs"] or 0), int(sc["tot_dl"] or 0) or 1
-    qterms = (
-        toks.filter(F.col("doc_id") < BM25_N_QUERIES)
-        .select(F.col("doc_id").alias("query_id"), "tok")
-    )
-    # df only matters for query terms: filter by term (doc-independent,
-    # so each surviving term's df is exact) before the tok-partition
-    # window, shrinking that shuffle from corpus-wide to query-term rows
-    dfreq = corpus.join(F.broadcast(qterms.select("tok").distinct()), "tok").withColumn(
-        "df", F.count(F.lit(1)).over(W.partitionBy("tok"))
-    )
-    scored = (
-        dfreq.join(F.broadcast(qterms), "tok")
-        .join(dl, "doc_id")
-        .withColumn(
-            "contrib_i",
-            F.round(
-                F.log(
-                    1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                )
-                * (F.col("n") * (BM25_K1 + 1.0))
-                / (
-                    F.col("n")
-                    + BM25_K1
-                    * (
-                        1.0 - BM25_B
-                        + BM25_B * F.col("dl") * F.lit(n_docs) / F.lit(tot_dl)
-                    )
-                )
-                * BM25_SCALE
-            ).cast("bigint"),
+    k1, b = f"{BM25_K1}D", f"{BM25_B}D"
+    return _sql(spark, sf_dir, f"""
+        WITH corpus AS (SELECT doc_id, tok, n FROM {{toks}} WHERE doc_id >= {BM25_N_QUERIES}),
+        q AS (SELECT doc_id AS query_id, tok FROM {{toks}} WHERE doc_id < {BM25_N_QUERIES}),
+        dfreq AS (
+          SELECT /*+ BROADCAST(qt) */ doc_id, tok, n,
+                 count(1) OVER (PARTITION BY tok) AS df
+          FROM corpus JOIN (SELECT DISTINCT tok FROM q) qt USING (tok)
+        ),
+        scored AS (
+          SELECT query_id, doc_id, round(sum(contrib_i) / {float(BM25_SCALE)}D, 4) AS bm25
+          FROM (
+            SELECT /*+ BROADCAST(q) */ query_id, doc_id,
+                   CAST(round(ln(1.0D + (:n_docs - df + 0.5D) / (df + 0.5D))
+                              * (n * {BM25_K1 + 1.0}D)
+                              / (n + {k1} * (1.0D - {b} + {b} * dl * :n_docs / :tot_dl))
+                              * {BM25_SCALE}) AS BIGINT) AS contrib_i
+            FROM dfreq JOIN q USING (tok) JOIN {{dl}} USING (doc_id))
+          GROUP BY query_id, doc_id
         )
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(F.sum("contrib_i") / F.lit(float(BM25_SCALE)), 4).alias("bm25")
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("bm25"), "doc_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_TOP_K)
-        .select("query_id", "doc_id", "bm25", "rank")
-    )
+        SELECT query_id, doc_id, bm25, rank
+        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                                           ORDER BY bm25 DESC, doc_id) AS rank
+              FROM scored)
+        WHERE rank <= {BM25_TOP_K}
+    """, _bm25_stats(spark, sf_dir), toks=_doc_tokens(spark, sf_dir),
+        dl=_corpus_dl(spark, sf_dir))
 
 
 QLM_MU = 300.0      # Dirichlet smoothing pseudo-length (Zhai & Lafferty 2001)
@@ -341,79 +341,52 @@ def retrieval_qlm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by ``QLM_SCALE`` before aggregation (the module's cross-engine
     summation-order contract); final ordering is on the integer score
     with doc_id tiebreak."""
-    from pyspark.sql import Window as W
-
-    from generic_data_ingestor_framework_spark.cachemgr import shared_persist, shared_value
+    from generic_data_ingestor_framework_spark.cachemgr import shared_persist
     from generic_data_ingestor_framework_spark.llm.classify import _doc_tokens
 
-    toks = _doc_tokens(spark, sf_dir).select("doc_id", "tok", "n")
-    corpus = toks.filter(F.col("doc_id") >= BM25_N_QUERIES)
-    dl = _corpus_dl(spark, sf_dir)
+    toks = _doc_tokens(spark, sf_dir)
     cf = shared_persist(
         spark,
         ("qlm_cf", sf_dir),
-        lambda: corpus.groupBy("tok").agg(F.sum("n").alias("cf")),
+        lambda: toks.filter(F.col("doc_id") >= BM25_N_QUERIES)
+        .groupBy("tok")
+        .agg(F.sum("n").alias("cf")),
     )
-    sc = shared_value(
-        spark,
-        ("bm25_stats", sf_dir),
-        lambda: dl.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_dl")
-        ).collect()[0].asDict(),
-    )
-    t = int(sc["tot_dl"] or 0) or 1
-    qterms = toks.filter(F.col("doc_id") < BM25_N_QUERIES).select(
-        F.col("doc_id").alias("query_id"), "tok", F.col("n").alias("qtf")
-    )
-    # query terms annotated with collection frequency; inner join drops
-    # OOV terms (ln(0) guards), broadcast-sized by construction
-    qcf = cf.join(F.broadcast(qterms), "tok")
-    qstats = qcf.groupBy("query_id").agg(
-        F.sum(
-            F.round(
-                F.col("qtf") * F.log(QLM_MU * F.col("cf") / F.lit(float(t))) * QLM_SCALE
-            ).cast("bigint")
-        ).alias("qconst_i"),
-        F.sum("qtf").alias("lq"),
-    )
-    corr = (
-        corpus.join(F.broadcast(qcf), "tok")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(
-                F.round(
-                    F.col("qtf")
-                    * F.log(
-                        1.0 + F.col("n") * F.lit(float(t)) / (QLM_MU * F.col("cf"))
-                    )
-                    * QLM_SCALE
-                ).cast("bigint")
-            ).alias("corr_i")
+    mu = f"{QLM_MU}D"
+    return _sql(spark, sf_dir, f"""
+        WITH corpus AS (SELECT doc_id, tok, n FROM {{toks}} WHERE doc_id >= {BM25_N_QUERIES}),
+        qcf AS (
+          -- query terms annotated with collection frequency; the inner
+          -- join drops OOV terms (ln(0) guards), broadcast-sized
+          SELECT /*+ BROADCAST(q) */ tok, cf, query_id, qtf
+          FROM {{cf}} JOIN (SELECT doc_id AS query_id, tok, n AS qtf FROM {{toks}}
+                            WHERE doc_id < {BM25_N_QUERIES}) q USING (tok)
+        ),
+        qstats AS (
+          SELECT query_id,
+                 sum(CAST(round(qtf * ln({mu} * cf / :t) * {QLM_SCALE}) AS BIGINT)) AS qconst_i,
+                 sum(qtf) AS lq
+          FROM qcf GROUP BY query_id
+        ),
+        corr AS (
+          SELECT /*+ BROADCAST(qcf) */ query_id, doc_id,
+                 sum(CAST(round(qtf * ln(1.0D + n * :t / ({mu} * cf)) * {QLM_SCALE}) AS BIGINT))
+                   AS corr_i
+          FROM corpus JOIN qcf USING (tok) GROUP BY query_id, doc_id
+        ),
+        scored AS (
+          SELECT /*+ BROADCAST(qstats) */ query_id, doc_id,
+                 qconst_i - lq * CAST(round(ln(dl + {mu}) * {QLM_SCALE}) AS BIGINT) + corr_i
+                   AS score_i
+          FROM corr JOIN {{dl}} USING (doc_id) JOIN qstats USING (query_id)
         )
-    )
-    dlp_i = F.round(F.log(F.col("dl") + QLM_MU) * QLM_SCALE).cast("bigint")
-    scored = (
-        corr.join(dl, "doc_id")
-        .join(F.broadcast(qstats), "query_id")
-        .select(
-            "query_id",
-            "doc_id",
-            (F.col("qconst_i") - F.col("lq") * dlp_i + F.col("corr_i")).alias(
-                "score_i"
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("score_i"), "doc_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_TOP_K)
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(F.col("score_i") / F.lit(float(QLM_SCALE)), 4).alias("qlm"),
-            "rank",
-        )
-    )
+        SELECT query_id, doc_id, round(score_i / {float(QLM_SCALE)}D, 4) AS qlm, rank
+        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                                           ORDER BY score_i DESC, doc_id) AS rank
+              FROM scored)
+        WHERE rank <= {BM25_TOP_K}
+    """, {"t": float(_bm25_stats(spark, sf_dir)["tot_dl"])}, toks=toks, cf=cf,
+        dl=_corpus_dl(spark, sf_dir))
 
 
 def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -432,11 +405,8 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: contributions are exact integer micro-units via
     integer division (``RRF_SCALE DIV (k + rank)``), so the fused
     ordering is integer-exact in both engines; ties break on doc_id."""
-    from pyspark.sql import Window as W
-
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    contrib = F.expr(f"{QLM_SCALE} DIV ({RRF_RANK_K} + rank)").cast("bigint")
     bm = shared_persist(
         spark,
         ("bm25_ranklist", sf_dir),
@@ -447,24 +417,22 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("qlm_ranklist", sf_dir),
         lambda: retrieval_qlm_topk(spark, sf_dir).select("query_id", "doc_id", "rank"),
     )
-    fused = (
-        bm.unionByName(ql)
-        .select("query_id", "doc_id", contrib.alias("c_i"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("c_i").alias("rrf_i"), F.count(F.lit(1)).alias("n_rankers"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("rrf_i"), "doc_id")
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RRF_TOP_K)
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(F.col("rrf_i") / F.lit(float(QLM_SCALE)), 6).alias("rrf"),
-            "n_rankers",
-            "rank",
+    # one frame for both lists: their union keeps the lists' query_id
+    # partitioning, so the fusion aggregate adds no exchange
+    return _sql(spark, sf_dir, f"""
+        WITH fused AS (
+          SELECT query_id, doc_id,
+                 sum(CAST({QLM_SCALE} DIV ({RRF_RANK_K} + rank) AS BIGINT)) AS rrf_i,
+                 count(1) AS n_rankers
+          FROM {{ranked}} GROUP BY query_id, doc_id
         )
-    )
+        SELECT query_id, doc_id, round(rrf_i / {float(QLM_SCALE)}D, 6) AS rrf,
+               n_rankers, rank
+        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                                           ORDER BY rrf_i DESC, doc_id) AS rank
+              FROM fused)
+        WHERE rank <= {RRF_TOP_K}
+    """, ranked=bm.unionByName(ql))
 
 
 CONTEXT_BUCKETS = [32, 64, 128]  # token-count boundaries (corpus is short docs)
@@ -475,23 +443,13 @@ def context_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     training context buckets, with per-bucket doc and token totals —
     the report that drives packing/truncation decisions upstream of a
     trainer."""
-    d = load_table(spark, sf_dir, "documents")
-    n = F.size(tokens_col())
-    bucket = (
-        F.when(n <= CONTEXT_BUCKETS[0], f"<= {CONTEXT_BUCKETS[0]}")
-        .when(n <= CONTEXT_BUCKETS[1], f"<= {CONTEXT_BUCKETS[1]}")
-        .when(n <= CONTEXT_BUCKETS[2], f"<= {CONTEXT_BUCKETS[2]}")
-        .otherwise(f"> {CONTEXT_BUCKETS[2]}")
-    )
-    return (
-        d.select(bucket.alias("bucket"), n.alias("n_tokens"))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-        )
-        .orderBy("bucket")
-    )
+    whens = " ".join(f"WHEN n <= {b} THEN '<= {b}'" for b in CONTEXT_BUCKETS)
+    return _sql(spark, sf_dir, f"""
+        SELECT bucket, count(1) AS n_docs, sum(n) AS total_tokens
+        FROM (SELECT CASE {whens} ELSE '> {CONTEXT_BUCKETS[-1]}' END AS bucket, n
+              FROM (SELECT size({tokens_sql()}) AS n FROM {{documents}}))
+        GROUP BY bucket ORDER BY bucket
+    """)
 
 
 def corpus_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -499,29 +457,18 @@ def corpus_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     up/down-sampling rate that would equalize languages — the knob a
     data-mixture recipe turns. All ratios are exact-count arithmetic
     rounded at the edge."""
-    d = load_table(spark, sf_dir, "documents")
-    per_lang = (
-        d.select("lang", F.size(tokens_col()).alias("n_tok"))
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tok").alias("n_tokens"))
-    )
-    totals = per_lang.agg(
-        F.sum("n_tokens").alias("tot_tokens"), F.count(F.lit(1)).alias("n_langs")
-    )
-    return (
-        per_lang.crossJoin(F.broadcast(totals))
-        .select(
-            "lang",
-            "n_docs",
-            "n_tokens",
-            F.round(F.col("n_tokens") / F.col("tot_tokens"), 6).alias("token_share"),
-            # rate that would give each lang an equal token share
-            F.round(
-                F.col("tot_tokens") / (F.col("n_langs") * F.col("n_tokens")), 6
-            ).alias("equalize_rate"),
-        )
-        .orderBy("lang")
-    )
+    return _sql(spark, sf_dir, f"""
+        WITH per_lang AS (
+          SELECT lang, count(1) AS n_docs, sum(size({tokens_sql()})) AS n_tokens
+          FROM {{documents}} GROUP BY lang
+        ),
+        totals AS (SELECT sum(n_tokens) AS tot_tokens, count(1) AS n_langs FROM per_lang)
+        SELECT /*+ BROADCAST(totals) */ lang, n_docs, n_tokens,
+               round(n_tokens / tot_tokens, 6) AS token_share,
+               -- rate that would give each lang an equal token share
+               round(tot_tokens / (n_langs * n_tokens), 6) AS equalize_rate
+        FROM per_lang CROSS JOIN totals ORDER BY lang
+    """)
 
 
 TEMP_ALPHAS = (0.7, 0.3)  # mT5/XLM-R-style mixture temperatures
@@ -540,40 +487,29 @@ def source_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one hash-aggregate to source granularity; everything
     after is arithmetic over a sources-sized relation."""
-    d = load_table(spark, sf_dir, "documents")
-    per_src = (
-        d.select("source", F.size(tokens_col()).alias("n_tok"))
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tok").alias("n_tokens"))
-    )
-    tot = per_src.agg(F.sum("n_tokens").alias("tot_tokens"))
-    share = F.col("n_tokens") / F.col("tot_tokens")
-    scaled = per_src.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        F.round(share, 6).alias("token_share"),
-        *[
-            F.round(F.pow(share, F.lit(a)) * 1000000.0, 0)
-            .cast("long")
-            .alias(f"_w{i}")
-            for i, a in enumerate(TEMP_ALPHAS)
-        ],
-    )
-    sums = scaled.agg(
-        *[F.sum(f"_w{i}").alias(f"_t{i}") for i in range(len(TEMP_ALPHAS))]
-    )
-    out_w = [
-        (F.floor(F.col(f"_w{i}") * 10000.0 / F.col(f"_t{i}")) / 10000.0).alias(
-            f"w_alpha{str(a).replace('.', '')}"
-        )
+    ks = range(len(TEMP_ALPHAS))
+    ws = ", ".join(
+        f"CAST(round(pow(n_tokens / tot_tokens, {a}D) * 1000000.0D, 0) AS BIGINT) AS _w{i}"
         for i, a in enumerate(TEMP_ALPHAS)
-    ]
-    return (
-        scaled.crossJoin(F.broadcast(sums))
-        .select("source", "n_docs", "n_tokens", "token_share", *out_w)
-        .orderBy("source")
     )
+    out = ", ".join(
+        f"floor(_w{i} * 10000.0D / _t{i}) / 10000.0D AS w_alpha{str(a).replace('.', '')}"
+        for i, a in enumerate(TEMP_ALPHAS)
+    )
+    return _sql(spark, sf_dir, f"""
+        WITH per_src AS (
+          SELECT source, count(1) AS n_docs, sum(size({tokens_sql()})) AS n_tokens
+          FROM {{documents}} GROUP BY source
+        ),
+        scaled AS (
+          SELECT /*+ BROADCAST(tot) */ source, n_docs, n_tokens,
+                 round(n_tokens / tot_tokens, 6) AS token_share, {ws}
+          FROM per_src CROSS JOIN (SELECT sum(n_tokens) AS tot_tokens FROM per_src) tot
+        ),
+        sums AS (SELECT {", ".join(f"sum(_w{i}) AS _t{i}" for i in ks)} FROM scaled)
+        SELECT /*+ BROADCAST(sums) */ source, n_docs, n_tokens, token_share, {out}
+        FROM scaled CROSS JOIN sums ORDER BY source
+    """)
 
 
 def source_reputation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,37 +530,25 @@ def source_reputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hazard). Corpus-wide duplicate counts then come from a window over
     that much smaller aggregated relation, and everything folds in one
     source-grain aggregate. No corpus-sized broadcast anywhere."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    h = F.md5(F.coalesce(F.col("text"), F.lit("")))
-    qint = F.round(_quality_expr(tokens_col()) * 1000000.0, 0).cast("long")
-    g = (
-        d.select("source", h.alias("h"), qint.alias("qint"))
-        .groupBy("h", "source")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("qint").alias("qs"))
-    )
-    occ = F.sum("n").over(W.partitionBy("h"))
-    per_src = (
-        g.withColumn("dup_n", F.when(occ >= 2, F.col("n")).otherwise(F.lit(0)))
-        .groupBy("source")
-        .agg(
-            F.sum("n").alias("n_docs"),
-            F.sum("qs").alias("qsum"),
-            F.sum("dup_n").alias("n_dup_docs"),
+    qint = f"CAST(round({quality_sql(tokens_sql())} * 1000000.0D, 0) AS BIGINT)"
+    return _sql(spark, sf_dir, f"""
+        WITH g AS (
+          SELECT h, source, count(1) AS n, sum(qint) AS qs
+          FROM (SELECT source, md5(coalesce(text, '')) AS h, {qint} AS qint
+                FROM {{documents}})
+          GROUP BY h, source
+        ),
+        per_src AS (
+          SELECT source, sum(n) AS n_docs, sum(qs) AS qsum,
+                 sum(CASE WHEN occ >= 2 THEN n ELSE 0 END) AS n_dup_docs
+          FROM (SELECT *, sum(n) OVER (PARTITION BY h) AS occ FROM g)
+          GROUP BY source
         )
-    )
-    return per_src.select(
-        "source",
-        "n_docs",
-        F.col("n_dup_docs").alias("n_dup_docs"),
-        (F.floor(F.col("n_dup_docs") * 10000.0 / F.col("n_docs")) / 10000.0).alias(
-            "dup_rate"
-        ),
-        (F.floor(F.col("qsum") / F.col("n_docs") / 100.0) / 10000.0).alias(
-            "mean_quality"
-        ),
-    ).orderBy("source")
+        SELECT source, n_docs, n_dup_docs,
+               floor(n_dup_docs * 10000.0D / n_docs) / 10000.0D AS dup_rate,
+               floor(qsum / n_docs / 100.0D) / 10000.0D AS mean_quality
+        FROM per_src ORDER BY source
+    """)
 
 
 # Count-min sketch shape: d hash rows × w buckets, fixed memory
@@ -650,54 +574,67 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expected N/w collision mass for a min over d=4 rows). The
     DuckDB oracle is the exact top-k with constant-true flags; a sketch
     drifting out of bound hash-mismatches.
+
+    ONE pass over the token stream: partial-agg to (tok, count). The
+    sketch is then built from the pre-aggregated relation — cell = Σ
+    counts of tokens hashing there, identical to counting raw tokens
+    but the ×CMS_D row expansion runs over the VOCABULARY (thousands)
+    instead of the corpus token stream (billions at scale): map-side
+    combine first, sketch fold second. The vocabulary-bounded counts
+    are checkpointed: the sketch fold, the top-k and the total each
+    re-ran the corpus token pass otherwise (r14 opt). Every CMS row
+    partitions the full token mass, so row 0's cells sum to N exactly —
+    no extra corpus scan for the total.
     """
-    from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(tokens_col()).alias("tok")).filter(F.col("tok") != "")
-
-    # ONE pass over the token stream: partial-agg to (tok, count).
-    # The sketch is then built from the pre-aggregated relation —
-    # cell = Σ counts of tokens hashing there, identical to counting
-    # raw tokens but the ×CMS_D row expansion runs over the VOCABULARY
-    # (thousands) instead of the corpus token stream (billions at
-    # scale). This is how a production sketch pass is structured:
-    # map-side combine first, sketch fold second.
-    exact = toks.groupBy("tok").agg(
-        F.count(F.lit(1)).alias("exact_n")
-    ).localCheckpoint(eager=True)
-    # ^ vocabulary-bounded; referenced by the sketch fold, the top-k and
-    # the total — each reference re-ran the corpus token pass (r14 opt)
-
-    rows = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1))).alias("r")
-    bucket = portable_hash32(F.concat_ws(":", F.col("r"), F.col("tok"))) % CMS_W
-    cms = (
-        exact.select("tok", "exact_n", rows)
-        .select("r", bucket.alias("bucket"), "exact_n")
-        .groupBy("r", "bucket")
-        .agg(F.sum("exact_n").alias("cell"))
-    )
-
-    topk = exact.orderBy(F.desc("exact_n"), "tok").limit(CMS_TOPK)
-    # every CMS row partitions the full token mass: row 0's cells sum
-    # to N exactly — no extra corpus scan for the total
-    total = cms.filter(F.col("r") == 0).agg(F.sum("cell").alias("n_total"))
-
-    est = (
-        topk.select("tok", "exact_n", rows)
-        .withColumn("bucket", bucket)
-        .join(F.broadcast(cms), ["r", "bucket"])
-        .groupBy("tok", "exact_n")
-        .agg(F.min("cell").alias("est"))
-    )
-    return est.crossJoin(F.broadcast(total)).select(
-        "tok",
-        "exact_n",
-        (F.col("est") >= F.col("exact_n")).alias("est_ge_exact"),
-        (F.col("est") - F.col("exact_n") <= 8 * F.col("n_total") / CMS_W).alias(
-            "est_within_eps"
+    exact = _sql(spark, sf_dir, f"""
+        SELECT tok, count(1) AS exact_n
+        FROM (SELECT explode({tokens_sql()}) AS tok FROM {{documents}})
+        WHERE tok != '' GROUP BY tok
+    """).localCheckpoint(eager=True)
+    bucket = hash32_sql("concat_ws(':', r, tok)") + f" % {CMS_W} AS bucket"
+    rows = f"explode(sequence(0, {CMS_D - 1})) AS r"
+    return _sql(spark, sf_dir, f"""
+        WITH cms AS (
+          SELECT r, bucket, sum(exact_n) AS cell
+          FROM (SELECT r, {bucket}, exact_n
+                FROM (SELECT tok, exact_n, {rows} FROM {{exact}}))
+          GROUP BY r, bucket
         ),
+        topk AS (SELECT tok, exact_n FROM {{exact}} ORDER BY exact_n DESC, tok LIMIT {CMS_TOPK}),
+        est AS (
+          SELECT /*+ BROADCAST(cms) */ tok, exact_n, min(cell) AS est
+          FROM (SELECT tok, exact_n, r, {bucket} FROM (SELECT tok, exact_n, {rows} FROM topk))
+          JOIN cms USING (r, bucket)
+          GROUP BY tok, exact_n
+        ),
+        total AS (SELECT sum(cell) AS n_total FROM cms WHERE r = 0)
+        SELECT /*+ BROADCAST(total) */ tok, exact_n, est >= exact_n AS est_ge_exact,
+               est - exact_n <= 8 * n_total / {CMS_W} AS est_within_eps
+        FROM est CROSS JOIN total
+    """, exact=exact)
+
+
+def _unigram_lm(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, float]:
+    """The session-shared Laplace unigram LM ``(tok, c)`` over the
+    per-(doc, token) relation, and its smoothing denominator
+    ``n_total + vocab`` as a memoized scalar (1.0 on an empty
+    corpus, so it yields an empty result, not a TypeError)."""
+    from generic_data_ingestor_framework_spark.cachemgr import shared_persist, shared_value
+    from generic_data_ingestor_framework_spark.llm.classify import _doc_tokens
+
+    lm = shared_persist(
+        spark,
+        ("lm_unigram", sf_dir),
+        lambda: _doc_tokens(spark, sf_dir).groupBy("tok").agg(F.sum("n").alias("c")),
     )
+    sc = shared_value(
+        spark,
+        ("lm_scalars", sf_dir),
+        lambda: lm.agg(
+            F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("vocab")
+        ).collect()[0].asDict(),
+    )
+    return lm, float((sc["n_total"] or 0) + sc["vocab"]) or 1.0
 
 
 def lm_unigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -712,33 +649,16 @@ def lm_unigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation NB trains on), broadcast back as (token, log-prob);
     scoring is one broadcast join + one aggregate on doc_id. Scores
     round to 4 dp (the cross-engine summation-order contract)."""
-    from generic_data_ingestor_framework_spark.cachemgr import shared_persist, shared_value
     from generic_data_ingestor_framework_spark.llm.classify import _doc_tokens
 
-    toks = _doc_tokens(spark, sf_dir)
-    lm = shared_persist(
-        spark,
-        ("lm_unigram", sf_dir),
-        lambda: toks.groupBy("tok").agg(F.sum("n").alias("c")),
-    )
-    sc = shared_value(
-        spark,
-        ("lm_scalars", sf_dir),
-        lambda: lm.agg(
-            F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("vocab")
-        ).collect()[0].asDict(),
-    )
-    # empty corpus: no tokens anywhere -> empty result, not a TypeError
-    denom = float((sc["n_total"] or 0) + sc["vocab"]) or 1.0
-    lp = F.log((F.col("c") + 1.0) / F.lit(denom))
-    return (
-        toks.join(F.broadcast(lm.select("tok", lp.alias("lp"))), "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n").alias("n_tokens"),
-            F.round(-F.sum(F.col("n") * F.col("lp")) / F.sum("n"), 4).alias("xent"),
-        )
-    )
+    lm, denom = _unigram_lm(spark, sf_dir)
+    return _sql(spark, sf_dir, """
+        SELECT /*+ BROADCAST(lp) */ doc_id, sum(n) AS n_tokens,
+               round(-sum(n * lp) / sum(n), 4) AS xent
+        FROM {toks} JOIN (SELECT tok, ln((c + 1.0D) / :denom) AS lp FROM {lm}) lp
+          USING (tok)
+        GROUP BY doc_id
+    """, {"denom": denom}, toks=_doc_tokens(spark, sf_dir), lm=lm)
 
 
 TFIDF_SCALE = 1000       # integer weight grain (exact cross-engine sums)
@@ -795,91 +715,51 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one (doc, term) hash-aggregate, one df window on the
     term shuffle, inverted-index self-join bounded by the DF cap, one
-    pair aggregate."""
-    from pyspark.sql import Window as W
-
+    pair aggregate. The weighted inverted index ``kept`` is persisted
+    per session: norms and both join sides read it."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    def _kept() -> DataFrame:
-        d = load_table(spark, sf_dir, "documents")
-        toks = d.select("doc_id", F.explode(tokens_col()).alias("term")).filter(
-            F.col("term") != ""
+    kept = shared_persist(spark, ("tfidf_kept", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        WITH {_TF_DF_SQL}
+        SELECT /*+ BROADCAST(nd) */ doc_id, term, df,
+               CAST(round(tf * ln(n_docs / df) * {TFIDF_SCALE}) AS BIGINT) AS wi
+        FROM tf_df CROSS JOIN nd
+        WHERE df >= 2 AND df <= least(greatest(CAST({TFIDF_DF_CAP} AS BIGINT), n_docs DIV 5),
+                                      CAST({TFIDF_DF_HARD} AS BIGINT))
+    """))
+    h = hash32_sql("concat_ws('_', term, doc_id)")
+    return _sql(spark, sf_dir, f"""
+        WITH norms AS (SELECT doc_id, sqrt(sum(wi * wi)) AS nrm FROM {{kept}} GROUP BY doc_id),
+        -- pair-generation sample: ~B postings per term (deterministic hash
+        -- slice, a no-op for df <= B) bounds the self-join to O(vocab·B²)
+        pair_src AS (
+          SELECT doc_id, term FROM {{kept}}
+          WHERE df <= {TFIDF_PAIR_B}
+             OR {h} % CAST(ceil(df / {TFIDF_PAIR_B}) AS BIGINT) = 0
+        ),
+        cand AS (
+          SELECT DISTINCT pa.doc_id AS doc_a, pb.doc_id AS doc_b
+          FROM pair_src pa JOIN pair_src pb ON pa.term = pb.term
+          WHERE pa.doc_id < pb.doc_id
+        ),
+        -- exact dot over the FULL kept space for every candidate: re-join
+        -- the unsampled inverted index per side (pairs × terms-per-doc
+        -- rows, linear in the candidate count, never in df²)
+        dots AS (
+          SELECT doc_a, doc_b, sum(wa * wb) AS dot, count(1) AS n_shared_terms
+          FROM cand
+          JOIN (SELECT doc_id AS doc_a, term, wi AS wa FROM {{kept}}) USING (doc_a)
+          JOIN (SELECT doc_id AS doc_b, term, wi AS wb FROM {{kept}}) USING (doc_b, term)
+          GROUP BY doc_a, doc_b
         )
-        tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-        nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
-        df_cap = F.least(
-            F.greatest(F.lit(TFIDF_DF_CAP).cast("bigint"), F.expr("n_docs DIV 5")),
-            F.lit(TFIDF_DF_HARD).cast("bigint"),
-        )
-        return (
-            tf.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("term")))
-            .crossJoin(F.broadcast(nd))
-            .filter((F.col("df") >= 2) & (F.col("df") <= df_cap))
-            .select(
-                "doc_id",
-                "term",
-                "df",
-                F.round(
-                    F.col("tf") * F.log(F.col("n_docs") / F.col("df")) * TFIDF_SCALE
-                )
-                .cast("bigint")
-                .alias("wi"),
-            )
-        )
-
-    from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32
-
-    # the weighted inverted index: referenced by norms + both join sides
-    kept = shared_persist(spark, ("tfidf_kept", sf_dir), _kept)
-    norms = kept.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("wi") * F.col("wi"))).alias("nrm")
-    )
-    # pair-generation sample: ~B postings per term (deterministic hash
-    # slice, a no-op for df ≤ B) bounds the self-join to O(vocab·B²)
-    pair_src = kept.filter(
-        (F.col("df") <= TFIDF_PAIR_B)
-        | (
-            portable_hash32(F.concat_ws("_", F.col("term"), F.col("doc_id")))
-            % F.ceil(F.col("df") / F.lit(TFIDF_PAIR_B)).cast("bigint")
-            == 0
-        )
-    ).select("doc_id", "term")
-    cand = (
-        pair_src.alias("pa")
-        .join(pair_src.alias("pb"), "term")
-        .filter(F.col("pa.doc_id") < F.col("pb.doc_id"))
-        .select(
-            F.col("pa.doc_id").alias("doc_a"), F.col("pb.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    # exact dot over the FULL kept space for every candidate: re-join
-    # the unsampled inverted index per side (pairs × terms-per-doc rows
-    # — linear in the candidate count, never in df²)
-    ka = kept.select(F.col("doc_id").alias("doc_a"), "term", F.col("wi").alias("wa"))
-    kb = kept.select(F.col("doc_id").alias("doc_b"), "term", F.col("wi").alias("wb"))
-    dots = (
-        cand.join(ka, "doc_a")
-        .join(kb, ["doc_b", "term"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.sum(F.col("wa") * F.col("wb")).alias("dot"),
-            F.count(F.lit(1)).alias("n_shared_terms"),
-        )
-    )
-    na = norms.select(F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb"))
-    cos = F.col("dot") / (F.col("na") * F.col("nb"))
-    return (
-        dots.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .filter(cos >= TFIDF_SIM_TAU)
-        .select(
-            "doc_a", "doc_b", "n_shared_terms", F.round(cos, 6).alias("tfidf_cos")
-        )
-        .orderBy(F.desc("tfidf_cos"), "doc_a", "doc_b")
-        .limit(TFIDF_TOP_K)
-    )
+        SELECT doc_a, doc_b, n_shared_terms, round(cos, 6) AS tfidf_cos
+        FROM (SELECT doc_a, doc_b, n_shared_terms, dot / (na * nb) AS cos
+              FROM dots
+              JOIN (SELECT doc_id AS doc_a, nrm AS na FROM norms) USING (doc_a)
+              JOIN (SELECT doc_id AS doc_b, nrm AS nb FROM norms) USING (doc_b))
+        WHERE cos >= {TFIDF_SIM_TAU}D
+        ORDER BY tfidf_cos DESC, doc_a, doc_b LIMIT {TFIDF_TOP_K}
+    """, kept=kept)
 
 
 # working and output columns of ``top_bigrams``; a caller's id column
@@ -901,17 +781,9 @@ def top_bigrams(df: DataFrame, id_col: str, toks) -> DataFrame:
     combinable) → per-id window (sum + rank share one sort on id)."""
     from pyspark.sql import Window as W
 
-    n = F.size(F.col("__ts"))
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.array_join(F.slice(F.col("__ts"), i + 1, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     bg = (
         df.select(id_col, toks.alias("__ts"))
-        .select(id_col, F.explode(bigrams).alias("__bg"))
+        .select(id_col, F.explode(F.expr(bigrams_sql("__ts"))).alias("__bg"))
         .groupBy(id_col, "__bg")
         .agg(F.count(F.lit(1)).alias("__m"))
     )
@@ -963,81 +835,38 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the corpus text shuffles only into the shared relation. Scores
     round to 4 dp (the cross-engine summation-order contract)."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist, shared_value
-    from generic_data_ingestor_framework_spark.llm.classify import _doc_tokens
 
-    d = load_table(spark, sf_dir, "documents")
-    n = F.size(F.col("toks"))
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.array_join(F.slice(F.col("toks"), i + 1, 2), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bg = shared_persist(
-        spark,
-        ("lm_bigrams", sf_dir),
-        lambda: (
-            d.select("doc_id", tokens_col().alias("toks"))
-            .select("doc_id", F.explode(bigrams).alias("bigram"))
-            .groupBy("doc_id", "bigram")
-            .agg(F.count(F.lit(1)).alias("m"))
-        ),
-    )
+    bg = shared_persist(spark, ("lm_bigrams", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        SELECT doc_id, bigram, count(1) AS m
+        FROM (SELECT doc_id, explode({bigrams_sql("toks")}) AS bigram
+              FROM (SELECT doc_id, {tokens_sql()} AS toks FROM {{documents}}))
+        GROUP BY doc_id, bigram
+    """))
     # model-side aggregates are deterministic per corpus and broadcast
     # below (vocabulary-bounded): checkpoint each once per session so a
     # warm call replays two block reads instead of two aggregate jobs
     # over the bigram relation (r14 opt)
-    c12 = shared_value(
-        spark,
-        ("lm_bigram_c12", sf_dir),
-        lambda: bg.groupBy("bigram")
-        .agg(F.sum("m").alias("c12"))
-        .localCheckpoint(eager=True),
-    )
-    w1 = F.element_at(F.split(F.col("bigram"), " "), 1)
-    w2 = F.element_at(F.split(F.col("bigram"), " "), 2)
-    c1 = shared_value(
-        spark,
-        ("lm_bigram_c1", sf_dir),
-        lambda: c12.select(w1.alias("w1"), "c12")
-        .groupBy("w1")
-        .agg(F.sum("c12").alias("c1"))
-        .localCheckpoint(eager=True),
-    )
+    c12 = shared_value(spark, ("lm_bigram_c12", sf_dir), lambda: _sql(
+        spark, sf_dir, "SELECT bigram, sum(m) AS c12 FROM {bg} GROUP BY bigram", bg=bg
+    ).localCheckpoint(eager=True))
+    c1 = shared_value(spark, ("lm_bigram_c1", sf_dir), lambda: _sql(spark, sf_dir, """
+        SELECT element_at(split(bigram, ' '), 1) AS w1, sum(c12) AS c1
+        FROM {c12} GROUP BY 1
+    """, c12=c12).localCheckpoint(eager=True))
     # the SAME session-shared unigram LM + scalars lm_unigram_score uses
-    toks = _doc_tokens(spark, sf_dir)
-    lm = shared_persist(
-        spark,
-        ("lm_unigram", sf_dir),
-        lambda: toks.groupBy("tok").agg(F.sum("n").alias("c")),
-    )
-    sc = shared_value(
-        spark,
-        ("lm_scalars", sf_dir),
-        lambda: lm.agg(
-            F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("vocab")
-        ).collect()[0].asDict(),
-    )
-    denom = float((sc["n_total"] or 0) + sc["vocab"]) or 1.0
-    p = F.lit(LM_LAMBDA) * (F.col("c12") / F.col("c1")) + F.lit(LM_ONE_MINUS) * (
-        (F.col("cu") + 1.0) / F.lit(denom)
-    )
-    return (
-        bg.join(F.broadcast(c12), "bigram")
-        .withColumn("w1", w1)
-        .withColumn("w2", w2)
-        .join(F.broadcast(c1), "w1")
-        .join(
-            F.broadcast(lm.select(F.col("tok").alias("w2"), F.col("c").alias("cu"))),
-            "w2",
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.sum("m").alias("n_bigrams"),
-            F.round(-F.sum(F.col("m") * F.log(p)) / F.sum("m"), 4).alias("xent2"),
-        )
-    )
+    lm, denom = _unigram_lm(spark, sf_dir)
+    return _sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(c12, c1, u) */ doc_id, sum(m) AS n_bigrams,
+               round(-sum(m * ln({LM_LAMBDA}D * (c12 / c1)
+                                 + {LM_ONE_MINUS}D * ((cu + 1.0D) / :denom))) / sum(m), 4)
+                 AS xent2
+        FROM (SELECT *, element_at(split(bigram, ' '), 1) AS w1,
+                        element_at(split(bigram, ' '), 2) AS w2
+              FROM {{bg}} JOIN {{c12}} c12 USING (bigram))
+        JOIN {{c1}} c1 USING (w1)
+        JOIN (SELECT tok AS w2, c AS cu FROM {{lm}}) u USING (w2)
+        GROUP BY doc_id
+    """, {"denom": denom}, bg=bg, c12=c12, c1=c1, lm=lm)
 
 
 QUERIES = {
@@ -1064,7 +893,6 @@ QUERIES = {
 }
 
 _TOKS = "string_split_regex(lower(text), '\\s+')"
-_STOP_IN = "','".join(STOPWORDS)
 # SQL twin of _quality_expr — one template shared by the quality_score
 # and source_reputation oracles ({n} = token count, {n_stop} = stopword count)
 _QUALITY_SQL = "least(1.0, {n} / 100.0) * (0.5 + 0.5 * ({n_stop} / {n}))"

@@ -312,6 +312,8 @@ def _step_paragraph_dedup(df: DataFrame, p: dict) -> DataFrame:
 
     col = p.get("column", "text")
     idc = p["id"]
+    if idc in _PARAGRAPH_RESERVED:
+        raise ValueError(f"id column {idc!r} collides with paragraph-dedup internals")
     seg_n = int(p.get("seg", SEG_TOKENS))
 
     def dedup(df: DataFrame) -> DataFrame:
@@ -350,6 +352,9 @@ def _step_bpe_tokenize(df: DataFrame, p: dict) -> DataFrame:
 # temporaries, not just the span-core outputs).
 _SPAN_RESERVED = frozenset({"pos", "gram", "cov", "__ts", "__clean"})
 _BUDGET_RESERVED = frozenset({"band", "n_tok", "cum_tokens", "sel_rank", "__ts"})
+_PARAGRAPH_RESERVED = frozenset(
+    {"n_segments", "n_kept", "kept_text", "__ts", "__pos", "__seg", "__keep"}
+)
 
 
 def _rewrite(df: DataFrame, idc: str, col: str, new_text: DataFrame) -> DataFrame:

@@ -70,15 +70,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _sql(
-    spark: SparkSession, sf_dir: str, text: str, args: dict | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    text: str,
+    args: dict | None = None,
+    **frames: DataFrame,
 ) -> DataFrame:
     """``text`` as one ``spark.sql`` plan, with ``args`` bound as named
-    parameters. Each ``{name}`` field of the text reads the test table
-    ``name`` (``load_table``): PySpark's formatter registers it as a
-    temp view under a unique name and drops the view once the plan is
-    analyzed."""
-    names = {f for _, f, _, _ in string.Formatter().parse(text) if f}
-    return spark.sql(text, args, **{n: load_table(spark, sf_dir, n) for n in names})
+    parameters. Each ``{name}`` field of the text reads ``frames[name]``
+    (a relation the caller holds, such as a memoized one) or else the
+    test table ``name`` (``load_table``): PySpark's formatter registers
+    it as a temp view under a unique name and drops the view once the
+    plan is analyzed.
+
+    A frame is bound through an always-true filter: dropping a temp view
+    (``Catalog.dropTempView``) uncaches every cached plan equal to the
+    view's, so a view over a persisted frame itself would unpersist it.
+    The optimizer removes the filter; the plan reads the cached data."""
+    names = {f for _, f, _, _ in string.Formatter().parse(text) if f} - frames.keys()
+    tables = {n: load_table(spark, sf_dir, n) for n in names}
+    held = {n: f.filter("true") for n, f in frames.items()}
+    return spark.sql(text, args, **tables, **held)
 
 
 # ---------------------------------------------------------------------------

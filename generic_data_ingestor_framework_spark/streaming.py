@@ -8,8 +8,11 @@ listing, exactly-once sink commit, and the same code path keeps working
 as a continuous stream. This module provides:
 
 - batch event-time operators (tumbling / sliding / session windows,
-  watermark-style dedup) over ``events`` — semantics identical to their
-  streaming forms and oracle-checkable;
+  watermark-style dedup, funnels, cohorts, rolling frames) over
+  ``events`` — semantics identical to their streaming forms and
+  oracle-checkable. Each is one Spark SQL text (``relational._sql``)
+  except the two as-of members, whose point is the ``asof_join``
+  primitive;
 - ``stream_*`` members: REAL streaming executions whose final table
   must match the same DuckDB oracle as the batch form, proving
   batch/stream equivalence. Each runs through ``_run_memory_sink``
@@ -33,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.relational import _sql, load_table
 
 EVENTS_RAW_SCHEMA = T.StructType(
     [
@@ -189,43 +192,29 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1h event-time window: counts + value sum per bucket."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n",
-            "sum_value",
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT window.start AS window_start, window.end AS window_end,
+               count(1) AS n, round(sum(value), 2) AS sum_value
+        FROM {events} GROUP BY window(ts, '1 hour')
+    """)
 
 
 def window_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1h window, 30m slide (each event lands in 2 windows)."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "n")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT window.start AS window_start, count(1) AS n
+        FROM {events} GROUP BY window(ts, '1 hour', '30 minutes')
+    """)
 
 
 def session_window_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows with a 10-minute inactivity gap
     (native ``session_window`` — distributed state merge, no collect)."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy("user_id", F.session_window("ts", "10 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT user_id, session_window.start AS session_start,
+               session_window.end AS session_end, count(1) AS n_events
+        FROM {events} GROUP BY user_id, session_window(ts, '10 minutes')
+    """)
 
 
 def session_stats_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,25 +222,16 @@ def session_stats_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     length (seconds, gap-inclusive like ``session_window``), and the
     busiest session — the product-analytics summary layered on native
     sessionization (two hash aggregates, no extra state)."""
-    sessions = (
-        _events(spark, sf_dir)
-        .groupBy("user_id", F.session_window("ts", "10 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            (F.unix_timestamp("w.end") - F.unix_timestamp("w.start")).alias("dur_s"),
-            "n_events",
-        )
-    )
-    return (
-        sessions.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.round(F.avg("dur_s"), 2).alias("avg_session_s"),
-            F.max("n_events").alias("max_session_events"),
-        )
-        .orderBy("user_id")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT user_id, count(1) AS n_sessions, round(avg(dur_s), 2) AS avg_session_s,
+               max(n_events) AS max_session_events
+        FROM (SELECT user_id,
+                     unix_timestamp(session_window.end)
+                       - unix_timestamp(session_window.start) AS dur_s,
+                     count(1) AS n_events
+              FROM {events} GROUP BY user_id, session_window(ts, '10 minutes'))
+        GROUP BY user_id ORDER BY user_id
+    """)
 
 
 def user_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,50 +246,33 @@ def user_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIRST (one hash-aggregate — the heavy cardinality drop), then every
     window runs partitioned by user over hour-counts, never raw events.
     Hour arithmetic is integer epoch-hours, exact in both engines."""
-    from pyspark.sql import Window as W
-
-    e = _events(spark, sf_dir)
-    hours = (
-        e.select(
-            "user_id",
-            (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)
-            .cast("bigint")
-            .alias("h"),
+    return _sql(spark, sf_dir, """
+        WITH flagged AS (
+          SELECT user_id, h, prev_h, CAST(prev_h IS NULL OR h - prev_h > 1 AS INT) AS new_island
+          FROM (SELECT user_id, h, lag(h) OVER (PARTITION BY user_id ORDER BY h) AS prev_h
+                FROM (SELECT DISTINCT user_id,
+                             CAST(unix_timestamp(date_trunc('hour', ts)) / 3600 AS BIGINT) AS h
+                      FROM {events}))
+        ),
+        agg_islands AS (
+          SELECT user_id, count(1) AS n_islands, sum(island_hours) AS n_active_hours,
+                 max(island_hours) AS longest_island_hours
+          FROM (SELECT user_id, island, count(1) AS island_hours
+                FROM (SELECT user_id,
+                             sum(new_island) OVER (PARTITION BY user_id ORDER BY h
+                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+                      FROM flagged)
+                GROUP BY user_id, island)
+          GROUP BY user_id
+        ),
+        agg_gaps AS (
+          SELECT user_id, max(h - prev_h - 1) AS longest_gap_hours
+          FROM flagged WHERE prev_h IS NOT NULL GROUP BY user_id
         )
-        .distinct()
-    )
-    w = W.partitionBy("user_id").orderBy("h")
-    flagged = hours.withColumn("prev_h", F.lag("h").over(w)).withColumn(
-        "new_island",
-        (F.col("prev_h").isNull() | (F.col("h") - F.col("prev_h") > 1)).cast("int"),
-    )
-    islands = flagged.withColumn(
-        "island", F.sum("new_island").over(w.rowsBetween(W.unboundedPreceding, 0))
-    )
-    per_island = islands.groupBy("user_id", "island").agg(
-        F.count(F.lit(1)).alias("island_hours")
-    )
-    gaps = flagged.filter(F.col("prev_h").isNotNull()).select(
-        "user_id", (F.col("h") - F.col("prev_h") - 1).alias("gap_hours")
-    )
-    agg_islands = per_island.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_islands"),
-        F.sum("island_hours").alias("n_active_hours"),
-        F.max("island_hours").alias("longest_island_hours"),
-    )
-    agg_gaps = gaps.groupBy("user_id").agg(
-        F.max("gap_hours").alias("longest_gap_hours")
-    )
-    return (
-        agg_islands.join(agg_gaps, "user_id", "left")
-        .select(
-            "user_id",
-            "n_active_hours",
-            "n_islands",
-            "longest_island_hours",
-            F.coalesce("longest_gap_hours", F.lit(0)).alias("longest_gap_hours"),
-        )
-    )
+        SELECT user_id, n_active_hours, n_islands, longest_island_hours,
+               coalesce(longest_gap_hours, 0) AS longest_gap_hours
+        FROM agg_islands LEFT JOIN agg_gaps USING (user_id)
+    """)
 
 
 def events_range_window_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,17 +287,12 @@ def events_range_window_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to every per-user window here; the interval arithmetic
     stays in the frame machinery (no self-join expansion of the
     event×hour pairs)."""
-    e = _events(spark, sf_dir)
-    over = (
-        "OVER (PARTITION BY user_id ORDER BY ts "
-        "RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"
-    )
-    return e.select(
-        "event_id",
-        "user_id",
-        F.expr(f"count(*) {over}").alias("n_1h"),
-        F.expr(f"round(sum(value) {over}, 2)").alias("sum_1h"),
-    )
+    return _sql(spark, sf_dir, """
+        SELECT event_id, user_id, count(*) OVER w AS n_1h, round(sum(value) OVER w, 2) AS sum_1h
+        FROM {events}
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts
+                     RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
+    """)
 
 
 ZSCORE_LOOKBACK = 20   # trailing history window (rows)
@@ -360,34 +318,24 @@ def events_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scan; the rolling state is O(lookback) per user. The same logic
     runs unbounded via ``applyInPandasWithState`` (keyed running
     window) if the input is a stream."""
-    from pyspark.sql import Window as W
-
-    e = _events(spark, sf_dir)
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-ZSCORE_LOOKBACK, -1)
-    )
-    cnt = F.count("value").over(w)
-    s1 = F.sum("value").over(w)
-    s2 = F.sum(F.col("value") * F.col("value")).over(w)
-    var = (s2 - s1 * s1 / cnt) / (cnt - 1)
-    sd = F.sqrt(F.greatest(var, F.lit(0.0)))
-    z = F.when(
-        (cnt >= ZSCORE_MIN_N) & (sd > 0), (F.col("value") - s1 / cnt) / sd
-    )
-    scored = e.select("user_id", z.alias("z")).filter(F.col("z").isNotNull())
-    return (
-        scored.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_scored"),
-            F.sum((F.abs(F.col("z")) > ZSCORE_THRESHOLD).cast("int")).alias(
-                "n_anomalies"
-            ),
-            F.round(F.max(F.abs(F.col("z"))), 2).alias("max_abs_z"),
+    return _sql(spark, sf_dir, f"""
+        WITH f AS (
+          SELECT user_id, value, count(value) OVER w AS cnt, sum(value) OVER w AS s1,
+                 sum(value * value) OVER w AS s2
+          FROM {{events}}
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS BETWEEN {ZSCORE_LOOKBACK} PRECEDING AND 1 PRECEDING)
+        ),
+        z AS (
+          SELECT user_id,
+                 CASE WHEN cnt >= {ZSCORE_MIN_N} AND sd > 0 THEN (value - s1 / cnt) / sd END AS z
+          FROM (SELECT *, sqrt(greatest((s2 - s1 * s1 / cnt) / (cnt - 1), 0.0D)) AS sd FROM f)
         )
-        .orderBy("user_id")
-    )
+        SELECT user_id, count(1) AS n_scored,
+               sum(CAST(abs(z) > {ZSCORE_THRESHOLD}D AS INT)) AS n_anomalies,
+               round(max(abs(z)), 2) AS max_abs_z
+        FROM z WHERE z IS NOT NULL GROUP BY user_id ORDER BY user_id
+    """)
 
 
 FUNNEL_STEPS = ["view", "click", "purchase"]  # ordered conversion funnel
@@ -408,57 +356,33 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     never touches the fact table again (the previous formulation paid a
     filtered scan + join per step: 6 scans / 6 shuffles in the round-7
     plan audit). No ordered event arrays are ever collected per user.
-    Conversion ratios are 4-dp floor (no cross-engine round ties)."""
-    from pyspark.sql import Window as W
-
-    e = _events(spark, sf_dir).filter(F.col("event_type").isin(FUNNEL_STEPS))
-    wu = W.partitionBy("user_id")
-    df = e.select("user_id", "event_type", "ts")
-    prev_t = None
-    for i, step in enumerate(FUNNEL_STEPS):
-        qual = F.col("event_type") == step
-        if prev_t is not None:
-            qual = qual & (F.col("ts") > F.col(prev_t))
-        df = df.withColumn(f"t{i + 1}", F.min(F.when(qual, F.col("ts"))).over(wu))
-        prev_t = f"t{i + 1}"
-    # rows within a user all carry identical t1..tk; collapse on the
-    # partitioning the window just established (no new exchange)
-    per_user = df.groupBy("user_id").agg(
-        *[F.min(f"t{i + 1}").alias(f"t{i + 1}") for i in range(len(FUNNEL_STEPS))]
-    )
-    one = per_user.agg(
-        *[
-            F.sum(F.col(f"t{i + 1}").isNotNull().cast("long")).alias(f"n{i + 1}")
-            for i in range(len(FUNNEL_STEPS))
-        ]
-    )
-    counts = one.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i + 1).alias("step_idx"),
-                        F.lit(step).alias("step"),
-                        F.col(f"n{i + 1}").alias("n_users"),
-                    )
-                    for i, step in enumerate(FUNNEL_STEPS)
-                ]
-            )
-        ).alias("r")
-    ).select("r.*")
-    # UNPARTITIONED window: safe ONLY because `counts` has one row per
-    # funnel step by construction — pinned here so a grown step list
-    # can't silently turn this into a single-task sort over real data
-    assert len(FUNNEL_STEPS) <= 16, "funnel window input must stay driver-tiny"
-    w = W.orderBy("step_idx").rowsBetween(-1, -1)
-    prev_n = F.coalesce(F.sum("n_users").over(w), F.col("n_users"))
-    return counts.select(
-        "step_idx",
-        "step",
-        "n_users",
+    The step counts land in one aggregate row, where each step's
+    conversion over its previous step is computed before the row is
+    unpacked to one row per step (no unpartitioned window). Conversion
+    ratios are 4-dp floor (no cross-engine round ties)."""
+    steps = "', '".join(FUNNEL_STEPS)
+    chain = f"SELECT user_id, event_type, ts FROM {{events}} WHERE event_type IN ('{steps}')"
+    rows = []
+    for i, step in enumerate(FUNNEL_STEPS, 1):
+        qual = f"event_type = '{step}'" + (f" AND ts > t{i - 1}" if i > 1 else "")
+        chain = (
+            f"SELECT *, min(CASE WHEN {qual} THEN ts END) OVER (PARTITION BY user_id)"
+            f" AS t{i} FROM ({chain})"
+        )
         # integer-floor basis points / 10000: no cross-engine round ties
-        (F.floor(F.col("n_users") * 10000 / prev_n) / 10000).alias("conversion"),
-    )
+        rows.append(
+            f"struct({i} AS step_idx, '{step}' AS step, n{i} AS n_users,"
+            f" floor(n{i} * 10000 / n{max(i - 1, 1)}) / 10000 AS conversion)"
+        )
+    ks = range(1, len(FUNNEL_STEPS) + 1)
+    # rows within a user all carry identical t1..tk; collapse on the
+    # partitioning the windows established (no new exchange)
+    return _sql(spark, sf_dir, f"""
+        SELECT inline(array({", ".join(rows)}))
+        FROM (SELECT {", ".join(f"sum(CAST(t{i} IS NOT NULL AS BIGINT)) AS n{i}" for i in ks)}
+              FROM (SELECT user_id, {", ".join(f"min(t{i}) AS t{i}" for i in ks)}
+                    FROM ({chain}) GROUP BY user_id))
+    """)
 
 
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,44 +402,34 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the round-7 plan paid 2 scans / 5 shuffles; this is 1 scan, with
     every post-collapse exchange over week-bounded cardinalities).
     Retention is 4-dp floor."""
-    from pyspark.sql import Window as W
-
-    e = _events(spark, sf_dir)
-    weeks = e.select(
-        "user_id",
-        F.floor(F.unix_timestamp("ts") / 604800).cast("bigint").alias("week"),
-    ).distinct()
-    labeled = weeks.withColumn(
-        "cohort_week", F.min("week").over(W.partitionBy("user_id"))
-    )
-    matrix = labeled.groupBy(
-        "cohort_week", (F.col("week") - F.col("cohort_week")).alias("weeks_since")
-    ).agg(F.count(F.lit(1)).alias("n_active"))
-    cohort_size = F.max(
-        F.when(F.col("weeks_since") == 0, F.col("n_active"))
-    ).over(W.partitionBy("cohort_week"))
-    return matrix.select(
-        "cohort_week",
-        "weeks_since",
-        "n_active",
-        cohort_size.alias("cohort_size"),
-        (F.floor(F.col("n_active") * 10000 / cohort_size) / 10000).alias("retention"),
-    )
+    return _sql(spark, sf_dir, """
+        WITH matrix AS (
+          SELECT cohort_week, week - cohort_week AS weeks_since, count(1) AS n_active
+          FROM (SELECT user_id, week, min(week) OVER (PARTITION BY user_id) AS cohort_week
+                FROM (SELECT DISTINCT user_id,
+                             CAST(floor(unix_timestamp(ts) / 604800) AS BIGINT) AS week
+                      FROM {events}))
+          GROUP BY cohort_week, week - cohort_week
+        )
+        SELECT cohort_week, weeks_since, n_active, cohort_size,
+               floor(n_active * 10000 / cohort_size) / 10000 AS retention
+        FROM (SELECT *, max(CASE WHEN weeks_since = 0 THEN n_active END)
+                          OVER (PARTITION BY cohort_week) AS cohort_size
+              FROM matrix)
+    """)
 
 
 def events_dedup_earliest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-dedup analogue in batch: first event per
     (user_id, event_type), the deterministic form of
     ``dropDuplicatesWithinWatermark``."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    return (
-        _events(spark, sf_dir)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_type", "event_id", "ts")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT user_id, event_type, event_id, ts FROM (
+          SELECT user_id, event_type, event_id, ts,
+                 row_number() OVER (PARTITION BY user_id, event_type
+                                    ORDER BY ts, event_id) AS rn
+          FROM {events}) WHERE rn = 1
+    """)
 
 
 def events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,24 +438,15 @@ def events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the continuous-aggregate hierarchy a time-series store maintains,
     computed as a single partial-agg-friendly plan instead of three
     scans."""
-    e = _events(spark, sf_dir).select(
-        F.date_trunc("hour", F.col("ts")).alias("hour_bucket"),
-        F.date_trunc("day", F.col("ts")).alias("day_bucket"),
-        "value",
-    )
-    return (
-        e.groupingSets(
-            [["hour_bucket", "day_bucket"], ["day_bucket"], []],
-            "hour_bucket",
-            "day_bucket",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-            F.grouping_id("hour_bucket", "day_bucket").cast("int").alias("gid"),
-        )
-        .orderBy("gid", "day_bucket", "hour_bucket")
-    )
+    return _sql(spark, sf_dir, """
+        SELECT hour_bucket, day_bucket, count(1) AS n, round(sum(value), 2) AS sum_value,
+               CAST(grouping_id(hour_bucket, day_bucket) AS INT) AS gid
+        FROM (SELECT date_trunc('hour', ts) AS hour_bucket,
+                     date_trunc('day', ts) AS day_bucket, value
+              FROM {events})
+        GROUP BY GROUPING SETS ((hour_bucket, day_bucket), (day_bucket), ())
+        ORDER BY gid, day_bucket, hour_bucket
+    """)
 
 
 def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,30 +459,14 @@ def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash/sort-merge join, never a cross product. The same plan runs
     as a stream-stream join with watermarks (see
     ``stream_interval_join`` and its test)."""
-    e = _events(spark, sf_dir)
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        "value",
-    )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        )
-        .select(
-            "user_id",
-            "click_id",
-            "purchase_id",
-            F.round("value", 2).alias("purchase_value"),
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
+               round(p.value, 2) AS purchase_value
+        FROM {events} c JOIN {events} p
+          ON c.user_id = p.user_id
+         AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTES
+        WHERE c.event_type = 'click' AND p.event_type = 'purchase'
+    """)
 
 
 def asof_join(

@@ -191,6 +191,19 @@ def test_pipeline_paragraph_dedup_passes_blank_rows_through(spark):
     assert out == {1: shared, 2: None, 3: "", 4: "   "}
 
 
+@pytest.mark.parametrize("idc", ["n_kept", "__seg", "kept_text", "n_segments"])
+def test_pipeline_paragraph_dedup_rejects_reserved_id(spark, idc):
+    """An id column named like one of ``paragraph_segments``' outputs or
+    working columns fails up front with a clear error, not at analysis
+    with an ambiguous-reference plan error."""
+    from generic_data_ingestor_framework_spark.pipeline import STEP_REGISTRY
+
+    df = spark.createDataFrame([(1, "a b c"), (2, "a b c")], f"`{idc}` bigint, text string")
+    spec = {"op": "paragraph_dedup", "id": idc, "column": "text"}
+    with pytest.raises(ValueError, match="collides"):
+        STEP_REGISTRY["paragraph_dedup"](df, spec).collect()
+
+
 def test_pipeline_lm_filter_drops_token_soup(spark):
     """lm_filter fits a unigram LM over the dataset and drops rows
     whose token cross-entropy exceeds the threshold: a fluent row of

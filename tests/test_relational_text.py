@@ -1,7 +1,7 @@
-"""Relational members written as one Spark SQL text each: a member's
+"""Registry members written as one Spark SQL text each: a member's
 plan is parsed and analyzed in the JVM, so building it costs a few py4j
-commands whatever its size, and the temp views that bind its tables do
-not outlive the build."""
+commands whatever its size, and the temp views that bind its tables and
+frames do not outlive the build."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import inspect
 
 from conftest import SF_SMALL
 
-from generic_data_ingestor_framework_spark import relational
+from generic_data_ingestor_framework_spark.composite import MEMBER_QUERIES
 
 # one temp view registered and dropped per table read, plus the parse:
 # q8_market_share, with seven tables, sends 19
@@ -20,7 +20,7 @@ BUILD_COMMANDS_MAX = 20
 def _text_members() -> list[str]:
     """The registry members whose body returns one ``_sql`` call."""
     out = []
-    for name, fn in relational.QUERIES.items():
+    for name, fn in MEMBER_QUERIES.items():
         body = ast.parse(inspect.getsource(fn)).body[0].body
         last = body[-1]
         if (
@@ -38,14 +38,33 @@ def _temp_views(spark) -> set[str]:
 
 def test_text_members_build_in_a_few_jvm_commands(spark, jvm_commands):
     members = _text_members()
-    assert len(members) >= 40, members
+    # the relational floor (40) plus 19 text-statistics and 12 event-time members
+    assert len(members) >= 71, members
     views = _temp_views(spark)
     for name in members:  # first use of each table reader and entry point
-        relational.QUERIES[name](spark, SF_SMALL)
+        MEMBER_QUERIES[name](spark, SF_SMALL)
     sent = {}
     for name in members:
         with jvm_commands() as n:
-            relational.QUERIES[name](spark, SF_SMALL)
+            MEMBER_QUERIES[name](spark, SF_SMALL)
         sent[name] = n[0]
     assert max(sent.values()) <= BUILD_COMMANDS_MAX, sent
     assert _temp_views(spark) == views
+
+
+def test_a_persisted_frame_read_by_a_text_stays_cached(spark):
+    """Dropping the formatter's temp view uncaches every cached plan
+    equal to the view's: a persisted frame that a text reads must still
+    be read from, and stay in, the cache."""
+    from pyspark.sql import functions as F
+
+    from generic_data_ingestor_framework_spark.relational import _sql
+    from generic_data_ingestor_framework_spark.scale import explain_string
+
+    held = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count().persist()
+    try:
+        out = _sql(spark, SF_SMALL, "SELECT k FROM {held} WHERE count > 10", held=held)
+        assert "InMemoryTableScan" in explain_string(out)
+        assert "InMemoryTableScan" in explain_string(held.select("k"))
+    finally:
+        held.unpersist()
