@@ -5,7 +5,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def table_exists(spark: SparkSession, table: str) -> bool:
@@ -18,13 +18,6 @@ def describe_table(spark: SparkSession, table: str) -> list[dict]:
     return [
         {"name": c.name, "type": c.dataType, "nullable": c.nullable}
         for c in spark.catalog.listColumns(table)
-    ]
-
-
-def describe_dataframe(df: DataFrame) -> list[dict]:
-    return [
-        {"name": f.name, "type": f.dataType.simpleString(), "nullable": f.nullable}
-        for f in df.schema.fields
     ]
 
 

@@ -76,7 +76,7 @@ def _gram_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: toks.select(
             "doc_id",
             is_bench.alias("bench"),
-            F.explode(shingles_from_tokens(F.col("ts"), k=DECON_GRAM_K)).alias("gram"),
+            F.explode(shingles_from_tokens("ts", k=DECON_GRAM_K)).alias("gram"),
         ),
     )
 

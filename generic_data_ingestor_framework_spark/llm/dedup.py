@@ -1,6 +1,6 @@
 """Deduplication operators over the ``documents`` table.
 
-Six strategies, each a distributed DataFrame plan:
+Six strategies, each a distributed plan:
 
 - **exact**: md5-content groupBy (one shuffle on the hash key).
 - **MinHash signatures**: word-3-gram shingles → k portable min-hashes.
@@ -11,16 +11,28 @@ Six strategies, each a distributed DataFrame plan:
   (inverted-index join — only docs sharing a shingle ever meet).
 - **SimHash**: 32-bit sign-aggregated fingerprint per doc.
 
+A query member is one Spark SQL text (``relational._sql``) over
+``documents`` and the session's memoized relations, passed as named
+frames. Each MinHash formula is one Spark SQL fragment that the texts
+splice in and the Column helpers wrap with ``F.expr``: the tokenizer
+(``tokens_sql``), the shingle hash (``hash32_sql``), the shingles
+(``shingles_sql``), the affine min-hash (``minhash_sql``), the band
+split (``band_split_sql``) and the band self-join (``lsh_pairs_sql``).
+The signature is computed per row (``signature_sql``), so one
+definition serves static frames and unbounded streams alike. The
+driver loops (``connected_components``, ``pagerank_doc_graph``) and
+the band-index lifecycle keep their hand plans.
+
 Portability contract: the shingle hash is the first 8 hex digits of
 md5, so Spark and the DuckDB oracle compute bit-identical signatures
 (``F.conv(substr(md5, 1, 8), 16, 10)`` ≡ ``CAST('0x' || ... AS
 BIGINT)``). In production you'd swap in ``xxhash64`` (JVM-side, no
 md5 cost); the plan shape is identical.
 
-Scale notes (100 TB): every stage is explode → hash-partition →
-partial-agg; no driver-side state, no collects. Shingle explosion is
-the dominant cost — `array_distinct` before explode cuts the shuffle
-by the per-doc repeat factor. The exact-Jaccard join frequency-caps
+Scale notes (100 TB): every stage is a per-row projection or explode
+→ hash-partition → partial-agg; no driver-side state, no collects.
+Shingle work is the dominant cost — `array_distinct` before explode
+cuts the shuffle by the per-doc repeat factor. The exact-Jaccard join frequency-caps
 skewed shingles (document frequency > ``DF_CAP``) before the
 self-join: a stop-phrase shared by 1% of a 100 TB corpus would make
 its join bucket quadratic, and a shingle that common carries no
@@ -41,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from generic_data_ingestor_framework_spark.llm import indexstore
-from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.relational import _sql, load_table
 from generic_data_ingestor_framework_spark.session import local_relation
 
 MOD = 1_000_000_007
@@ -106,25 +118,86 @@ def tokens_col(text_col="text"):
 
 # Word-shingle width for the MinHash/band pipeline. Three call sites
 # depend on the SAME k for the "no bands ⟺ <k tokens" invariant
-# (shingles_from_tokens, bands_per_row's token-count filter, and the
+# (shingles_sql, signature_sql's token-count filter, and the
 # supersede NULL-band marker rule) — a k changed in one place but not
 # the others would silently stop retiring stale bands (r14 ADVICE).
 SHINGLE_K = 3
 
 
-def shingles_from_tokens(tok_col, k: int = SHINGLE_K):
-    """Distinct word k-gram shingles from an ALREADY-MATERIALIZED token
-    array column. Callers must project the token split into its own
-    column first: Catalyst re-inlines aliased expressions into lambda
-    bodies, so referencing ``tokens_col()`` directly here would re-run
-    the regex split for every gram (measured 15x slowdown)."""
-    n = F.size(tok_col)
-    grams = F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.array_join(F.slice(tok_col, i + 1, k), " "),
+def shingles_sql(toks: str, k: int = SHINGLE_K) -> str:
+    """Spark SQL: the distinct word k-gram shingles of the token array
+    ``toks``, which must be an ALREADY-MATERIALIZED column: Catalyst
+    re-inlines aliased expressions into lambda bodies, so splicing
+    ``tokens_sql`` in here would re-run the regex split for every gram
+    (measured 15x slowdown)."""
+    return (
+        f"array_distinct(CASE WHEN size({toks}) >= {k} THEN transform("
+        f"sequence(0, size({toks}) - {k}), i -> array_join(slice({toks}, i + 1, {k}), ' '))"
+        " ELSE CAST(array() AS ARRAY<STRING>) END)"
     )
-    empty = F.array().cast("array<string>")
-    return F.array_distinct(F.when(n >= k, grams).otherwise(empty))
+
+
+def shingles_from_tokens(toks: str, k: int = SHINGLE_K):
+    """``shingles_sql`` over the token array column named ``toks``."""
+    return F.expr(shingles_sql(ident_sql(toks), k))
+
+
+def minhash_sql(hashes: str, n_perm: int = N_PERM) -> str:
+    """Spark SQL: the ``n_perm`` min-hash columns ``mh0``.. of the
+    shingle-hash array ``hashes``, ``mh_j = min_h (a_j h + b_j) % MOD``."""
+    a, b = minhash_coeffs(n_perm)
+    return ", ".join(
+        f"array_min(transform({hashes}, h -> ({a[j]} * h + {b[j]}) % {MOD})) AS mh{j}"
+        for j in range(n_perm)
+    )
+
+
+def signature_sql(src: str, id_col: str, text_col: str, n_perm: int, hint: str = "") -> str:
+    """Spark SQL: ``(id_col, mh0..)``, the MinHash signature of each row
+    of the relation ``src`` that has at least one shingle, computed per
+    row (no aggregate, so it runs on a stream too). Rows are admitted
+    on their TOKEN count: ``size(shingles) > 0`` ⟺ ``size(toks) >= k``,
+    and a filter on the shingle array would be pushed below the
+    projection with the whole shingle expression inlined (measured ~8x
+    the rest of the pipeline at sf0.1). ``hint`` goes on the token
+    projection (the batch memo spreads it across the cluster)."""
+    i = ident_sql(id_col)
+    return f"""
+        SELECT {i}, {minhash_sql("hs", n_perm)}
+        FROM (SELECT {i}, transform({shingles_sql("toks")}, s -> {hash32_sql("s")}) AS hs
+              FROM (SELECT {hint} {i}, {tokens_sql(ident_sql(text_col))} AS toks FROM {src})
+              WHERE size(toks) >= {SHINGLE_K})
+    """
+
+
+def band_split_sql(n_perm: int = N_PERM, bands: int = BANDS) -> str:
+    """Spark SQL select item: one ``(band_idx, band_sig)`` row per band
+    of the min-hash columns ``mh0``.., a band's signature being its
+    ``n_perm / bands`` values joined by ``_``."""
+    if n_perm % bands:
+        raise ValueError(f"n_perm={n_perm} not divisible by bands={bands}")
+    rpb = n_perm // bands
+    sigs = ", ".join(
+        "concat_ws('_', " + ", ".join(f"mh{rpb * i + r}" for r in range(rpb)) + ")"
+        for i in range(bands)
+    )
+    return f"posexplode(array({sigs})) AS (band_idx, band_sig)"
+
+
+# one join/state column per band: ``{band_idx}:{band_sig}``
+BAND_KEY_SQL = "concat_ws(':', band_idx, band_sig)"
+
+
+def lsh_pairs_sql(banded: str) -> str:
+    """Spark SQL: the band self-join of the relation ``banded``
+    (``doc_id, band_idx, band_sig``): docs sharing any band signature
+    become a candidate pair (``doc_a < doc_b``). Candidate generation
+    scales with bucket sizes, never with the number of pairs."""
+    return f"""
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM {banded} a JOIN {banded} b
+          ON a.band_idx = b.band_idx AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
+    """
 
 
 # Shared DuckDB CTE: doc_id → exploded distinct shingles
@@ -152,34 +225,35 @@ sh AS (
 DEFAULT_SHINGLE_STORAGE = StorageLevel.MEMORY_AND_DISK
 
 
+def _spread(spark: SparkSession) -> str:
+    """Hint for the token projection of a batch memo: small single-file
+    inputs arrive as ONE partition; spread the CPU-heavy gram work
+    across the cluster before computing it (a big corpus already has
+    enough input splits — repartition of a thin (id, tokens) projection
+    is cheap either way). Hashed on ``doc_id``, so the per-document
+    aggregates and distincts downstream need no shuffle of their own."""
+    return f"/*+ REPARTITION({spark.sparkContext.defaultParallelism}, doc_id) */"
+
+
 def _exploded_shingles(
     spark: SparkSession, sf_dir: str, storage: StorageLevel | None = None
 ) -> DataFrame:
     """doc_id → exploded distinct shingles, persisted ONCE per session
-    via the cache registry: every dedup plan branches over this relation
-    2-4 times (self-join sides, size table), Spark re-executes
+    via the cache registry: every exact-Jaccard plan branches over this
+    relation 2-4 times (self-join sides, size table), Spark re-executes
     unpersisted branches, and repeated invocations in a long-lived
     session must reuse one copy rather than leak one per call. Storage
     level per ``DEFAULT_SHINGLE_STORAGE`` (corpus-sized — see note
     above)."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    def build() -> DataFrame:
-        d = load_table(spark, sf_dir, "documents")
-        # small single-file inputs arrive as ONE partition; spread the
-        # CPU-heavy gram explosion across the cluster before computing
-        # it (a big corpus already has enough input splits — repartition
-        # of a thin (id, tokens) projection is cheap either way)
-        par = spark.sparkContext.defaultParallelism
-        toks = d.select("doc_id", tokens_col().alias("toks")).repartition(par)
-        return toks.select(
-            "doc_id", F.explode(shingles_from_tokens(F.col("toks"))).alias("shingle")
-        )
-
     level = storage or DEFAULT_SHINGLE_STORAGE
     # the storage level is part of the key: an explicit DISK_ONLY
     # request must not silently reuse a MEMORY_AND_DISK relation
-    return shared_persist(spark, ("shingles", sf_dir, str(level)), build, level)
+    return shared_persist(spark, ("shingles", sf_dir, str(level)), lambda: _sql(spark, sf_dir, f"""
+        SELECT doc_id, explode({shingles_sql("toks")}) AS shingle
+        FROM (SELECT {_spread(spark)} doc_id, {tokens_sql()} AS toks FROM {{documents}})
+    """), level)
 
 
 # ---------------------------------------------------------------------------
@@ -192,21 +266,19 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on a 128-bit key; at 100 TB this is the cheapest dedup
     (combine-ahead partial aggregation, no payload movement — only the
     hash and the candidate keeper id shuffle)."""
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select(F.md5(F.col("text")).alias("content_hash"), "doc_id")
-        .groupBy("content_hash")
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT content_hash, min(doc_id) AS keep_id, count(1) AS n_copies
+        FROM (SELECT md5(text) AS content_hash, doc_id FROM {documents})
+        GROUP BY content_hash
+    """)
 
 
 def dedup_exact_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-based exact dedup (lang, source): keep first doc per group."""
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.groupBy("lang", "source")
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_in_group"))
-    )
+    return _sql(spark, sf_dir, """
+        SELECT lang, source, min(doc_id) AS keep_id, count(1) AS n_in_group
+        FROM {documents} GROUP BY lang, source
+    """)
 
 
 # ---------------------------------------------------------------------------
@@ -221,20 +293,9 @@ def _minhash_sig_df(
     pipelines; an explicit wide config must not reuse the default)."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    a, b = minhash_coeffs(n_perm)
-
-    def build() -> DataFrame:
-        sh = _exploded_shingles(spark, sf_dir)
-        # hash ONCE per shingle in a projection; the n_perm permutations
-        # are cheap affine transforms of that single value
-        hashed = sh.select("doc_id", portable_hash32(F.col("shingle")).alias("h"))
-        aggs = [
-            F.min((F.lit(a[j]) * F.col("h") + F.lit(b[j])) % MOD).alias(f"mh{j}")
-            for j in range(n_perm)
-        ]
-        return hashed.groupBy("doc_id").agg(*aggs)
-
-    return shared_persist(spark, ("minhash_sig", sf_dir, n_perm), build)
+    return shared_persist(spark, ("minhash_sig", sf_dir, n_perm), lambda: _sql(
+        spark, sf_dir, signature_sql("{documents}", "doc_id", "text", n_perm, _spread(spark))
+    ))
 
 
 def dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,8 +309,8 @@ def dedup_minhash_sig_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the default: oracle-checked exactly against a 16-column
     DuckDB twin generated from the same coefficient family. The build
     plan is identical to the default (one hash per shingle + affine
-    transforms inside one hash-aggregate), so width scales the
-    aggregate state linearly, never the shuffle count."""
+    transforms inside one projection), so width scales the projection
+    linearly, never the shuffle count."""
     return _minhash_sig_df(spark, sf_dir, n_perm=16)
 
 
@@ -265,43 +326,14 @@ def _banded_df(
     rows-per-band."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    if n_perm % bands:
-        raise ValueError(f"n_perm={n_perm} not divisible by bands={bands}")
-    rpb = n_perm // bands
-
-    def build() -> DataFrame:
-        sig = _minhash_sig_df(spark, sf_dir, n_perm=n_perm)
-        band_cols = F.array(
-            *[
-                F.concat_ws("_", *[F.col(f"mh{rpb * i + r}") for r in range(rpb)])
-                for i in range(bands)
-            ]
-        )
-        return sig.select(
-            "doc_id",
-            (portable_hash32(F.col("doc_id").cast("string")) % 2).alias("bucket"),
-            F.posexplode(band_cols).alias("band_idx", "band_sig"),
-        )
-
-    return shared_persist(spark, ("minhash_bands", sf_dir, n_perm, bands), build)
-
-
-def _lsh_pairs_from(banded: DataFrame) -> DataFrame:
-    """Self-join a band relation on (band_idx, band_sig): docs sharing
-    any band signature become a candidate pair (doc_a < doc_b).
-    Candidate generation scales with bucket sizes, never with the
-    number of document pairs."""
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    text = f"""
+        SELECT doc_id, {hash32_sql("CAST(doc_id AS STRING)")} % 2 AS bucket,
+               {band_split_sql(n_perm, bands)}
+        FROM {{sig}}
+    """
+    return shared_persist(spark, ("minhash_bands", sf_dir, n_perm, bands), lambda: _sql(
+        spark, sf_dir, text, sig=_minhash_sig_df(spark, sf_dir, n_perm=n_perm)
+    ))
 
 
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,11 +348,9 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the graph members before this persist, ~5 after."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    def build() -> DataFrame:
-        banded = _banded_df(spark, sf_dir).select("doc_id", "band_idx", "band_sig")
-        return _lsh_pairs_from(banded)
-
-    return shared_persist(spark, ("lsh_pairs", sf_dir), build)
+    return shared_persist(spark, ("lsh_pairs", sf_dir), lambda: _sql(
+        spark, sf_dir, lsh_pairs_sql("{banded}"), banded=_banded_df(spark, sf_dir)
+    ))
 
 
 def dedup_minhash_lsh_pairs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -329,10 +359,10 @@ def dedup_minhash_lsh_pairs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     default while halving the miss probability: 1-(1-s²)⁸ vs ⁴).
     Oracle-checked exactly; the production 128/16 shape differs only
     in the two integers passed here."""
-    banded = _banded_df(spark, sf_dir, n_perm=16, bands=8).select(
-        "doc_id", "band_idx", "band_sig"
+    return _sql(
+        spark, sf_dir, lsh_pairs_sql("{banded}"),
+        banded=_banded_df(spark, sf_dir, n_perm=16, bands=8),
     )
-    return _lsh_pairs_from(banded)
 
 
 # ---------------------------------------------------------------------------
@@ -365,103 +395,59 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     — and the join predicate carries the PPJoin length filter
     (``J >= tau`` requires ``tau <= |A|/|B| <= 1/tau``), pruning
     size-incompatible pairs before the aggregate shuffle."""
-    from pyspark.sql import Window as W
-
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    tau = JACCARD_TAU
-
-    def build_capped() -> DataFrame:
-        raw = _exploded_shingles(spark, sf_dir)
-        return (
-            raw.select("doc_id", portable_hash32(F.col("shingle")).alias("sh"))
-            .distinct()  # collapse within-doc hash collisions (oracle ditto)
-            .withColumn("df", F.count(F.lit(1)).over(W.partitionBy("sh")))
-            .filter(F.col("df") <= DF_CAP)
-            .drop("df")  # nothing downstream reads it — don't persist it
-        )
-
     # the capped hashed relation IS the inverted index: persist it once
-    # per session. DF_CAP is part of the key: a different cap is a
+    # per session (within-doc hash collisions collapse, as in the
+    # oracle). DF_CAP is part of the key: a different cap is a
     # different index.
-    sh = shared_persist(spark, ("shingles_capped", sf_dir, DF_CAP), build_capped)
-
+    sh = shared_persist(spark, ("shingles_capped", sf_dir, DF_CAP), lambda: _sql(
+        spark, sf_dir, f"""
+        SELECT doc_id, sh FROM (
+          SELECT doc_id, sh, count(1) OVER (PARTITION BY sh) AS df
+          FROM (SELECT DISTINCT doc_id, {hash32_sql("shingle")} AS sh FROM {{shingles}}))
+        WHERE df <= {DF_CAP}
+    """, shingles=_exploded_shingles(spark, sf_dir)))
     # group-collapse: one row per DISTINCT capped shingle set, members
     # sorted so the first is the representative and within-group pairs
     # come out ordered
-    def build_groups() -> DataFrame:
-        return (
-            sh.groupBy("doc_id")
-            .agg(F.sort_array(F.collect_list("sh")).alias("s"))
-            .groupBy("s")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("members"))
-            .select(
-                F.col("members")[0].alias("rep_id"),
-                "members",
-                "s",
-                F.size("s").alias("n_sh"),
-            )
-        )
-
-    groups = shared_persist(spark, ("shingle_groups", sf_dir, DF_CAP), build_groups)
-
+    groups = shared_persist(spark, ("shingle_groups", sf_dir, DF_CAP), lambda: _sql(
+        spark, sf_dir, """
+        SELECT members[0] AS rep_id, members, s, size(s) AS n_sh
+        FROM (SELECT s, sort_array(collect_list(doc_id)) AS members
+              FROM (SELECT doc_id, sort_array(collect_list(sh)) AS s FROM {sh} GROUP BY doc_id)
+              GROUP BY s)
+    """, sh=sh))
+    tau = f"{JACCARD_TAU}D"
     # rep-level inverted index join: the quadratic term runs over
-    # distinct sets only
-    rep_idx = groups.select("rep_id", "n_sh", F.explode("s").alias("sh"))
-    a, b = rep_idx.alias("a"), rep_idx.alias("b")
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.rep_id") < F.col("b.rep_id"))
-            & (F.col("b.n_sh") >= F.lit(tau) * F.col("a.n_sh"))
-            & (F.col("a.n_sh") >= F.lit(tau) * F.col("b.n_sh")),
+    # distinct sets only; expansion happens AFTER the tau filter, so
+    # only qualifying group pairs pay the member cross product.
+    # Within-group pairs have identical sets: J = 1 by definition.
+    return _sql(spark, sf_dir, f"""
+        WITH rep_idx AS (SELECT rep_id, n_sh, explode(s) AS sh FROM {{groups}}),
+        rep_pairs AS (
+          SELECT a.rep_id AS ra, b.rep_id AS rb, count(1) AS n_inter
+          FROM rep_idx a JOIN rep_idx b
+            ON a.sh = b.sh AND a.rep_id < b.rep_id
+           AND b.n_sh >= {tau} * a.n_sh AND a.n_sh >= {tau} * b.n_sh
+          GROUP BY a.rep_id, b.rep_id
+        ),
+        scored AS (
+          SELECT ma, mb, n_inter, round(n_inter / (n_a + n_b - n_inter), 6) AS jaccard
+          FROM rep_pairs
+          JOIN (SELECT rep_id AS ra, members AS ma, n_sh AS n_a FROM {{groups}}) USING (ra)
+          JOIN (SELECT rep_id AS rb, members AS mb, n_sh AS n_b FROM {{groups}}) USING (rb)
         )
-        .groupBy(F.col("a.rep_id").alias("ra"), F.col("b.rep_id").alias("rb"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    ga = groups.select(
-        F.col("rep_id").alias("ra"), F.col("members").alias("ma"), F.col("n_sh").alias("n_a")
-    )
-    gb = groups.select(
-        F.col("rep_id").alias("rb"), F.col("members").alias("mb"), F.col("n_sh").alias("n_b")
-    )
-    # expansion happens AFTER the tau filter: only qualifying group
-    # pairs pay the member cross product
-    cross = (
-        rep_pairs.join(ga, "ra")
-        .join(gb, "rb")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= tau)
-        .select(F.explode("ma").alias("doc_x"), "mb", "n_inter", "jaccard")
-        .select("doc_x", F.explode("mb").alias("doc_y"), "n_inter", "jaccard")
-        .select(
-            F.least("doc_x", "doc_y").alias("doc_a"),
-            F.greatest("doc_x", "doc_y").alias("doc_b"),
-            "n_inter",
-            "jaccard",
-        )
-    )
-    # within-group pairs: identical sets, J = 1 by definition
-    within = (
-        groups.filter(F.size("members") >= 2)
-        .select(F.posexplode("members").alias("i", "doc_a"), "members", "n_sh")
-        .select(
-            "doc_a",
-            F.explode(F.slice("members", F.col("i") + 2, F.size("members"))).alias(
-                "doc_b"
-            ),
-            F.col("n_sh").cast("long").alias("n_inter"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        .select("doc_a", "doc_b", "n_inter", "jaccard")
-    )
-    return cross.unionByName(within)
+        SELECT least(doc_x, doc_y) AS doc_a, greatest(doc_x, doc_y) AS doc_b, n_inter, jaccard
+        FROM (SELECT doc_x, explode(mb) AS doc_y, n_inter, jaccard
+              FROM (SELECT explode(ma) AS doc_x, mb, n_inter, jaccard
+                    FROM scored WHERE jaccard >= {tau}))
+        UNION ALL
+        SELECT doc_a, explode(slice(members, i + 2, size(members))) AS doc_b,
+               CAST(n_sh AS BIGINT) AS n_inter, 1.0D AS jaccard
+        FROM (SELECT posexplode(members) AS (i, doc_a), members, n_sh
+              FROM {{groups}} WHERE size(members) >= 2)
+    """, groups=groups)
 
 
 # ---------------------------------------------------------------------------
@@ -478,21 +464,58 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     row explosion: one shuffle on doc_id, partial aggregation upstream,
     token-stream row count unchanged (a row-exploded formulation
     measured ~5× slower at sf1)."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.array_distinct(tokens_col())).alias("tok")
-    ).withColumn("h", portable_hash32(F.col("tok")))
-    per_bit = [
-        F.sum(F.expr(f"CAST(((h >> {b}) & 1) * 2 - 1 AS BIGINT)")).alias(f"s{b}")
-        for b in range(32)
-    ]
-    per_doc = toks.groupBy("doc_id").agg(*per_bit)
-    simhash = F.lit(0).cast("long")
-    for b in range(32):
-        simhash = simhash + F.when(
-            F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return per_doc.select("doc_id", simhash.alias("simhash"))
+    bits = range(32)
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, {" + ".join(f"CASE WHEN s{b} > 0 THEN {1 << b}L ELSE 0L END" for b in bits)}
+                       AS simhash
+        FROM (SELECT doc_id,
+                     {", ".join(f"sum(CAST(((h >> {b}) & 1) * 2 - 1 AS BIGINT)) AS s{b}" for b in bits)}
+              FROM (SELECT doc_id, {hash32_sql("tok")} AS h
+                    FROM (SELECT doc_id, explode(array_distinct({tokens_sql()})) AS tok
+                          FROM {{documents}}))
+              GROUP BY doc_id)
+    """)
+
+
+# doc → cluster label over the collapsed graph: a doc's label is its
+# representative's component; a doc with no signature (no shingles) is
+# a singleton component
+_CLUSTER_LABELS_SQL = """
+    SELECT d.*, coalesce(l.cluster_id, d.doc_id) AS cluster_id
+    FROM {documents} d
+    LEFT JOIN (SELECT doc_id, rep_id FROM {with_rep}) w ON d.doc_id = w.doc_id
+    LEFT JOIN {rep_labels} l ON w.rep_id = l.doc_id
+"""
+
+
+def _cluster_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The memoized relations ``_CLUSTER_LABELS_SQL`` reads. The doc→rep
+    map and the rep-level candidate edges ARE the collapse index, and
+    the component labels an index too: each is persisted per session,
+    so the iterative loop, ``dedup_keep_corpus`` and repeated
+    invocations never re-execute the signature window, the band
+    self-join or the propagation iterations."""
+    from generic_data_ingestor_framework_spark.cachemgr import shared_persist
+
+    sig_cols = ", ".join(f"mh{j}" for j in range(N_PERM))
+    with_rep = shared_persist(spark, ("sig_rep_map", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        SELECT doc_id, {sig_cols}, min(doc_id) OVER (PARTITION BY {sig_cols}) AS rep_id
+        FROM {{sig}}
+    """, sig=_minhash_sig_df(spark, sf_dir)))
+    rep_pairs = shared_persist(spark, ("rep_pairs", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        WITH banded AS (
+          SELECT doc_id, {band_split_sql()} FROM {{with_rep}} WHERE doc_id = rep_id
+        )
+        {lsh_pairs_sql("banded")}
+    """, with_rep=with_rep))
+    rep_labels = shared_persist(
+        spark,
+        ("rep_labels", sf_dir),
+        lambda: connected_components(
+            with_rep.filter("doc_id = rep_id").select("doc_id"), rep_pairs, "doc_a", "doc_b"
+        ),
+    )
+    return {"with_rep": with_rep, "rep_labels": rep_labels}
 
 
 def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,91 +542,21 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge list entirely (C(g,2)×bands edges per duplicate group →
     0) and shrinks every per-iteration join to distinct-signature
     cardinality. Results are identical; the oracle is unchanged."""
-    from pyspark.sql import Window as W
-
-    from generic_data_ingestor_framework_spark.cachemgr import shared_persist
-
-    # the doc→rep map and the rep-level candidate edges ARE the collapse
-    # index: persist both per session so the iterative loop (and
-    # dedup_keep_corpus, and repeated invocations) never re-executes the
-    # signature window or the band self-join lineage
-    def build_rep_map() -> DataFrame:
-        sig = _minhash_sig_df(spark, sf_dir)
-        sig_cols = [f"mh{j}" for j in range(N_PERM)]
-        return sig.select(
-            "doc_id",
-            *sig_cols,
-            F.min("doc_id").over(W.partitionBy(*sig_cols)).alias("rep_id"),
-        )
-
-    with_rep = shared_persist(spark, ("sig_rep_map", sf_dir), build_rep_map)
-
-    def build_rep_pairs() -> DataFrame:
-        rep_sigs = with_rep.filter(F.col("doc_id") == F.col("rep_id"))
-        bands = F.array(
-            *[
-                F.concat_ws("_", F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
-                for b in range(BANDS)
-            ]
-        )
-        banded = rep_sigs.select(
-            "rep_id", F.posexplode(bands).alias("band_idx", "band_sig")
-        )
-        a, b = banded.alias("a"), banded.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_sig") == F.col("b.band_sig"))
-                & (F.col("a.rep_id") < F.col("b.rep_id")),
-            )
-            .select(F.col("a.rep_id").alias("doc_a"), F.col("b.rep_id").alias("doc_b"))
-            .distinct()
-        )
-
-    rep_pairs = shared_persist(spark, ("rep_pairs", sf_dir), build_rep_pairs)
-    # the component labels themselves are an index: every consumer
-    # (keep_corpus, keep-best-quality resolution, repeated assigns)
-    # reuses ONE run of the iterative loop per session instead of
-    # re-executing all propagation iterations per call
-    rep_labels = shared_persist(
-        spark,
-        ("rep_labels", sf_dir),
-        lambda: connected_components(
-            with_rep.filter(F.col("doc_id") == F.col("rep_id")).select(
-                F.col("rep_id").alias("doc_id")
-            ),
-            rep_pairs,
-            "doc_a",
-            "doc_b",
-        ),
-    )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    labels = (
-        docs.join(with_rep.select("doc_id", "rep_id"), "doc_id", "left")
-        .join(
-            rep_labels.select(
-                F.col("doc_id").alias("rep_id"), F.col("cluster_id").alias("rep_cluster")
-            ),
-            "rep_id",
-            "left",
-        )
-        # docs with no signature (no shingles) are singleton components
-        .select(
-            "doc_id", F.coalesce("rep_cluster", "doc_id").alias("cluster_id")
-        )
-    )
-    return labels.withColumn("is_keeper", F.col("doc_id") == F.col("cluster_id"))
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, cluster_id, doc_id = cluster_id AS is_keeper
+        FROM ({_CLUSTER_LABELS_SQL})
+    """, **_cluster_frames(spark, sf_dir))
 
 
 def dedup_keep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup loop closed end-to-end: LSH candidates → connected
     components → keep one doc per cluster → the deduplicated corpus
-    (what actually ships to training). Keeper join is a semi join on
-    the label relation, so document payloads move once."""
-    keepers = dedup_cluster_assign(spark, sf_dir).filter(F.col("is_keeper")).select("doc_id")
-    d = load_table(spark, sf_dir, "documents")
-    return d.join(keepers, "doc_id", "semi").select("doc_id", "lang", "source", "n_chars")
+    (what actually ships to training). The labels ride the corpus scan,
+    so document payloads move once."""
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, lang, source, n_chars FROM ({_CLUSTER_LABELS_SQL})
+        WHERE doc_id = cluster_id
+    """, **_cluster_frames(spark, sf_dir))
 
 
 def dedup_against_corpus(
@@ -649,50 +602,17 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bands_per_row(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """``(id, band_key)`` MinHash band signatures computed PER ROW —
-    ``array_min`` over the shingle array applies the same affine
-    permutations to the same 32-bit shingle hash as the
-    ``_minhash_sig_df`` AGGREGATE, so signatures are identical (the
-    min over a set equals the min over its exploded rows). Because no
-    aggregate is involved, this projection works on static frames AND
-    unbounded streams; docs too short to carry a shingle produce no
-    rows (matching the aggregate, which has no group for them).
-    ``band_key`` = ``{band_idx}:{band_sig}`` — one join/state column."""
-    a, b = minhash_coeffs(N_PERM)
-    rpb = N_PERM // BANDS
-    # Filter on the TOKEN count, not the shingle array: size(__sh) > 0
-    # ⟺ size(__toks) >= k (k or more tokens produce >= 1 gram, and
-    # array_distinct of a non-empty array is non-empty). Filtering on
-    # the derived __sh column let predicate pushdown re-inline the
-    # WHOLE shingle expression below the projection — with the regex
-    # split re-run PER GRAM inside the lambda (measured: the pushed
-    # filter alone cost ~8x the rest of the pipeline at sf0.1).
-    staged = (
-        df.select(F.col(id_col), tokens_col(text_col).alias("__toks"))
-        .filter(F.size(F.col("__toks")) >= SHINGLE_K)
-        .withColumn("__sh", shingles_from_tokens(F.col("__toks")))
-        .withColumn("__hs", F.transform("__sh", lambda s: portable_hash32(s)))
-    )
-    sig = staged.select(
-        id_col,
-        *[
-            F.array_min(
-                F.transform("__hs", lambda h: (F.lit(a[j]) * h + F.lit(b[j])) % MOD)
-            ).alias(f"mh{j}")
-            for j in range(N_PERM)
-        ],
-    )
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                ":",
-                F.lit(i),
-                F.concat_ws("_", *[F.col(f"mh{rpb * i + r}") for r in range(rpb)]),
-            )
-            for i in range(BANDS)
-        ]
-    )
-    return sig.select(id_col, F.explode(band_keys).alias("band_key"))
+    """``(id, band_key)`` MinHash band keys of each row of ``df`` — the
+    batch signature's own ``signature_sql`` and ``band_split_sql``, so
+    signatures are identical; no aggregate is involved, so this works
+    on static frames AND unbounded streams. Docs too short to carry a
+    shingle produce no rows."""
+    i = ident_sql(id_col)
+    return _sql(df.sparkSession, "", f"""
+        SELECT {i}, {BAND_KEY_SQL} AS band_key
+        FROM (SELECT {i}, {band_split_sql()}
+              FROM ({signature_sql("{df}", id_col, text_col, N_PERM)}))
+    """, df=df)
 
 
 # ---------------------------------------------------------------------------
@@ -1034,23 +954,19 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     "band already claimed" — by corpus history OR by an earlier batch
     document. No pairwise comparisons anywhere; the band relation is
     session-persisted (``_banded_df``)."""
-    from pyspark.sql import Window as W
-
-    banded = _banded_df(spark, sf_dir)
-    w = W.partitionBy("band_idx", "band_sig").orderBy("bucket", "doc_id")
-    rejected = (
-        banded.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("bucket") == 1) & (F.col("rn") > 1))
-        .select("doc_id")
-        .distinct()
-    )
-    batch_ids = banded.filter(F.col("bucket") == 1).select("doc_id").distinct()
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "lang")
-        .join(batch_ids, "doc_id", "semi")
-        .join(rejected, "doc_id", "anti")
-    )
+    return _sql(spark, sf_dir, """
+        WITH rejected AS (
+          SELECT DISTINCT doc_id FROM (
+            SELECT doc_id, bucket,
+                   row_number() OVER (PARTITION BY band_idx, band_sig ORDER BY bucket, doc_id) AS rn
+            FROM {banded})
+          WHERE bucket = 1 AND rn > 1
+        ),
+        batch_ids AS (SELECT DISTINCT doc_id FROM {banded} WHERE bucket = 1)
+        SELECT d.doc_id, d.lang FROM {documents} d
+        LEFT SEMI JOIN batch_ids b ON d.doc_id = b.doc_id
+        LEFT ANTI JOIN rejected r ON d.doc_id = r.doc_id
+    """, banded=_banded_df(spark, sf_dir))
 
 
 def connected_components(
@@ -1279,7 +1195,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a fixed 1-in-4) — membership is portable hash arithmetic and
     the modulus an integer tier function, so both engines audit the
     identical subset at every scale."""
-    from generic_data_ingestor_framework_spark.cachemgr import shared_value
+    from generic_data_ingestor_framework_spark.cachemgr import shared_persist, shared_value
 
     # Session-memoized eager checkpoint (r14 opt): the sampled pair set
     # is referenced by est, the candidate pruning, AND the intersection
@@ -1287,100 +1203,64 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of times through the downstream plan and Catalyst re-plans it all
     # on every call. The checkpoint collapses every reference to a
     # sampled-pair-sized leaf; cachemgr releases it at clear_caches.
-    pairs = shared_value(
-        spark,
-        ("mh_acc_pairs", sf_dir),
-        lambda: dedup_minhash_lsh_pairs(spark, sf_dir)
-        .filter(
-            portable_hash32(
-                F.concat(F.col("doc_a").cast("string"), F.lit("_"),
-                         F.col("doc_b").cast("string"))
-            ) % _acc_sample_mod(spark, sf_dir) == 0
+    pair_h = hash32_sql("concat(CAST(doc_a AS STRING), '_', CAST(doc_b AS STRING))")
+    pairs = shared_value(spark, ("mh_acc_pairs", sf_dir), lambda: _sql(
+        spark, sf_dir, f"SELECT * FROM {{pairs}} WHERE {pair_h} % :mod = 0",
+        {"mod": _acc_sample_mod(spark, sf_dir)}, pairs=dedup_minhash_lsh_pairs(spark, sf_dir),
+    ).localCheckpoint(eager=True))
+    # the candidate-pruned hashed shingles, referenced by sizes + both
+    # sides of the intersection join: persisted once (bounded by
+    # candidate docs)
+    hc = shared_persist(spark, ("mh_acc_cand_shingles", sf_dir), lambda: _sql(
+        spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(cand) */ hs.doc_id, hs.sh
+        FROM (SELECT DISTINCT doc_id, {hash32_sql("shingle")} AS sh FROM {{shingles}}) hs
+        JOIN (SELECT DISTINCT doc_id
+              FROM (SELECT doc_a AS doc_id FROM {{pairs}} UNION ALL SELECT doc_b FROM {{pairs}})) cand
+          ON hs.doc_id = cand.doc_id
+    """, shingles=_exploded_shingles(spark, sf_dir), pairs=pairs))
+    # candidate-doc-sized; read as BOTH join sides below, which re-ran
+    # the aggregate twice per call — checkpoint it once
+    sizes = shared_value(spark, ("mh_acc_sizes", sf_dir), lambda: _sql(
+        spark, sf_dir, "SELECT doc_id, count(1) AS sz FROM {hc} GROUP BY doc_id", hc=hc
+    ).localCheckpoint(eager=True))
+    m = " + ".join(f"CAST(a.mh{j} = b.mh{j} AS INT)" for j in range(N_PERM))
+    # Broadcast the PAIR side (bounded by candidate count) into both
+    # signature lookups, never the corpus-sized signature relation.
+    # r14 opt: the pair side also broadcasts into the doc_a expansion
+    # of the candidate shingles, and the y side (the same
+    # candidate-pruned relation) into the set-intersection join, so
+    # neither plans a sort-merge join; inter (≤ sampled-pair rows after
+    # the aggregate) is the broadcast build side of the left join.
+    return _sql(spark, sf_dir, f"""
+        WITH est AS (
+          SELECT /*+ BROADCAST(a) */ a.doc_a, a.doc_b, {m} AS m
+          FROM (SELECT /*+ BROADCAST(p) */ p.doc_a, p.doc_b, {", ".join(f"s.mh{j}" for j in range(N_PERM))}
+                FROM {{pairs}} p JOIN {{sig}} s ON p.doc_a = s.doc_id) a
+          JOIN {{sig}} b ON a.doc_b = b.doc_id
+        ),
+        inter AS (
+          SELECT /*+ BROADCAST(p), BROADCAST(y) */ p.doc_a, p.doc_b, count(1) AS i
+          FROM {{pairs}} p
+          JOIN {{hc}} x ON p.doc_a = x.doc_id
+          JOIN {{hc}} y ON p.doc_b = y.doc_id AND x.sh = y.sh
+          GROUP BY p.doc_a, p.doc_b
+        ),
+        j AS (
+          SELECT /*+ BROADCAST(inter), BROADCAST(sza), BROADCAST(szb) */
+                 est.doc_a, est.doc_b, m / {float(N_PERM)}D AS est_j,
+                 coalesce(i, 0) / (sza.sz + szb.sz - coalesce(i, 0)) AS exact_j
+          FROM est
+          LEFT JOIN inter ON est.doc_a = inter.doc_a AND est.doc_b = inter.doc_b
+          JOIN {{sizes}} sza ON est.doc_a = sza.doc_id
+          JOIN {{sizes}} szb ON est.doc_b = szb.doc_id
         )
-        .localCheckpoint(eager=True),
-    )
-    sig = _minhash_sig_df(spark, sf_dir)
-    a = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(N_PERM)],
-    )
-    b = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(N_PERM)],
-    )
-    m = sum(
-        (F.col(f"a{j}") == F.col(f"b{j}")).cast("int") for j in range(N_PERM)
-    ).alias("m")
-    # broadcast the PAIR side (bounded by candidate count), never the
-    # corpus-sized signature relation
-    est = (
-        F.broadcast(F.broadcast(pairs).join(a, "doc_a"))
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", m)
-    )
-    from generic_data_ingestor_framework_spark.cachemgr import shared_persist
-
-    def _cand_shingles() -> DataFrame:
-        hs = (
-            _exploded_shingles(spark, sf_dir)
-            .select("doc_id", portable_hash32(F.col("shingle")).alias("sh"))
-            .distinct()
-        )
-        cand = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .unionAll(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        return hs.join(F.broadcast(cand), "doc_id")
-
-    # referenced by sizes + both sides of the intersection join: persist
-    # the candidate-pruned relation once (bounded by candidate docs)
-    hc = shared_persist(spark, ("mh_acc_cand_shingles", sf_dir), _cand_shingles)
-    # candidate-doc-sized; referenced as BOTH join sides below, which
-    # re-ran the aggregate twice per call — checkpoint it once
-    sizes = shared_value(
-        spark,
-        ("mh_acc_sizes", sf_dir),
-        lambda: hc.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("sz"))
-        .localCheckpoint(eager=True),
-    )
-    x = hc.select(F.col("doc_id").alias("doc_a"), "sh")
-    y = hc.select(F.col("doc_id").alias("doc_b"), "sh")
-    # r14 opt: broadcast the pair side into the doc_a expansion (same
-    # bounded class as est's build side) so the candidate-shingle
-    # relation streams instead of shuffling by doc_a — 2 Exchange → 0
-    # on that join. The y side is the SAME candidate-pruned persisted
-    # relation (bounded by candidate docs × their shingles), so the
-    # set-intersection join broadcasts too instead of planning a
-    # sort-merge join — another 2 Exchange + 2 Sort removed.
-    inter = (
-        F.broadcast(pairs).join(x, "doc_a")
-        .join(F.broadcast(y), ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sza = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    szb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    est_j = F.col("m") / F.lit(float(N_PERM))
-    exact_j = F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i"))
-    # r14 opt: inter (≤ sampled-pair rows after the aggregate) joins as
-    # the broadcast build side — the left-outer was a SortMergeJoin (the
-    # LEFT side cannot broadcast), 2 Exchange + 2 Sort → 0
-    return (
-        est.join(F.broadcast(inter), ["doc_a", "doc_b"], "left")
-        .withColumn("i", F.coalesce("i", F.lit(0)))
-        .join(F.broadcast(sza), "doc_a")
-        .join(F.broadcast(szb), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.floor(est_j * 10000) / 10000).alias("est_jaccard"),
-            (F.floor(exact_j * 10000) / 10000).alias("exact_jaccard"),
-            (F.floor(F.abs(est_j - exact_j) * 10000) / 10000).alias("abs_err"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
+        SELECT doc_a, doc_b,
+               floor(est_j * 10000) / 10000 AS est_jaccard,
+               floor(exact_j * 10000) / 10000 AS exact_jaccard,
+               floor(abs(est_j - exact_j) * 10000) / 10000 AS abs_err
+        FROM j ORDER BY doc_a, doc_b
+    """, pairs=pairs, sig=_minhash_sig_df(spark, sf_dir), hc=hc, sizes=sizes)
 
 
 TRI_DEG_CAP = 64  # max raw degree for a node to enter the triangle census
@@ -1408,60 +1288,21 @@ def lsh_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``1/MOD²`` of the pair mass — the audit's cost knob); the
     inverted-index join enumerates only nonzero-overlap pairs; all
     rates are integer-count ratios."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(
-            portable_hash32(F.concat(F.lit("s"), F.col("doc_id").cast("string")))
-            % SCURVE_DOC_MOD
-            == 0
-        )
-    )
-    from generic_data_ingestor_framework_spark.cachemgr import (
-        shared_persist,
-        shared_value,
-    )
+    from generic_data_ingestor_framework_spark.cachemgr import shared_persist, shared_value
 
-    hs = shared_persist(
-        spark,
-        ("scurve_hs", sf_dir),
-        lambda: (
-            _exploded_shingles(spark, sf_dir)
-            .select("doc_id", portable_hash32(F.col("shingle")).alias("sh"))
-            .distinct()
-            .join(F.broadcast(docs), "doc_id")
-        ),
-    )
-    sizes = hs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = hs.select(F.col("doc_id").alias("doc_a"), "sh")
-    b = hs.select(F.col("doc_id").alias("doc_b"), "sh")
-    nonzero = (
-        a.join(b, "sh")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-        .join(
-            F.broadcast(sizes.select(F.col("doc_id").alias("doc_a"),
-                                     F.col("sz").alias("sza"))), "doc_a")
-        .join(
-            F.broadcast(sizes.select(F.col("doc_id").alias("doc_b"),
-                                     F.col("sz").alias("szb"))), "doc_b")
-        .withColumn("u", F.col("sza") + F.col("szb") - F.col("i"))
-    )
-    cands = shared_persist(
-        spark,
-        ("scurve_cands", sf_dir),
-        lambda: (
-            dedup_minhash_lsh_pairs(spark, sf_dir)
-            .join(F.broadcast(docs.select(F.col("doc_id").alias("doc_a"))), "doc_a")
-            .join(F.broadcast(docs.select(F.col("doc_id").alias("doc_b"))), "doc_b")
-            .withColumn("cand", F.lit(1))
-        ),
-    )
-    bucket = F.least(F.lit(9), F.floor(10 * F.col("i") / F.col("u"))).cast("int")
-    flagged = nonzero.join(cands, ["doc_a", "doc_b"], "left").select(
-        bucket.alias("bucket"), F.coalesce("cand", F.lit(0)).alias("cand")
-    )
+    sample_h = hash32_sql("concat('s', CAST(doc_id AS STRING))")
+    docs = f"SELECT doc_id FROM {{documents}} WHERE {sample_h} % {SCURVE_DOC_MOD} = 0"
+    hs = shared_persist(spark, ("scurve_hs", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(docs) */ hs.doc_id, hs.sh
+        FROM (SELECT DISTINCT doc_id, {hash32_sql("shingle")} AS sh FROM {{shingles}}) hs
+        JOIN ({docs}) docs ON hs.doc_id = docs.doc_id
+    """, shingles=_exploded_shingles(spark, sf_dir)))
+    cands = shared_persist(spark, ("scurve_cands", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(da), BROADCAST(db) */ p.doc_a, p.doc_b, 1 AS cand
+        FROM {{pairs}} p
+        JOIN ({docs}) da ON p.doc_a = da.doc_id
+        JOIN ({docs}) db ON p.doc_b = db.doc_id
+    """, pairs=dedup_minhash_lsh_pairs(spark, sf_dir)))
     # bucket-count relation is ≤11 rows but its lineage is the whole
     # audit: truncate it so the totals/zero-row derivations below read
     # the materialized rows instead of re-running the pipeline.
@@ -1469,60 +1310,50 @@ def lsh_scurve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quadratic ground-truth join during DataFrame CONSTRUCTION on
     # every call — ~1.5 s per warm call for rows the session already
     # held (cachemgr releases the blocks at clear_caches).
-    per_bucket = shared_value(
-        spark,
-        ("scurve_per_bucket", sf_dir),
-        lambda: flagged.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("cand").alias("n_candidates"),
-        ).localCheckpoint(eager=True),
-    )
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n"))
-    totals = per_bucket.agg(
-        F.coalesce(F.sum("n_pairs"), F.lit(0)).alias("nz"),
-        F.coalesce(F.sum("n_candidates"), F.lit(0)).alias("cand_nz"),
-    )
-    cand_all = cands.agg(F.count(F.lit(1)).alias("cand_all"))
-    zero_row = (
-        n_docs.crossJoin(totals)
-        .crossJoin(cand_all)
-        .select(
-            F.lit(-1).cast("int").alias("bucket"),
-            (F.col("n") * (F.col("n") - 1) / 2 - F.col("nz"))
-            .cast("bigint")
-            .alias("n_pairs"),
-            (F.col("cand_all") - F.col("cand_nz")).cast("bigint").alias("n_candidates"),
+    per_bucket = shared_value(spark, ("scurve_per_bucket", sf_dir), lambda: _sql(
+        spark, sf_dir, """
+        WITH sizes AS (SELECT doc_id, count(1) AS sz FROM {hs} GROUP BY doc_id),
+        nonzero AS (
+          SELECT /*+ BROADCAST(sza), BROADCAST(szb) */ p.doc_a, p.doc_b, i,
+                 sza.sz + szb.sz - i AS u
+          FROM (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(1) AS i
+                FROM {hs} a JOIN {hs} b ON a.sh = b.sh
+                WHERE a.doc_id < b.doc_id GROUP BY a.doc_id, b.doc_id) p
+          JOIN sizes sza ON p.doc_a = sza.doc_id
+          JOIN sizes szb ON p.doc_b = szb.doc_id
         )
-    )
+        SELECT bucket, count(1) AS n_pairs, sum(cand) AS n_candidates
+        FROM (SELECT CAST(least(9, floor(10 * i / u)) AS INT) AS bucket,
+                     coalesce(c.cand, 0) AS cand
+              FROM nonzero n LEFT JOIN {cands} c ON n.doc_a = c.doc_a AND n.doc_b = c.doc_b)
+        GROUP BY bucket
+    """, hs=hs, cands=cands).localCheckpoint(eager=True))
     # pow() is not correctly-rounded identically across engines;
     # integer exponents via LEFT-ASSOCIATED multiplication are
-    r_rows, n_bands = N_PERM // BANDS, BANDS
-    s_mid = (F.col("bucket") + 0.5) / 10
-    s_r = s_mid
-    for _ in range(r_rows - 1):
-        s_r = s_r * s_mid
-    base = 1 - s_r
-    miss = base
-    for _ in range(n_bands - 1):
-        miss = miss * base
-    theo = F.when(
-        F.col("bucket") >= 0, F.floor((1 - miss) * 10000) / 10000
-    ).otherwise(F.lit(0.0))
-    rate = F.when(
-        F.col("n_pairs") > 0,
-        F.floor(F.col("n_candidates") * 10000 / F.col("n_pairs")) / 10000,
-    ).otherwise(F.lit(0.0))
-    return (
-        per_bucket.unionByName(zero_row)
-        .select(
-            "bucket",
-            "n_pairs",
-            "n_candidates",
-            rate.alias("cand_rate"),
-            theo.alias("theo_rate"),
+    s_r = " * ".join(["s_mid"] * (N_PERM // BANDS))
+    miss = " * ".join(["base"] * BANDS)
+    return _sql(spark, sf_dir, f"""
+        WITH zero AS (
+          SELECT -1 AS bucket, CAST(n * (n - 1) / 2 - nz AS BIGINT) AS n_pairs,
+                 CAST(cand_all - cand_nz AS BIGINT) AS n_candidates
+          FROM (SELECT count(1) AS n FROM ({docs}))
+          CROSS JOIN (SELECT coalesce(sum(n_pairs), 0) AS nz,
+                             coalesce(sum(n_candidates), 0) AS cand_nz FROM {{per_bucket}})
+          CROSS JOIN (SELECT count(1) AS cand_all FROM {{cands}})
+        ),
+        curve AS (
+          SELECT *, {miss} AS miss
+          FROM (SELECT *, 1 - {s_r} AS base
+                FROM (SELECT *, (bucket + 0.5D) / 10 AS s_mid
+                      FROM (SELECT * FROM {{per_bucket}} UNION ALL SELECT * FROM zero)))
         )
-        .orderBy("bucket")
-    )
+        SELECT bucket, n_pairs, n_candidates,
+               CASE WHEN n_pairs > 0 THEN floor(n_candidates * 10000 / n_pairs) / 10000
+                    ELSE 0.0D END AS cand_rate,
+               CASE WHEN bucket >= 0 THEN floor((1 - miss) * 10000) / 10000
+                    ELSE 0.0D END AS theo_rate
+        FROM curve ORDER BY bucket
+    """, per_bucket=per_bucket, cands=cands)
 
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1554,23 +1385,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped subgraph, then the wedge join — whose intermediate is now
     bounded by ``TRI_DEG_CAP · |E|`` regardless of skew; the corpus
     text is never touched."""
-    from generic_data_ingestor_framework_spark.cachemgr import shared_persist
-
-    def _capped_edges() -> DataFrame:
-        pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
-        e0 = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        deg0 = (
-            e0.select(F.col("a").alias("doc_id"))
-            .unionAll(e0.select(F.col("b").alias("doc_id")))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("d0"))
-        )
-        keep = deg0.filter(F.col("d0") <= TRI_DEG_CAP).select("doc_id")
-        return (
-            e0.join(keep.select(F.col("doc_id").alias("a")), "a")
-            .join(keep.select(F.col("doc_id").alias("b")), "b")
-            .select("a", "b")
-        )
+    from generic_data_ingestor_framework_spark.cachemgr import shared_value
 
     # referenced five times below (three wedge sides + both degree
     # unions): checkpoint the induced edge list once per session —
@@ -1578,45 +1393,35 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the five references re-embedded (and Catalyst re-optimized)
     # the whole pair-generation subtree per call; the checkpoint is the
     # same executor storage with a truncated plan (r14 opt)
-    from generic_data_ingestor_framework_spark.cachemgr import shared_value
-
-    e = shared_value(
-        spark,
-        ("tri_capped_edges", sf_dir),
-        lambda: _capped_edges().localCheckpoint(eager=True),
-    )
-    x, y, z = e.alias("x"), e.alias("y"), e.alias("z")
-    tri = (
-        x.join(y, F.col("x.b") == F.col("y.a"))
-        .join(z, (F.col("x.a") == F.col("z.a")) & (F.col("y.b") == F.col("z.b")))
-        .select(
-            F.col("x.a").alias("ta"), F.col("x.b").alias("tb"), F.col("y.b").alias("tc")
+    e = shared_value(spark, ("tri_capped_edges", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        WITH e0 AS (SELECT doc_a AS a, doc_b AS b FROM {{pairs}}),
+        keep AS (
+          SELECT doc_id FROM (SELECT a AS doc_id FROM e0 UNION ALL SELECT b FROM e0)
+          GROUP BY doc_id HAVING count(1) <= {TRI_DEG_CAP}
         )
-    )
-    part = (
-        tri.select(F.explode(F.array("ta", "tb", "tc")).alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    deg = (
-        e.select(F.col("a").alias("doc_id"))
-        .unionAll(e.select(F.col("b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return (
-        part.join(deg, "doc_id")
-        .select(
-            "doc_id",
-            "degree",
-            "n_triangles",
-            F.round(
-                2.0 * F.col("n_triangles") / (F.col("degree") * (F.col("degree") - 1)),
-                6,
-            ).alias("clustering_coeff"),
+        SELECT e0.a, e0.b FROM e0
+        JOIN keep ka ON e0.a = ka.doc_id
+        JOIN keep kb ON e0.b = kb.doc_id
+    """, pairs=dedup_minhash_lsh_pairs(spark, sf_dir)).localCheckpoint(eager=True))
+    return _sql(spark, sf_dir, """
+        WITH tri AS (
+          SELECT x.a AS ta, x.b AS tb, y.b AS tc
+          FROM {e} x JOIN {e} y ON x.b = y.a
+          JOIN {e} z ON x.a = z.a AND y.b = z.b
+        ),
+        part AS (
+          SELECT doc_id, count(1) AS n_triangles
+          FROM (SELECT explode(array(ta, tb, tc)) AS doc_id FROM tri) GROUP BY doc_id
+        ),
+        deg AS (
+          SELECT doc_id, count(1) AS degree
+          FROM (SELECT a AS doc_id FROM {e} UNION ALL SELECT b FROM {e}) GROUP BY doc_id
         )
-        .orderBy("doc_id")
-    )
+        SELECT doc_id, degree, n_triangles,
+               round(2.0D * n_triangles / (degree * (degree - 1)), 6) AS clustering_coeff
+        FROM part JOIN deg USING (doc_id)
+        ORDER BY doc_id
+    """, e=e)
 
 
 QUERIES = {

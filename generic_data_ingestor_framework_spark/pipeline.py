@@ -283,12 +283,12 @@ def _step_decontaminate(df: DataFrame, p: dict) -> DataFrame:
     bcol = p.get("benchmark_column", col)
     bgrams = (
         bench.select(tokens_col(bcol).alias("__ts"))
-        .select(F.explode(shingles_from_tokens(F.col("__ts"), k=k)).alias("gram"))
+        .select(F.explode(shingles_from_tokens("__ts", k=k)).alias("gram"))
         .distinct()
     )
     hit_ids = (
         df.select(idc, tokens_col(col).alias("__ts"))
-        .select(idc, F.explode(shingles_from_tokens(F.col("__ts"), k=k)).alias("gram"))
+        .select(idc, F.explode(shingles_from_tokens("__ts", k=k)).alias("gram"))
         .join(F.broadcast(bgrams), "gram", "semi")
         .select(idc)
         .distinct()

@@ -372,16 +372,20 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer-floor basis points / 10000: no cross-engine round ties
         rows.append(
             f"struct({i} AS step_idx, '{step}' AS step, n{i} AS n_users,"
-            f" floor(n{i} * 10000 / n{max(i - 1, 1)}) / 10000 AS conversion)"
+            f" floor(n{i} * 10000 / nullif(n{max(i - 1, 1)}, 0)) / 10000 AS conversion)"
         )
     ks = range(1, len(FUNNEL_STEPS) + 1)
     # rows within a user all carry identical t1..tk; collapse on the
-    # partitioning the windows established (no new exchange)
+    # partitioning the windows established (no new exchange). A step no
+    # user reached has no row (nor has any later step): its successor's
+    # conversion would divide by zero
     return _sql(spark, sf_dir, f"""
-        SELECT inline(array({", ".join(rows)}))
-        FROM (SELECT {", ".join(f"sum(CAST(t{i} IS NOT NULL AS BIGINT)) AS n{i}" for i in ks)}
-              FROM (SELECT user_id, {", ".join(f"min(t{i}) AS t{i}" for i in ks)}
-                    FROM ({chain}) GROUP BY user_id))
+        SELECT * FROM (
+          SELECT inline(array({", ".join(rows)}))
+          FROM (SELECT {", ".join(f"sum(CAST(t{i} IS NOT NULL AS BIGINT)) AS n{i}" for i in ks)}
+                FROM (SELECT user_id, {", ".join(f"min(t{i}) AS t{i}" for i in ks)}
+                      FROM ({chain}) GROUP BY user_id)))
+        WHERE n_users > 0
     """)
 
 
@@ -972,9 +976,8 @@ def stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once across micro-batches.
 
     Plan: the stream computes each doc's 8-permutation MinHash
-    signature PER ROW (``array_min`` over the shingle array — the
-    same affine permutations over the same 32-bit shingle hash as the
-    batch ``_minhash_sig_df`` aggregate, so signatures are identical),
+    signature PER ROW (``bands_per_row``: the batch signature's own
+    ``signature_sql`` and band split, so signatures are identical),
     explodes to band rows, stream-static LEFT-joins the session-
     persisted corpus band index, then claims bands in
     ``applyInPandasWithState`` keyed on ``band_key``: state is
@@ -991,18 +994,19 @@ def stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     deciding the winner — the same contract ``stream_dedup_keys``
     documents for exact dedup."""
     from generic_data_ingestor_framework_spark.llm.dedup import (
+        BAND_KEY_SQL,
         _banded_df,
         portable_hash32,
     )
 
     bucket = portable_hash32(F.col("doc_id").cast("string")) % 2
     # per-row banding (no aggregate — legal on an unbounded stream),
-    # signature-identical to the batch aggregate: see bands_per_row
+    # signature-identical to the batch bands: see bands_per_row
     stream_docs = read_docs_stream(spark, sf_dir).filter(bucket == 1)
     corpus = (
         _banded_df(spark, sf_dir)
         .filter(F.col("bucket") == 0)
-        .select(F.concat_ws(":", "band_idx", "band_sig").alias("band_key"))
+        .select(F.expr(BAND_KEY_SQL).alias("band_key"))
         .distinct()
     )
 

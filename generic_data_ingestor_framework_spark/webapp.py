@@ -109,10 +109,18 @@ def _make_handler(state: _State):
                 from generic_data_ingestor_framework_spark import catalog
 
                 table = q.get("table", [""])[0]
-                if not catalog.table_exists(state.spark, table):
+                # a /process rewrite drops the table for the length of its
+                # write: read under the same lock, answer after it
+                with state.lock:
+                    cols = (
+                        catalog.describe_table(state.spark, table)
+                        if catalog.table_exists(state.spark, table)
+                        else None
+                    )
+                if cols is None:
                     self._json({"error": f"no such table: {table}"}, 404)
                     return
-                self._json({"table": table, "columns": catalog.describe_table(state.spark, table)})
+                self._json({"table": table, "columns": cols})
             elif url.path == "/preview":
                 from generic_data_ingestor_framework_spark import catalog, query
 
@@ -127,17 +135,15 @@ def _make_handler(state: _State):
                         {"error": f"limit must be in [0, {MAX_PREVIEW_ROWS}]"}, 400
                     )
                     return
-                if not catalog.table_exists(state.spark, table):
+                with state.lock:  # see /schema
+                    found = catalog.table_exists(state.spark, table)
+                    if found:
+                        df = query.preview(state.spark, table, limit=limit)
+                        rows = [[r[c] for c in df.columns] for r in df.collect()]
+                if not found:
                     self._json({"error": f"no such table: {table}"}, 404)
                     return
-                df = query.preview(state.spark, table, limit=limit)
-                self._json(
-                    {
-                        "table": table,
-                        "columns": df.columns,
-                        "rows": [[r[c] for c in df.columns] for r in df.collect()],
-                    }
-                )
+                self._json({"table": table, "columns": df.columns, "rows": rows})
             elif url.path == "/results":
                 if state.results is None:
                     self._json({"error": "nothing processed yet"}, 404)

@@ -38,8 +38,9 @@ def _temp_views(spark) -> set[str]:
 
 def test_text_members_build_in_a_few_jvm_commands(spark, jvm_commands):
     members = _text_members()
-    # the relational floor (40) plus 19 text-statistics and 12 event-time members
-    assert len(members) >= 71, members
+    # the relational floor (40) plus 19 text-statistics, 12 event-time
+    # and 11 dedup members
+    assert len(members) >= 82, members
     views = _temp_views(spark)
     for name in members:  # first use of each table reader and entry point
         MEMBER_QUERIES[name](spark, SF_SMALL)

@@ -333,6 +333,30 @@ def test_funnel_conversion_ordering_matters(spark, tmp_path):
     assert got["purchase"] == (1, 0.5)
 
 
+def test_funnel_conversion_stops_at_an_empty_step(spark, tmp_path):
+    """Views and no clicks: the click step has no users, so it has no
+    row (as in the oracle) and nothing divides by its zero count."""
+    from datetime import datetime
+
+    import duckdb
+
+    from generic_data_ingestor_framework_spark.streaming import ORACLES, funnel_conversion
+
+    d = tmp_path / "views_only"
+    spark.createDataFrame(
+        [(1, 1, "view", datetime(2024, 3, 1, 1), 1.0),
+         (2, 2, "view", datetime(2024, 3, 1, 2), 1.0)],
+        "user_id bigint, event_id bigint, event_type string, ts timestamp, value double",
+    ).write.parquet(str(d / "events.parquet"))
+    got = [tuple(r) for r in funnel_conversion(spark, str(d)).collect()]
+    assert got == [(1, "view", 2, 1.0)]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{d / 'events.parquet'}/*.parquet'"
+    )
+    assert [tuple(r) for r in con.execute(ORACLES["funnel_conversion"]).fetchall()] == got
+
+
 def test_cohort_retention_planted(spark, tmp_path):
     """Planted cohorts: week-0 retention is 1.0 by construction; a user
     active in a later week counts toward their FIRST-seen cohort only."""

@@ -226,11 +226,11 @@ def _skew_evidence(spark) -> dict:
 
 def _sig_width_linearity(spark) -> dict:
     """Signature-build cost vs MinHash width (8 → 128 perms) at both
-    SFs, COLD each time (caches cleared, so the shingle explosion and
-    the hash-aggregate are both rebuilt). The build is one
-    hash-aggregate whatever the width — 128 perms should cost a small
-    multiple of 8 (wider aggregate state, same shuffle count) and the
-    decade-up ratio at 128 should stay ~data-scale."""
+    SFs, COLD each time (caches cleared, so the per-row signature is
+    rebuilt from the text). The build is one projection whatever the
+    width — 128 perms should cost a small multiple of 8 (more min-hash
+    columns, same shuffle count) and the decade-up ratio at 128 should
+    stay ~data-scale."""
     from generic_data_ingestor_framework_spark import clear_caches
 
     res = {}

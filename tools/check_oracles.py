@@ -48,13 +48,17 @@ members >60 s — almost all of it NOT engine compute):
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file sits in, whatever the working directory
+REPO = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from generic_data_ingestor_framework_spark.session import get_spark  # noqa: E402
@@ -154,10 +158,13 @@ def main():
     only = set(argv[1:])
     records: dict[str, dict] = {}
 
+    # Spark's Python workers import the package too: they inherit
+    # PYTHONPATH from the JVM, which inherits it when it starts here
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark("oracle-check")
     con = duckdb.connect()
-    import os
-
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         # Spark-written tables are DIRECTORIES of part files (e.g. the
