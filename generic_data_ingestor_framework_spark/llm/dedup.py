@@ -1105,8 +1105,10 @@ def pagerank_doc_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         return e.join(deg, "u")
 
-    ed = shared_persist(spark, ("pr_edges_deg", sf_dir), _edges_with_degree)
     n = shared_value(spark, ("pr_n", sf_dir), lambda: docs.count())
+    if n == 0:  # no documents: no ranks (the seed rank 1/n is undefined)
+        return docs.select("doc_id", F.lit(None).cast("double").alias("pagerank"))
+    ed = shared_persist(spark, ("pr_edges_deg", sf_dir), _edges_with_degree)
     base = 0.15 / n
     p = docs.select(F.col("doc_id").alias("v"), F.lit(1.0 / n).alias("p"))
     p = p.localCheckpoint(eager=True)  # referenced once per iteration; seed flat

@@ -112,16 +112,24 @@ def bump(spark: SparkSession, root: str) -> None:
 
 
 def fingerprint(spark: SparkSession, root: str) -> tuple:
-    """(name, mtime, size) of every file under ``{root}/meta``: one FS
-    metadata call, no job. Every committing writer rewrites meta last
-    (new part-file names), so any out-of-process commit changes it."""
-    fs, p = hadoop_fs_path(spark, f"{root}/meta")
+    """(name, mtime, size) of every part file under ``{root}/meta``: one
+    FS metadata call, no job. Every committing writer rewrites meta last
+    (new part-file names), so any out-of-process commit changes it. The
+    file system, the path and the part-file filter are resolved once
+    per session and root."""
+    from generic_data_ingestor_framework_spark.cachemgr import shared_value
+
+    def resolve():
+        fs, p = hadoop_fs_path(spark, f"{root}/meta")
+        return fs, p, spark._jvm.org.apache.hadoop.fs.GlobFilter("part-*")
+
+    fs, p, parts = shared_value(spark, ("index_meta_path", root), resolve)
     if not fs.exists(p):
         return ()
     return tuple(
         sorted(
             (st.getPath().getName(), st.getModificationTime(), st.getLen())
-            for st in fs.listStatus(p)
+            for st in fs.listStatus(p, parts)
         )
     )
 
@@ -130,17 +138,23 @@ def memo(spark: SparkSession, root: str, key: tuple, builder):
     """``builder()`` memoized per (``key``, root, epoch, fingerprint)
     through ``cachemgr``: valid until this process mutates the index or
     another process commits to it. A new version evicts the entries of
-    the versions it supersedes."""
+    the versions it supersedes. The value is filed under the version the
+    build leaves, so a builder that rebuilds the index is hit next time."""
     from generic_data_ingestor_framework_spark.cachemgr import (
         evict_prefix,
         has_value,
         shared_value,
     )
 
-    full = (*key, root, _epoch(spark, root)[0], fingerprint(spark, root))
-    if not has_value(spark, full):
-        evict_prefix(spark, (*key, root))
-    return shared_value(spark, full, builder)
+    def version() -> tuple:
+        return (*key, root, _epoch(spark, root)[0], fingerprint(spark, root))
+
+    full = version()
+    if has_value(spark, full):
+        return shared_value(spark, full, builder)
+    evict_prefix(spark, (*key, root))
+    value = builder()
+    return shared_value(spark, version(), lambda: value)
 
 
 def member_root(spark: SparkSession, name: str) -> str:

@@ -1,7 +1,23 @@
 """Similarity search over the ``embeddings`` table (array<float> column).
 
-Brute-force cosine top-k as the correctness baseline, plus an
-LSH-bucketed variant (random-hyperplane signs) as the scale path.
+Brute-force cosine top-k as the correctness baseline, hyperplane LSH,
+int8 and product quantization, and an IVF index (k-means cells, probed
+per query) with its recall and cost audits and its persisted lifecycle.
+
+A query member is one Spark SQL text (``relational._sql``) over
+``embeddings`` and the session's memoized relations (the query
+vectors, the IVF assignment, the probed cells, the PQ codes and lookup
+table), passed as named frames. Each vector formula is one Spark SQL
+fragment that the texts splice in and the Column helpers wrap with
+``F.expr``: the ``embeddings`` cast (``vectors_sql``), the dot product
+(``dot_sql``), the norm (``norm_sql``), the rounded cosine
+(``cos_sql``), the hyperplane bucket (``plane_bucket_sql``) and the
+int8 scale and codes (``int8_sql``); the id/vector/norm projection
+(``_points_sql``), the per-query top-k window (``_topk_sql``) and the
+exact-vs-approximate recall join (``_hits_sql``) are written once too.
+The memo builders that score against driver-held centroids or
+codebooks (Arrow UDFs) and the index-lifecycle members keep their hand
+plans.
 
 All vector math uses built-in higher-order functions (``zip_with`` +
 ``aggregate``) — JVM-side, no Python in the hot loop. Elements are cast
@@ -25,7 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from generic_data_ingestor_framework_spark.llm import indexstore
-from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.llm.dedup import ident_sql
+from generic_data_ingestor_framework_spark.relational import _sql
 from generic_data_ingestor_framework_spark.session import local_relation
 
 N_QUERY = 5   # vec_id < 5 are the query vectors
@@ -33,12 +50,126 @@ TOP_K = 3
 N_PLANES = 4  # LSH hyperplanes → 16 buckets
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
+def vectors_sql(a: str) -> str:
+    """The array ``a`` with its elements cast to double, before any
+    product: the one spelling of the ``embeddings`` cast."""
+    return f"transform({a}, x -> CAST(x AS DOUBLE))"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """The dot product of two double arrays, folded left to right from
+    ``0D`` (Spark SQL reads ``0.0`` as DECIMAL)."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, t) -> acc + t)"
+
+
+def norm_sql(a: str) -> str:
+    """The L2 norm of a double array, the same left-to-right fold."""
+    return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))"
+
+
+def cos_of_sql(dot: str, an: str, bn: str) -> str:
+    """The cosine from a dot product (exact, approximate or scored
+    elsewhere) and the two norms, rounded to the 6-dp query contract."""
+    return f"round({dot} / ({an} * {bn}), 6)"
+
+
+def cos_sql(a: str, an: str, b: str, bn: str) -> str:
+    """The cosine of ``a`` and ``b`` from their norms ``an``/``bn``."""
+    return cos_of_sql(dot_sql(a, b), an, bn)
+
+
+def plane_bucket_sql(v: str, first_plane: str | int, n_planes: int) -> str:
+    """The bucket of ``v`` under ``n_planes`` hyperplanes from
+    ``first_plane`` on: bit p is set when ``v`` projects positively on
+    plane ``first_plane + p``. Plane q's weight on dimension i is
+    ``((7·q + 11·i) mod 13) − 6`` — arithmetic, so the oracle rebuilds
+    the planes exactly. ``first_plane`` may be a lambda variable."""
+    return f"""aggregate(sequence(0, {n_planes - 1}), 0, (bits, p) -> bits + IF(
+        aggregate(zip_with({v}, transform(sequence(0, size({v}) - 1),
+                    i -> CAST((7 * ({first_plane} + p) + 11 * i) % 13 - 6 AS DOUBLE)),
+                  (x, w) -> x * w), 0D, (acc, t) -> acc + t) > 0, shiftleft(1, p), 0))"""
+
+
+def int8_sql(src: str) -> str:
+    """The (vec_id, v) rows of ``src`` with their symmetric int8
+    ``scale`` (max |x| / 127, floored at 1e-12 so a zero vector still
+    divides) and codes ``q`` (round(x / scale) per element). The codes
+    read ``scale`` beside passing it on: a column read once would be
+    inlined into the lambda and recomputed per element."""
+    return f"""(SELECT vec_id, v, scale, transform(v, x -> CAST(round(x / scale) AS INT)) AS q
+        FROM (SELECT vec_id, v, greatest(array_max(transform(v, x -> abs(x))), 1e-12D) / 127D
+                     AS scale FROM {src}))"""
+
+
+def _points_sql(
+    src: str, id_: str = "point_id", v: str = "pv", n: str = "pn",
+    where: str = f"vec_id >= {N_QUERY}",
+) -> str:
+    """The (vec_id, v) rows of ``src`` that pass ``where``, as
+    (``id_``, ``v``, ``n``): id, vector and norm, the projection every
+    scoring side starts from (by default the candidates: every vector
+    but the query slice)."""
+    return f"(SELECT vec_id AS {id_}, v AS {v}, {norm_sql('v')} AS {n} FROM {src} WHERE {where})"
+
+
+def _topk_sql(
+    src: str, score: str = "cos_sim", tie: str = "neighbor_id", k: int = TOP_K,
+    rank: str = "rank",
+) -> str:
+    """The rows of ``src`` numbered per query by ``score`` descending,
+    ties on ``tie``, kept while the number ``rank`` is at most ``k``:
+    the one per-query top-k window."""
+    return f"""SELECT * FROM (
+        SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY {score} DESC, {tie}) AS {rank}
+        FROM ({src})) WHERE {rank} <= {k}"""
+
+
+# the vectors as doubles, a subquery over the table
+_VECS = f"(SELECT vec_id, {vectors_sql('embedding')} AS v, label FROM {{embeddings}})"
+# the query side (query_id, qv, qn) over the memoized query vectors
+_QUERY_SIDE = _points_sql("{qvecs}", "query_id", "qv", "qn", "true")
+# brute-force cosine top-k of each query over every candidate
+_COSINE_TOPK = _topk_sql(f"""
+    SELECT /*+ BROADCAST(q) */ q.query_id, c.neighbor_id,
+           {cos_sql("q.qv", "q.qn", "c.cv", "c.cn")} AS cos_sim
+    FROM {_points_sql(_VECS, "neighbor_id", "cv", "cn")} c CROSS JOIN {_QUERY_SIDE} q""")
+
+
+def _hits_sql(approx: str) -> str:
+    """Each row of the exact top-k ``exact`` (a CTE of ``_COSINE_TOPK``)
+    as (query_id, hit), hit 1 when the ``approx`` text returned the
+    same neighbor: the one exact-vs-approximate recall join."""
+    return f"""SELECT e.query_id, IF(a.neighbor_id IS NULL, 0, 1) AS hit
+        FROM exact e LEFT JOIN ({approx}) a
+          ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id"""
+
+
+def _recall_sql(approx: str) -> str:
+    """Per-query recall of the ``approx`` top-k against exact search
+    over the same candidates: (query_id, k, n_hits)."""
+    return f"""WITH exact AS ({_COSINE_TOPK})
+        SELECT query_id, count(1) AS k, sum(hit) AS n_hits
+        FROM ({_hits_sql(approx)}) GROUP BY query_id ORDER BY query_id"""
+
+
+def _double_sql(x: float) -> str:
+    """The driver double ``x`` as an exact Spark SQL double: the
+    shortest repr round-trips through a correctly rounded parse."""
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+def _as_double(col: str):
+    """``vectors_sql`` over the column named ``col``."""
+    return F.expr(vectors_sql(ident_sql(col)))
+
+
+def _norm(col: str):
+    """``norm_sql`` over the column named ``col``."""
+    return F.expr(norm_sql(ident_sql(col)))
 
 
 def _py_norm(v) -> float:
-    """Driver-side L2 norm, bit-identical to ``_norm``: the same
+    """Driver-side L2 norm, bit-identical to ``norm_sql``: the same
     left-to-right fold of binary64 adds then a correctly-rounded sqrt
     (IEEE 754 — CPython floats and JVM doubles execute the identical
     op sequence)."""
@@ -68,9 +199,10 @@ def _mat_scores(cents: list[list[float]], mode: str):
 
     Bit-identity: the accumulator walks the dimensions left-to-right —
     ``acc = (acc + v_i·c_i)`` per element — exactly the sequential fold
-    ``_dot``/``_l2sq`` compute, and NumPy's elementwise binary64 ops are
-    IEEE-exact per element, so every score is bit-identical to the HOF
-    form (pinned by test_arrow_scorer_bit_identity)."""
+    ``dot_sql`` computes (squared L2: the same fold over differences),
+    and NumPy's elementwise binary64 ops are IEEE-exact per element, so
+    every score is bit-identical to the HOF form (pinned by
+    test_arrow_scorer_bit_identity)."""
     import numpy as np
     import pandas as pd
 
@@ -111,21 +243,15 @@ def _mat_scores(cents: list[list[float]], mode: str):
     return scores
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select("vec_id", _as_double(F.col("embedding")).alias("v"), "label")
+    """(vec_id, v, label): the ``embeddings`` rows as double vectors."""
+    return _sql(spark, sf_dir, f"SELECT * FROM {_VECS}")
+
+
+def _candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The candidate side (point_id, pv, pn): every vector but the
+    query slice."""
+    return _sql(spark, sf_dir, f"SELECT * FROM {_points_sql(_VECS)}")
 
 
 def _query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,10 +284,9 @@ def _query_vec_rows(spark: SparkSession, sf_dir: str):
     return shared_value(
         spark,
         ("ann_query_vec_rows", sf_dir),
-        lambda: _vectors(spark, sf_dir)
-        .filter(F.col("vec_id") < N_QUERY)
-        .select("vec_id", "v")
-        .collect(),
+        lambda: _sql(
+            spark, sf_dir, f"SELECT vec_id, v FROM {_VECS} WHERE vec_id < {N_QUERY}"
+        ).collect(),
     )
 
 
@@ -170,82 +295,30 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The query side is broadcast; ranking is a per-query window on the
     rounded similarity (round-then-rank keeps the order deterministic
-    across engines)."""
-    from pyspark.sql import Window as W
-
-    vecs = _vectors(spark, sf_dir)
-    # norms are projected ONCE per vector before the cross join — the
-    # per-pair work is then a single dot product (identical doubles, so
-    # the oracle contract is unchanged); the query side is the local
-    # memoized relation, so the corpus parquet is scanned once (r15)
-    q = _query_side(spark, sf_dir)
-    c = vecs.filter(F.col("vec_id") >= N_QUERY).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        _norm(F.col("v")).alias("cn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    across engines). Norms are projected once per vector before the
+    cross join, so the per-pair work is one dot product; the query side
+    is the memoized local relation, so the corpus is scanned once."""
+    return _sql(spark, sf_dir, _COSINE_TOPK, qvecs=_query_vecs(spark, sf_dir))
 
 
 def embed_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector L2 norm and dimensionality (vector hygiene check)."""
-    vecs = _vectors(spark, sf_dir)
-    return vecs.select(
-        "vec_id",
-        F.size(F.col("v")).alias("dim"),
-        F.round(_norm(F.col("v")), 6).alias("l2_norm"),
-        "label",
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT vec_id, size(v) AS dim, round({norm_sql("v")}, 6) AS l2_norm, label
+        FROM {_VECS}
+    """)
 
 
 def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucketing: sign pattern of N_PLANES
-    deterministic pseudo-random hyperplanes → 16-way bucket id.
-
-    Planes are generated arithmetically (plane p, dim i →
-    ((7·p + 11·i) mod 13) − 6) so the oracle reproduces them exactly.
-    Returns bucket occupancy — the pruning structure a scale-out ANN
-    join builds its shuffle on."""
-    vecs = _vectors(spark, sf_dir)
-
-    def _plane_weight(p: int):
-        # NOTE: must be a 1-arg lambda — PySpark treats 2-arg HOF lambdas
-        # as (element, index), so closures must bind `p` outside.
-        return lambda i: ((F.lit(7 * p) + F.lit(11) * i) % 13 - 6).cast("double")
-
-    sign_bits = []
-    for p in range(N_PLANES):
-        weights = F.transform(
-            F.sequence(F.lit(0), F.size(F.col("v")) - 1), _plane_weight(p)
-        )
-        proj = F.aggregate(
-            F.zip_with(F.col("v"), weights, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sign_bits.append(F.when(proj > 0, F.lit(2 ** p)).otherwise(F.lit(0)))
-    bucket = sign_bits[0]
-    for sb in sign_bits[1:]:
-        bucket = bucket + sb
-    return (
-        vecs.withColumn("bucket", bucket.cast("int"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_vectors"), F.min("vec_id").alias("min_vec_id"))
-        .orderBy("bucket")
-    )
+    deterministic pseudo-random hyperplanes (``plane_bucket_sql``) →
+    16-way bucket id. Returns bucket occupancy — the pruning structure
+    a scale-out ANN join builds its shuffle on."""
+    return _sql(spark, sf_dir, f"""
+        SELECT bucket, count(1) AS n_vectors, min(vec_id) AS min_vec_id
+        FROM (SELECT vec_id, {plane_bucket_sql("v", 0, N_PLANES)} AS bucket FROM {_VECS})
+        GROUP BY bucket ORDER BY bucket
+    """)
 
 
 N_CENTROIDS = 16     # k-means cells (init: first 16 candidate vectors)
@@ -261,12 +334,11 @@ def label_centroid_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid, one row per (label, dim): posexplode →
     hash-aggregate — the distributed element-wise mean that a k-means
     iteration or class-prototype computation uses."""
-    vecs = _vectors(spark, sf_dir)
-    return (
-        vecs.select("label", F.posexplode("v").alias("pos", "x"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.avg("x"), 6).alias("mean_x"))
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT label, pos, round(avg(x), 6) AS mean_x
+        FROM (SELECT label, posexplode(v) AS (pos, x) FROM {_VECS})
+        GROUP BY label, pos
+    """)
 
 
 def _kmeans_centroids(
@@ -288,16 +360,7 @@ def _kmeans_centroids(
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
 
     def build() -> list[tuple[int, list[float]]]:
-        cand = (
-            _vectors(spark, sf_dir)
-            .filter(F.col("vec_id") >= N_QUERY)
-            .select(
-                F.col("vec_id").alias("point_id"),
-                F.col("v").alias("pv"),
-                _norm(F.col("v")).alias("pn"),
-            )
-        )
-        return _kmeans_over(spark, cand, k)
+        return _kmeans_over(spark, _candidates(spark, sf_dir), k)
 
     return shared_value(spark, ("kmeans_centroids", sf_dir, k), build)
 
@@ -355,7 +418,7 @@ def _centroid_df(
 ) -> DataFrame:
     return local_relation(
         spark, _kmeans_centroids(spark, sf_dir, k), "centroid_id int, cv array<double>"
-    ).withColumn("cvn", _norm(F.col("cv")))
+    ).withColumn("cvn", _norm("cv"))
 
 
 def _frozen_cents(
@@ -367,7 +430,7 @@ def _frozen_cents(
     DataFrame and a collect job per call (r14 opt: every
     ``_nearest_cells(cdf=_centroid_df(...))`` call paid a ~0.3 s
     collect of rows the driver already held). ``_py_norm`` is the
-    bit-identical fold of ``_norm``."""
+    bit-identical fold of ``norm_sql``."""
     return [
         (cid, cv, _py_norm(cv)) for cid, cv in _kmeans_centroids(spark, sf_dir, k)
     ]
@@ -381,6 +444,7 @@ def _nearest_cells(
     id_col,
     n_cells,
     cents: list[tuple[int, list[float], float]] | None = None,
+    ranked: bool = False,
 ):
     """Per-id top-``n_cells`` centroid assignment as a PROJECTION: the
     centroids are driver-held (``cents``, or collected from ``cdf`` —
@@ -394,42 +458,36 @@ def _nearest_cells(
     Ordering contract unchanged: sims rounded 6 dp in the JVM, ties on
     centroid id ascending; ``reverse(array_sort(...))`` over
     ``(sim, -id)`` reproduces ``desc(sim), id`` exactly (NaNs, were
-    they ever present, sort first under both forms)."""
+    they ever present, sort first under both forms). ``ranked`` adds
+    each cell's 1-based place in that order as ``cell_rank``, so the
+    first p cells of an n-cell relation are its p-probe relation."""
     cents = cents if cents is not None else _cents_rows(cdf)
     scorer = _mat_scores([cv for _, cv, _ in cents], "dot")
     # ONE parsed SQL expression instead of k× (struct, round, lit, …)
     # builder calls: the column-API form cost ~500 py4j round-trips
-    # (~0.35 s of driver latency) per call site. CAST('<repr>' AS
-    # DOUBLE) round-trips the centroid norm exactly (shortest-repr →
-    # correctly-rounded parse), and the struct fields/rounding are the
-    # byte-for-byte same expressions the builder form produced.
+    # (~0.35 s of driver latency) per call site.
+    norm = ident_sql(norm_col)
     parts = ", ".join(
-        f"named_struct('sim', round(`__d`[{i}] / (`{norm_col}` * "
-        f"CAST('{cvn!r}' AS DOUBLE)), 6), 'nid', {-cid}, 'cid', {cid})"
+        f"named_struct('sim', {cos_of_sql(f'`__d`[{i}]', norm, _double_sql(cvn))}, "
+        f"'nid', {-cid}, 'cid', {cid})"
         for i, (cid, _cv, cvn) in enumerate(cents)
     )
     sims = F.expr(f"array({parts})")
     top = F.slice(F.reverse(F.array_sort(sims)), 1, n_cells)
+    rank = [(F.col("__r") + 1).alias("cell_rank")] if ranked else []
     return (
         df.withColumn("__d", scorer(F.col(vec_col)))
-        .select(id_col, vec_col, norm_col, F.explode(top).alias("__t"))
-        .select(id_col, vec_col, norm_col, F.col("__t.cid").alias("cell"))
+        .select(id_col, vec_col, norm_col, F.posexplode(top).alias("__r", "__t"))
+        .select(id_col, vec_col, norm_col, F.col("__t.cid").alias("cell"), *rank)
     )
 
 
 def _query_side(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (query_id, qv, qn) probe side as a LOCAL relation over the
-    memoized query-vector rows — no corpus scan. Values are the exact
-    binary64 rows of the corpus parquet (collected once per session),
-    so every downstream expression is bit-identical to the
-    filter-the-corpus form it replaces (r15: the crawl/recrawl/stream
-    members and the brute-force probes each paid a full parquet scan
-    to materialize these 5 rows)."""
-    return _query_vecs(spark, sf_dir).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        _norm(F.col("v")).alias("qn"),
-    )
+    """The (query_id, qv, qn) probe side over the memoized query-vector
+    rows — no corpus scan. Values are the exact binary64 rows of the
+    corpus parquet (collected once per session), so every downstream
+    expression is bit-identical to the filter-the-corpus form."""
+    return _sql(spark, sf_dir, f"SELECT * FROM {_QUERY_SIDE}", qvecs=_query_vecs(spark, sf_dir))
 
 
 def _wave_query_rows(
@@ -442,9 +500,9 @@ def _wave_query_rows(
 
     Bit-identity with the JVM-built wave relations: negation and
     reversal are exact IEEE-754 ops, and ``_py_norm`` is the same
-    left-to-right binary64 fold ``_norm`` computes — over the
+    left-to-right binary64 fold ``norm_sql`` computes — over the
     TRANSFORMED element order, exactly as the JVM evaluated
-    ``_norm(F.reverse(v))``."""
+    ``norm_sql`` over ``reverse(v)``."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
 
     def build():
@@ -482,12 +540,12 @@ def _pairwise_wave_scores(
     elementwise binary64 ops (pinned by test_arrow_scorer_bit_identity),
     multiplication is IEEE-commutative, and the rounding/division stay
     in the JVM with the same expression shape — every ``cos_sim`` is
-    bit-identical to ``round(_dot(qv, pv) / (qn * pn), 6)``."""
+    bit-identical to ``cos_sql(qv, qn, pv, pn)``."""
     scorer = _mat_scores([qv for _, _, qv, _ in qrows], "dot")
     parts = ", ".join(
         f"named_struct('wave', {int(w)}, "
         f"'query_id', CAST({int(qid)} AS BIGINT), "
-        f"'cos_sim', round(`__d`[{i}] / (CAST('{qn!r}' AS DOUBLE) * `pn`), 6))"
+        f"'cos_sim', {cos_of_sql(f'`__d`[{i}]', _double_sql(qn), '`pn`')})"
         for i, (w, qid, _qv, qn) in enumerate(qrows)
     )
     return (
@@ -523,12 +581,12 @@ def _recall_scalars(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     return shared_value(spark, ("recall_append_scalars", sf_dir), build)
 
 
-def _pts_of(df: DataFrame) -> DataFrame:
-    """(vec_id, v) → (point_id, pv, pn) with the shared norm fold."""
-    return df.select(
-        F.col("vec_id").alias("point_id"),
-        F.col("v").alias("pv"),
-        _norm(F.col("v")).alias("pn"),
+def _pts_of(
+    df: DataFrame, id_: str = "point_id", v: str = "pv", n: str = "pn"
+) -> DataFrame:
+    """(vec_id, v) rows → (``id_``, ``v``, ``n``) with the shared norm."""
+    return _sql(
+        df.sparkSession, "", f"SELECT * FROM {_points_sql('{df}', id_, v, n, 'true')}", df=df
     )
 
 
@@ -596,17 +654,7 @@ def _wave_qn_parts(spark: SparkSession, sf_dir: str):
         (1, q0.select("vec_id", negate.alias("v"))),
         (2, q0.select("vec_id", F.reverse(F.col("v")).alias("v"))),
     ]
-    return [
-        (
-            b,
-            qs.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("v").alias("qv"),
-                _norm(F.col("v")).alias("qn"),
-            ),
-        )
-        for b, qs in waves
-    ]
+    return [(b, _pts_of(qs, "query_id", "qv", "qn")) for b, qs in waves]
 
 
 def _wave_probed(
@@ -650,24 +698,16 @@ def _ivf_assigned(
     """The candidate→cell assignment IS the IVF index: built once per
     session (registry) and reused by every probe AND the cluster-
     confined semantic dedup — re-deriving it per call re-ran the
-    16-centroid scoring pass over the whole corpus."""
+    16-centroid scoring pass over the whole corpus. A memo hit builds
+    nothing."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    others = (
-        _vectors(spark, sf_dir)
-        .filter(F.col("vec_id") >= N_QUERY)
-        .select(
-            F.col("vec_id").alias("point_id"),
-            F.col("v").alias("pv"),
-            _norm(F.col("v")).alias("pn"),
-        )
-    )
     return shared_persist(
         spark,
         ("ivf_assigned", sf_dir, k),
         lambda: _nearest_cells(
             None,
-            others,
+            _candidates(spark, sf_dir),
             "pv",
             "pn",
             "point_id",
@@ -677,27 +717,35 @@ def _ivf_assigned(
     )
 
 
-def _probed_frozen(spark: SparkSession, sf_dir: str, n_probes: int) -> DataFrame:
-    """Session-shared query→probed-cell routing against the
-    session-trained (frozen) centroids: queries × n_probes rows,
-    deterministic per (corpus, probe count). Each evaluation costs an
-    ArrowEvalPython round (~0.7 s of Python-worker latency for 5 query
-    rows at sf0.1) — the IVF and IVF-PQ members re-derived it per call
-    while the persisted path already shared one copy (r14 opt)."""
+def _probed_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-shared query→cell routing against the session-trained
+    (frozen) centroids: every cell of every query, ranked
+    (``cell_rank``), so ``cell_rank <= p`` is the p-probe routing for
+    every probe count. Each evaluation costs an ArrowEvalPython round
+    (~0.7 s of Python-worker latency for 5 query rows at sf0.1): one
+    memo serves every probe count and every IVF and IVF-PQ member."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_value
 
     def build() -> DataFrame:
-        qs = _query_vecs(spark, sf_dir).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            _norm(F.col("v")).alias("qn"),
-        )
         return _nearest_cells(
-            None, qs, "qv", "qn", "query_id", n_probes,
-            cents=_frozen_cents(spark, sf_dir),
+            None, _query_side(spark, sf_dir), "qv", "qn", "query_id", N_CENTROIDS,
+            cents=_frozen_cents(spark, sf_dir), ranked=True,
         ).localCheckpoint(eager=True)
 
-    return shared_value(spark, ("ivf_probed_frozen", sf_dir, n_probes), build)
+    return shared_value(spark, ("ivf_probed_frozen", sf_dir), build)
+
+
+def _ivf_topk_sql(n_probes: int) -> str:
+    """The IVF top-k text: each query's cells ranked at most
+    ``n_probes`` in the ``{probed}`` frame, joined to the ``{assigned}``
+    index on the cell, then the exact cosine over those candidates. The
+    probe side is queries × cells rows, so it is broadcast and the
+    (possibly corpus-sized) assignment never shuffles."""
+    return _topk_sql(f"""
+        SELECT /*+ BROADCAST(p) */ p.query_id, a.cell AS probe_centroid,
+               a.point_id AS neighbor_id, {cos_sql("p.qv", "p.qn", "a.pv", "a.pn")} AS cos_sim
+        FROM (SELECT * FROM {{probed}} WHERE cell_rank <= {n_probes}) p
+        JOIN {{assigned}} a ON p.cell = a.cell""")
 
 
 def _ivf_topk(
@@ -709,51 +757,29 @@ def _ivf_topk(
     probed: DataFrame | None = None,
 ) -> DataFrame:
     """IVF probe with a parameterized probe count (``ann_ivf_topk`` is
-    this at the tuned default; ``ann_probe_tradeoff`` sweeps it).
-    ``cdf``/``assigned`` override the session-built centroid table and
-    cell assignment with LOADED relations (the persisted-index path —
-    ``ann_ivf_persisted``); ``probed`` supplies an already-computed
-    query→cell relation so a caller that needed it for cell pruning
-    doesn't score the queries twice.
+    this at the tuned default). ``cdf``/``assigned`` override the
+    session-built centroid table and cell assignment with LOADED
+    relations (the persisted-index path — ``ann_ivf_persisted``);
+    ``probed`` supplies an already-computed ranked query→cell relation
+    (``_nearest_cells(..., ranked=True)``) so a caller that needed it
+    for cell pruning doesn't score the queries twice.
 
-    The scale path: candidate pruning happens via an equi-join on
-    ``centroid_id`` (a shuffle on a small key), so the expensive dot
-    products run over the probed cells instead of the whole corpus.
-    Multi-probe recovers neighbors that fall just across a cell
-    boundary."""
-    from pyspark.sql import Window as W
-
-    cents = _frozen_cents(spark, sf_dir) if cdf is None else None
-    assigned = assigned if assigned is not None else _ivf_assigned(spark, sf_dir)
+    The scale path: candidate pruning happens via an equi-join on the
+    cell, so the expensive dot products run over the probed cells
+    instead of the whole corpus. Multi-probe recovers neighbors that
+    fall just across a cell boundary."""
     if probed is None:
-        if cdf is None:
-            # session-trained path: the query→cell routing is
-            # deterministic per (corpus, probe count) — share one
-            # materialized copy like the persisted path already does
-            probed = _probed_frozen(spark, sf_dir, n_probes)
-        else:
-            qs = _query_vecs(spark, sf_dir).select(
-                F.col("vec_id").alias("query_id"),
-                F.col("v").alias("qv"),
-                _norm(F.col("v")).alias("qn"),
+        probed = (
+            _probed_frozen(spark, sf_dir)
+            if cdf is None
+            else _nearest_cells(
+                cdf, _query_side(spark, sf_dir), "qv", "qn", "query_id", n_probes,
+                ranked=True,
             )
-            probed = _nearest_cells(
-                cdf, qs, "qv", "qn", "query_id", n_probes, cents=cents
-            )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "point_id")
-    # the probe side is queries × n_probes rows — broadcast it so the
-    # (possibly corpus-sized) assignment never shuffles (the planner's
-    # size estimate for the probed subtree exceeded the threshold and
-    # chose a sort-merge join: 2 exchanges where 0 are needed)
-    return (
-        F.broadcast(probed).join(assigned, "cell")
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("qv"), F.col("pv")) / (F.col("qn") * F.col("pn")), 6),
         )
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("cell").alias("probe_centroid"), F.col("point_id").alias("neighbor_id"), "cos_sim", "rank")
+    return _sql(
+        spark, sf_dir, _ivf_topk_sql(n_probes), probed=probed,
+        assigned=assigned if assigned is not None else _ivf_assigned(spark, sf_dir),
     )
 
 
@@ -764,7 +790,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     default operating point is picked off ``ann_probe_tradeoff``'s
     measured recall-vs-probes curve; ``ann_recall_report`` verifies it
     per query."""
-    return _ivf_topk(spark, sf_dir, N_PROBES)
+    return _sql(
+        spark, sf_dir, _ivf_topk_sql(N_PROBES),
+        probed=_probed_frozen(spark, sf_dir), assigned=_ivf_assigned(spark, sf_dir),
+    )
 
 
 PROBE_GRID = (3, 6, 9, 12, 16)
@@ -775,25 +804,20 @@ def ann_probe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``PROBE_GRID``, total IVF hits against exact top-k over all queries
     — the measurement a user needs to pick an operating point (more
     probes = more candidate cells scanned = higher recall, higher
-    cost). The assignment index and the exact baseline are shared
-    across the sweep; only the small probe side varies."""
-    exact = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    parts = []
-    for p in PROBE_GRID:
-        hits = _ivf_topk(spark, sf_dir, p).select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
-        parts.append(
-            exact.join(hits, ["query_id", "neighbor_id"], "left").agg(
-                F.lit(p).alias("n_probes"),
-                F.count(F.lit(1)).alias("total_k"),
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("total_hits"),
-            )
-        )
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionAll(df)
-    return out.orderBy("n_probes")
+    cost). The assignment index, the ranked probe routing and the exact
+    baseline are shared across the sweep; only the probe prefix
+    varies."""
+    sweep = "\n        UNION ALL\n".join(
+        f"SELECT {p} AS n_probes, count(1) AS total_k, sum(hit) AS total_hits "
+        f"FROM ({_hits_sql(_ivf_topk_sql(p))})"
+        for p in PROBE_GRID
+    )
+    return _sql(
+        spark, sf_dir,
+        f"WITH exact AS ({_COSINE_TOPK}) SELECT * FROM ({sweep}) ORDER BY n_probes",
+        qvecs=_query_vecs(spark, sf_dir), probed=_probed_frozen(spark, sf_dir),
+        assigned=_ivf_assigned(spark, sf_dir),
+    )
 
 
 def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,18 +825,10 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``ann_cosine_topk`` semantics), so the number is a pure measure of
     the coarse quantizer + multi-probe — the check a production ANN
     rollout runs before trusting the index."""
-    exact = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    ivf_hits = ann_ivf_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(ivf_hits, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-        )
-        .orderBy("query_id")
+    return _sql(
+        spark, sf_dir, _recall_sql(_ivf_topk_sql(N_PROBES)),
+        qvecs=_query_vecs(spark, sf_dir), probed=_probed_frozen(spark, sf_dir),
+        assigned=_ivf_assigned(spark, sf_dir),
     )
 
 
@@ -833,83 +849,44 @@ EMB_DUP_THRESHOLD = 0.4  # exact-cosine cutoff after candidate pruning
 EMB_BUCKET_CAP = 512
 
 
-def _band_bucket(v_col, band: int):
-    """Bucket id of `v` in one LSH band: sign bits of 4 deterministic
-    arithmetic hyperplanes (same family as ann_lsh_bucketed, offset per
-    band so bands are independent)."""
-    def _weight_fn(plane: int):
-        # factory, NOT a default-arg closure: PySpark dispatches HOF
-        # lambdas on parameter count, so a 2-parameter function would be
-        # silently called as (element, index)
-        return lambda i: ((F.lit(7 * plane) + F.lit(11) * i) % 13 - 6).cast("double")
-
-    bits = []
-    for p in range(EMB_PLANES_PER_BAND):
-        plane = EMB_PLANES_PER_BAND * band + p
-        weights = F.transform(F.sequence(F.lit(0), F.size(v_col) - 1), _weight_fn(plane))
-        proj = F.aggregate(
-            F.zip_with(v_col, weights, lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit(2 ** p)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket.cast("int")
-
-
 def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the semantic-dedup pass
     of a training-data pipeline (MinHash catches lexical dups, this
     catches paraphrases).
 
     Scale shape mirrors ``dedup_minhash_lsh_pairs``: vectors land in
-    ``EMB_BANDS`` independent hyperplane-LSH buckets, candidates are
-    pairs sharing ANY band bucket (an equi-join on (band, bucket) —
+    ``EMB_BANDS`` independent hyperplane-LSH buckets (band b uses planes
+    ``EMB_PLANES_PER_BAND·b`` on, so bands are independent), candidates
+    are pairs sharing ANY band bucket (an equi-join on (band, bucket) —
     never an all-pairs cross join) with buckets over
-    ``EMB_BUCKET_CAP`` excluded (degenerate cells — see the constant),
-    and only candidates pay the exact cosine, which must clear
-    ``EMB_DUP_THRESHOLD``. The cosine is computed MAP-SIDE right after
-    the bucket join and the pair dedup runs on (id, id, cos) only —
-    the r8 shape shuffled both full vector payloads through
-    ``dropDuplicates`` (measured: the dominant cost at sf1).
-    Deterministic arithmetic planes keep the DuckDB oracle in
+    ``EMB_BUCKET_CAP`` excluded (degenerate cells — see the constant;
+    ≤ EMB_BANDS × 2^planes bucket rows, broadcast), and only candidates
+    pay the exact cosine, which must clear ``EMB_DUP_THRESHOLD``. The
+    cosine is computed MAP-SIDE right after the bucket join and the
+    pair dedup runs on (id, id, cos) only — the r8 shape shuffled both
+    full vector payloads through the dedup (measured: the dominant cost
+    at sf1). Deterministic arithmetic planes keep the DuckDB oracle in
     lockstep."""
-    vecs = _vectors(spark, sf_dir).select(
-        "vec_id", "v", _norm(F.col("v")).alias("vn")
-    )
-    buckets = F.array(*[_band_bucket(F.col("v"), b) for b in range(EMB_BANDS)])
-    banded = vecs.select(
-        "vec_id", "v", "vn", F.posexplode(buckets).alias("band", "bucket")
-    )
-    # ≤ EMB_BANDS × 2^planes rows (96 at the default config): broadcast
-    ok = F.broadcast(
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") <= EMB_BUCKET_CAP)
-        .select("band", "bucket")
-    )
-    banded = banded.join(ok, ["band", "bucket"])
-    a, b = banded.alias("a"), banded.alias("b")
-    cos = F.round(
-        _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.vn") * F.col("b.vn")), 6
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            cos.alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= EMB_DUP_THRESHOLD)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    buckets = plane_bucket_sql("v", f"{EMB_PLANES_PER_BAND} * bd", EMB_PLANES_PER_BAND)
+    # the id test leads the filter pushed into the join, so only one of
+    # each pair pays the cosine
+    return _sql(spark, sf_dir, f"""
+        WITH banded_all AS (
+          SELECT vec_id, v, {norm_sql("v")} AS vn,
+                 posexplode(transform(sequence(0, {EMB_BANDS - 1}), bd -> {buckets}))
+                   AS (band, bucket)
+          FROM {_VECS}),
+        banded AS (
+          SELECT /*+ BROADCAST(ok) */ b.* FROM banded_all b
+          JOIN (SELECT band, bucket FROM banded_all GROUP BY band, bucket
+                HAVING count(1) <= {EMB_BUCKET_CAP}) ok
+            ON b.band = ok.band AND b.bucket = ok.bucket)
+        SELECT DISTINCT id_a, id_b, cos_sim FROM (
+          SELECT x.vec_id AS id_a, y.vec_id AS id_b,
+                 {cos_sql("x.v", "x.vn", "y.v", "y.vn")} AS cos_sim
+          FROM banded x JOIN banded y ON x.band = y.band AND x.bucket = y.bucket)
+        WHERE id_a < id_b AND cos_sim >= {EMB_DUP_THRESHOLD}D
+    """)
 
 
 RERANK_FACTOR = 2  # phase-1 int8 candidates per final exact result
@@ -933,70 +910,28 @@ def ann_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer SIMD); phase 2 touches ``k·RERANK_FACTOR`` rows per query.
     Composable with the IVF index: probe cells first, then quantized
     scan within the probed cells."""
-    from pyspark.sql import Window as W
+    def coded(src: str, id_: str, v: str, q: str, sc: str, n: str) -> str:
+        return f"""(SELECT vec_id AS {id_}, v AS {v}, q AS {q}, scale AS {sc},
+                    {norm_sql("v")} AS {n} FROM {int8_sql(src)})"""
 
-    vecs = _vectors(spark, sf_dir)
-    sc = (
-        F.greatest(
-            F.array_max(F.transform(F.col("v"), lambda x: F.abs(x))), F.lit(1e-12)
-        )
-        / F.lit(127.0)
-    )
-    def _coded(df: DataFrame) -> DataFrame:
-        b = df.select("vec_id", "v", sc.alias("sc"))
-        return b.select(
-            "vec_id",
-            "v",
-            "sc",
-            F.transform("v", lambda x: F.round(x / F.col("sc")).cast("int")).alias("q"),
-            _norm(F.col("v")).alias("nrm"),
-        )
-
-    # query side: same quantization expressions over the LOCAL memoized
-    # query rows (exact corpus binary64 values) — no second corpus scan
-    # to materialize 5 rows (r15)
-    qs = _coded(_query_vecs(spark, sf_dir)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("q").alias("qq"),
-        F.col("sc").alias("qsc"),
-        F.col("nrm").alias("qn"),
-    )
-    cs = _coded(vecs.filter(F.col("vec_id") >= N_QUERY)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("q").alias("cq"),
-        F.col("sc").alias("csc"),
-        F.col("nrm").alias("cn"),
-    )
-    idot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("cq"), lambda x, y: (x * y).cast("bigint")),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    ph1 = (
-        cs.crossJoin(F.broadcast(qs))
-        .withColumn(
-            "approx_sim",
-            F.round(
-                idot * F.col("qsc") * F.col("csc") / (F.col("qn") * F.col("cn")), 6
-            ),
-        )
-    )
-    w1 = W.partitionBy("query_id").orderBy(F.desc("approx_sim"), "neighbor_id")
-    cand = ph1.withColumn("rn1", F.row_number().over(w1)).filter(
-        F.col("rn1") <= TOP_K * RERANK_FACTOR
-    )
-    exact = cand.withColumn(
-        "cos_sim",
-        F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "approx_sim", "cos_sim", "rank")
-    )
+    # phase 1: the integer dot of the int8 codes, rescaled, over every
+    # candidate; the query side is the LOCAL memoized query rows
+    cands = f"(SELECT vec_id, v FROM {_VECS} WHERE vec_id >= {N_QUERY})"
+    idot = ("aggregate(zip_with(q.qq, c.cq, (x, y) -> CAST(x * y AS BIGINT)), 0L,"
+            " (acc, t) -> acc + t) * q.qsc * c.csc")
+    phase1 = _topk_sql(f"""
+        SELECT /*+ BROADCAST(q) */ q.query_id, c.neighbor_id, q.qv, q.qn, c.cv, c.cn,
+               {cos_of_sql(idot, "q.qn", "c.cn")} AS approx_sim
+        FROM {coded(cands, "neighbor_id", "cv", "cq", "csc", "cn")} c
+        CROSS JOIN {coded("{qvecs}", "query_id", "qv", "qq", "qsc", "qn")} q""",
+        score="approx_sim", k=TOP_K * RERANK_FACTOR, rank="rn1")
+    # phase 2: exact cosine over the shortlist
+    phase2 = _topk_sql(f"""
+        SELECT query_id, neighbor_id, approx_sim, {cos_sql("qv", "qn", "cv", "cn")} AS cos_sim
+        FROM ({phase1})""")
+    return _sql(spark, sf_dir, f"""
+        SELECT query_id, neighbor_id, approx_sim, cos_sim, rank FROM ({phase2})
+    """, qvecs=_query_vecs(spark, sf_dir))
 
 
 SEMDEDUP_TAU = 0.4    # within-cell cosine cutoff (SemDeDup-style)
@@ -1039,26 +974,15 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell quadratic stays bounded; at gate scale k equals the IVF
     index's 16 cells and the session-persisted assignment is shared
     outright."""
-    a = _ivf_assigned(spark, sf_dir, _sem_k(spark, sf_dir))
-    b = (
-        a.select(
-            F.col("cell"),
-            F.col("point_id").alias("vec_b"),
-            F.col("pv").alias("bv"),
-            F.col("pn").alias("bn"),
-        )
-    )
-    return (
-        a.select("cell", F.col("point_id").alias("vec_a"), "pv", "pn")
-        .join(b, "cell")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("pv"), F.col("bv")) / (F.col("pn") * F.col("bn")), 6),
-        )
-        .filter(F.col("cos_sim") >= SEMDEDUP_TAU)
-        .select("cell", "vec_a", "vec_b", "cos_sim")
-    )
+    # the id test leads the filter pushed into the join, so only one of
+    # each pair pays the cosine
+    return _sql(spark, sf_dir, f"""
+        SELECT cell, vec_a, vec_b, cos_sim FROM (
+          SELECT a.cell, a.point_id AS vec_a, b.point_id AS vec_b,
+                 {cos_sql("a.pv", "a.pn", "b.pv", "b.pn")} AS cos_sim
+          FROM {{assigned}} a JOIN {{assigned}} b ON a.cell = b.cell)
+        WHERE vec_a < vec_b AND cos_sim >= {SEMDEDUP_TAU}D
+    """, assigned=_ivf_assigned(spark, sf_dir, _sem_k(spark, sf_dir)))
 
 
 def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1070,50 +994,17 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(x_i/scale), error stats via sequential array folds (bit-
     deterministic in both engines, like ``embed_norms``). Payload never
     shuffles; at 100 TB this is a narrow projection you fuse into the
-    embedding scan."""
-    vecs = _vectors(spark, sf_dir)
-    base = vecs.select(
-        "vec_id",
-        "v",
-        (
-            F.greatest(
-                F.array_max(F.transform(F.col("v"), lambda x: F.abs(x))),
-                F.lit(1e-12),
-            )
-            / F.lit(127.0)
-        ).alias("scale"),
-    )
-    q = F.transform(
-        F.col("v"), lambda x: F.round(x / F.col("scale")).cast("int")
-    )
-    with_q = base.select("vec_id", "v", "scale", q.alias("q"))
-    sq_err = F.aggregate(
-        F.zip_with(
-            F.col("v"),
-            F.col("q"),
-            lambda x, qq: (x - qq.cast("double") * F.col("scale"))
-            * (x - qq.cast("double") * F.col("scale")),
-        ),
-        F.lit(0.0),
-        lambda acc, e: acc + e,
-    )
-    # two selects, not one: aliasing the ROUNDED value as "scale" in
-    # the same list would shadow the input column for the mse lambda
-    # via lateral column alias resolution (mse must use full precision)
-    stats = with_q.select(
-        "vec_id",
-        F.size("v").alias("n_dims"),
-        "scale",
-        (sq_err / F.size("v")).alias("mse_raw"),
-        F.array_max(F.transform("q", lambda x: F.abs(x))).alias("q_max_abs"),
-    )
-    return stats.select(
-        "vec_id",
-        "n_dims",
-        F.round(F.col("scale"), 8).alias("scale"),
-        F.round(F.col("mse_raw"), 10).alias("mse"),
-        "q_max_abs",
-    )
+    embedding scan. The error uses the full-precision scale: only the
+    outer select rounds it."""
+    return _sql(spark, sf_dir, f"""
+        SELECT vec_id, n_dims, round(scale, 8) AS scale, round(mse_raw, 10) AS mse, q_max_abs
+        FROM (SELECT vec_id, size(v) AS n_dims, scale,
+                     aggregate(zip_with(v, q, (x, c) -> (x - CAST(c AS DOUBLE) * scale)
+                                                      * (x - CAST(c AS DOUBLE) * scale)),
+                               0D, (acc, e) -> acc + e) / size(v) AS mse_raw,
+                     array_max(transform(q, c -> abs(c))) AS q_max_abs
+              FROM {int8_sql(_VECS)})
+    """)
 
 
 # ---------------------------------------------------------------------------
@@ -1132,30 +1023,6 @@ PQ_M = 16       # subspaces (vector split into M contiguous slices)
 PQ_K = 32       # sub-centroids per subspace (code = M × 5 bits here)
 PQ_ITERS = 2    # Lloyd iterations per sub-codebook
 PQ_RERANK = 8   # phase-1 ADC shortlist per final exact result
-
-def _l2sq(a, b):
-    """Squared L2 distance as a sequential fold (bit-deterministic in
-    both engines, like ``_dot``)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _sub_rel(df: DataFrame, id_out: str) -> DataFrame:
-    """(id, v) → (id, m, sv): each vector split into ``PQ_M`` contiguous
-    subvectors of ``len(v) // PQ_M`` dims (tail dims beyond M·ds are
-    ignored by the codebooks; the exact rerank always uses full
-    vectors). One posexplode — M× the rows, 1/M the payload each."""
-    ds = (F.size("v") / PQ_M).cast("int")
-    subs = F.array(*[F.slice("v", m * ds + 1, ds) for m in range(PQ_M)])
-    # F.slice's start is 1-based and column-valued starts are allowed;
-    # build all M slices then posexplode so m comes out as a column
-    return df.select(
-        F.col("vec_id").alias(id_out), F.posexplode(subs).alias("m", "sv")
-    )
-
 
 def _books_rows(cdf: DataFrame) -> list[list[list[float]]]:
     """Collect a PQ codebook relation to the driver as ``[m][j] → cv``
@@ -1409,6 +1276,51 @@ def _pq_lut_df(
     return shared_value(spark, ("pq_lut", sf_dir, bkey), build)
 
 
+def _pq_adc_sql(n_probes: int | None = None) -> str:
+    """The ADC text: every ``{codes}`` row against every query's
+    broadcast ``{lut}`` entry for its (m, code), summed per (query,
+    point) into ``adot_i``. With ``n_probes``, the codes carry their
+    point's IVF ``cell`` and only each query's first ``n_probes``
+    ``{probed}`` cells are expanded (the gate joins before the LUT)."""
+    if n_probes is None:
+        gate, on, hint = "", "", "l"
+    else:
+        gate = (f"JOIN (SELECT query_id, cell FROM {{probed}} WHERE cell_rank <= {n_probes}) p"
+                " ON p.cell = c.cell")
+        on, hint = "l.query_id = p.query_id AND ", "p, l"
+    return f"""
+        SELECT /*+ BROADCAST({hint}) */ l.query_id, c.point_id, sum(l.pdot_i) AS adot_i
+        FROM {{codes}} c {gate}
+        JOIN {{lut}} l ON {on}l.m = c.m AND l.j = c.code
+        GROUP BY l.query_id, c.point_id"""
+
+
+# the PQ rerank's candidate side (point_id, cv, cn)
+_PQ_CANDS = _points_sql(_VECS, v="cv", n="cn")
+
+
+def _pq_rerank_sql(adc: str, cands: str = _PQ_CANDS) -> str:
+    """The ADC shortlist (TOP_K·PQ_RERANK by approximate cosine) of the
+    ``adc`` relation, reranked by exact cosine to TOP_K. ``cands`` is
+    the (point_id, cv, cn) relation that resolves every shortlisted
+    point's full vector; the query side is the ``{qvecs}`` frame."""
+    short = _topk_sql(f"""
+        SELECT /*+ BROADCAST(q) */ a.query_id, a.point_id, q.qv, q.qn, c.cv, c.cn,
+               {cos_of_sql("a.adot_i / 1e6D", "q.qn", "c.cn")} AS approx_sim
+        FROM {adc} a JOIN {_QUERY_SIDE} q ON a.query_id = q.query_id
+        JOIN {cands} c ON a.point_id = c.point_id""",
+        score="approx_sim", tie="point_id", k=TOP_K * PQ_RERANK, rank="rn1")
+    exact = _topk_sql(f"""
+        SELECT query_id, point_id, approx_sim, {cos_sql("qv", "qn", "cv", "cn")} AS cos_sim
+        FROM ({short})""", tie="point_id")
+    return f"""SELECT query_id, point_id AS neighbor_id, approx_sim, cos_sim, rank
+        FROM ({exact})"""
+
+
+# flat-ADC PQ top-k over the session's codes and LUT
+_PQ_TOPK = _pq_rerank_sql(f"({_pq_adc_sql()})")
+
+
 def _pq_adc(
     spark: SparkSession,
     sf_dir: str,
@@ -1418,17 +1330,11 @@ def _pq_adc(
     """Flat ADC scores (query_id, point_id, adot_i) — every code row
     against every query's LUT. ``codes``/``cdf`` override the
     session-built compressed index and codebook with LOADED relations
-    (``ann_pq_persisted``). The IVF-gated composition lives in
-    ``ann_ivf_pq_topk`` (cell-annotated codes ⋈ broadcast probed
-    pairs)."""
-    codes = codes if codes is not None else _pq_codes_df(spark, sf_dir)
-    lut = _pq_lut_df(spark, sf_dir, cdf=cdf)
-    scored = codes.join(
-        F.broadcast(lut),
-        (codes["m"] == lut["m"]) & (codes["code"] == lut["j"]),
-    )
-    return scored.groupBy("query_id", "point_id").agg(
-        F.sum("pdot_i").alias("adot_i")
+    (``ann_pq_persisted``)."""
+    return _sql(
+        spark, sf_dir, _pq_adc_sql(),
+        codes=codes if codes is not None else _pq_codes_df(spark, sf_dir),
+        lut=_pq_lut_df(spark, sf_dir, cdf=cdf),
     )
 
 
@@ -1438,61 +1344,17 @@ def _pq_rerank(
     adc: DataFrame,
     cand_vecs: DataFrame | None = None,
 ) -> DataFrame:
-    """ADC shortlist (TOP_K·PQ_RERANK by approx sim) → exact-cosine
-    rerank → TOP_K. Shared by the flat and IVF-gated PQ members.
-    ``cand_vecs`` overrides the candidate-vector relation — a
-    ``(point_id, cv, cn)`` frame — for callers whose compressed index
-    covers points beyond the corpus candidates (the crawl-appended
-    batch in ``ann_index_crawl``); the exact rerank must be able to
-    resolve every shortlisted point's full vector."""
-    from pyspark.sql import Window as W
-
-    # query side from the _query_vecs driver memo (exact binary64 rows
-    # of the corpus scan, so the norms below are bit-identical) — the
-    # corpus parquet is no longer scanned just to build the 5-row
-    # broadcast side (r14 opt)
-    qn = _query_vecs(spark, sf_dir).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        _norm(F.col("v")).alias("qn"),
-    )
-    cn = (
-        cand_vecs
-        if cand_vecs is not None
-        else _vectors(spark, sf_dir)
-        .filter(F.col("vec_id") >= N_QUERY)
-        .select(
-            F.col("vec_id").alias("point_id"),
-            F.col("v").alias("cv"),
-            _norm(F.col("v")).alias("cn"),
-        )
-    )
-    w1 = W.partitionBy("query_id").orderBy(F.desc("approx_sim"), "point_id")
-    shortlist = (
-        adc.join(F.broadcast(qn), "query_id")
-        .join(cn, "point_id")
-        .withColumn(
-            "approx_sim",
-            F.round(F.col("adot_i") / 1e6 / (F.col("qn") * F.col("cn")), 6),
-        )
-        .withColumn("rn1", F.row_number().over(w1))
-        .filter(F.col("rn1") <= TOP_K * PQ_RERANK)
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "point_id")
-    return (
-        shortlist.withColumn(
-            "cos_sim",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("point_id").alias("neighbor_id"),
-            "approx_sim",
-            "cos_sim",
-            "rank",
-        )
+    """ADC shortlist → exact-cosine rerank → TOP_K over an ``adc``
+    frame (``_pq_rerank_sql``). ``cand_vecs`` overrides the
+    candidate-vector relation — a ``(point_id, cv, cn)`` frame — for
+    callers whose compressed index covers points beyond the corpus
+    candidates (the crawl-appended batch in ``ann_index_crawl``); the
+    exact rerank must be able to resolve every shortlisted point's full
+    vector."""
+    held = {} if cand_vecs is None else {"cands": cand_vecs}
+    return _sql(
+        spark, sf_dir, _pq_rerank_sql("{adc}", "{cands}" if held else _PQ_CANDS),
+        adc=adc, qvecs=_query_vecs(spark, sf_dir), **held,
     )
 
 
@@ -1517,7 +1379,10 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and summed as BIGINTs (order-free exact sum — the same
     integer-scaled pre-sum trick as BM25), so the ADC ranking is
     engine-exact."""
-    return _pq_rerank(spark, sf_dir, _pq_adc(spark, sf_dir))
+    return _sql(
+        spark, sf_dir, _PQ_TOPK, codes=_pq_codes_df(spark, sf_dir),
+        lut=_pq_lut_df(spark, sf_dir), qvecs=_query_vecs(spark, sf_dir),
+    )
 
 
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1549,7 +1414,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IVF members verify."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    probed = _probed_frozen(spark, sf_dir, N_PROBES)
     codes_cell = shared_persist(
         spark,
         ("pq_codes_cell", sf_dir),
@@ -1557,32 +1421,20 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ivf_assigned(spark, sf_dir).select("point_id", "cell"), "point_id"
         ),
     )
-    lut = _pq_lut_df(spark, sf_dir).withColumnRenamed("j", "code")
-    adc = (
-        codes_cell.join(F.broadcast(probed.select("query_id", "cell")), "cell")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", "point_id")
-        .agg(F.sum("pdot_i").alias("adot_i"))
+    return _sql(
+        spark, sf_dir, _pq_rerank_sql(f"({_pq_adc_sql(N_PROBES)})"), codes=codes_cell,
+        probed=_probed_frozen(spark, sf_dir), lut=_pq_lut_df(spark, sf_dir),
+        qvecs=_query_vecs(spark, sf_dir),
     )
-    return _pq_rerank(spark, sf_dir, adc)
 
 
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query PQ recall vs exact search — the rollout check next to
     ``ann_recall_report``, for the PQ operating point (M·K codebook +
     ``PQ_RERANK`` shortlist) instead of the IVF probe count."""
-    exact = ann_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    pq_hits = ann_pq_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(pq_hits, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-        )
-        .orderBy("query_id")
+    return _sql(
+        spark, sf_dir, _recall_sql(_PQ_TOPK), codes=_pq_codes_df(spark, sf_dir),
+        lut=_pq_lut_df(spark, sf_dir), qvecs=_query_vecs(spark, sf_dir),
     )
 
 
@@ -1843,11 +1695,6 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     it."""
     idx = load_ann_index(spark, sf_dir)
     cdf = idx["ivf_centroids"]
-    qs = _query_vecs(spark, sf_dir).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        _norm(F.col("v")).alias("qn"),
-    )
     # score the queries ONCE: the same probed relation yields the
     # driver-held cell list (for partition pruning) and the join side.
     # Session-registry persist (not a bare .persist()) so repeated
@@ -1862,7 +1709,9 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = shared_persist(
         spark,
         ("ivf_probed_persisted", sf_dir),
-        lambda: _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES),
+        lambda: _nearest_cells(
+            cdf, _query_side(spark, sf_dir), "qv", "qn", "query_id", N_PROBES, ranked=True
+        ),
     )
     cells = shared_value(
         spark,
@@ -1905,19 +1754,15 @@ def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB — the `ann_recall_report` sibling for COST instead of
     recall. Served from ``load_ann_index`` (train-once contract), so
     it also gate-pins the persisted assignment's cell histogram."""
-    idx = load_ann_index(spark, sf_dir)
-    assigned = idx["ivf_assigned"]
-    per_cell = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_points"))
-    # intentionally bypasses the probed-relation cache: with no delta
-    # batches this is a parquet-metadata count (no scan), and the audit
-    # must reflect the index AS STORED, not a session-cached copy
-    total = assigned.count()
-    return per_cell.select(
-        F.col("cell").cast("int").alias("cell"),
-        "n_points",
-        # integer division — exact in both engines, no float boundary
-        F.expr(f"(n_points * 10000) DIV {total}").alias("share_bp"),
-    ).orderBy("cell")
+    # the total is a window over the cell counts of the index AS STORED
+    # (not a session-cached copy): building the member runs no job, and
+    # running it scans the index once
+    return _sql(spark, sf_dir, """
+        SELECT CAST(cell AS INT) AS cell, n_points,
+               (n_points * 10000) DIV sum(n_points) OVER () AS share_bp
+        FROM (SELECT cell, count(1) AS n_points FROM {assigned} GROUP BY cell)
+        ORDER BY cell
+    """, assigned=load_ann_index(spark, sf_dir)["ivf_assigned"])
 
 
 # Default retrain-policy thresholds (basis points): the hottest IVF
@@ -2031,7 +1876,7 @@ def ann_index_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = ANN_INDEX.view(spark, root, "pq_codes")
 
     qs = _query_side(spark, sf_dir)
-    probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES)
+    probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES, ranked=True)
     cells = [r["cell"] for r in probed.select("cell").distinct().collect()]
     ivf = _ivf_topk(
         spark,
@@ -2045,12 +1890,12 @@ def ann_index_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_cn = vecs.filter(F.col("vec_id") >= N_QUERY).select(
         F.col("vec_id").alias("point_id"),
         F.col("v").alias("cv"),
-        _norm(F.col("v")).alias("cn"),
+        _norm("v").alias("cn"),
     )
     batch_cn = batch.select(
         F.col("vec_id").alias("point_id"),
         F.col("v").alias("cv"),
-        _norm(F.col("v")).alias("cn"),
+        _norm("v").alias("cn"),
     )
     cand_vecs = base_cn.unionByName(batch_cn)
     pq = _pq_rerank(
@@ -2308,7 +2153,7 @@ def ann_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = ANN_INDEX.view(spark, root, "pq_codes")
 
     qs = _query_side(spark, sf_dir)  # local memoized rows - no corpus scan (r15)
-    probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES)
+    probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES, ranked=True)
     cells = [r["cell"] for r in probed.select("cell").distinct().collect()]
 
     # the exact rerank must resolve EFFECTIVE vectors: unchanged
@@ -2322,7 +2167,7 @@ def ann_index_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("point_id"),
             F.when(is_changed, F.reverse(F.col("v"))).otherwise(F.col("v")).alias("cv"),
         )
-        .withColumn("cn", _norm(F.col("cv")))
+        .withColumn("cn", _norm("cv"))
     )
 
     ivf = _ivf_topk(
@@ -2698,7 +2543,7 @@ def stream_ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdf = spark.read.parquet(f"{root}/ivf_centroids")
     assigned = ANN_INDEX.view(spark, root, "ivf_assigned")
     qs = _query_side(spark, sf_dir)  # local memoized rows - no corpus scan (r15)
-    probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES)
+    probed = _nearest_cells(cdf, qs, "qv", "qn", "query_id", N_PROBES, ranked=True)
     cells = [r["cell"] for r in probed.select("cell").distinct().collect()]
     return _ivf_topk(
         spark,
@@ -2889,7 +2734,7 @@ _L2 = """round(list_reduce(list_transform(range(1, len({a}) + 1),
 
 def _pq_sub_union(id_expr: str, pred: str, rel: str = "vecs") -> str:
     """UNION ALL of the M subvector slices (DuckDB 1-based inclusive
-    slicing; ds = len(v) // PQ_M, mirroring ``_sub_rel``). ``rel``
+    slicing; ds = len(v) // PQ_M, the slices ``_pq_train`` cuts). ``rel``
     overrides the source relation (the recrawl oracle slices the
     EFFECTIVE vector set instead of the corpus)."""
     ds = f"(len(v) // {PQ_M})"

@@ -856,11 +856,11 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the SAME session-shared unigram LM + scalars lm_unigram_score uses
     lm, denom = _unigram_lm(spark, sf_dir)
     return _sql(spark, sf_dir, f"""
-        SELECT /*+ BROADCAST(c12, c1, u) */ doc_id, sum(m) AS n_bigrams,
+        SELECT /*+ BROADCAST(c1, u) */ doc_id, sum(m) AS n_bigrams,
                round(-sum(m * ln({LM_LAMBDA}D * (c12 / c1)
                                  + {LM_ONE_MINUS}D * ((cu + 1.0D) / :denom))) / sum(m), 4)
                  AS xent2
-        FROM (SELECT *, element_at(split(bigram, ' '), 1) AS w1,
+        FROM (SELECT /*+ BROADCAST(c12) */ *, element_at(split(bigram, ' '), 1) AS w1,
                         element_at(split(bigram, ' '), 2) AS w2
               FROM {{bg}} JOIN {{c12}} c12 USING (bigram))
         JOIN {{c1}} c1 USING (w1)

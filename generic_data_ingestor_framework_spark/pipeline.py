@@ -498,7 +498,7 @@ def _ann_vectors(df: DataFrame, p: dict) -> DataFrame:
 
     return df.select(
         F.col(p.get("id", "vec_id")).alias("vec_id"),
-        _as_double(F.col(p.get("vec", "embedding"))).alias("v"),
+        _as_double(p.get("vec", "embedding")).alias("v"),
     )
 
 

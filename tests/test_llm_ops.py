@@ -1269,6 +1269,28 @@ def test_pagerank_doc_graph_invariants(spark):
     assert sum(ranks.values()) <= 1.0 + 1e-6
 
 
+def test_pagerank_doc_graph_empty_corpus_matches_oracle(spark, tmp_path):
+    """Over a corpus with no documents the member returns no rows, with
+    its usual schema, as its DuckDB oracle does: the seed rank 1/n has
+    no n to divide by."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from generic_data_ingestor_framework_spark.llm.dedup import ORACLES, pagerank_doc_graph
+
+    d = tmp_path / "no_docs"
+    d.mkdir()
+    docs = f"{d}/documents.parquet"
+    pq.write_table(pq.read_schema(f"{SF}/documents.parquet").empty_table(), docs)
+
+    got = pagerank_doc_graph(spark, str(d))
+    assert got.collect() == []
+    assert got.dtypes == [("doc_id", "bigint"), ("pagerank", "double")]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    assert con.execute(ORACLES["pagerank_doc_graph"]).fetchall() == []
+
+
 def test_semantic_clusters_adaptive_k_oracle_parity(spark, tmp_path):
     """dedup_semantic_clusters with a corpus big enough that _sem_k
     EXCEEDS N_CENTROIDS (the adaptive-k scale path) must match the
@@ -2318,6 +2340,20 @@ def test_ann_retrain_decision_policy(spark):
     assert dec["worst_wave_recall_bp"] == min(r["recall_bp"] for r in recall)
 
 
+def test_ann_index_stats_warm_build_runs_no_job(spark):
+    """The stats member reads the stored assignment's total as a scalar
+    subquery of its text: once the index is loaded, building the member
+    runs no Spark job."""
+    similarity.ann_index_stats(spark, SF)
+    sc = spark.sparkContext
+    sc.setJobGroup("ann_index_stats_build", "build only")
+    try:
+        similarity.ann_index_stats(spark, SF)
+        assert list(sc.statusTracker().getJobIdsForGroup("ann_index_stats_build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_ann_index_persist_load_equals_session(spark, tmp_path):
     """save→load must reproduce the session-built IVF and PQ results
     exactly; a stale index (wrong candidate count in the meta) must
@@ -2974,7 +3010,7 @@ def test_pairwise_wave_scores_matches_hof_crossjoin(spark):
     ]
     pts = spark.createDataFrame(
         pts_rows, "point_id bigint, pv array<double>"
-    ).withColumn("pn", sim._norm(F.col("pv")))
+    ).withColumn("pn", sim._norm("pv"))
     qrows = [
         (w, qid, v, sim._py_norm(v))
         for w, qid, v in [
@@ -2993,14 +3029,7 @@ def test_pairwise_wave_scores_matches_hof_crossjoin(spark):
     )
     hof = (
         pts.crossJoin(F.broadcast(q))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                sim._dot(F.col("qv"), F.col("pv"))
-                / (F.col("qn") * F.col("pn")),
-                6,
-            ),
-        )
+        .withColumn("cos_sim", F.expr(sim.cos_sql("qv", "qn", "pv", "pn")))
         .select("point_id", "wave", "query_id", "cos_sim")
     )
     want = sorted(tuple(r) for r in hof.collect())

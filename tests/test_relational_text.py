@@ -8,6 +8,7 @@ from __future__ import annotations
 import ast
 import inspect
 
+import pytest
 from conftest import SF_SMALL
 
 from generic_data_ingestor_framework_spark.composite import MEMBER_QUERIES
@@ -38,9 +39,9 @@ def _temp_views(spark) -> set[str]:
 
 def test_text_members_build_in_a_few_jvm_commands(spark, jvm_commands):
     members = _text_members()
-    # the relational floor (40) plus 19 text-statistics, 12 event-time
-    # and 11 dedup members
-    assert len(members) >= 82, members
+    # the relational floor (40) plus 19 text-statistics, 12 event-time,
+    # 11 dedup and 15 similarity members
+    assert len(members) >= 97, members
     views = _temp_views(spark)
     for name in members:  # first use of each table reader and entry point
         MEMBER_QUERIES[name](spark, SF_SMALL)
@@ -69,3 +70,29 @@ def test_a_persisted_frame_read_by_a_text_stays_cached(spark):
         assert "InMemoryTableScan" in explain_string(held.select("k"))
     finally:
         held.unpersist()
+
+
+@pytest.mark.parametrize(
+    "memo", ["_query_vecs", "_ivf_assigned", "_probed_frozen", "_pq_codes_df", "_pq_lut_df"]
+)
+def test_a_similarity_memo_hit_builds_nothing(spark, jvm_commands, memo):
+    """A memoized relation's hit returns the held frame: nothing is
+    built, so nothing is sent to the JVM."""
+    from generic_data_ingestor_framework_spark.llm import similarity
+
+    fn = getattr(similarity, memo)
+    fn(spark, SF_SMALL)
+    with jvm_commands() as n:
+        fn(spark, SF_SMALL)
+    assert n[0] == 0
+
+
+def test_each_lm_bigram_hint_names_a_relation_in_its_scope(spark):
+    """``lm_bigram_score`` broadcasts its three model relations: each
+    hint sits in the scope of the relation it names, so the optimized
+    plan carries all three (an out-of-scope name is dropped with a
+    warning)."""
+    from generic_data_ingestor_framework_spark.llm.textstats import lm_bigram_score
+
+    plan = lm_bigram_score(spark, SF_SMALL)._jdf.queryExecution().optimizedPlan()
+    assert plan.toString().count("strategy=broadcast") == 3
