@@ -4,13 +4,15 @@ per document).
 
 The shape a production quality/language classifier takes on Spark when
 the model is trained IN the engine: every stage is a join or a
-hash-aggregate — no UDFs, no driver-side model object, no collect.
+hash-aggregate of one Spark SQL text — no UDFs, no driver-side model
+object, no collect, so building a member runs no Spark job.
 
 - token counts per (lang, token) + per-lang totals → the model
-- Laplace-smoothed log-likelihoods joined back onto per-doc token
-  counts (langs × vocab is broadcast-sized; the doc-token relation is
-  the big side and shuffles once on token)
-- argmax over langs via a window (ties broken alphabetically)
+- Laplace-smoothed log-likelihoods, one array per token in lang
+  order, joined back onto per-doc token counts (langs × vocab is
+  broadcast-sized; the doc-token relation is the big side)
+- argmax over langs as a min over (−score, lang) structs (ties broken
+  alphabetically)
 
 Determinism contract for the DuckDB oracle: per-(doc, lang) scores are
 rounded to 4 dp before the argmax and ties break on lang, so the two
@@ -19,21 +21,19 @@ unless two scores agree to 4 dp — in which case both engines pick the
 same alphabetically-first lang.
 
 Scale notes (100 TB): the model (langs × vocab log-probs) is a
-broadcast join; doc scoring is one shuffle on token plus one on
-doc_id. Vocabulary would be frequency-pruned at real scale (the same
-DF-cap machinery as dedup.DF_CAP); accuracy is reported by
+broadcast join; doc scoring shuffles nothing (the token relation is
+hashed on doc_id).
+Vocabulary would be frequency-pruned at real scale (the same DF-cap
+machinery as dedup.DF_CAP); accuracy is reported by
 ``nb_lang_confusion`` so a pruned model's cost is measurable.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from generic_data_ingestor_framework_spark.llm.dedup import tokens_col
-from generic_data_ingestor_framework_spark.relational import load_table
+from generic_data_ingestor_framework_spark.llm.dedup import DOC_HASH_SQL, tokens_sql
+from generic_data_ingestor_framework_spark.relational import _sql
 
 LAPLACE = 1.0
 SCORE_DP = 4  # round scores to 4 dp before argmax (cross-engine tie contract)
@@ -42,19 +42,19 @@ SCORE_DP = 4  # round scores to 4 dp before argmax (cross-engine tie contract)
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(doc, lang, token) counts, persisted once per session: the
     relation feeds the model, the priors, the scoring side, and both
-    confusion queries — and repeated invocations must reuse one copy."""
+    confusion queries — and repeated invocations must reuse one copy.
+    Hashed on ``doc_id`` (``dedup._spread``), so the per-document
+    scoring aggregates downstream need no shuffle of their own."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
+    from generic_data_ingestor_framework_spark.llm.dedup import _spread
 
-    def build() -> DataFrame:
-        d = load_table(spark, sf_dir, "documents")
-        return (
-            d.select("doc_id", "lang", F.explode(tokens_col()).alias("tok"))
-            .filter(F.col("tok") != "")
-            .groupBy("doc_id", "lang", "tok")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-
-    return shared_persist(spark, ("nb_doc_tokens", sf_dir), build)
+    return shared_persist(spark, ("nb_doc_tokens", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        SELECT doc_id, lang, tok, count(1) AS n
+        FROM (SELECT doc_id, lang, explode(toks) AS tok
+              FROM (SELECT {_spread(spark)} doc_id, lang, {tokens_sql()} AS toks
+                    FROM {{documents}}))
+        WHERE tok != '' GROUP BY doc_id, lang, tok
+    """))
 
 
 # Holdout split: train on hash(doc_id)%100 < 80, score the rest — the
@@ -63,164 +63,104 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRAIN_PCT = 80
 
 
-def _split_cond(train: bool):
-    from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32
-
-    bucket = portable_hash32(F.col("doc_id").cast("string")) % 100
-    return bucket < TRAIN_PCT if train else bucket >= TRAIN_PCT
-
-
-def _model_scalars(spark: SparkSession, sf_dir: str, holdout: bool) -> dict:
-    """All driver-held model constants — vocab size, doc count, per-lang
-    token totals / doc counts / smoothing floors / log-priors — from ONE
-    rollup job over the persisted token relation (r4 ran four separate
-    collect jobs here, each re-triggering lineage above the token
-    relation). The grand-total rollup row carries the global distinct
-    token and doc counts; the per-lang rows carry the rest. Memoized per
-    session, so repeat invocations cost zero jobs."""
-    from generic_data_ingestor_framework_spark.cachemgr import shared_value
-
-    def build() -> dict:
-        toks = _doc_tokens(spark, sf_dir)
-        if holdout:
-            toks = toks.filter(_split_cond(True))
-        rows = (
-            toks.rollup("lang")
-            .agg(
-                F.sum("n").alias("total"),
-                F.countDistinct("doc_id").alias("nd"),
-                F.countDistinct("tok").alias("vtok"),
-                F.grouping("lang").alias("g"),
-            )
-            .collect()
-        )
-        grand = next(r for r in rows if r["g"] == 1)
-        vocab_n, n_docs = grand["vtok"], grand["nd"]
-        langs = sorted(r["lang"] for r in rows if r["g"] == 0)
-        totals = {r["lang"]: r["total"] for r in rows if r["g"] == 0}
-        nds = {r["lang"]: r["nd"] for r in rows if r["g"] == 0}
-        # floors/priors become double literals in the plan; SCORE_DP
-        # rounding before the argmax absorbs the ≤1-ulp difference
-        # between math.log and the engines' own log.
-        return {
-            "vocab_n": vocab_n,
-            "langs": langs,
-            "totals": totals,
-            "floors": {
-                L: math.log(LAPLACE / (totals[L] + LAPLACE * vocab_n)) for L in langs
-            },
-            "priors": {L: math.log(nds[L] / n_docs) for L in langs},
-        }
-
-    return shared_value(spark, ("nb_scalars", sf_dir, holdout), build)
+def _split_sql(holdout: bool, train: bool) -> str:
+    """Spark SQL predicate on ``doc_id``: the rows of the train (or the
+    scored) side; every row when not ``holdout``."""
+    if not holdout:
+        return "true"
+    return f"{DOC_HASH_SQL} % 100 {'<' if train else '>='} {TRAIN_PCT}"
 
 
-def _nb_predictions(
-    spark: SparkSession, sf_dir: str, holdout: bool = False
-) -> DataFrame:
-    """NB pipeline; ``holdout=True`` trains the model on the 80% hash
-    split and scores only the held-out 20% (honest accuracy), else
-    self-train (pipeline-shape demo). Identical plan shape either way.
-
-    Scale shape: the model is WIDE — one row per token, one per-lang
-    log-likelihood column built by conditional aggregation (no pivot,
-    no identifier splicing: lang values enter the plan only as ``lit``
-    values, so hostile lang strings cannot break the query). The
-    corpus-sized token relation joins the broadcast model ONCE, flows
-    through ONE hash aggregate on doc_id, and the argmax is a pure
-    projection (sort_array over per-lang structs) — no window, no
-    second shuffle at doc granularity. Model scalars are collected in
-    one rollup job (``_model_scalars``) and memoized per session."""
+def _nb_model(spark: SparkSession, sf_dir: str, holdout: bool) -> dict[str, DataFrame]:
+    """The frames ``_preds_sql`` reads: ``toks`` (``_doc_tokens``),
+    ``langs`` — ONE row, the array of training langs in lang order, each
+    with its log-prior ``ln(nd/N)`` and Laplace denominator
+    ``total + V`` — and ``model``: per corpus token, ``lps``, its
+    log-likelihood under each lang of that array,
+    ``ln((count in training + 1)/denom)``. A (lang, token) pair absent
+    from training, or a token absent from it altogether (holdout),
+    reads a count of 0, i.e. the lang's smoothing floor. Both relations
+    are persisted per (sf_dir, split): the vocab size V, the doc count N
+    and the lang order are in-plan aggregates, so no scalar ever leaves
+    the cluster."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    all_toks = _doc_tokens(spark, sf_dir)
-    toks = all_toks.filter(_split_cond(True)) if holdout else all_toks
-    score_src = all_toks.filter(_split_cond(False)) if holdout else all_toks
+    toks = _doc_tokens(spark, sf_dir)
+    train = _split_sql(holdout, True)
+    langs = shared_persist(spark, ("nb_langs", sf_dir, holdout), lambda: _sql(spark, sf_dir, f"""
+        WITH train AS (SELECT * FROM {{toks}} WHERE {train})
+        SELECT /*+ BROADCAST(g) */
+               array_sort(collect_list(named_struct('lang', lang, 'prior', ln(nd / n_docs),
+                                                    'denom', total + {LAPLACE}D * v))) AS langs
+        FROM (SELECT lang, sum(n) AS total, count(DISTINCT doc_id) AS nd
+              FROM train GROUP BY lang)
+        CROSS JOIN (SELECT count(DISTINCT tok) AS v, count(DISTINCT doc_id) AS n_docs
+                    FROM train) g
+    """, toks=toks))
+    model = shared_persist(spark, ("nb_model", sf_dir, holdout), lambda: _sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(l) */ tok,
+               transform(l.langs, x -> ln((coalesce(c[x.lang], 0) + {LAPLACE}D) / x.denom)) AS lps
+        FROM (SELECT tok, map_from_entries(collect_list(struct(lang, c))) AS c
+              FROM (SELECT tok, lang, sum(CASE WHEN {train} THEN n ELSE 0 END) AS c
+                    FROM {{toks}} GROUP BY tok, lang)
+              GROUP BY tok)
+        CROSS JOIN {{langs}} l
+    """, toks=toks, langs=langs))
+    return {"toks": toks, "langs": langs, "model": model}
 
-    sc = _model_scalars(spark, sf_dir, holdout)
-    langs, vocab_n = sc["langs"], sc["vocab_n"]
-    totals, floors, priors = sc["totals"], sc["floors"], sc["priors"]
 
-    # one row per token, one log-prob column per lang (broadcast-sized:
-    # vocab × |langs| doubles), persisted per (sf_dir, split). A (lang,
-    # tok) pair absent from training sums to NULL here and falls back
-    # to the lang's floor via the scoring coalesce.
-    model_wide = shared_persist(
-        spark,
-        ("nb_model_wide", sf_dir, holdout),
-        lambda: toks.groupBy("tok").agg(
-            *[
-                F.log(
-                    (F.sum(F.when(F.col("lang") == F.lit(L), F.col("n"))) + LAPLACE)
-                    / F.lit(totals[L] + LAPLACE * vocab_n)
-                ).alias(f"_lp_{i}")
-                for i, L in enumerate(langs)
-            ]
-        ),
-    )
-    doc_toks = score_src.select(
-        "doc_id", F.col("lang").alias("actual_lang"), "tok", "n"
-    )
-    # unseen (lang, token) — including tokens absent from the model
-    # entirely — falls back to the lang's floor via the same coalesce
-    per_lang_sums = [
-        F.sum(
-            F.col("n") * F.coalesce(F.col(f"_lp_{i}"), F.lit(floors[L]))
-        ).alias(f"_s_{i}")
-        for i, L in enumerate(langs)
-    ]
-    scored_wide = (
-        doc_toks.join(F.broadcast(model_wide), "tok", "left")
-        .groupBy("doc_id", "actual_lang")
-        .agg(*per_lang_sums)
-    )
-    # argmax as a projection: per-lang (neg rounded score, lang) structs,
-    # sort_array ascending → [0] is (max score, alphabetically-first
-    # lang on 4-dp ties) — the same contract the window gave, minus the
-    # window's exchange+sort and the stack() SQL string.
-    cand = F.array(
-        *[
-            F.struct(
-                (-F.round(F.col(f"_s_{i}") + F.lit(priors[L]), SCORE_DP)).alias("neg"),
-                F.lit(L).alias("m_lang"),
-            )
-            for i, L in enumerate(langs)
-        ]
-    )
-    return scored_wide.select(
-        "doc_id",
-        F.col("actual_lang").alias("lang"),
-        F.sort_array(cand)[0]["m_lang"].alias("pred_lang"),
-    )
+def _preds_sql(holdout: bool) -> str:
+    """Spark SQL over ``_nb_model``'s frames: ``(doc_id, lang,
+    pred_lang)`` for every scored document (``holdout``: the held-out
+    20%, else every document).
+
+    Scale shape: each corpus-sized token row joins the broadcast model
+    ONCE, on the token, and its log-likelihood array explodes to one
+    ``(i, lp)`` row per lang (the model covers every corpus token, so
+    the join is inner). One aggregate gives each (doc, lang) score, and
+    the argmax is a second, doc-sized aggregate: the min of (−rounded
+    score, lang) structs, so 4-dp ties go to the alphabetically-first
+    lang. Both are keyed by ``doc_id``, on which ``_doc_tokens`` is
+    hashed, so scoring runs no shuffle."""
+    return f"""
+        SELECT /*+ BROADCAST(l) */ doc_id, lang,
+               min(named_struct('neg', -round(s + l.langs[i].prior, {SCORE_DP}),
+                                'm', l.langs[i].lang)).m AS pred_lang
+        FROM (SELECT doc_id, lang, i, sum(n * lp) AS s
+              FROM (SELECT /*+ BROADCAST(m) */ d.doc_id, d.lang, d.n, posexplode(m.lps) AS (i, lp)
+                    FROM (SELECT * FROM {{toks}} WHERE {_split_sql(holdout, False)}) d
+                    JOIN {{model}} m USING (tok))
+              GROUP BY doc_id, lang, i)
+        CROSS JOIN {{langs}} l
+        GROUP BY doc_id, lang
+    """
 
 
 def nb_lang_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document predicted lang vs actual (self-train demo of the
     pipeline; ``nb_holdout_confusion`` is the honest-evaluation run)."""
-    return _nb_predictions(spark, sf_dir, holdout=False)
+    return _sql(spark, sf_dir, _preds_sql(False), **_nb_model(spark, sf_dir, False))
+
+
+_CONFUSION_SQL = """
+        SELECT lang, pred_lang, count(1) AS n_docs FROM ({preds})
+        GROUP BY lang, pred_lang ORDER BY lang, pred_lang
+"""
 
 
 def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the self-train NB run (actual × predicted
     doc counts). Overstates accuracy by construction — gate rollouts on
     ``nb_holdout_confusion`` instead."""
-    preds = nb_lang_predictions(spark, sf_dir)
-    return (
-        preds.groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "pred_lang")
-    )
+    text = _CONFUSION_SQL.format(preds=_preds_sql(False))
+    return _sql(spark, sf_dir, text, **_nb_model(spark, sf_dir, False))
 
 
 def nb_holdout_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Honest NB evaluation: model trained on the 80% hash split, the
     confusion matrix computed only over the held-out 20% (train∩test=∅)."""
-    preds = _nb_predictions(spark, sf_dir, holdout=True)
-    return (
-        preds.groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "pred_lang")
-    )
+    text = _CONFUSION_SQL.format(preds=_preds_sql(True))
+    return _sql(spark, sf_dir, text, **_nb_model(spark, sf_dir, True))
 
 
 def classifier_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,53 +178,35 @@ def classifier_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one per-doc join, one contingency aggregate (classes²
     rows), marginal rollups on that tiny relation; the corpus is
-    touched once per classifier."""
+    touched once per classifier. The contingency is persisted per
+    session (its lineage is both classifier pipelines). One pass over
+    it gives the per-class marginals r (rows) and s (columns) and the
+    agreements; a second, class-sized aggregate folds them."""
+    from generic_data_ingestor_framework_spark.cachemgr import shared_persist
     from generic_data_ingestor_framework_spark.llm.textstats import lang_id_heuristic
 
-    from generic_data_ingestor_framework_spark.cachemgr import shared_value
-
-    nb = nb_lang_predictions(spark, sf_dir).select("doc_id", "pred_lang")
-    h = lang_id_heuristic(spark, sf_dir).select("doc_id", "lang_guess")
-    # classes² rows, but its lineage is both classifier pipelines; the
-    # three rollups below must read materialized rows, not re-score.
-    # Session-memoized (r14 opt): the eager checkpoint re-scored both
-    # classifiers during DataFrame CONSTRUCTION on every call (~0.9 s
-    # warm); cachemgr releases the blocks at clear_caches.
-    cont = shared_value(
-        spark,
-        ("kappa_contingency", sf_dir),
-        lambda: nb.join(h, "doc_id")
-        .groupBy(F.col("pred_lang").alias("a"), F.col("lang_guess").alias("b"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True),
-    )
-    ra = cont.groupBy("a").agg(F.sum("n").alias("ra"))
-    rb = cont.groupBy("b").agg(F.sum("n").alias("rb"))
-    # both marginals are bounded by the number of distinct classes at
-    # ANY corpus size — broadcast one side so the member plan carries
-    # no SortMergeJoin (r15, guide §3.1; the planner saw unsized
-    # checkpoint lineage and chose SMJ: 2 extra sorts per call)
-    pe_sum = (
-        ra.join(F.broadcast(rb), ra["a"] == rb["b"])
-        .agg(F.coalesce(F.sum(F.col("ra") * F.col("rb")), F.lit(0)).alias("s"))
-    )
-    tot = cont.agg(
-        F.sum("n").alias("n_docs"),
-        F.coalesce(
-            F.sum(F.when(F.col("a") == F.col("b"), F.col("n"))), F.lit(0)
-        ).alias("n_agree"),
-    )
-    n, agree, sm = F.col("n_docs"), F.col("n_agree"), F.col("s")
-    kappa = F.when(
-        n * n - sm > 0, F.floor((agree * n - sm) * 10000 / (n * n - sm)) / 10000
-    ).otherwise(F.lit(0.0))
-    return tot.crossJoin(pe_sum).select(
-        "n_docs",
-        "n_agree",
-        (F.floor(agree * 10000 / n) / 10000).alias("po"),
-        (F.floor(sm * 10000 / (n * n)) / 10000).alias("pe"),
-        kappa.alias("kappa"),
-    )
+    cont = shared_persist(spark, ("kappa_contingency", sf_dir), lambda: _sql(spark, sf_dir, f"""
+        SELECT pred_lang AS a, lang_guess AS b, count(1) AS n
+        FROM ({_preds_sql(False)}) JOIN {{h}} USING (doc_id)
+        GROUP BY pred_lang, lang_guess
+    """, h=lang_id_heuristic(spark, sf_dir), **_nb_model(spark, sf_dir, False)))
+    return _sql(spark, sf_dir, """
+        SELECT n_docs, n_agree, floor(n_agree * 10000 / n_docs) / 10000 AS po,
+               floor(s * 10000 / (n_docs * n_docs)) / 10000 AS pe,
+               CASE WHEN n_docs * n_docs - s > 0
+                    THEN floor((n_agree * n_docs - s) * 10000 / (n_docs * n_docs - s)) / 10000
+                    ELSE 0.0D END AS kappa
+        FROM (SELECT sum(r) AS n_docs, coalesce(sum(agree), 0) AS n_agree,
+                     coalesce(sum(CASE WHEN c IS NOT NULL THEN r * s END), 0) AS s
+              FROM (SELECT c, sum(r) AS r, sum(s) AS s, sum(agree) AS agree
+                    FROM (SELECT inline(array(
+                            named_struct('c', a, 'r', n, 's', 0L,
+                                         'agree', CASE WHEN a = b THEN n END),
+                            named_struct('c', b, 'r', 0L, 's', n,
+                                         'agree', CAST(NULL AS BIGINT))))
+                          FROM {cont})
+                    GROUP BY c))
+    """, cont=cont)
 
 
 QUERIES = {

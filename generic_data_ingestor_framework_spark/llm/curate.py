@@ -6,15 +6,19 @@ sit between dedup and tokenization.
 - document chunking with overlap (RAG / long-doc splitting),
 - Gopher-style per-document quality flags.
 
-All pure JVM column expressions / window functions — no UDFs — with
-DuckDB oracle twins. Determinism contracts: ordering is always
-(portable hash, doc_id); ratios are rounded at the edge; integer math
-everywhere else.
+Every member is one Spark SQL text of array functions and windows — no
+UDFs — with a DuckDB oracle twin. Determinism contracts: ordering is
+always (portable hash, doc_id); ratios are rounded at the edge; integer
+math everywhere else.
 
-The operators (``overlap_chunks``, ``paragraph_segments``,
-``gopher_flags``, ``quality_bands``/``banded_budget_select``, the span
-core) take any frame and token column: the members run them over
-``documents``, the pipeline's curation steps over the flowing frame.
+The operators the pipeline shares are Spark SQL too, spelled once:
+``gopher_flags_sql`` gives expressions over a token array;
+``overlap_chunks_sql``, ``paragraph_segments_sql``, the budget
+selection (``quality_bands_sql``, ``band_offsets_sql``,
+``budget_select_sql``) and the span core (``pos_grams_sql``,
+``span_cut_sql``) are texts over a relation name. The members run
+them over ``documents``, the pipeline's curation steps over the
+flowing frame.
 
 Scale notes (100 TB): decontamination is a broadcast-able semi-join
 when the benchmark is benchmark-sized (thousands of docs → millions of
@@ -26,16 +30,16 @@ map-only explode with no shuffle at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from generic_data_ingestor_framework_spark.llm.dedup import (
-    portable_hash32,
-    shingles_from_tokens,
-    tokens_col,
+    DOC_HASH_SQL,
+    shingles_sql,
+    text_ident_sql,
+    tokens_sql,
 )
-from generic_data_ingestor_framework_spark.relational import load_table
-from generic_data_ingestor_framework_spark.session import local_relation
+from generic_data_ingestor_framework_spark.llm.textstats import quality_sql
+from generic_data_ingestor_framework_spark.relational import _sql
 
 DECON_GRAM_K = 13      # n-gram size for benchmark-overlap decontamination
 BENCH_MOD = 50         # hash(doc_id) % 50 == 0 → ~2% "benchmark" set
@@ -49,16 +53,15 @@ SEG_TOKENS = 10        # paragraph-dedup segment size (positional segments —
 _TOKS_SQL = "string_split_regex(lower(text), '\\s+')"
 _HASH_SQL = "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)"
 
-
-def _floor4(col):
-    """4-dp truncation: floor cannot tie, unlike round (Spark HALF_UP
-    vs DuckDB differ at exact .xxxx5 rationals)."""
-    return F.floor(col * 10000) / 10000
+# Spark SQL: the documents with their tokens
+_DOC_TOKENS = f"(SELECT doc_id, lang, {tokens_sql()} AS ts FROM {{documents}})"
 
 
-def _docs_with_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", "lang", tokens_col().alias("ts"))
+def _floor4(x: str) -> str:
+    """4-dp truncation of the Spark SQL expression ``x``: floor cannot
+    tie, unlike round (Spark HALF_UP vs DuckDB differ at exact .xxxx5
+    rationals)."""
+    return f"floor(({x}) * 10000) / 10000"
 
 
 def _gram_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,17 +71,12 @@ def _gram_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploding the corpus once per call."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    toks = _docs_with_tokens(spark, sf_dir)
-    is_bench = portable_hash32(F.col("doc_id").cast("string")) % BENCH_MOD == 0
-    return shared_persist(
-        spark,
-        ("decon_grams", sf_dir, DECON_GRAM_K),
-        lambda: toks.select(
-            "doc_id",
-            is_bench.alias("bench"),
-            F.explode(shingles_from_tokens("ts", k=DECON_GRAM_K)).alias("gram"),
-        ),
-    )
+    key = ("decon_grams", sf_dir, DECON_GRAM_K)
+    return shared_persist(spark, key, lambda: _sql(spark, sf_dir, f"""
+        SELECT doc_id, {DOC_HASH_SQL} % {BENCH_MOD} = 0 AS bench,
+               explode({shingles_sql("ts", DECON_GRAM_K)}) AS gram
+        FROM {_DOC_TOKENS}
+    """))
 
 
 def decontaminate_against_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,25 +89,17 @@ def decontaminate_against_benchmark(spark: SparkSession, sf_dir: str) -> DataFra
     JOIN it and count overlapping grams — zero-overlap docs keep n=0.
     This is the standard contamination audit before a pretraining run.
     """
-    toks = _docs_with_tokens(spark, sf_dir)
-    is_bench = portable_hash32(F.col("doc_id").cast("string")) % BENCH_MOD == 0
-    grams = _gram_relation(spark, sf_dir)
-    bench_grams = grams.filter("bench").select("gram").distinct()
-    train = grams.filter(~F.col("bench"))
-    hits = (
-        train.join(F.broadcast(bench_grams), "gram", "inner")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    train_docs = toks.filter(~is_bench).select("doc_id")
-    return (
-        train_docs.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_contaminated_grams"),
-            (F.coalesce("n_hits", F.lit(0)) > 0).alias("is_contaminated"),
-        )
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, coalesce(n_hits, 0) AS n_contaminated_grams,
+               coalesce(n_hits, 0) > 0 AS is_contaminated
+        FROM (SELECT doc_id FROM {{documents}} WHERE {DOC_HASH_SQL} % {BENCH_MOD} != 0)
+        LEFT JOIN (
+          SELECT /*+ BROADCAST(b) */ doc_id, count(1) AS n_hits
+          FROM {{grams}} g JOIN (SELECT DISTINCT gram FROM {{grams}} WHERE bench) b
+            ON g.gram = b.gram
+          WHERE NOT g.bench GROUP BY doc_id)
+        USING (doc_id)
+    """, grams=_gram_relation(spark, sf_dir))
 
 
 def pack_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,81 +118,67 @@ def pack_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB corpus through a single English partition. The offset table
     is PACK_BUCKETS rows per lang — broadcast, never a shuffle.
     """
-    toks = (
-        _docs_with_tokens(spark, sf_dir)
-        .select("doc_id", "lang", F.size("ts").alias("n_tok"))
-        .withColumn("h", portable_hash32(F.col("doc_id").cast("string")))
-        .withColumn("bucket", F.col("h") % PACK_BUCKETS)
-    )
-    w = W.partitionBy("lang", "bucket").orderBy("h", "doc_id")
-    cum = F.sum("n_tok").over(w)
-    seqs = toks.withColumn(
-        "local_seq", F.floor((cum - F.col("n_tok")) / PACK_WINDOW)
-    )
-    counts = seqs.groupBy("lang", "bucket").agg(
-        (F.max("local_seq") + 1).alias("n_seqs")
-    )
-    w_off = (
-        W.partitionBy("lang").orderBy("bucket").rowsBetween(W.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "lang",
-        "bucket",
-        F.coalesce(F.sum("n_seqs").over(w_off), F.lit(0)).alias("off"),
-    )
-    return (
-        seqs.join(F.broadcast(offsets), ["lang", "bucket"])
-        .withColumn("seq_id", (F.col("off") + F.col("local_seq")).cast("long"))
-        .groupBy("lang", "seq_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").cast("long").alias("n_tokens"),
-            # fill in basis points as exact integer math (no FP ties)
-            F.floor(F.sum("n_tok") * 10000 / PACK_WINDOW).cast("long").alias("fill_bp"),
+    return _sql(spark, sf_dir, f"""
+        WITH seqs AS (
+          SELECT lang, bucket, n_tok,
+                 floor((sum(n_tok) OVER (PARTITION BY lang, bucket ORDER BY h, doc_id) - n_tok)
+                       / {PACK_WINDOW}) AS local_seq
+          FROM (SELECT doc_id, lang, n_tok, h, h % {PACK_BUCKETS} AS bucket
+                FROM (SELECT doc_id, lang, size(ts) AS n_tok, {DOC_HASH_SQL} AS h
+                      FROM {_DOC_TOKENS}))
+        ),
+        offsets AS (
+          SELECT lang, bucket,
+                 coalesce(sum(n_seqs) OVER (PARTITION BY lang ORDER BY bucket
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
+          FROM (SELECT lang, bucket, max(local_seq) + 1 AS n_seqs FROM seqs GROUP BY lang, bucket)
         )
-    )
+        SELECT lang, seq_id, count(1) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+               CAST(floor(sum(n_tok) * 10000 / {PACK_WINDOW}) AS BIGINT) AS fill_bp
+        FROM (SELECT /*+ BROADCAST(o) */ lang, CAST(off + local_seq AS BIGINT) AS seq_id, n_tok
+              FROM seqs JOIN offsets o USING (lang, bucket))
+        GROUP BY lang, seq_id
+    """)
 
 
-def overlap_chunks(
-    df: DataFrame, ts_col: str, chunk: int = CHUNK_TOKENS, stride: int = CHUNK_STRIDE
-):
-    """One row per ``chunk``-token window, every ``stride`` tokens, of
-    the token array ``ts_col`` (final partial chunk kept): returns
-    ``df`` with ``chunk_idx`` appended, and the chunk's tokens as a
-    column over it. Map-only explode — no shuffle. The one chunking of
-    ``chunk_documents_overlap`` and the pipeline's ``chunk_overlap``
-    step."""
-    n = F.size(ts_col)
-    n_chunks = 1 + F.greatest(F.lit(0), F.ceil((n - chunk) / F.lit(float(stride))).cast("int"))
-    rows = df.withColumn("chunk_idx", F.explode(F.sequence(F.lit(0), n_chunks - 1)))
-    return rows, F.slice(ts_col, F.col("chunk_idx") * stride + 1, chunk)
+def overlap_chunks_sql(
+    src: str, ts: str, chunk: int = CHUNK_TOKENS, stride: int = CHUNK_STRIDE
+) -> str:
+    """Spark SQL: one row per ``chunk``-token window, every ``stride``
+    tokens, of the token array ``ts`` of the relation ``src`` (final
+    partial chunk kept) — the row with ``chunk_idx`` and the window's
+    tokens ``__chunk`` appended. Map-only explode, no shuffle. The one
+    chunking of ``chunk_documents_overlap`` and the pipeline's
+    ``chunk_overlap`` step."""
+    n_chunks = f"1 + greatest(0, CAST(ceil((size({ts}) - {chunk}) / {float(stride)}D) AS INT))"
+    return f"""
+        SELECT *, slice({ts}, chunk_idx * {stride} + 1, {chunk}) AS __chunk
+        FROM (SELECT *, explode(sequence(0, {n_chunks} - 1)) AS chunk_idx FROM {src})
+    """
 
 
 def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long-document chunking with overlap (RAG / context-split shape,
-    ``overlap_chunks``); each chunk carries its md5 so content (not
+    ``overlap_chunks_sql``); each chunk carries its md5 so content (not
     just counts) is oracle-checked.
     """
-    rows, tokens = overlap_chunks(_docs_with_tokens(spark, sf_dir), "ts")
-    c = rows.select("doc_id", "chunk_idx", tokens.alias("chunk"))
-    return c.select(
-        "doc_id",
-        "chunk_idx",
-        F.size("chunk").alias("n_chunk_tokens"),
-        F.md5(F.array_join("chunk", " ")).alias("chunk_md5"),
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, chunk_idx, size(__chunk) AS n_chunk_tokens,
+               md5(array_join(__chunk, ' ')) AS chunk_md5
+        FROM ({overlap_chunks_sql(_DOC_TOKENS, "ts")})
+    """)
 
 
-def paragraph_segments(df: DataFrame, id_col: str, toks, seg: int = SEG_TOKENS) -> DataFrame:
-    """CCNet-style paragraph-level dedup of the token array ``toks``:
-    each row is cut into consecutive ``seg``-token segments
-    (positional "paragraphs" — on real data the splitter becomes a
-    newline split, same plan), and a segment occurrence survives only
-    if it is the corpus-wide FIRST occurrence of its content (min (id,
-    pos)). Returns ``(id, n_segments, n_kept, kept_text)``, the
-    surviving segments joined in order. The one plan behind
-    ``paragraph_dedup_corpus`` and the pipeline's ``paragraph_dedup``
-    step.
+def paragraph_segments_sql(src: str, id_col: str, toks: str, seg: int = SEG_TOKENS) -> str:
+    """CCNet-style paragraph-level dedup of the token array ``toks`` of
+    the relation ``src``, as Spark SQL: each row is cut into consecutive
+    ``seg``-token segments (positional "paragraphs" — on real data the
+    splitter becomes a newline split, same plan), and a segment
+    occurrence survives only if it is the corpus-wide FIRST occurrence
+    of its content (min (id, pos)). Returns ``(id, n_segments, n_kept,
+    kept_text)``, the surviving segments joined in order. The one plan
+    behind ``paragraph_dedup_corpus`` and the pipeline's
+    ``paragraph_dedup`` step.
 
     Plan: map-only segment explode → ONE shuffle on the segment content
     (window row_number picks the canonical occurrence) → per-id hash
@@ -210,45 +186,36 @@ def paragraph_segments(df: DataFrame, id_col: str, toks, seg: int = SEG_TOKENS) 
     corpus×corpus join anywhere; boilerplate-heavy hot segments cost
     one window partition each, not a quadratic bucket.
     """
+    i = text_ident_sql(id_col)
     # greatest(…, 1): a degenerate null/zero-size token array can never
     # feed sequence() a descending range (identical output for every
     # real row, so the oracle needs no mirror)
-    n_segs = F.greatest(F.ceil(F.size("__ts") / F.lit(float(seg))).cast("int"), F.lit(1))
-    segs = (
-        df.select(id_col, toks.alias("__ts"))
-        .select(id_col, "__ts", F.explode(F.sequence(F.lit(0), n_segs - 1)).alias("__pos"))
-        .select(
-            id_col,
-            "__pos",
-            F.array_join(F.slice("__ts", F.col("__pos") * seg + 1, seg), " ").alias("__seg"),
-        )
-    )
-    w = W.partitionBy("__seg").orderBy(id_col, "__pos")
-    marked = segs.withColumn("__keep", F.row_number().over(w) == 1)
-    kept_text = F.array_join(
-        F.transform(
-            F.array_sort(F.collect_list(F.when(F.col("__keep"), F.struct("__pos", "__seg")))),
-            lambda s: s["__seg"],
-        ),
-        " ",
-    )
-    return marked.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_segments"),
-        F.sum(F.col("__keep").cast("long")).alias("n_kept"),
-        kept_text.alias("kept_text"),
-    )
+    n_segs = f"greatest(CAST(ceil(size(__ts) / {float(seg)}D) AS INT), 1)"
+    return f"""
+        SELECT {i}, count(1) AS n_segments, sum(CAST(__keep AS BIGINT)) AS n_kept,
+               array_join(transform(array_sort(collect_list(
+                 CASE WHEN __keep THEN named_struct('pos', __pos, 'seg', __seg) END)),
+                 s -> s.seg), ' ') AS kept_text
+        FROM (
+          SELECT {i}, __pos, __seg,
+                 row_number() OVER (PARTITION BY __seg ORDER BY {i}, __pos) = 1 AS __keep
+          FROM (SELECT {i}, __pos, array_join(slice(__ts, __pos * {seg} + 1, {seg}), ' ') AS __seg
+                FROM (SELECT {i}, __ts, explode(sequence(0, {n_segs} - 1)) AS __pos
+                      FROM (SELECT {i}, {toks} AS __ts FROM {src}))))
+        GROUP BY {i}
+    """
 
 
 def paragraph_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style paragraph-level dedup of ``documents``
-    (``paragraph_segments``): reports per-doc segment counts and the
+    (``paragraph_segments_sql``): reports per-doc segment counts and the
     md5 of the surviving text, so the gate checks reconstructed
     content, not just counts — the stage that strips boilerplate
     (headers, license blocks, navigation) repeated across a crawl."""
-    d = load_table(spark, sf_dir, "documents")
-    return paragraph_segments(d, "doc_id", tokens_col()).select(
-        "doc_id", "n_segments", "n_kept", F.md5("kept_text").alias("kept_md5")
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, n_segments, n_kept, md5(kept_text) AS kept_md5
+        FROM ({paragraph_segments_sql("{documents}", "doc_id", tokens_sql())})
+    """)
 
 
 def dedup_segments_within_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,21 +231,16 @@ def dedup_segments_within_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction all happen as array expressions inside one narrow
     projection. Zero shuffles at any corpus size; this is the plan you
     want before paying the cross-corpus shuffle."""
-    toks = _docs_with_tokens(spark, sf_dir)
-    n_segs = F.greatest(
-        F.ceil(F.size("ts") / F.lit(float(SEG_TOKENS))).cast("int"), F.lit(1)
-    )
-    segs = F.transform(
-        F.sequence(F.lit(0), n_segs - 1),
-        lambda p: F.array_join(F.slice("ts", p * SEG_TOKENS + 1, SEG_TOKENS), " "),
-    )
-    kept = F.array_distinct(segs)
-    return toks.select(
-        "doc_id",
-        F.size(segs).alias("n_segments"),
-        F.size(kept).alias("n_kept"),
-        F.md5(F.array_join(kept, " ")).alias("kept_md5"),
-    )
+    n_segs = f"greatest(CAST(ceil(size(ts) / {float(SEG_TOKENS)}D) AS INT), 1)"
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, size(segs) AS n_segments, size(kept) AS n_kept,
+               md5(array_join(kept, ' ')) AS kept_md5
+        FROM (SELECT doc_id, segs, array_distinct(segs) AS kept
+              FROM (SELECT doc_id,
+                           transform(sequence(0, {n_segs} - 1), p -> array_join(
+                             slice(ts, p * {SEG_TOKENS} + 1, {SEG_TOKENS}), ' ')) AS segs
+                    FROM {_DOC_TOKENS}))
+    """)
 
 
 def span_duplication_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,134 +260,118 @@ def span_duplication_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     together — one pass over the corpus-scale gram relation (gram
     shuffle + join + doc_id shuffle), nothing driver-sized.
     """
-    g = _gram_relation(spark, sf_dir).select("doc_id", "gram")
-    dfreq = g.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    per_doc = (
-        g.join(dfreq, "gram")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum((F.col("df") >= 2).cast("long")).alias("n_shared"),
-        )
-    )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n_grams = F.coalesce("n_grams", F.lit(0)).cast("long")
-    n_shared = F.coalesce("n_shared", F.lit(0)).cast("long")
-    return (
-        docs.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            n_grams.alias("n_grams"),
-            n_shared.alias("n_shared_grams"),
-            F.when(
-                n_grams > 0, F.floor(n_shared * 10000.0 / n_grams) / 10000
-            )
-            .otherwise(0.0)
-            .alias("dup_ratio"),
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT doc_id, n_grams, n_shared AS n_shared_grams,
+               CASE WHEN n_grams > 0 THEN floor(n_shared * 10000.0D / n_grams) / 10000
+                    ELSE 0.0D END AS dup_ratio
+        FROM (SELECT doc_id, CAST(coalesce(n_grams, 0) AS BIGINT) AS n_grams,
+                     CAST(coalesce(n_shared, 0) AS BIGINT) AS n_shared
+              FROM (SELECT doc_id FROM {documents})
+              LEFT JOIN (
+                SELECT doc_id, count(1) AS n_grams, sum(CAST(df >= 2 AS BIGINT)) AS n_shared
+                FROM (SELECT doc_id, gram FROM {grams})
+                JOIN (SELECT gram, count(1) AS df FROM {grams} GROUP BY gram) USING (gram)
+                GROUP BY doc_id)
+              USING (doc_id))
+    """, grams=_gram_relation(spark, sf_dir))
 
 
 BUDGET_NUM, BUDGET_DEN = 2, 5  # select the top-quality 40% of corpus tokens
 
 
-def quality_bands(df: DataFrame, id_col: str, toks) -> DataFrame:
-    """``(id, n_tok, band)``: each row's token count and its heuristic
-    quality (shared ``_quality_expr`` over the token array ``toks``,
-    6-dp rounded) as the exact integer ``band = round(quality·1e6)`` in
-    [0, 1e6]."""
-    from generic_data_ingestor_framework_spark.llm.textstats import _quality_expr
-
+def quality_bands_sql(src: str, id_col: str, toks: str) -> str:
+    """Spark SQL: ``(id, n_tok, band)`` of each row of the relation
+    ``src``: the token count of the token array ``toks`` and its
+    heuristic quality (shared ``quality_sql``, 6-dp rounded) as the
+    exact integer ``band = round(quality·1e6)`` in [0, 1e6]."""
+    i = text_ident_sql(id_col)
     # materialize the token array BEFORE the quality lambda: Catalyst
     # re-inlines aliased expressions into HOF lambda bodies, re-running
-    # the regex split per element otherwise (see dedup.py:66-70)
-    return df.select(id_col, toks.alias("__ts")).select(
-        id_col,
-        F.size("__ts").alias("n_tok"),
-        F.round(F.round(_quality_expr("__ts"), 6) * 1e6).cast("bigint").alias("band"),
-    )
+    # the regex split per element otherwise (see dedup.shingles_sql)
+    return f"""
+        SELECT {i}, size(__ts) AS n_tok,
+               CAST(round(round({quality_sql("__ts")}, 6) * 1000000.0D) AS BIGINT) AS band
+        FROM (SELECT {i}, {toks} AS __ts FROM {src})
+    """
 
 
-def band_totals(banded: DataFrame) -> list[tuple[int, int, int]]:
-    """The driver-sized ``[(band, total_tokens, n_rows)]`` relation of
-    ``quality_bands`` rows: at most 1e6+1 rows at ANY data size."""
-    return [
-        (int(r["band"]), int(r["toks"]), int(r["docs"]))
-        for r in banded.groupBy("band")
-        .agg(F.sum("n_tok").alias("toks"), F.count(F.lit(1)).alias("docs"))
-        .collect()
-    ]
+def band_offsets_sql(banded: str, num: int, den: int) -> str:
+    """Spark SQL: ``(band, tok_off, rank_off, budget)`` of the
+    ``quality_bands_sql`` relation ``banded`` — the tokens and rows of
+    the better bands before each band, and the budget ``num/den`` of
+    all tokens (exact: decimal, as ``num`` may be a float's 53-bit
+    ratio). Bands that start past the budget are left out. The windows
+    run over the per-band totals, at most 1e6+1 rows at ANY data size."""
+    return f"""
+        SELECT band, tok_off, rank_off, budget FROM (
+          SELECT band,
+                 coalesce(sum(toks) OVER w, 0) AS tok_off,
+                 coalesce(sum(docs) OVER w, 0) AS rank_off,
+                 CAST(sum(toks) OVER () AS DECIMAL(38, 0)) * {num} DIV {den} AS budget
+          FROM (SELECT band, sum(n_tok) AS toks, count(1) AS docs FROM {banded} GROUP BY band)
+          WINDOW w AS (ORDER BY band DESC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
+        WHERE tok_off < budget
+    """
 
 
-def banded_budget_select(
-    banded: DataFrame, id_col: str, band_rows: list, num: int, den: int
-) -> DataFrame:
-    """The two-level banded-cumsum selection, shared by the corpus
-    member and the pipeline step: keeps the best ``quality_bands``
-    rows (``banded``) until ``num/den`` of all tokens are spent, by
-    ``band_rows`` (``band_totals``). Bands that start past the budget
-    are pruned before any row-level work; the row-level windows run
-    PARTITIONED by band with driver-computed offsets added — no global
-    sort at any data size. Returns the selected rows annotated with
-    ``cum_tokens`` and ``sel_rank``."""
-    budget = sum(t for _, t, _ in band_rows) * num // den
-    offs, tok_off, rank_off = [], 0, 0
-    for band, toks, docs in sorted(band_rows, reverse=True):
-        if tok_off < budget:  # bands starting past the budget can't contribute
-            offs.append((band, tok_off, rank_off))
-        tok_off += toks
-        rank_off += docs
-    offs_df = local_relation(
-        banded.sparkSession, offs, "band bigint, tok_off bigint, rank_off bigint"
-    )
-    wc = (
-        W.partitionBy("band")
-        .orderBy(id_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    wr = W.partitionBy("band").orderBy(id_col)
-    return (
-        banded.join(F.broadcast(offs_df), "band")
-        .withColumn(
-            "cum_tokens",
-            (F.sum("n_tok").over(wc) + F.col("tok_off")).cast("bigint"),
-        )
-        .withColumn(
-            "sel_rank", (F.row_number().over(wr) + F.col("rank_off")).cast("int")
-        )
-        .filter(F.col("cum_tokens") <= budget)
-    )
+def budget_select_sql(banded: str, offsets: str, id_col: str) -> str:
+    """The two-level banded-cumsum selection, as Spark SQL: keeps the
+    best rows of the ``quality_bands_sql`` relation ``banded`` until the
+    budget of ``band_offsets_sql``'s relation ``offsets`` is spent.
+    Returns ``(id, n_tok, band, cum_tokens, sel_rank)`` of the selected
+    rows — the one selection of ``corpus_select_budget`` and the
+    pipeline's ``select_budget`` step. The row-level windows run
+    PARTITIONED by band with the band's offsets added — no global sort
+    of rows at any data size."""
+    i = text_ident_sql(id_col)
+    return f"""
+        SELECT {i}, n_tok, band, cum_tokens, sel_rank FROM (
+          SELECT /*+ BROADCAST(o) */ {i}, n_tok, band, budget,
+                 CAST(sum(n_tok) OVER (PARTITION BY band ORDER BY {i}
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + tok_off AS BIGINT)
+                   AS cum_tokens,
+                 CAST(row_number() OVER (PARTITION BY band ORDER BY {i}) + rank_off AS INT)
+                   AS sel_rank
+          FROM {banded} JOIN {offsets} o USING (band))
+        WHERE cum_tokens <= budget
+    """
+
+
+_DOC_BANDS = f"({quality_bands_sql('{documents}', 'doc_id', tokens_sql())})"
+
+
+def _band_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``band_offsets_sql`` of the documents' quality bands at the
+    member's budget, persisted once per session (a relation of at most
+    1e6+1 rows)."""
+    from generic_data_ingestor_framework_spark.cachemgr import shared_persist
+
+    text = band_offsets_sql(_DOC_BANDS, BUDGET_NUM, BUDGET_DEN)
+    return shared_persist(spark, ("qsel_bands", sf_dir), lambda: _sql(spark, sf_dir, text))
 
 
 def corpus_select_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget corpus selection: rank documents by heuristic
-    quality (shared ``_quality_expr`` formula) and keep the best docs
+    quality (shared ``quality_sql`` formula) and keep the best docs
     until the cumulative token count reaches a budget — here 40% of
     the corpus — the data-selection step that decides what a training
     run actually reads.
 
     Scale shape: a naive global ORDER BY quality + running-sum window
     is a single-partition sort at 100 TB. This runs the TWO-LEVEL
-    cumsum instead (``banded_budget_select``): quality is 6-dp rounded,
+    cumsum instead (``budget_select_sql``): quality is 6-dp rounded,
     so its band is an exact integer; per-band token totals give each
-    band's prefix offset on the driver, and the row-level window runs
-    PARTITIONED by band with the offset added — no global sort ever
-    happens. The DuckDB oracle computes the same selection with the
-    naive global window, pinning the decomposition's equivalence."""
-    from generic_data_ingestor_framework_spark.cachemgr import shared_value
-
-    d = load_table(spark, sf_dir, "documents")
-    banded = quality_bands(d, "doc_id", tokens_col())
-    band_rows = shared_value(spark, ("qsel_bands", sf_dir), lambda: band_totals(banded))
-    return banded_budget_select(banded, "doc_id", band_rows, BUDGET_NUM, BUDGET_DEN).select(
-        "doc_id",
-        # band/1e6 is round(quality, 6) exactly: the double nearest the
-        # same 6-dp decimal
-        (F.col("band") / 1e6).alias("quality"),
-        F.col("n_tok").alias("n_tokens"),
-        "cum_tokens",
-        "sel_rank",
-    )
+    band's prefix offset (``_band_offsets``), and the row-level window
+    runs PARTITIONED by band with the offset added — no global sort of
+    rows ever happens. The DuckDB oracle computes the same selection
+    with the naive global window, pinning the decomposition's
+    equivalence."""
+    # band/1e6 is round(quality, 6) exactly: the double nearest the same
+    # 6-dp decimal
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, band / 1000000.0D AS quality, n_tok AS n_tokens, cum_tokens, sel_rank
+        FROM ({budget_select_sql(_DOC_BANDS, "{offsets}", "doc_id")})
+    """, offsets=_band_offsets(spark, sf_dir))
 
 
 def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,30 +381,25 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the min-id — the choice real curation makes (of N copies of an
     article, keep the longest / cleanest one).
 
-    Scale shape: rides the session-persisted cluster labels; quality
-    is a map-only projection; the argmax is one window partitioned by
-    cluster (clusters are near-dup families — bounded, never
-    corpus-sized partitions)."""
-    from pyspark.sql import Window as W
-
-    from generic_data_ingestor_framework_spark.llm.dedup import dedup_cluster_assign
-    from generic_data_ingestor_framework_spark.llm.textstats import _quality_expr
-
-    ca = dedup_cluster_assign(spark, sf_dir).select("doc_id", "cluster_id")
-    q = _docs_with_tokens(spark, sf_dir).select(
-        "doc_id", F.round(_quality_expr("ts"), 6).alias("quality")
+    Scale shape: rides the session-persisted cluster labels, which
+    label the corpus scan itself; quality is a map-only projection; the
+    argmax is one window partitioned by cluster (clusters are near-dup
+    families — bounded, never corpus-sized partitions)."""
+    from generic_data_ingestor_framework_spark.llm.dedup import (
+        _CLUSTER_LABELS_SQL,
+        _cluster_frames,
     )
-    j = ca.join(q, "doc_id")
-    w = W.partitionBy("cluster_id").orderBy(F.desc("quality"), "doc_id")
-    wc = W.partitionBy("cluster_id")
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_members", F.count(F.lit(1)).over(wc))
-        .filter(F.col("rn") == 1)
-        .select(
-            "cluster_id", F.col("doc_id").alias("keep_id"), "quality", "n_members"
-        )
-    )
+
+    return _sql(spark, sf_dir, f"""
+        SELECT cluster_id, doc_id AS keep_id, quality, n_members FROM (
+          SELECT cluster_id, doc_id, quality,
+                 row_number() OVER (PARTITION BY cluster_id ORDER BY quality DESC, doc_id) AS rn,
+                 count(1) OVER (PARTITION BY cluster_id) AS n_members
+          FROM (SELECT cluster_id, doc_id, round({quality_sql("ts")}, 6) AS quality
+                FROM (SELECT cluster_id, doc_id, {tokens_sql()} AS ts
+                      FROM ({_CLUSTER_LABELS_SQL}))))
+        WHERE rn = 1
+    """, **_cluster_frames(spark, sf_dir))
 
 
 SPAN_K = DECON_GRAM_K  # duplicated-span gram width (13 tokens)
@@ -467,67 +408,56 @@ SPAN_K = DECON_GRAM_K  # duplicated-span gram width (13 tokens)
 # --- shared span-removal core (one definition for the corpus member
 # AND the pipeline step — a fix in one cannot silently miss the other)
 
-def pos_grams_from_tokens(tokens_df: DataFrame, id_col: str, ts_col: str, k: int) -> DataFrame:
-    """``(id, ts)`` → ``(id, pos, gram)``: every k-gram occurrence with
-    its 0-based token offset (no rows for docs shorter than k)."""
-    n = F.size(ts_col)
-    grams = F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda p: F.array_join(F.slice(ts_col, p + 1, k), " "),
-    )
-    gs = F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
-    return tokens_df.select(id_col, F.posexplode(gs).alias("pos", "gram"))
+def pos_grams_sql(src: str, id_col: str, ts: str, k: int) -> str:
+    """Spark SQL: ``(id, ts)`` rows of the relation ``src`` →
+    ``(id, pos, gram)``, every k-gram occurrence with its 0-based token
+    offset (no rows for rows shorter than k)."""
+    i = text_ident_sql(id_col)
+    return f"""
+        SELECT {i}, posexplode(CASE WHEN size({ts}) >= {k}
+            THEN transform(sequence(0, size({ts}) - {k}),
+                           p -> array_join(slice({ts}, p + 1, {k}), ' '))
+            ELSE CAST(array() AS ARRAY<STRING>) END) AS (pos, gram)
+        FROM {src}
+    """
 
 
-def span_coverage(pg: DataFrame, id_col: str, k: int, min_occ: int = 2) -> DataFrame:
-    """``(id, pos, gram)`` → ``(id, cov array<int>)``: token offsets
-    covered by any gram occurring ≥ ``min_occ`` times corpus-wide.
+def span_cut_sql(src: str, pg: str, id_col: str, ts: str, k: int, min_occ: int = 2) -> str:
+    """Spark SQL: the rows of the relation ``src`` (``id``, token array
+    ``ts``) with ``cov``, the token offsets covered by any gram of the
+    ``pos_grams_sql`` relation ``pg`` occurring ≥ ``min_occ`` times
+    corpus-wide, and ``kept``, the tokens left once they are cut.
 
     The doc-side aggregate collects only the START offset of each
     duplicated posting (one int) and expands to the k-wide covered
-    range map-side AFTER the shuffle — the r8 shape exploded
-    ``sequence(pos, pos+k-1)`` BEFORE the shuffle, moving k×13 ints
-    per posting through the exchange and the hash-aggregate for the
-    identical result (sf1: the worst family ratio in BENCH_SF1, 4.61).
-    Per-doc state is bounded by doc length at any corpus size."""
-    dup = (
-        pg.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .filter(F.col("occ") >= min_occ)
-        .select("gram")
-    )
-    starts = (
-        pg.join(dup, "gram")
-        .groupBy(id_col)
-        .agg(F.collect_list("pos").alias("starts"))
-    )
-    cov = F.array_distinct(
-        F.flatten(
-            F.transform("starts", lambda s: F.sequence(s, s + k - 1))
-        )
-    )
-    return starts.select(id_col, cov.alias("cov"))
-
-
-def cut_covered_tokens(tokens_df: DataFrame, cov_df: DataFrame, id_col: str, ts_col: str):
-    """Left-join coverage onto ``(id, ts)``; returns the joined frame
-    (``cov`` coalesced to empty) and the kept-tokens array column.
+    range map-side AFTER the shuffle — exploding ``sequence(pos,
+    pos+k-1)`` BEFORE the shuffle moved k×13 ints per posting through
+    the exchange and the hash-aggregate for the identical result (sf1:
+    the worst family ratio in BENCH_SF1, 4.61). Per-doc state is
+    bounded by doc length at any corpus size.
 
     Kept positions come from ``array_except(sequence(0, n-1), cov)``
     (hash-set membership, O(len + |cov|) per doc) followed by an O(1)
     ``element_at`` per survivor — NOT a per-token ``array_contains``
     scan, which would be O(len x |cov|) and quadratic for long,
-    heavily-duplicated documents."""
-    joined = tokens_df.join(cov_df, id_col, "left").withColumn(
-        "cov", F.coalesce("cov", F.array().cast("array<int>"))
-    )
-    n = F.size(ts_col)
-    # guard n=0: sequence(0, -1) would DESCEND ([0, -1]), not be empty
-    kept_pos = F.when(
-        n > 0, F.array_except(F.sequence(F.lit(0), n - 1), F.col("cov"))
-    ).otherwise(F.array().cast("array<int>"))
-    kept = F.transform(kept_pos, lambda p: F.element_at(F.col(ts_col), p + 1))
-    return joined, kept
+    heavily-duplicated documents. The n=0 guard: ``sequence(0, -1)``
+    would DESCEND ([0, -1]), not be empty."""
+    i = text_ident_sql(id_col)
+    return f"""
+        SELECT *, transform(CASE WHEN size({ts}) > 0
+                                 THEN array_except(sequence(0, size({ts}) - 1), cov)
+                                 ELSE CAST(array() AS ARRAY<INT>) END,
+                            p -> element_at({ts}, p + 1)) AS kept
+        FROM (
+          SELECT {i}, {ts}, coalesce(cov, CAST(array() AS ARRAY<INT>)) AS cov
+          FROM {src} LEFT JOIN (
+            SELECT {i}, array_distinct(flatten(
+                     transform(collect_list(pos), s -> sequence(s, s + {k} - 1)))) AS cov
+            FROM {pg} JOIN (SELECT gram FROM {pg} GROUP BY gram HAVING count(1) >= {min_occ})
+              USING (gram)
+            GROUP BY {i})
+          USING ({i}))
+    """
 
 
 def _pos_gram_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,21 +467,20 @@ def _pos_gram_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     REMOVAL can map duplicated grams back to covered token ranges.
     Persisted once per session, PRE-PARTITIONED on ``gram``: both
     consumers (the occurrence count and the duplicated-gram join in
-    ``span_coverage``) key on gram, so paying one hash exchange at
+    ``span_cut_sql``) key on gram, so paying one hash exchange at
     build time makes every warm agg/join over the corpus-scale
     relation zero-exchange and co-partitioned (the hot planted-gram
     skew never re-shuffles)."""
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
-    toks = _docs_with_tokens(spark, sf_dir).select("doc_id", "ts")
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return shared_persist(
-        spark,
-        ("span_pos_grams", sf_dir),
-        lambda: pos_grams_from_tokens(toks, "doc_id", "ts", SPAN_K).repartition(
-            npart, "gram"
-        ),
-    )
+    def build() -> DataFrame:
+        npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        return _sql(spark, sf_dir, f"""
+            SELECT /*+ REPARTITION({npart}, gram) */ *
+            FROM ({pos_grams_sql(_DOC_TOKENS, "doc_id", "ts", SPAN_K)})
+        """)
+
+    return shared_persist(spark, ("span_pos_grams", sf_dir), build)
 
 
 def remove_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -569,20 +498,16 @@ def remove_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings ×13 offsets; the per-doc covered set is bounded by doc
     length and the text rebuild is a map-side array filter — the
     corpus text never shuffles."""
-    covered = span_coverage(_pos_gram_relation(spark, sf_dir), "doc_id", SPAN_K)
-    toks = _docs_with_tokens(spark, sf_dir).select("doc_id", "ts")
-    joined, kept = cut_covered_tokens(toks, covered, "doc_id", "ts")
-    n = F.size("ts")
-    return joined.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        F.size("cov").alias("n_removed"),
-        (F.floor(F.size("cov") * 10000.0 / n) / 10000).alias("removed_ratio"),
-        F.md5(F.array_join(kept, " ")).alias("cleaned_md5"),
-    )
+    cut = span_cut_sql(_DOC_TOKENS, "{pg}", "doc_id", "ts", SPAN_K)
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, size(ts) AS n_tokens, size(cov) AS n_removed,
+               floor(size(cov) * 10000.0D / size(ts)) / 10000 AS removed_ratio,
+               md5(array_join(kept, ' ')) AS cleaned_md5
+        FROM ({cut})
+    """, pg=_pos_gram_relation(spark, sf_dir))
 
 
-# the Gopher rule's default bounds (``gopher_flags``)
+# the Gopher rule's default bounds (``gopher_flags_sql``)
 GOPHER_BOUNDS = {
     "min_words": 5,
     "max_words": 100000,
@@ -592,43 +517,40 @@ GOPHER_BOUNDS = {
 }
 
 
-def gopher_flags(toks, **bounds):
-    """Gopher-style repetition/shape flags of the token array ``toks``:
-    ``(n_words, mean_word_len, dup_token_frac, passes)`` columns — word
-    count band, mean word length band, duplicate-token fraction cap,
-    combined into one keep/drop boolean. ``bounds`` override
-    ``GOPHER_BOUNDS``. The fractions are 4-dp floored before they are
-    compared (the cross-engine contract). The one rule of
-    ``gopher_quality_flags`` and the pipeline's ``quality_filter``
-    step."""
+def gopher_flags_sql(toks: str, **bounds) -> tuple[str, str, str, str]:
+    """Gopher-style repetition/shape flags of the token array ``toks``,
+    as Spark SQL: ``(n_words, mean_word_len, dup_token_frac, passes)``
+    expressions — word count band, mean word length band,
+    duplicate-token fraction cap, combined into one keep/drop boolean.
+    ``bounds`` override ``GOPHER_BOUNDS``. The fractions are 4-dp
+    floored before they are compared (the cross-engine contract). The
+    one rule of ``gopher_quality_flags`` and the pipeline's
+    ``quality_filter`` step."""
     b = {**GOPHER_BOUNDS, **bounds}
-    words = F.filter(toks, lambda t: t != "")
-    n_words = F.size(words)
-    sum_len = F.aggregate(words, F.lit(0), lambda acc, t: acc + F.length(t))
+    b = {k: f"{v!r}D" if isinstance(v, float) else v for k, v in b.items()}
+    words = f"filter({toks}, t -> t != '')"
+    n_words = f"size({words})"
+    sum_len = f"aggregate({words}, 0, (acc, t) -> acc + length(t))"
     # a row with no words has no mean and no fraction (NULL, not a
     # division-by-zero failure of the whole query), and fails the gate
-    mean_len = _floor4(F.try_divide(sum_len, n_words))
-    dup_frac = _floor4(1 - F.try_divide(F.size(F.array_distinct(words)), n_words))
+    mean_len = _floor4(f"try_divide({sum_len}, {n_words})")
+    dup_frac = _floor4(f"1 - try_divide(size(array_distinct({words})), {n_words})")
     passes = (
-        (n_words >= b["min_words"])
-        & (n_words <= b["max_words"])
-        & (mean_len >= b["min_mean_word_len"])
-        & (mean_len <= b["max_mean_word_len"])
-        & (dup_frac <= b["max_dup_token_frac"])
+        f"{n_words} >= {b['min_words']} AND {n_words} <= {b['max_words']}"
+        f" AND {mean_len} >= {b['min_mean_word_len']} AND {mean_len} <= {b['max_mean_word_len']}"
+        f" AND {dup_frac} <= {b['max_dup_token_frac']}"
     )
     return n_words, mean_len, dup_frac, passes
 
 
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style quality flags per document (``gopher_flags``)."""
-    n_words, mean_len, dup_frac, passes = gopher_flags(F.col("ts"))
-    return _docs_with_tokens(spark, sf_dir).select(
-        "doc_id",
-        n_words.alias("n_words"),
-        mean_len.alias("mean_word_len"),
-        dup_frac.alias("dup_token_frac"),
-        passes.alias("passes_gopher"),
-    )
+    """Gopher-style quality flags per document (``gopher_flags_sql``)."""
+    n_words, mean_len, dup_frac, passes = gopher_flags_sql("ts")
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, {n_words} AS n_words, {mean_len} AS mean_word_len,
+               {dup_frac} AS dup_token_frac, {passes} AS passes_gopher
+        FROM {_DOC_TOKENS}
+    """)
 
 
 QUERIES = {

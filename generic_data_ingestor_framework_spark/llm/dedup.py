@@ -95,6 +95,10 @@ def hash32_sql(c: str) -> str:
     return f"CAST(conv(substring(md5({c}), 1, 8), 16, 10) AS BIGINT)"
 
 
+# portable_hash32 of doc_id, as Spark SQL: the one spelling of every
+# doc-id sample, split and bucket
+DOC_HASH_SQL = hash32_sql("CAST(doc_id AS STRING)")
+
 _HASH_SQL = "CAST(concat('0x', substr(md5({c}), 1, 8)) AS BIGINT)"
 
 
@@ -109,6 +113,13 @@ def ident_sql(name: str) -> str:
     """The column ``name`` as Spark SQL, resolved as ``F.col(name)``
     resolves it."""
     return name if "`" in name else ".".join(f"`{p}`" for p in name.split("."))
+
+
+def text_ident_sql(name: str) -> str:
+    """``ident_sql`` for a ``relational._sql`` text: the name's braces
+    doubled, so PySpark's ``{table}`` formatter reads them back as the
+    name's own braces instead of as a table field."""
+    return ident_sql(name).replace("{", "{{").replace("}", "}}")
 
 
 def tokens_col(text_col="text"):
@@ -161,11 +172,11 @@ def signature_sql(src: str, id_col: str, text_col: str, n_perm: int, hint: str =
     projection with the whole shingle expression inlined (measured ~8x
     the rest of the pipeline at sf0.1). ``hint`` goes on the token
     projection (the batch memo spreads it across the cluster)."""
-    i = ident_sql(id_col)
+    i = text_ident_sql(id_col)
     return f"""
         SELECT {i}, {minhash_sql("hs", n_perm)}
         FROM (SELECT {i}, transform({shingles_sql("toks")}, s -> {hash32_sql("s")}) AS hs
-              FROM (SELECT {hint} {i}, {tokens_sql(ident_sql(text_col))} AS toks FROM {src})
+              FROM (SELECT {hint} {i}, {tokens_sql(text_ident_sql(text_col))} AS toks FROM {src})
               WHERE size(toks) >= {SHINGLE_K})
     """
 
@@ -327,7 +338,7 @@ def _banded_df(
     from generic_data_ingestor_framework_spark.cachemgr import shared_persist
 
     text = f"""
-        SELECT doc_id, {hash32_sql("CAST(doc_id AS STRING)")} % 2 AS bucket,
+        SELECT doc_id, {DOC_HASH_SQL} % 2 AS bucket,
                {band_split_sql(n_perm, bands)}
         FROM {{sig}}
     """
@@ -607,7 +618,7 @@ def bands_per_row(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     signatures are identical; no aggregate is involved, so this works
     on static frames AND unbounded streams. Docs too short to carry a
     shingle produce no rows."""
-    i = ident_sql(id_col)
+    i = text_ident_sql(id_col)
     return _sql(df.sparkSession, "", f"""
         SELECT {i}, {BAND_KEY_SQL} AS band_key
         FROM (SELECT {i}, {band_split_sql()}

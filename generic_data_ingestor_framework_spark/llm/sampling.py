@@ -3,69 +3,64 @@
 Training-data pipelines need reproducible subset selection at scale:
 hash-mod sampling (every executor agrees on membership without
 coordination), stratified per-group sampling, train/val/test splits
-that are stable across reruns, and key pseudonymization. All are pure
-column expressions over the portable md5 hash, so membership is
+that are stable across reruns, and key pseudonymization. Every member
+is one Spark SQL text over the portable md5 hash, so membership is
 identical on any engine and any cluster size — the property that makes
-a 100 TB sample auditable.
+a 100 TB sample auditable. The operators the pipeline shares
+(``pii_redacted_sql``, ``quality_weight_bp_sql``, ``salted_hash_sql``)
+are Spark SQL fragments: a member splices them into its text, a
+pipeline step runs them through ``F.expr``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from generic_data_ingestor_framework_spark.llm.dedup import (
-    ident_sql,
-    portable_hash32,
-    tokens_col,
-    tokens_sql,
-)
+from generic_data_ingestor_framework_spark.llm.dedup import DOC_HASH_SQL, hash32_sql, tokens_sql
 from generic_data_ingestor_framework_spark.llm.textstats import _STOP_IN, n_stop_sql
-from generic_data_ingestor_framework_spark.relational import load_table
-from generic_data_ingestor_framework_spark.session import local_relation
+from generic_data_ingestor_framework_spark.relational import _sql
 
 _HASH_SQL = "CAST(concat('0x', substr(md5(CAST({c} AS VARCHAR)), 1, 8)) AS BIGINT)"
 
 
-def _doc_hash():
-    return portable_hash32(F.col("doc_id").cast("string"))
+def _str_sql(s: str) -> str:
+    """The Python string ``s`` as a Spark SQL string literal. Braces are
+    unicode escapes, so the literal reads the same through ``F.expr``
+    and through a text's ``{table}`` formatter."""
+    body = s.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + body.replace("{", "\\u007B").replace("}", "\\u007D") + "'"
 
 
 def sample_hash_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ~10% sample: hash(doc_id) % 10 == 0. Unlike
     ``df.sample()`` this is reproducible across runs, engines, and
     partitionings — the only kind of sample you can re-join later."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.filter(_doc_hash() % 10 == 0).select("doc_id", "lang", "source")
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, lang, source FROM {{documents}} WHERE {DOC_HASH_SQL} % 10 = 0
+    """)
 
 
 def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stable 80/10/10 split assignment + per-split counts."""
-    d = load_table(spark, sf_dir, "documents")
-    bucket = _doc_hash() % 100
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
-    return (
-        d.select(split.alias("split"))
-        .groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("split")
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT split, count(1) AS n
+        FROM (SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
+                          ELSE 'test' END AS split
+              FROM (SELECT {DOC_HASH_SQL} % 100 AS b FROM {{documents}}))
+        GROUP BY split ORDER BY split
+    """)
 
 
 def stratified_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 docs per language by hash order: a deterministic
     stratified sample (equal allocation per stratum)."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    w = W.partitionBy("lang").orderBy(_doc_hash().asc(), F.col("doc_id"))
-    return (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("lang", "doc_id", "rn")
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT lang, doc_id, rn FROM (
+          SELECT lang, doc_id,
+                 row_number() OVER (PARTITION BY lang ORDER BY {DOC_HASH_SQL}, doc_id) AS rn
+          FROM {{documents}})
+        WHERE rn <= 5
+    """)
 
 
 N_EXPORT_SHARDS = 8
@@ -83,16 +78,12 @@ def shard_export_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly ``repartition(shard).sortWithinPartitions(hash)`` at
     export time; membership and order are pure hash arithmetic, so any
     engine reproduces them without coordination."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    h = _doc_hash()
-    w = W.partitionBy("shard").orderBy("h", "doc_id")
-    return (
-        d.select("doc_id", (h % N_EXPORT_SHARDS).cast("int").alias("shard"), h.alias("h"))
-        .withColumn("pos_in_shard", F.row_number().over(w))
-        .select("doc_id", "shard", "pos_in_shard")
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, shard,
+               row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) AS pos_in_shard
+        FROM (SELECT doc_id, CAST(h % {N_EXPORT_SHARDS} AS INT) AS shard, h
+              FROM (SELECT doc_id, {DOC_HASH_SQL} AS h FROM {{documents}}))
+    """)
 
 
 RESAMPLE_PPM = 10**6  # keep-probability resolution (parts per million)
@@ -110,61 +101,48 @@ def mix_resample_equalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back, then a map-only filter — membership is engine- and
     partitioning-independent hash arithmetic, so the resampled corpus
     is auditable and re-joinable like every sample here."""
-    d = load_table(spark, sf_dir, "documents")
-    per_lang = (
-        d.select("lang", F.size(tokens_col()).alias("n_tok"))
-        .groupBy("lang")
-        .agg(F.sum("n_tok").alias("n_tokens"))
-    )
-    totals = per_lang.agg(
-        F.sum("n_tokens").alias("tot"), F.count(F.lit(1)).alias("n_langs")
-    )
-    rates = per_lang.crossJoin(F.broadcast(totals)).select(
-        "lang",
-        F.floor(
-            F.least(
-                F.lit(1.0), F.col("tot") / (F.col("n_langs") * F.col("n_tokens"))
-            )
-            * RESAMPLE_PPM
+    return _sql(spark, sf_dir, f"""
+        WITH per_lang AS (
+          SELECT lang, sum(size({tokens_sql()})) AS n_tokens FROM {{documents}} GROUP BY lang
+        ),
+        rates AS (
+          SELECT /*+ BROADCAST(t) */ lang,
+                 CAST(floor(least(1.0D, tot / (n_langs * n_tokens)) * {RESAMPLE_PPM})
+                      AS BIGINT) AS keep_ppm
+          FROM per_lang
+          CROSS JOIN (SELECT sum(n_tokens) AS tot, count(1) AS n_langs FROM per_lang) t
         )
-        .cast("bigint")
-        .alias("keep_ppm"),
-    )
-    return (
-        d.join(F.broadcast(rates), "lang")
-        .filter(_doc_hash() % RESAMPLE_PPM < F.col("keep_ppm"))
-        .select("doc_id", "lang", "keep_ppm")
-    )
+        SELECT /*+ BROADCAST(r) */ doc_id, lang, keep_ppm
+        FROM {{documents}} JOIN rates r USING (lang)
+        WHERE {DOC_HASH_SQL} % {RESAMPLE_PPM} < keep_ppm
+    """)
 
 
 def pseudonymize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key pseudonymization: stable md5 surrogate for user_id, with the
     event payload intact — referential integrity preserved (same user
     → same pseudonym) without exposing the raw key."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.select(
-            "event_id",
-            F.md5(F.col("user_id").cast("string")).alias("user_pseudo"),
-            "event_type",
-        )
-    )
+    return _sql(spark, sf_dir, """
+        SELECT event_id, md5(CAST(user_id AS STRING)) AS user_pseudo, event_type
+        FROM {events}
+    """)
 
 
-def quality_weight_bp(text_col: str):
-    """The shared quality formula in PURE INTEGER basis points:
+def quality_weight_bp_sql(toks: str) -> str:
+    """The shared quality formula over the token array ``toks`` in PURE
+    INTEGER basis points, as Spark SQL:
     ``⌊min(n,100)·50·(n+n_stop)/n⌋ ∈ [0,10000]`` (algebraically
     ``quality·10⁴``). One definition feeds the sampling member AND the
     pipeline ``weighted_sample`` step, so they cannot drift."""
-    toks = tokens_sql(ident_sql(text_col))
     n, n_stop = f"CAST(size({toks}) AS BIGINT)", f"CAST({n_stop_sql(toks)} AS BIGINT)"
-    return F.expr(f"CAST(floor(least({n}, 100) * 50 * ({n} + {n_stop}) / {n}) AS BIGINT)")
+    return f"CAST(floor(least({n}, 100) * 50 * ({n} + {n_stop}) / {n}) AS BIGINT)"
 
 
-def salted_hash(id_col: str, salt: str):
-    """Portable md5 hash of ``salt·id`` — decorrelated from every other
-    hash-based selection over the same id column."""
-    return portable_hash32(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+def salted_hash_sql(id_sql: str, salt: str) -> str:
+    """Portable md5 hash of ``salt·id`` for the Spark SQL expression
+    ``id_sql`` — decorrelated from every other hash-based selection over
+    the same id column."""
+    return hash32_sql(f"concat({_str_sql(salt)}, CAST({id_sql} AS STRING))")
 
 
 def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,9 +151,8 @@ def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative to a hard threshold — low-quality docs are down-weighted,
     not annihilated, preserving distributional diversity).
 
-    The keep weight is the shared quality formula re-derived in PURE
-    INTEGER basis points — ``⌊min(n,100)·50·(n+n_stop)/n⌋ ∈ [0,10000]``
-    (algebraically ``quality·10⁴``) — so membership is exact hash
+    The keep weight is ``quality_weight_bp_sql``, the shared quality
+    formula in PURE INTEGER basis points, so membership is exact hash
     arithmetic with no float-rounding boundary to disagree on; the hash
     is salted ('q'·doc_id) to decorrelate from ``sample_hash_mod`` and
     the split/shard assignments.
@@ -183,14 +160,13 @@ def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-only (tokenize → two array sizes → hash compare);
     no shuffle, no state, membership independent of partitioning —
     auditable and re-joinable at any corpus size."""
-    d = load_table(spark, sf_dir, "documents")
-    weight_bp = quality_weight_bp("text")
-    h = salted_hash("doc_id", "q")
-    return (
-        d.select("doc_id", "source", weight_bp.alias("weight_bp"), h.alias("h"))
-        .filter(F.col("h") % 10000 < F.col("weight_bp"))
-        .select("doc_id", "source", "weight_bp")
-    )
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, source, weight_bp
+        FROM (SELECT doc_id, source, {quality_weight_bp_sql("ts")} AS weight_bp,
+                     {salted_hash_sql("doc_id", "q")} AS h
+              FROM (SELECT doc_id, source, {tokens_sql()} AS ts FROM {{documents}}))
+        WHERE h % 10000 < weight_bp
+    """)
 
 
 _EMAIL_RE = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
@@ -198,43 +174,34 @@ _PHONE_RE = "\\+?[0-9][0-9()\\- ]{7,}[0-9]"
 _SSN_RE = "[0-9]{3}-[0-9]{2}-[0-9]{4}"
 
 
-def pii_redacted(text):
-    """``text`` with emails, phone-like digit runs and SSN-shaped ids
-    replaced by typed placeholders: the one redaction run by the member
-    and by the pipeline's ``redact_pii`` step. Pure ``regexp_replace``
-    projections — codegen'd, no UDFs; RE2-safe patterns shared verbatim
-    with the oracle."""
-    return F.regexp_replace(
-        F.regexp_replace(F.regexp_replace(text, _SSN_RE, "<SSN>"), _EMAIL_RE, "<EMAIL>"),
-        _PHONE_RE,
-        "<PHONE>",
-    )
+def pii_redacted_sql(text: str) -> str:
+    """The Spark SQL expression ``text`` with emails, phone-like digit
+    runs and SSN-shaped ids replaced by typed placeholders: the one
+    redaction run by the member and by the pipeline's ``redact_pii``
+    step. Pure ``regexp_replace`` projections — codegen'd, no UDFs;
+    RE2-safe patterns shared verbatim with the oracle."""
+    for pattern, tag in ((_SSN_RE, "<SSN>"), (_EMAIL_RE, "<EMAIL>"), (_PHONE_RE, "<PHONE>")):
+        text = f"regexp_replace({text}, {_str_sql(pattern)}, '{tag}')"
+    return text
 
 
 def redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing pass (``pii_redacted``) with per-doc hit counts so
-    a pipeline can quarantine high-PII documents."""
-    d = load_table(spark, sf_dir, "documents")
-    redacted = pii_redacted(F.col("text"))
-    n_hits = (
-        F.size(F.split(redacted, "<EMAIL>")) - 1
-        + F.size(F.split(redacted, "<PHONE>")) - 1
-        + F.size(F.split(redacted, "<SSN>")) - 1
-    )
-    return d.select(
-        "doc_id",
-        F.md5(redacted).alias("redacted_md5"),
-        n_hits.cast("int").alias("n_pii_hits"),
-    )
+    """PII scrubbing pass (``pii_redacted_sql``) with per-doc hit counts
+    so a pipeline can quarantine high-PII documents."""
+    hits = " + ".join(f"size(split(red, '{t}')) - 1" for t in ("<EMAIL>", "<PHONE>", "<SSN>"))
+    return _sql(spark, sf_dir, f"""
+        SELECT doc_id, md5(red) AS redacted_md5, CAST({hits} AS INT) AS n_pii_hits
+        FROM (SELECT doc_id, {pii_redacted_sql("text")} AS red FROM {{documents}})
+    """)
 
 
-def _epoch_pseudo(user_col, epoch: int):
-    """Keyed pseudonym for ``user_col`` at key epoch ``epoch``: the
-    epoch secret is derived (md5 of a root label + epoch) and mixed
-    into the keyed digest — the salted-HMAC shape, portable to DuckDB.
-    Different epochs produce unlinkable pseudonym spaces."""
-    secret = F.md5(F.lit(f"pseud-root:{epoch}"))
-    return F.md5(F.concat(secret, F.lit(":"), user_col.cast("string")))
+def _epoch_pseudo(epoch: int) -> str:
+    """Spark SQL: the keyed pseudonym of ``user_id`` at key epoch
+    ``epoch``: the epoch secret is derived (md5 of a root label +
+    epoch) and mixed into the keyed digest — the salted-HMAC shape,
+    portable to DuckDB. Different epochs produce unlinkable pseudonym
+    spaces."""
+    return f"md5(concat(md5('pseud-root:{epoch}'), ':', CAST(user_id AS STRING)))"
 
 
 def pseudonymize_keyed_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,39 +221,37 @@ def pseudonymize_keyed_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the translation table is user-dimension-sized
     (broadcast or co-bucketed at 100 TB); the re-key is one hash join
-    on the old pseudonym; everything else is map-side md5. r14 opt:
-    the direct-e2 reference values are computed on the SAME event scan
-    as the stored epoch-1 pseudonyms (they are per-row md5s of the
-    same rows), so the former fact-fact re-alignment join on event_id
-    — a full shuffle of the event stream on both sides — is gone; the
-    check it aligned (translate(p1) vs direct p2, per event) is
-    unchanged."""
-    e = load_table(spark, sf_dir, "events")
-    p1 = _epoch_pseudo(F.col("user_id"), 1)
-    p2 = _epoch_pseudo(F.col("user_id"), 2)
-    stored = e.select(
-        "event_id", "event_type", p1.alias("user_pseudo_e1"), p2.alias("direct_e2")
-    )
-    trans = (
-        e.select("user_id").distinct()
-        .select(p1.alias("user_pseudo_e1"), p2.alias("user_pseudo_e2"))
-    )
-    j = stored.join(trans, "user_pseudo_e1")
-    return j.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_pseudo_e1").cast("bigint").alias("n_users_e1"),
-        F.countDistinct("user_pseudo_e2").cast("bigint").alias("n_users_e2"),
-        F.sum(
-            F.when(F.col("user_pseudo_e2") != F.col("direct_e2"), 1).otherwise(0)
-        ).cast("bigint").alias("n_rekey_mismatch"),
-        F.sum(portable_hash32(F.col("user_pseudo_e2")))
-        .cast("bigint")
-        .alias("pseudo_checksum"),
-    )
+    on the old pseudonym; everything else is map-side md5. The
+    direct-e2 reference values are computed on the SAME event scan as
+    the stored epoch-1 pseudonyms (they are per-row md5s of the same
+    rows), so no fact-fact re-alignment join on event_id exists."""
+    p1, p2 = _epoch_pseudo(1), _epoch_pseudo(2)
+    return _sql(spark, sf_dir, f"""
+        SELECT event_type,
+               count(1) AS n_events,
+               count(DISTINCT user_pseudo_e1) AS n_users_e1,
+               count(DISTINCT user_pseudo_e2) AS n_users_e2,
+               CAST(sum(CASE WHEN user_pseudo_e2 != direct_e2 THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_rekey_mismatch,
+               CAST(sum({hash32_sql("user_pseudo_e2")}) AS BIGINT) AS pseudo_checksum
+        FROM (SELECT event_type, {p1} AS user_pseudo_e1, {p2} AS direct_e2 FROM {{events}})
+        JOIN (SELECT {p1} AS user_pseudo_e1, {p2} AS user_pseudo_e2
+              FROM (SELECT DISTINCT user_id FROM {{events}}))
+          USING (user_pseudo_e1)
+        GROUP BY event_type
+    """)
 
 
 K_ANON_THRESHOLDS = (2, 5, 10, 25)
 ACCTBAL_BUCKET = 1000  # quasi-identifier coarsening grain for c_acctbal
+
+# the balance bucket of a customer, at the audits' grain
+_BAL_BUCKET = f"CAST(floor(c_acctbal / {ACCTBAL_BUCKET}) AS BIGINT)"
+
+
+def _values_sql(name: str, values: tuple) -> str:
+    """A one-column inline relation ``name`` of the ints ``values``."""
+    return f"(VALUES {', '.join(f'({v})' for v in values)}) AS {name}s({name})"
 
 
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,43 +269,23 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one groupBy on the QI tuple (single shuffle,
     map-side combinable), then a threshold × group-size broadcast
-    fold over the aggregate-sized group histogram."""
-    c = load_table(spark, sf_dir, "customer")
-    qi = c.select(
-        "c_nationkey",
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") / ACCTBAL_BUCKET).cast("bigint").alias("bal_bucket"),
-    )
-    groups = qi.groupBy("c_nationkey", "c_mktsegment", "bal_bucket").agg(
-        F.count(F.lit(1)).alias("gsz")
-    ).localCheckpoint(eager=True)
-    # ^ aggregate-sized; referenced by the totals AND the threshold
-    # fold — one corpus scan instead of two (r14 opt)
-    ks = local_relation(spark, [(k,) for k in K_ANON_THRESHOLDS], "k int")
-    tot = groups.agg(
-        F.sum("gsz").alias("n_rows"), F.count(F.lit(1)).alias("n_groups")
-    )
-    return (
-        groups.crossJoin(F.broadcast(ks))
-        .groupBy("k")
-        .agg(
-            F.sum(F.when(F.col("gsz") < F.col("k"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("groups_below_k"),
-            F.sum(F.when(F.col("gsz") < F.col("k"), F.col("gsz")).otherwise(0))
-            .cast("bigint")
-            .alias("rows_below_k"),
+    fold over the aggregate-sized group histogram; its totals are
+    windows over that histogram, so the corpus is scanned once."""
+    return _sql(spark, sf_dir, f"""
+        WITH groups AS (
+          SELECT gsz, sum(gsz) OVER () AS n_rows, count(1) OVER () AS n_groups
+          FROM (SELECT count(1) AS gsz FROM {{customer}}
+                GROUP BY c_nationkey, c_mktsegment, {_BAL_BUCKET})
         )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "k",
-            "groups_below_k",
-            "rows_below_k",
-            F.expr("(rows_below_k * 10000) DIV n_rows").alias("risk_share_bp"),
-            F.col("n_groups").cast("bigint").alias("n_groups"),
-        )
-        .orderBy("k")
-    )
+        SELECT k,
+               CAST(sum(CASE WHEN gsz < k THEN 1 ELSE 0 END) AS BIGINT) AS groups_below_k,
+               CAST(sum(CASE WHEN gsz < k THEN gsz ELSE 0 END) AS BIGINT) AS rows_below_k,
+               (CAST(sum(CASE WHEN gsz < k THEN gsz ELSE 0 END) AS BIGINT) * 10000)
+                 DIV max(n_rows) AS risk_share_bp,
+               max(n_groups) AS n_groups
+        FROM groups CROSS JOIN {_values_sql("k", K_ANON_THRESHOLDS)}
+        GROUP BY k ORDER BY k
+    """)
 
 
 L_DIVERSITY_THRESHOLDS = (2, 3, 4, 5)
@@ -362,44 +307,22 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one groupBy on the QI tuple with a count-distinct
     over the sensitive column (two-phase hash aggregate, map-side
     partials), then a threshold × histogram broadcast fold over the
-    aggregate-sized group relation."""
-    c = load_table(spark, sf_dir, "customer")
-    qi = c.select(
-        "c_nationkey",
-        F.floor(F.col("c_acctbal") / ACCTBAL_BUCKET).cast("bigint").alias("bal_bucket"),
-        "c_mktsegment",
-    )
-    groups = qi.groupBy("c_nationkey", "bal_bucket").agg(
-        F.count(F.lit(1)).alias("gsz"),
-        F.countDistinct("c_mktsegment").alias("ndist"),
-    ).localCheckpoint(eager=True)
-    # ^ aggregate-sized; referenced by the totals AND the threshold
-    # fold — one corpus scan instead of two (r14 opt)
-    ls = local_relation(spark, [(l,) for l in L_DIVERSITY_THRESHOLDS], "l int")
-    tot = groups.agg(
-        F.sum("gsz").alias("n_rows"), F.count(F.lit(1)).alias("n_groups")
-    )
-    return (
-        groups.crossJoin(F.broadcast(ls))
-        .groupBy("l")
-        .agg(
-            F.sum(F.when(F.col("ndist") < F.col("l"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("groups_below_l"),
-            F.sum(F.when(F.col("ndist") < F.col("l"), F.col("gsz")).otherwise(0))
-            .cast("bigint")
-            .alias("rows_below_l"),
+    aggregate-sized group relation, whose totals are windows."""
+    return _sql(spark, sf_dir, f"""
+        WITH groups AS (
+          SELECT gsz, ndist, sum(gsz) OVER () AS n_rows, count(1) OVER () AS n_groups
+          FROM (SELECT count(1) AS gsz, count(DISTINCT c_mktsegment) AS ndist
+                FROM {{customer}} GROUP BY c_nationkey, {_BAL_BUCKET})
         )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "l",
-            "groups_below_l",
-            "rows_below_l",
-            F.expr("(rows_below_l * 10000) DIV n_rows").alias("risk_share_bp"),
-            F.col("n_groups").cast("bigint").alias("n_groups"),
-        )
-        .orderBy("l")
-    )
+        SELECT l,
+               CAST(sum(CASE WHEN ndist < l THEN 1 ELSE 0 END) AS BIGINT) AS groups_below_l,
+               CAST(sum(CASE WHEN ndist < l THEN gsz ELSE 0 END) AS BIGINT) AS rows_below_l,
+               (CAST(sum(CASE WHEN ndist < l THEN gsz ELSE 0 END) AS BIGINT) * 10000)
+                 DIV max(n_rows) AS risk_share_bp,
+               max(n_groups) AS n_groups
+        FROM groups CROSS JOIN {_values_sql("l", L_DIVERSITY_THRESHOLDS)}
+        GROUP BY l ORDER BY l
+    """)
 
 
 K_ANON_K = 10
@@ -422,51 +345,29 @@ def k_anonymize_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min >= k at every released level) cross-engine, not just counts.
 
     Scale shape: four window counts over progressively coarser key
-    prefixes (Catalyst plans them as hash aggregates re-joined by key;
-    at 100 TB you pre-aggregate the L0 histogram once — aggregate-sized
-    — and roll the coarser levels up from it, which is what the window
-    over the coarsest keys degenerates to) plus one final group-by-level
-    fold."""
-    from pyspark.sql import Window as W
-
-    c = load_table(spark, sf_dir, "customer")
-    b0 = F.floor(F.col("c_acctbal") / ACCTBAL_BUCKET).cast("bigint")
-    b1 = F.floor(F.col("c_acctbal") / COARSE_BUCKET).cast("bigint")
-    qi = c.select(
-        "c_nationkey", "c_mktsegment", b0.alias("bal0"), b1.alias("bal1")
-    )
-    s0 = F.count(F.lit(1)).over(
-        W.partitionBy("c_nationkey", "c_mktsegment", "bal0")
-    )
-    s1 = F.count(F.lit(1)).over(
-        W.partitionBy("c_nationkey", "c_mktsegment", "bal1")
-    )
-    s2 = F.count(F.lit(1)).over(W.partitionBy("c_nationkey", "c_mktsegment"))
-    s3 = F.count(F.lit(1)).over(W.partitionBy("c_nationkey"))
-    k = F.lit(K_ANON_K)
-    level = (
-        F.when(s0 >= k, 0)
-        .when(s1 >= k, 1)
-        .when(s2 >= k, 2)
-        .when(s3 >= k, 3)
-        .otherwise(-1)
-    )
-    gsz = (
-        F.when(s0 >= k, s0)
-        .when(s1 >= k, s1)
-        .when(s2 >= k, s2)
-        .when(s3 >= k, s3)
-        .otherwise(s3)
-    )
-    return (
-        qi.select(level.cast("int").alias("level"), gsz.cast("bigint").alias("gsz"))
-        .groupBy("level")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("gsz").alias("min_group_sz"),
-        )
-        .orderBy("level")
-    )
+    prefixes (at 100 TB you pre-aggregate the L0 histogram once —
+    aggregate-sized — and roll the coarser levels up from it, which is
+    what the window over the coarsest keys degenerates to) plus one
+    final group-by-level fold."""
+    k = K_ANON_K
+    return _sql(spark, sf_dir, f"""
+        SELECT CAST(level AS INT) AS level, count(1) AS n_rows,
+               CAST(min(gsz) AS BIGINT) AS min_group_sz
+        FROM (
+          SELECT CASE WHEN s0 >= {k} THEN 0 WHEN s1 >= {k} THEN 1 WHEN s2 >= {k} THEN 2
+                      WHEN s3 >= {k} THEN 3 ELSE -1 END AS level,
+                 CASE WHEN s0 >= {k} THEN s0 WHEN s1 >= {k} THEN s1 WHEN s2 >= {k} THEN s2
+                      ELSE s3 END AS gsz
+          FROM (
+            SELECT count(1) OVER (PARTITION BY c_nationkey, c_mktsegment, bal0) AS s0,
+                   count(1) OVER (PARTITION BY c_nationkey, c_mktsegment, bal1) AS s1,
+                   count(1) OVER (PARTITION BY c_nationkey, c_mktsegment) AS s2,
+                   count(1) OVER (PARTITION BY c_nationkey) AS s3
+            FROM (SELECT c_nationkey, c_mktsegment, {_BAL_BUCKET} AS bal0,
+                         CAST(floor(c_acctbal / {COARSE_BUCKET}) AS BIGINT) AS bal1
+                  FROM {{customer}})))
+        GROUP BY level ORDER BY level
+    """)
 
 
 T_CLOSENESS_THRESHOLDS_BP = (500, 1000, 2000, 3000)
@@ -490,79 +391,42 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     number an operator reads off.
 
     Scale shape: one (QI, sensitive) groupBy (single shuffle,
-    map-side combinable); the group histogram is aggregate-sized, the
-    sensitive alphabet is broadcast (a handful of segments), and the
-    absent-(g,s) terms come from the group×alphabet broadcast cross —
-    never from a second corpus scan."""
-    c = load_table(spark, sf_dir, "customer")
-    qi = c.select(
-        "c_nationkey",
-        F.floor(F.col("c_acctbal") / ACCTBAL_BUCKET).cast("bigint").alias("bal_bucket"),
-        "c_mktsegment",
-    )
-    gs = qi.groupBy("c_nationkey", "bal_bucket", "c_mktsegment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_gs")
-    ).localCheckpoint(eager=True)
-    # ^ aggregate-sized (groups x segments); referenced by the group
-    # totals AND the left join below — without the checkpoint the
-    # corpus scan + aggregate ran once per reference (r14 opt)
-    g = gs.groupBy("c_nationkey", "bal_bucket").agg(
-        F.sum("n_gs").cast("bigint").alias("n_g")
-    )
-    glob = qi.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_s")
-    )
-    tot = glob.agg(F.sum("n_s").cast("bigint").alias("n_tot"))
-    # group × sensitive-alphabet cross (aggregate-sized × tiny), left
-    # join the observed (g, s) counts so absent pairs contribute the
-    # full n_s·n_g deviation
-    tvd = (
-        g.crossJoin(F.broadcast(glob))
-        .join(gs, ["c_nationkey", "bal_bucket", "c_mktsegment"], "left")
-        .withColumn("n_gs", F.coalesce("n_gs", F.lit(0)))
-        .crossJoin(F.broadcast(tot))
-        .groupBy("c_nationkey", "bal_bucket", "n_g", "n_tot")
-        .agg(
-            F.sum(F.abs(F.col("n_gs") * F.col("n_tot") - F.col("n_s") * F.col("n_g")))
-            .cast("bigint")
-            .alias("dev")
+    map-side combinable); the histogram is gathered into one partition
+    (at most nations × segments × balance buckets rows at any corpus
+    size), where the group, segment and corpus totals are windows and
+    every fold runs with no further shuffle. A segment absent from a
+    group contributes ``n_s·n_g``: together ``n_g·(N − Σ n_s)`` over
+    the segments the group holds (every key column is NOT NULL), never
+    a group × alphabet cross or a second corpus scan."""
+    return _sql(spark, sf_dir, f"""
+        WITH gs AS (
+          SELECT /*+ COALESCE(1) */ c_nationkey, bal_bucket, c_mktsegment, count(1) AS n_gs
+          FROM (SELECT c_nationkey, {_BAL_BUCKET} AS bal_bucket, c_mktsegment FROM {{customer}})
+          GROUP BY c_nationkey, bal_bucket, c_mktsegment
+        ),
+        tvd AS (
+          SELECT n_g, tvd_bp, sum(n_g) OVER () AS n_rows, count(1) OVER () AS n_groups,
+                 max(tvd_bp) OVER () AS max_tvd_bp
+          FROM (
+            SELECT n_g,
+                   ((sum(abs(n_gs * n_tot - n_s * n_g)) + n_g * (n_tot - sum(n_s))) * 10000)
+                     DIV (2 * n_g * n_tot) AS tvd_bp
+            FROM (SELECT c_nationkey, bal_bucket, n_gs,
+                         sum(n_gs) OVER (PARTITION BY c_nationkey, bal_bucket) AS n_g,
+                         sum(n_gs) OVER (PARTITION BY c_mktsegment) AS n_s,
+                         sum(n_gs) OVER () AS n_tot
+                  FROM gs)
+            GROUP BY c_nationkey, bal_bucket, n_g, n_tot)
         )
-        .select(
-            "n_g",
-            F.expr("(dev * 10000) DIV (2 * n_g * n_tot)").alias("tvd_bp"),
-        )
-        # group-count-sized; referenced by the corpus-wide rollup AND
-        # the per-threshold aggregation (r14 opt)
-        .localCheckpoint(eager=True)
-    )
-    ts = local_relation(spark, [(t,) for t in T_CLOSENESS_THRESHOLDS_BP], "t_bp int")
-    tot2 = tvd.agg(
-        F.sum("n_g").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_groups"),
-        F.max("tvd_bp").alias("max_tvd_bp"),
-    )
-    return (
-        tvd.crossJoin(F.broadcast(ts))
-        .groupBy("t_bp")
-        .agg(
-            F.sum(F.when(F.col("tvd_bp") > F.col("t_bp"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("groups_above_t"),
-            F.sum(F.when(F.col("tvd_bp") > F.col("t_bp"), F.col("n_g")).otherwise(0))
-            .cast("bigint")
-            .alias("rows_above_t"),
-        )
-        .crossJoin(F.broadcast(tot2))
-        .select(
-            "t_bp",
-            "groups_above_t",
-            "rows_above_t",
-            F.expr("(rows_above_t * 10000) DIV n_rows").alias("risk_share_bp"),
-            F.col("n_groups").cast("bigint").alias("n_groups"),
-            F.col("max_tvd_bp").cast("bigint").alias("max_tvd_bp"),
-        )
-        .orderBy("t_bp")
-    )
+        SELECT t_bp,
+               CAST(sum(CASE WHEN tvd_bp > t_bp THEN 1 ELSE 0 END) AS BIGINT) AS groups_above_t,
+               CAST(sum(CASE WHEN tvd_bp > t_bp THEN n_g ELSE 0 END) AS BIGINT) AS rows_above_t,
+               (CAST(sum(CASE WHEN tvd_bp > t_bp THEN n_g ELSE 0 END) AS BIGINT) * 10000)
+                 DIV max(n_rows) AS risk_share_bp,
+               max(n_groups) AS n_groups, CAST(max(max_tvd_bp) AS BIGINT) AS max_tvd_bp
+        FROM tvd CROSS JOIN {_values_sql("t_bp", T_CLOSENESS_THRESHOLDS_BP)}
+        GROUP BY t_bp ORDER BY t_bp
+    """)
 
 
 RR_KEEP_DEN = 4  # report truth with probability 3/4 (h % 4 > 0)
@@ -583,80 +447,42 @@ def randomized_response_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible across runs, engines, and partitionings — which is
     what makes a DuckDB oracle of a *noise* mechanism possible at all.
 
-    Scale shape: the alphabet and its size are aggregate-sized
-    broadcast frames; the keep/draw decision is per-row hash arithmetic
-    in one map stage; the only corpus-sized shuffles are the two k-row
-    count aggregations. The alphabet's row_number window is
-    single-partition by construction — it ranks the handful of distinct
-    languages, never corpus rows."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    alpha = (
-        d.select("lang")
-        .distinct()
-        .withColumn("idx", F.row_number().over(W.orderBy("lang")) - F.lit(1))
-        # alphabet-sized; referenced by the draw join, the k-count and
-        # the output spine — each reference re-ran the corpus distinct
-        # (plan audit: 7 documents scans in this member; r14 opt)
-        .localCheckpoint(eager=True)
-    )
-    kk = alpha.agg(F.count(F.lit(1)).cast("bigint").alias("k"))
-    tot = d.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    keep_h = portable_hash32(
-        F.concat(F.lit("rr-keep:"), F.col("doc_id").cast("string"))
-    )
-    draw_h = portable_hash32(
-        F.concat(F.lit("rr-cat:"), F.col("doc_id").cast("string"))
-    )
-    reported = (
-        d.withColumn("keep", keep_h % RR_KEEP_DEN > 0)
-        .withColumn("h", draw_h)
-        .crossJoin(F.broadcast(kk))
-        .withColumn("idx", F.col("h") % F.col("k"))
-        .join(
-            F.broadcast(alpha.select("idx", F.col("lang").alias("draw_lang"))),
-            "idx",
+    Scale shape: the alphabet (with its size ``k`` and the corpus size
+    ``n`` as columns) is one aggregate-sized broadcast relation; the
+    keep/draw decision is per-row hash arithmetic in one map stage; the
+    only corpus-sized shuffle is the per-lang count of true and reported
+    labels. The alphabet's row_number window is single-partition by
+    construction — it ranks the handful of distinct languages, never
+    corpus rows."""
+    keep_h = hash32_sql("concat('rr-keep:', CAST(doc_id AS STRING))")
+    draw_h = hash32_sql("concat('rr-cat:', CAST(doc_id AS STRING))")
+    return _sql(spark, sf_dir, f"""
+        WITH alpha AS (
+          SELECT lang, row_number() OVER (ORDER BY lang) - 1 AS idx,
+                 count(1) OVER () AS k, sum(n_lang) OVER () AS n
+          FROM (SELECT lang, count(1) AS n_lang FROM {{documents}} GROUP BY lang)
+        ),
+        counts AS (
+          SELECT lang, sum(t) AS true_cnt, sum(1 - t) AS reported_cnt
+          FROM (SELECT /*+ BROADCAST(a) */
+                       inline(array(named_struct('lang', d.lang, 't', 1),
+                                    named_struct('lang', CASE WHEN keep THEN d.lang
+                                                              ELSE a.lang END, 't', 0)))
+                         AS (lang, t)
+                FROM (SELECT /*+ BROADCAST(kk) */ lang, {keep_h} % {RR_KEEP_DEN} > 0 AS keep,
+                             {draw_h} % k AS idx
+                      FROM {{documents}} CROSS JOIN (SELECT max(k) AS k FROM alpha) kk) d
+                JOIN alpha a ON d.idx = a.idx)
+          GROUP BY lang
         )
-        .select(
-            F.when(F.col("keep"), F.col("lang"))
-            .otherwise(F.col("draw_lang"))
-            .alias("lang")
-        )
-    )
-    true_cnt = d.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("true_cnt")
-    )
-    rep_cnt = reported.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("reported_cnt")
-    )
-    return (
-        alpha.select("lang")
-        # lang-alphabet-sized aggregates: broadcast them (the planner
-        # estimated the aggregate subtrees past the threshold and
-        # planned two SortMergeJoins)
-        .join(F.broadcast(true_cnt), "lang", "left")
-        .join(F.broadcast(rep_cnt), "lang", "left")
-        .crossJoin(F.broadcast(kk))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            F.coalesce(F.col("true_cnt"), F.lit(0)).cast("bigint").alias("true_cnt"),
-            F.coalesce(F.col("reported_cnt"), F.lit(0))
-            .cast("bigint")
-            .alias("reported_cnt"),
-            F.round(
-                (
-                    4.0 * F.col("k") * F.coalesce(F.col("reported_cnt"), F.lit(0))
-                    - F.col("n")
-                )
-                / (3.0 * F.col("k")),
-                3,
-            ).alias("est_count"),
-            F.col("k").cast("int").alias("k_categories"),
-        )
-        .orderBy("lang")
-    )
+        SELECT /*+ BROADCAST(c) */ a.lang,
+               CAST(coalesce(true_cnt, 0) AS BIGINT) AS true_cnt,
+               CAST(coalesce(reported_cnt, 0) AS BIGINT) AS reported_cnt,
+               round((4.0D * k * coalesce(reported_cnt, 0) - n) / (3.0D * k), 3) AS est_count,
+               CAST(k AS INT) AS k_categories
+        FROM alpha a LEFT JOIN counts c ON a.lang = c.lang
+        ORDER BY a.lang
+    """)
 
 
 QUERIES = {

@@ -50,11 +50,6 @@ def quality_sql(toks: str) -> str:
     return f"least(1.0D, {n} / 100.0D) * ({n_stop} / {n} * 0.5D + 0.5D)"
 
 
-def _quality_expr(toks: str):
-    """``quality_sql`` as a Column, over the token array column ``toks``."""
-    return F.expr(quality_sql(toks))
-
-
 def bigrams_sql(toks: str) -> str:
     """Spark SQL: the bigrams (``'w1 w2'``) of the token array ``toks``,
     one per position; empty below two tokens."""
@@ -893,7 +888,7 @@ QUERIES = {
 }
 
 _TOKS = "string_split_regex(lower(text), '\\s+')"
-# SQL twin of _quality_expr — one template shared by the quality_score
+# DuckDB twin of quality_sql — one template shared by the quality_score
 # and source_reputation oracles ({n} = token count, {n_stop} = stopword count)
 _QUALITY_SQL = "least(1.0, {n} / 100.0) * (0.5 + 0.5 * ({n_stop} / {n}))"
 

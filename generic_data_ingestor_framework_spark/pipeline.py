@@ -26,15 +26,15 @@ Each curation step runs the operator its registry member runs, over
 the flowing frame instead of ``documents``, plus the step's parameter
 checks and column rewrite — one definition per operator:
 
-    redact_pii         llm.sampling.pii_redacted        (redact_pii)
-    chunk_overlap      llm.curate.overlap_chunks        (chunk_documents_overlap)
-    quality_filter     llm.curate.gopher_flags          (gopher_quality_flags)
-    repetition_filter  llm.textstats.top_bigrams        (doc_topgram_mass)
-    paragraph_dedup    llm.curate.paragraph_segments    (paragraph_dedup_corpus)
-    remove_dup_spans   llm.curate.span_coverage & co.   (remove_duplicated_spans)
-    select_budget      llm.curate.banded_budget_select  (corpus_select_budget)
-    weighted_sample    llm.sampling.quality_weight_bp   (quality_weighted_sample)
-    bpe_tokenize       llm.tokenize.word_freqs          (the BPE trainers)
+    redact_pii         llm.sampling.pii_redacted_sql       (redact_pii)
+    chunk_overlap      llm.curate.overlap_chunks_sql       (chunk_documents_overlap)
+    quality_filter     llm.curate.gopher_flags_sql         (gopher_quality_flags)
+    repetition_filter  llm.textstats.top_bigrams           (doc_topgram_mass)
+    paragraph_dedup    llm.curate.paragraph_segments_sql   (paragraph_dedup_corpus)
+    remove_dup_spans   llm.curate.span_cut_sql & co.       (remove_duplicated_spans)
+    select_budget      llm.curate.budget_select_sql        (corpus_select_budget)
+    weighted_sample    llm.sampling.quality_weight_bp_sql  (quality_weighted_sample)
+    bpe_tokenize       llm.tokenize.word_freqs             (the BPE trainers)
 
 ``lm_filter`` fits its unigram LM per frame (the member
 ``lm_unigram_score`` memoizes one per corpus) and ``decontaminate``
@@ -59,11 +59,14 @@ from pyspark.sql import functions as F
 
 from generic_data_ingestor_framework_spark import sink as sink_mod
 from generic_data_ingestor_framework_spark.ingest import ingest_directory
-from generic_data_ingestor_framework_spark.llm.dedup import portable_hash32, tokens_col
+from generic_data_ingestor_framework_spark.llm.dedup import (
+    ident_sql, portable_hash32, text_ident_sql, tokens_col, tokens_sql,
+)
 from generic_data_ingestor_framework_spark.normalize import (
     flatten_dot_paths,
     normalize_text_parity,
 )
+from generic_data_ingestor_framework_spark.relational import _sql
 
 StepFn = Callable[[DataFrame, dict], DataFrame]
 
@@ -105,9 +108,9 @@ def _step_sample_hash(df: DataFrame, p: dict) -> DataFrame:
 
 
 def _step_redact_pii(df: DataFrame, p: dict) -> DataFrame:
-    from generic_data_ingestor_framework_spark.llm.sampling import pii_redacted
+    from generic_data_ingestor_framework_spark.llm.sampling import pii_redacted_sql
 
-    return df.withColumn(p["column"], pii_redacted(F.col(p["column"])))
+    return df.withColumn(p["column"], F.expr(pii_redacted_sql(ident_sql(p["column"]))))
 
 
 def _step_with_column(df: DataFrame, p: dict) -> DataFrame:
@@ -151,35 +154,33 @@ def _with_blank_rows(
 
 def _step_chunk_overlap(df: DataFrame, p: dict) -> DataFrame:
     """Split ``column`` into strided overlap chunks
-    (``llm.curate.overlap_chunks`` over the case-preserving whitespace
-    split); the text column is REPLACED by the chunk text and
+    (``llm.curate.overlap_chunks_sql`` over the case-preserving
+    whitespace split); the text column is REPLACED by the chunk text and
     ``chunk_idx`` is appended — downstream steps see chunk-level rows."""
     from generic_data_ingestor_framework_spark.llm.curate import (
         CHUNK_STRIDE,
         CHUNK_TOKENS,
-        overlap_chunks,
+        overlap_chunks_sql,
     )
 
     col = p.get("column", "text")
-    rows, tokens = overlap_chunks(
-        df.withColumn("__ts", F.split(F.col(col), r"\s+")),
-        "__ts",
-        int(p.get("chunk", CHUNK_TOKENS)),
-        int(p.get("stride", CHUNK_STRIDE)),
-    )
-    return rows.withColumn(col, F.array_join(tokens, " ")).drop("__ts")
+    chunk, stride = int(p.get("chunk", CHUNK_TOKENS)), int(p.get("stride", CHUNK_STRIDE))
+    src = rf"(SELECT *, split({text_ident_sql(col)}, '\\s+') AS __ts FROM {{df}})"
+    df = df.drop("chunk_idx", "__ts", "__chunk")  # the step's own columns are replaced
+    rows = _sql(df.sparkSession, "", overlap_chunks_sql(src, "__ts", chunk, stride), df=df)
+    return rows.withColumn(col, F.array_join("__chunk", " ")).drop("__ts", "__chunk")
 
 
 def _step_quality_filter(df: DataFrame, p: dict) -> DataFrame:
     """Gopher-style keep/drop gate on ``column``
-    (``llm.curate.gopher_flags``: word count band, mean word length
+    (``llm.curate.gopher_flags_sql``: word count band, mean word length
     band, duplicate-token fraction cap); each bound is a parameter of
     the same name."""
-    from generic_data_ingestor_framework_spark.llm.curate import GOPHER_BOUNDS, gopher_flags
+    from generic_data_ingestor_framework_spark.llm.curate import GOPHER_BOUNDS, gopher_flags_sql
 
     bounds = {k: type(v)(p[k]) for k, v in GOPHER_BOUNDS.items() if k in p}
-    *_, passes = gopher_flags(tokens_col(p.get("column", "text")), **bounds)
-    return df.filter(passes)
+    *_, passes = gopher_flags_sql(tokens_sql(ident_sql(p.get("column", "text"))), **bounds)
+    return df.filter(F.expr(passes))
 
 
 def _step_repetition_filter(df: DataFrame, p: dict) -> DataFrame:
@@ -222,14 +223,13 @@ def _step_weighted_sample(df: DataFrame, p: dict) -> DataFrame:
     same contract as ``llm.sampling.quality_weighted_sample``). ``salt``
     decorrelates from other hash-based selections in the same spec."""
     from generic_data_ingestor_framework_spark.llm.sampling import (
-        quality_weight_bp,
-        salted_hash,
+        quality_weight_bp_sql,
+        salted_hash_sql,
     )
 
-    col = p.get("column", "text")
-    idc = p["id"]
-    salt = str(p.get("salt", "q"))
-    return df.filter(salted_hash(idc, salt) % 10000 < quality_weight_bp(col))
+    h = salted_hash_sql(ident_sql(p["id"]), str(p.get("salt", "q")))
+    weight = quality_weight_bp_sql(tokens_sql(ident_sql(p.get("column", "text"))))
+    return df.filter(F.expr(f"{h} % 10000 < {weight}"))
 
 
 def _step_lm_filter(df: DataFrame, p: dict) -> DataFrame:
@@ -298,7 +298,7 @@ def _step_decontaminate(df: DataFrame, p: dict) -> DataFrame:
 
 def _step_paragraph_dedup(df: DataFrame, p: dict) -> DataFrame:
     """CCNet-style cross-corpus paragraph dedup over ``column``
-    (``llm.curate.paragraph_segments``, the plan of
+    (``llm.curate.paragraph_segments_sql``, the plan of
     ``paragraph_dedup_corpus``): cut rows into ``seg``-token segments,
     keep only the corpus-wide first occurrence of each segment's
     content (min (id, pos)), and rewrite the column to the surviving
@@ -307,7 +307,7 @@ def _step_paragraph_dedup(df: DataFrame, p: dict) -> DataFrame:
     unchanged."""
     from generic_data_ingestor_framework_spark.llm.curate import (
         SEG_TOKENS,
-        paragraph_segments,
+        paragraph_segments_sql,
     )
 
     col = p.get("column", "text")
@@ -317,8 +317,8 @@ def _step_paragraph_dedup(df: DataFrame, p: dict) -> DataFrame:
     seg_n = int(p.get("seg", SEG_TOKENS))
 
     def dedup(df: DataFrame) -> DataFrame:
-        kept = paragraph_segments(df, idc, tokens_col(col), seg_n)
-        return _rewrite(df, idc, col, kept.select(idc, "kept_text"))
+        text = paragraph_segments_sql("{df}", idc, tokens_sql(text_ident_sql(col)), seg_n)
+        return _rewrite(df, idc, col, _sql(df.sparkSession, "", text, df=df).select(idc, "kept_text"))
 
     return _with_blank_rows(df, col, dedup)
 
@@ -375,15 +375,13 @@ def _step_remove_dup_spans(df: DataFrame, p: dict) -> DataFrame:
     rewritten to the surviving text. Rows left empty (fully-duplicated
     text) are dropped; NULL/blank rows pass through unchanged — the
     same contracts as ``paragraph_dedup``. The gram/coverage/rebuild
-    core is the SAME code as ``llm.curate.remove_duplicated_spans``
-    (``pos_grams_from_tokens`` / ``span_coverage`` /
-    ``cut_covered_tokens``), so the operator and the step cannot
-    drift."""
+    core is the SAME text as ``llm.curate.remove_duplicated_spans``
+    (``pos_grams_sql`` / ``span_cut_sql``), so the operator and the step
+    cannot drift."""
     from generic_data_ingestor_framework_spark.llm.curate import (
         SPAN_K,
-        cut_covered_tokens,
-        pos_grams_from_tokens,
-        span_coverage,
+        pos_grams_sql,
+        span_cut_sql,
     )
 
     col = p.get("column", "text")
@@ -398,27 +396,26 @@ def _step_remove_dup_spans(df: DataFrame, p: dict) -> DataFrame:
         raise ValueError(f"min_occ must be >= 2 (1 would cut every token); got {min_occ}")
 
     def cut(df: DataFrame) -> DataFrame:
-        base = df.select(idc, tokens_col(col).alias("__ts"))
-        covered = span_coverage(pos_grams_from_tokens(base, idc, "__ts", k), idc, k, min_occ)
-        joined, kept = cut_covered_tokens(base, covered, idc, "__ts")
-        return _rewrite(df, idc, col, joined.select(idc, F.array_join(kept, " ").alias("__clean")))
+        base = f"(SELECT {text_ident_sql(idc)}, {tokens_sql(text_ident_sql(col))} AS __ts FROM {{df}})"
+        pg = f"({pos_grams_sql(base, idc, '__ts', k)})"
+        cut = _sql(df.sparkSession, "", span_cut_sql(base, pg, idc, "__ts", k, min_occ), df=df)
+        return _rewrite(df, idc, col, cut.select(idc, F.array_join("kept", " ")))
 
     return _with_blank_rows(df, col, cut)
 
 
 def _step_select_budget(df: DataFrame, p: dict) -> DataFrame:
     """Token-budget selection: keep the highest-quality rows (shared
-    ``_quality_expr`` heuristic over ``column``) until ``frac`` of the
+    ``quality_sql`` heuristic over ``column``) until ``frac`` of the
     dataset's tokens are spent, by the plan of
-    ``llm.curate.corpus_select_budget`` (``quality_bands`` /
-    ``band_totals`` / ``banded_budget_select``) — per-band totals are a
-    bounded driver-sized relation, so no global sort exists; rows keep
-    their original columns. NULL/blank rows cannot be quality-scored
-    and pass through unchanged."""
+    ``llm.curate.corpus_select_budget`` (``budget_select_sql``) — per-band
+    totals are a bounded relation, so no global sort of rows exists;
+    rows keep their original columns. NULL/blank rows cannot be
+    quality-scored and pass through unchanged."""
     from generic_data_ingestor_framework_spark.llm.curate import (
-        band_totals,
-        banded_budget_select,
-        quality_bands,
+        band_offsets_sql,
+        budget_select_sql,
+        quality_bands_sql,
     )
 
     col = p.get("column", "text")
@@ -430,8 +427,9 @@ def _step_select_budget(df: DataFrame, p: dict) -> DataFrame:
         raise ValueError(f"id column {idc!r} collides with selection internals")
 
     def select(df: DataFrame) -> DataFrame:
-        banded = quality_bands(df, idc, tokens_col(col))
-        sel = banded_budget_select(banded, idc, band_totals(banded), *frac.as_integer_ratio())
+        banded = f"({quality_bands_sql('{df}', idc, tokens_sql(text_ident_sql(col)))})"
+        offsets = f"({band_offsets_sql(banded, *frac.as_integer_ratio())})"
+        sel = _sql(df.sparkSession, "", budget_select_sql(banded, offsets, idc), df=df)
         return df.join(sel.select(idc), idc, "semi")
 
     return _with_blank_rows(df, col, select)

@@ -1291,6 +1291,31 @@ def test_pagerank_doc_graph_empty_corpus_matches_oracle(spark, tmp_path):
     assert con.execute(ORACLES["pagerank_doc_graph"]).fetchall() == []
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["nb_lang_predictions", "nb_lang_confusion", "nb_holdout_confusion", "classifier_agreement_kappa"],
+)
+def test_classify_member_empty_corpus_matches_oracle(spark, tmp_path, name):
+    """Over a corpus with no documents each classify member returns what
+    its DuckDB oracle returns: no rows, or for the agreement member one
+    row of NULL totals and kappa 0. The model has no lang, vocabulary or
+    document to count, and no driver-side scalar is read."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from generic_data_ingestor_framework_spark.llm import classify
+
+    d = tmp_path / "no_docs"
+    d.mkdir()
+    docs = f"{d}/documents.parquet"
+    pq.write_table(pq.read_schema(f"{SF}/documents.parquet").empty_table(), docs)
+
+    got = [tuple(r) for r in classify.QUERIES[name](spark, str(d)).collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    assert got == con.execute(classify.ORACLES[name]).fetchall()
+
+
 def test_semantic_clusters_adaptive_k_oracle_parity(spark, tmp_path):
     """dedup_semantic_clusters with a corpus big enough that _sem_k
     EXCEEDS N_CENTROIDS (the adaptive-k scale path) must match the
@@ -1634,14 +1659,18 @@ def test_dedup_keep_best_quality_argmax(spark):
 
 
 def test_select_budget_plan_has_no_global_sort(spark):
-    """The banded decomposition's point: no single-partition exchange
-    (global window/sort) anywhere in the selection plan, at any SF."""
+    """The banded decomposition's point: no row-level single-partition
+    exchange (global window/sort) anywhere in the selection plan, at any
+    SF. The one relation gathered into a single partition is the
+    per-band total aggregate (at most 1e6+1 rows at any SF), whose
+    windows give the band offsets and the budget."""
     from generic_data_ingestor_framework_spark.llm import curate
     from generic_data_ingestor_framework_spark.scale import explain_string
 
-    plan = explain_string(curate.corpus_select_budget(spark, SF))
-    assert "SinglePartition" not in plan, plan
-    assert "Window" in plan  # the per-band windows are still there
+    plan = explain_string(curate.corpus_select_budget(spark, SF)).splitlines()
+    gathers = [i for i, line in enumerate(plan) if "Exchange SinglePartition" in line]
+    assert all("HashAggregate(keys=[band#" in plan[i + 1] for i in gathers), plan
+    assert any("Window" in line for line in plan)  # the per-band windows are still there
 
 
 def test_span_removal_matches_python_random_corpora(spark, tmp_path):

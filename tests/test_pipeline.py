@@ -971,3 +971,45 @@ def test_curation_step_keeps_its_members_rows(spark, op):
     }
     want = _member_keeps(spark, op, {r["doc_id"] for r in docs.select("doc_id").collect()})
     assert got == want and got
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["chunk_overlap", "paragraph_dedup", "remove_dup_spans", "select_budget",
+     "weighted_sample", "quality_filter", "redact_pii"],
+)
+def test_curation_step_reads_brace_named_columns(spark, op):
+    """JSON keys may hold braces: a step over columns named ``i{d}`` and
+    ``t{x}`` keeps the rows, and writes the text, that it does over the
+    same frame with plain names (the braces must not reach a Spark SQL
+    text's ``{table}`` formatter as a field)."""
+    from generic_data_ingestor_framework_spark.pipeline import STEP_REGISTRY
+    from generic_data_ingestor_framework_spark.relational import load_table
+
+    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+    plain = STEP_REGISTRY[op](docs, {"op": op, "id": "doc_id", "column": "text"})
+    braced = STEP_REGISTRY[op](
+        docs.toDF("i{d}", "t{x}"), {"op": op, "id": "i{d}", "column": "t{x}"}
+    )
+    assert braced.columns[:2] == ["i{d}", "t{x}"]
+    want = sorted(map(tuple, plain.collect()), key=repr)
+    assert sorted(map(tuple, braced.collect()), key=repr) == want and want
+
+
+def test_chunk_overlap_twice_replaces_chunk_idx(spark):
+    """A second chunk_overlap re-chunks the chunks: its ``chunk_idx``
+    replaces the first step's instead of making the name ambiguous."""
+    df = spark.createDataFrame(
+        [(1, " ".join(f"w{i}" for i in range(40)))], "doc_id bigint, text string"
+    )
+    spec = {"op": "chunk_overlap", "column": "text"}
+    from generic_data_ingestor_framework_spark.pipeline import STEP_REGISTRY
+
+    step = STEP_REGISTRY["chunk_overlap"]
+    once = step(df, {**spec, "chunk": 16, "stride": 12})
+    twice = step(once, {**spec, "chunk": 8, "stride": 8})
+    assert twice.columns == ["doc_id", "text", "chunk_idx"]
+    got = sorted((r["chunk_idx"], r["text"]) for r in twice.collect())
+    # first pass: w0..15, w12..27, w24..39 (16 tokens each); second: 2 chunks of 8 each
+    assert [len(t.split()) for _, t in got] == [8] * 6
+    assert [i for i, _ in got] == [0, 0, 0, 1, 1, 1]

@@ -40,8 +40,9 @@ def _temp_views(spark) -> set[str]:
 def test_text_members_build_in_a_few_jvm_commands(spark, jvm_commands):
     members = _text_members()
     # the relational floor (40) plus 19 text-statistics, 12 event-time,
-    # 11 dedup and 15 similarity members
-    assert len(members) >= 97, members
+    # 11 dedup, 15 similarity, 14 sampling, 4 classify and 10 curate
+    # members
+    assert len(members) >= 125, members
     views = _temp_views(spark)
     for name in members:  # first use of each table reader and entry point
         MEMBER_QUERIES[name](spark, SF_SMALL)
@@ -52,6 +53,33 @@ def test_text_members_build_in_a_few_jvm_commands(spark, jvm_commands):
         sent[name] = n[0]
     assert max(sent.values()) <= BUILD_COMMANDS_MAX, sent
     assert _temp_views(spark) == views
+
+
+def test_building_a_sampling_classify_or_curate_member_runs_no_job(spark):
+    """A member's build only plans: from cleared memos, building each
+    member of ``llm.sampling``, ``llm.classify`` and ``llm.curate`` runs
+    no Spark job (no driver-side scalar, no eager checkpoint). The table
+    readers and dedup's cluster labels (its connected-components loop,
+    which ``dedup_keep_best_quality`` reads) are built first: they are
+    not members of these modules."""
+    from generic_data_ingestor_framework_spark import cachemgr
+    from generic_data_ingestor_framework_spark.llm import classify, curate, dedup, sampling
+    from generic_data_ingestor_framework_spark.relational import load_table
+
+    cachemgr.clear_caches()
+    for table in ("customer", "documents", "events"):
+        load_table(spark, SF_SMALL, table)
+    dedup._cluster_frames(spark, SF_SMALL)
+    sc = spark.sparkContext
+    jobs = {}
+    for name, fn in {**sampling.QUERIES, **classify.QUERIES, **curate.QUERIES}.items():
+        sc.setJobGroup(f"build {name}", "build only")
+        try:
+            fn(spark, SF_SMALL)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"build {name}"))
+    assert len(jobs) == 28 and jobs == dict.fromkeys(jobs, 0), jobs
 
 
 def test_a_persisted_frame_read_by_a_text_stays_cached(spark):
